@@ -1217,7 +1217,7 @@ object DeltaExport {
     * file://) publishing through its non-atomic rename: it can clobber
     * anyone, including its own kind — nothing this side can close.
     * Returns true iff this writer owns version `target`. */
-  private def publishExclusive(
+  private[sources] def publishExclusive(
       conf: org.apache.hadoop.conf.Configuration,
       fs: org.apache.hadoop.fs.FileSystem, logDir: Path, target: Path,
       content: String): Boolean = {
@@ -1323,7 +1323,7 @@ object DeltaExport {
     * [[maintainCheckpoint]] still leaves a bounded tail. Failures are
     * swallowed — the commit is already durable, and both steps are
     * maintenance any later writer can redo. */
-  private def checkpointIfDue(spark: SparkSession, tablePath: String,
+  private[sources] def checkpointIfDue(spark: SparkSession, tablePath: String,
       cfg: Map[String, String]): Unit =
     try {
       val every = cfg.get("delta.checkpointInterval")
@@ -1337,46 +1337,6 @@ object DeltaExport {
     } catch { case scala.util.control.NonFatal(_) => () }
 
   // ------------------------------------------------ foreign-table appends
-
-  /** Writer features whose APPEND-time obligations this writer discharges
-    * (delta.io PROTOCOL.md "Table Features" — a writer must refuse a table
-    * listing any feature it cannot uphold):
-    * appendOnly (an append is legal by definition); invariants (every
-    * `delta.invariants` column expression validates against the staged
-    * rows alongside the CHECK constraints — see [[legacyInvariantsOf]]
-    * for the null convention); checkConstraints (every `delta.constraints.*`
-    * predicate validates against the staged rows before the commit
-    * publishes); changeDataFeed (a blind append writes NO cdc action by
-    * protocol — readers synthesize inserts from its dataChange adds);
-    * columnMapping (files are written under physical names at EVERY
-    * nesting level — [[DeltaImport.physicalRender]] — partition dirs and
-    * partitionValues keys physical); timestampNtz/typeWidening
-    * (schema capabilities the staging write and stats harvest honor);
-    * deletionVectors/v2Checkpoint/vacuumProtocolCheck (obligations attach
-    * to deletes / checkpoint writes / vacuum, none of which an append
-    * performs); domainMetadata/clustering (domains ride untouched; an
-    * append to a clustered table is legal unclustered — OPTIMIZE
-    * re-clusters, exactly as in delta-spark); allowColumnDefaults
-    * (defaults fill OMITTED columns; this writer requires the full
-    * schema, so nothing is ever omitted); rowTracking (fresh base row
-    * ids are assigned above the domain high-water mark, which advances
-    * in the same commit); inCommitTimestamp (the commit stamps a
-    * monotonic ICT); generatedColumns (a frame that omits the column gets
-    * it computed from `delta.generationExpression`, a frame that provides
-    * it is validated value-for-value on the staged bytes); identityColumns
-    * (omitted/null values are assigned above the schema's
-    * `delta.identity.highWaterMark` by per-task block reservation, and the
-    * commit re-publishes metaData with the advanced watermark — a rival
-    * identity append moves the watermark, which changes the schema JSON,
-    * so the retry gate's schema check already forces a restage rather
-    * than risking id collisions). Everything else — icebergCompat*, … —
-    * is refused with the feature named. */
-  private val ForeignAppendFeatures: Set[String] = Set(
-    "appendOnly", "invariants", "checkConstraints", "changeDataFeed",
-    "columnMapping", "timestampNtz", "typeWidening", "deletionVectors",
-    "v2Checkpoint", "vacuumProtocolCheck", "domainMetadata", "clustering",
-    "allowColumnDefaults", "rowTracking", "inCommitTimestamp",
-    "generatedColumns", "identityColumns")
 
   /** Legacy column invariants (delta.io PROTOCOL.md "Column Invariants" —
     * the pre-CHECK-constraints form, writer version 2): a field whose
@@ -1452,17 +1412,6 @@ object DeltaExport {
     walk(schema)
   }
 
-  /** One `count_if` aggregate per declared legacy invariant, evaluated on
-    * the staged LOGICAL rows next to the nullability / CHECK-constraint
-    * counters every foreign verb already runs — same single validation
-    * scan, violated-row counts surface in the refusal message. */
-  private def invariantChecks(schema: StructType): Seq[org.apache.spark.sql.Column] = {
-    import org.apache.spark.sql.functions.{coalesce, count_if, expr, lit}
-    legacyInvariantsOf(schema).map { case (n, p) =>
-      count_if(!coalesce(expr(p).cast("boolean"), lit(false)))
-        .as(s"invariant $n") }
-  }
-
   /** Append `df` to a FOREIGN Delta table (one no graft log governs) —
     * graft as a Delta WRITER, closing the bridge's last asymmetry: the
     * import reads foreign tables, the export mirrors graft tables, and
@@ -1489,33 +1438,14 @@ object DeltaExport {
   def appendToForeign(spark: SparkSession, tablePath: String,
       df: org.apache.spark.sql.DataFrame,
       txn: Option[(String, Long)] = None): Long = {
-    val conf = spark.sessionState.newHadoopConf()
-    val root = new Path(tablePath)
-    val fs = root.getFileSystem(conf)
-    val logDir = new Path(root, "_delta_log")
-
-    def gate(snap: DeltaImport.Snapshot): Unit = {
-      snap.protocol.foreach { p =>
-        if (p.minWriterVersion >= 7) {
-          val unsupported = p.writerFeatures.filterNot(ForeignAppendFeatures)
-          require(unsupported.isEmpty,
-            s"append to $tablePath: writer feature(s) " +
-              s"${unsupported.mkString(", ")} carry write-time obligations " +
-              "this writer does not implement")
-        }
-      }
-      // Legacy `delta.invariants` parse NOW (a malformed document must
-      // refuse before any staging I/O); conforming rows validate against
-      // the staged bytes below, alongside the CHECK constraints.
-      legacyInvariantsOf(snap.schema)
-    }
-
+    val tx = new ForeignTxn(spark, tablePath, s"append to $tablePath")
     val snap0 = DeltaImport.snapshot(spark, tablePath)
-    gate(snap0)
-    def alreadyCommitted(snap: DeltaImport.Snapshot): Boolean =
-      txn.exists { case (app, bv) =>
-        snap.setTransactions.get(app).exists(_ >= bv) }
-    if (alreadyCommitted(snap0)) return snap0.version
+    tx.gate(snap0)
+    // Legacy `delta.invariants` parse NOW (a malformed document must
+    // refuse before any staging I/O); conforming rows validate against
+    // the staged bytes below, alongside the CHECK constraints.
+    legacyInvariantsOf(snap0.schema)
+    if (ForeignTxn.txnCommitted(snap0, txn)) return snap0.version
 
     // Align to the snapshot's LOGICAL schema — lossless up-casts only,
     // full column coverage required after generated/identity fill
@@ -1534,24 +1464,8 @@ object DeltaExport {
     //    monotonically_increasing_id — per-task range reservation, no
     //    shuffle, no driver sequence; explicit non-null values require
     //    delta.identity.allowExplicitInsert.
-    val genSpecs: Map[String, String] = fields.iterator.collect {
-      case f if f.metadata.contains("delta.generationExpression") =>
-        f.name -> f.metadata.getString("delta.generationExpression")
-    }.toMap
-    val idSpecs: Map[String, (Long, Long, Boolean)] = fields.iterator.collect {
-      case f if f.metadata.contains("delta.identity.start") =>
-        f.name -> ((f.metadata.getLong("delta.identity.start"),
-          if (f.metadata.contains("delta.identity.step"))
-            f.metadata.getLong("delta.identity.step") else 1L,
-          f.metadata.contains("delta.identity.allowExplicitInsert") &&
-            f.metadata.getBoolean("delta.identity.allowExplicitInsert")))
-    }.toMap
-    val idHwm: Map[String, Long] = fields.iterator.collect {
-      case f if idSpecs.contains(f.name) =>
-        f.name -> (if (f.metadata.contains("delta.identity.highWaterMark"))
-          f.metadata.getLong("delta.identity.highWaterMark")
-        else idSpecs(f.name)._1 - idSpecs(f.name)._2)
-    }.toMap
+    val genSpecs = generatedSpecs(fields)
+    val (idSpecs, idHwm) = identitySpecs(fields)
     val dfGen = genSpecs.foldLeft(df) { case (d, (name, sql)) =>
       if (d.columns.exists(_.equalsIgnoreCase(name))) d
       else d.withColumn(name, org.apache.spark.sql.functions.expr(sql))
@@ -1588,204 +1502,68 @@ object DeltaExport {
           s"not up-cast losslessly to ${f.dataType.simpleString}")
       col(src).cast(f.dataType).as(f.name)
     }: _*)
+    // CALLER-provided generated columns must agree with their expression
+    // (null-safe), or data skipping on the materialized column would lie
+    // about the base columns.
+    val genChecks = genSpecs.keySet
+      .filter(n => df.columns.exists(_.equalsIgnoreCase(n)))
+      .toSeq.sorted.map(n =>
+        org.apache.spark.sql.functions.count_if(!(col(s"`$n`") <=>
+          org.apache.spark.sql.functions.expr(genSpecs(n)))).as(s"generated $n"))
 
-    // Stage under the table root: files are immutable once written; only
-    // the commit decides whether they become part of the table.
-    val physMapAll = DeltaImport.topLevelPhysicalNames(snap0.schema)
-    val physPartCols = snap0.partitionColumns.map(c => physMapAll.getOrElse(c, c))
-    val physDf = DeltaImport.physicalRender(aligned, snap0.schema)
-    val stageRel = s"_appends/${java.util.UUID.randomUUID()}"
-    val stagePath = new Path(root, stageRel)
-    if (physPartCols.nonEmpty)
-      physDf.write.partitionBy(physPartCols: _*).parquet(stagePath.toString)
-    else physDf.write.parquet(stagePath.toString)
-    def refuse(msg: String): Nothing = {
-      fs.delete(stagePath, true)
-      throw new IllegalArgumentException(msg)
-    }
+    val layout = new ForeignTxn.Layout(snap0)
+    tx.run {
+      // Stage under the table root: files are immutable once written; only
+      // the commit decides whether they become part of the table.
+      val stagePath = tx.writeStaged(
+        DeltaImport.physicalRender(aligned, snap0.schema),
+        s"_appends/${java.util.UUID.randomUUID()}", layout.partCols)
+      def staged(): org.apache.spark.sql.DataFrame = DeltaImport.logicalRestore(
+        spark.read.option("basePath", stagePath.toString)
+          .parquet(stagePath.toString), snap0.schema)
+      def validate(cfg: Map[String, String]): Unit =
+        tx.validate(staged(), snap0.schema, cfg, genChecks)
+      validate(snap0.configuration)
+      // Advanced identity watermark: the directional extreme of the staged
+      // ids (one aggregate over the batch-bounded staging, the cost class
+      // of the validation scan above). The commit re-publishes metaData
+      // with the new delta.identity.highWaterMark so the NEXT writer —
+      // any engine — allocates past it.
+      val newHwms: Map[String, Long] =
+        if (idSpecs.isEmpty) Map.empty
+        else advancedHwms(staged(), idSpecs, idHwm)
+      val files = tx.parquetsUnder(stagePath)
+      if (files.isEmpty) throw new IllegalArgumentException(
+        s"append to $tablePath: the frame produced no rows to append")
+      val metrics = Map("numFiles" -> files.size.toLong,
+        "numOutputRows" -> files.map(tx.footerRows).sum,
+        "numOutputBytes" -> files.map(_.getLen).sum)
 
-    // NOT NULL and CHECK constraints validate against the STAGED bytes —
-    // exactly what the commit would make visible (one validation scan).
-    def constraintsOf(cfg: Map[String, String]): Map[String, String] =
-      cfg.collect { case (k, v) if k.startsWith("delta.constraints.") =>
-        k.stripPrefix("delta.constraints.") -> v }
-    def validate(cfg: Map[String, String]): Unit = {
-      import org.apache.spark.sql.functions.{count_if, expr, coalesce, lit}
-      val stagedPhys = spark.read.option("basePath", stagePath.toString)
-        .parquet(stagePath.toString)
-      val staged = DeltaImport.logicalRestore(stagedPhys, snap0.schema)
-      val nullChecks = fields.toSeq.filterNot(_.nullable)
-        .map(f => count_if(col(f.name).isNull).as(s"null ${f.name}"))
-      val checkChecks = constraintsOf(cfg).toSeq.sortBy(_._1).map { case (n, p) =>
-        count_if(!coalesce(expr(p).cast("boolean"), lit(true)))
-          .as(s"constraint $n") }
-      // CALLER-provided generated columns must agree with their
-      // expression (null-safe), or data skipping on the materialized
-      // column would lie about the base columns.
-      val genChecks = genSpecs.keySet
-        .filter(n => df.columns.exists(_.equalsIgnoreCase(n)))
-        .toSeq.sorted.map(n =>
-          count_if(!(col(s"`$n`") <=> expr(genSpecs(n))))
-            .as(s"generated $n"))
-      val checks = nullChecks ++ checkChecks ++ genChecks ++
-        invariantChecks(snap0.schema)
-      if (checks.nonEmpty) {
-        val row = staged.agg(checks.head, checks.tail: _*).collect().head
-        val bad = row.schema.fieldNames.zipWithIndex
-          .filter { case (_, i) => row.getLong(i) > 0 }
-        if (bad.nonEmpty) refuse(
-          s"append to $tablePath violates ${bad.map(_._1).mkString("; ")} " +
-            s"(${bad.map(b => row.getLong(b._2)).mkString(", ")} row(s))")
+      tx.commit(snap0) { snap =>
+        legacyInvariantsOf(snap.schema)
+        // A rival carrying the SAME (appId, batch) already committed it.
+        if (ForeignTxn.txnCommitted(snap, txn)) Some(snap.version)
+        else {
+          // A blind append conflicts only with changes to what was
+          // already validated: schema, partitioning, constraints.
+          if (ForeignTxn.layoutChanged(snap0, snap))
+            throw new IllegalArgumentException(
+              s"append to $tablePath: the table's schema or partitioning " +
+                "changed mid-append — restage against the new state")
+          if (ForeignTxn.constraintsOf(snap.configuration) !=
+              ForeignTxn.constraintsOf(snap0.configuration))
+            validate(snap.configuration)
+          None
+        }
+      } { snap =>
+        ForeignTxn.Publish("APPEND", metrics, snap.schema.json,
+          snap.configuration,
+          st => tx.hwmMetaData(snap, newHwms) ++
+            tx.freshAdds(layout, snap, st.version, files) ++
+            ForeignTxn.txnJson(txn, st.nowMs),
+          v => v)
       }
     }
-    validate(snap0.configuration)
-    // Advanced identity watermark: the directional extreme of the staged
-    // ids (one aggregate over the batch-bounded staging, the cost class
-    // of the validation scan above). The commit re-publishes metaData
-    // with the new delta.identity.highWaterMark so the NEXT writer —
-    // any engine — allocates past it.
-    val newHwms: Map[String, Long] =
-      if (idSpecs.isEmpty) Map.empty
-      else {
-        val stagedPhys = spark.read.option("basePath", stagePath.toString)
-          .parquet(stagePath.toString)
-        val staged = DeltaImport.logicalRestore(stagedPhys, snap0.schema)
-        advancedHwms(staged, idSpecs, idHwm)
-      }
-
-    val files = {
-      val it = fs.listFiles(stagePath, true)
-      val b = Seq.newBuilder[FileStatus]
-      while (it.hasNext) {
-        val st = it.next()
-        if (st.isFile && st.getPath.getName.endsWith(".parquet")) b += st
-      }
-      b.result().sortBy(_.getPath.toString)
-    }
-    if (files.isEmpty) { fs.delete(stagePath, true); refuse(
-      s"append to $tablePath: the frame produced no rows to append") }
-    def relOf(st: FileStatus): String = {
-      val base = root.toUri.getPath.stripSuffix("/")
-      st.getPath.toUri.getPath.stripPrefix(base).stripPrefix("/")
-    }
-    def footerRows(st: FileStatus): Long = {
-      import org.apache.parquet.hadoop.ParquetFileReader
-      import org.apache.parquet.hadoop.util.HadoopInputFile
-      import scala.jdk.CollectionConverters._
-      val r = ParquetFileReader.open(HadoopInputFile.fromPath(st.getPath, conf))
-      try r.getFooter.getBlocks.asScala.map(_.getRowCount).sum
-      finally r.close()
-    }
-
-    def prevIctOf(version: Long): Option[Long] = lastIctOf(fs, logDir, version)
-
-    // Optimistic commit loop: re-resolve, re-gate, publish exclusively.
-    var attempt = 0
-    while (attempt < 20) {
-      attempt += 1
-      val snap = if (attempt == 1) snap0
-        else DeltaImport.snapshot(spark, tablePath)
-      if (attempt > 1) {
-        gate(snap)
-        // A rival carrying the SAME (appId, batch) already committed it —
-        // this retry's work is done; reap the unreferenced staging.
-        if (alreadyCommitted(snap)) { fs.delete(stagePath, true)
-          return snap.version }
-        // A blind append conflicts only with changes to what was already
-        // validated: schema, partitioning, constraints.
-        if (snap.schema.json != snap0.schema.json ||
-            snap.partitionColumns != snap0.partitionColumns) refuse(
-          s"append to $tablePath: the table's schema or partitioning " +
-            "changed mid-append — restage against the new state")
-        if (constraintsOf(snap.configuration) !=
-            constraintsOf(snap0.configuration))
-          validate(snap.configuration)
-      }
-      val v = snap.version + 1
-      val nowMs = System.currentTimeMillis()
-      val physSchema = DeltaImport.toPhysicalSchema(snap0.schema)
-      val allowedStats = GraftTable.allowedStatsCols(snap.configuration,
-          snap.schema.fieldNames.toSeq)
-        .map(_.map(n => physMapAll.getOrElse(n, n)))
-      // Row tracking: fresh ids above the domain's high-water mark.
-      val rtOn = snap.protocol.exists(p =>
-        p.minWriterVersion >= 7 && p.writerFeatures.contains("rowTracking"))
-      val hwm0: Long = snap.domainMetadata.get("delta.rowTracking")
-        .map(cfgJson => (JsonMethods.parse(cfgJson) \ "rowIdHighWaterMark") match {
-          case JInt(t) => t.toLong
-          case JLong(t) => t
-          case _ => -1L
-        }).getOrElse(-1L)
-      var nextBase = hwm0 + 1
-      val lines = Seq.newBuilder[String]
-      var totalRows = 0L
-      var totalBytes = 0L
-      val addLines = files.map { st =>
-        val base = if (rtOn) Some(nextBase) else None
-        val rows = footerRows(st)
-        if (rtOn) nextBase += rows
-        totalRows += rows
-        totalBytes += st.getLen
-        addJson(relOf(st), st, physSchema, physPartCols, dataChange = true,
-          conf, None, base, if (rtOn) Some(v) else None, None, allowedStats)
-      }
-      lines += commitInfoJson(
-        Commit(v, nowMs, "APPEND", Nil,
-          Map("numFiles" -> files.size.toLong, "numOutputRows" -> totalRows,
-            "numOutputBytes" -> totalBytes), snap.schema.json),
-        ict = if (snap.configuration.get("delta.enableInCommitTimestamps")
-            .contains("true"))
-          Some(math.max(prevIctOf(snap.version).getOrElse(0L) + 1, nowMs))
-        else None)
-      // Identity allocation advanced the high-water mark → the commit
-      // re-publishes metaData carrying it (where delta-spark records it,
-      // in the identity field's schema metadata).
-      if (newHwms.nonEmpty) {
-        val newSchema = StructType(snap.schema.fields.map { f =>
-          newHwms.get(f.name) match {
-            case Some(h) => f.copy(metadata =
-              new org.apache.spark.sql.types.MetadataBuilder()
-                .withMetadata(f.metadata)
-                .putLong("delta.identity.highWaterMark", h).build())
-            case None => f
-          }
-        })
-        lines += JsonMethods.compact(JObject("metaData" -> JObject(
-          "id" -> JString(snap.tableId.getOrElse(java.util.UUID
-            .nameUUIDFromBytes(tablePath.getBytes(StandardCharsets.UTF_8))
-            .toString)),
-          "format" -> JObject("provider" -> JString("parquet"),
-            "options" -> JObject()),
-          "schemaString" -> JString(newSchema.json),
-          "partitionColumns" -> JArray(
-            snap.partitionColumns.map(JString(_)).toList),
-          "configuration" -> JObject(snap.configuration.toSeq.sortBy(_._1)
-            .map { case (k, v) => k -> (JString(v): JValue) }: _*))))
-      }
-      addLines.foreach(lines += _)
-      if (rtOn && nextBase > hwm0 + 1) {
-        lines += JsonMethods.compact(JObject("domainMetadata" -> JObject(
-          "domain" -> JString("delta.rowTracking"),
-          "configuration" ->
-            JString(s"""{"rowIdHighWaterMark":${nextBase - 1}}"""),
-          "removed" -> JBool(false))))
-      }
-      txn.foreach { case (app, bv) =>
-        lines += JsonMethods.compact(JObject("txn" -> JObject(
-          "appId" -> JString(app),
-          "version" -> JLong(bv),
-          "lastUpdated" -> JLong(nowMs))))
-      }
-      val target = new Path(logDir, f"$v%020d.json")
-      val content = lines.result().mkString("", "\n", "\n")
-      if (publishExclusive(conf, fs, logDir, target, content)) {
-        checkpointIfDue(spark, tablePath, snap.configuration)
-        return v
-      }
-      // lost to a concurrent committer — loop re-resolves and retries
-    }
-    refuse(s"append to $tablePath: lost the commit race 20 times — " +
-      "a writer storm; retry when the table quiesces")
   }
 
   /** OPTIMIZE on a FOREIGN Delta table — the maintenance verb completing
@@ -1804,28 +1582,16 @@ object DeltaExport {
     * 0, 0) when nothing qualifies. */
   def optimizeForeign(spark: SparkSession, tablePath: String,
       targetFileBytes: Long = 128L * 1024 * 1024): (Long, Long, Long) = {
-    val conf = spark.sessionState.newHadoopConf()
-    val root = new Path(tablePath)
-    val fs = root.getFileSystem(conf)
-    val logDir = new Path(root, "_delta_log")
-
-    def gate(snap: DeltaImport.Snapshot): Unit = {
-      snap.protocol.foreach { p =>
-        if (p.minWriterVersion >= 7) {
-          val unsupported = p.writerFeatures.filterNot(ForeignAppendFeatures)
-          require(unsupported.isEmpty,
-            s"optimize of $tablePath: writer feature(s) " +
-              s"${unsupported.mkString(", ")} carry write-time obligations " +
-              "this writer does not implement")
-          require(!p.writerFeatures.contains("rowTracking"),
-            s"optimize of $tablePath: compaction cannot preserve row ids " +
-              "without the materialized id column — run OPTIMIZE on the " +
-              "owning engine")
-        }
-      }
-    }
+    val tx = new ForeignTxn(spark, tablePath, s"optimize of $tablePath")
+    def gate(snap: DeltaImport.Snapshot): Unit =
+      require(!snap.protocol.exists(p => p.minWriterVersion >= 7 &&
+        p.writerFeatures.contains("rowTracking")),
+        s"optimize of $tablePath: compaction cannot preserve row ids " +
+          "without the materialized id column — run OPTIMIZE on the " +
+          "owning engine")
 
     val snap0 = DeltaImport.snapshot(spark, tablePath)
+    tx.gate(snap0)
     gate(snap0)
     val selected = snap0.files.filter(f =>
       f.size < targetFileBytes / 2 ||
@@ -1840,94 +1606,36 @@ object DeltaExport {
     val live = DeltaImport
       .readFilesWithPositions(spark, snap0, selected, FileC, PosC)
       .drop(FileC, PosC)
-    val physMapAll = DeltaImport.topLevelPhysicalNames(snap0.schema)
-    val physPartCols = snap0.partitionColumns.map(c => physMapAll.getOrElse(c, c))
+    val layout = new ForeignTxn.Layout(snap0)
     val totalBytes = selected.map(_.size).sum
     val nOut = math.max(1L, (totalBytes + targetFileBytes - 1) / targetFileBytes).toInt
     val physDf = DeltaImport.physicalRender(live.repartition(nOut), snap0.schema)
-    val seed = java.util.UUID.randomUUID().toString
-    val stagePath = new Path(root, s"_appends/$seed-compact")
-    if (physPartCols.nonEmpty)
-      physDf.write.partitionBy(physPartCols: _*).parquet(stagePath.toString)
-    else physDf.write.parquet(stagePath.toString)
-    def parquetsUnder(p: Path): Seq[FileStatus] = {
-      if (!fs.exists(p)) return Nil
-      val it = fs.listFiles(p, true)
-      val b = Seq.newBuilder[FileStatus]
-      while (it.hasNext) {
-        val st = it.next()
-        if (st.isFile && st.getPath.getName.endsWith(".parquet")) b += st
-      }
-      b.result().sortBy(_.getPath.toString)
-    }
-    def relOf(st: FileStatus): String = {
-      val base = root.toUri.getPath.stripSuffix("/")
-      st.getPath.toUri.getPath.stripPrefix(base).stripPrefix("/")
-    }
-    val stagedFiles = parquetsUnder(stagePath)
-    val selectedSet = selected.map(f => f.path -> f).toMap
-
-    var attempt = 0
-    while (attempt < 20) {
-      attempt += 1
-      val snap = if (attempt == 1) snap0
-        else DeltaImport.snapshot(spark, tablePath)
-      if (attempt > 1) {
+    tx.run {
+      val stagePath = tx.writeStaged(physDf,
+        s"_appends/${java.util.UUID.randomUUID()}-compact", layout.partCols)
+      val stagedFiles = tx.parquetsUnder(stagePath)
+      tx.commit[(Long, Long, Long)](snap0) { snap =>
         gate(snap)
-        val nowByRel = snap.files.map(f => f.path -> f).toMap
-        val touchedChanged = selectedSet.keys.exists { rel =>
-          nowByRel.get(rel).forall(_.deletionVector !=
-            selectedSet(rel).deletionVector) }
-        if (snap.schema.json != snap0.schema.json ||
-            snap.partitionColumns != snap0.partitionColumns || touchedChanged) {
-          fs.delete(stagePath, true)
+        if (ForeignTxn.layoutChanged(snap0, snap) ||
+            ForeignTxn.filesChanged(snap0, snap, selected.map(_.path)))
           throw new IllegalArgumentException(
             s"optimize of $tablePath: a concurrent commit touched the " +
               "files being compacted — re-run against the new state")
-        }
-      }
-      val v = snap.version + 1
-      val nowMs = System.currentTimeMillis()
-      val physSchema = DeltaImport.toPhysicalSchema(snap0.schema)
-      val allowedStats = GraftTable.allowedStatsCols(snap.configuration,
-          snap0.schema.fieldNames.toSeq)
-        .map(_.map(n => physMapAll.getOrElse(n, n)))
-      val lines = Seq.newBuilder[String]
-      lines += commitInfoJson(
-        Commit(v, nowMs, "OPTIMIZE", Nil,
+        None
+      } { snap =>
+        ForeignTxn.Publish("OPTIMIZE",
           Map("numRemovedFiles" -> selected.size.toLong,
             "numAddedFiles" -> stagedFiles.size.toLong,
             "numDeletionVectorsRemoved" ->
               selected.count(_.deletionVector.nonEmpty).toLong),
-          snap0.schema.json),
-        ict = if (snap.configuration.get("delta.enableInCommitTimestamps")
-            .contains("true"))
-          Some(math.max(lastIctOf(fs, logDir, snap.version).getOrElse(0L) + 1,
-            nowMs))
-        else None)
-      selectedSet.keys.toSeq.sorted.foreach { rel =>
-        val dvField = selectedSet(rel).deletionVector
-          .map(d => "deletionVector" -> dvJson(d)).toList
-        lines += JsonMethods.compact(JObject("remove" -> JObject(List(
-          "path" -> (JString(encodePath(rel)): JValue),
-          "deletionTimestamp" -> (JLong(nowMs): JValue),
-          "dataChange" -> (JBool(false): JValue)) ++ dvField: _*)))
-      }
-      stagedFiles.foreach { st =>
-        lines += addJson(relOf(st), st, physSchema, physPartCols,
-          dataChange = false, conf, None, None, None, None, allowedStats)
-      }
-      val target = new Path(logDir, f"$v%020d.json")
-      val content = lines.result().mkString("", "\n", "\n")
-      if (publishExclusive(conf, fs, logDir, target, content)) {
-        checkpointIfDue(spark, tablePath, snap.configuration)
-        return (v, selected.size.toLong, stagedFiles.size.toLong)
+          snap0.schema.json, snap.configuration,
+          st => selected.sortBy(_.path).map(f => ForeignTxn.removeJson(
+            f.path, st.nowMs, dataChange = false, f.deletionVector)) ++
+            stagedFiles.map(f => tx.addLine(layout, snap, tx.relOf(f), f,
+              dataChange = false)),
+          v => (v, selected.size.toLong, stagedFiles.size.toLong))
       }
     }
-    fs.delete(stagePath, true)
-    throw new IllegalArgumentException(
-      s"optimize of $tablePath: lost the commit race 20 times — " +
-        "a writer storm; retry when the table quiesces")
   }
 
   /** RESTORE a FOREIGN Delta table to an earlier version — delta-spark's
@@ -1943,99 +1651,51 @@ object DeltaExport {
     * filesRemoved). */
   def restoreForeign(spark: SparkSession, tablePath: String,
       versionAsOf: Long): (Long, Long, Long) = {
-    val conf = spark.sessionState.newHadoopConf()
-    val root = new Path(tablePath)
-    val fs = root.getFileSystem(conf)
-    val logDir = new Path(root, "_delta_log")
-    def gate(snap: DeltaImport.Snapshot): Unit = {
-      snap.protocol.foreach { p =>
-        if (p.minWriterVersion >= 7) {
-          val unsupported = p.writerFeatures.filterNot(ForeignAppendFeatures)
-          require(unsupported.isEmpty,
-            s"restore of $tablePath: writer feature(s) " +
-              s"${unsupported.mkString(", ")} carry obligations this writer " +
-              "does not implement")
-        }
-      }
-      require(!snap.configuration.get("delta.appendOnly").contains("true"),
-        s"restore of $tablePath: the table is append-only (delta.appendOnly)")
-    }
+    val tx = new ForeignTxn(spark, tablePath, s"restore of $tablePath",
+      obligations = "obligations")
     val target = DeltaImport.snapshot(spark, tablePath, Some(versionAsOf))
     val missing = target.files.filterNot(f =>
-      fs.exists(DeltaImport.resolveFile(tablePath, f.path)))
+      tx.fs.exists(DeltaImport.resolveFile(tablePath, f.path)))
     require(missing.isEmpty,
       s"restore of $tablePath to $versionAsOf: data file(s) " +
         s"${missing.map(_.path).take(5).mkString(", ")} no longer exist " +
         "(vacuumed) — the version is below the retention horizon")
+    val tgtByRel = target.files.map(f => f.path -> f).toMap
 
-    var attempt = 0
-    while (attempt < 20) {
-      attempt += 1
-      val snap = DeltaImport.snapshot(spark, tablePath)
-      gate(snap)
+    // No conflict rule: a lost race re-derives the diff against the new head.
+    tx.commit[(Long, Long, Long)](DeltaImport.snapshot(spark, tablePath))(
+        _ => None) { snap =>
+      require(!flagOn(snap.configuration, "delta.appendOnly"),
+        s"restore of $tablePath: the table is append-only (delta.appendOnly)")
       require(versionAsOf <= snap.version,
         s"restore of $tablePath: version $versionAsOf is beyond head ${snap.version}")
       val curByRel = snap.files.map(f => f.path -> f).toMap
-      val tgtByRel = target.files.map(f => f.path -> f).toMap
       val toAdd = target.files.filter(f => !curByRel.contains(f.path) ||
         curByRel(f.path).deletionVector != f.deletionVector)
       val toRemove = snap.files.filter(f => !tgtByRel.contains(f.path))
-      if (toAdd.isEmpty && toRemove.isEmpty) return (snap.version, 0L, 0L)
-      val v = snap.version + 1
-      val nowMs = System.currentTimeMillis()
-      val physMapAll = DeltaImport.topLevelPhysicalNames(snap.schema)
-      val physSchema = DeltaImport.toPhysicalSchema(snap.schema)
-      val physPartCols = snap.partitionColumns.map(c =>
-        physMapAll.getOrElse(c, c))
-      val allowedStats = GraftTable.allowedStatsCols(snap.configuration,
-          snap.schema.fieldNames.toSeq)
-        .map(_.map(n => physMapAll.getOrElse(n, n)))
-      val lines = Seq.newBuilder[String]
-      lines += commitInfoJson(
-        Commit(v, nowMs, "RESTORE", Nil,
+      if (toAdd.isEmpty && toRemove.isEmpty)
+        ForeignTxn.Unchanged((snap.version, 0L, 0L))
+      else {
+        val layout = new ForeignTxn.Layout(snap)
+        ForeignTxn.Publish("RESTORE",
           Map("numRestoredFiles" -> toAdd.size.toLong,
             "numRemovedFiles" -> toRemove.size.toLong),
-          snap.schema.json),
-        ict = if (snap.configuration.get("delta.enableInCommitTimestamps")
-            .contains("true"))
-          Some(math.max(lastIctOf(fs, logDir, snap.version).getOrElse(0L) + 1,
-            nowMs))
-        else None)
-      toRemove.sortBy(_.path).foreach { f =>
-        val dvField = f.deletionVector
-          .map(d => "deletionVector" -> dvJson(d)).toList
-        lines += JsonMethods.compact(JObject("remove" -> JObject(List(
-          "path" -> (JString(encodePath(f.path)): JValue),
-          "deletionTimestamp" -> (JLong(nowMs): JValue),
-          "dataChange" -> (JBool(true): JValue)) ++ dvField: _*)))
+          snap.schema.json, snap.configuration,
+          st => toRemove.sortBy(_.path).map(f => ForeignTxn.removeJson(
+            f.path, st.nowMs, dataChange = true, f.deletionVector)) ++
+            toAdd.sortBy(_.path).flatMap { f =>
+              // A both-sides file changing only its DV removes first (the
+              // remove+add pair Delta writes for DV transitions).
+              curByRel.get(f.path).map(c => ForeignTxn.removeJson(f.path,
+                st.nowMs, dataChange = true, c.deletionVector)).toSeq :+
+                tx.addLine(layout, snap, f.path,
+                  tx.fs.getFileStatus(DeltaImport.resolveFile(tablePath, f.path)),
+                  dv = f.deletionVector, baseRowId = f.baseRowId,
+                  rowCommitVersion = f.defaultRowCommitVersion)
+            },
+          v => (v, toAdd.size.toLong, toRemove.size.toLong))
       }
-      toAdd.sortBy(_.path).foreach { f =>
-        // A both-sides file changing only its DV removes first (the
-        // remove+add pair Delta writes for DV transitions).
-        if (curByRel.contains(f.path)) {
-          val dvField = curByRel(f.path).deletionVector
-            .map(d => "deletionVector" -> dvJson(d)).toList
-          lines += JsonMethods.compact(JObject("remove" -> JObject(List(
-            "path" -> (JString(encodePath(f.path)): JValue),
-            "deletionTimestamp" -> (JLong(nowMs): JValue),
-            "dataChange" -> (JBool(true): JValue)) ++ dvField: _*)))
-        }
-        val st = fs.getFileStatus(DeltaImport.resolveFile(tablePath, f.path))
-        lines += addJson(f.path, st, physSchema, physPartCols,
-          dataChange = true, conf, f.deletionVector, f.baseRowId,
-          f.defaultRowCommitVersion, None, allowedStats)
-      }
-      val targetJson = new Path(logDir, f"$v%020d.json")
-      val content = lines.result().mkString("", "\n", "\n")
-      if (publishExclusive(conf, fs, logDir, targetJson, content)) {
-        checkpointIfDue(spark, tablePath, snap.configuration)
-        return (v, toAdd.size.toLong, toRemove.size.toLong)
-      }
-      // lost the race: the diff re-derives against the new head
     }
-    throw new IllegalArgumentException(
-      s"restore of $tablePath: lost the commit race 20 times — " +
-        "a writer storm; retry when the table quiesces")
   }
 
   /** VACUUM on a FOREIGN Delta table — delta-spark's file-level vacuum:
@@ -2055,15 +1715,7 @@ object DeltaExport {
     val root = new Path(tablePath)
     val fs = root.getFileSystem(conf)
     val snap = DeltaImport.snapshot(spark, tablePath)
-    snap.protocol.foreach { p =>
-      if (p.minWriterVersion >= 7) {
-        val unsupported = p.writerFeatures.filterNot(ForeignAppendFeatures)
-        require(unsupported.isEmpty,
-          s"vacuum of $tablePath: writer feature(s) " +
-            s"${unsupported.mkString(", ")} carry obligations this writer " +
-            "does not implement")
-      }
-    }
+    ForeignTxn.writerGate(snap, s"vacuum of $tablePath", "obligations")
     val cutoff = nowMs - (retentionHours * 3600 * 1000).toLong
     val rootAbs = root.toUri.getPath.stripSuffix("/")
     // The keep set: the live snapshot's data files, every deletion-vector
@@ -2200,10 +1852,10 @@ object DeltaExport {
     * Returns the committed version. */
   def setForeignProperties(spark: SparkSession, tablePath: String,
       set: Map[String, String], unset: Seq[String] = Nil): Long = {
-    val conf = spark.sessionState.newHadoopConf()
-    val root = new Path(tablePath)
-    val fs = root.getFileSystem(conf)
-    val logDir = new Path(root, "_delta_log")
+    val tx = new ForeignTxn(spark, tablePath,
+      s"property change of $tablePath",
+      retryHint = "retry when the table quiesces")
+    def sets(key: String): Boolean = flagOn(set, key)
 
     set.keys.foreach { k =>
       require(!unset.contains(k),
@@ -2231,20 +1883,12 @@ object DeltaExport {
       require(k != "delta.checkpointPolicy" || v == "v2" || v == "classic",
         s"property change of $tablePath: unknown checkpointPolicy $v")
     }
-    require(!set.get("delta.enableRowTracking").contains("true"),
+    require(!sets("delta.enableRowTracking"),
       s"property change of $tablePath: row tracking needs a baseRowId " +
         "backfill only the owning engine can run")
 
-    def gate(snap: DeltaImport.Snapshot): Unit = {
-      snap.protocol.foreach { p =>
-        if (p.minWriterVersion >= 7) {
-          val unsupported = p.writerFeatures.filterNot(ForeignAppendFeatures)
-          require(unsupported.isEmpty,
-            s"property change of $tablePath: writer feature(s) " +
-              s"${unsupported.mkString(", ")} carry write-time obligations " +
-              "this writer does not implement")
-        }
-      }
+    // No conflict rule: every attempt re-derives the change from its head.
+    tx.commit[Long](DeltaImport.snapshot(spark, tablePath))(_ => None) { snap =>
       set.get("delta.columnMapping.mode").foreach { m =>
         val cur = snap.configuration.get("delta.columnMapping.mode")
           .getOrElse("none")
@@ -2256,15 +1900,6 @@ object DeltaExport {
           s"property change of $tablePath: column-mapping mode $cur → $m " +
             "is not a metadata-only transition — owning-engine territory")
       }
-    }
-
-    var attempt = 0
-    while (attempt < 20) {
-      attempt += 1
-      val snap = DeltaImport.snapshot(spark, tablePath)
-      gate(snap)
-      val v = snap.version + 1
-      val nowMs = System.currentTimeMillis()
 
       // New/changed CHECK constraints validate against the CURRENT rows
       // of the snapshot this commit publishes over (re-run per retry —
@@ -2304,13 +1939,10 @@ object DeltaExport {
         .contains("name") && !snap.configuration
         .get("delta.columnMapping.mode").contains("name")
       val wantsW = Seq(
-        set.get("delta.enableDeletionVectors").contains("true") ->
-          "deletionVectors",
-        set.get("delta.enableChangeDataFeed").contains("true") ->
-          "changeDataFeed",
-        set.get("delta.enableInCommitTimestamps").contains("true") ->
-          "inCommitTimestamp",
-        set.get("delta.appendOnly").contains("true") -> "appendOnly",
+        sets("delta.enableDeletionVectors") -> "deletionVectors",
+        sets("delta.enableChangeDataFeed") -> "changeDataFeed",
+        sets("delta.enableInCommitTimestamps") -> "inCommitTimestamp",
+        sets("delta.appendOnly") -> "appendOnly",
         set.get("delta.checkpointPolicy").contains("v2") -> "v2Checkpoint",
         mappingUpgrade -> "columnMapping",
         set.keys.exists(_.startsWith("delta.constraints.")) ->
@@ -2346,22 +1978,8 @@ object DeltaExport {
       // ICT enablement provenance (PROTOCOL.md: the enablement commit
       // records version + timestamp so earlier file-timestamp travel
       // stays well-defined). This commit itself already stamps an ICT.
-      val enablingIct =
-        set.get("delta.enableInCommitTimestamps").contains("true") &&
-          !snap.configuration.get("delta.enableInCommitTimestamps")
-            .contains("true")
-      val ict: Option[Long] =
-        if (enablingIct ||
-            snap.configuration.get("delta.enableInCommitTimestamps")
-              .contains("true"))
-          Some(math.max(lastIctOf(fs, logDir, snap.version)
-            .getOrElse(0L) + 1, nowMs))
-        else None
-      val ictProps: Map[String, String] =
-        if (!enablingIct) Map.empty
-        else Map(
-          "delta.inCommitTimestampEnablementVersion" -> v.toString,
-          "delta.inCommitTimestampEnablementTimestamp" -> ict.get.toString)
+      val enablingIct = sets("delta.enableInCommitTimestamps") &&
+        !flagOn(snap.configuration, "delta.enableInCommitTimestamps")
 
       // Mapping upgrade: annotate EVERY field — nested included — with a
       // column id and physicalName = its CURRENT name (delta-spark's
@@ -2391,39 +2009,21 @@ object DeltaExport {
           (annotated,
             Map("delta.columnMapping.maxColumnId" -> nextId.toString))
         }
-      val merged = (snap.configuration -- unset) ++ set ++ ictProps ++ mapProps
+      val merged = (snap.configuration -- unset) ++ set ++ mapProps
       if (merged == snap.configuration && protoLine.isEmpty)
-        return snap.version // nothing to change — idempotent no-op
-
-      val lines = Seq.newBuilder[String]
-      lines += commitInfoJson(
-        Commit(v, nowMs, "SET TBLPROPERTIES", Nil,
-          Map("numSetProperties" -> set.size.toLong,
-            "numUnsetProperties" -> unset.size.toLong),
-          newSchema.json), ict = ict)
-      protoLine.foreach(lines += _)
-      lines += JsonMethods.compact(JObject("metaData" -> JObject(
-        "id" -> JString(snap.tableId.getOrElse(java.util.UUID
-          .nameUUIDFromBytes(tablePath.getBytes(StandardCharsets.UTF_8))
-          .toString)),
-        "format" -> JObject("provider" -> JString("parquet"),
-          "options" -> JObject()),
-        "schemaString" -> JString(newSchema.json),
-        "partitionColumns" -> JArray(
-          snap.partitionColumns.map(JString(_)).toList),
-        "configuration" -> JObject(merged.toSeq.sortBy(_._1)
-          .map { case (k, x) => k -> (JString(x): JValue) }: _*))))
-      val target = new Path(logDir, f"$v%020d.json")
-      val content = lines.result().mkString("", "\n", "\n")
-      if (publishExclusive(conf, fs, logDir, target, content)) {
-        checkpointIfDue(spark, tablePath, merged)
-        return v
-      }
-      // lost to a concurrent committer — loop re-resolves and retries
+        ForeignTxn.Unchanged(snap.version) // nothing to change — idempotent no-op
+      else ForeignTxn.Publish("SET TBLPROPERTIES",
+        Map("numSetProperties" -> set.size.toLong,
+          "numUnsetProperties" -> unset.size.toLong),
+        newSchema.json, merged,
+        st => protoLine.toSeq :+ tx.metaDataJson(snap, newSchema,
+          snap.partitionColumns,
+          if (!enablingIct) merged
+          else merged ++ Map(
+            "delta.inCommitTimestampEnablementVersion" -> st.version.toString,
+            "delta.inCommitTimestampEnablementTimestamp" -> st.ict.get.toString)),
+        v => v)
     }
-    throw new IllegalArgumentException(
-      s"property change of $tablePath: lost the commit race 20 times — " +
-        "retry when the table quiesces")
   }
 
   /** `ALTER TABLE delta.`path` RENAME COLUMN from TO to` — the verb the
@@ -2444,27 +2044,14 @@ object DeltaExport {
     * committed version. */
   def renameForeignColumn(spark: SparkSession, tablePath: String,
       from: String, to: String): Long = {
-    val conf = spark.sessionState.newHadoopConf()
-    val root = new Path(tablePath)
-    val fs = root.getFileSystem(conf)
-    val logDir = new Path(root, "_delta_log")
+    val tx = new ForeignTxn(spark, tablePath, s"rename in $tablePath",
+      retryHint = "retry when the table quiesces")
     require(!from.contains(".") && !to.contains("."),
       s"rename in $tablePath: only top-level columns rename here — " +
         "nested renames belong to the owning engine")
 
-    var attempt = 0
-    while (attempt < 20) {
-      attempt += 1
-      val snap = DeltaImport.snapshot(spark, tablePath)
-      snap.protocol.foreach { p =>
-        if (p.minWriterVersion >= 7) {
-          val unsupported = p.writerFeatures.filterNot(ForeignAppendFeatures)
-          require(unsupported.isEmpty,
-            s"rename in $tablePath: writer feature(s) " +
-              s"${unsupported.mkString(", ")} carry write-time obligations " +
-              "this writer does not implement")
-        }
-      }
+    // No conflict rule: every attempt re-checks the rename against its head.
+    tx.commit[Long](DeltaImport.snapshot(spark, tablePath))(_ => None) { snap =>
       require(snap.configuration.get("delta.columnMapping.mode")
         .contains("name"),
         s"rename in $tablePath: requires delta.columnMapping.mode=name — " +
@@ -2490,11 +2077,11 @@ object DeltaExport {
       }
       // Legacy delta.invariants documents keep their SQL verbatim through
       // a rename — and every subsequent foreign write re-evaluates them
-      // (invariantChecks), so a rename that leaves an invariant pointing
-      // at the old name bricks the table: each later append/merge/update
-      // fails with an unresolved-column error while other engines see
-      // inconsistent metadata. Same word-boundary guard as constraints:
-      // drop the invariant first.
+      // (ForeignTxn.validate), so a rename that leaves an invariant
+      // pointing at the old name bricks the table: each later
+      // append/merge/update fails with an unresolved-column error while
+      // other engines see inconsistent metadata. Same word-boundary guard
+      // as constraints: drop the invariant first.
       legacyInvariantsOf(snap.schema).foreach { case (col, sql) =>
         require(ref.findFirstIn(sql).isEmpty,
           s"rename in $tablePath: legacy invariant on $col references " +
@@ -2503,40 +2090,13 @@ object DeltaExport {
       }
       val newSchema = StructType(snap.schema.fields.map(f =>
         if (f.name == from) f.copy(name = to) else f))
-      val newPartCols = snap.partitionColumns.map(c =>
-        if (c == from) to else c)
-      val v = snap.version + 1
-      val nowMs = System.currentTimeMillis()
-      val ict = if (snap.configuration.get("delta.enableInCommitTimestamps")
-          .contains("true"))
-        Some(math.max(lastIctOf(fs, logDir, snap.version)
-          .getOrElse(0L) + 1, nowMs))
-      else None
-      val lines = Seq.newBuilder[String]
-      lines += commitInfoJson(
-        Commit(v, nowMs, "RENAME COLUMN", Nil, Map.empty,
-          newSchema.json), ict = ict)
-      lines += JsonMethods.compact(JObject("metaData" -> JObject(
-        "id" -> JString(snap.tableId.getOrElse(java.util.UUID
-          .nameUUIDFromBytes(tablePath.getBytes(StandardCharsets.UTF_8))
-          .toString)),
-        "format" -> JObject("provider" -> JString("parquet"),
-          "options" -> JObject()),
-        "schemaString" -> JString(newSchema.json),
-        "partitionColumns" -> JArray(newPartCols.map(JString(_)).toList),
-        "configuration" -> JObject(snap.configuration.toSeq.sortBy(_._1)
-          .map { case (k, x) => k -> (JString(x): JValue) }: _*))))
-      val target = new Path(logDir, f"$v%020d.json")
-      val content = lines.result().mkString("", "\n", "\n")
-      if (publishExclusive(conf, fs, logDir, target, content)) {
-        checkpointIfDue(spark, tablePath, snap.configuration)
-        return v
-      }
-      // lost to a concurrent committer — loop re-resolves and retries
+      ForeignTxn.Publish("RENAME COLUMN", Map.empty, newSchema.json,
+        snap.configuration,
+        _ => Seq(tx.metaDataJson(snap, newSchema,
+          snap.partitionColumns.map(c => if (c == from) to else c),
+          snap.configuration)),
+        v => v)
     }
-    throw new IllegalArgumentException(
-      s"rename in $tablePath: lost the commit race 20 times — " +
-        "retry when the table quiesces")
   }
 
   /** A `foreachBatch` function streaming micro-batches into a FOREIGN
@@ -2578,22 +2138,9 @@ object DeltaExport {
   def mergeForeignUpsert(spark: SparkSession, tablePath: String,
       source: org.apache.spark.sql.DataFrame, key: String,
       txn: Option[(String, Long)] = None): (Long, Long, Long) = {
-    val conf = spark.sessionState.newHadoopConf()
-    val root = new Path(tablePath)
-    val fs = root.getFileSystem(conf)
-    val logDir = new Path(root, "_delta_log")
-
+    val tx = new ForeignTxn(spark, tablePath, s"merge into $tablePath")
     def gate(snap: DeltaImport.Snapshot): Unit = {
-      snap.protocol.foreach { p =>
-        if (p.minWriterVersion >= 7) {
-          val unsupported = p.writerFeatures.filterNot(ForeignAppendFeatures)
-          require(unsupported.isEmpty,
-            s"merge into $tablePath: writer feature(s) " +
-              s"${unsupported.mkString(", ")} carry write-time obligations " +
-              "this writer does not implement")
-        }
-      }
-      require(!snap.configuration.get("delta.appendOnly").contains("true"),
+      require(!flagOn(snap.configuration, "delta.appendOnly"),
         s"merge into $tablePath: the table is append-only (delta.appendOnly)")
       val badMeta = snap.schema.fields.filter(f =>
         f.metadata.contains("delta.generationExpression") ||
@@ -2642,11 +2189,9 @@ object DeltaExport {
         notMatched = Seq(graft.table.MergeClause.InsertAll()), txn = txn)
       return (v, u, i)
     }
+    tx.gate(snap0)
     gate(snap0)
-    def alreadyCommitted(snap: DeltaImport.Snapshot): Boolean =
-      txn.exists { case (app, bv) =>
-        snap.setTransactions.get(app).exists(_ >= bv) }
-    if (alreadyCommitted(snap0)) return (snap0.version, 0L, 0L)
+    if (ForeignTxn.txnCommitted(snap0, txn)) return (snap0.version, 0L, 0L)
     val fields = snap0.schema.fields
     require(fields.exists(_.name.equalsIgnoreCase(key)),
       s"merge into $tablePath: no key column named $key")
@@ -2703,9 +2248,7 @@ object DeltaExport {
         p.writerFeatures.contains("deletionVectors"))
 
     val relOfSpelling: Map[String, String] = candidates.flatMap(f =>
-      DeltaImport.pathSpellings(tablePath, f.path, conf).map(_ -> f.path)).toMap
-    val byRel: Map[String, DeltaImport.AddFile] =
-      snap0.files.map(f => f.path -> f).toMap
+      DeltaImport.pathSpellings(tablePath, f.path, tx.conf).map(_ -> f.path)).toMap
     val seed = java.util.UUID.randomUUID().toString
     // Distributed DV build — matched positions aggregate into per-file
     // bitmaps on executors ([[buildForeignDvs]]); the rewrite fallback
@@ -2734,258 +2277,128 @@ object DeltaExport {
     val touchedSet = touchedRels.toSet
 
     // Stage ALL source rows (the matched keys' new images + the inserts).
-    val physMapAll = DeltaImport.topLevelPhysicalNames(snap0.schema)
-    val physPartCols = snap0.partitionColumns.map(c => physMapAll.getOrElse(c, c))
-    // Rewrite fallback: the touched files' survivors (rows whose key the
-    // source does NOT carry; old DVs already applied by the scan) stage
-    // as fresh files replacing the removed originals.
-    val survivorStage: Option[Path] =
-      if (dvSupported || touchedRels.isEmpty) None
-      else {
-        // Mirror deleteFromForeign: a rewrite assigns FRESH baseRowIds to
-        // survivor files, silently breaking row-id stability for rows the
-        // merge never touched — refuse rather than corrupt.
-        require(!snap0.protocol.exists(p => p.minWriterVersion >= 7 &&
-          p.writerFeatures.contains("rowTracking")),
-          s"merge into $tablePath: the rewrite fallback cannot preserve " +
-            "row tracking — enable delta.enableDeletionVectors instead")
-        val touched = snap0.files.filter(f => touchedSet(f.path))
-        val survivors = DeltaImport
-          .readFilesWithPositions(spark, snap0, touched, FileC, PosC)
-          .join(srcKeys, Seq(keyName), "left_anti")
-          .drop(FileC, PosC)
-        val sp = new Path(root, s"_appends/$seed-survivors")
-        val sPhys = DeltaImport.physicalRender(survivors, snap0.schema)
-        if (physPartCols.nonEmpty)
-          sPhys.write.partitionBy(physPartCols: _*).parquet(sp.toString)
-        else sPhys.write.parquet(sp.toString)
-        Some(sp)
-      }
-    val physDf = DeltaImport.physicalRender(aligned, snap0.schema)
-    val stageRel = s"_appends/$seed"
-    val stagePath = new Path(root, stageRel)
-    if (physPartCols.nonEmpty)
-      physDf.write.partitionBy(physPartCols: _*).parquet(stagePath.toString)
-    else physDf.write.parquet(stagePath.toString)
-    def reapStaging(): Unit = {
-      fs.delete(stagePath, true)
-      survivorStage.foreach(fs.delete(_, true))
-      fs.delete(new Path(root, s"_change_data/graft-$seed"), true)
-    }
-    def refuse(msg: String): Nothing = {
-      reapStaging()
-      throw new IllegalArgumentException(msg)
-    }
-    def constraintsOf(cfg: Map[String, String]): Map[String, String] =
-      cfg.collect { case (k, v) if k.startsWith("delta.constraints.") =>
-        k.stripPrefix("delta.constraints.") -> v }
-    def stagedLogical(): org.apache.spark.sql.DataFrame = {
-      val stagedPhys = spark.read.option("basePath", stagePath.toString)
-        .parquet(stagePath.toString)
-      DeltaImport.logicalRestore(stagedPhys, snap0.schema)
-    }
-    // Source uniqueness per key (delta-spark's multiple-match error),
-    // checked on the staged bytes alongside constraints/nullability.
-    def validate(cfg: Map[String, String]): Unit = {
-      import org.apache.spark.sql.functions.{count_if, expr, coalesce, lit, count}
-      val staged = stagedLogical()
-      val dup = staged.groupBy(col(s"`$keyName`")).agg(count(lit(1)).as("n"))
-        .filter(col("n") > 1).limit(1).collect()
-      if (dup.nonEmpty) refuse(
-        s"merge into $tablePath: source has multiple rows for key " +
-          s"${dup.head.get(0)} — deduplicate to latest-per-key first")
-      val nullChecks = fields.toSeq.filterNot(_.nullable)
-        .map(f => count_if(col(s"`${f.name}`").isNull).as(s"null ${f.name}"))
-      val checkChecks = constraintsOf(cfg).toSeq.sortBy(_._1).map { case (n, p) =>
-        count_if(!coalesce(expr(p).cast("boolean"), lit(true)))
-          .as(s"constraint $n") }
-      val checks = nullChecks ++ checkChecks ++ invariantChecks(snap0.schema)
-      if (checks.nonEmpty) {
-        val row = staged.agg(checks.head, checks.tail: _*).collect().head
-        val bad = row.schema.fieldNames.zipWithIndex
-          .filter { case (_, i) => row.getLong(i) > 0 }
-        if (bad.nonEmpty) refuse(
-          s"merge into $tablePath violates ${bad.map(_._1).mkString("; ")} " +
-            s"(${bad.map(b => row.getLong(b._2)).mkString(", ")} row(s))")
-      }
-    }
-    validate(snap0.configuration)
-
-    // CDF: matched keys restate as update pre/post images, fresh keys as
-    // inserts — classified by one join against the matched-key set.
-    val cdfOn = snap0.configuration
-      .get("delta.enableChangeDataFeed").contains("true")
-    val cdcRel = s"_change_data/graft-$seed"
-    if (cdfOn) {
-      import org.apache.spark.sql.functions.lit
-      def writeCdc(df: org.apache.spark.sql.DataFrame, sub: String): Unit = {
-        val p = new Path(root, s"$cdcRel/$sub")
-        if (df.isEmpty) return
-        if (physPartCols.nonEmpty)
-          df.write.partitionBy(physPartCols: _*).parquet(p.toString)
-        else df.write.parquet(p.toString)
-      }
-      val matchedKeys = matchedRows.map(_.select(col(s"`$keyName`")).distinct())
-      def phys(df: org.apache.spark.sql.DataFrame) =
-        DeltaImport.physicalRender(df, snap0.schema, keep = Seq("_change_type"))
-      matchedRows.foreach { m =>
-        writeCdc(phys(m.drop(FileC, PosC)
-          .withColumn("_change_type", lit("update_preimage"))), "pre")
-      }
-      matchedKeys match {
-        case Some(mk) =>
-          writeCdc(phys(stagedLogical().join(mk, Seq(keyName))
-            .withColumn("_change_type", lit("update_postimage"))), "post")
-          writeCdc(phys(stagedLogical().join(mk, Seq(keyName), "left_anti")
-            .withColumn("_change_type", lit("insert"))), "ins")
-        case None =>
-          writeCdc(phys(stagedLogical()
-            .withColumn("_change_type", lit("insert"))), "ins")
-      }
-    }
-    def parquetsUnder(p: Path): Seq[FileStatus] = {
-      if (!fs.exists(p)) return Nil
-      val it = fs.listFiles(p, true)
-      val b = Seq.newBuilder[FileStatus]
-      while (it.hasNext) {
-        val st = it.next()
-        if (st.isFile && st.getPath.getName.endsWith(".parquet")) b += st
-      }
-      b.result().sortBy(_.getPath.toString)
-    }
-    def relOf(st: FileStatus): String = {
-      val base = root.toUri.getPath.stripSuffix("/")
-      st.getPath.toUri.getPath.stripPrefix(base).stripPrefix("/")
-    }
-    def footerRows(st: FileStatus): Long = {
-      import org.apache.parquet.hadoop.ParquetFileReader
-      import org.apache.parquet.hadoop.util.HadoopInputFile
-      import scala.jdk.CollectionConverters._
-      val r = ParquetFileReader.open(HadoopInputFile.fromPath(st.getPath, conf))
-      try r.getFooter.getBlocks.asScala.map(_.getRowCount).sum
-      finally r.close()
-    }
-    val stagedFiles = parquetsUnder(stagePath)
-    val survivorFiles = survivorStage.map(parquetsUnder).getOrElse(Nil)
-    val stagedRows = stagedFiles.map(footerRows).sum
-    // inserted = source rows whose key matched NOTHING (a key matching
-    // several target rows DV-deletes them all but contributes one image)
-    val matchedKeyCount: Long = matchedRows
-      .map(_.select(col(s"`$keyName`")).distinct().count()).getOrElse(0L)
-    val insertedCount = stagedRows - matchedKeyCount
-
-    var attempt = 0
-    while (attempt < 20) {
-      attempt += 1
-      val snap = if (attempt == 1) snap0
-        else DeltaImport.snapshot(spark, tablePath)
-      if (attempt > 1) {
-        gate(snap)
-        if (alreadyCommitted(snap)) { reapStaging()
-          return (snap.version, 0L, 0L) }
-        val nowByRel = snap.files.map(f => f.path -> f).toMap
-        val touchedChanged = touchedRels.exists { rel =>
-          nowByRel.get(rel).forall(_.deletionVector !=
-            byRel(rel).deletionVector) }
-        // A rival blind append carrying any of the source's MERGE KEYS
-        // does not commute: a retried merge would insert a key the rival
-        // just appended, leaving duplicate keys (delta-spark raises
-        // ConcurrentAppendException). With a bounded key set the rival
-        // adds prune against `key isin`; an unbounded set aborts on ANY
-        // rival add — conservative, and a writer storm is re-runnable.
-        val rivalConflicts = {
-          val rivalAdds = snap.files.filterNot(f => byRel.contains(f.path))
-          rivalAdds.nonEmpty && (keySample.length > 1000 ||
-            DeltaSkipping.prune(spark, snap.copy(files = rivalAdds),
-              col(s"`$keyName`").isin(keySample.toIndexedSeq: _*)).nonEmpty)
+    val layout = new ForeignTxn.Layout(snap0)
+    tx.run {
+      // Rewrite fallback: the touched files' survivors (rows whose key the
+      // source does NOT carry; old DVs already applied by the scan) stage
+      // as fresh files replacing the removed originals.
+      val survivorStage: Option[Path] =
+        if (dvSupported || touchedRels.isEmpty) None
+        else {
+          // Mirror deleteFromForeign: a rewrite assigns FRESH baseRowIds to
+          // survivor files, silently breaking row-id stability for rows the
+          // merge never touched — refuse rather than corrupt.
+          require(!snap0.protocol.exists(p => p.minWriterVersion >= 7 &&
+            p.writerFeatures.contains("rowTracking")),
+            s"merge into $tablePath: the rewrite fallback cannot preserve " +
+              "row tracking — enable delta.enableDeletionVectors instead")
+          val touched = snap0.files.filter(f => touchedSet(f.path))
+          val survivors = DeltaImport
+            .readFilesWithPositions(spark, snap0, touched, FileC, PosC)
+            .join(srcKeys, Seq(keyName), "left_anti")
+            .drop(FileC, PosC)
+          Some(tx.writeStaged(
+            DeltaImport.physicalRender(survivors, snap0.schema),
+            s"_appends/$seed-survivors", layout.partCols))
         }
-        if (snap.schema.json != snap0.schema.json ||
-            snap.partitionColumns != snap0.partitionColumns ||
-            touchedChanged || rivalConflicts)
-          refuse(s"merge into $tablePath: a concurrent commit touched or " +
-            "added rows being merged — re-run the merge against the new state")
-        if (constraintsOf(snap.configuration) !=
-            constraintsOf(snap0.configuration))
-          validate(snap.configuration)
+      val stagePath = tx.writeStaged(
+        DeltaImport.physicalRender(aligned, snap0.schema),
+        s"_appends/$seed", layout.partCols)
+      def stagedLogical(): org.apache.spark.sql.DataFrame = {
+        val stagedPhys = spark.read.option("basePath", stagePath.toString)
+          .parquet(stagePath.toString)
+        DeltaImport.logicalRestore(stagedPhys, snap0.schema)
       }
-      val v = snap.version + 1
-      val nowMs = System.currentTimeMillis()
-      val physSchema = DeltaImport.toPhysicalSchema(snap0.schema)
-      val allowedStats = GraftTable.allowedStatsCols(snap.configuration,
-          snap0.schema.fieldNames.toSeq)
-        .map(_.map(n => physMapAll.getOrElse(n, n)))
-      val rtOn = snap.protocol.exists(p =>
-        p.minWriterVersion >= 7 && p.writerFeatures.contains("rowTracking"))
-      val hwm0: Long = snap.domainMetadata.get("delta.rowTracking")
-        .map(cfgJson =>
-          (JsonMethods.parse(cfgJson) \ "rowIdHighWaterMark") match {
-            case JInt(t) => t.toLong
-            case JLong(t) => t
-            case _ => -1L
-          }).getOrElse(-1L)
-      var nextBase = hwm0 + 1
-      val lines = Seq.newBuilder[String]
-      lines += commitInfoJson(
-        Commit(v, nowMs, "MERGE", Nil,
+      // Source uniqueness per key (delta-spark's multiple-match error),
+      // checked on the staged bytes alongside constraints/nullability.
+      def validate(cfg: Map[String, String]): Unit = {
+        import org.apache.spark.sql.functions.{count, lit}
+        val staged = stagedLogical()
+        val dup = staged.groupBy(col(s"`$keyName`")).agg(count(lit(1)).as("n"))
+          .filter(col("n") > 1).limit(1).collect()
+        if (dup.nonEmpty) throw new IllegalArgumentException(
+          s"merge into $tablePath: source has multiple rows for key " +
+            s"${dup.head.get(0)} — deduplicate to latest-per-key first")
+        tx.validate(staged, snap0.schema, cfg)
+      }
+      validate(snap0.configuration)
+
+      // CDF: matched keys restate as update pre/post images, fresh keys as
+      // inserts — classified by one join against the matched-key set.
+      val cdfOn = flagOn(snap0.configuration, "delta.enableChangeDataFeed")
+      val cdcRoot = tx.stage(s"_change_data/graft-$seed")
+      if (cdfOn) {
+        import org.apache.spark.sql.functions.lit
+        def writeCdc(df: org.apache.spark.sql.DataFrame, sub: String): Unit =
+          if (!df.isEmpty)
+            ForeignTxn.writeParquet(df, new Path(cdcRoot, sub), layout.partCols)
+        val matchedKeys = matchedRows.map(_.select(col(s"`$keyName`")).distinct())
+        def phys(df: org.apache.spark.sql.DataFrame) =
+          DeltaImport.physicalRender(df, snap0.schema, keep = Seq("_change_type"))
+        matchedRows.foreach { m =>
+          writeCdc(phys(m.drop(FileC, PosC)
+            .withColumn("_change_type", lit("update_preimage"))), "pre")
+        }
+        matchedKeys match {
+          case Some(mk) =>
+            writeCdc(phys(stagedLogical().join(mk, Seq(keyName))
+              .withColumn("_change_type", lit("update_postimage"))), "post")
+            writeCdc(phys(stagedLogical().join(mk, Seq(keyName), "left_anti")
+              .withColumn("_change_type", lit("insert"))), "ins")
+          case None =>
+            writeCdc(phys(stagedLogical()
+              .withColumn("_change_type", lit("insert"))), "ins")
+        }
+      }
+      val stagedFiles = tx.parquetsUnder(stagePath)
+      val survivorFiles = survivorStage.map(tx.parquetsUnder).getOrElse(Nil)
+      val stagedRows = stagedFiles.map(tx.footerRows).sum
+      // inserted = source rows whose key matched NOTHING (a key matching
+      // several target rows DV-deletes them all but contributes one image)
+      val matchedKeyCount: Long = matchedRows
+        .map(_.select(col(s"`$keyName`")).distinct().count()).getOrElse(0L)
+      val insertedCount = stagedRows - matchedKeyCount
+
+      tx.commit(snap0) { snap =>
+        gate(snap)
+        if (ForeignTxn.txnCommitted(snap, txn)) Some((snap.version, 0L, 0L))
+        else {
+          // A rival blind append carrying any of the source's MERGE KEYS
+          // does not commute: a retried merge would insert a key the rival
+          // just appended, leaving duplicate keys (delta-spark raises
+          // ConcurrentAppendException). With a bounded key set the rival
+          // adds prune against `key isin`; an unbounded set aborts on ANY
+          // rival add — conservative, and a writer storm is re-runnable.
+          if (ForeignTxn.layoutChanged(snap0, snap) ||
+              ForeignTxn.filesChanged(snap0, snap, touchedRels) ||
+              ForeignTxn.rivalMayMatch(spark, snap0, snap,
+                if (keySample.length > 1000) None
+                else Some(col(s"`$keyName`").isin(keySample.toIndexedSeq: _*))))
+            throw new IllegalArgumentException(
+              s"merge into $tablePath: a concurrent commit touched or " +
+                "added rows being merged — re-run the merge against the new state")
+          if (ForeignTxn.constraintsOf(snap.configuration) !=
+              ForeignTxn.constraintsOf(snap0.configuration))
+            validate(snap.configuration)
+          None
+        }
+      } { snap =>
+        ForeignTxn.Publish("MERGE",
           Map("numTargetRowsUpdated" -> matchedCount,
             "numTargetRowsInserted" -> insertedCount,
             "numTargetFilesAdded" ->
               (stagedFiles.size + survivorFiles.size).toLong,
             "numDeletionVectorsAdded" ->
               (if (dvSupported) touchedRels.size.toLong else 0L)),
-          snap0.schema.json),
-        ict = if (snap.configuration.get("delta.enableInCommitTimestamps")
-            .contains("true"))
-          Some(math.max(lastIctOf(fs, logDir, snap.version).getOrElse(0L) + 1,
-            nowMs))
-        else None)
-      touchedRels.foreach { rel =>
-        val prior = byRel(rel)
-        val dvField = prior.deletionVector
-          .map(d => "deletionVector" -> dvJson(d)).toList
-        lines += JsonMethods.compact(JObject("remove" -> JObject(List(
-          "path" -> (JString(encodePath(rel)): JValue),
-          "deletionTimestamp" -> (JLong(nowMs): JValue),
-          "dataChange" -> (JBool(true): JValue)) ++ dvField: _*)))
-        if (dvSupported) {
-          val st = fs.getFileStatus(DeltaImport.resolveFile(tablePath, rel))
-          lines += addJson(rel, st, physSchema, physPartCols, dataChange = true,
-            conf, Some(descByRel(rel)), prior.baseRowId,
-            prior.defaultRowCommitVersion, None, allowedStats)
-        }
-      }
-      (stagedFiles ++ survivorFiles).foreach { st =>
-        val base = if (rtOn) Some(nextBase) else None
-        if (rtOn) nextBase += footerRows(st)
-        lines += addJson(relOf(st), st, physSchema, physPartCols,
-          dataChange = true, conf, None, base, if (rtOn) Some(v) else None,
-          None, allowedStats)
-      }
-      if (rtOn && nextBase > hwm0 + 1) {
-        lines += JsonMethods.compact(JObject("domainMetadata" -> JObject(
-          "domain" -> JString("delta.rowTracking"),
-          "configuration" ->
-            JString(s"""{"rowIdHighWaterMark":${nextBase - 1}}"""),
-          "removed" -> JBool(false))))
-      }
-      if (cdfOn) parquetsUnder(new Path(root, cdcRel)).foreach { st =>
-        lines += cdcJson(relOf(st), st, physPartCols)
-      }
-      txn.foreach { case (app, bv) =>
-        lines += JsonMethods.compact(JObject("txn" -> JObject(
-          "appId" -> JString(app),
-          "version" -> JLong(bv),
-          "lastUpdated" -> JLong(nowMs))))
-      }
-      val target = new Path(logDir, f"$v%020d.json")
-      val content = lines.result().mkString("", "\n", "\n")
-      if (publishExclusive(conf, fs, logDir, target, content)) {
-        checkpointIfDue(spark, tablePath, snap.configuration)
-        return (v, matchedCount, insertedCount)
+          snap0.schema.json, snap.configuration,
+          st => tx.touchLines(layout, snap, st.nowMs, snap0, touchedRels,
+              descByRel) ++
+            tx.freshAdds(layout, snap, st.version, stagedFiles ++ survivorFiles) ++
+            (if (cdfOn) tx.cdcLines(layout, cdcRoot) else Nil) ++
+            ForeignTxn.txnJson(txn, st.nowMs),
+          v => (v, matchedCount, insertedCount))
       }
     }
-    refuse(s"merge into $tablePath: lost the commit race 20 times — " +
-      "a writer storm; retry when the table quiesces")
   }
 
   /** General MERGE into a FOREIGN Delta table — delta-spark's full
@@ -3044,10 +2457,7 @@ object DeltaExport {
       : (Long, Long, Long, Long) = {
     import graft.table.MergeClause
     import org.apache.spark.sql.functions.{lit, when, count}
-    val conf = spark.sessionState.newHadoopConf()
-    val root = new Path(tablePath)
-    val fs = root.getFileSystem(conf)
-    val logDir = new Path(root, "_delta_log")
+    val tx = new ForeignTxn(spark, tablePath, s"merge into $tablePath")
 
     require(keys.nonEmpty, s"merge into $tablePath: needs at least one equi key")
     require(targetAlias != sourceAlias,
@@ -3071,22 +2481,14 @@ object DeltaExport {
     }
 
     def gate(snap: DeltaImport.Snapshot): Unit = {
-      snap.protocol.foreach { p =>
-        if (p.minWriterVersion >= 7) {
-          val unsupported = p.writerFeatures.filterNot(ForeignAppendFeatures)
-          require(unsupported.isEmpty,
-            s"merge into $tablePath: writer feature(s) " +
-              s"${unsupported.mkString(", ")} carry write-time obligations " +
-              "this writer does not implement")
-        }
-      }
-      require(!snap.configuration.get("delta.appendOnly").contains("true") ||
+      require(!flagOn(snap.configuration, "delta.appendOnly") ||
         (matched.isEmpty && notMatchedBySource.isEmpty),
         s"merge into $tablePath: the table is append-only (delta.appendOnly)")
       legacyInvariantsOf(snap.schema) // malformed document refuses up front
     }
 
     val snap0 = DeltaImport.snapshot(spark, tablePath)
+    tx.gate(snap0)
     gate(snap0)
     // With deletionVectors advertised claimed rows record as DVs; else
     // the touched files rewrite to their survivors (delta-spark's pre-DV
@@ -3094,10 +2496,7 @@ object DeltaExport {
     val dvSupported = snap0.protocol.exists(p =>
       p.readerFeatures.contains("deletionVectors") ||
         p.writerFeatures.contains("deletionVectors"))
-    def alreadyCommitted(snap: DeltaImport.Snapshot): Boolean =
-      txn.exists { case (app, bv) =>
-        snap.setTransactions.get(app).exists(_ >= bv) }
-    if (alreadyCommitted(snap0)) return (snap0.version, 0L, 0L, 0L)
+    if (ForeignTxn.txnCommitted(snap0, txn)) return (snap0.version, 0L, 0L, 0L)
     val fields = snap0.schema.fields
     val keyNames = keys.map { k =>
       require(fields.exists(_.name.equalsIgnoreCase(k)),
@@ -3110,24 +2509,8 @@ object DeltaExport {
     // path): neither kind is assignable; update images recompute
     // generated and keep identity; insert images compute generated and
     // allocate identity above the high-water mark.
-    val genSpecs: Map[String, String] = fields.iterator.collect {
-      case f if f.metadata.contains("delta.generationExpression") =>
-        f.name -> f.metadata.getString("delta.generationExpression")
-    }.toMap
-    val idSpecs: Map[String, (Long, Long, Boolean)] = fields.iterator.collect {
-      case f if f.metadata.contains("delta.identity.start") =>
-        f.name -> ((f.metadata.getLong("delta.identity.start"),
-          if (f.metadata.contains("delta.identity.step"))
-            f.metadata.getLong("delta.identity.step") else 1L,
-          f.metadata.contains("delta.identity.allowExplicitInsert") &&
-            f.metadata.getBoolean("delta.identity.allowExplicitInsert")))
-    }.toMap
-    val idHwm: Map[String, Long] = fields.iterator.collect {
-      case f if idSpecs.contains(f.name) =>
-        f.name -> (if (f.metadata.contains("delta.identity.highWaterMark"))
-          f.metadata.getLong("delta.identity.highWaterMark")
-        else idSpecs(f.name)._1 - idSpecs(f.name)._2)
-    }.toMap
+    val genSpecs = generatedSpecs(fields)
+    val (idSpecs, idHwm) = identitySpecs(fields)
     val engineMaintained = genSpecs.keySet ++ idSpecs.keySet
     // Assignments / explicit inserts must bind to existing target fields.
     def checkAssigned(cls: Seq[MergeClause]): Unit = cls.foreach {
@@ -3167,12 +2550,12 @@ object DeltaExport {
     val keySamples: Seq[(String, Array[Any])] = keyNames.map { k =>
       k -> srcNonNull.select(col(s"`$k`")).distinct().limit(1001)
         .collect().map(_.get(0)) }
-    val candidates =
+    val keysBound: Option[org.apache.spark.sql.Column] =
       if (notMatchedBySource.nonEmpty || keySamples.exists(_._2.length > 1000))
-        snap0.files
-      else DeltaSkipping.prune(spark, snap0,
-        keySamples.map { case (k, vs) =>
-          col(s"`$k`").isin(vs.toIndexedSeq: _*) }.reduce(_ && _))
+        None
+      else Some(keySamples.map { case (k, vs) =>
+        col(s"`$k`").isin(vs.toIndexedSeq: _*) }.reduce(_ && _))
+    val candidates = keysBound.fold(snap0.files)(DeltaSkipping.prune(spark, snap0, _))
 
     val tgtRows =
       if (candidates.isEmpty) None
@@ -3263,9 +2646,7 @@ object DeltaExport {
 
     // Claimed target rows → distributed per-file DV build.
     val relOfSpelling: Map[String, String] = candidates.flatMap(f =>
-      DeltaImport.pathSpellings(tablePath, f.path, conf).map(_ -> f.path)).toMap
-    val byRel: Map[String, DeltaImport.AddFile] =
-      snap0.files.map(f => f.path -> f).toMap
+      DeltaImport.pathSpellings(tablePath, f.path, tx.conf).map(_ -> f.path)).toMap
     val seed = java.util.UUID.randomUUID().toString
     val claimedTargets: Option[org.apache.spark.sql.DataFrame] = {
       val parts = (matchedFrame.toSeq ++ bySourceFrame.toSeq).map(f =>
@@ -3292,34 +2673,6 @@ object DeltaExport {
         (rels, Map.empty[String, DeltaDeletionVectors.Descriptor])
       }
     val touchedSet = touchedRels.toSet
-    // Rewrite fallback: the touched files' UNCLAIMED rows (old DVs
-    // already applied by the scan) restage as fresh files replacing the
-    // removed originals — delta-spark's pre-DV merge shape.
-    val survivorStage: Option[Path] =
-      if (dvSupported || touchedRels.isEmpty) None
-      else {
-        require(!snap0.protocol.exists(p => p.minWriterVersion >= 7 &&
-          p.writerFeatures.contains("rowTracking")),
-          s"merge into $tablePath: the rewrite fallback cannot preserve " +
-            "row tracking — enable delta.enableDeletionVectors instead")
-        val touched = snap0.files.filter(f => touchedSet(f.path))
-        val all = DeltaImport
-          .readFilesWithPositions(spark, snap0, touched, FileC, PosC)
-        val survivors = claimedTargets.map(ct =>
-          all.join(ct, Seq(FileC, PosC), "left_anti")).getOrElse(all)
-          .drop(FileC, PosC)
-        val sp = new Path(root, s"_appends/$seed-survivors")
-        val sPhysMap = DeltaImport.topLevelPhysicalNames(snap0.schema)
-          .filter { case (l, p) => l != p }
-        val sPhys = sPhysMap.foldLeft(survivors) {
-          case (d, (l, p)) => d.withColumnRenamed(l, p) }
-        val sPartCols = snap0.partitionColumns.map(c =>
-          DeltaImport.topLevelPhysicalNames(snap0.schema).getOrElse(c, c))
-        if (sPartCols.nonEmpty)
-          sPhys.write.partitionBy(sPartCols: _*).parquet(sp.toString)
-        else sPhys.write.parquet(sp.toString)
-        Some(sp)
-      }
 
     // New images — one staged write: matched UPDATE claims (assignments
     // over both aliases), by-source UPDATE claims (target alias only),
@@ -3395,7 +2748,7 @@ object DeltaExport {
       // hwm + step·(1 + task-block counter), explicit values ride.
       val filled = idSpecs.foldLeft(regen(projected)) {
         case (d, (name, (_, step, _))) =>
-          import org.apache.spark.sql.functions.{monotonically_increasing_id, when}
+          import org.apache.spark.sql.functions.monotonically_increasing_id
           val assign = lit(idHwm(name)) +
             lit(step) * (monotonically_increasing_id() + lit(1L))
           d.withColumn(name,
@@ -3427,204 +2780,133 @@ object DeltaExport {
           .map("i" -> _).toSeq
       else Nil)
 
-    val physMapAll = DeltaImport.topLevelPhysicalNames(snap0.schema)
-    val physPartCols = snap0.partitionColumns.map(c => physMapAll.getOrElse(c, c))
-    val stagePath = new Path(root, s"_appends/$seed")
-    val stagedAny = imageByKind.nonEmpty
-    imageByKind.foreach { case (kind, df) =>
-      val physDf = DeltaImport.physicalRender(df, snap0.schema)
-      val p = new Path(stagePath, kind)
-      if (physPartCols.nonEmpty)
-        physDf.write.partitionBy(physPartCols: _*).parquet(p.toString)
-      else physDf.write.parquet(p.toString)
-    }
-    /** The staged bytes of one kind, PHYSICAL names (absent when the
-      * branch claimed nothing). The schema is PINNED — partition values
-      * come back with the table's declared types, not inference's (a
-      * string partition value '00123' must not re-type to int 123 on
-      * its way into the CDF files). */
-    val physReadSchema = DeltaImport.toPhysicalSchema(snap0.schema)
-    def stagedKind(kind: String): Option[org.apache.spark.sql.DataFrame] =
-      imageByKind.collectFirst { case (k, _) if k == kind =>
-        val p = new Path(stagePath, kind)
-        spark.read.schema(physReadSchema)
-          .option("basePath", p.toString).parquet(p.toString)
-      }
-    // Abort cleanup reaps EVERYTHING this merge staged — the image
-    // files, the rewrite fallback's survivors, and the CDF staging.
-    def reapStaging(): Unit = {
-      fs.delete(stagePath, true)
-      survivorStage.foreach(fs.delete(_, true))
-      fs.delete(new Path(root, s"_change_data/graft-$seed"), true)
-    }
-    def refuse(msg: String): Nothing = {
-      reapStaging()
-      throw new IllegalArgumentException(msg)
-    }
-    def constraintsOf(cfg: Map[String, String]): Map[String, String] =
-      cfg.collect { case (k, v) if k.startsWith("delta.constraints.") =>
-        k.stripPrefix("delta.constraints.") -> v }
-    def stagedLogical(): org.apache.spark.sql.DataFrame = {
-      val stagedPhys = imageByKind.map { case (k, _) => stagedKind(k).get }
-        .reduce(_ unionByName _)
-      DeltaImport.logicalRestore(stagedPhys, snap0.schema)
-    }
-    def validate(cfg: Map[String, String]): Unit = {
-      if (!stagedAny) return
-      import org.apache.spark.sql.functions.{count_if, expr, coalesce}
-      val staged = stagedLogical()
-      val nullChecks = fields.toSeq.filterNot(_.nullable)
-        .map(f => count_if(col(s"`${f.name}`").isNull).as(s"null ${f.name}"))
-      val checkChecks = constraintsOf(cfg).toSeq.sortBy(_._1).map { case (n, p) =>
-        count_if(!coalesce(expr(p).cast("boolean"), lit(true)))
-          .as(s"constraint $n") }
-      val checks = nullChecks ++ checkChecks ++ invariantChecks(snap0.schema)
-      if (checks.nonEmpty) {
-        val row = staged.agg(checks.head, checks.tail: _*).collect().head
-        val bad = row.schema.fieldNames.zipWithIndex
-          .filter { case (_, i) => row.getLong(i) > 0 }
-        if (bad.nonEmpty) refuse(
-          s"merge into $tablePath violates ${bad.map(_._1).mkString("; ")} " +
-            s"(${bad.map(b => row.getLong(b._2)).mkString(", ")} row(s))")
-      }
-    }
-    validate(snap0.configuration)
-    // Advanced identity watermark over the staged bytes (directional —
-    // see [[advancedHwms]]); the commit re-publishes metaData with it,
-    // as appends do.
-    val newHwms: Map[String, Long] =
-      if (idSpecs.isEmpty || !stagedAny) Map.empty
-      else advancedHwms(stagedLogical(), idSpecs, idHwm)
-
-    // CDF rows, classified straight from the claim frames.
-    val cdfOn = snap0.configuration
-      .get("delta.enableChangeDataFeed").contains("true")
-    val cdcRel = s"_change_data/graft-$seed"
-    if (cdfOn) {
-      def phys(df: org.apache.spark.sql.DataFrame) =
-        DeltaImport.physicalRender(df, snap0.schema, keep = Seq("_change_type"))
-      def writeCdc(df: org.apache.spark.sql.DataFrame, sub: String): Unit = {
-        if (df.isEmpty) return
-        val p = new Path(root, s"$cdcRel/$sub")
-        if (physPartCols.nonEmpty)
-          df.write.partitionBy(physPartCols: _*).parquet(p.toString)
-        else df.write.parquet(p.toString)
-      }
-      def tgtCols(frame: org.apache.spark.sql.DataFrame) =
-        frame.select(fields.toIndexedSeq.map(f =>
-          col(s"$targetAlias.`${f.name}`").as(f.name)): _*)
-      def claimsOfKind(frame: Option[org.apache.spark.sql.DataFrame],
-          clauses: Seq[MergeClause], wantDelete: Boolean) = frame.map { f =>
-        val idxs = clauses.zipWithIndex.collect {
-          case (_: MergeClause.Delete, i) if wantDelete => i
-          case (c, i) if !wantDelete && !c.isInstanceOf[MergeClause.Delete] => i
+    val layout = new ForeignTxn.Layout(snap0)
+    tx.run {
+      // Rewrite fallback: the touched files' UNCLAIMED rows (old DVs
+      // already applied by the scan) restage as fresh files replacing the
+      // removed originals — delta-spark's pre-DV merge shape.
+      val survivorStage: Option[Path] =
+        if (dvSupported || touchedRels.isEmpty) None
+        else {
+          require(!snap0.protocol.exists(p => p.minWriterVersion >= 7 &&
+            p.writerFeatures.contains("rowTracking")),
+            s"merge into $tablePath: the rewrite fallback cannot preserve " +
+              "row tracking — enable delta.enableDeletionVectors instead")
+          val touched = snap0.files.filter(f => touchedSet(f.path))
+          val all = DeltaImport
+            .readFilesWithPositions(spark, snap0, touched, FileC, PosC)
+          val survivors = claimedTargets.map(ct =>
+            all.join(ct, Seq(FileC, PosC), "left_anti")).getOrElse(all)
+            .drop(FileC, PosC)
+          val sPhys = DeltaImport.topLevelPhysicalNames(snap0.schema)
+            .filter { case (l, p) => l != p }
+            .foldLeft(survivors) { case (d, (l, p)) => d.withColumnRenamed(l, p) }
+          Some(tx.writeStaged(sPhys, s"_appends/$seed-survivors",
+            layout.partCols))
         }
-        f.filter(col(ClaimC).isin(idxs.map(Int.box): _*))
-      }
-      // pre-images: updated rows; delete rows; post-images re-derive from
-      // the update projection (exactly what was staged for those claims)
-      claimsOfKind(matchedFrame, matched, wantDelete = false).foreach(f =>
-        writeCdc(phys(tgtCols(f)
-          .withColumn("_change_type", lit("update_preimage"))), "pre-m"))
-      claimsOfKind(bySourceFrame, notMatchedBySource, wantDelete = false)
-        .foreach(f => writeCdc(phys(tgtCols(f)
-          .withColumn("_change_type", lit("update_preimage"))), "pre-b"))
-      claimsOfKind(matchedFrame, matched, wantDelete = true).foreach(f =>
-        writeCdc(phys(tgtCols(f)
-          .withColumn("_change_type", lit("delete"))), "del-m"))
-      claimsOfKind(bySourceFrame, notMatchedBySource, wantDelete = true)
-        .foreach(f => writeCdc(phys(tgtCols(f)
-          .withColumn("_change_type", lit("delete"))), "del-b"))
-      // Post/insert images restate the STAGED bytes (already physical) —
-      // bit-identical to the committed rows by construction, never a
-      // re-evaluation of the image plan.
-      stagedKind("m").foreach(df => writeCdc(
-        df.withColumn("_change_type", lit("update_postimage")), "post-m"))
-      stagedKind("b").foreach(df => writeCdc(
-        df.withColumn("_change_type", lit("update_postimage")), "post-b"))
-      stagedKind("i").foreach(df => writeCdc(
-        df.withColumn("_change_type", lit("insert")), "ins"))
-    }
 
-    def parquetsUnder(p: Path): Seq[FileStatus] = {
-      if (!fs.exists(p)) return Nil
-      val it = fs.listFiles(p, true)
-      val b = Seq.newBuilder[FileStatus]
-      while (it.hasNext) {
-        val st = it.next()
-        if (st.isFile && st.getPath.getName.endsWith(".parquet")) b += st
+      val stagePath = tx.stage(s"_appends/$seed")
+      val stagedAny = imageByKind.nonEmpty
+      imageByKind.foreach { case (kind, df) =>
+        ForeignTxn.writeParquet(DeltaImport.physicalRender(df, snap0.schema),
+          new Path(stagePath, kind), layout.partCols)
       }
-      b.result().sortBy(_.getPath.toString)
-    }
-    def relOf(st: FileStatus): String = {
-      val base = root.toUri.getPath.stripSuffix("/")
-      st.getPath.toUri.getPath.stripPrefix(base).stripPrefix("/")
-    }
-    def footerRows(st: FileStatus): Long = {
-      import org.apache.parquet.hadoop.ParquetFileReader
-      import org.apache.parquet.hadoop.util.HadoopInputFile
-      import scala.jdk.CollectionConverters._
-      val r = ParquetFileReader.open(HadoopInputFile.fromPath(st.getPath, conf))
-      try r.getFooter.getBlocks.asScala.map(_.getRowCount).sum
-      finally r.close()
-    }
-    val stagedFiles = if (stagedAny) parquetsUnder(stagePath) else Nil
-    val survivorFiles = survivorStage.map(parquetsUnder).getOrElse(Nil)
-    (matchedFrame ++ bySourceFrame ++ notMatchedFrame).foreach(_.unpersist())
+      /** The staged bytes of one kind, PHYSICAL names (absent when the
+        * branch claimed nothing). The schema is PINNED — partition values
+        * come back with the table's declared types, not inference's (a
+        * string partition value '00123' must not re-type to int 123 on
+        * its way into the CDF files). */
+      def stagedKind(kind: String): Option[org.apache.spark.sql.DataFrame] =
+        imageByKind.collectFirst { case (k, _) if k == kind =>
+          val p = new Path(stagePath, kind)
+          spark.read.schema(layout.physSchema)
+            .option("basePath", p.toString).parquet(p.toString)
+        }
+      def stagedLogical(): org.apache.spark.sql.DataFrame = {
+        val stagedPhys = imageByKind.map { case (k, _) => stagedKind(k).get }
+          .reduce(_ unionByName _)
+        DeltaImport.logicalRestore(stagedPhys, snap0.schema)
+      }
+      def validate(cfg: Map[String, String]): Unit =
+        if (stagedAny) tx.validate(stagedLogical(), snap0.schema, cfg)
+      validate(snap0.configuration)
+      // Advanced identity watermark over the staged bytes (directional —
+      // see [[advancedHwms]]); the commit re-publishes metaData with it,
+      // as appends do.
+      val newHwms: Map[String, Long] =
+        if (idSpecs.isEmpty || !stagedAny) Map.empty
+        else advancedHwms(stagedLogical(), idSpecs, idHwm)
 
-    var attempt = 0
-    while (attempt < 20) {
-      attempt += 1
-      val snap = if (attempt == 1) snap0
-        else DeltaImport.snapshot(spark, tablePath)
-      if (attempt > 1) {
+      // CDF rows, classified straight from the claim frames.
+      val cdfOn = flagOn(snap0.configuration, "delta.enableChangeDataFeed")
+      val cdcRoot = tx.stage(s"_change_data/graft-$seed")
+      if (cdfOn) {
+        def phys(df: org.apache.spark.sql.DataFrame) =
+          DeltaImport.physicalRender(df, snap0.schema, keep = Seq("_change_type"))
+        def writeCdc(df: org.apache.spark.sql.DataFrame, sub: String): Unit =
+          if (!df.isEmpty)
+            ForeignTxn.writeParquet(df, new Path(cdcRoot, sub), layout.partCols)
+        def tgtCols(frame: org.apache.spark.sql.DataFrame) =
+          frame.select(fields.toIndexedSeq.map(f =>
+            col(s"$targetAlias.`${f.name}`").as(f.name)): _*)
+        def claimsOfKind(frame: Option[org.apache.spark.sql.DataFrame],
+            clauses: Seq[MergeClause], wantDelete: Boolean) = frame.map { f =>
+          val idxs = clauses.zipWithIndex.collect {
+            case (_: MergeClause.Delete, i) if wantDelete => i
+            case (c, i) if !wantDelete && !c.isInstanceOf[MergeClause.Delete] => i
+          }
+          f.filter(col(ClaimC).isin(idxs.map(Int.box): _*))
+        }
+        // pre-images: updated rows; delete rows; post-images re-derive from
+        // the update projection (exactly what was staged for those claims)
+        claimsOfKind(matchedFrame, matched, wantDelete = false).foreach(f =>
+          writeCdc(phys(tgtCols(f)
+            .withColumn("_change_type", lit("update_preimage"))), "pre-m"))
+        claimsOfKind(bySourceFrame, notMatchedBySource, wantDelete = false)
+          .foreach(f => writeCdc(phys(tgtCols(f)
+            .withColumn("_change_type", lit("update_preimage"))), "pre-b"))
+        claimsOfKind(matchedFrame, matched, wantDelete = true).foreach(f =>
+          writeCdc(phys(tgtCols(f)
+            .withColumn("_change_type", lit("delete"))), "del-m"))
+        claimsOfKind(bySourceFrame, notMatchedBySource, wantDelete = true)
+          .foreach(f => writeCdc(phys(tgtCols(f)
+            .withColumn("_change_type", lit("delete"))), "del-b"))
+        // Post/insert images restate the STAGED bytes (already physical) —
+        // bit-identical to the committed rows by construction, never a
+        // re-evaluation of the image plan.
+        stagedKind("m").foreach(df => writeCdc(
+          df.withColumn("_change_type", lit("update_postimage")), "post-m"))
+        stagedKind("b").foreach(df => writeCdc(
+          df.withColumn("_change_type", lit("update_postimage")), "post-b"))
+        stagedKind("i").foreach(df => writeCdc(
+          df.withColumn("_change_type", lit("insert")), "ins"))
+      }
+
+      val stagedFiles = if (stagedAny) tx.parquetsUnder(stagePath) else Nil
+      val survivorFiles = survivorStage.map(tx.parquetsUnder).getOrElse(Nil)
+      (matchedFrame ++ bySourceFrame ++ notMatchedFrame).foreach(_.unpersist())
+
+      tx.commit(snap0) { snap =>
         gate(snap)
-        if (alreadyCommitted(snap)) { reapStaging()
-          return (snap.version, 0L, 0L, 0L) }
-        val nowByRel = snap.files.map(f => f.path -> f).toMap
-        val touchedChanged = touchedRels.exists { rel =>
-          nowByRel.get(rel).forall(_.deletionVector !=
-            byRel(rel).deletionVector) }
-        // Rival adds conflict unless provably key-disjoint (see
-        // mergeForeignUpsert); by-source clauses read the whole target,
-        // so ANY rival data change conflicts there.
-        val rivalConflicts = {
-          val rivalAdds = snap.files.filterNot(f => byRel.contains(f.path))
-          rivalAdds.nonEmpty && (notMatchedBySource.nonEmpty ||
-            keySamples.exists(_._2.length > 1000) ||
-            DeltaSkipping.prune(spark, snap.copy(files = rivalAdds),
-              keySamples.map { case (k, vs) =>
-                col(s"`$k`").isin(vs.toIndexedSeq: _*) }
-                .reduce(_ && _)).nonEmpty)
+        if (ForeignTxn.txnCommitted(snap, txn))
+          Some((snap.version, 0L, 0L, 0L))
+        else {
+          // Rival adds conflict unless provably key-disjoint (see
+          // mergeForeignUpsert); by-source clauses read the whole target,
+          // so ANY rival data change conflicts there.
+          if (ForeignTxn.layoutChanged(snap0, snap) ||
+              ForeignTxn.filesChanged(snap0, snap, touchedRels) ||
+              ForeignTxn.rivalMayMatch(spark, snap0, snap, keysBound))
+            throw new IllegalArgumentException(
+              s"merge into $tablePath: a concurrent commit touched or " +
+                "added rows being merged — re-run the merge against the new state")
+          if (ForeignTxn.constraintsOf(snap.configuration) !=
+              ForeignTxn.constraintsOf(snap0.configuration))
+            validate(snap.configuration)
+          None
         }
-        if (snap.schema.json != snap0.schema.json ||
-            snap.partitionColumns != snap0.partitionColumns ||
-            touchedChanged || rivalConflicts)
-          refuse(s"merge into $tablePath: a concurrent commit touched or " +
-            "added rows being merged — re-run the merge against the new state")
-        if (constraintsOf(snap.configuration) !=
-            constraintsOf(snap0.configuration))
-          validate(snap.configuration)
-      }
-      val v = snap.version + 1
-      val nowMs = System.currentTimeMillis()
-      val physSchema = DeltaImport.toPhysicalSchema(snap0.schema)
-      val allowedStats = GraftTable.allowedStatsCols(snap.configuration,
-          snap0.schema.fieldNames.toSeq)
-        .map(_.map(n => physMapAll.getOrElse(n, n)))
-      val rtOn = snap.protocol.exists(p =>
-        p.minWriterVersion >= 7 && p.writerFeatures.contains("rowTracking"))
-      val hwm0: Long = snap.domainMetadata.get("delta.rowTracking")
-        .map(cfgJson =>
-          (JsonMethods.parse(cfgJson) \ "rowIdHighWaterMark") match {
-            case JInt(t) => t.toLong
-            case JLong(t) => t
-            case _ => -1L
-          }).getOrElse(-1L)
-      var nextBase = hwm0 + 1
-      val lines = Seq.newBuilder[String]
-      lines += commitInfoJson(
-        Commit(v, nowMs, "MERGE", Nil,
+      } { snap =>
+        ForeignTxn.Publish("MERGE",
           Map("numTargetRowsUpdated" -> updatedCount,
             "numTargetRowsDeleted" -> deletedCount,
             "numTargetRowsInserted" -> insertedCount,
@@ -3632,97 +2914,46 @@ object DeltaExport {
               (stagedFiles.size + survivorFiles.size).toLong,
             "numDeletionVectorsAdded" ->
               (if (dvSupported) touchedRels.size.toLong else 0L)),
-          snap0.schema.json),
-        ict = if (snap.configuration.get("delta.enableInCommitTimestamps")
-            .contains("true"))
-          Some(math.max(lastIctOf(fs, logDir, snap.version).getOrElse(0L) + 1,
-            nowMs))
-        else None)
-      // Identity allocation advanced the high-water mark → re-publish
-      // metaData carrying it (same shape as appendToForeign's).
-      if (newHwms.nonEmpty) {
-        val newSchema = StructType(snap.schema.fields.map { f =>
-          newHwms.get(f.name) match {
-            case Some(h) => f.copy(metadata =
-              new org.apache.spark.sql.types.MetadataBuilder()
-                .withMetadata(f.metadata)
-                .putLong("delta.identity.highWaterMark", h).build())
-            case None => f
-          }
-        })
-        lines += JsonMethods.compact(JObject("metaData" -> JObject(
-          "id" -> JString(snap.tableId.getOrElse(java.util.UUID
-            .nameUUIDFromBytes(tablePath.getBytes(StandardCharsets.UTF_8))
-            .toString)),
-          "format" -> JObject("provider" -> JString("parquet"),
-            "options" -> JObject()),
-          "schemaString" -> JString(newSchema.json),
-          "partitionColumns" -> JArray(
-            snap.partitionColumns.map(JString(_)).toList),
-          "configuration" -> JObject(snap.configuration.toSeq.sortBy(_._1)
-            .map { case (k, v) => k -> (JString(v): JValue) }: _*))))
-      }
-      touchedRels.foreach { rel =>
-        val prior = byRel(rel)
-        val dvField = prior.deletionVector
-          .map(d => "deletionVector" -> dvJson(d)).toList
-        lines += JsonMethods.compact(JObject("remove" -> JObject(List(
-          "path" -> (JString(encodePath(rel)): JValue),
-          "deletionTimestamp" -> (JLong(nowMs): JValue),
-          "dataChange" -> (JBool(true): JValue)) ++ dvField: _*)))
-        if (dvSupported) {
-          val st = fs.getFileStatus(DeltaImport.resolveFile(tablePath, rel))
-          lines += addJson(rel, st, physSchema, physPartCols,
-            dataChange = true, conf, Some(descByRel(rel)), prior.baseRowId,
-            prior.defaultRowCommitVersion, None, allowedStats)
-        }
-      }
-      (stagedFiles ++ survivorFiles).foreach { st =>
-        val base = if (rtOn) Some(nextBase) else None
-        if (rtOn) nextBase += footerRows(st)
-        lines += addJson(relOf(st), st, physSchema, physPartCols,
-          dataChange = true, conf, None, base, if (rtOn) Some(v) else None,
-          None, allowedStats)
-      }
-      if (rtOn && nextBase > hwm0 + 1) {
-        lines += JsonMethods.compact(JObject("domainMetadata" -> JObject(
-          "domain" -> JString("delta.rowTracking"),
-          "configuration" ->
-            JString(s"""{"rowIdHighWaterMark":${nextBase - 1}}"""),
-          "removed" -> JBool(false))))
-      }
-      if (cdfOn) parquetsUnder(new Path(root, cdcRel)).foreach { st =>
-        lines += cdcJson(relOf(st), st, physPartCols)
-      }
-      txn.foreach { case (app, bv) =>
-        lines += JsonMethods.compact(JObject("txn" -> JObject(
-          "appId" -> JString(app),
-          "version" -> JLong(bv),
-          "lastUpdated" -> JLong(nowMs))))
-      }
-      val target = new Path(logDir, f"$v%020d.json")
-      val content = lines.result().mkString("", "\n", "\n")
-      if (publishExclusive(conf, fs, logDir, target, content)) {
-        checkpointIfDue(spark, tablePath, snap.configuration)
-        return (v, updatedCount, deletedCount, insertedCount)
+          snap0.schema.json, snap.configuration,
+          st => tx.hwmMetaData(snap, newHwms) ++
+            tx.touchLines(layout, snap, st.nowMs, snap0, touchedRels,
+              descByRel) ++
+            tx.freshAdds(layout, snap, st.version, stagedFiles ++ survivorFiles) ++
+            (if (cdfOn) tx.cdcLines(layout, cdcRoot) else Nil) ++
+            ForeignTxn.txnJson(txn, st.nowMs),
+          v => (v, updatedCount, deletedCount, insertedCount))
       }
     }
-    refuse(s"merge into $tablePath: lost the commit race 20 times — " +
-      "a writer storm; retry when the table quiesces")
   }
 
-  /** The winner's inCommitTimestamp at `version` (monotonicity floor for
-    * the next ICT-stamped commit), if the commit recorded one. */
-  private def lastIctOf(fs: org.apache.hadoop.fs.FileSystem, logDir: Path,
-      version: Long): Option[Long] = {
-    val p = new Path(logDir, f"$version%020d.json")
-    if (!fs.exists(p)) return None
-    val in = fs.open(p)
-    val lines = try scala.io.Source.fromInputStream(in, "UTF-8")
-      .getLines().toArray finally in.close()
-    lines.iterator.filter(_.trim.nonEmpty)
-      .map(l => JsonMethods.parse(l) \ "commitInfo" \ "inCommitTimestamp")
-      .collectFirst { case JInt(t) => t.toLong case JLong(t) => t }
+  /** Generated columns of a foreign schema: name → its
+    * `delta.generationExpression`. */
+  private def generatedSpecs(fields: Array[StructField]): Map[String, String] =
+    fields.iterator.collect {
+      case f if f.metadata.contains("delta.generationExpression") =>
+        f.name -> f.metadata.getString("delta.generationExpression")
+    }.toMap
+
+  /** Identity columns of a foreign schema: name → (start, step,
+    * allowExplicitInsert), and name → current high-water mark (start − step
+    * before the first allocation). */
+  private def identitySpecs(fields: Array[StructField])
+      : (Map[String, (Long, Long, Boolean)], Map[String, Long]) = {
+    val ids = fields.filter(_.metadata.contains("delta.identity.start"))
+    val specs = ids.map { f =>
+      val md = f.metadata
+      f.name -> ((md.getLong("delta.identity.start"),
+        if (md.contains("delta.identity.step"))
+          md.getLong("delta.identity.step") else 1L,
+        md.contains("delta.identity.allowExplicitInsert") &&
+          md.getBoolean("delta.identity.allowExplicitInsert")))
+    }.toMap
+    val hwms = ids.map { f =>
+      f.name -> (if (f.metadata.contains("delta.identity.highWaterMark"))
+        f.metadata.getLong("delta.identity.highWaterMark")
+      else specs(f.name)._1 - specs(f.name)._2)
+    }.toMap
+    (specs, hwms)
   }
 
   /** Advanced identity watermark over the staged bytes. The mark is
@@ -3941,26 +3172,13 @@ object DeltaExport {
     * and returns the current version. */
   def deleteFromForeign(spark: SparkSession, tablePath: String,
       predicate: org.apache.spark.sql.Column): (Long, Long) = {
-    val conf = spark.sessionState.newHadoopConf()
-    val root = new Path(tablePath)
-    val fs = root.getFileSystem(conf)
-    val logDir = new Path(root, "_delta_log")
-
-    def gate(snap: DeltaImport.Snapshot): Unit = {
-      snap.protocol.foreach { p =>
-        if (p.minWriterVersion >= 7) {
-          val unsupported = p.writerFeatures.filterNot(ForeignAppendFeatures)
-          require(unsupported.isEmpty,
-            s"delete from $tablePath: writer feature(s) " +
-              s"${unsupported.mkString(", ")} carry write-time obligations " +
-              "this writer does not implement")
-        }
-      }
-      require(!snap.configuration.get("delta.appendOnly").contains("true"),
+    val tx = new ForeignTxn(spark, tablePath, s"delete from $tablePath")
+    def gate(snap: DeltaImport.Snapshot): Unit =
+      require(!flagOn(snap.configuration, "delta.appendOnly"),
         s"delete from $tablePath: the table is append-only (delta.appendOnly)")
-    }
 
     val snap0 = DeltaImport.snapshot(spark, tablePath)
+    tx.gate(snap0)
     gate(snap0)
     val FileC = "__graft_foreign_del_file"
     val PosC = "__graft_foreign_del_pos"
@@ -3980,9 +3198,7 @@ object DeltaExport {
 
     // file_path spelling → the snapshot's log-relative path
     val relOfSpelling: Map[String, String] = candidates.flatMap(f =>
-      DeltaImport.pathSpellings(tablePath, f.path, conf).map(_ -> f.path)).toMap
-    val byRel: Map[String, DeltaImport.AddFile] =
-      snap0.files.map(f => f.path -> f).toMap
+      DeltaImport.pathSpellings(tablePath, f.path, tx.conf).map(_ -> f.path)).toMap
     val seed = java.util.UUID.randomUUID().toString
     // Touched files and their DVs come back DESCRIPTOR-sized: positions
     // aggregate into per-file bitmaps on executors ([[buildForeignDvs]]);
@@ -4009,149 +3225,72 @@ object DeltaExport {
     if (touchedRels.isEmpty) return (snap0.version, 0L)
     val touchedSet = touchedRels.toSet
 
-    // CDF: cdc actions restate the deleted rows (physical names on disk,
-    // partitioned like the table — Delta stamps version/timestamp itself).
-    val physMapAll = DeltaImport.topLevelPhysicalNames(snap0.schema)
-    val physPartCols = snap0.partitionColumns.map(c => physMapAll.getOrElse(c, c))
-    val cdfOn = snap0.configuration
-      .get("delta.enableChangeDataFeed").contains("true")
-    val cdcRel = s"_change_data/graft-$seed"
-    if (cdfOn) {
-      val deletedPhys = DeltaImport.physicalRender(
-        matchedRows.drop(FileC, PosC)
-          .withColumn("_change_type", org.apache.spark.sql.functions.lit("delete")),
-        snap0.schema, keep = Seq("_change_type"))
-      val cdcPath = new Path(root, cdcRel)
-      if (physPartCols.nonEmpty)
-        deletedPhys.write.partitionBy(physPartCols: _*).parquet(cdcPath.toString)
-      else deletedPhys.write.parquet(cdcPath.toString)
-    }
-    // Rewrite fallback: without DV support the touched files' SURVIVORS
-    // stage as fresh files (old DVs already applied by the scan; rows the
-    // predicate selects — null included, which never matches — drop out).
-    val survivorStage: Option[Path] =
-      if (dvSupported) None
-      else {
-        // A row-tracked rewrite would need fresh base ids for the
-        // survivor files; such tables should take the DV path.
-        require(!snap0.protocol.exists(p => p.minWriterVersion >= 7 &&
-          p.writerFeatures.contains("rowTracking")),
-          s"delete from $tablePath: the rewrite fallback cannot preserve " +
-            "row tracking — enable delta.enableDeletionVectors instead")
-        val touched = snap0.files.filter(f => touchedSet(f.path))
-        val survivors = DeltaImport
-          .readFilesWithPositions(spark, snap0, touched, FileC, PosC)
-          .filter(!org.apache.spark.sql.functions.coalesce(predicate,
-            org.apache.spark.sql.functions.lit(false)))
-          .drop(FileC, PosC)
-        val sp = new Path(root, s"_appends/$seed-survivors")
-        val physDf = DeltaImport.physicalRender(survivors, snap0.schema)
-        if (physPartCols.nonEmpty)
-          physDf.write.partitionBy(physPartCols: _*).parquet(sp.toString)
-        else physDf.write.parquet(sp.toString)
-        Some(sp)
-      }
-    def parquetsUnder(p: Path): Seq[FileStatus] = {
-      if (!fs.exists(p)) return Nil
-      val it = fs.listFiles(p, true)
-      val b = Seq.newBuilder[FileStatus]
-      while (it.hasNext) {
-        val st = it.next()
-        if (st.isFile && st.getPath.getName.endsWith(".parquet")) b += st
-      }
-      b.result().sortBy(_.getPath.toString)
-    }
-    def relOf(st: FileStatus): String = {
-      val base = root.toUri.getPath.stripSuffix("/")
-      st.getPath.toUri.getPath.stripPrefix(base).stripPrefix("/")
-    }
+    val layout = new ForeignTxn.Layout(snap0)
+    tx.run {
+      // CDF: cdc actions restate the deleted rows (physical names on disk,
+      // partitioned like the table — Delta stamps version/timestamp itself).
+      val cdfOn = flagOn(snap0.configuration, "delta.enableChangeDataFeed")
+      val cdcRoot = tx.stage(s"_change_data/graft-$seed")
+      if (cdfOn)
+        ForeignTxn.writeParquet(DeltaImport.physicalRender(
+          matchedRows.drop(FileC, PosC)
+            .withColumn("_change_type", org.apache.spark.sql.functions.lit("delete")),
+          snap0.schema, keep = Seq("_change_type")), cdcRoot, layout.partCols)
+      // Rewrite fallback: without DV support the touched files' SURVIVORS
+      // stage as fresh files (old DVs already applied by the scan; rows the
+      // predicate selects — null included, which never matches — drop out).
+      val survivorFiles =
+        if (dvSupported) Nil
+        else {
+          // A row-tracked rewrite would need fresh base ids for the
+          // survivor files; such tables should take the DV path.
+          require(!snap0.protocol.exists(p => p.minWriterVersion >= 7 &&
+            p.writerFeatures.contains("rowTracking")),
+            s"delete from $tablePath: the rewrite fallback cannot preserve " +
+              "row tracking — enable delta.enableDeletionVectors instead")
+          val touched = snap0.files.filter(f => touchedSet(f.path))
+          val survivors = DeltaImport
+            .readFilesWithPositions(spark, snap0, touched, FileC, PosC)
+            .filter(!org.apache.spark.sql.functions.coalesce(predicate,
+              org.apache.spark.sql.functions.lit(false)))
+            .drop(FileC, PosC)
+          tx.parquetsUnder(tx.writeStaged(
+            DeltaImport.physicalRender(survivors, snap0.schema),
+            s"_appends/$seed-survivors", layout.partCols))
+        }
 
-    var attempt = 0
-    while (attempt < 20) {
-      attempt += 1
-      val snap = if (attempt == 1) snap0
-        else DeltaImport.snapshot(spark, tablePath)
-      if (attempt > 1) {
+      tx.commit[(Long, Long)](snap0) { snap =>
         gate(snap)
         // Row-level ops retry only a TRIVIAL race: the winner must have
         // left every touched file byte-identical (same path, same DV).
-        val nowByRel = snap.files.map(f => f.path -> f).toMap
-        val touchedChanged = touchedRels.exists { rel =>
-          nowByRel.get(rel).forall(_.deletionVector !=
-            byRel(rel).deletionVector) }
         // A rival BLIND APPEND whose rows match the predicate does not
         // commute either: a retried DELETE would commit while missing
         // those rows — delta-spark raises ConcurrentAppendException for
         // exactly this. Files added since snap0 prune against the
         // predicate; any possible match aborts with the re-run message
         // (a file without stats conservatively "may match").
-        val rivalMayMatch = {
-          val rivalAdds = snap.files.filterNot(f => byRel.contains(f.path))
-          rivalAdds.nonEmpty && DeltaSkipping
-            .prune(spark, snap.copy(files = rivalAdds), predicate).nonEmpty
-        }
-        if (snap.schema.json != snap0.schema.json ||
-            snap.partitionColumns != snap0.partitionColumns ||
-            touchedChanged || rivalMayMatch) {
-          survivorStage.foreach(fs.delete(_, true))
-          fs.delete(new Path(root, cdcRel), true)
+        if (ForeignTxn.layoutChanged(snap0, snap) ||
+            ForeignTxn.filesChanged(snap0, snap, touchedRels) ||
+            ForeignTxn.rivalMayMatch(spark, snap0, snap, Some(predicate)))
           throw new IllegalArgumentException(
             s"delete from $tablePath: a concurrent commit touched or added " +
               "rows being deleted — re-run the delete against the new state")
-        }
-      }
-      val v = snap.version + 1
-      val nowMs = System.currentTimeMillis()
-      val physSchema = DeltaImport.toPhysicalSchema(snap0.schema)
-      val allowedStats = GraftTable.allowedStatsCols(snap.configuration,
-          snap0.schema.fieldNames.toSeq)
-        .map(_.map(n => physMapAll.getOrElse(n, n)))
-      val lines = Seq.newBuilder[String]
-      lines += commitInfoJson(
-        Commit(v, nowMs, "DELETE", Nil,
+        None
+      } { snap =>
+        ForeignTxn.Publish("DELETE",
           Map("numDeletedRows" -> deletedCount,
             "numDeletionVectorsAdded" ->
               (if (dvSupported) touchedRels.size.toLong else 0L),
             "numRemovedFiles" ->
               (if (dvSupported) 0L else touchedRels.size.toLong)),
-          snap0.schema.json),
-        ict = if (snap.configuration.get("delta.enableInCommitTimestamps")
-            .contains("true"))
-          Some(math.max(lastIctOf(fs, logDir, snap.version).getOrElse(0L) + 1,
-            nowMs))
-        else None)
-      touchedRels.foreach { rel =>
-        val prior = byRel(rel)
-        val dvField = prior.deletionVector
-          .map(d => "deletionVector" -> dvJson(d)).toList
-        lines += JsonMethods.compact(JObject("remove" -> JObject(List(
-          "path" -> (JString(encodePath(rel)): JValue),
-          "deletionTimestamp" -> (JLong(nowMs): JValue),
-          "dataChange" -> (JBool(true): JValue)) ++ dvField: _*)))
-        if (dvSupported) {
-          val st = fs.getFileStatus(DeltaImport.resolveFile(tablePath, rel))
-          lines += addJson(rel, st, physSchema, physPartCols, dataChange = true,
-            conf, Some(descByRel(rel)), prior.baseRowId,
-            prior.defaultRowCommitVersion, None, allowedStats)
-        }
-      }
-      survivorStage.foreach(sp => parquetsUnder(sp).foreach { st =>
-        lines += addJson(relOf(st), st, physSchema, physPartCols,
-          dataChange = true, conf, None, None, None, None, allowedStats)
-      })
-      if (cdfOn) parquetsUnder(new Path(root, cdcRel)).foreach { st =>
-        lines += cdcJson(relOf(st), st, physPartCols)
-      }
-      val target = new Path(logDir, f"$v%020d.json")
-      val content = lines.result().mkString("", "\n", "\n")
-      if (publishExclusive(conf, fs, logDir, target, content)) {
-        checkpointIfDue(spark, tablePath, snap.configuration)
-        return (v, deletedCount)
+          snap0.schema.json, snap.configuration,
+          st => tx.touchLines(layout, snap, st.nowMs, snap0, touchedRels,
+              descByRel) ++
+            tx.freshAdds(layout, snap, st.version, survivorFiles) ++
+            (if (cdfOn) tx.cdcLines(layout, cdcRoot) else Nil),
+          v => (v, deletedCount))
       }
     }
-    throw new IllegalArgumentException(
-      s"delete from $tablePath: lost the commit race 20 times — " +
-        "a writer storm; retry when the table quiesces")
   }
 
   /** UPDATE on a FOREIGN Delta table — the third writer verb, in
@@ -4176,22 +3315,9 @@ object DeltaExport {
   def updateForeign(spark: SparkSession, tablePath: String,
       predicate: org.apache.spark.sql.Column,
       assignments: Map[String, org.apache.spark.sql.Column]): (Long, Long) = {
-    val conf = spark.sessionState.newHadoopConf()
-    val root = new Path(tablePath)
-    val fs = root.getFileSystem(conf)
-    val logDir = new Path(root, "_delta_log")
-
+    val tx = new ForeignTxn(spark, tablePath, s"update of $tablePath")
     def gate(snap: DeltaImport.Snapshot): Unit = {
-      snap.protocol.foreach { p =>
-        if (p.minWriterVersion >= 7) {
-          val unsupported = p.writerFeatures.filterNot(ForeignAppendFeatures)
-          require(unsupported.isEmpty,
-            s"update of $tablePath: writer feature(s) " +
-              s"${unsupported.mkString(", ")} carry write-time obligations " +
-              "this writer does not implement")
-        }
-      }
-      require(!snap.configuration.get("delta.appendOnly").contains("true"),
+      require(!flagOn(snap.configuration, "delta.appendOnly"),
         s"update of $tablePath: the table is append-only (delta.appendOnly)")
       require(snap.protocol.exists(p =>
         p.readerFeatures.contains("deletionVectors") ||
@@ -4203,6 +3329,7 @@ object DeltaExport {
     }
 
     val snap0 = DeltaImport.snapshot(spark, tablePath)
+    tx.gate(snap0)
     gate(snap0)
     val fields = snap0.schema.fields
     assignments.keys.foreach(k => require(
@@ -4217,15 +3344,11 @@ object DeltaExport {
     // post-assignment values (delta-spark's UPDATE contract — the
     // materialized invariant must keep holding); identity values ride
     // verbatim (an update creates no new row). Neither is assignable.
-    val genSpecs: Map[String, String] = fields.iterator.collect {
-      case f if f.metadata.contains("delta.generationExpression") =>
-        f.name -> f.metadata.getString("delta.generationExpression")
-    }.toMap
-    (genSpecs.keySet ++ fields.iterator.collect {
-      case f if f.metadata.contains("delta.identity.start") => f.name
-    }).foreach(n => require(!assignments.keys.exists(_.equalsIgnoreCase(n)),
-      s"update of $tablePath: column $n is generated/identity — its value " +
-        "is engine-maintained, not assignable"))
+    val genSpecs = generatedSpecs(fields)
+    (genSpecs.keySet ++ identitySpecs(fields)._1.keySet).foreach(n =>
+      require(!assignments.keys.exists(_.equalsIgnoreCase(n)),
+        s"update of $tablePath: column $n is generated/identity — its " +
+          "value is engine-maintained, not assignable"))
 
     val FileC = "__graft_foreign_upd_file"
     val PosC = "__graft_foreign_upd_pos"
@@ -4236,9 +3359,7 @@ object DeltaExport {
       .filter(predicate)
       .persist() // consumed by several jobs; batch-bounded, GC-reclaimed
     val relOfSpelling: Map[String, String] = candidates.flatMap(f =>
-      DeltaImport.pathSpellings(tablePath, f.path, conf).map(_ -> f.path)).toMap
-    val byRel: Map[String, DeltaImport.AddFile] =
-      snap0.files.map(f => f.path -> f).toMap
+      DeltaImport.pathSpellings(tablePath, f.path, tx.conf).map(_ -> f.path)).toMap
     val seed = java.util.UUID.randomUUID().toString
     // Distributed DV build — positions never reach the driver (see
     // [[buildForeignDvs]]); only per-file descriptors come back.
@@ -4253,8 +3374,7 @@ object DeltaExport {
 
     // The updated copies stage exactly like an append; generated columns
     // recompute over the POST-assignment row.
-    val physMapAll = DeltaImport.topLevelPhysicalNames(snap0.schema)
-    val physPartCols = snap0.partitionColumns.map(c => physMapAll.getOrElse(c, c))
+    val layout = new ForeignTxn.Layout(snap0)
     val assigned = matchedRows.drop(FileC, PosC).select(
       fields.toIndexedSeq.map { f =>
         assignments.collectFirst {
@@ -4266,196 +3386,77 @@ object DeltaExport {
       d.withColumn(name, org.apache.spark.sql.functions.expr(sql)
         .cast(fields.find(_.name == name).get.dataType))
     }
-    val physDf = DeltaImport.physicalRender(updated, snap0.schema)
-    val stageRel = s"_appends/$seed"
-    val stagePath = new Path(root, stageRel)
-    if (physPartCols.nonEmpty)
-      physDf.write.partitionBy(physPartCols: _*).parquet(stagePath.toString)
-    else physDf.write.parquet(stagePath.toString)
-    def refuse(msg: String): Nothing = {
-      fs.delete(stagePath, true)
-      fs.delete(new Path(root, s"_change_data/graft-$seed"), true)
-      throw new IllegalArgumentException(msg)
-    }
-    def constraintsOf(cfg: Map[String, String]): Map[String, String] =
-      cfg.collect { case (k, v) if k.startsWith("delta.constraints.") =>
-        k.stripPrefix("delta.constraints.") -> v }
-    def stagedLogical(): org.apache.spark.sql.DataFrame = {
-      val stagedPhys = spark.read.option("basePath", stagePath.toString)
-        .parquet(stagePath.toString)
-      DeltaImport.logicalRestore(stagedPhys, snap0.schema)
-    }
-    def validate(cfg: Map[String, String]): Unit = {
-      import org.apache.spark.sql.functions.{count_if, expr, coalesce, lit}
-      val staged = stagedLogical()
-      val nullChecks = fields.toSeq.filterNot(_.nullable)
-        .map(f => count_if(col(s"`${f.name}`").isNull).as(s"null ${f.name}"))
-      val checkChecks = constraintsOf(cfg).toSeq.sortBy(_._1).map { case (n, p) =>
-        count_if(!coalesce(expr(p).cast("boolean"), lit(true)))
-          .as(s"constraint $n") }
-      val checks = nullChecks ++ checkChecks ++ invariantChecks(snap0.schema)
-      if (checks.nonEmpty) {
-        val row = staged.agg(checks.head, checks.tail: _*).collect().head
-        val bad = row.schema.fieldNames.zipWithIndex
-          .filter { case (_, i) => row.getLong(i) > 0 }
-        if (bad.nonEmpty) refuse(
-          s"update of $tablePath violates ${bad.map(_._1).mkString("; ")} " +
-            s"(${bad.map(b => row.getLong(b._2)).mkString(", ")} row(s))")
+    tx.run {
+      val stagePath = tx.writeStaged(
+        DeltaImport.physicalRender(updated, snap0.schema),
+        s"_appends/$seed", layout.partCols)
+      def stagedLogical(): org.apache.spark.sql.DataFrame = {
+        val stagedPhys = spark.read.option("basePath", stagePath.toString)
+          .parquet(stagePath.toString)
+        DeltaImport.logicalRestore(stagedPhys, snap0.schema)
       }
-    }
-    validate(snap0.configuration)
+      def validate(cfg: Map[String, String]): Unit =
+        tx.validate(stagedLogical(), snap0.schema, cfg)
+      validate(snap0.configuration)
 
-    // CDF: pre-images from the matched scan, post-images from the staged
-    // bytes, each under its own subdir of one cdc root.
-    val cdfOn = snap0.configuration
-      .get("delta.enableChangeDataFeed").contains("true")
-    val cdcRel = s"_change_data/graft-$seed"
-    if (cdfOn) {
-      def writeCdc(df: org.apache.spark.sql.DataFrame, sub: String): Unit = {
-        val p = new Path(root, s"$cdcRel/$sub")
-        if (physPartCols.nonEmpty)
-          df.write.partitionBy(physPartCols: _*).parquet(p.toString)
-        else df.write.parquet(p.toString)
+      // CDF: pre-images from the matched scan, post-images from the staged
+      // bytes, each under its own subdir of one cdc root.
+      val cdfOn = flagOn(snap0.configuration, "delta.enableChangeDataFeed")
+      val cdcRoot = tx.stage(s"_change_data/graft-$seed")
+      if (cdfOn) {
+        def writeCdc(df: org.apache.spark.sql.DataFrame, sub: String): Unit =
+          ForeignTxn.writeParquet(df, new Path(cdcRoot, sub), layout.partCols)
+        writeCdc(DeltaImport.physicalRender(matchedRows.drop(FileC, PosC)
+          .withColumn("_change_type",
+            org.apache.spark.sql.functions.lit("update_preimage")),
+          snap0.schema, keep = Seq("_change_type")), "pre")
+        writeCdc(DeltaImport.physicalRender(stagedLogical()
+          .withColumn("_change_type",
+            org.apache.spark.sql.functions.lit("update_postimage")),
+          snap0.schema, keep = Seq("_change_type")), "post")
       }
-      writeCdc(DeltaImport.physicalRender(matchedRows.drop(FileC, PosC)
-        .withColumn("_change_type",
-          org.apache.spark.sql.functions.lit("update_preimage")),
-        snap0.schema, keep = Seq("_change_type")), "pre")
-      writeCdc(DeltaImport.physicalRender(stagedLogical()
-        .withColumn("_change_type",
-          org.apache.spark.sql.functions.lit("update_postimage")),
-        snap0.schema, keep = Seq("_change_type")), "post")
-    }
-    def parquetsUnder(p: Path): Seq[FileStatus] = {
-      val it = fs.listFiles(p, true)
-      val b = Seq.newBuilder[FileStatus]
-      while (it.hasNext) {
-        val st = it.next()
-        if (st.isFile && st.getPath.getName.endsWith(".parquet")) b += st
-      }
-      b.result().sortBy(_.getPath.toString)
-    }
-    def relOf(st: FileStatus): String = {
-      val base = root.toUri.getPath.stripSuffix("/")
-      st.getPath.toUri.getPath.stripPrefix(base).stripPrefix("/")
-    }
-    def footerRows(st: FileStatus): Long = {
-      import org.apache.parquet.hadoop.ParquetFileReader
-      import org.apache.parquet.hadoop.util.HadoopInputFile
-      import scala.jdk.CollectionConverters._
-      val r = ParquetFileReader.open(HadoopInputFile.fromPath(st.getPath, conf))
-      try r.getFooter.getBlocks.asScala.map(_.getRowCount).sum
-      finally r.close()
-    }
-    val stagedFiles = parquetsUnder(stagePath)
+      val stagedFiles = tx.parquetsUnder(stagePath)
 
-    var attempt = 0
-    while (attempt < 20) {
-      attempt += 1
-      val snap = if (attempt == 1) snap0
-        else DeltaImport.snapshot(spark, tablePath)
-      if (attempt > 1) {
+      tx.commit[(Long, Long)](snap0) { snap =>
         gate(snap)
-        val nowByRel = snap.files.map(f => f.path -> f).toMap
-        val touchedChanged = touchedRels.exists { rel =>
-          nowByRel.get(rel).forall(_.deletionVector !=
-            byRel(rel).deletionVector) }
         // Rival blind appends matching the predicate conflict too — a
         // retried UPDATE would miss their rows (see deleteFromForeign).
-        val rivalMayMatch = {
-          val rivalAdds = snap.files.filterNot(f => byRel.contains(f.path))
-          rivalAdds.nonEmpty && DeltaSkipping
-            .prune(spark, snap.copy(files = rivalAdds), predicate).nonEmpty
-        }
-        if (snap.schema.json != snap0.schema.json ||
-            snap.partitionColumns != snap0.partitionColumns ||
-            touchedChanged || rivalMayMatch)
-          refuse(s"update of $tablePath: a concurrent commit touched or " +
-            "added rows being updated — re-run the update against the new state")
-        if (constraintsOf(snap.configuration) !=
-            constraintsOf(snap0.configuration))
+        if (ForeignTxn.layoutChanged(snap0, snap) ||
+            ForeignTxn.filesChanged(snap0, snap, touchedRels) ||
+            ForeignTxn.rivalMayMatch(spark, snap0, snap, Some(predicate)))
+          throw new IllegalArgumentException(
+            s"update of $tablePath: a concurrent commit touched or " +
+              "added rows being updated — re-run the update against the new state")
+        if (ForeignTxn.constraintsOf(snap.configuration) !=
+            ForeignTxn.constraintsOf(snap0.configuration))
           validate(snap.configuration)
-      }
-      val v = snap.version + 1
-      val nowMs = System.currentTimeMillis()
-      val physSchema = DeltaImport.toPhysicalSchema(snap0.schema)
-      val allowedStats = GraftTable.allowedStatsCols(snap.configuration,
-          snap0.schema.fieldNames.toSeq)
-        .map(_.map(n => physMapAll.getOrElse(n, n)))
-      val rtOn = snap.protocol.exists(p =>
-        p.minWriterVersion >= 7 && p.writerFeatures.contains("rowTracking"))
-      val hwm0: Long = snap.domainMetadata.get("delta.rowTracking")
-        .map(cfgJson =>
-          (JsonMethods.parse(cfgJson) \ "rowIdHighWaterMark") match {
-            case JInt(t) => t.toLong
-            case JLong(t) => t
-            case _ => -1L
-          }).getOrElse(-1L)
-      var nextBase = hwm0 + 1
-      val lines = Seq.newBuilder[String]
-      lines += commitInfoJson(
-        Commit(v, nowMs, "UPDATE", Nil,
+        None
+      } { snap =>
+        ForeignTxn.Publish("UPDATE",
           Map("numUpdatedRows" -> updatedCount,
             "numFiles" -> stagedFiles.size.toLong,
             "numDeletionVectorsAdded" -> touchedRels.size.toLong),
-          snap0.schema.json),
-        ict = if (snap.configuration.get("delta.enableInCommitTimestamps")
-            .contains("true"))
-          Some(math.max(lastIctOf(fs, logDir, snap.version).getOrElse(0L) + 1,
-            nowMs))
-        else None)
-      touchedRels.foreach { rel =>
-        val prior = byRel(rel)
-        val dvField = prior.deletionVector
-          .map(d => "deletionVector" -> dvJson(d)).toList
-        lines += JsonMethods.compact(JObject("remove" -> JObject(List(
-          "path" -> (JString(encodePath(rel)): JValue),
-          "deletionTimestamp" -> (JLong(nowMs): JValue),
-          "dataChange" -> (JBool(true): JValue)) ++ dvField: _*)))
-        val st = fs.getFileStatus(DeltaImport.resolveFile(tablePath, rel))
-        lines += addJson(rel, st, physSchema, physPartCols, dataChange = true,
-          conf, Some(descByRel(rel)), prior.baseRowId,
-          prior.defaultRowCommitVersion, None, allowedStats)
-      }
-      stagedFiles.foreach { st =>
-        val base = if (rtOn) Some(nextBase) else None
-        if (rtOn) nextBase += footerRows(st)
-        lines += addJson(relOf(st), st, physSchema, physPartCols,
-          dataChange = true, conf, None, base, if (rtOn) Some(v) else None,
-          None, allowedStats)
-      }
-      if (rtOn && nextBase > hwm0 + 1) {
-        lines += JsonMethods.compact(JObject("domainMetadata" -> JObject(
-          "domain" -> JString("delta.rowTracking"),
-          "configuration" ->
-            JString(s"""{"rowIdHighWaterMark":${nextBase - 1}}"""),
-          "removed" -> JBool(false))))
-      }
-      if (cdfOn) parquetsUnder(new Path(root, cdcRel)).foreach { st =>
-        lines += cdcJson(relOf(st), st, physPartCols)
-      }
-      val target = new Path(logDir, f"$v%020d.json")
-      val content = lines.result().mkString("", "\n", "\n")
-      if (publishExclusive(conf, fs, logDir, target, content)) {
-        checkpointIfDue(spark, tablePath, snap.configuration)
-        return (v, updatedCount)
+          snap0.schema.json, snap.configuration,
+          st => tx.touchLines(layout, snap, st.nowMs, snap0, touchedRels,
+              descByRel) ++
+            tx.freshAdds(layout, snap, st.version, stagedFiles) ++
+            (if (cdfOn) tx.cdcLines(layout, cdcRoot) else Nil),
+          v => (v, updatedCount))
       }
     }
-    refuse(s"update of $tablePath: lost the commit race 20 times — " +
-      "a writer storm; retry when the table quiesces")
   }
 
   /** `add.path`/`remove.path` are percent-encoded relative URIs per the
     * Delta protocol (readers open them with `new Path(new URI(p))` —
     * including [[DeltaImport.resolveFile]]); hive-escaped `%XX` in the
     * on-disk dir names round-trips through `%25XX`. */
-  private def encodePath(rel: String): String =
+  private[sources] def encodePath(rel: String): String =
     try new java.net.URI(null, null, rel, null).getRawPath
     catch { case scala.util.control.NonFatal(_) => rel }
 
   // ------------------------------------------------------------- actions
 
-  private def commitInfoJson(c: Commit, ict: Option[Long] = None): String = {
+  private[sources] def commitInfoJson(c: Commit, ict: Option[Long] = None): String = {
     val metrics = JObject(c.metrics.toSeq.sortBy(_._1)
       .map { case (k, v) => k -> (JString(v.toString): JValue) }: _*)
     JsonMethods.compact(JObject("commitInfo" -> JObject(
@@ -4524,7 +3525,12 @@ object DeltaExport {
     props.get("graft.rowTracking").exists(_.equalsIgnoreCase("true"))
 
   private def ictOnProps(props: Map[String, String]): Boolean =
-    props.get("delta.enableInCommitTimestamps").exists(_.equalsIgnoreCase("true"))
+    flagOn(props, "delta.enableInCommitTimestamps")
+
+  /** A boolean table property read the way Delta reads it (`toBoolean`:
+    * "true" in any letter case). */
+  private[sources] def flagOn(props: Map[String, String], key: String): Boolean =
+    props.get(key).exists(_.equalsIgnoreCase("true"))
 
   /** The graft table declares clustering columns ([[GraftTable.clusterBy]])
     * — the mirror then carries Delta's own `clustering` writer feature,
@@ -4732,7 +3738,7 @@ object DeltaExport {
     JObject(pv: _*)
   }
 
-  private def addJson(rel: String, st: FileStatus, schema: StructType,
+  private[sources] def addJson(rel: String, st: FileStatus, schema: StructType,
       partCols: Seq[String], dataChange: Boolean,
       conf: org.apache.hadoop.conf.Configuration,
       dv: Option[DeltaDeletionVectors.Descriptor] = None,
@@ -4763,14 +3769,14 @@ object DeltaExport {
 
   /** A `cdc` action (`dataChange` is false by protocol — cdc files restate
     * changes, they do not alter the snapshot). */
-  private def cdcJson(rel: String, st: FileStatus, partCols: Seq[String]): String =
+  private[sources] def cdcJson(rel: String, st: FileStatus, partCols: Seq[String]): String =
     JsonMethods.compact(JObject("cdc" -> JObject(
       "path" -> JString(encodePath(rel)),
       "partitionValues" -> partitionValuesOf(rel, partCols),
       "size" -> JLong(st.getLen),
       "dataChange" -> JBool(false))))
 
-  private def dvJson(d: DeltaDeletionVectors.Descriptor): JObject = JObject(
+  private[sources] def dvJson(d: DeltaDeletionVectors.Descriptor): JObject = JObject(
     List("storageType" -> (JString(d.storageType): JValue),
       "pathOrInlineDv" -> (JString(d.pathOrInlineDv): JValue)) ++
       d.offset.map(o => "offset" -> (JInt(o): JValue)).toList ++

@@ -16,6 +16,18 @@ import graft.table.GraftTable
 class DeltaForeignPropertiesSpec extends SparkSpec {
   import spark.implicits._
 
+  /** The inCommitTimestamp recorded by commit `v`, if any. */
+  private def ictOf(root: String, v: Long): Option[Long] = {
+    val p = new Path(root, f"_delta_log/$v%020d.json")
+    val in = p.getFileSystem(spark.sparkContext.hadoopConfiguration).open(p)
+    val lines = try scala.io.Source.fromInputStream(in, "UTF-8").getLines().toList
+      finally in.close()
+    lines.filter(_.trim.nonEmpty)
+      .map(l => org.json4s.jackson.JsonMethods.parse(l) \ "commitInfo" \
+        "inCommitTimestamp")
+      .collectFirst { case org.json4s.JInt(t) => t.toLong }
+  }
+
   private def plainTable(name: String, n: Long = 40L): String = {
     val root = tmpDir(name)
     val t = GraftTable.create(spark, root,
@@ -92,58 +104,65 @@ class DeltaForeignPropertiesSpec extends SparkSpec {
   }
 
   test("enabling ICT records enablement provenance; commits carry ICTs") {
-    val root = plainTable("fp-ict")
-    val v = DeltaExport.setForeignProperties(spark, root,
-      Map("delta.enableInCommitTimestamps" -> "true"))
-    val cfg = DeltaImport.snapshot(spark, root).configuration
-    assert(cfg.get("delta.inCommitTimestampEnablementVersion")
-      .contains(v.toString))
-    assert(cfg.contains("delta.inCommitTimestampEnablementTimestamp"))
-    // a subsequent append stamps a monotonic ICT; timestamp travel to
-    // "now" resolves to the head (ICT-aware rule)
-    DeltaExport.appendToForeign(spark, root,
-      Seq((100L, 0L, "x")).toDF("k", "grp", "s"))
-    val head = DeltaImport.latestVersion(spark, root)
-    assert(DeltaImport.versionAsOfTimestamp(spark, root,
-      System.currentTimeMillis() + 60000) === head)
+    // Delta reads boolean properties case-insensitively (`toBoolean`)
+    Seq("true", "TRUE").foreach { on =>
+      val root = plainTable(s"fp-ict-$on")
+      val v = DeltaExport.setForeignProperties(spark, root,
+        Map("delta.enableInCommitTimestamps" -> on))
+      val cfg = DeltaImport.snapshot(spark, root).configuration
+      assert(cfg.get("delta.inCommitTimestampEnablementVersion")
+        .contains(v.toString))
+      assert(cfg.contains("delta.inCommitTimestampEnablementTimestamp"))
+      // a subsequent append stamps a monotonic ICT; timestamp travel to
+      // "now" resolves to the head (ICT-aware rule)
+      DeltaExport.appendToForeign(spark, root,
+        Seq((100L, 0L, "x")).toDF("k", "grp", "s"))
+      val head = DeltaImport.latestVersion(spark, root)
+      assert(ictOf(root, head).nonEmpty,
+        s"enabled with '$on': the head commit carries no inCommitTimestamp")
+      assert(DeltaImport.versionAsOfTimestamp(spark, root,
+        System.currentTimeMillis() + 60000) === head)
+    }
   }
 
   test("appendOnly set through properties blocks deletes; unknown keys refuse") {
-    val root = plainTable("fp-appendonly")
-    DeltaExport.setForeignProperties(spark, root,
-      Map("delta.appendOnly" -> "true"))
-    val err = intercept[IllegalArgumentException] {
-      DeltaExport.deleteFromForeign(spark, root, col("k") === 1L)
-    }
-    assert(err.getMessage.contains("append-only"))
+    Seq("true", "TRUE").foreach { on =>
+      val root = plainTable(s"fp-appendonly-$on")
+      DeltaExport.setForeignProperties(spark, root,
+        Map("delta.appendOnly" -> on))
+      val err = intercept[IllegalArgumentException] {
+        DeltaExport.deleteFromForeign(spark, root, col("k") === 1L)
+      }
+      assert(err.getMessage.contains("append-only"))
 
-    val err2 = intercept[IllegalArgumentException] {
+      val err2 = intercept[IllegalArgumentException] {
+        DeltaExport.setForeignProperties(spark, root,
+          Map("delta.enableRowTracking" -> "true"))
+      }
+      assert(err2.getMessage.contains("baseRowId backfill"))
+      val err3 = intercept[IllegalArgumentException] {
+        DeltaExport.setForeignProperties(spark, root,
+          Map("delta.icebergCompatV2" -> "true"))
+      }
+      assert(err3.getMessage.contains("obligations"))
+      // none→name is the supported metadata-only upgrade; every other
+      // mapping transition (downgrade, id mode) refuses
       DeltaExport.setForeignProperties(spark, root,
-        Map("delta.enableRowTracking" -> "true"))
+        Map("delta.columnMapping.mode" -> "name"))
+      val err4 = intercept[IllegalArgumentException] {
+        DeltaExport.setForeignProperties(spark, root,
+          Map("delta.columnMapping.mode" -> "none"))
+      }
+      assert(err4.getMessage.contains("not a metadata-only transition"))
+      // non-delta user metadata passes through; idempotent re-set no-ops
+      val v1 = DeltaExport.setForeignProperties(spark, root,
+        Map("team.owner" -> "graft"))
+      val v2 = DeltaExport.setForeignProperties(spark, root,
+        Map("team.owner" -> "graft"))
+      assert(v2 === v1, "identical re-set must be a version no-op")
+      assert(DeltaImport.snapshot(spark, root).configuration
+        .get("team.owner").contains("graft"))
     }
-    assert(err2.getMessage.contains("baseRowId backfill"))
-    val err3 = intercept[IllegalArgumentException] {
-      DeltaExport.setForeignProperties(spark, root,
-        Map("delta.icebergCompatV2" -> "true"))
-    }
-    assert(err3.getMessage.contains("obligations"))
-    // none→name is the supported metadata-only upgrade; every other
-    // mapping transition (downgrade, id mode) refuses
-    DeltaExport.setForeignProperties(spark, root,
-      Map("delta.columnMapping.mode" -> "name"))
-    val err4 = intercept[IllegalArgumentException] {
-      DeltaExport.setForeignProperties(spark, root,
-        Map("delta.columnMapping.mode" -> "none"))
-    }
-    assert(err4.getMessage.contains("not a metadata-only transition"))
-    // non-delta user metadata passes through; idempotent re-set no-ops
-    val v1 = DeltaExport.setForeignProperties(spark, root,
-      Map("team.owner" -> "graft"))
-    val v2 = DeltaExport.setForeignProperties(spark, root,
-      Map("team.owner" -> "graft"))
-    assert(v2 === v1, "identical re-set must be a version no-op")
-    assert(DeltaImport.snapshot(spark, root).configuration
-      .get("team.owner").contains("graft"))
   }
 
   test("SHOW TBLPROPERTIES delta.`path` lists the live configuration") {

@@ -46,6 +46,51 @@ class DeltaForeignRaceSpec extends SparkSpec {
     finally DeltaExport.onBeforeForeignPublish = () => ()
   }
 
+  /** Like [[foreignTable]] but WITHOUT deletion-vector support, so deletes
+    * take the rewrite fallback and stage survivor files; the export
+    * advertises the change feed, so they stage cdc files too. */
+  private def rewriteTable(name: String, n: Long): String = {
+    val root = tmpDir(name)
+    val t = GraftTable.create(spark, root,
+      (0L until n).map(i => (i, s"s$i")).toDF("k", "s"), Nil)
+    DeltaExport.exportLog(t)
+    fs.delete(new Path(root, "_graft_log"), true)
+    root
+  }
+
+  /** Neither `_appends/` staging nor `_change_data/graft-*` cdc staging is
+    * left behind under `root`. */
+  private def assertNoStaging(root: String): Unit = {
+    def names(dir: String): Seq[String] = {
+      val p = new Path(root, dir)
+      if (!fs.exists(p)) Nil else fs.listStatus(p).map(_.getPath.getName).toSeq
+    }
+    assert(names("_appends").isEmpty, "stranded staging")
+    assert(!names("_change_data").exists(_.startsWith("graft-")),
+      "stranded cdc staging")
+  }
+
+  private def commitInfoOnly(ts: Long, ict: Option[Long] = None): String =
+    s"""{"commitInfo":{"timestamp":$ts,""" +
+      ict.map(t => s""""inCommitTimestamp":$t,""").getOrElse("") +
+      """"operation":"WRITE","operationParameters":{},"operationMetrics":{}}}""" +
+      "\n"
+
+  private def writeLogFile(root: String, v: Long, content: String): Unit = {
+    val out = fs.create(new Path(root, f"_delta_log/$v%020d.json"), false)
+    try out.write(content.getBytes("UTF-8")) finally out.close()
+  }
+
+  private def ictOf(root: String, v: Long): Option[Long] = {
+    val in = fs.open(new Path(root, f"_delta_log/$v%020d.json"))
+    val lines = try scala.io.Source.fromInputStream(in, "UTF-8").getLines().toList
+      finally in.close()
+    lines.filter(_.trim.nonEmpty)
+      .map(l => org.json4s.jackson.JsonMethods.parse(l) \ "commitInfo" \
+        "inCommitTimestamp")
+      .collectFirst { case org.json4s.JInt(t) => t.toLong }
+  }
+
   test("append races a mid-flight rival: retries at N+2, rival intact") {
     val root = foreignTable("race-append", 20L)
     val before = DeltaImport.latestVersion(spark, root)
@@ -250,5 +295,68 @@ class DeltaForeignRaceSpec extends SparkSpec {
     assert(head - ckpt.get < 11, s"tail $head-${ckpt.get} unbounded")
     // readers open through the checkpoint and see everything
     assert(DeltaImport.read(spark, root).count() === 22L)
+  }
+
+  test("delete losing every race gives up after 20 attempts, staging reaped") {
+    val root = rewriteTable("race-del-storm", 40L)
+    val snap = DeltaImport.snapshot(spark, root)
+    assert(snap.configuration.get("delta.enableChangeDataFeed").contains("true"))
+    assert(!snap.protocol.exists(_.writerFeatures.contains("deletionVectors")))
+    // every publish attempt finds a rival already holding its version
+    DeltaExport.onBeforeForeignPublish = () =>
+      writeLogFile(root, DeltaImport.latestVersion(spark, root) + 1,
+        commitInfoOnly(1L))
+    val e = try intercept[IllegalArgumentException] {
+      DeltaExport.deleteFromForeign(spark, root, col("k") % 10 === 0L)
+    } finally DeltaExport.onBeforeForeignPublish = () => ()
+    assert(e.getMessage.contains("lost the commit race"))
+    assertNoStaging(root)
+    assert(DeltaImport.read(spark, root).count() === 40L)
+  }
+
+  test("a rival turning on appendOnly refuses a mid-flight delete and " +
+      "update; staging reaped") {
+    val plain = rewriteTable("race-ao-del", 40L)
+    val e1 = intercept[IllegalArgumentException] {
+      armRival {
+        DeltaExport.setForeignProperties(spark, plain,
+          Map("delta.appendOnly" -> "true"))
+      } {
+        DeltaExport.deleteFromForeign(spark, plain, col("k") % 10 === 0L)
+      }
+    }
+    assert(e1.getMessage.contains("append-only"))
+    assertNoStaging(plain)
+    assert(DeltaImport.read(spark, plain).count() === 40L)
+
+    val dv = foreignTable("race-ao-upd", 40L)
+    val e2 = intercept[IllegalArgumentException] {
+      armRival {
+        DeltaExport.setForeignProperties(spark, dv,
+          Map("delta.appendOnly" -> "true"))
+      } {
+        DeltaExport.updateForeign(spark, dv, col("k") === 10L,
+          Map("s" -> lit("TEN")))
+      }
+    }
+    assert(e2.getMessage.contains("append-only"))
+    assertNoStaging(dv)
+    assert(DeltaImport.read(spark, dv).filter(col("s") === "TEN").count() === 0L)
+  }
+
+  test("an append losing to an ICT rival an hour ahead stamps rival + 1 ms") {
+    val root = foreignTable("race-ict", 20L)
+    DeltaExport.setForeignProperties(spark, root,
+      Map("delta.enableInCommitTimestamps" -> "true"))
+    val before = DeltaImport.latestVersion(spark, root)
+    val rivalIct = System.currentTimeMillis() + 3600L * 1000
+    armRival {
+      writeLogFile(root, before + 1, commitInfoOnly(rivalIct, Some(rivalIct)))
+    } {
+      val v = DeltaExport.appendToForeign(spark, root,
+        Seq((100L, "s100")).toDF("k", "s"))
+      assert(v === before + 2)
+    }
+    assert(ictOf(root, before + 2) === Some(rivalIct + 1))
   }
 }
