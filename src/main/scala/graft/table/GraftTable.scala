@@ -29,13 +29,14 @@ import org.apache.spark.sql.types.{DataType, StructType}
   * job: no data ever funnels through the driver (the reference's collected
   * delete-id list, spark_streaming.py:383, becomes a distributed anti-join).
   *
-  * Concurrency: optimistic, Delta-style. Every commit is an atomic
-  * publish-at-version-N ([[CommitLog.commit]] fails on collision); APPENDS
-  * rebase-and-retry on a collision (they commute — both writers' rows
-  * land), while snapshot-rewriting operations (merge/delete/update/
-  * overwrite/optimize/restore) roll back their written dirs and abort with
-  * [[ConcurrentWriteException]] because they computed from a stale
-  * snapshot — the caller retries against the new head. The reference is
+  * Concurrency: optimistic, Delta-style, through one commit cycle
+  * ([[TableTxn]]). Every commit is an atomic publish-at-version-N
+  * ([[CommitLog.commit]] fails on collision); APPENDS rebase-and-retry on a
+  * collision (they commute — both writers' rows land), while
+  * snapshot-rewriting operations (merge/delete/update/overwrite/restore)
+  * reap their staged dirs and abort with [[ConcurrentWriteException]]
+  * because they computed from a stale snapshot — the caller retries
+  * against the new head. The reference is
   * single-writer per table (one streaming query per table,
   * spark_streaming.py:461-463); this layer is safe beyond that.
   */
@@ -73,9 +74,10 @@ final class GraftTable private (
     val root: String) {
 
   import GraftTable._
+  import TableTxn.{Attempt, Committed, Conflict, Rebase, Refuse, Restart, Staged}
 
-  private val log = new CommitLog(root, hadoopConf(spark))
-  private def fs: FileSystem = new Path(root).getFileSystem(hadoopConf(spark))
+  private[table] val log = new CommitLog(root, hadoopConf(spark))
+  private[table] def fs: FileSystem = new Path(root).getFileSystem(hadoopConf(spark))
 
   // ---------------------------------------------------------------- reads
 
@@ -822,7 +824,7 @@ final class GraftTable private (
   private def uniqueSuffix(): String =
     java.util.UUID.randomUUID().toString.take(8)
   private def dataDirName(v: Long): String = f"data/v$v%05d-${uniqueSuffix()}"
-  private def changesDirName(v: Long): String = f"_changes/v$v%05d-${uniqueSuffix()}"
+  private[table] def changesDirName(v: Long): String = f"_changes/v$v%05d-${uniqueSuffix()}"
   private def dvDirName(v: Long): String = f"dvs/v$v%05d-${uniqueSuffix()}"
 
   /** Hidden lineage-column names for positional deletes. Prefixed so they
@@ -942,10 +944,7 @@ final class GraftTable private (
 
   /** Registered CHECK constraints (name → SQL predicate). */
   def constraints: Map[String, String] =
-    log.latest().map(_.properties.collect {
-      case (k, v) if k.startsWith(ConstraintPrefix) =>
-        k.stripPrefix(ConstraintPrefix) -> v
-    }).getOrElse(Map.empty)
+    log.latest().map(c => constraintsOf(c.properties)).getOrElse(Map.empty)
 
   /** [[readPruned]] for STRING columns: the bounds are byte-lexicographic
     * strings, compared through the same order-preserving prefix encoding
@@ -1454,16 +1453,11 @@ final class GraftTable private (
     * rewrite path) on violation. SQL semantics: a row violates only when
     * the predicate is FALSE; NULL passes, as in standard CHECK. */
   def addConstraint(name: String, predicateSql: String): Commit = this.synchronized {
-    commitMetadata { prev =>
+    alterTable("ADD CONSTRAINT") { prev =>
       // re-validated per attempt: a rebase over a concurrent data commit
       // must check the NEW snapshot, not the one this call first saw
       violations(readCommit(prev), Map(name -> predicateSql), "existing snapshot")
-      prev.copy(
-        version = prev.version + 1, tsMs = System.currentTimeMillis(),
-        operation = "ADD CONSTRAINT",
-        metrics = Map.empty, changesDir = None,
-        txnAppId = None, txnBatchId = None,
-        properties = prev.properties + (ConstraintPrefix + name -> predicateSql))
+      prev.copy(properties = prev.properties + (ConstraintPrefix + name -> predicateSql))
     }
   }
 
@@ -1474,7 +1468,7 @@ final class GraftTable private (
     * treat history correctly from the first commit. (Same effect as
     * appending an evolved frame, as explicit DDL.) */
   def addColumn(name: String, dataType: DataType): Commit = this.synchronized {
-    commitMetadata { prev =>
+    alterTable("ADD COLUMN") { prev =>
     val schema = DataType.fromJson(prev.schemaJson).asInstanceOf[StructType]
     require(!schema.fieldNames.contains(name), s"column $name already exists at $root")
     // A name a metadata-only DROP retired can never come back: reads
@@ -1486,12 +1480,7 @@ final class GraftTable private (
     require(!claimedPhysNames(schema, prev.properties).contains(name),
       s"column name $name of $root is retired or in use as a physical " +
         "(on-disk) column name — old files still carry it; use a new name")
-    prev.copy(
-      version = prev.version + 1, tsMs = System.currentTimeMillis(),
-      operation = "ADD COLUMN",
-      metrics = Map.empty, changesDir = None,
-      txnAppId = None, txnBatchId = None,
-      schemaJson = schema.add(name, dataType, nullable = true).json)
+    prev.copy(schemaJson = schema.add(name, dataType, nullable = true).json)
     }
   }
 
@@ -1505,7 +1494,7 @@ final class GraftTable private (
     * and for columns a CHECK constraint mentions (the constraint would
     * fail analysis on the next write — drop the constraint first). */
   def dropColumn(name: String): Commit = this.synchronized {
-    commitMetadata { prev =>
+    alterTable("DROP COLUMN") { prev =>
     val schema = DataType.fromJson(prev.schemaJson).asInstanceOf[StructType]
     require(schema.fieldNames.contains(name), s"no column $name at $root")
     require(schema.fields.length > 1, s"cannot drop the last column of $root")
@@ -1519,12 +1508,7 @@ final class GraftTable private (
     require(mentioned.isEmpty,
       s"cannot drop column $name of $root: CHECK constraint(s) ${mentioned.mkString(", ")} " +
         "reference it — drop the constraint(s) first")
-    prev.copy(
-      version = prev.version + 1, tsMs = System.currentTimeMillis(),
-      operation = "DROP COLUMN",
-      metrics = Map.empty, changesDir = None,
-      txnAppId = None, txnBatchId = None,
-      schemaJson = StructType(schema.fields.filterNot(_.name == name)).json,
+    prev.copy(schemaJson = StructType(schema.fields.filterNot(_.name == name)).json,
       // The retired name is the PHYSICAL one (what old files still carry)
       // — that is the name whose resurrection would leak old bytes.
       properties = {
@@ -1555,13 +1539,8 @@ final class GraftTable private (
     require(reserved.isEmpty,
       s"properties ${reserved.mkString(", ")} are engine-managed " +
         "(use addConstraint/addColumn/… instead of SET TBLPROPERTIES)")
-    commitMetadata { prev =>
-      prev.copy(
-        version = prev.version + 1, tsMs = System.currentTimeMillis(),
-        operation = "SET TBLPROPERTIES",
-        metrics = Map.empty, changesDir = None,
-        txnAppId = None, txnBatchId = None,
-        properties = prev.properties ++ props)
+    alterTable("SET TBLPROPERTIES") { prev =>
+      prev.copy(properties = prev.properties ++ props)
     }
   }
 
@@ -1573,13 +1552,8 @@ final class GraftTable private (
     require(reserved.isEmpty,
       s"properties ${reserved.mkString(", ")} are engine-managed " +
         "(use dropConstraint/… instead of UNSET TBLPROPERTIES)")
-    commitMetadata { prev =>
-      prev.copy(
-        version = prev.version + 1, tsMs = System.currentTimeMillis(),
-        operation = "UNSET TBLPROPERTIES",
-        metrics = Map.empty, changesDir = None,
-        txnAppId = None, txnBatchId = None,
-        properties = prev.properties -- keys)
+    alterTable("UNSET TBLPROPERTIES") { prev =>
+      prev.copy(properties = prev.properties -- keys)
     }
   }
 
@@ -1620,21 +1594,15 @@ final class GraftTable private (
     try spark.sql(s"SELECT CAST(($sqlText) AS ${f.dataType.sql})").head()
     catch { case e: Exception => throw new IllegalArgumentException(
       s"DEFAULT for $name: '$sqlText' is not a constant of ${f.dataType.sql}", e) }
-    commitMetadata { p =>
-      p.copy(version = p.version + 1, tsMs = System.currentTimeMillis(),
-        operation = "SET DEFAULT", metrics = Map.empty, changesDir = None,
-        txnAppId = None, txnBatchId = None,
-        properties = p.properties + (GraftTable.DefaultPrefix + name -> sqlText))
+    alterTable("SET DEFAULT") { p =>
+      p.copy(properties = p.properties + (GraftTable.DefaultPrefix + name -> sqlText))
     }
   }
 
   /** ALTER TABLE … ALTER COLUMN c DROP DEFAULT (absent default: no-op). */
   def dropColumnDefault(name: String): Commit = this.synchronized {
-    commitMetadata { p =>
-      p.copy(version = p.version + 1, tsMs = System.currentTimeMillis(),
-        operation = "DROP DEFAULT", metrics = Map.empty, changesDir = None,
-        txnAppId = None, txnBatchId = None,
-        properties = p.properties - (GraftTable.DefaultPrefix + name))
+    alterTable("DROP DEFAULT") { p =>
+      p.copy(properties = p.properties - (GraftTable.DefaultPrefix + name))
     }
   }
 
@@ -1649,7 +1617,7 @@ final class GraftTable private (
     * feature, and stamps OPTIMIZE-written adds with a
     * `clusteringProvider`. `CLUSTER BY NONE` = empty `cols`. */
   def clusterBy(cols: Seq[String]): Commit = this.synchronized {
-    commitMetadata { prev =>
+    alterTable("CLUSTER BY") { prev =>
       val schema = DataType.fromJson(prev.schemaJson).asInstanceOf[StructType]
       val missing = cols.filterNot(schema.fieldNames.contains)
       require(missing.isEmpty,
@@ -1657,15 +1625,9 @@ final class GraftTable private (
       val onPart = cols.filter(prev.partitionCols.contains)
       require(onPart.isEmpty,
         s"cannot cluster $root by partition column(s) ${onPart.mkString(", ")}")
-      prev.copy(
-        version = prev.version + 1, tsMs = System.currentTimeMillis(),
-        operation = "CLUSTER BY",
-        metrics = Map.empty, changesDir = None,
-        txnAppId = None, txnBatchId = None,
-        properties =
-          if (cols.isEmpty) prev.properties - GraftTable.ClusterByProp
-          else prev.properties +
-            (GraftTable.ClusterByProp -> cols.mkString(",")))
+      prev.copy(properties =
+        if (cols.isEmpty) prev.properties - GraftTable.ClusterByProp
+        else prev.properties + (GraftTable.ClusterByProp -> cols.mkString(",")))
     }
   }
 
@@ -1675,24 +1637,23 @@ final class GraftTable private (
 
   /** ALTER TABLE DROP CONSTRAINT (metadata-only). */
   def dropConstraint(name: String): Commit = this.synchronized {
-    commitMetadata { prev =>
-      prev.copy(
-        version = prev.version + 1, tsMs = System.currentTimeMillis(),
-        operation = "DROP CONSTRAINT",
-        metrics = Map.empty, changesDir = None,
-        txnAppId = None, txnBatchId = None,
-        properties = prev.properties - (ConstraintPrefix + name))
+    alterTable("DROP CONSTRAINT") { prev =>
+      prev.copy(properties = prev.properties - (ConstraintPrefix + name))
     }
   }
 
   /** Throw if any registered constraint is FALSE for some row of `df`.
     * No-op (zero extra jobs) when the table has no constraints. */
-  private def enforceConstraints(df: DataFrame, prev: Option[Commit], op: String): Unit = {
-    val cs = prev.map(_.properties).getOrElse(Map.empty).collect {
-      case (k, v) if k.startsWith(ConstraintPrefix) => k.stripPrefix(ConstraintPrefix) -> v
-    }
+  private def enforceConstraints(df: DataFrame, props: Map[String, String], op: String): Unit = {
+    val cs = constraintsOf(props)
     if (cs.nonEmpty) violations(df, cs, op)
   }
+
+  /** CHECK constraints (name → predicate) a property map registers. */
+  private def constraintsOf(props: Map[String, String]): Map[String, String] =
+    props.collect {
+      case (k, v) if k.startsWith(ConstraintPrefix) => k.stripPrefix(ConstraintPrefix) -> v
+    }
 
   private def violations(df: DataFrame, cs: Map[String, String], what: String): Unit =
     cs.foreach { case (name, p) =>
@@ -1864,10 +1825,10 @@ final class GraftTable private (
     }.toMap
   }
 
-  private def writeData(df: DataFrame, v: Long,
+  private def writeData(tx: TableTxn, df: DataFrame, v: Long,
       partCols: Seq[String] = partitionColsOfHead,
       rebalance: Boolean = true): String = {
-    val dir = dataDirName(v)
+    val dir = tx.stage(dataDirName(v))
     // On-disk bytes carry PHYSICAL names (partition columns are never
     // renamed, so partitionBy below always sees its column).
     val phys = toPhysicalDf(df, colMapAtHead)
@@ -1906,10 +1867,10 @@ final class GraftTable private (
     else df.repartition(n)
   }
 
-  /** Write one commit's CDF rows; returns (relative dir, per-change-type
-    * counts). */
-  private def writeChanges(df: DataFrame, v: Long, tsMs: Long): (String, Map[String, Long]) = {
-    val dir = changesDirName(v)
+  /** Write commit `v`'s CDF rows under `dir`; returns the per-change-type
+    * counts. */
+  private[table] def writeChanges(df: DataFrame, dir: String, v: Long,
+      tsMs: Long): Map[String, Long] = {
     // Table columns land under their physical names (same boundary rule as
     // writeData); the CDF artifact columns (_change_type + stamps) are
     // never mapped.
@@ -1918,12 +1879,11 @@ final class GraftTable private (
       .write.mode("errorifexists").parquet(new Path(root, dir).toString)
     // Metrics come from the written CDF (footer counts + one tiny agg) so the
     // expensive join/rewrite plans execute exactly once each.
-    val metrics = spark.read.parquet(new Path(root, dir).toString)
+    spark.read.parquet(new Path(root, dir).toString)
       .groupBy("_change_type").count()
       .collect()
       .map(r => r.getString(0) -> r.getLong(1))
       .toMap
-    (dir, metrics)
   }
 
   /** Resolve a commit's CDF dir: recorded name, or the legacy
@@ -1991,16 +1951,19 @@ final class GraftTable private (
       .map(GraftTable.canonFileUri)
     // Cross-PROCESS race: another job may commit the same COPY INTO between
     // our ledger read and our commit (the JVM lock only serializes this
-    // process). appendInternal's rebase detects the overlap and signals
-    // [[ConcurrentCopyRetry]]; we recompute the fresh set from the refreshed
-    // log and load only what is still unclaimed — converging on the
+    // process). A rival that claimed some of OUR files restarts the load
+    // from the new head with only what is still unclaimed; one that
+    // claimed them all already committed it — converging on the
     // never-load-twice contract under any interleaving.
-    var attempts = 0
-    while (attempts <= MaxCommitRetries) {
+    def unclaimed(): Seq[String] = {
       val loaded = log.commits().flatMap(_.copiedFiles)
         .map(GraftTable.canonFileUri).toSet
-      val fresh = listed.filterNot(loaded).sorted
-      if (fresh.isEmpty) return None
+      listed.filterNot(loaded).sorted
+    }
+    var fresh = unclaimed()
+    if (fresh.isEmpty) return None
+    val tx = new TableTxn(this, s"COPY INTO $root")
+    val c = tx.commit() { snap =>
       val df = format.toLowerCase match {
         case "parquet" => spark.read.parquet(fresh: _*)
         case "json" => spark.read.json(fresh: _*)
@@ -2009,14 +1972,16 @@ final class GraftTable private (
         case other => throw new IllegalArgumentException(
           s"COPY INTO FILEFORMAT = $other not supported (PARQUET, JSON, CSV)")
       }
-      try {
-        val c = appendInternal(df, None, copiedFiles = fresh)
-        autoCompact()
-        return c
-      } catch { case _: ConcurrentCopyRetry => attempts += 1 }
+      val staged = appendStaged(tx, snap, df, None, fresh)
+      staged.copy(conflict = { head =>
+        val left = unclaimed()
+        if (left.isEmpty) Committed
+        else if (left.size < fresh.size) { fresh = left; Restart }
+        else staged.conflict(head)
+      })
     }
-    throw new ConcurrentWriteException(
-      s"COPY INTO $root kept losing the file-ledger race $MaxCommitRetries times; giving up")
+    if (c.isDefined) autoCompact()
+    c
   }
 
   /** Exactly-once streaming append (Delta's `txn` action): the commit is
@@ -2082,11 +2047,10 @@ final class GraftTable private (
   def lastCommittedBatch(txnAppId: String): Option[Long] =
     log.commits().filter(_.txnAppId.contains(txnAppId)).flatMap(_.txnBatchId).maxOption
 
-  private val MaxCommitRetries = 5
-
-  /** Test seam: runs between an append's initial validate/write and its
-    * first commit attempt, so specs can deterministically interleave a
-    * concurrent commit and exercise the rebase path. No-op in production. */
+  /** Test seam: runs before every publish attempt of every verb, after its
+    * staging, so specs can deterministically interleave a concurrent
+    * commit and exercise the rebase, refusal and reaping paths. No-op in
+    * production. */
   private[table] var beforeCommitHook: () => Unit = () => ()
 
   /** Schema ENFORCEMENT (Delta's write contract): a frame column whose
@@ -2206,186 +2170,138 @@ final class GraftTable private (
     (fillIdentity(applyGenerated(df, props, op), specs, hwm), specs, hwm)
   }
 
-  /** Append with OPTIMISTIC-CONCURRENCY rebase: appends commute with any
-    * concurrent commit (they reference the previous snapshot's dirs, never
-    * its contents), so when another writer wins the version race the append
-    * is rebased — data dir renamed to the new version, schema re-merged
-    * against the new head, commit retried at head+1 — and both writers'
-    * rows land. Snapshot-REWRITING operations (merge/delete/...) abort
-    * instead ([[commitRewrite]]): they computed from a now-stale snapshot.
-    * IDENTITY caveat: id allocation does NOT commute — when the refreshed
-    * head's high watermark moved (a concurrent append allocated ids), the
-    * written dir is discarded and re-written with ids re-assigned above the
-    * new watermark, so engine-assigned ids stay unique under contention.
-    * Returns None iff a txn-stamped batch turns out to be already committed
-    * (possibly discovered mid-rebase). */
-  private def appendInternal(df: DataFrame, txn: Option[(String, Long)],
-      copiedFiles: Seq[String] = Nil): Option[Commit] =
+  private def appendInternal(df: DataFrame, txn: Option[(String, Long)]): Option[Commit] =
     this.synchronized {
-      val tsMs = System.currentTimeMillis()
-      var prev = log.latest()
-      var v = prev.map(_.version + 1).getOrElse(0L)
-      def mergeSchemas(p: Option[Commit], s: StructType): StructType = p match {
-        case None => s
-        case Some(pc) =>
-          val ps = DataType.fromJson(pc.schemaJson).asInstanceOf[StructType]
-          StructType(ps.fields ++ s.fields.filterNot(f => ps.fieldNames.contains(f.name)))
-      }
-      val props0 = prev.map(_.properties).getOrElse(Map.empty)
-      // generated cols computed/validated; identity ids assigned above hwm.
-      // gdf (pre-identity) is kept: a rebase over a concurrent allocation
-      // re-fills ids from it against the moved watermark.
-      val gdf = applyGenerated(df, props0, "append")
-      val idSpecs = identitySpecs(props0)
-      var idHwm = identityHwms(props0, idSpecs)
-      val prepared = fillIdentity(gdf, idSpecs, idHwm)
-      var mergedSchema = mergeSchemas(prev, prepared.schema)
-      enforceCompatibleTypes(prepared.schema, mergedSchema, "append")
-      // Schema evolution must not give birth to a column under a name that
-      // old files already carry (a DROP-retired name, or a live column's
-      // physical name after a metadata-only RENAME) — the bytes would
-      // resurrect. Rebases need no re-check: the claimed set only changes
-      // via rename/drop commits, which abort the append rebase anyway.
-      prev.foreach { pc =>
-        val ps = DataType.fromJson(pc.schemaJson).asInstanceOf[StructType]
-        val banned = mergedSchema.fieldNames
-          .filterNot(ps.fieldNames.contains)
-          .filter(claimedPhysNames(ps, pc.properties).contains)
-        require(banned.isEmpty,
-          s"append to $root: evolved column(s) ${banned.mkString(", ")} " +
-            "collide with retired or physical column names old files " +
-            "still carry — use different names")
-      }
-      var aligned = alignTo(prepared, mergedSchema)
-      def constraintsOf(p: Option[Commit]): Map[String, String] =
-        p.map(_.properties).getOrElse(Map.empty)
-          .filter { case (k, _) => k.startsWith(ConstraintPrefix) }
-      var validatedConstraints = constraintsOf(prev)
-      enforceConstraints(aligned, prev, "APPEND")
-      var dir = writeData(aligned, v)
-      var added = countDir(dir)
-      var meta = metaFor(dir)
-      beforeCommitHook()
-      var attempts = 0
-      while (true) {
-        val op =
-          if (copiedFiles.nonEmpty) "COPY INTO"
-          else if (prev.isEmpty) "CREATE" else "APPEND"
-        val c = Commit(v, tsMs, op,
-          prev.map(_.dataDirs).getOrElse(Nil) :+ dir,
-          Map("numOutputRows" -> added), mergedSchema.json,
-          txn.map(_._1), txn.map(_._2),
-          prev.map(_.partitionCols).getOrElse(Nil),
-          // Appends accumulate dirs, so each one records skipping stats and
-          // carries the earlier dirs' stats forward in the head commit.
-          prev.map(_.dirStats).getOrElse(Map.empty) + (dir -> meta.stats),
-          properties = prev.map(_.properties).getOrElse(Map.empty) ++
-            identityHwmUpdates(dir, meta, idSpecs, idHwm),
-          tombstoneDirs = prev.map(_.tombstoneDirs).getOrElse(Nil),
-          dvDirs = prev.map(_.dvDirs).getOrElse(Nil),
-          copiedFiles = copiedFiles,
-          dirNulls = prev.map(_.dirNulls).getOrElse(Map.empty) + (dir -> meta.nulls))
-        try { log.commit(c); return Some(c) }
-        catch {
-          case e: IllegalStateException =>
-            if (attempts >= MaxCommitRetries) {
-              fs.delete(new Path(root, dir), true)
-              throw new ConcurrentWriteException(
-                s"append to $root lost the version race $MaxCommitRetries times; giving up", e)
-            }
-            attempts += 1
-            prev = log.latest()
-            // Another writer may have landed OUR batch (replayed stamp).
-            if (txn.exists { case (app, b) => lastCommittedBatch(app).exists(_ >= b) }) {
-              fs.delete(new Path(root, dir), true)
-              return None
-            }
-            // A concurrent COPY INTO may have claimed some of OUR source
-            // files in the ledger: committing as-is would double-load their
-            // rows (the written dir was read from the full fresh set, so a
-            // partial drop is not possible). Roll back and let copyInto
-            // recompute fresh files against the refreshed log.
-            if (copiedFiles.nonEmpty) {
-              val claimed = log.commits().flatMap(_.copiedFiles)
-                .map(GraftTable.canonFileUri).toSet
-              if (copiedFiles.map(GraftTable.canonFileUri).exists(claimed)) {
-                fs.delete(new Path(root, dir), true)
-                throw new ConcurrentCopyRetry
-              }
-            }
-            // Rebase: same written dir (names are version-independent),
-            // recompute version/schema/lineage against the new head.
-            v = prev.map(_.version + 1).getOrElse(0L)
-            mergedSchema = mergeSchemas(prev, aligned.schema)
-            // Identity allocation does NOT commute: if the refreshed head's
-            // watermark moved (a concurrent append assigned ids), our ids
-            // may collide — discard the dir and re-write with ids
-            // re-assigned above the new watermark.
-            val newHwm = identityHwms(prev.map(_.properties).getOrElse(Map.empty), idSpecs)
-            if (idSpecs.nonEmpty && newHwm != idHwm) {
-              fs.delete(new Path(root, dir), true)
-              idHwm = newHwm
-              aligned = alignTo(fillIdentity(gdf, idSpecs, idHwm), mergedSchema)
-              dir = writeData(aligned, v)
-              added = countDir(dir)
-              meta = metaFor(dir)
-            }
-            // A concurrent ADD CONSTRAINT is a metadata conflict appends do
-            // NOT commute with: the refreshed head may advertise checks the
-            // initial validation never ran, so re-validate whenever the
-            // constraint set changed (Delta aborts here; re-checking keeps
-            // the rebase while preserving the head's invariants).
-            val cs = constraintsOf(prev)
-            if (cs != validatedConstraints) {
-              try enforceConstraints(aligned, prev, "APPEND")
-              catch { case t: Throwable =>
-                fs.delete(new Path(root, dir), true); throw t
-              }
-              validatedConstraints = cs
-            }
-        }
-      }
-      scala.sys.error("unreachable")
+      val tx = new TableTxn(this, s"append to $root")
+      tx.commit(ifAbsent = TableTxn.Unborn)(appendStaged(tx, _, df, txn, Nil))
     }
 
-  /** Publish a METADATA-ONLY commit (constraint / column DDL) with
-    * optimistic retry: `derive` rebuilds the commit FROM the current head —
-    * re-running its own precondition checks — so losing the version race
-    * to any concurrent commit just re-derives against the new head.
-    * Metadata edits carry no data dirs and commute with data commits; what
-    * does NOT commute (e.g. a constraint racing an append that violates
-    * it) is re-checked by the re-derivation itself. Bounded attempts turn
-    * pathological contention into a clean [[ConcurrentWriteException]]
-    * instead of a livelock. */
-  private def commitMetadata(derive: Commit => Commit): Commit = {
-    var attempts = 0
-    while (attempts < 20) {
-      val prev = log.latest().getOrElse(
-        throw new NoSuchElementException(s"no table at $root"))
-      val c = derive(prev)
-      try { log.commit(c); return c }
-      catch { case _: IllegalStateException => attempts += 1 }
+  /** An append's staging over `snap` (the unborn table for a CREATE): it
+    * writes one new data dir and references every earlier one, so it
+    * commutes with any concurrent commit — when a rival wins the version,
+    * the commit is rebuilt over the new head (schema re-merged, lineage
+    * carried) and both writers' rows land. A txn-stamped batch the rival
+    * already committed counts as committed (None). IDENTITY caveat: id
+    * allocation does NOT commute — when the head's high watermark moved (a
+    * concurrent append allocated ids) the append restarts, re-assigning
+    * ids above the new watermark, so engine-assigned ids stay unique under
+    * contention. */
+  private def appendStaged(tx: TableTxn, snap: Commit, df: DataFrame,
+      txn: Option[(String, Long)], copiedFiles: Seq[String]): Staged = {
+    def mergeSchemas(p: Commit, s: StructType): StructType = {
+      val ps = DataType.fromJson(p.schemaJson).asInstanceOf[StructType]
+      StructType(ps.fields ++ s.fields.filterNot(f => ps.fieldNames.contains(f.name)))
     }
-    throw new ConcurrentWriteException(
-      s"metadata commit at $root lost the version race $attempts times", null)
+    // generated cols computed/validated; identity ids assigned above hwm.
+    val idSpecs = identitySpecs(snap.properties)
+    val idHwm = identityHwms(snap.properties, idSpecs)
+    val prepared = fillIdentity(applyGenerated(df, snap.properties, "append"), idSpecs, idHwm)
+    val mergedSchema = mergeSchemas(snap, prepared.schema)
+    enforceCompatibleTypes(prepared.schema, mergedSchema, "append")
+    // Schema evolution must not give birth to a column under a name that
+    // old files already carry (a DROP-retired name, or a live column's
+    // physical name after a metadata-only RENAME) — the bytes would
+    // resurrect.
+    val ps = DataType.fromJson(snap.schemaJson).asInstanceOf[StructType]
+    val banned = mergedSchema.fieldNames
+      .filterNot(ps.fieldNames.contains)
+      .filter(claimedPhysNames(ps, snap.properties).contains)
+    require(banned.isEmpty,
+      s"append to $root: evolved column(s) ${banned.mkString(", ")} " +
+        "collide with retired or physical column names old files " +
+        "still carry — use different names")
+    val aligned = alignTo(prepared, mergedSchema)
+    var validated = constraintsOf(snap.properties)
+    enforceConstraints(aligned, snap.properties, "APPEND")
+    val dir = writeData(tx, aligned, snap.version + 1, snap.partitionCols)
+    val added = countDir(dir)
+    val meta = metaFor(dir)
+    Staged(
+      conflict = { head =>
+        if (txn.exists { case (app, b) => lastCommittedBatch(app).exists(_ >= b) }) Committed
+        else if (identityHwms(head.properties, idSpecs) != idHwm) Restart
+        else {
+          // A concurrent ADD CONSTRAINT is a metadata conflict appends do
+          // NOT commute with: the head may advertise checks the staged
+          // rows never ran, so re-validate whenever the constraint set
+          // changed (Delta aborts here; re-checking keeps the rebase while
+          // preserving the head's invariants).
+          val cs = constraintsOf(head.properties)
+          if (cs != validated) {
+            enforceConstraints(aligned, head.properties, "APPEND")
+            validated = cs
+          }
+          Rebase
+        }
+      },
+      build = a => Commit(a.version, a.tsMs,
+        if (copiedFiles.nonEmpty) "COPY INTO"
+        else if (a.head.version < 0) "CREATE" else "APPEND",
+        a.head.dataDirs :+ dir,
+        Map("numOutputRows" -> added), mergeSchemas(a.head, prepared.schema).json,
+        txn.map(_._1), txn.map(_._2), a.head.partitionCols,
+        // Appends accumulate dirs, so each one records skipping stats and
+        // carries the earlier dirs' stats forward in the head commit.
+        a.head.dirStats + (dir -> meta.stats),
+        properties = a.head.properties ++
+          identityHwmUpdates(dir, meta, idSpecs, idHwm),
+        tombstoneDirs = a.head.tombstoneDirs,
+        dvDirs = a.head.dvDirs,
+        copiedFiles = copiedFiles,
+        dirNulls = a.head.dirNulls + (dir -> meta.nulls)))
   }
 
-  /** Publish a snapshot-REWRITING commit (merge/delete/update/overwrite/
-    * optimize): these computed their output from the previous snapshot, so
-    * a concurrent commit means they read stale state — roll back the
-    * written dirs and abort with [[ConcurrentWriteException]]; the caller
-    * retries the whole operation against the new head. (Appends rebase
-    * instead — see [[appendInternal]].) */
-  private def commitRewrite(c: Commit, writtenDirs: Seq[String]): Commit =
-    try { log.commit(c); c }
-    catch {
-      case e: IllegalStateException =>
-        writtenDirs.foreach(d => fs.delete(new Path(root, d), true))
-        throw new ConcurrentWriteException(
-          s"version ${c.version} of $root was committed by another writer while this " +
-            s"${c.operation} was computing from the previous snapshot; rolled back — " +
-            "retry the operation against the new head", e)
-    }
+  /** A METADATA-ONLY commit (constraint / column / property DDL): `edit`
+    * applies the change to the head restamped as commit `op` (version and
+    * time; metrics, CDF and txn stamp cleared), re-running its own
+    * precondition checks. A rival win re-derives it over the new head:
+    * metadata edits commute with data commits, and what does not (a
+    * constraint racing an append that violates it) the re-derivation
+    * re-checks. */
+  private def alterTable(op: String)(edit: Commit => Commit): Commit =
+    new TableTxn(this, s"metadata commit at $root").commit() { _ =>
+      Staged(_ => Rebase, a => edit(a.head.copy(version = a.version,
+        tsMs = a.tsMs, operation = op, metrics = Map.empty,
+        changesDir = None, txnAppId = None, txnBatchId = None)))
+    }.get
+
+  /** The conflict rule of a snapshot REWRITE (merge/delete/update/
+    * overwrite/…) staged over `prev`: it computed from that snapshot, so
+    * any intervening commit refuses and the caller retries the whole
+    * operation against the new head. (Appends rebase instead.) */
+  private def staleRewrite(prev: Commit, op: String): Commit => Conflict = _ =>
+    Refuse(s"version ${prev.version + 1} of $root was committed by another writer while this " +
+      s"$op was computing from the previous snapshot; rolled back — " +
+      "retry the operation against the new head")
+
+  /** Stages a REWRITE of `prev` as commit `op`: `rows` land as one data dir
+    * replacing every dir, `changes` (if any) as its CDF, and any
+    * intervening commit refuses ([[staleRewrite]]). The commit carries
+    * `metrics` plus the dir's `numOutputRows`, `prev`'s schema, partitioning
+    * and rewrite properties; `finish` adjusts it given the dir and its
+    * skipping metadata. */
+  private def rewriteStaged(tx: TableTxn, prev: Commit, op: String,
+      rows: DataFrame, changes: Option[DataFrame] = None,
+      metrics: Attempt => Map[String, Long] = _ => Map.empty,
+      rebalance: Boolean = true)(
+      finish: (Commit, String, DirMeta) => Commit = (c, _, _) => c): Staged = {
+    val dir = writeData(tx, rows, prev.version + 1, prev.partitionCols, rebalance)
+    val meta = metaFor(dir)
+    val outputRows = countDir(dir)
+    Staged(staleRewrite(prev, op), a => finish(Commit(a.version, a.tsMs, op,
+      Seq(dir), metrics(a) + ("numOutputRows" -> outputRows), prev.schemaJson,
+      partitionCols = prev.partitionCols, changesDir = a.changesDir,
+      dirStats = Map(dir -> meta.stats),
+      properties = rewriteProps(prev.properties),
+      dirNulls = Map(dir -> meta.nulls)), dir, meta), changes)
+  }
+
+  /** `c` with `dirs` of `from` carried ahead of its own dir, skipping
+    * metadata included — a rewrite of a dir SUBSET. */
+  private def carrying(c: Commit, from: Commit, dirs: Seq[String]): Commit =
+    c.copy(dataDirs = dirs ++ c.dataDirs,
+      dirStats = from.dirStats.view.filterKeys(dirs.contains).toMap ++ c.dirStats,
+      dirNulls = from.dirNulls.view.filterKeys(dirs.contains).toMap ++ c.dirNulls)
 
   /** Overwrite (M5): table (re)creation path (spark_streaming.py:362-365). */
   def overwrite(df: DataFrame): Commit = overwrite(df, partitionColsOfHead)
@@ -2410,28 +2326,29 @@ final class GraftTable private (
   private def overwriteInternal(df: DataFrame, partitionBy: Seq[String],
       txn: Option[(String, Long)],
       extraProps: Map[String, String] = Map.empty): Commit = this.synchronized {
-    val prev = log.latest()
-    if (prev.isDefined) requireNotAppendOnly("OVERWRITE") // creation is free
-    val v = version + 1
-    val tsMs = System.currentTimeMillis()
-    // extraProps is the CREATE-time declaration channel (generated/identity
-    // column specs): folded in before preparation so the very first write
-    // already computes/assigns them.
-    val props0 = prev.map(_.properties).getOrElse(Map.empty) ++ extraProps
-    val (prepared, idSpecs, idHwm) = prepareWrite(df, props0, "overwrite")
-    enforceConstraints(prepared, prev, "WRITE")
-    val dir = writeData(prepared, v, partitionBy)
-    val meta = metaFor(dir)
-    val c = Commit(v, tsMs, if (v == 0) "CREATE" else "WRITE", Seq(dir),
-      Map("numOutputRows" -> countDir(dir)), prepared.schema.json,
-      txn.map(_._1), txn.map(_._2),
-      partitionCols = partitionBy,
-      // Every commit that writes a dir records its skipping stats — a
-      // CREATE-then-append table would otherwise carry one forever-unprunable dir.
-      dirStats = Map(dir -> meta.stats),
-      properties = rewriteProps(props0) ++ identityHwmUpdates(dir, meta, idSpecs, idHwm),
-      dirNulls = Map(dir -> meta.nulls))
-    commitRewrite(c, Seq(dir))
+    // creation (over the unborn table) is free of the append-only gate
+    val tx = new TableTxn(this, s"overwrite of $root", Some("OVERWRITE"))
+    tx.commit(ifAbsent = TableTxn.Unborn) { prev =>
+      val op = if (prev.version < 0) "CREATE" else "WRITE"
+      // extraProps is the CREATE-time declaration channel (generated/identity
+      // column specs): folded in before preparation so the very first write
+      // already computes/assigns them.
+      val props0 = prev.properties ++ extraProps
+      val (prepared, idSpecs, idHwm) = prepareWrite(df, props0, "overwrite")
+      enforceConstraints(prepared, prev.properties, "WRITE")
+      val dir = writeData(tx, prepared, prev.version + 1, partitionBy)
+      val meta = metaFor(dir)
+      val outputRows = countDir(dir)
+      Staged(staleRewrite(prev, op), a => Commit(a.version, a.tsMs, op, Seq(dir),
+        Map("numOutputRows" -> outputRows), prepared.schema.json,
+        txn.map(_._1), txn.map(_._2),
+        partitionCols = partitionBy,
+        // Every commit that writes a dir records its skipping stats — a
+        // CREATE-then-append table would otherwise carry one forever-unprunable dir.
+        dirStats = Map(dir -> meta.stats),
+        properties = rewriteProps(props0) ++ identityHwmUpdates(dir, meta, idSpecs, idHwm),
+        dirNulls = Map(dir -> meta.nulls)))
+    }.get
   }
 
   /** [[GraftTable.convert]]'s body: move the root's loose parquet files
@@ -2647,95 +2564,86 @@ final class GraftTable private (
   def merge(source: DataFrame, key: String, changedOnly: Boolean = true,
       compareIgnore: Seq[String] = Nil): Commit =
     this.synchronized {
-      requireNotAppendOnly("MERGE")
-      val prev = log.latest().getOrElse(throw new NoSuchElementException(
-        s"merge into non-existent table $root — create it first"))
-      val v = prev.version + 1
-      val tsMs = System.currentTimeMillis()
-      val targetSchema = DataType.fromJson(prev.schemaJson).asInstanceOf[StructType]
-      // Evolution dedups case-INSENSITIVELY (Delta's resolution): a source
-      // column differing only in case binds to the existing target field
-      // instead of appending a near-duplicate column to the schema.
-      val mergedSchema = StructType(targetSchema.fields ++
-        source.schema.fields.filterNot(f =>
-          targetSchema.fieldNames.exists(_.equalsIgnoreCase(f.name))))
-      enforceCompatibleTypes(source.schema, mergedSchema, "merge")
-      val sourceCols = source.columns.map(_.toLowerCase).toSet
+      val tx = new TableTxn(this, s"MERGE into $root", Some("MERGE"))
+      tx.commit(ifAbsent = throw new NoSuchElementException(
+          s"merge into non-existent table $root — create it first")) { prev =>
+        val targetSchema = DataType.fromJson(prev.schemaJson).asInstanceOf[StructType]
+        // Evolution dedups case-INSENSITIVELY (Delta's resolution): a source
+        // column differing only in case binds to the existing target field
+        // instead of appending a near-duplicate column to the schema.
+        val mergedSchema = StructType(targetSchema.fields ++
+          source.schema.fields.filterNot(f =>
+            targetSchema.fieldNames.exists(_.equalsIgnoreCase(f.name))))
+        enforceCompatibleTypes(source.schema, mergedSchema, "merge")
+        val sourceCols = source.columns.map(_.toLowerCase).toSet
 
-      val t = alignTo(readCommit(prev), mergedSchema).alias("t")
-      // A null merge key can never match (equi-join) and would surface as an
-      // all-NULL row; it's corrupt input — drop it rather than corrupt state.
-      val s = alignTo(source.filter(col(key).isNotNull), mergedSchema).alias("s")
-      val joined = t.join(s, col(s"t.$key") === col(s"s.$key"), "full_outer")
+        val t = alignTo(readCommit(prev), mergedSchema).alias("t")
+        // A null merge key can never match (equi-join) and would surface as an
+        // all-NULL row; it's corrupt input — drop it rather than corrupt state.
+        val s = alignTo(source.filter(col(key).isNotNull), mergedSchema).alias("s")
+        val joined = t.join(s, col(s"t.$key") === col(s"s.$key"), "full_outer")
 
-      val sPresent = col(s"s.$key").isNotNull
-      val tPresent = col(s"t.$key").isNotNull
-      // whenMatchedUpdateAll assigns only columns the SOURCE actually has:
-      // target-only columns keep their target value on matched rows.
-      def mergedVal(c: String) =
-        if (sourceCols.contains(c.toLowerCase))
-          when(sPresent, col(s"s.$c")).otherwise(col(s"t.$c"))
-        else when(tPresent, col(s"t.$c")).otherwise(col(s"s.$c"))
-      // Change detection compares only source-assignable columns, minus any
-      // caller-declared volatile metadata (e.g. processing timestamps).
-      val compareCols = mergedSchema.fieldNames
-        .filter(c => c != key && sourceCols.contains(c.toLowerCase) &&
-          !compareIgnore.contains(c)).toSeq
-      val changedCond = compareCols
-        .map(c => !(col(s"t.$c") <=> col(s"s.$c")))
-        .reduceOption(_ || _).getOrElse(lit(false))
-      val isUpdate = tPresent && sPresent && (if (changedOnly) changedCond else lit(true))
+        val sPresent = col(s"s.$key").isNotNull
+        val tPresent = col(s"t.$key").isNotNull
+        // whenMatchedUpdateAll assigns only columns the SOURCE actually has:
+        // target-only columns keep their target value on matched rows.
+        def mergedVal(c: String) =
+          if (sourceCols.contains(c.toLowerCase))
+            when(sPresent, col(s"s.$c")).otherwise(col(s"t.$c"))
+          else when(tPresent, col(s"t.$c")).otherwise(col(s"s.$c"))
+        // Change detection compares only source-assignable columns, minus any
+        // caller-declared volatile metadata (e.g. processing timestamps).
+        val compareCols = mergedSchema.fieldNames
+          .filter(c => c != key && sourceCols.contains(c.toLowerCase) &&
+            !compareIgnore.contains(c)).toSeq
+        val changedCond = compareCols
+          .map(c => !(col(s"t.$c") <=> col(s"s.$c")))
+          .reduceOption(_ || _).getOrElse(lit(false))
+        val isUpdate = tPresent && sPresent && (if (changedOnly) changedCond else lit(true))
 
-      val outCols = mergedSchema.fieldNames.toSeq
-      val snapshot0 = joined.select(outCols.map(c => mergedVal(c).as(c)): _*)
-      // Generated columns are pure functions of the row: recompute them on
-      // the POST-merge image (a source that updates a base column must not
-      // leave the target's stale derived value; inserts from a source that
-      // omits the column must not land null). Identity columns fill only
-      // the inserted rows' nulls; CDF insert postimages carry null for
-      // engine-assigned ids (the assignment happens in the snapshot job —
-      // documented divergence, sources that care provide ids).
-      val genSpecs = generatedSpecs(prev.properties)
-      val idSpecs = identitySpecs(prev.properties)
-      val idHwm = identityHwms(prev.properties, idSpecs)
-      val regenerated = genSpecs.foldLeft(snapshot0) { case (d, (n, e)) =>
-        d.withColumn(n, expr(e)) }
-      val snapshot = fillIdentity(regenerated, idSpecs, idHwm)
-      enforceConstraints(snapshot, Some(prev), "MERGE")
-      val dir = writeData(snapshot, v)
+        val outCols = mergedSchema.fieldNames.toSeq
+        val snapshot0 = joined.select(outCols.map(c => mergedVal(c).as(c)): _*)
+        // Generated columns are pure functions of the row: recompute them on
+        // the POST-merge image (a source that updates a base column must not
+        // leave the target's stale derived value; inserts from a source that
+        // omits the column must not land null). Identity columns fill only
+        // the inserted rows' nulls; CDF insert postimages carry null for
+        // engine-assigned ids (the assignment happens in the snapshot job —
+        // documented divergence, sources that care provide ids).
+        val genSpecs = generatedSpecs(prev.properties)
+        val idSpecs = identitySpecs(prev.properties)
+        val idHwm = identityHwms(prev.properties, idSpecs)
+        val regenerated = genSpecs.foldLeft(snapshot0) { case (d, (n, e)) =>
+          d.withColumn(n, expr(e)) }
+        val snapshot = fillIdentity(regenerated, idSpecs, idHwm)
+        enforceConstraints(snapshot, prev.properties, "MERGE")
 
-      def image(side: String, changeType: String) = {
-        // postimage = the merged row (source values + carried target-only
-        // columns), preimage = the pre-merge target row.
-        val cols =
-          if (side == "s") outCols.map(c => mergedVal(c).as(c))
-          else outCols.map(c => col(s"t.$c").as(c))
-        struct(cols :+ lit(changeType).as("_change_type"): _*)
-      }
-      // No `otherwise`: unmatched branches yield a null array, which explode
-      // drops — unchanged rows emit no CDF rows, in one pass over the join.
-      // Generated columns recompute on each image too (pure row functions:
-      // exact for pre- AND post-images), keeping CDF consistent with the
-      // snapshot's regeneration.
-      val changeRows0 = joined.select(explode(
-        when(!tPresent && sPresent, array(image("s", "insert")))
-          .when(isUpdate, array(image("t", "update_preimage"), image("s", "update_postimage")))
-      ).as("c")).select("c.*")
-      val changeRows = genSpecs.foldLeft(changeRows0) { case (d, (n, e)) =>
-        d.withColumn(n, expr(e)) }
-      val (chDir, cdfMetrics) = writeChanges(changeRows, v, tsMs)
-
-      val mergeMeta = metaFor(dir)
-      val c = Commit(v, tsMs, "MERGE", Seq(dir), Map(
-        "numTargetRowsInserted" -> cdfMetrics.getOrElse("insert", 0L),
-        "numTargetRowsUpdated" -> cdfMetrics.getOrElse("update_postimage", 0L),
-        "numOutputRows" -> countDir(dir)), mergedSchema.json,
-        partitionCols = prev.partitionCols, changesDir = Some(chDir),
-        dirStats = Map(dir -> mergeMeta.stats),
-        properties = rewriteProps(prev.properties) ++
-          identityHwmUpdates(dir, mergeMeta, idSpecs, idHwm),
-        dirNulls = Map(dir -> mergeMeta.nulls))
-      commitRewrite(c, Seq(dir, chDir))
+        def image(side: String, changeType: String) = {
+          // postimage = the merged row (source values + carried target-only
+          // columns), preimage = the pre-merge target row.
+          val cols =
+            if (side == "s") outCols.map(c => mergedVal(c).as(c))
+            else outCols.map(c => col(s"t.$c").as(c))
+          struct(cols :+ lit(changeType).as("_change_type"): _*)
+        }
+        // No `otherwise`: unmatched branches yield a null array, which explode
+        // drops — unchanged rows emit no CDF rows, in one pass over the join.
+        // Generated columns recompute on each image too (pure row functions:
+        // exact for pre- AND post-images), keeping CDF consistent with the
+        // snapshot's regeneration.
+        val changeRows0 = joined.select(explode(
+          when(!tPresent && sPresent, array(image("s", "insert")))
+            .when(isUpdate, array(image("t", "update_preimage"), image("s", "update_postimage")))
+        ).as("c")).select("c.*")
+        val changeRows = genSpecs.foldLeft(changeRows0) { case (d, (n, e)) =>
+          d.withColumn(n, expr(e)) }
+        rewriteStaged(tx, prev, "MERGE", snapshot, Some(changeRows), a => Map(
+          "numTargetRowsInserted" -> a.changed("insert"),
+          "numTargetRowsUpdated" -> a.changed("update_postimage"))) { (c, dir, meta) =>
+          c.copy(schemaJson = mergedSchema.json, properties = c.properties ++
+            identityHwmUpdates(dir, meta, idSpecs, idHwm))
+        }
+      }.get
     }
 
   /** General MERGE (Delta's full row-level clause surface): ordered
@@ -2784,10 +2692,6 @@ final class GraftTable private (
       targetAlias: String = "t", sourceAlias: String = "s"): Commit =
     this.synchronized {
       import MergeClause._
-      // Insert-only merges append rows and stay legal on an append-only
-      // table; any matched / not-matched-by-source clause mutates.
-      if (matched.nonEmpty || notMatchedBySource.nonEmpty)
-        requireNotAppendOnly("MERGE")
       require(keys.nonEmpty, "MERGE needs at least one equi key")
       matched.foreach {
         case _: InsertAll | _: Insert => throw new IllegalArgumentException(
@@ -2808,209 +2712,179 @@ final class GraftTable private (
       require(targetAlias != sourceAlias,
         s"MERGE target and source aliases must differ, both are '$targetAlias'")
 
-      val prev = log.latest().getOrElse(throw new NoSuchElementException(
-        s"merge into non-existent table $root — create it first"))
-      val v = prev.version + 1
-      val tsMs = System.currentTimeMillis()
-      val targetSchema = DataType.fromJson(prev.schemaJson).asInstanceOf[StructType]
-      val hasStar = (matched ++ notMatched).exists {
-        case _: UpdateAll | _: InsertAll => true; case _ => false
-      }
-      // Star clauses adopt new source columns (M6 additive evolution);
-      // explicit assignments bind to the existing target schema only.
-      // Dedup is case-INSENSITIVE — mirroring canon()'s assignment
-      // resolution below and Delta's — so a source column differing only
-      // in case binds to the existing target field rather than appending
-      // a second column to the evolved schema.
-      val mergedSchema =
-        if (hasStar) StructType(targetSchema.fields ++
-          source.schema.fields.filterNot(f =>
-            targetSchema.fieldNames.exists(_.equalsIgnoreCase(f.name))))
-        else targetSchema
-      if (hasStar) enforceCompatibleTypes(source.schema, mergedSchema, "merge")
-      val sourceCols = source.columns.map(_.toLowerCase).toSet
-      val fieldOf = mergedSchema.fields.map(f => f.name -> f).toMap
-      // Assignment keys resolve case-insensitively against the schema.
-      def canon(n: String): String = fieldOf.getOrElse(n,
-        mergedSchema.fields.find(_.name.equalsIgnoreCase(n)).getOrElse(
-          throw new IllegalArgumentException(
-            s"MERGE assignment target '$n' is not a column of the table " +
-              s"(columns: ${mergedSchema.fieldNames.mkString(", ")})"))).name
-      def canonical(cl: MergeClause): MergeClause = cl match {
-        case Update(as, c) => Update(as.map { case (k, ve) => canon(k) -> ve }, c)
-        case Insert(as, c) => Insert(as.map { case (k, ve) => canon(k) -> ve }, c)
-        case other => other
-      }
-      val (mCl, iCl, bCl) = (matched.map(canonical), notMatched.map(canonical),
-        notMatchedBySource.map(canonical))
-
-      // Side-presence markers survive the outer join where a null business
-      // key would lie about its side (a target row with a null key is
-      // present, merely unmatchable).
-      val tp = "__graft_t_present"; val sp = "__graft_s_present"
-      val t = alignTo(readCommit(prev), mergedSchema)
-        .withColumn(tp, lit(true)).alias(targetAlias)
-      // A null source key can never equi-match and Delta's NOT MATCHED
-      // branch still sees it (vacuously unmatched) — keep such rows.
-      val s = source.withColumn(sp, lit(true)).alias(sourceAlias)
-      val equi = keys.map(k =>
-        col(s"$targetAlias.$k") === col(s"$sourceAlias.$k")).reduce(_ && _)
-      val onCond = onExtra.map(equi && _).getOrElse(equi)
-      val joined = t.join(s, onCond, "full_outer")
-      val tPresent = col(s"$targetAlias.$tp").isNotNull
-      val sPresent = col(s"$sourceAlias.$sp").isNotNull
-
-      def condOf(cl: MergeClause): Column =
-        cl.condition.map(c => coalesce(c, lit(false))).getOrElse(lit(true))
-      // First-true clause index per branch; -1 = no clause claims the row.
-      def firstIdx(cls: Seq[MergeClause]): Column =
-        cls.zipWithIndex.foldRight(lit(-1): Column) { case ((cl, i), els) =>
-          when(condOf(cl), lit(i)).otherwise(els)
+      // Insert-only merges append rows and stay legal on an append-only
+      // table; any matched / not-matched-by-source clause mutates.
+      val mutates = matched.nonEmpty || notMatchedBySource.nonEmpty
+      val tx = new TableTxn(this, s"MERGE into $root", Option.when(mutates)("MERGE"))
+      tx.commit(ifAbsent = throw new NoSuchElementException(
+          s"merge into non-existent table $root — create it first")) { prev =>
+        val targetSchema = DataType.fromJson(prev.schemaJson).asInstanceOf[StructType]
+        val hasStar = (matched ++ notMatched).exists {
+          case _: UpdateAll | _: InsertAll => true; case _ => false
         }
-      val mIdx = firstIdx(mCl); val iIdx = firstIdx(iCl); val bIdx = firstIdx(bCl)
-
-      // The value column `c` takes under clause `cl` (post-image).
-      def clauseVal(cl: MergeClause, c: String): Column = {
-        val f = fieldOf(c)
-        cl match {
-          // Source-column presence checks are case-insensitive; the alias
-          // reference itself resolves case-insensitively in analysis.
-          case _: UpdateAll =>
-            if (sourceCols.contains(c.toLowerCase))
-              col(s"$sourceAlias.$c").cast(f.dataType)
-            else col(s"$targetAlias.$c")
-          case Update(as, _) => as.get(c).map(_.cast(f.dataType))
-            .getOrElse(col(s"$targetAlias.$c"))
-          case _: InsertAll =>
-            if (sourceCols.contains(c.toLowerCase))
-              col(s"$sourceAlias.$c").cast(f.dataType)
-            else lit(null).cast(f.dataType)
-          case Insert(as, _) => as.get(c).map(_.cast(f.dataType))
-            .getOrElse(lit(null).cast(f.dataType))
-          case _: Delete => lit(null).cast(f.dataType) // row never materializes
+        // Star clauses adopt new source columns (M6 additive evolution);
+        // explicit assignments bind to the existing target schema only.
+        // Dedup is case-INSENSITIVE — mirroring canon()'s assignment
+        // resolution below and Delta's — so a source column differing only
+        // in case binds to the existing target field rather than appending
+        // a second column to the evolved schema.
+        val mergedSchema =
+          if (hasStar) StructType(targetSchema.fields ++
+            source.schema.fields.filterNot(f =>
+              targetSchema.fieldNames.exists(_.equalsIgnoreCase(f.name))))
+          else targetSchema
+        if (hasStar) enforceCompatibleTypes(source.schema, mergedSchema, "merge")
+        val sourceCols = source.columns.map(_.toLowerCase).toSet
+        val fieldOf = mergedSchema.fields.map(f => f.name -> f).toMap
+        // Assignment keys resolve case-insensitively against the schema.
+        def canon(n: String): String = fieldOf.getOrElse(n,
+          mergedSchema.fields.find(_.name.equalsIgnoreCase(n)).getOrElse(
+            throw new IllegalArgumentException(
+              s"MERGE assignment target '$n' is not a column of the table " +
+                s"(columns: ${mergedSchema.fieldNames.mkString(", ")})"))).name
+        def canonical(cl: MergeClause): MergeClause = cl match {
+          case Update(as, c) => Update(as.map { case (k, ve) => canon(k) -> ve }, c)
+          case Insert(as, c) => Insert(as.map { case (k, ve) => canon(k) -> ve }, c)
+          case other => other
         }
-      }
-      def branchVal(cls: Seq[MergeClause], idx: Column, default: Column,
-          c: String): Column =
-        cls.zipWithIndex.foldRight(default) { case ((cl, i), els) =>
+        val (mCl, iCl, bCl) = (matched.map(canonical), notMatched.map(canonical),
+          notMatchedBySource.map(canonical))
+
+        // Side-presence markers survive the outer join where a null business
+        // key would lie about its side (a target row with a null key is
+        // present, merely unmatchable).
+        val tp = "__graft_t_present"; val sp = "__graft_s_present"
+        val t = alignTo(readCommit(prev), mergedSchema)
+          .withColumn(tp, lit(true)).alias(targetAlias)
+        // A null source key can never equi-match and Delta's NOT MATCHED
+        // branch still sees it (vacuously unmatched) — keep such rows.
+        val s = source.withColumn(sp, lit(true)).alias(sourceAlias)
+        val equi = keys.map(k =>
+          col(s"$targetAlias.$k") === col(s"$sourceAlias.$k")).reduce(_ && _)
+        val onCond = onExtra.map(equi && _).getOrElse(equi)
+        val joined = t.join(s, onCond, "full_outer")
+        val tPresent = col(s"$targetAlias.$tp").isNotNull
+        val sPresent = col(s"$sourceAlias.$sp").isNotNull
+
+        def condOf(cl: MergeClause): Column =
+          cl.condition.map(c => coalesce(c, lit(false))).getOrElse(lit(true))
+        // First-true clause index per branch; -1 = no clause claims the row.
+        def firstIdx(cls: Seq[MergeClause]): Column =
+          cls.zipWithIndex.foldRight(lit(-1): Column) { case ((cl, i), els) =>
+            when(condOf(cl), lit(i)).otherwise(els)
+          }
+        val mIdx = firstIdx(mCl); val iIdx = firstIdx(iCl); val bIdx = firstIdx(bCl)
+
+        // The value column `c` takes under clause `cl` (post-image).
+        def clauseVal(cl: MergeClause, c: String): Column = {
+          val f = fieldOf(c)
           cl match {
-            case _: Delete => els // deleted rows are filtered out below
-            case _ => when(idx === i, clauseVal(cl, c)).otherwise(els)
+            // Source-column presence checks are case-insensitive; the alias
+            // reference itself resolves case-insensitively in analysis.
+            case _: UpdateAll =>
+              if (sourceCols.contains(c.toLowerCase))
+                col(s"$sourceAlias.$c").cast(f.dataType)
+              else col(s"$targetAlias.$c")
+            case Update(as, _) => as.get(c).map(_.cast(f.dataType))
+              .getOrElse(col(s"$targetAlias.$c"))
+            case _: InsertAll =>
+              if (sourceCols.contains(c.toLowerCase))
+                col(s"$sourceAlias.$c").cast(f.dataType)
+              else lit(null).cast(f.dataType)
+            case Insert(as, _) => as.get(c).map(_.cast(f.dataType))
+              .getOrElse(lit(null).cast(f.dataType))
+            case _: Delete => lit(null).cast(f.dataType) // row never materializes
           }
         }
-      def outVal(c: String): Column =
-        when(tPresent && sPresent, branchVal(mCl, mIdx, col(s"$targetAlias.$c"), c))
-          .when(tPresent && !sPresent, branchVal(bCl, bIdx, col(s"$targetAlias.$c"), c))
-          .otherwise(branchVal(iCl, iIdx, lit(null).cast(fieldOf(c).dataType), c))
-          .as(c)
-      def deleteIdxs(cls: Seq[MergeClause]): Seq[Int] =
-        cls.zipWithIndex.collect { case (_: Delete, i) => i }
-      def isDeleted(cls: Seq[MergeClause], idx: Column): Column =
-        deleteIdxs(cls).map(idx === _).reduceOption(_ || _).getOrElse(lit(false))
-      val keep =
-        when(tPresent && sPresent, !isDeleted(mCl, mIdx))
-          .when(tPresent && !sPresent, !isDeleted(bCl, bIdx))
-          .otherwise(iIdx >= 0) // source-only rows exist only via INSERT
-
-      val outCols = mergedSchema.fieldNames.toSeq
-      val snapshot0 = joined.filter(keep).select(outCols.map(outVal): _*)
-      val genSpecs = generatedSpecs(prev.properties)
-      val idSpecs = identitySpecs(prev.properties)
-      val idHwm = identityHwms(prev.properties, idSpecs)
-      val regenerated = genSpecs.foldLeft(snapshot0) { case (d, (n, e)) =>
-        d.withColumn(n, expr(e)) }
-      val snapshot = fillIdentity(regenerated, idSpecs, idHwm)
-      enforceConstraints(snapshot, Some(prev), "MERGE")
-      val dir = writeData(snapshot, v)
-
-      // CDF: one pass over the same join; unmatched/unclaimed rows yield a
-      // null array which explode drops.
-      def img(cl: Option[MergeClause], side: String, ct: String): Column = {
-        val cols = cl match {
-          case Some(c) => outCols.map(n => clauseVal(c, n).as(n))
-          case None => outCols.map(n => col(s"$side.$n").as(n))
-        }
-        struct(cols :+ lit(ct).as("_change_type"): _*)
-      }
-      def branchChanges(cls: Seq[MergeClause], idx: Column,
-          guard: Column): Seq[(Column, Column)] =
-        cls.zipWithIndex.map { case (cl, i) =>
-          val hit = guard && idx === i
-          cl match {
-            case _: Delete => hit -> array(img(None, targetAlias, "delete"))
-            case _: Insert | _: InsertAll =>
-              hit -> array(img(Some(cl), sourceAlias, "insert"))
-            case _ => hit -> array(
-              img(None, targetAlias, "update_preimage"),
-              img(Some(cl), targetAlias, "update_postimage"))
+        def branchVal(cls: Seq[MergeClause], idx: Column, default: Column,
+            c: String): Column =
+          cls.zipWithIndex.foldRight(default) { case ((cl, i), els) =>
+            cl match {
+              case _: Delete => els // deleted rows are filtered out below
+              case _ => when(idx === i, clauseVal(cl, c)).otherwise(els)
+            }
           }
-        }
-      val branches =
-        branchChanges(mCl, mIdx, tPresent && sPresent) ++
-          branchChanges(bCl, bIdx, tPresent && !sPresent) ++
-          branchChanges(iCl, iIdx, !tPresent && sPresent)
-      val changeArr = branches.foldRight(lit(null).cast(
-        org.apache.spark.sql.types.ArrayType(StructType(
-          mergedSchema.fields :+ org.apache.spark.sql.types.StructField(
-            "_change_type", org.apache.spark.sql.types.StringType)))): Column) {
-        case ((cond, arr), els) => when(cond, arr).otherwise(els)
-      }
-      val changeRows0 = joined.select(explode(changeArr).as("c")).select("c.*")
-      val changeRows = genSpecs.foldLeft(changeRows0) { case (d, (n, e)) =>
-        d.withColumn(n, expr(e)) }
-      val (chDir, cdfMetrics) = writeChanges(changeRows, v, tsMs)
+        def outVal(c: String): Column =
+          when(tPresent && sPresent, branchVal(mCl, mIdx, col(s"$targetAlias.$c"), c))
+            .when(tPresent && !sPresent, branchVal(bCl, bIdx, col(s"$targetAlias.$c"), c))
+            .otherwise(branchVal(iCl, iIdx, lit(null).cast(fieldOf(c).dataType), c))
+            .as(c)
+        def deleteIdxs(cls: Seq[MergeClause]): Seq[Int] =
+          cls.zipWithIndex.collect { case (_: Delete, i) => i }
+        def isDeleted(cls: Seq[MergeClause], idx: Column): Column =
+          deleteIdxs(cls).map(idx === _).reduceOption(_ || _).getOrElse(lit(false))
+        val keep =
+          when(tPresent && sPresent, !isDeleted(mCl, mIdx))
+            .when(tPresent && !sPresent, !isDeleted(bCl, bIdx))
+            .otherwise(iIdx >= 0) // source-only rows exist only via INSERT
 
-      val mergeMeta = metaFor(dir)
-      val c = Commit(v, tsMs, "MERGE", Seq(dir), Map(
-        "numTargetRowsInserted" -> cdfMetrics.getOrElse("insert", 0L),
-        "numTargetRowsUpdated" -> cdfMetrics.getOrElse("update_postimage", 0L),
-        "numTargetRowsDeleted" -> cdfMetrics.getOrElse("delete", 0L),
-        "numOutputRows" -> countDir(dir)), mergedSchema.json,
-        partitionCols = prev.partitionCols, changesDir = Some(chDir),
-        dirStats = Map(dir -> mergeMeta.stats),
-        properties = rewriteProps(prev.properties) ++
-          identityHwmUpdates(dir, mergeMeta, idSpecs, idHwm),
-        dirNulls = Map(dir -> mergeMeta.nulls))
-      commitRewrite(c, Seq(dir, chDir))
+        val outCols = mergedSchema.fieldNames.toSeq
+        val snapshot0 = joined.filter(keep).select(outCols.map(outVal): _*)
+        val genSpecs = generatedSpecs(prev.properties)
+        val idSpecs = identitySpecs(prev.properties)
+        val idHwm = identityHwms(prev.properties, idSpecs)
+        val regenerated = genSpecs.foldLeft(snapshot0) { case (d, (n, e)) =>
+          d.withColumn(n, expr(e)) }
+        val snapshot = fillIdentity(regenerated, idSpecs, idHwm)
+        enforceConstraints(snapshot, prev.properties, "MERGE")
+
+        // CDF: one pass over the same join; unmatched/unclaimed rows yield a
+        // null array which explode drops.
+        def img(cl: Option[MergeClause], side: String, ct: String): Column = {
+          val cols = cl match {
+            case Some(c) => outCols.map(n => clauseVal(c, n).as(n))
+            case None => outCols.map(n => col(s"$side.$n").as(n))
+          }
+          struct(cols :+ lit(ct).as("_change_type"): _*)
+        }
+        def branchChanges(cls: Seq[MergeClause], idx: Column,
+            guard: Column): Seq[(Column, Column)] =
+          cls.zipWithIndex.map { case (cl, i) =>
+            val hit = guard && idx === i
+            cl match {
+              case _: Delete => hit -> array(img(None, targetAlias, "delete"))
+              case _: Insert | _: InsertAll =>
+                hit -> array(img(Some(cl), sourceAlias, "insert"))
+              case _ => hit -> array(
+                img(None, targetAlias, "update_preimage"),
+                img(Some(cl), targetAlias, "update_postimage"))
+            }
+          }
+        val branches =
+          branchChanges(mCl, mIdx, tPresent && sPresent) ++
+            branchChanges(bCl, bIdx, tPresent && !sPresent) ++
+            branchChanges(iCl, iIdx, !tPresent && sPresent)
+        val changeArr = branches.foldRight(lit(null).cast(
+          org.apache.spark.sql.types.ArrayType(StructType(
+            mergedSchema.fields :+ org.apache.spark.sql.types.StructField(
+              "_change_type", org.apache.spark.sql.types.StringType)))): Column) {
+          case ((cond, arr), els) => when(cond, arr).otherwise(els)
+        }
+        val changeRows0 = joined.select(explode(changeArr).as("c")).select("c.*")
+        val changeRows = genSpecs.foldLeft(changeRows0) { case (d, (n, e)) =>
+          d.withColumn(n, expr(e)) }
+        rewriteStaged(tx, prev, "MERGE", snapshot, Some(changeRows), a => Map(
+          "numTargetRowsInserted" -> a.changed("insert"),
+          "numTargetRowsUpdated" -> a.changed("update_postimage"),
+          "numTargetRowsDeleted" -> a.changed("delete"))) { (c, dir, meta) =>
+          c.copy(schemaJson = mergedSchema.json, properties = c.properties ++
+            identityHwmUpdates(dir, meta, idSpecs, idHwm))
+        }
+      }.get
     }
 
   /** DELETE by predicate (M3): left-anti rewrite of
     * `delete(col("id").isin(ids))` / `DELETE FROM t WHERE …`
     * (spark_streaming.py:381-386, spark_delta_handler.py:160-169). */
-  /** Delta `delta.appendOnly=true` enforcement: an append-only table
-    * (audit logs, immutable event stores — the reference's audit table is
-    * exactly this shape) refuses every operation that removes or rewrites
-    * existing rows. Appends, schema evolution, OPTIMIZE (dataChange=false
-    * — the same bytes, re-packed) and metadata commits stay allowed,
-    * matching Delta's contract. Checked at the HEAD the operation will
-    * commit against, so flipping the property off first (one metadata
-    * commit) is the documented escape hatch. */
-  private def requireNotAppendOnly(op: String): Unit =
-    if (log.latest().exists(_.properties.get("delta.appendOnly")
-        .exists(_.equalsIgnoreCase("true"))))
-      throw new UnsupportedOperationException(
-        s"$op on $root: the table is append-only (delta.appendOnly=true); " +
-          "UNSET the property first to mutate existing rows")
-
   def delete(cond: Column): Commit = this.synchronized {
-    requireNotAppendOnly("DELETE")
-    val prev = log.latest().getOrElse(throw new NoSuchElementException(s"no table at $root"))
-    val v = prev.version + 1
-    val tsMs = System.currentTimeMillis()
-    val cur = readCommit(prev)
-    val hit = coalesce(cond, lit(false))
-    val dir = writeData(cur.filter(!hit), v)
-    val (chDir, cdfMetrics) = writeChanges(
-      cur.filter(hit).withColumn("_change_type", lit("delete")), v, tsMs)
-    val delMeta = metaFor(dir)
-    val c = Commit(v, tsMs, "DELETE", Seq(dir), Map(
-      "numDeletedRows" -> cdfMetrics.getOrElse("delete", 0L),
-      "numOutputRows" -> countDir(dir)), prev.schemaJson,
-      partitionCols = prev.partitionCols, changesDir = Some(chDir),
-      dirStats = Map(dir -> delMeta.stats),
-      properties = rewriteProps(prev.properties),
-      dirNulls = Map(dir -> delMeta.nulls))
-    commitRewrite(c, Seq(dir, chDir))
+    val tx = new TableTxn(this, s"DELETE of $root", Some("DELETE"))
+    tx.commit() { prev =>
+      val cur = readCommit(prev)
+      val hit = coalesce(cond, lit(false))
+      rewriteStaged(tx, prev, "DELETE", cur.filter(!hit),
+        Some(cur.filter(hit).withColumn("_change_type", lit("delete"))),
+        a => Map("numDeletedRows" -> a.changed("delete")))()
+    }.get
   }
 
   /** DELETE without rewriting any data (merge-on-read — the
@@ -3034,11 +2908,8 @@ final class GraftTable private (
     * behavior — the rebase then aborts with [[ConcurrentWriteException]]
     * iff some concurrently appended row actually matches `cond` (an exact
     * test, reading only the appended dirs). */
-  def deleteMergeOnRead(cond: Column, strict: Boolean = false): Commit = this.synchronized {
-    deleteMergeOnReadFrom(
-      log.latest().getOrElse(throw new NoSuchElementException(s"no table at $root")),
-      cond, strict)
-  }
+  def deleteMergeOnRead(cond: Column, strict: Boolean = false): Commit =
+    mutateWhere(None, positional = false, cond, strict)
 
   /** [[deleteMergeOnRead]] from an explicit snapshot — the REBASE seam.
     * Unlike snapshot rewrites, a merge-on-read delete COMMUTES with
@@ -3046,72 +2917,10 @@ final class GraftTable private (
     * (they did not exist in the computed snapshot) and the tombstone's
     * coverage prefix pins it to exactly the dirs it was computed from —
     * so when only APPENDs won the race, the delete rebases onto the new
-    * head (both writers land) instead of aborting. Any concurrent rewrite
-    * or schema change still aborts with [[ConcurrentWriteException]];
-    * `strict` additionally aborts when appended rows match the predicate
-    * (see [[deleteMergeOnRead]]). */
+    * head (both writers land) instead of aborting ([[mutate]]). */
   private[table] def deleteMergeOnReadFrom(snapshot: Commit, cond: Column,
       strict: Boolean = false): Commit =
-    this.synchronized {
-      val tsMs = System.currentTimeMillis()
-      val cur = readCommit(snapshot) // earlier tombstones applied: no double-count
-      val hit = coalesce(cond, lit(false))
-      val dir = f"tombstones/v${snapshot.version + 1}%05d-${uniqueSuffix()}"
-      toPhysicalDf(cur.filter(hit), colMapOf(snapshot.properties))
-        .write.mode("errorifexists")
-        .parquet(new Path(root, dir).toString)
-      val deleteRows = cur.filter(hit).withColumn("_change_type", lit("delete"))
-      // CDF rows are stamped with the version they ACTUALLY commit at (the
-      // Delta contract): written inside the retry loop at the candidate
-      // head+1, and RE-written on a rebase over concurrent appends — the
-      // first stamp would otherwise claim a version that belongs to the
-      // append that won the race, corrupting readChanges consumers that
-      // key incremental state on _commit_version. Deterministic re-write:
-      // deleteRows reads only the snapshot's immutable dirs. Orphaned
-      // candidate dirs are unreferenced (unique suffix + recorded name)
-      // and deleted eagerly.
-      var chDir: String = null
-      var chVersion = -1L
-      var cdfMetrics = Map.empty[String, Long]
-      def rollback(): Unit =
-        (Seq(dir) ++ Option(chDir)).foreach(d => fs.delete(new Path(root, d), true))
-      var attempts = 0
-      while (attempts <= MaxCommitRetries) {
-        val head = log.latest().getOrElse(snapshot)
-        val appendOnlyRace = isAppendOnlyRace(snapshot, head)
-        if (!appendOnlyRace) {
-          rollback()
-          throw new ConcurrentWriteException(
-            s"merge-on-read delete of $root computed from stale version " +
-              s"${snapshot.version}; a non-append commit intervened", null)
-        }
-        if (strict && appendedMatches(snapshot, head, hit)) {
-          rollback()
-          throw new ConcurrentWriteException(
-            s"strict merge-on-read delete of $root: a concurrent append " +
-              s"after version ${snapshot.version} contains predicate-matching rows", null)
-        }
-        if (chVersion != head.version + 1) {
-          if (chDir != null) fs.delete(new Path(root, chDir), true)
-          val (d, m) = writeChanges(deleteRows, head.version + 1, tsMs)
-          chDir = d; cdfMetrics = m; chVersion = head.version + 1
-        }
-        val c = Commit(head.version + 1, tsMs, "DELETE", head.dataDirs, Map(
-          "numDeletedRows" -> cdfMetrics.getOrElse("delete", 0L),
-          "mergeOnRead" -> 1L), snapshot.schemaJson,
-          partitionCols = head.partitionCols, dirStats = head.dirStats,
-          changesDir = Some(chDir),
-          properties = head.properties +
-            (TombstoneCoverPrefix + dir -> snapshot.dataDirs.length.toString),
-          tombstoneDirs = head.tombstoneDirs :+ dir,
-          dvDirs = head.dvDirs, dirNulls = head.dirNulls)
-        try { log.commit(c); return c }
-        catch { case _: IllegalStateException => attempts += 1 }
-      }
-      rollback()
-      throw new ConcurrentWriteException(
-        s"merge-on-read delete of $root lost $MaxCommitRetries version races", null)
-    }
+    mutateWhere(Some(snapshot), positional = false, cond, strict)
 
   /** DELETE by ROW POSITION — Delta deletion-vector parity (the modern
     * form of the reference's delete path,
@@ -3130,18 +2939,12 @@ final class GraftTable private (
     * concurrent rewrites, `strict = true` aborts when appended rows match
     * the predicate. CDF delete rows are stamped with the final commit
     * version. */
-  def deletePositional(cond: Column, strict: Boolean = false): Commit = this.synchronized {
-    requireNotAppendOnly("DELETE")
-    deletePositionalFrom(
-      log.latest().getOrElse(throw new NoSuchElementException(s"no table at $root")),
-      cond, strict)
-  }
+  def deletePositional(cond: Column, strict: Boolean = false): Commit =
+    mutateWhere(None, positional = true, cond, strict)
 
   private[table] def deletePositionalFrom(snapshot: Commit, cond: Column,
-      strict: Boolean = false, restarts: Int = 0): Commit = {
-    val hit = coalesce(cond, lit(false))
-    deletePositionalCore(snapshot, _.filter(hit), if (strict) Some(hit) else None, restarts)
-  }
+      strict: Boolean = false): Commit =
+    mutateWhere(Some(snapshot), positional = true, cond, strict)
 
   /** Keyed positional delete — [[deleteKeys]] at deletion-vector cost: the
     * rows to drop come from a distributed SEMI-join against an arbitrarily
@@ -3149,72 +2952,95 @@ final class GraftTable private (
     * but only their positions are written. Deleting a million keys from a
     * 100 TB table costs one semi-join and megabytes of positions, not a
     * table rewrite. Same restart/abort isolation as [[deletePositional]]. */
-  def deleteKeysPositional(keys: DataFrame, key: String): Commit = this.synchronized {
+  def deleteKeysPositional(keys: DataFrame, key: String): Commit = {
     val keyDf = keys.select(col(key)).distinct()
-    deletePositionalCore(
-      log.latest().getOrElse(throw new NoSuchElementException(s"no table at $root")),
-      cur => cur.join(keyDf, Seq(key), "left_semi"), strictHit = None)
+    mutate(None, positional = true, _.join(keyDf, Seq(key), "left_semi"), None)
   }
 
-  private def deletePositionalCore(snapshot: Commit,
+  private def mutateWhere(from: Option[Commit], positional: Boolean,
+      cond: Column, strict: Boolean,
+      assignments: Option[Map[String, Column]] = None): Commit = {
+    val hit = coalesce(cond, lit(false))
+    mutate(from, positional, _.filter(hit), Option.when(strict)(hit), assignments)
+  }
+
+  /** The four merge-on-read / positional mutations (DELETE, or UPDATE with
+    * `assignments`) of the rows `hitsOf` selects: the rows are marked
+    * deleted — by value tombstone, or by (file, row_index) position when
+    * `positional` — and an UPDATE appends their updated copies as a new
+    * data dir, all in ONE commit. Such a mutation commutes with appends:
+    * it rebases when only APPENDs intervened (`strictHit`: unless an
+    * appended row matches it), a positional one restarts from the new
+    * head when only appends and other merge-on-read mutations did
+    * (recomputation drops rows those already deleted, so the two commute
+    * — Delta's default aborts here; the predicate, not a precomputed row
+    * set, is this operation's identity), and anything else refuses. CDF
+    * rows are stamped with the final commit version. */
+  private def mutate(from: Option[Commit], positional: Boolean,
       hitsOf: DataFrame => DataFrame, strictHit: Option[Column],
-      restarts: Int = 0): Commit =
-    this.synchronized {
-      val tsMs = System.currentTimeMillis()
-      // prior DVs AND tombstones applied: a position is never recorded twice
-      val cur = readCommitWithPos(snapshot)
-      val hits = hitsOf(cur)
-      val dvDir = dvDirName(snapshot.version + 1)
-      hits.select(col(DvFileCol).as("file"), col(DvPosCol).as("pos"))
-        .write.mode("errorifexists").parquet(new Path(root, dvDir).toString)
-      val deleteRows = hits.drop(DvFileCol, DvPosCol)
-        .withColumn("_change_type", lit("delete"))
-      var chDir: String = null
-      var chVersion = -1L
-      var cdfMetrics = Map.empty[String, Long]
-      def rollback(): Unit =
-        (Seq(dvDir) ++ Option(chDir)).foreach(d => fs.delete(new Path(root, d), true))
-      var attempts = 0
-      while (attempts <= MaxCommitRetries) {
-        val head = log.latest().getOrElse(snapshot)
-        val appendOnlyRace = isAppendOnlyRace(snapshot, head)
-        if (!appendOnlyRace) {
-          rollback()
-          // Concurrent MoR/positional mutations commute up to
-          // recomputation — restart this delete from the new head
-          // (bounded); anything that rewrote files still aborts.
-          if (isMorOnlyRace(snapshot, head) && restarts < MaxCommitRetries)
-            return deletePositionalCore(head, hitsOf, strictHit, restarts + 1)
-          throw new ConcurrentWriteException(
-            s"positional delete of $root computed from stale version " +
-              s"${snapshot.version}; a non-append commit intervened", null)
+      assignments: Option[Map[String, Column]] = None): Commit = this.synchronized {
+    val op = if (assignments.isEmpty) "DELETE" else "UPDATE"
+    val what = s"${if (positional) "positional" else "merge-on-read"} " +
+      s"${op.toLowerCase} of $root"
+    val tx = new TableTxn(this, what, Some(op))
+    tx.commit(from) { snap =>
+      val v = snap.version + 1
+      // prior DVs AND tombstones applied: a row is never marked twice
+      val hits = hitsOf(if (positional) readCommitWithPos(snap) else readCommit(snap))
+      val pre = if (positional) hits.drop(DvFileCol, DvPosCol) else hits
+      val post = assignments.map(as => pre.select(pre.columns.toSeq.map { c =>
+        as.get(c).map(e => e.as(c)).getOrElse(col(c))
+      }: _*))
+      post.foreach(enforceConstraints(_, snap.properties, "UPDATE"))
+      val marks =
+        if (positional) {
+          val dv = tx.stage(dvDirName(v))
+          hits.select(col(DvFileCol).as("file"), col(DvPosCol).as("pos"))
+            .write.mode("errorifexists").parquet(new Path(root, dv).toString)
+          dv
+        } else {
+          val tomb = tx.stage(f"tombstones/v$v%05d-${uniqueSuffix()}")
+          toPhysicalDf(pre, colMapOf(snap.properties))
+            .write.mode("errorifexists").parquet(new Path(root, tomb).toString)
+          tomb
         }
-        if (strictHit.exists(h => appendedMatches(snapshot, head, h))) {
-          rollback()
-          throw new ConcurrentWriteException(
-            s"strict positional delete of $root: a concurrent append " +
-              s"after version ${snapshot.version} contains predicate-matching rows", null)
-        }
-        if (chVersion != head.version + 1) {
-          if (chDir != null) fs.delete(new Path(root, chDir), true)
-          val (d, m) = writeChanges(deleteRows, head.version + 1, tsMs)
-          chDir = d; cdfMetrics = m; chVersion = head.version + 1
-        }
-        val c = Commit(head.version + 1, tsMs, "DELETE", head.dataDirs, Map(
-          "numDeletedRows" -> cdfMetrics.getOrElse("delete", 0L),
-          "mergeOnRead" -> 1L, "positionalDelete" -> 1L), snapshot.schemaJson,
-          partitionCols = head.partitionCols, dirStats = head.dirStats,
-          changesDir = Some(chDir),
-          properties = head.properties,
-          tombstoneDirs = head.tombstoneDirs,
-          dvDirs = head.dvDirs :+ dvDir, dirNulls = head.dirNulls)
-        try { log.commit(c); return c }
-        catch { case _: IllegalStateException => attempts += 1 }
+      val data = post.map(writeData(tx, _, v, snap.partitionCols))
+      val meta = data.map(d => d -> metaFor(d)).toMap
+      val changes = post match {
+        case None => pre.withColumn("_change_type", lit("delete"))
+        case Some(p) => pre.withColumn("_change_type", lit("update_preimage"))
+          .unionByName(p.withColumn("_change_type", lit("update_postimage")))
       }
-      rollback()
-      throw new ConcurrentWriteException(
-        s"positional delete of $root lost $MaxCommitRetries version races", null)
-    }
+      Staged(
+        conflict = head =>
+          if (!isAppendOnlyRace(snap, head))
+            if (positional && isMorOnlyRace(snap, head)) Restart
+            else Refuse(s"$what computed from stale version ${snap.version}; " +
+              "a non-append commit intervened")
+          else if (strictHit.exists(appendedMatches(snap, head, _)))
+            Refuse(s"strict $what: a concurrent append after version " +
+              s"${snap.version} contains predicate-matching rows")
+          else Rebase,
+        build = { a =>
+          val h = a.head
+          Commit(a.version, a.tsMs, op, h.dataDirs ++ data,
+            Map(if (post.isEmpty) "numDeletedRows" -> a.changed("delete")
+              else "numUpdatedRows" -> a.changed("update_postimage"),
+              "mergeOnRead" -> 1L) ++ Option.when(positional)("positionalDelete" -> 1L),
+            snap.schemaJson,
+            partitionCols = h.partitionCols,
+            dirStats = h.dirStats ++ meta.map { case (d, m) => d -> m.stats },
+            changesDir = a.changesDir,
+            // a tombstone covers exactly the dirs it was computed from
+            properties = h.properties ++ Option.when(!positional)(
+              TombstoneCoverPrefix + marks -> snap.dataDirs.length.toString),
+            tombstoneDirs = h.tombstoneDirs ++ Option.when(!positional)(marks),
+            dvDirs = h.dvDirs ++ Option.when(positional)(marks),
+            dirNulls = h.dirNulls ++ meta.map { case (d, m) => d -> m.nulls })
+        },
+        changes = Some(changes))
+    }.get
+  }
 
   /** Materialize ONLY the deletion vectors — Delta's `REORG TABLE …
     * APPLY (PURGE)`: rewrite just the data dirs whose files carry
@@ -3231,31 +3057,24 @@ final class GraftTable private (
       if (prev.dvDirs.isEmpty && prev.tombstoneDirs.isEmpty) return prev
       // value tombstones (with or without DVs): a full compaction folds both
       if (prev.tombstoneDirs.nonEmpty) return optimize(targetFileBytes)
-      val v = prev.version + 1
-      val tsMs = System.currentTimeMillis()
-      // A dir is touched iff some recorded file path lies under it — dir
-      // names carry a uniquifying suffix, so the substring match cannot
-      // cross dirs. DISTINCT file paths (bounded by the table's file
-      // count, not the position count) are collected, never the entries —
-      // a billion-position DV still yields a small file list.
-      val files = spark.read
-        .parquet(prev.dvDirs.map(d => new Path(root, d).toString): _*)
-        .select("file").distinct().collect().map(_.getString(0)).toSeq
-      val touched = prev.dataDirs.filter(d => files.exists(_.contains("/" + d + "/")))
-      val untouched = prev.dataDirs.filterNot(touched.contains)
-      val cleaned = readCommitInternal(prev.copy(dataDirs = touched), withPos = false)
-      val dir = writeData(cleaned, v, prev.partitionCols)
-      val matMeta = metaFor(dir)
-      val c = Commit(v, tsMs, "OPTIMIZE", untouched :+ dir, Map(
-        "numRewrittenDirs" -> touched.size.toLong,
-        "numOutputRows" -> countDir(dir)), prev.schemaJson,
-        partitionCols = prev.partitionCols,
-        dirStats = prev.dirStats.view.filterKeys(untouched.contains).toMap +
-          (dir -> matMeta.stats),
-        properties = rewriteProps(prev.properties),
-        dirNulls = prev.dirNulls.view.filterKeys(untouched.contains).toMap +
-          (dir -> matMeta.nulls))
-      commitRewrite(c, Seq(dir))
+      val tx = new TableTxn(this, s"OPTIMIZE of $root")
+      tx.commit(Some(prev)) { prev =>
+        // A dir is touched iff some recorded file path lies under it — dir
+        // names carry a uniquifying suffix, so the substring match cannot
+        // cross dirs. DISTINCT file paths (bounded by the table's file
+        // count, not the position count) are collected, never the entries —
+        // a billion-position DV still yields a small file list.
+        val files = spark.read
+          .parquet(prev.dvDirs.map(d => new Path(root, d).toString): _*)
+          .select("file").distinct().collect().map(_.getString(0)).toSeq
+        val touched = prev.dataDirs.filter(d => files.exists(_.contains("/" + d + "/")))
+        val untouched = prev.dataDirs.filterNot(touched.contains)
+        rewriteStaged(tx, prev, "OPTIMIZE",
+          readCommitInternal(prev.copy(dataDirs = touched), withPos = false),
+          metrics = _ => Map("numRewrittenDirs" -> touched.size.toLong)) { (c, _, _) =>
+          carrying(c, prev, untouched)
+        }
+      }.get
     }
 
   /** UPDATE by ROW POSITION — [[deletePositional]]'s update companion and
@@ -3267,79 +3086,11 @@ final class GraftTable private (
     * rebases over appends, aborts on rewrites, optional `strict`. */
   def updatePositional(cond: Column, assignments: Map[String, Column],
       strict: Boolean = false): Commit =
-    this.synchronized {
-      requireNotAppendOnly("UPDATE")
-      updatePositionalFrom(
-        log.latest().getOrElse(throw new NoSuchElementException(s"no table at $root")),
-        cond, assignments, strict)
-    }
+    mutateWhere(None, positional = true, cond, strict, Some(assignments))
 
   private[table] def updatePositionalFrom(snapshot: Commit, cond: Column,
-      assignments: Map[String, Column], strict: Boolean = false,
-      restarts: Int = 0): Commit =
-    this.synchronized {
-      val tsMs = System.currentTimeMillis()
-      val cur = readCommitWithPos(snapshot)
-      val hit = coalesce(cond, lit(false))
-      val preWithPos = cur.filter(hit)
-      val pre = preWithPos.drop(DvFileCol, DvPosCol)
-      val post = pre.select(pre.columns.toSeq.map { c =>
-        assignments.get(c).map(e => e.as(c)).getOrElse(col(c))
-      }: _*)
-      enforceConstraints(post, Some(snapshot), "UPDATE")
-      val dvDir = dvDirName(snapshot.version + 1)
-      preWithPos.select(col(DvFileCol).as("file"), col(DvPosCol).as("pos"))
-        .write.mode("errorifexists").parquet(new Path(root, dvDir).toString)
-      val dataDir = writeData(post, snapshot.version + 1, snapshot.partitionCols)
-      val puMeta = metaFor(dataDir)
-      val changeRows = pre.withColumn("_change_type", lit("update_preimage"))
-        .unionByName(post.withColumn("_change_type", lit("update_postimage")))
-      var chDir: String = null
-      var chVersion = -1L
-      var cdfMetrics = Map.empty[String, Long]
-      def rollback(): Unit =
-        (Seq(dvDir, dataDir) ++ Option(chDir))
-          .foreach(d => fs.delete(new Path(root, d), true))
-      var attempts = 0
-      while (attempts <= MaxCommitRetries) {
-        val head = log.latest().getOrElse(snapshot)
-        val appendOnlyRace = isAppendOnlyRace(snapshot, head)
-        if (!appendOnlyRace) {
-          rollback()
-          if (isMorOnlyRace(snapshot, head) && restarts < MaxCommitRetries)
-            return updatePositionalFrom(head, cond, assignments, strict, restarts + 1)
-          throw new ConcurrentWriteException(
-            s"positional update of $root computed from stale version " +
-              s"${snapshot.version}; a non-append commit intervened", null)
-        }
-        if (strict && appendedMatches(snapshot, head, hit)) {
-          rollback()
-          throw new ConcurrentWriteException(
-            s"strict positional update of $root: a concurrent append " +
-              s"after version ${snapshot.version} contains predicate-matching rows", null)
-        }
-        if (chVersion != head.version + 1) {
-          if (chDir != null) fs.delete(new Path(root, chDir), true)
-          val (d, m) = writeChanges(changeRows, head.version + 1, tsMs)
-          chDir = d; cdfMetrics = m; chVersion = head.version + 1
-        }
-        val c = Commit(head.version + 1, tsMs, "UPDATE", head.dataDirs :+ dataDir, Map(
-          "numUpdatedRows" -> cdfMetrics.getOrElse("update_postimage", 0L),
-          "mergeOnRead" -> 1L, "positionalDelete" -> 1L), snapshot.schemaJson,
-          partitionCols = head.partitionCols,
-          dirStats = head.dirStats + (dataDir -> puMeta.stats),
-          changesDir = Some(chDir),
-          properties = head.properties,
-          tombstoneDirs = head.tombstoneDirs,
-          dvDirs = head.dvDirs :+ dvDir,
-          dirNulls = head.dirNulls + (dataDir -> puMeta.nulls))
-        try { log.commit(c); return c }
-        catch { case _: IllegalStateException => attempts += 1 }
-      }
-      rollback()
-      throw new ConcurrentWriteException(
-        s"positional update of $root lost $MaxCommitRetries version races", null)
-    }
+      assignments: Map[String, Column], strict: Boolean = false): Commit =
+    mutateWhere(Some(snapshot), positional = true, cond, strict, Some(assignments))
 
   // ------------------------------------------------- bloom point-lookup index
 
@@ -3525,136 +3276,49 @@ final class GraftTable private (
     * instead of the whole table. Any later rewrite materializes. */
   def updateMergeOnRead(cond: Column, assignments: Map[String, Column],
       strict: Boolean = false): Commit =
-    this.synchronized {
-      updateMergeOnReadFrom(
-        log.latest().getOrElse(throw new NoSuchElementException(s"no table at $root")),
-        cond, assignments, strict)
-    }
+    mutateWhere(None, positional = false, cond, strict, Some(assignments))
 
   /** [[updateMergeOnRead]] from an explicit snapshot — rebases over
     * concurrent APPENDs exactly like [[deleteMergeOnReadFrom]] (the
     * tombstone's coverage pins it to the computed-from dirs; the updated
-    * copies land as a fresh dir after any concurrently appended ones);
-    * non-append races and schema changes abort with rollback. */
+    * copies land as a fresh dir after any concurrently appended ones). */
   private[table] def updateMergeOnReadFrom(snapshot: Commit, cond: Column,
       assignments: Map[String, Column], strict: Boolean = false): Commit =
-    this.synchronized {
-      val tsMs = System.currentTimeMillis()
-      val cur = readCommit(snapshot)
-      val hit = coalesce(cond, lit(false))
-      val pre = cur.filter(hit)
-      val post = pre.select(cur.columns.toSeq.map { c =>
-        assignments.get(c).map(e => e.as(c)).getOrElse(col(c))
-      }: _*)
-      enforceConstraints(post, Some(snapshot), "UPDATE")
-      val tsDir = f"tombstones/v${snapshot.version + 1}%05d-${uniqueSuffix()}"
-      toPhysicalDf(pre, colMapOf(snapshot.properties))
-        .write.mode("errorifexists").parquet(new Path(root, tsDir).toString)
-      val dataDir = writeData(post, snapshot.version + 1, snapshot.partitionCols)
-      val muMeta = metaFor(dataDir)
-      // CDF stamped with the ACTUAL commit version — written inside the
-      // retry loop and re-written on rebase, same contract as
-      // [[deleteMergeOnReadFrom]] (see the comment there).
-      val changeRows = pre.withColumn("_change_type", lit("update_preimage"))
-        .unionByName(post.withColumn("_change_type", lit("update_postimage")))
-      var chDir: String = null
-      var chVersion = -1L
-      var cdfMetrics = Map.empty[String, Long]
-      def rollback(): Unit =
-        (Seq(tsDir, dataDir) ++ Option(chDir))
-          .foreach(d => fs.delete(new Path(root, d), true))
-      var attempts = 0
-      while (attempts <= MaxCommitRetries) {
-        val head = log.latest().getOrElse(snapshot)
-        val appendOnlyRace = isAppendOnlyRace(snapshot, head)
-        if (!appendOnlyRace) {
-          rollback()
-          throw new ConcurrentWriteException(
-            s"merge-on-read update of $root computed from stale version " +
-              s"${snapshot.version}; a non-append commit intervened", null)
-        }
-        if (strict && appendedMatches(snapshot, head, hit)) {
-          rollback()
-          throw new ConcurrentWriteException(
-            s"strict merge-on-read update of $root: a concurrent append " +
-              s"after version ${snapshot.version} contains predicate-matching rows", null)
-        }
-        if (chVersion != head.version + 1) {
-          if (chDir != null) fs.delete(new Path(root, chDir), true)
-          val (d, m) = writeChanges(changeRows, head.version + 1, tsMs)
-          chDir = d; cdfMetrics = m; chVersion = head.version + 1
-        }
-        val c = Commit(head.version + 1, tsMs, "UPDATE", head.dataDirs :+ dataDir, Map(
-          "numUpdatedRows" -> cdfMetrics.getOrElse("update_postimage", 0L),
-          "mergeOnRead" -> 1L), snapshot.schemaJson,
-          partitionCols = head.partitionCols,
-          dirStats = head.dirStats + (dataDir -> muMeta.stats),
-          changesDir = Some(chDir),
-          properties = head.properties +
-            (TombstoneCoverPrefix + tsDir -> snapshot.dataDirs.length.toString),
-          tombstoneDirs = head.tombstoneDirs :+ tsDir,
-          dvDirs = head.dvDirs,
-          dirNulls = head.dirNulls + (dataDir -> muMeta.nulls))
-        try { log.commit(c); return c }
-        catch { case _: IllegalStateException => attempts += 1 }
-      }
-      rollback()
-      throw new ConcurrentWriteException(
-        s"merge-on-read update of $root lost $MaxCommitRetries version races", null)
-    }
+    mutateWhere(Some(snapshot), positional = false, cond, strict, Some(assignments))
 
   /** Keyed delete as a distributed anti-join — the scale-safe form of the
     * reference's collect-ids-then-isin (spark_streaming.py:381-386). */
   def deleteKeys(keys: DataFrame, key: String): Commit = this.synchronized {
-    val prev = log.latest().getOrElse(throw new NoSuchElementException(s"no table at $root"))
-    val v = prev.version + 1
-    val tsMs = System.currentTimeMillis()
-    val cur = readCommit(prev)
-    val keyDf = keys.select(col(key)).distinct()
-    val dir = writeData(cur.join(keyDf, Seq(key), "left_anti"), v)
-    val (chDir, cdfMetrics) = writeChanges(
-      cur.join(keyDf, Seq(key), "left_semi").withColumn("_change_type", lit("delete")),
-      v, tsMs)
-    val dkMeta = metaFor(dir)
-    val c = Commit(v, tsMs, "DELETE", Seq(dir), Map(
-      "numDeletedRows" -> cdfMetrics.getOrElse("delete", 0L),
-      "numOutputRows" -> countDir(dir)), prev.schemaJson,
-      partitionCols = prev.partitionCols, changesDir = Some(chDir),
-      dirStats = Map(dir -> dkMeta.stats),
-      properties = rewriteProps(prev.properties),
-      dirNulls = Map(dir -> dkMeta.nulls))
-    commitRewrite(c, Seq(dir, chDir))
+    val tx = new TableTxn(this, s"DELETE of $root", Some("DELETE"))
+    tx.commit() { prev =>
+      val cur = readCommit(prev)
+      val keyDf = keys.select(col(key)).distinct()
+      rewriteStaged(tx, prev, "DELETE", cur.join(keyDf, Seq(key), "left_anti"),
+        Some(cur.join(keyDf, Seq(key), "left_semi").withColumn("_change_type", lit("delete"))),
+        a => Map("numDeletedRows" -> a.changed("delete")))()
+    }.get
   }
 
   /** UPDATE … SET assignments WHERE cond, as a projection rewrite. */
   def update(cond: Column, assignments: Map[String, Column]): Commit = this.synchronized {
-    requireNotAppendOnly("UPDATE")
-    val prev = log.latest().getOrElse(throw new NoSuchElementException(s"no table at $root"))
-    val v = prev.version + 1
-    val tsMs = System.currentTimeMillis()
-    val cur = readCommit(prev)
-    val hit = coalesce(cond, lit(false))
-    val updated = cur.columns.toSeq.map { c =>
-      assignments.get(c) match {
-        case Some(e) => when(hit, e).otherwise(col(c)).as(c)
-        case None => col(c)
+    val tx = new TableTxn(this, s"UPDATE of $root", Some("UPDATE"))
+    tx.commit() { prev =>
+      val cur = readCommit(prev)
+      val hit = coalesce(cond, lit(false))
+      val updated = cur.columns.toSeq.map { c =>
+        assignments.get(c) match {
+          case Some(e) => when(hit, e).otherwise(col(c)).as(c)
+          case None => col(c)
+        }
       }
-    }
-    enforceConstraints(cur.select(updated: _*), Some(prev), "UPDATE")
-    val dir = writeData(cur.select(updated: _*), v)
-    val pre = cur.filter(hit).withColumn("_change_type", lit("update_preimage"))
-    val post = cur.filter(hit).select(updated: _*)
-      .withColumn("_change_type", lit("update_postimage"))
-    val (chDir, cdfMetrics) = writeChanges(pre.unionByName(post), v, tsMs)
-    val updMeta = metaFor(dir)
-    val c = Commit(v, tsMs, "UPDATE", Seq(dir), Map(
-      "numUpdatedRows" -> cdfMetrics.getOrElse("update_postimage", 0L),
-      "numOutputRows" -> countDir(dir)), prev.schemaJson,
-      partitionCols = prev.partitionCols, changesDir = Some(chDir),
-      dirStats = Map(dir -> updMeta.stats),
-      properties = rewriteProps(prev.properties),
-      dirNulls = Map(dir -> updMeta.nulls))
-    commitRewrite(c, Seq(dir, chDir))
+      enforceConstraints(cur.select(updated: _*), prev.properties, "UPDATE")
+      val pre = cur.filter(hit).withColumn("_change_type", lit("update_preimage"))
+      val post = cur.filter(hit).select(updated: _*)
+        .withColumn("_change_type", lit("update_postimage"))
+      rewriteStaged(tx, prev, "UPDATE", cur.select(updated: _*),
+        Some(pre.unionByName(post)),
+        a => Map("numUpdatedRows" -> a.changed("update_postimage")))()
+    }.get
   }
 
   /** OPTIMIZE bin-pack compaction (S19, spark_delta_handler.py:282-289):
@@ -3682,23 +3346,23 @@ final class GraftTable private (
     * scenarios — same contract as the merge-on-read `*From` variants). */
   private[table] def optimizeFrom(prev: Commit, targetFileBytes: Long,
       zorderBy: Seq[String]): Commit = {
-    val v = prev.version + 1
-    val totalBytes = prev.dataDirs.map { d =>
-      fs.getContentSummary(new Path(root, d)).getLength
-    }.sum
-    val numFiles = math.max(1, math.ceil(totalBytes.toDouble / targetFileBytes).toInt)
-    // A row-tracked compaction MATERIALIZES the ids it read into the
-    // rewritten files (see [[RowIdCol]]) — the one place ids must become
-    // physical, because the new layout matches no historical derivation.
-    val snapshot =
-      if (rowTrackingOn(prev)) readWithRowIdsOf(prev) else readCommit(prev)
-    val clustered =
-      if (zorderBy.isEmpty) snapshot.repartition(numFiles)
-      else zorderCluster(snapshot, zorderBy, numFiles)
-    val dir = writeData(clustered, v, prev.partitionCols, rebalance = false)
-    val optMeta = metaFor(dir)
-    commitOptimizeRebased(prev, prev.dataDirs, dir, optMeta,
-      Map("numFiles" -> numFiles.toLong, "numBytes" -> totalBytes))
+    val tx = new TableTxn(this, s"OPTIMIZE of $root")
+    tx.commit(Some(prev)) { prev =>
+      val totalBytes = prev.dataDirs.map { d =>
+        fs.getContentSummary(new Path(root, d)).getLength
+      }.sum
+      val numFiles = math.max(1, math.ceil(totalBytes.toDouble / targetFileBytes).toInt)
+      // A row-tracked compaction MATERIALIZES the ids it read into the
+      // rewritten files (see [[RowIdCol]]) — the one place ids must become
+      // physical, because the new layout matches no historical derivation.
+      val snapshot =
+        if (rowTrackingOn(prev)) readWithRowIdsOf(prev) else readCommit(prev)
+      val clustered =
+        if (zorderBy.isEmpty) snapshot.repartition(numFiles)
+        else zorderCluster(snapshot, zorderBy, numFiles)
+      compactStaged(tx, prev, prev.dataDirs, clustered,
+        Map("numFiles" -> numFiles.toLong, "numBytes" -> totalBytes))
+    }.get
   }
 
   /** REORG TABLE … APPLY (PURGE) (Delta parity): physically rewrite the
@@ -3714,31 +3378,28 @@ final class GraftTable private (
     * is the deliberate, scheduled cost you pay once to reclaim storage —
     * never on the read path. */
   def reorg(targetFileBytes: Long = 128L * 1024 * 1024): Commit = this.synchronized {
-    val prev = log.latest().getOrElse(
-      throw new NoSuchElementException(s"no table at $root"))
-    val v = prev.version + 1
-    val tsMs = System.currentTimeMillis()
+    val tx = new TableTxn(this, s"REORG of $root")
+    tx.commit() { prev =>
+      val numFiles = numFilesOf(prev, targetFileBytes)
+      // readCommit is already the purged view: schema-projected (dropped
+      // columns absent) and tombstone/DV-subtracted. Row ids survive the
+      // purge the same way they survive OPTIMIZE — materialized through.
+      val snapshot = (if (rowTrackingOn(prev)) readWithRowIdsOf(prev)
+        else readCommit(prev)).repartition(numFiles)
+      rewriteStaged(tx, prev, "REORG", snapshot,
+        metrics = _ => Map("numFiles" -> numFiles.toLong), rebalance = false) { (c, _, _) =>
+        c.copy(properties = c.properties.filterNot(_._1.startsWith(DroppedColPrefix)))
+      }
+    }.get
+  }
+
+  /** Files a rewrite of `prev`'s dirs at `targetFileBytes` each lands as. */
+  private def numFilesOf(prev: Commit, targetFileBytes: Long): Int = {
     val totalBytes = prev.dataDirs.map { d =>
       val p = if (new Path(d).isAbsolute) new Path(d) else new Path(root, d)
       if (fs.exists(p)) fs.getContentSummary(p).getLength else 0L
     }.sum
-    val numFiles = math.max(1, math.ceil(totalBytes.toDouble / targetFileBytes).toInt)
-    // readCommit is already the purged view: schema-projected (dropped
-    // columns absent) and tombstone/DV-subtracted. Row ids survive the
-    // purge the same way they survive OPTIMIZE — materialized through.
-    val snapshot = (if (rowTrackingOn(prev)) readWithRowIdsOf(prev)
-      else readCommit(prev)).repartition(numFiles)
-    val dir = writeData(snapshot, v, prev.partitionCols, rebalance = false)
-    val meta = metaFor(dir)
-    val c = Commit(v, tsMs, "REORG", Seq(dir),
-      Map("numFiles" -> numFiles.toLong, "numOutputRows" -> countDir(dir)),
-      prev.schemaJson,
-      partitionCols = prev.partitionCols,
-      dirStats = Map(dir -> meta.stats),
-      properties = rewriteProps(prev.properties)
-        .filterNot(_._1.startsWith(DroppedColPrefix)),
-      dirNulls = Map(dir -> meta.nulls))
-    commitRewrite(c, Seq(dir))
+    math.max(1, math.ceil(totalBytes.toDouble / targetFileBytes).toInt)
   }
 
   /** RENAME COLUMN — as an HONEST REWRITE: Delta needs column mapping
@@ -3753,47 +3414,34 @@ final class GraftTable private (
     * drop those first). */
   def renameColumn(from: String, to: String, targetFileBytes: Long = 128L * 1024 * 1024)
       : Commit = this.synchronized {
-    val prev = log.latest().getOrElse(
-      throw new NoSuchElementException(s"no table at $root"))
-    val schema = DataType.fromJson(prev.schemaJson).asInstanceOf[StructType]
-    require(schema.fieldNames.contains(from), s"no column $from at $root")
-    require(!schema.fieldNames.contains(to), s"column $to already exists at $root")
-    require(!prev.partitionCols.contains(from),
-      s"cannot rename partition column $from of $root (values live in the dir layout)")
-    val word = s"\\b${java.util.regex.Pattern.quote(from)}\\b".r
-    val referencing = prev.properties.collect {
-      case (k, spec) if (k.startsWith(ConstraintPrefix) ||
-        k.startsWith(GeneratedColPrefix)) && word.findFirstIn(spec).isDefined => k
-      case (k, _) if (k.startsWith(GeneratedColPrefix) ||
-        k.startsWith(IdentitySpecPrefix)) &&
-        k.stripPrefix(GeneratedColPrefix).stripPrefix(IdentitySpecPrefix) == from => k
-    }
-    require(referencing.isEmpty,
-      s"cannot rename column $from of $root: referenced by ${referencing.mkString(", ")}")
-    val v = prev.version + 1
-    val tsMs = System.currentTimeMillis()
-    val totalBytes = prev.dataDirs.map { d =>
-      val p = if (new Path(d).isAbsolute) new Path(d) else new Path(root, d)
-      if (fs.exists(p)) fs.getContentSummary(p).getLength else 0L
-    }.sum
-    val numFiles = math.max(1, math.ceil(totalBytes.toDouble / targetFileBytes).toInt)
-    val snapshot = readCommit(prev).withColumnRenamed(from, to).repartition(numFiles)
-    val dir = writeData(snapshot, v, prev.partitionCols, rebalance = false)
-    val meta = metaFor(dir)
-    val c = Commit(v, tsMs, "RENAME COLUMN", Seq(dir),
-      Map("numOutputRows" -> countDir(dir)), snapshot.schema.json,
-      partitionCols = prev.partitionCols,
-      dirStats = Map(dir -> meta.stats),
-      properties = {
-        val base = rewriteProps(prev.properties)
-          .filterNot(_._1.startsWith(DroppedColPrefix))
+    val tx = new TableTxn(this, s"RENAME COLUMN of $root")
+    tx.commit() { prev =>
+      val schema = DataType.fromJson(prev.schemaJson).asInstanceOf[StructType]
+      require(schema.fieldNames.contains(from), s"no column $from at $root")
+      require(!schema.fieldNames.contains(to), s"column $to already exists at $root")
+      require(!prev.partitionCols.contains(from),
+        s"cannot rename partition column $from of $root (values live in the dir layout)")
+      val word = s"\\b${java.util.regex.Pattern.quote(from)}\\b".r
+      val referencing = prev.properties.collect {
+        case (k, spec) if (k.startsWith(ConstraintPrefix) ||
+          k.startsWith(GeneratedColPrefix)) && word.findFirstIn(spec).isDefined => k
+        case (k, _) if (k.startsWith(GeneratedColPrefix) ||
+          k.startsWith(IdentitySpecPrefix)) &&
+          k.stripPrefix(GeneratedColPrefix).stripPrefix(IdentitySpecPrefix) == from => k
+      }
+      require(referencing.isEmpty,
+        s"cannot rename column $from of $root: referenced by ${referencing.mkString(", ")}")
+      val snapshot = readCommit(prev).withColumnRenamed(from, to)
+        .repartition(numFilesOf(prev, targetFileBytes))
+      rewriteStaged(tx, prev, "RENAME COLUMN", snapshot, rebalance = false) { (c, _, _) =>
+        val base = c.properties.filterNot(_._1.startsWith(DroppedColPrefix))
         val cluster = GraftTable.clusterColsOf(prev.properties)
-        if (!cluster.contains(from)) base
-        else base + (GraftTable.ClusterByProp ->
-          cluster.map(c => if (c == from) to else c).mkString(","))
-      },
-      dirNulls = Map(dir -> meta.nulls))
-    commitRewrite(c, Seq(dir))
+        c.copy(schemaJson = snapshot.schema.json, properties =
+          if (!cluster.contains(from)) base
+          else base + (GraftTable.ClusterByProp ->
+            cluster.map(c => if (c == from) to else c).mkString(",")))
+      }
+    }.get
   }
 
   /** RENAME COLUMN — METADATA-ONLY (column mapping): the field keeps its
@@ -3809,7 +3457,7 @@ final class GraftTable private (
     * must not collide with a name old files still carry (another live
     * column's physical name, or a DROP-retired one). */
   def renameColumnMetadataOnly(from: String, to: String): Commit = this.synchronized {
-    commitMetadata { prev =>
+    alterTable("RENAME COLUMN") { prev =>
       val schema = DataType.fromJson(prev.schemaJson).asInstanceOf[StructType]
       require(schema.fieldNames.contains(from), s"no column $from at $root")
       require(!schema.fieldNames.contains(to), s"column $to already exists at $root")
@@ -3837,12 +3485,7 @@ final class GraftTable private (
         if (f.name == from) f.copy(name = to) else f))
       def rekey[A](m: Map[String, A]): Map[String, A] =
         m.map { case (k, v) => (if (k == from) to else k) -> v }
-      prev.copy(
-        version = prev.version + 1, tsMs = System.currentTimeMillis(),
-        operation = "RENAME COLUMN",
-        metrics = Map.empty, changesDir = None,
-        txnAppId = None, txnBatchId = None,
-        schemaJson = renamed.json,
+      prev.copy(schemaJson = renamed.json,
         // Skipping metadata is keyed by LOGICAL names — it travels with
         // the rename so pruning keeps working without re-derivation.
         dirStats = prev.dirStats.map { case (d, m) => d -> rekey(m) },
@@ -3884,7 +3527,7 @@ final class GraftTable private (
     * false NEGATIVES (wrong pruning) the moment reads serve the wide
     * type. Rebuilding is the same offline maintenance as after appends. */
   def widenColumnType(name: String, to: DataType): Commit = this.synchronized {
-    val committed = commitMetadata { prev =>
+    val committed = alterTable("WIDEN COLUMN") { prev =>
       val schema = DataType.fromJson(prev.schemaJson).asInstanceOf[StructType]
       require(schema.fieldNames.contains(name), s"no column $name at $root")
       val from = schema(name).dataType
@@ -3913,16 +3556,11 @@ final class GraftTable private (
       val key = GraftTable.TypeChangePrefix + phys
       val entry = s"""{"fromType":"${GraftTable.deltaTypeName(from)}",""" +
         s""""toType":"${GraftTable.deltaTypeName(to)}",""" +
-        s""""tableVersion":${prev.version + 1}}"""
+        s""""tableVersion":${prev.version}}"""
       val hist = prev.properties.get(key)
         .map(j => j.stripSuffix("]") + "," + entry + "]")
         .getOrElse("[" + entry + "]")
-      prev.copy(
-        version = prev.version + 1, tsMs = System.currentTimeMillis(),
-        operation = "WIDEN COLUMN",
-        metrics = Map.empty, changesDir = None,
-        txnAppId = None, txnBatchId = None,
-        schemaJson = widened.json,
+      prev.copy(schemaJson = widened.json,
         properties = prev.properties + (key -> hist))
     }
     val phys = colMapAtHead.getOrElse(name, name)
@@ -3966,70 +3604,56 @@ final class GraftTable private (
 
   /** Rewrite `touched` dirs into one compacted dir and commit with
     * rebase-over-append — the shared body of [[optimizeWhere]] and
-    * [[compactSmallDirs]]. */
+    * [[compactSmall]]. */
   private def compactDirSubset(prev: Commit, touched: Seq[String],
       targetFileBytes: Long, zorderBy: Seq[String]): Commit = {
-    val v = prev.version + 1
-    val touchedBytes = touched.map { d =>
-      fs.getContentSummary(new Path(root, d)).getLength
-    }.sum
-    val numFiles = math.max(1, math.ceil(touchedBytes.toDouble / targetFileBytes).toInt)
-    val sub = prev.copy(dataDirs = touched)
-    val subset =
-      if (rowTrackingOn(prev)) readWithRowIdsOf(sub)
-      else readCommitInternal(sub, withPos = false)
-    val clustered =
-      if (zorderBy.isEmpty) subset.repartition(numFiles)
-      else zorderCluster(subset, zorderBy, numFiles)
-    val dir = writeData(clustered, v, prev.partitionCols, rebalance = false)
-    val meta = metaFor(dir)
-    commitOptimizeRebased(prev, touched, dir, meta,
-      Map("numRewrittenDirs" -> touched.size.toLong, "numFiles" -> numFiles.toLong,
-        "numBytes" -> touchedBytes))
+    val tx = new TableTxn(this, s"OPTIMIZE of $root")
+    tx.commit(Some(prev)) { prev =>
+      val touchedBytes = touched.map { d =>
+        fs.getContentSummary(new Path(root, d)).getLength
+      }.sum
+      val numFiles = math.max(1, math.ceil(touchedBytes.toDouble / targetFileBytes).toInt)
+      val sub = prev.copy(dataDirs = touched)
+      val subset =
+        if (rowTrackingOn(prev)) readWithRowIdsOf(sub)
+        else readCommitInternal(sub, withPos = false)
+      val clustered =
+        if (zorderBy.isEmpty) subset.repartition(numFiles)
+        else zorderCluster(subset, zorderBy, numFiles)
+      compactStaged(tx, prev, touched, clustered,
+        Map("numRewrittenDirs" -> touched.size.toLong, "numFiles" -> numFiles.toLong,
+          "numBytes" -> touchedBytes))
+    }.get
   }
 
-
-  /** Commit an OPTIMIZE-family rewrite with REBASE-over-append:
-    * compaction is semantics-preserving and rewrites a declared dir
-    * subset, so a concurrent APPEND (same schema — [[isAppendOnlyRace]]
-    * checks it — over a clean snapshot) can never conflict with it: the
-    * commit re-lands on the new head with the appended dirs carried
-    * forward untouched. Delta resolves the same disjoint-file case
-    * instead of failing the maintenance job — at 100 TB, ingestion never
-    * pauses for compaction and compaction never loses to ingestion. Any
-    * other intervening commit (schema change, another rewrite,
-    * merge-on-read state on either side) aborts with rollback, exactly
-    * like [[commitRewrite]]. */
-  private def commitOptimizeRebased(prev: Commit, rewritten: Seq[String],
-      dir: String, meta: DirMeta, metrics: Map[String, Long]): Commit = {
-    var attempts = 0
-    while (attempts <= MaxCommitRetries) {
-      val head = log.latest().getOrElse(prev)
-      val cleanAppendRace = head.version == prev.version ||
-        (isAppendOnlyRace(prev, head) &&
-          prev.tombstoneDirs.isEmpty && prev.dvDirs.isEmpty &&
-          head.tombstoneDirs.isEmpty && head.dvDirs.isEmpty)
-      if (!cleanAppendRace) {
-        fs.delete(new Path(root, dir), true)
-        throw new ConcurrentWriteException(
-          s"OPTIMIZE of $root computed from stale version ${prev.version}; a " +
-            "non-append commit intervened; rolled back — retry against the new head", null)
-      }
-      val untouched = head.dataDirs.filterNot(rewritten.contains)
-      val c = Commit(head.version + 1, System.currentTimeMillis(), "OPTIMIZE",
-        untouched :+ dir, metrics, head.schemaJson,
-        partitionCols = head.partitionCols,
-        dirStats = head.dirStats.view.filterKeys(untouched.contains).toMap +
-          (dir -> meta.stats),
-        properties = rewriteProps(head.properties),
-        dirNulls = head.dirNulls.view.filterKeys(untouched.contains).toMap +
-          (dir -> meta.nulls))
-      try { log.commit(c); return c }
-      catch { case _: IllegalStateException => attempts += 1 }
-    }
-    fs.delete(new Path(root, dir), true)
-    throw new ConcurrentWriteException(
-      s"OPTIMIZE of $root lost $MaxCommitRetries version races", null)
+  /** Stages an OPTIMIZE-family rewrite of `prev`'s `rewritten` dirs as one
+    * compacted dir, with REBASE-over-append: compaction is
+    * semantics-preserving and rewrites a declared dir subset, so a
+    * concurrent APPEND (same schema — [[isAppendOnlyRace]] checks it — over
+    * clean snapshots) can never conflict with it: the commit re-lands on
+    * the new head with the appended dirs carried forward untouched. Delta
+    * resolves the same disjoint-file case instead of failing the
+    * maintenance job — at 100 TB, ingestion never pauses for compaction
+    * and compaction never loses to ingestion. Any other intervening commit
+    * (schema change, another rewrite, merge-on-read state on either side)
+    * refuses. */
+  private def compactStaged(tx: TableTxn, prev: Commit, rewritten: Seq[String],
+      rows: DataFrame, metrics: Map[String, Long]): Staged = {
+    val dir = writeData(tx, rows, prev.version + 1, prev.partitionCols, rebalance = false)
+    val meta = metaFor(dir)
+    def clean(c: Commit): Boolean = c.tombstoneDirs.isEmpty && c.dvDirs.isEmpty
+    Staged(
+      head =>
+        if (isAppendOnlyRace(prev, head) && clean(prev) && clean(head)) Rebase
+        else Refuse(s"OPTIMIZE of $root computed from stale version ${prev.version}; a " +
+          "non-append commit intervened; rolled back — retry against the new head"),
+      a => carrying(Commit(a.version, a.tsMs, "OPTIMIZE", Seq(dir), metrics,
+        a.head.schemaJson,
+        partitionCols = a.head.partitionCols,
+        dirStats = Map(dir -> meta.stats),
+        properties = rewriteProps(a.head.properties),
+        dirNulls = Map(dir -> meta.nulls)),
+        a.head, a.head.dataDirs.filterNot(rewritten.contains)))
   }
 
   /** Selective overwrite — Delta's `replaceWhere`: atomically replace
@@ -4047,39 +3671,30 @@ final class GraftTable private (
     * (consumer/python-consumer/delta_handler.py write modes) generalized
     * to predicate scope. */
   def replaceWhere(df: DataFrame, predicate: Column): Commit = this.synchronized {
-    requireNotAppendOnly("REPLACEWHERE")
-    val prev = log.latest().getOrElse(throw new NoSuchElementException(s"no table at $root"))
-    require(prev.tombstoneDirs.isEmpty && prev.dvDirs.isEmpty,
-      s"replaceWhere on $root requires a clean snapshot — run materializeDeletes() first")
-    val v = prev.version + 1
-    val tsMs = System.currentTimeMillis()
-    val schema = DataType.fromJson(prev.schemaJson).asInstanceOf[StructType]
-    val (prepared, idSpecs, idHwm) = prepareWrite(df, prev.properties, "replaceWhere")
-    enforceCompatibleTypes(prepared.schema, schema, "replaceWhere")
-    val aligned = GraftTable.alignTo(prepared, schema)
-    val matches = coalesce(predicate, lit(false))
-    if (!aligned.filter(!matches).isEmpty)
-      throw new IllegalArgumentException(
-        s"replaceWhere on $root: replacement rows must all satisfy the predicate " +
-          s"($predicate) — rows outside the replaced region would silently widen the overwrite")
-    enforceConstraints(aligned, Some(prev), "REPLACEWHERE")
-    val touched = dirsMayMatching(prev, predicate)
-    val untouched = prev.dataDirs.filterNot(touched.contains)
-    val survivors = readCommitInternal(prev.copy(dataDirs = touched), withPos = false)
-      .filter(!matches)
-    val dir = writeData(survivors.unionByName(aligned), v, prev.partitionCols)
-    val meta = metaFor(dir)
-    val c = Commit(v, tsMs, "REPLACEWHERE", untouched :+ dir,
-      Map("numRewrittenDirs" -> touched.size.toLong,
-        "numOutputRows" -> countDir(dir)), prev.schemaJson,
-      partitionCols = prev.partitionCols,
-      dirStats = prev.dirStats.view.filterKeys(untouched.contains).toMap +
-        (dir -> meta.stats),
-      properties = rewriteProps(prev.properties) ++
-        identityHwmUpdates(dir, meta, idSpecs, idHwm),
-      dirNulls = prev.dirNulls.view.filterKeys(untouched.contains).toMap +
-        (dir -> meta.nulls))
-    commitRewrite(c, Seq(dir))
+    val tx = new TableTxn(this, s"REPLACEWHERE of $root", Some("REPLACEWHERE"))
+    tx.commit() { prev =>
+      require(prev.tombstoneDirs.isEmpty && prev.dvDirs.isEmpty,
+        s"replaceWhere on $root requires a clean snapshot — run materializeDeletes() first")
+      val schema = DataType.fromJson(prev.schemaJson).asInstanceOf[StructType]
+      val (prepared, idSpecs, idHwm) = prepareWrite(df, prev.properties, "replaceWhere")
+      enforceCompatibleTypes(prepared.schema, schema, "replaceWhere")
+      val aligned = GraftTable.alignTo(prepared, schema)
+      val matches = coalesce(predicate, lit(false))
+      if (!aligned.filter(!matches).isEmpty)
+        throw new IllegalArgumentException(
+          s"replaceWhere on $root: replacement rows must all satisfy the predicate " +
+            s"($predicate) — rows outside the replaced region would silently widen the overwrite")
+      enforceConstraints(aligned, prev.properties, "REPLACEWHERE")
+      val touched = dirsMayMatching(prev, predicate)
+      val untouched = prev.dataDirs.filterNot(touched.contains)
+      val survivors = readCommitInternal(prev.copy(dataDirs = touched), withPos = false)
+        .filter(!matches)
+      rewriteStaged(tx, prev, "REPLACEWHERE", survivors.unionByName(aligned),
+        metrics = _ => Map("numRewrittenDirs" -> touched.size.toLong)) { (c, dir, meta) =>
+        carrying(c.copy(properties = c.properties ++
+          identityHwmUpdates(dir, meta, idSpecs, idHwm)), prev, untouched)
+      }
+    }.get
   }
 
   private val ZorderBits = 8 // 256 quantile buckets per column
@@ -4173,17 +3788,17 @@ final class GraftTable private (
     * rewrite, a concurrent commit invalidates the restore-over-THAT-head
     * intent, so it aborts rather than rebases. */
   def restore(v: Long): Commit = this.synchronized {
-    requireNotAppendOnly("RESTORE")
-    val old = commitFor(v)
-    val head = version + 1
-    val c = Commit(head, System.currentTimeMillis(), "RESTORE", old.dataDirs,
-      Map("restoredVersion" -> v), old.schemaJson,
-      partitionCols = old.partitionCols,
-      dirStats = old.dirStats,
-      properties = old.properties,
-      tombstoneDirs = old.tombstoneDirs,
-      dvDirs = old.dvDirs, dirNulls = old.dirNulls)
-    commitRewrite(c, Nil)
+    new TableTxn(this, s"RESTORE of $root", Some("RESTORE")).commit() { head =>
+      val old = commitFor(v)
+      Staged(staleRewrite(head, "RESTORE"), a => Commit(a.version, a.tsMs,
+        "RESTORE", old.dataDirs,
+        Map("restoredVersion" -> v), old.schemaJson,
+        partitionCols = old.partitionCols,
+        dirStats = old.dirStats,
+        properties = old.properties,
+        tombstoneDirs = old.tombstoneDirs,
+        dvDirs = old.dvDirs, dirNulls = old.dirNulls))
+    }.get
   }
 
   /** VACUUM (S18/M10, delta_handler.py:275-285; default retention 168 h,
@@ -4309,13 +3924,8 @@ final class GraftTable private (
             "historical version(s) still carry deletion vectors; readers " +
             "time-traveling there would need the feature. Re-run with " +
             "truncateHistory=true (TRUNCATE HISTORY) to cut them off")
-      val c = commitMetadata { prev =>
-        prev.copy(
-          version = prev.version + 1, tsMs = System.currentTimeMillis(),
-          operation = s"DROP FEATURE $feature",
-          metrics = Map.empty, changesDir = None,
-          txnAppId = None, txnBatchId = None,
-          properties = prev.properties - "delta.enableDeletionVectors")
+      val c = alterTable(s"DROP FEATURE $feature") { prev =>
+        prev.copy(properties = prev.properties - "delta.enableDeletionVectors")
       }
       if (truncateHistory) {
         // Reclaim everything the drop commit does not reference, then cut
@@ -4383,19 +3993,13 @@ final class GraftTable private (
   }
 }
 
-/** A concurrent writer won the version race against an operation that had
-  * computed its output from the now-stale snapshot. The operation's written
-  * dirs were rolled back; retry it against the new head. Appends never
-  * throw this under normal contention — they rebase
-  * ([[GraftTable]] appendInternal). */
+/** A concurrent writer won the version race against an operation that
+  * cannot commit over its commit (it computed from the now-stale snapshot),
+  * or the operation lost every race of its attempt bound. Its staged dirs
+  * were reaped; retry it against the new head. Appends never throw this
+  * under normal contention — they rebase ([[TableTxn]]). */
 final class ConcurrentWriteException(msg: String, cause: Throwable = null)
     extends RuntimeException(msg, cause)
-
-/** Internal signal: an append carrying a COPY INTO file ledger lost the
-  * version race to a commit that already loaded some of the same files.
-  * The written dir has been rolled back; [[GraftTable.copyInto]] recomputes
-  * the fresh set against the refreshed log and retries. */
-private[table] final class ConcurrentCopyRetry extends RuntimeException
 
 object GraftTable {
 

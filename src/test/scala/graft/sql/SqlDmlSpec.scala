@@ -95,6 +95,22 @@ class SqlDmlSpec extends SparkSpec {
     } finally s2.conf.unset("spark.graft.sql.mergeOnRead")
   }
 
+  test("spark.graft.sql.mergeOnRead DELETE/UPDATE refuse on an append-only table") {
+    val (t, _) = freshTable("sqlmorao", "morao_t")
+    t.setProperties(Map("delta.appendOnly" -> "true"))
+    s2.conf.set("spark.graft.sql.mergeOnRead", "true")
+    try {
+      val before = t.version
+      Seq("DELETE FROM morao_t WHERE id = 4",
+          "UPDATE morao_t SET v = 0.0 WHERE id = 1").foreach { stmt =>
+        val e = intercept[Exception](s2.sql(stmt).collect())
+        assert(e.getMessage.contains("append-only"), s"$stmt: ${e.getMessage}")
+      }
+      assert(t.version === before)
+      assert(t.read().count() === 4)
+    } finally s2.conf.unset("spark.graft.sql.mergeOnRead")
+  }
+
   test("UPDATE rejects a SET target that is not a column") {
     val (_, _) = freshTable("sqlupdbad", "updbad_t")
     val e = intercept[Exception] {

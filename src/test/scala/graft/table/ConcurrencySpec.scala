@@ -439,6 +439,67 @@ class ConcurrencySpec extends SparkSpec {
     }
   }
 
+  /** Dirs under `bases` that no commit of the log references. */
+  private def unreferenced(root: String,
+      bases: Seq[String] = Seq("data", "tombstones", "dvs", "_changes")): Set[String] = {
+    val conf = spark.sessionState.newHadoopConf()
+    val fs = new org.apache.hadoop.fs.Path(root).getFileSystem(conf)
+    val referenced = new CommitLog(root, conf).commits().flatMap(c =>
+      c.dataDirs ++ c.tombstoneDirs ++ c.dvDirs ++ c.changesDir).toSet
+    bases.flatMap { b =>
+      val dir = new org.apache.hadoop.fs.Path(root, b)
+      if (!fs.exists(dir)) Nil
+      else fs.listStatus(dir).filter(_.isDirectory).map(st => s"$b/${st.getPath.getName}").toSeq
+    }.toSet -- referenced
+  }
+
+  test("an exception before the publish reaps the verb's staging; the head stays put") {
+    val root = tmpDir("cc-reap")
+    val t = GraftTable.create(spark, root, (1L to 10L).map(i => (i, i * 1.0)).toDF("id", "x"))
+    val verbs: Seq[(String, () => Commit)] = Seq(
+      "append" -> (() => t.append(Seq((11L, 11.0)).toDF("id", "x"))),
+      "mergeClauses" -> (() => t.mergeClauses(Seq((1L, 5.0), (12L, 12.0)).toDF("id", "x"),
+        "id", matched = Seq(MergeClause.UpdateAll()),
+        notMatched = Seq(MergeClause.InsertAll()))),
+      "deleteMergeOnRead" -> (() => t.deleteMergeOnRead(col("id") === 2L)))
+    t.beforeCommitHook = () => throw new RuntimeException("injected before publish")
+    try verbs.foreach { case (name, verb) =>
+      val before = t.version
+      val e = intercept[RuntimeException](verb())
+      assert(e.getMessage === "injected before publish", name)
+      assert(t.version === before, name)
+      assert(unreferenced(root).isEmpty, s"$name leaked ${unreferenced(root)}")
+    } finally t.beforeCommitHook = () => ()
+    t.append(Seq((11L, 11.0)).toDF("id", "x"))
+    assert(t.read().count() === 11)
+  }
+
+  test("a rebasing verb losing every race gives up after 20 attempts, staging reaped") {
+    val root = tmpDir("cc-exhaust")
+    val t = GraftTable.createWithProperties(spark, root,
+      (1L to 10L).map(i => (i, i * 1.0)).toDF("id", "x"),
+      Map("delta.enableChangeDataFeed" -> "true"))
+    val rival = GraftTable.forPath(spark, root)
+    var next = 100L
+    // a rival APPEND lands before every publish attempt
+    t.beforeCommitHook = () => {
+      next += 1
+      rival.append(Seq((next, 0.0)).toDF("id", "x")); ()
+    }
+    val verbs: Seq[(String, () => Commit)] = Seq(
+      "positional delete" -> (() => t.deletePositional(col("id") === 1L)),
+      "merge-on-read delete" -> (() => t.deleteMergeOnRead(col("id") === 2L)))
+    try verbs.foreach { case (what, verb) =>
+      val before = t.version
+      val e = intercept[ConcurrentWriteException](verb())
+      assert(e.getMessage.contains(s"$what of $root lost 20 version races"), e.getMessage)
+      assert(t.version === before + 20, what) // every rival append landed
+      val left = unreferenced(root, Seq("tombstones", "dvs", "_changes"))
+      assert(left.isEmpty, s"$what leaked $left")
+    } finally t.beforeCommitHook = () => ()
+    assert(t.read().count() === 50) // 10 seed + 40 rival rows, nothing deleted
+  }
+
   test("publisher registry: scheme selection and conditional-put registration") {
     // unknown scheme falls back to rename+read-back
     assert(CommitLog.publisherFor("s3a-unregistered") === RenamePublisher)

@@ -1034,7 +1034,11 @@ class GraftTableSpec extends SparkSpec {
     }
     refused(t.delete(col("k") === 1L))
     refused(t.deletePositional(col("k") === 1L))
+    refused(t.deleteMergeOnRead(col("k") === 1L))
+    refused(t.deleteKeys(Seq(1L).toDF("k"), "k"))
+    refused(t.deleteKeysPositional(Seq(1L).toDF("k"), "k"))
     refused(t.update(col("k") === 1L, Map("s" -> lit("x"))))
+    refused(t.updateMergeOnRead(col("k") === 1L, Map("s" -> lit("x"))))
     refused(t.merge(Seq((1L, "z", "n")).toDF("k", "s", "note"), "k"))
     refused(t.mergeClauses(Seq((1L, "z", "n")).toDF("k", "s", "note"), "k",
       matched = Seq(graft.table.MergeClause.UpdateAll())))
