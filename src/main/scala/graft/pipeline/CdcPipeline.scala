@@ -1,6 +1,12 @@
 package graft.pipeline
 
+import java.util.concurrent.{CompletionException, ExecutionException, Executors, TimeUnit}
+import java.util.concurrent.atomic.AtomicInteger
+
+import scala.util.Try
+
 import org.apache.spark.sql.{DataFrame, SparkSession}
+import org.apache.spark.sql.execution.SQLExecution
 import org.apache.spark.sql.functions._
 import org.apache.spark.sql.expressions.Window
 import org.apache.spark.sql.streaming.{StreamingQuery, Trigger}
@@ -141,8 +147,7 @@ object CdcPipeline {
           val audit = GraftTable.createIfNotExists(spark, auditTablePath(cfg), batch.limit(0))
           audit.appendOnce(batch, "cdc_events_audit", batchId)
           cfg.auditCompactAfterDirs.foreach(audit.maybeCompact(_))
-          mirrorDelta(spark, cfg, auditTablePath(cfg))
-          (): Unit
+          mirrorDelta(cfg, audit)
         }
       }
       .start()
@@ -185,6 +190,9 @@ object CdcPipeline {
       .withColumn("__cdc_operation", lit("DELETE"))
       .withColumn("__processed_at", lit(batchTs))
     val path = snapshotPath(cfg, table)
+    // The table's log is resolved once here; the merge and the mirror
+    // reuse the handle.
+    val existing = GraftTable.find(spark, path)
     // SINGLE-PASS apply: upserts AND deletes ride ONE clause merge — one
     // full-outer join, one snapshot write, one commit per micro-batch
     // (previously merge + anti-join delete = two joins, two commits).
@@ -192,8 +200,8 @@ object CdcPipeline {
     // own spelling of spark_delta_handler.py:222-236): a re-delivered
     // identical row matches NO clause and carries untouched — a true
     // no-op, no CDF row, not even metadata churn.
-    if (GraftTable.isTable(spark, path) || !upserts.isEmpty) {
-      val t = GraftTable.createIfNotExists(spark, path, upserts.limit(0))
+    if (existing.isDefined || !upserts.isEmpty) {
+      val t = existing.getOrElse(GraftTable.create(spark, path, upserts.limit(0)))
       val src = upserts.unionByName(
         deletes.select(upserts.columns.map(col).toSeq: _*))
       if (!src.isEmpty) {
@@ -211,21 +219,21 @@ object CdcPipeline {
               Some(col("s.__cdc_operation") =!= "DELETE"))))
         (): Unit
       }
+      mirrorDelta(cfg, t)
     }
-    mirrorDelta(spark, cfg, path)
   }
 
   /** Bring the table's `_delta_log` mirror to the current head (no-op
-    * when [[Config.deltaMirror]] is off or the table doesn't exist yet).
+    * when [[Config.deltaMirror]] is off).
     * A classic checkpoint lands whenever the tail since the last one
     * reaches 10 commits (Delta's own cadence): the per-batch resume then
     * folds one parquet read + a ≤10-commit JSON tail, not the table's
     * whole history — constant-time mirroring for streams that run for
     * months. */
-  private def mirrorDelta(spark: SparkSession, cfg: Config, path: String): Unit =
-    if (cfg.deltaMirror && GraftTable.isTable(spark, path)) {
-      graft.sources.DeltaExport.exportLog(GraftTable.forPath(spark, path))
-      graft.sources.DeltaExport.maintainCheckpoint(spark, path)
+  private def mirrorDelta(cfg: Config, t: GraftTable): Unit =
+    if (cfg.deltaMirror) {
+      graft.sources.DeltaExport.exportLog(t)
+      graft.sources.DeltaExport.maintainCheckpoint(t.spark, t.root)
       (): Unit
     }
 
@@ -281,6 +289,57 @@ object CdcPipeline {
       .start()
   }
 
+  /** Tables of one micro-batch applied at once. A table's apply is a
+    * chain of small Spark jobs with driver-side planning and log work
+    * between them, so it leaves the cores mostly idle; a second table in
+    * flight fills those gaps. Measured on a 4-core host (cdc_apply, four
+    * tables, seeds 41–44): per-batch p50 6.24 s one at a time, 4.52 s two
+    * at a time at the same peak RSS, 4.26 s four at a time at +8% peak
+    * RSS (+12% in one run). */
+  private val ApplyWidth = 2
+
+  /** Apply one micro-batch to every table of `tables`, [[ApplyWidth]] at a
+    * time, keeping the batch persisted until the last one is done: each
+    * table re-reads it for its winners, upserts and deletes. The tables
+    * are independent (each has its own log, so their commits cannot
+    * conflict). Tasks run through `SQLExecution.withThreadLocalCaptured`,
+    * so their jobs carry the stream's job group and local properties and
+    * stopping the query cancels them. Every table runs even when another
+    * fails; the first failure in `tables` order is rethrown, the others
+    * attached as suppressed. An interrupt cancels the tasks in flight and
+    * drains the pool before the batch is released. */
+  private def applyPerTable(batch: DataFrame, tables: Seq[String])(
+      apply: String => Unit): Unit = {
+    val session = batch.sparkSession.asInstanceOf[org.apache.spark.sql.classic.SparkSession]
+    val threads = new AtomicInteger()
+    val pool = Executors.newFixedThreadPool(ApplyWidth, (r: Runnable) => {
+      val th = new Thread(r, s"graft-cdc-apply-${threads.incrementAndGet()}")
+      th.setDaemon(true)
+      th
+    })
+    batch.persist()
+    try {
+      val tasks = tables.map(t => SQLExecution.withThreadLocalCaptured(session, pool)(apply(t)))
+      rethrowFirst(tasks.flatMap(f => Try(f.get()).failed.toOption.map(unwrap)))
+    } finally {
+      pool.shutdownNow()
+      try pool.awaitTermination(Long.MaxValue, TimeUnit.NANOSECONDS)
+      finally { batch.unpersist(); (): Unit }
+    }
+  }
+
+  private def unwrap(e: Throwable): Throwable = e match {
+    case _: ExecutionException | _: CompletionException if e.getCause != null =>
+      unwrap(e.getCause)
+    case _ => e
+  }
+
+  private def rethrowFirst(failures: Seq[Throwable]): Unit =
+    failures.headOption.foreach { first =>
+      failures.tail.foreach(first.addSuppressed)
+      throw first
+    }
+
   /** Snapshot stream (S9/ST5): one foreachBatch query maintaining all
     * configured tables, per-batch parse → split by table → merge/delete. */
   def startSnapshotStream(spark: SparkSession, cfg: Config): StreamingQuery =
@@ -290,13 +349,8 @@ object CdcPipeline {
       .trigger(trigger(cfg))
       .foreachBatch { (batch: DataFrame, _: Long) =>
         if (!batch.isEmpty) {
-          // Small micro-batch reused across N tables × (merge + delete)
-          // plans: cache it instead of re-parsing JSON 8×.
-          batch.persist()
-          try {
-            cfg.tables.foreach(t => applyBatchToSnapshot(spark, cfg, t, batch))
-            if (cfg.maintainMvs) MaterializedViews.refreshAll(spark, cfg)
-          } finally { batch.unpersist(); (): Unit }
+          applyPerTable(batch, cfg.tables)(applyBatchToSnapshot(spark, cfg, _, batch))
+          if (cfg.maintainMvs) MaterializedViews.refreshAll(spark, cfg)
         }
       }
       .start()
@@ -329,7 +383,7 @@ object CdcPipeline {
           "id", lit(null).cast("timestamp"))
       graft.pipeline.Scd2.maintain(t, changes, "id", col("__cdc_timestamp"),
         deleteCol = Some("__is_del"))
-      mirrorDelta(spark, cfg, path)
+      mirrorDelta(cfg, t)
     }
   }
 
@@ -341,21 +395,24 @@ object CdcPipeline {
       .option("checkpointLocation", s"${cfg.checkpointRoot}/scd2")
       .trigger(trigger(cfg))
       .foreachBatch { (batch: DataFrame, _: Long) =>
-        if (!batch.isEmpty) {
-          batch.persist()
-          try cfg.tables.foreach(t => applyBatchToScd2(spark, cfg, t, batch))
-          finally { batch.unpersist(); (): Unit }
-        }
+        if (!batch.isEmpty)
+          applyPerTable(batch, cfg.tables)(applyBatchToScd2(spark, cfg, _, batch))
       }
       .start()
 
   /** Run both sinks (ST4): audit + snapshots, awaiting termination —
-    * `main()`'s shape at spark_streaming.py:417-478. */
+    * `main()`'s shape at spark_streaming.py:417-478. Both queries are
+    * awaited and neither outlives the call: a failure of one does not
+    * leave the other running against the same checkpoints. The first
+    * failure is rethrown, the other attached as suppressed. */
   def runOnce(spark: SparkSession, cfg: Config): Unit = {
-    val audit = startAuditStream(spark, cfg.copy(availableNow = true))
-    val snaps = startSnapshotStream(spark, cfg.copy(availableNow = true))
-    audit.awaitTermination()
-    snaps.awaitTermination()
+    val once = cfg.copy(availableNow = true)
+    val started = scala.collection.mutable.ArrayBuffer.empty[StreamingQuery]
+    try {
+      started += startAuditStream(spark, once)
+      started += startSnapshotStream(spark, once)
+      rethrowFirst(started.toSeq.flatMap(q => Try(q.awaitTermination()).failed.toOption))
+    } finally started.foreach(_.stop())
   }
 
   /** Graceful shutdown (ST7, spark_streaming.py:429-444): stop every active

@@ -4163,6 +4163,11 @@ object GraftTable {
     // see a "table" forPath would then refuse to open.
     new CommitLog(root, hadoopConf(spark)).latest().isDefined
 
+  /** The table at `root` when [[isTable]] holds, opened with one log
+    * resolution (the isTable-then-forPath pair costs two). */
+  def find(spark: SparkSession, root: String): Option[GraftTable] =
+    Some(new GraftTable(spark, root)).filter(_.version >= 0)
+
   /** Create (S10/S12): first write wins the CREATE commit. Optional
     * hive-style partitioning: every later commit keeps it, and reads prune
     * partitions on matching filters. */
@@ -4258,7 +4263,7 @@ object GraftTable {
 
   /** Open-or-create: the streaming first-batch path (spark_streaming.py:362-365). */
   def createIfNotExists(spark: SparkSession, root: String, df: => DataFrame): GraftTable =
-    if (isTable(spark, root)) forPath(spark, root) else create(spark, root, df)
+    find(spark, root).getOrElse(create(spark, root, df))
 
   /** The data type at a (possibly dotted) leaf path of `schema`: exact
     * top-level names win (a column literally named "a.b" keeps working),

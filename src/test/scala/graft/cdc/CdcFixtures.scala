@@ -45,6 +45,11 @@ object CdcFixtures {
        |"total_amount":$total,"shipping_address":"a$id","created_at":$tsUs,
        |"updated_at":$tsUs}""".stripMargin.replaceAll("\n", "")
 
+  def orderItemJson(id: Long, orderId: Long, productId: Long, quantity: Int,
+      unitPrice: Double, tsUs: Long = 1700000000000000L): String =
+    s"""{"id":$id,"order_id":$orderId,"product_id":$productId,"quantity":$quantity,
+       |"unit_price":$unitPrice,"created_at":$tsUs}""".stripMargin.replaceAll("\n", "")
+
   /** A tombstone record (null value), as Kafka compaction emits. */
   def tombstone(table: String, id: Long, off: Long = nextOffset()): (String, String, String, Int, Long, java.sql.Timestamp) =
     (s"""{"id":$id}""", null, s"cdc.public.$table", 0, off, new java.sql.Timestamp(1700000000000L))

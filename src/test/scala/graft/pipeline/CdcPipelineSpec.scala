@@ -3,6 +3,7 @@ package graft.pipeline
 import java.nio.charset.StandardCharsets
 import java.nio.file.{Files, Paths}
 
+import org.apache.spark.sql.DataFrame
 import org.apache.spark.sql.functions._
 
 import graft.SparkSpec
@@ -347,6 +348,132 @@ class CdcPipelineSpec extends SparkSpec {
     CdcPipeline.applyBatchToForeign(spark, "customers", audit, froot,
       s"${cfg2.checkpointRoot}/foreign-customers", 0L)
     assert(graft.sources.DeltaImport.latestVersion(spark, froot) === vBefore)
+  }
+
+  /** One batch touching all four tables (inserts, updates, deletes). */
+  private def fourTableBatch = Seq(
+    CdcFixtures.record("customers", "c", 1,
+      Some(CdcFixtures.customerJson(1, "A", "A", "a@x.com")), off = 0),
+    CdcFixtures.record("customers", "c", 2,
+      Some(CdcFixtures.customerJson(2, "B", "B", "b@x.com")), off = 1),
+    CdcFixtures.record("products", "c", 1,
+      Some(CdcFixtures.productJson(1, "Laptop", 999.99, 10)), off = 2),
+    CdcFixtures.record("products", "c", 2,
+      Some(CdcFixtures.productJson(2, "Mouse", 9.99, 5)), off = 3),
+    CdcFixtures.record("orders", "c", 10,
+      Some(CdcFixtures.orderJson(10, 1, "pending", 1009.98)), off = 4),
+    CdcFixtures.record("order_items", "c", 100,
+      Some(CdcFixtures.orderItemJson(100, 10, 1, 1, 999.99)), off = 5),
+    CdcFixtures.record("order_items", "c", 101,
+      Some(CdcFixtures.orderItemJson(101, 10, 2, 2, 9.99)), off = 6),
+    CdcFixtures.record("customers", "u", 1,
+      Some(CdcFixtures.customerJson(1, "A", "A", "a2@x.com")),
+      Some(CdcFixtures.customerJson(1, "A", "A", "a@x.com")), off = 7),
+    CdcFixtures.record("customers", "d", 2, None,
+      Some(CdcFixtures.customerJson(2, "B", "B", "b@x.com")), off = 8),
+    CdcFixtures.record("products", "d", 1, None,
+      Some(CdcFixtures.productJson(1, "Laptop", 999.99, 10)), off = 9),
+    CdcFixtures.record("orders", "u", 10,
+      Some(CdcFixtures.orderJson(10, 1, "shipped", 1009.98)),
+      Some(CdcFixtures.orderJson(10, 1, "pending", 1009.98)), off = 10),
+    CdcFixtures.record("order_items", "u", 101,
+      Some(CdcFixtures.orderItemJson(101, 10, 2, 3, 9.99)),
+      Some(CdcFixtures.orderItemJson(101, 10, 2, 2, 9.99)), off = 11))
+
+  /** The last-writer-wins state [[fourTableBatch]] leaves, as (id, label). */
+  private val fourTableState: Map[String, Set[(Long, String)]] = Map(
+    "customers" -> Set(1L -> "a2@x.com"),
+    "products" -> Set(2L -> "Mouse"),
+    "orders" -> Set(10L -> "shipped"),
+    "order_items" -> Set(100L -> "1", 101L -> "3"))
+
+  private val labelCol = Map("customers" -> "email", "products" -> "name",
+    "orders" -> "status", "order_items" -> "quantity")
+
+  private def stateOf(df: DataFrame, table: String): Set[(Long, String)] =
+    df.select(col("id"), col(labelCol(table)).cast("string"))
+      .as[(Long, String)].collect().toSet
+
+  private def causes(e: Throwable): Seq[Throwable] =
+    Iterator.iterate(e)(_.getCause).takeWhile(_ != null).toSeq
+
+  test("runOnce leaves no stream running when the audit stream fails") {
+    val in = tmpDir("cdc-leak-in")
+    val cfg = CdcPipeline.Config(
+      inputDir = in,
+      tableRoot = tmpDir("cdc-leak-tables"),
+      checkpointRoot = tmpDir("cdc-leak-ckpt"),
+      availableNow = true)
+    // The audit table already exists with kafka_offset declared INT: the
+    // stream's LONG offsets cannot cast losslessly, so its append throws.
+    val auditPath = CdcPipeline.auditTablePath(cfg)
+    GraftTable.create(spark, auditPath, Seq(0).toDF("kafka_offset").limit(0))
+    writeBatch(in, "b1.json", fourTableBatch)
+    val before = spark.streams.active.map(_.id).toSet
+
+    val err = intercept[Exception](CdcPipeline.runOnce(spark, cfg))
+    assert(causes(err).exists(c => String.valueOf(c.getMessage).contains(auditPath)))
+    assert(spark.streams.active.filterNot(q => before(q.id)).isEmpty)
+  }
+
+  test("a failing table fails the batch after the other tables have applied it") {
+    val in = tmpDir("cdc-fail-in")
+    val cfg = CdcPipeline.Config(
+      inputDir = in,
+      tableRoot = tmpDir("cdc-fail-tables"),
+      checkpointRoot = tmpDir("cdc-fail-ckpt"),
+      availableNow = true,
+      deltaMirror = true)
+    assert(cfg.tables.head === "customers")
+    // customers, the first table, already exists with email declared INT:
+    // the batch's string emails cannot cast losslessly, so its merge throws.
+    val custPath = CdcPipeline.snapshotPath(cfg, "customers")
+    GraftTable.create(spark, custPath, Seq((0L, 0)).toDF("id", "email").limit(0))
+    writeBatch(in, "b1.json", fourTableBatch)
+
+    val err = intercept[Exception](CdcPipeline.runOnce(spark, cfg))
+    assert(causes(err).exists(c => String.valueOf(c.getMessage).contains(custPath)))
+    def assertApplied(table: String): Unit = {
+      val path = CdcPipeline.snapshotPath(cfg, table)
+      assert(stateOf(GraftTable.forPath(spark, path).read(), table) === fourTableState(table))
+      assert(stateOf(graft.sources.DeltaImport.read(spark, path), table) ===
+        fourTableState(table))
+    }
+    Seq("products", "orders", "order_items").foreach(assertApplied)
+
+    // Without the bad table, the rerun replays the failed batch: customers
+    // catches up and the other three stay as they are.
+    val fs = new org.apache.hadoop.fs.Path(custPath)
+      .getFileSystem(spark.sparkContext.hadoopConfiguration)
+    fs.delete(new org.apache.hadoop.fs.Path(custPath), true)
+    CdcPipeline.runOnce(spark, cfg)
+    cfg.tables.foreach(assertApplied)
+  }
+
+  test("stopping the snapshot stream mid-batch stops its per-table threads") {
+    val in = tmpDir("cdc-stop-in")
+    val cfg = CdcPipeline.Config(
+      inputDir = in,
+      tableRoot = tmpDir("cdc-stop-tables"),
+      checkpointRoot = tmpDir("cdc-stop-ckpt"),
+      deltaMirror = true)
+    writeBatch(in, "b1.json", fourTableBatch)
+    def applyThreads: Iterable[Thread] = {
+      import scala.jdk.CollectionConverters._
+      Thread.getAllStackTraces.keySet.asScala.filter(_.getName.startsWith("graft-cdc-apply-"))
+    }
+    def waitFor(what: String)(cond: => Boolean): Unit = {
+      val deadline = System.nanoTime() + 60L * 1000 * 1000 * 1000
+      while (!cond && System.nanoTime() < deadline) Thread.sleep(5)
+      assert(cond, what)
+    }
+
+    val q = CdcPipeline.startSnapshotStream(spark, cfg)
+    try waitFor("a table apply started")(applyThreads.nonEmpty)
+    finally q.stop()
+    assert(!q.isActive)
+    assert(q.exception.isEmpty)
+    waitFor("the per-table threads ended")(applyThreads.isEmpty)
   }
 
   test("delete→re-insert inside one batch resolves to the re-insert") {
