@@ -3,6 +3,7 @@ package graft
 import org.apache.spark.sql.{DataFrame, SparkSession}
 
 import graft.analytics.{CorpusQueries, DeltaBridgeQueries, MutationQueries, OlapQueries, RetrievalQueries, SamplingQueries, ScalarQueries, SqlDmlQueries, TemporalQueries, Views}
+import graft.analytics.DeltaBridgeQueries.ReferenceRoot
 
 /** Driver contract — see /root/repo/SURVEY.md §7 + the builder prompt.
   *
@@ -16,7 +17,7 @@ object SparkEntry {
   /** The reference's frozen Delta `customers` table — q126-q128's queries
     * run the [[graft.sources.DeltaImport]] bridge over a scratch COPY of
     * it; the oracles read the exact part-files its log resolves to. */
-  private val DeltaFixture = "/root/reference/deltalake/customers"
+  private val DeltaFixture = s"$ReferenceRoot/customers"
 
   /** Flagship query on /root/testdata/sf0.001; driver smoke-checks rows>0.
     * The reference's flagship MV `customer_order_summary`
@@ -26,6 +27,14 @@ object SparkEntry {
     Views.customerOrderSummary(spark, "/root/testdata/sf0.001")
 
   type Q = (SparkSession, String) => DataFrame
+
+  /** The [[queries]] that read the reference checkout's frozen Delta tables
+    * under [[DeltaBridgeQueries.ReferenceRoot]] rather than the scale-factor
+    * directory, so they need the reference checkout on the host. */
+  val referenceFixtureQueries: Set[String] = Set(
+    "q126_delta_import", "q127_delta_time_travel", "q128_delta_cdf",
+    "q139_delta_import_orders", "q140_delta_import_events",
+    "q141_delta_import_products", "q142_delta_import_items")
 
   /** One entry per implemented operator from SURVEY.md §2. */
   def queries: Map[String, Q] = Map[String, Q](
@@ -766,22 +775,22 @@ object SparkEntry {
     // references — the oracle reads only the committed file, so a glob
     // reader hash-mismatches. total_amount is DOUBLE (Debezium divergence).
     "q139_delta_import_orders" ->
-      """SELECT id, customer_id, status, total_amount,
-        |  epoch_us(order_date) AS order_us, __cdc_operation AS cdc_op
-        |FROM read_parquet('/root/reference/deltalake/orders/part-00001-7dcc3039-551b-4248-9c8f-12876348a848-c000.snappy.parquet')""".stripMargin,
+      s"""SELECT id, customer_id, status, total_amount,
+         |  epoch_us(order_date) AS order_us, __cdc_operation AS cdc_op
+         |FROM read_parquet('$ReferenceRoot/orders/part-00001-7dcc3039-551b-4248-9c8f-12876348a848-c000.snappy.parquet')""".stripMargin,
     // Frozen `products` fixture (q141): single WRITE commit, stats with
     // out-of-range (year 57949) timestamps the reader must tolerate.
     "q141_delta_import_products" ->
-      """SELECT id, name, price, stock_quantity, category,
-        |  __cdc_operation AS cdc_op, epoch_us(updated_at) AS updated_us
-        |FROM read_parquet('/root/reference/deltalake/products/part-00000-481bb3bb-2739-4a6a-9339-5ad6cd590034-c000.snappy.parquet')""".stripMargin,
+      s"""SELECT id, name, price, stock_quantity, category,
+         |  __cdc_operation AS cdc_op, epoch_us(updated_at) AS updated_us
+         |FROM read_parquet('$ReferenceRoot/products/part-00000-481bb3bb-2739-4a6a-9339-5ad6cd590034-c000.snappy.parquet')""".stripMargin,
     // Frozen `order_items` fixture (q142): the log commits ONE of the two
     // part-files on disk — the other is an orphan a glob reader would
     // wrongly serve; the oracle reads only the committed file.
     "q142_delta_import_items" ->
-      """SELECT id, order_id, product_id, quantity, unit_price,
-        |  __cdc_operation AS cdc_op, epoch_us(created_at) AS created_us
-        |FROM read_parquet('/root/reference/deltalake/order_items/part-00003-8c2d3cd2-6869-47ce-a580-19f8901b7282-c000.snappy.parquet')""".stripMargin,
+      s"""SELECT id, order_id, product_id, quantity, unit_price,
+         |  __cdc_operation AS cdc_op, epoch_us(created_at) AS created_us
+         |FROM read_parquet('$ReferenceRoot/order_items/part-00003-8c2d3cd2-6869-47ce-a580-19f8901b7282-c000.snappy.parquet')""".stripMargin,
     // CDF round-trip (q143): the graft orders history (create %3<>0 →
     // append %3=0 → delete F) mirrored as a Delta log and its change feed
     // read back through the exported cdc actions / derived appends — the
@@ -1173,13 +1182,13 @@ object SparkEntry {
     // Frozen `cdc_events` fixture (q140): two STREAMING UPDATE commits —
     // the replay must serve the union of both commits' files.
     "q140_delta_import_events" ->
-      """SELECT event_id, source_table, operation, kafka_partition,
-        |  kafka_offset, epoch_us(event_timestamp) AS event_us
-        |FROM read_parquet(['/root/reference/deltalake/cdc_events/part-00000-f8eff2af-26a6-43aa-a269-a663dd1199f9-c000.snappy.parquet',
-        |  '/root/reference/deltalake/cdc_events/part-00001-ddf7f102-59be-4768-bdcb-2c0929267074-c000.snappy.parquet',
-        |  '/root/reference/deltalake/cdc_events/part-00002-872a294b-e605-43f3-9ff5-e11afe61ca97-c000.snappy.parquet',
-        |  '/root/reference/deltalake/cdc_events/part-00003-21b7f84b-43d3-462f-9418-1675168b54fc-c000.snappy.parquet',
-        |  '/root/reference/deltalake/cdc_events/part-00000-57526890-f190-40a3-82eb-90b0993ccecd-c000.snappy.parquet'])""".stripMargin,
+      s"""SELECT event_id, source_table, operation, kafka_partition,
+         |  kafka_offset, epoch_us(event_timestamp) AS event_us
+         |FROM read_parquet(['$ReferenceRoot/cdc_events/part-00000-f8eff2af-26a6-43aa-a269-a663dd1199f9-c000.snappy.parquet',
+         |  '$ReferenceRoot/cdc_events/part-00001-ddf7f102-59be-4768-bdcb-2c0929267074-c000.snappy.parquet',
+         |  '$ReferenceRoot/cdc_events/part-00002-872a294b-e605-43f3-9ff5-e11afe61ca97-c000.snappy.parquet',
+         |  '$ReferenceRoot/cdc_events/part-00003-21b7f84b-43d3-462f-9418-1675168b54fc-c000.snappy.parquet',
+         |  '$ReferenceRoot/cdc_events/part-00000-57526890-f190-40a3-82eb-90b0993ccecd-c000.snappy.parquet'])""".stripMargin,
 
     "q11_delete_where" -> "SELECT * FROM orders WHERE o_orderstatus <> 'F'",
     // merge-on-read delete + post-delete append: non-F rows plus the

@@ -22,15 +22,21 @@ import graft.sources.DeltaImport
   */
 object DeltaBridgeQueries {
 
+  /** Root of the reference checkout's frozen Delta tables (`customers`,
+    * `orders`, `cdc_events`, `products`, `order_items`). They live outside
+    * this repository; every path to them, in the queries, their oracles
+    * and the specs, is built from this one root. */
+  val ReferenceRoot = "/root/reference/deltalake"
+
   /** Source of the frozen Delta `customers` fixture; override with
     * `spark.graft.delta.import.src` (any Hadoop-FS URI). */
-  private val DefaultSrc = "/root/reference/deltalake/customers"
+  private val DefaultSrc = s"$ReferenceRoot/customers"
   /** The other frozen fixtures the bridge is driver-exercised against:
     * `orders` (Debezium's decimal→double divergence in the wild — SURVEY
     * §1.2 — plus an orphan part-file replay must exclude) and
     * `cdc_events` (multi-commit streaming appends). */
-  private val OrdersSrc = "/root/reference/deltalake/orders"
-  private val EventsSrc = "/root/reference/deltalake/cdc_events"
+  private val OrdersSrc = s"$ReferenceRoot/orders"
+  private val EventsSrc = s"$ReferenceRoot/cdc_events"
 
   private val copies = new java.util.concurrent.ConcurrentHashMap[String, String]()
 
@@ -101,7 +107,7 @@ object DeltaBridgeQueries {
     * Completes bridge coverage of every Delta table the reference ships. */
   def deltaImportProducts(spark: SparkSession, dir: String): DataFrame =
     DeltaImport.read(spark,
-      copiedTableAt(spark, "/root/reference/deltalake/products"))
+      copiedTableAt(spark, s"$ReferenceRoot/products"))
       .select(col("id"), col("name"), col("price"), col("stock_quantity"),
         col("category"), col("__cdc_operation").as("cdc_op"),
         unix_micros(col("updated_at")).as("updated_us"))
@@ -111,7 +117,7 @@ object DeltaBridgeQueries {
     * glob reader would wrongly serve. */
   def deltaImportOrderItems(spark: SparkSession, dir: String): DataFrame =
     DeltaImport.read(spark,
-      copiedTableAt(spark, "/root/reference/deltalake/order_items"))
+      copiedTableAt(spark, s"$ReferenceRoot/order_items"))
       .select(col("id"), col("order_id"), col("product_id"), col("quantity"),
         col("unit_price"), col("__cdc_operation").as("cdc_op"),
         unix_micros(col("created_at")).as("created_us"))

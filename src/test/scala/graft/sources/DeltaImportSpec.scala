@@ -6,6 +6,7 @@ import org.apache.spark.sql.functions._
 import org.apache.spark.sql.types.{LongType, StringType, StructType}
 
 import graft.SparkSpec
+import graft.analytics.DeltaBridgeQueries
 
 /** [[DeltaImport]] — the read-only Delta-log bridge: add/remove replay,
   * partition reconstruction, time travel, checkpoint consumption, the
@@ -651,7 +652,7 @@ class DeltaImportSpec extends SparkSpec {
 
   // ------------- the reference's own frozen tables, when present ---------
 
-  private val refBase = "/root/reference/deltalake"
+  private val refBase = DeltaBridgeQueries.ReferenceRoot
   private def refTable(name: String) = s"$refBase/$name"
 
   test("reference customers: replay excludes the MERGE-removed and orphan files") {
