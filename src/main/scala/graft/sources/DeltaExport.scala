@@ -155,7 +155,7 @@ object DeltaExport {
     // may predate cdc actions — re-emit both with the FIRST new commit,
     // else new change data lands in a feed CDF readers silently ignore.
     var cdfUpgrade = resumeSnap.exists(s =>
-      !s.configuration.get("delta.enableChangeDataFeed").contains("true"))
+      !flagOn(s.configuration, "delta.enableChangeDataFeed"))
     val resumeCdfCapable = resumeSnap.flatMap(_.protocol).exists(p =>
       if (p.minWriterVersion >= 7) p.writerFeatures.contains("changeDataFeed")
       else p.minWriterVersion >= 4)
@@ -1485,23 +1485,7 @@ object DeltaExport {
               .otherwise(assign))
       }
     }
-    val byLower = dfFilled.columns.map(c => c.toLowerCase -> c).toMap
-    val extra = dfFilled.columns.filterNot(c =>
-      fields.exists(_.name.equalsIgnoreCase(c)))
-    require(extra.isEmpty,
-      s"append to $tablePath: unknown column(s) ${extra.mkString(", ")} — " +
-        "foreign appends never evolve the schema")
-    val aligned = dfFilled.select(fields.toIndexedSeq.map { f =>
-      val src = byLower.getOrElse(f.name.toLowerCase,
-        throw new IllegalArgumentException(
-          s"append to $tablePath: missing column ${f.name}"))
-      val in = dfFilled.schema(src).dataType
-      require(in == f.dataType ||
-        org.apache.spark.sql.catalyst.expressions.Cast.canUpCast(in, f.dataType),
-        s"append to $tablePath: column $src of type ${in.simpleString} does " +
-          s"not up-cast losslessly to ${f.dataType.simpleString}")
-      col(src).cast(f.dataType).as(f.name)
-    }: _*)
+    val aligned = strictAlign(dfFilled, fields, s"append to $tablePath", "appends")
     // CALLER-provided generated columns must agree with their expression
     // (null-safe), or data skipping on the materialized column would lie
     // about the base columns.
@@ -2113,292 +2097,65 @@ object DeltaExport {
       { appendToForeign(df.sparkSession, tablePath, df, Some((appId, batchId))); () }
 
   /** MERGE (canonical upsert) into a FOREIGN Delta table — the CDC verb:
-    * `whenMatchedUpdateAll.whenNotMatchedInsertAll` on one equi key,
-    * delta-spark's DV-merge shape. Matched target rows are DV-deleted
-    * from their files and EVERY source row lands in new data files (for
-    * a matched key the new image REPLACES the old — exactly update-all;
-    * an unmatched key is a plain insert), all in ONE commit. A
-    * CDF-enabled table gets update_preimage/update_postimage rows for
-    * matched keys and insert rows for new ones. Source must be unique
-    * per key (delta-spark errors on multiple matches too). The matched
-    * scan joins the table's files against the source's key column —
-    * never a collected key list — and when the source is small its side
-    * broadcasts; with ≤1000 distinct keys the file set additionally
-    * prunes through data skipping. `txn` gives the same exactly-once
-    * contract as [[appendToForeign]], making
+    * `whenMatchedUpdateAll.whenNotMatchedInsertAll` on one equi key, run
+    * as exactly that clause pair through [[mergeForeignClauses]]. Every
+    * matched target row is replaced by the source image (a key the target
+    * holds twice updates both rows, as delta-spark does), unmatched keys
+    * insert, null-key source rows drop, and a CDF-enabled table gets
+    * update_preimage/update_postimage and insert rows — one commit, on DV
+    * and DV-less tables alike. The upsert owns only its STRICT contract,
+    * checked up front whatever the table's metadata: the key exists, the
+    * source covers every ordinary column (`UPDATE SET *` alone would keep
+    * a missing column's stale target value; generated/identity columns
+    * are the merge's to compute), each column up-casts losslessly, and no
+    * extra source column rides along — foreign merges never evolve the
+    * schema. Source must be unique per key. `txn` gives the exactly-once
+    * contract of [[appendToForeign]], making
     * `foreachBatch((b, id) => mergeForeignUpsert(…, txn = Some((app, id))))`
     * a crash-safe streaming CDC apply onto a table graft does not govern.
-    * A table WITHOUT `deletionVectors` advertised falls back to the
-    * classic rewrite shape (touched files removed, survivors restaged);
-    * refuses appendOnly tables. Generated/identity tables delegate to
-    * the clause path (whose images discharge those obligations); legacy
-    * `delta.invariants` validate on the staged bytes like CHECK
-    * constraints. Returns (committedVersion, matchedCount,
-    * insertedCount). */
+    * Returns (committedVersion, matchedCount, insertedCount). */
   def mergeForeignUpsert(spark: SparkSession, tablePath: String,
       source: org.apache.spark.sql.DataFrame, key: String,
       txn: Option[(String, Long)] = None): (Long, Long, Long) = {
-    val tx = new ForeignTxn(spark, tablePath, s"merge into $tablePath")
-    def gate(snap: DeltaImport.Snapshot): Unit = {
-      require(!flagOn(snap.configuration, "delta.appendOnly"),
-        s"merge into $tablePath: the table is append-only (delta.appendOnly)")
-      val badMeta = snap.schema.fields.filter(f =>
-        f.metadata.contains("delta.generationExpression") ||
-          f.metadata.contains("delta.identity.start"))
-      require(badMeta.isEmpty,
-        s"merge into $tablePath: column(s) ${badMeta.map(_.name).mkString(", ")} " +
-          "declare generated/identity semantics a merger must " +
-          "compute — write through the owning engine instead")
-      legacyInvariantsOf(snap.schema) // malformed document refuses up front
-    }
-
-    val snap0 = DeltaImport.snapshot(spark, tablePath)
-    // Generated / identity tables take the clause path, whose images
-    // discharge those obligations (generated columns recompute, identity
-    // ids allocate past the high-water mark); the canonical upsert IS
-    // exactly UpdateAll + InsertAll there. The upsert's OWN contract is
-    // enforced FIRST — full coverage of the ordinary columns and
-    // lossless up-casts — so the same API call stays strict-or-refuse
-    // regardless of table metadata (the clause path alone is lenient:
-    // UpdateAll would silently keep stale values for a missing column).
-    if (snap0.schema.fields.exists(f =>
-        f.metadata.contains("delta.generationExpression") ||
-          f.metadata.contains("delta.identity.start"))) {
-      val engineMaintained = snap0.schema.fields.filter(f =>
-        f.metadata.contains("delta.generationExpression") ||
-          f.metadata.contains("delta.identity.start")).map(_.name).toSet
-      val extra = source.columns.filterNot(c =>
-        snap0.schema.fields.exists(_.name.equalsIgnoreCase(c)))
-      require(extra.isEmpty,
-        s"merge into $tablePath: unknown column(s) ${extra.mkString(", ")} — " +
-          "foreign merges never evolve the schema")
-      snap0.schema.fields.filterNot(f => engineMaintained(f.name)).foreach { f =>
-        val src = source.columns.find(_.equalsIgnoreCase(f.name))
-          .getOrElse(throw new IllegalArgumentException(
-            s"merge into $tablePath: missing column ${f.name}"))
-        val in = source.schema(src).dataType
-        require(in == f.dataType ||
-          org.apache.spark.sql.catalyst.expressions.Cast
-            .canUpCast(in, f.dataType),
-          s"merge into $tablePath: column $src of type ${in.simpleString} " +
-            s"does not up-cast losslessly to ${f.dataType.simpleString}")
-      }
-      val (v, u, _, i) = mergeForeignClauses(spark, tablePath, source,
-        Seq(key),
-        matched = Seq(graft.table.MergeClause.UpdateAll()),
-        notMatched = Seq(graft.table.MergeClause.InsertAll()), txn = txn)
-      return (v, u, i)
-    }
-    tx.gate(snap0)
-    gate(snap0)
-    if (ForeignTxn.txnCommitted(snap0, txn)) return (snap0.version, 0L, 0L)
-    val fields = snap0.schema.fields
+    val fields = DeltaImport.snapshot(spark, tablePath).schema.fields
     require(fields.exists(_.name.equalsIgnoreCase(key)),
       s"merge into $tablePath: no key column named $key")
-    val keyName = fields.find(_.name.equalsIgnoreCase(key)).get.name
-    // (Partition-keyed merges are fine: new images land in their own
-    // partition dirs, old ones are DV'd in place.)
+    val aligned = strictAlign(source, fields, s"merge into $tablePath", "merges",
+      optional = generatedSpecs(fields).keySet ++ identitySpecs(fields)._1.keySet)
+    val (v, updated, _, inserted) = mergeForeignClauses(spark, tablePath,
+      aligned, Seq(key), matched = Seq(graft.table.MergeClause.UpdateAll()),
+      notMatched = Seq(graft.table.MergeClause.InsertAll()), txn = txn)
+    (v, updated, inserted)
+  }
 
-    // Align the source like an append (full column coverage, lossless).
-    val byLower = source.columns.map(c => c.toLowerCase -> c).toMap
-    val extra = source.columns.filterNot(c =>
+  /** `df` under a foreign write's strict contract, refusals prefixed by
+    * `what` ("append to <path>"): no column outside `fields` (foreign
+    * `writes` never evolve the schema), every field present unless
+    * `optional`, and each present column up-casting losslessly. Returns
+    * the present columns in `fields` order, under the table's names and
+    * types. */
+  private def strictAlign(df: org.apache.spark.sql.DataFrame,
+      fields: Array[StructField], what: String, writes: String,
+      optional: Set[String] = Set.empty): org.apache.spark.sql.DataFrame = {
+    val byLower = df.columns.map(c => c.toLowerCase -> c).toMap
+    val extra = df.columns.filterNot(c =>
       fields.exists(_.name.equalsIgnoreCase(c)))
     require(extra.isEmpty,
-      s"merge into $tablePath: unknown column(s) ${extra.mkString(", ")} — " +
-        "foreign merges never evolve the schema")
-    val aligned = source.select(fields.toIndexedSeq.map { f =>
-      val src = byLower.getOrElse(f.name.toLowerCase,
-        throw new IllegalArgumentException(
-          s"merge into $tablePath: missing column ${f.name}"))
-      val in = source.schema(src).dataType
-      require(in == f.dataType ||
-        org.apache.spark.sql.catalyst.expressions.Cast.canUpCast(in, f.dataType),
-        s"merge into $tablePath: column $src of type ${in.simpleString} does " +
-          s"not up-cast losslessly to ${f.dataType.simpleString}")
-      col(src).cast(f.dataType).as(f.name)
-    }: _*).filter(col(s"`$keyName`").isNotNull)
-
-    // Matched target rows: files joined against the source keys (a small
-    // source broadcasts; a small DISTINCT key set additionally prunes the
-    // file list through data skipping).
-    val FileC = "__graft_foreign_mrg_file"
-    val PosC = "__graft_foreign_mrg_pos"
-    val srcKeys = aligned.select(col(s"`$keyName`")).distinct()
-    val keySample = srcKeys.limit(1001).collect().map(_.get(0))
-    val candidates =
-      if (keySample.length <= 1000)
-        DeltaSkipping.prune(spark, snap0,
-          col(s"`$keyName`").isin(keySample.toIndexedSeq: _*))
-      else snap0.files
-    // The matched scan feeds several jobs (hits collect, CDF pre-images,
-    // matched-key count, survivors) — cache the CDC-batch-bounded result
-    // instead of re-scanning candidates per consumer (ContextCleaner
-    // reclaims the blocks once the frame is unreachable).
-    val matchedRows =
-      if (candidates.isEmpty)
-        None
-      else Some(DeltaImport
-        .readFilesWithPositions(spark, snap0, candidates, FileC, PosC)
-        .join(srcKeys, Seq(keyName)).persist())
-    // With deletionVectors advertised matched rows record as DVs; else
-    // the touched files rewrite to their survivors (delta-spark's own
-    // pre-DV merge shape) — every Delta table is mergeable.
-    val dvSupported = snap0.protocol.exists(p =>
-      p.readerFeatures.contains("deletionVectors") ||
-        p.writerFeatures.contains("deletionVectors"))
-
-    val relOfSpelling: Map[String, String] = candidates.flatMap(f =>
-      DeltaImport.pathSpellings(tablePath, f.path, tx.conf).map(_ -> f.path)).toMap
-    val seed = java.util.UUID.randomUUID().toString
-    // Distributed DV build — matched positions aggregate into per-file
-    // bitmaps on executors ([[buildForeignDvs]]); the rewrite fallback
-    // needs only the touched-file SET. The driver never holds positions.
-    val (touchedRels, descByRel, matchedCount) = matchedRows match {
-      case None =>
-        (Seq.empty[String],
-          Map.empty[String, DeltaDeletionVectors.Descriptor], 0L)
-      case Some(m) if dvSupported =>
-        val built = buildForeignDvs(spark, tablePath, m, FileC, PosC,
-          relOfSpelling,
-          candidates.map(f => f.path ->
-            f.deletionVector.filter(_.cardinality != 0L)).toMap, seed)
-        (built.map(_.rel).sorted,
-          built.map(b => b.rel -> b.desc).toMap,
-          built.map(_.newHits).sum)
-      case Some(m) =>
-        val rels = m.select(FileC).distinct().collect()
-          .map(r => relOfSpelling.getOrElse(r.getString(0),
-            throw new IllegalStateException(
-              s"merge into $tablePath: unmapped file spelling ${r.getString(0)}")))
-          .toSeq.sorted
-        (rels, Map.empty[String, DeltaDeletionVectors.Descriptor],
-          if (rels.isEmpty) 0L else m.count())
-    }
-    val touchedSet = touchedRels.toSet
-
-    // Stage ALL source rows (the matched keys' new images + the inserts).
-    val layout = new ForeignTxn.Layout(snap0)
-    tx.run {
-      // Rewrite fallback: the touched files' survivors (rows whose key the
-      // source does NOT carry; old DVs already applied by the scan) stage
-      // as fresh files replacing the removed originals.
-      val survivorStage: Option[Path] =
-        if (dvSupported || touchedRels.isEmpty) None
-        else {
-          // Mirror deleteFromForeign: a rewrite assigns FRESH baseRowIds to
-          // survivor files, silently breaking row-id stability for rows the
-          // merge never touched — refuse rather than corrupt.
-          require(!snap0.protocol.exists(p => p.minWriterVersion >= 7 &&
-            p.writerFeatures.contains("rowTracking")),
-            s"merge into $tablePath: the rewrite fallback cannot preserve " +
-              "row tracking — enable delta.enableDeletionVectors instead")
-          val touched = snap0.files.filter(f => touchedSet(f.path))
-          val survivors = DeltaImport
-            .readFilesWithPositions(spark, snap0, touched, FileC, PosC)
-            .join(srcKeys, Seq(keyName), "left_anti")
-            .drop(FileC, PosC)
-          Some(tx.writeStaged(
-            DeltaImport.physicalRender(survivors, snap0.schema),
-            s"_appends/$seed-survivors", layout.partCols))
-        }
-      val stagePath = tx.writeStaged(
-        DeltaImport.physicalRender(aligned, snap0.schema),
-        s"_appends/$seed", layout.partCols)
-      def stagedLogical(): org.apache.spark.sql.DataFrame = {
-        val stagedPhys = spark.read.option("basePath", stagePath.toString)
-          .parquet(stagePath.toString)
-        DeltaImport.logicalRestore(stagedPhys, snap0.schema)
+      s"$what: unknown column(s) ${extra.mkString(", ")} — " +
+        s"foreign $writes never evolve the schema")
+    df.select(fields.toIndexedSeq.flatMap { f =>
+      val src = byLower.get(f.name.toLowerCase)
+      if (src.isEmpty && !optional(f.name))
+        throw new IllegalArgumentException(s"$what: missing column ${f.name}")
+      src.map { c =>
+        val in = df.schema(c).dataType
+        require(in == f.dataType ||
+          org.apache.spark.sql.catalyst.expressions.Cast.canUpCast(in, f.dataType),
+          s"$what: column $c of type ${in.simpleString} does " +
+            s"not up-cast losslessly to ${f.dataType.simpleString}")
+        col(c).cast(f.dataType).as(f.name)
       }
-      // Source uniqueness per key (delta-spark's multiple-match error),
-      // checked on the staged bytes alongside constraints/nullability.
-      def validate(cfg: Map[String, String]): Unit = {
-        import org.apache.spark.sql.functions.{count, lit}
-        val staged = stagedLogical()
-        val dup = staged.groupBy(col(s"`$keyName`")).agg(count(lit(1)).as("n"))
-          .filter(col("n") > 1).limit(1).collect()
-        if (dup.nonEmpty) throw new IllegalArgumentException(
-          s"merge into $tablePath: source has multiple rows for key " +
-            s"${dup.head.get(0)} — deduplicate to latest-per-key first")
-        tx.validate(staged, snap0.schema, cfg)
-      }
-      validate(snap0.configuration)
-
-      // CDF: matched keys restate as update pre/post images, fresh keys as
-      // inserts — classified by one join against the matched-key set.
-      val cdfOn = flagOn(snap0.configuration, "delta.enableChangeDataFeed")
-      val cdcRoot = tx.stage(s"_change_data/graft-$seed")
-      if (cdfOn) {
-        import org.apache.spark.sql.functions.lit
-        def writeCdc(df: org.apache.spark.sql.DataFrame, sub: String): Unit =
-          if (!df.isEmpty)
-            ForeignTxn.writeParquet(df, new Path(cdcRoot, sub), layout.partCols)
-        val matchedKeys = matchedRows.map(_.select(col(s"`$keyName`")).distinct())
-        def phys(df: org.apache.spark.sql.DataFrame) =
-          DeltaImport.physicalRender(df, snap0.schema, keep = Seq("_change_type"))
-        matchedRows.foreach { m =>
-          writeCdc(phys(m.drop(FileC, PosC)
-            .withColumn("_change_type", lit("update_preimage"))), "pre")
-        }
-        matchedKeys match {
-          case Some(mk) =>
-            writeCdc(phys(stagedLogical().join(mk, Seq(keyName))
-              .withColumn("_change_type", lit("update_postimage"))), "post")
-            writeCdc(phys(stagedLogical().join(mk, Seq(keyName), "left_anti")
-              .withColumn("_change_type", lit("insert"))), "ins")
-          case None =>
-            writeCdc(phys(stagedLogical()
-              .withColumn("_change_type", lit("insert"))), "ins")
-        }
-      }
-      val stagedFiles = tx.parquetsUnder(stagePath)
-      val survivorFiles = survivorStage.map(tx.parquetsUnder).getOrElse(Nil)
-      val stagedRows = stagedFiles.map(tx.footerRows).sum
-      // inserted = source rows whose key matched NOTHING (a key matching
-      // several target rows DV-deletes them all but contributes one image)
-      val matchedKeyCount: Long = matchedRows
-        .map(_.select(col(s"`$keyName`")).distinct().count()).getOrElse(0L)
-      val insertedCount = stagedRows - matchedKeyCount
-
-      tx.commit(snap0) { snap =>
-        gate(snap)
-        if (ForeignTxn.txnCommitted(snap, txn)) Some((snap.version, 0L, 0L))
-        else {
-          // A rival blind append carrying any of the source's MERGE KEYS
-          // does not commute: a retried merge would insert a key the rival
-          // just appended, leaving duplicate keys (delta-spark raises
-          // ConcurrentAppendException). With a bounded key set the rival
-          // adds prune against `key isin`; an unbounded set aborts on ANY
-          // rival add — conservative, and a writer storm is re-runnable.
-          if (ForeignTxn.layoutChanged(snap0, snap) ||
-              ForeignTxn.filesChanged(snap0, snap, touchedRels) ||
-              ForeignTxn.rivalMayMatch(spark, snap0, snap,
-                if (keySample.length > 1000) None
-                else Some(col(s"`$keyName`").isin(keySample.toIndexedSeq: _*))))
-            throw new IllegalArgumentException(
-              s"merge into $tablePath: a concurrent commit touched or " +
-                "added rows being merged — re-run the merge against the new state")
-          if (ForeignTxn.constraintsOf(snap.configuration) !=
-              ForeignTxn.constraintsOf(snap0.configuration))
-            validate(snap.configuration)
-          None
-        }
-      } { snap =>
-        ForeignTxn.Publish("MERGE",
-          Map("numTargetRowsUpdated" -> matchedCount,
-            "numTargetRowsInserted" -> insertedCount,
-            "numTargetFilesAdded" ->
-              (stagedFiles.size + survivorFiles.size).toLong,
-            "numDeletionVectorsAdded" ->
-              (if (dvSupported) touchedRels.size.toLong else 0L)),
-          snap0.schema.json, snap.configuration,
-          st => tx.touchLines(layout, snap, st.nowMs, snap0, touchedRels,
-              descByRel) ++
-            tx.freshAdds(layout, snap, st.version, stagedFiles ++ survivorFiles) ++
-            (if (cdfOn) tx.cdcLines(layout, cdcRoot) else Nil) ++
-            ForeignTxn.txnJson(txn, st.nowMs),
-          v => (v, matchedCount, insertedCount))
-      }
-    }
+    }: _*)
   }
 
   /** General MERGE into a FOREIGN Delta table — delta-spark's full
@@ -2427,9 +2184,12 @@ object DeltaExport {
     * whole target is in play, as in delta-spark. Foreign merges never
     * evolve the schema: assignments and insert columns must bind to
     * existing target fields (extra SOURCE columns are fine — they feed
-    * clause expressions). Requires `deletionVectors` advertised (the
-    * modern merge shape; [[mergeForeignUpsert]] keeps the pre-DV rewrite
-    * fallback for the canonical upsert). Source must be unique per key
+    * clause expressions). A table without `deletionVectors` advertised
+    * takes delta-spark's pre-DV shape instead: the touched files are
+    * removed and their unclaimed rows restage as fresh files (refused
+    * under row tracking, whose row ids a rewrite cannot keep). An
+    * appendOnly table refuses matched and by-source clauses; an
+    * insert-only merge stays legal there. Source must be unique per key
     * when matched clauses exist. `txn` gives the exactly-once contract of
     * [[appendToForeign]] — one stamp covering delete and upsert halves of
     * a CDC batch in one atomic commit. Returns
@@ -2891,9 +2651,14 @@ object DeltaExport {
         if (ForeignTxn.txnCommitted(snap, txn))
           Some((snap.version, 0L, 0L, 0L))
         else {
-          // Rival adds conflict unless provably key-disjoint (see
-          // mergeForeignUpsert); by-source clauses read the whole target,
-          // so ANY rival data change conflicts there.
+          // A rival that removed a touched file or changed the layout
+          // conflicts. So does a rival blind append carrying any of the
+          // source's keys: a retried merge would insert a key the rival
+          // just appended, leaving duplicates (delta-spark raises
+          // ConcurrentAppendException). With every key bounded the rival
+          // adds prune against the per-key `isin`; unbounded keys — and
+          // by-source clauses, which read the whole target — conflict
+          // with ANY rival add.
           if (ForeignTxn.layoutChanged(snap0, snap) ||
               ForeignTxn.filesChanged(snap0, snap, touchedRels) ||
               ForeignTxn.rivalMayMatch(spark, snap0, snap, keysBound))

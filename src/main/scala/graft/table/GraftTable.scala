@@ -2548,103 +2548,26 @@ final class GraftTable private (
   }
 
   /** MERGE upsert (M1/M2): `whenMatchedUpdateAll.whenNotMatchedInsertAll`
-    * re-expressed as one full-outer join on the key — matched rows take the
-    * source image, unmatched-target rows persist, unmatched-source rows
-    * insert. With `changedOnly` (the reference's change-detection condition,
-    * spark_delta_handler.py:222-236) a matched row only counts as an update
-    * — and only emits CDF pre/post images — when some non-key column differs
-    * null-safely.
+    * on one key, run as exactly that clause pair through
+    * [[mergeClausesOn]]. With `changedOnly` (the reference's
+    * change-detection condition, spark_delta_handler.py:222-236) the update
+    * claims a matched row — and only then emits CDF pre/post images — when
+    * some source-assignable non-key column differs null-safely; an
+    * unclaimed row keeps its target image. A source row with a null key
+    * can never match, and `INSERT *` would land it keyless; it is corrupt
+    * input, so such rows are dropped rather than inserted.
     *
     * Source must be unique per key (Delta MERGE errors otherwise too);
     * upstream CDC batches are deduped to latest-per-key before calling this.
-    * Scale: both sides shuffle-partition on the key; a small source side is
-    * broadcast by AQE automatically. CDF and snapshot are two jobs over the
-    * same join (the join recomputes; caching 100 TB would be worse).
     */
-  def merge(source: DataFrame, key: String, changedOnly: Boolean = true,
-      compareIgnore: Seq[String] = Nil): Commit =
-    this.synchronized {
-      val tx = new TableTxn(this, s"MERGE into $root", Some("MERGE"))
-      tx.commit(ifAbsent = throw new NoSuchElementException(
-          s"merge into non-existent table $root — create it first")) { prev =>
-        val targetSchema = DataType.fromJson(prev.schemaJson).asInstanceOf[StructType]
-        // Evolution dedups case-INSENSITIVELY (Delta's resolution): a source
-        // column differing only in case binds to the existing target field
-        // instead of appending a near-duplicate column to the schema.
-        val mergedSchema = StructType(targetSchema.fields ++
-          source.schema.fields.filterNot(f =>
-            targetSchema.fieldNames.exists(_.equalsIgnoreCase(f.name))))
-        enforceCompatibleTypes(source.schema, mergedSchema, "merge")
-        val sourceCols = source.columns.map(_.toLowerCase).toSet
-
-        val t = alignTo(readCommit(prev), mergedSchema).alias("t")
-        // A null merge key can never match (equi-join) and would surface as an
-        // all-NULL row; it's corrupt input — drop it rather than corrupt state.
-        val s = alignTo(source.filter(col(key).isNotNull), mergedSchema).alias("s")
-        val joined = t.join(s, col(s"t.$key") === col(s"s.$key"), "full_outer")
-
-        val sPresent = col(s"s.$key").isNotNull
-        val tPresent = col(s"t.$key").isNotNull
-        // whenMatchedUpdateAll assigns only columns the SOURCE actually has:
-        // target-only columns keep their target value on matched rows.
-        def mergedVal(c: String) =
-          if (sourceCols.contains(c.toLowerCase))
-            when(sPresent, col(s"s.$c")).otherwise(col(s"t.$c"))
-          else when(tPresent, col(s"t.$c")).otherwise(col(s"s.$c"))
-        // Change detection compares only source-assignable columns, minus any
-        // caller-declared volatile metadata (e.g. processing timestamps).
-        val compareCols = mergedSchema.fieldNames
-          .filter(c => c != key && sourceCols.contains(c.toLowerCase) &&
-            !compareIgnore.contains(c)).toSeq
-        val changedCond = compareCols
-          .map(c => !(col(s"t.$c") <=> col(s"s.$c")))
-          .reduceOption(_ || _).getOrElse(lit(false))
-        val isUpdate = tPresent && sPresent && (if (changedOnly) changedCond else lit(true))
-
-        val outCols = mergedSchema.fieldNames.toSeq
-        val snapshot0 = joined.select(outCols.map(c => mergedVal(c).as(c)): _*)
-        // Generated columns are pure functions of the row: recompute them on
-        // the POST-merge image (a source that updates a base column must not
-        // leave the target's stale derived value; inserts from a source that
-        // omits the column must not land null). Identity columns fill only
-        // the inserted rows' nulls; CDF insert postimages carry null for
-        // engine-assigned ids (the assignment happens in the snapshot job —
-        // documented divergence, sources that care provide ids).
-        val genSpecs = generatedSpecs(prev.properties)
-        val idSpecs = identitySpecs(prev.properties)
-        val idHwm = identityHwms(prev.properties, idSpecs)
-        val regenerated = genSpecs.foldLeft(snapshot0) { case (d, (n, e)) =>
-          d.withColumn(n, expr(e)) }
-        val snapshot = fillIdentity(regenerated, idSpecs, idHwm)
-        enforceConstraints(snapshot, prev.properties, "MERGE")
-
-        def image(side: String, changeType: String) = {
-          // postimage = the merged row (source values + carried target-only
-          // columns), preimage = the pre-merge target row.
-          val cols =
-            if (side == "s") outCols.map(c => mergedVal(c).as(c))
-            else outCols.map(c => col(s"t.$c").as(c))
-          struct(cols :+ lit(changeType).as("_change_type"): _*)
-        }
-        // No `otherwise`: unmatched branches yield a null array, which explode
-        // drops — unchanged rows emit no CDF rows, in one pass over the join.
-        // Generated columns recompute on each image too (pure row functions:
-        // exact for pre- AND post-images), keeping CDF consistent with the
-        // snapshot's regeneration.
-        val changeRows0 = joined.select(explode(
-          when(!tPresent && sPresent, array(image("s", "insert")))
-            .when(isUpdate, array(image("t", "update_preimage"), image("s", "update_postimage")))
-        ).as("c")).select("c.*")
-        val changeRows = genSpecs.foldLeft(changeRows0) { case (d, (n, e)) =>
-          d.withColumn(n, expr(e)) }
-        rewriteStaged(tx, prev, "MERGE", snapshot, Some(changeRows), a => Map(
-          "numTargetRowsInserted" -> a.changed("insert"),
-          "numTargetRowsUpdated" -> a.changed("update_postimage"))) { (c, dir, meta) =>
-          c.copy(schemaJson = mergedSchema.json, properties = c.properties ++
-            identityHwmUpdates(dir, meta, idSpecs, idHwm))
-        }
-      }.get
-    }
+  def merge(source: DataFrame, key: String, changedOnly: Boolean = true): Commit = {
+    val changed = source.columns.filterNot(_.equalsIgnoreCase(key))
+      .map(c => !(col(s"t.$c") <=> col(s"s.$c")))
+      .reduceOption(_ || _).getOrElse(lit(false))
+    mergeClausesOn(source.filter(col(key).isNotNull), Seq(key), None,
+      matched = Seq(MergeClause.UpdateAll(Option.when(changedOnly)(changed))),
+      notMatched = Seq(MergeClause.InsertAll()))
+  }
 
   /** General MERGE (Delta's full row-level clause surface): ordered
     * `WHEN MATCHED [AND cond] THEN UPDATE SET …` / `UPDATE SET ALL` (star)
@@ -2660,9 +2583,9 @@ final class GraftTable private (
     *
     * Clause conditions/values reference the join sides through
     * `targetAlias`/`sourceAlias` (e.g. `col("t.v") > col("s.v")`).
-    * Unlike the canonical [[merge]] (reference M2), matched updates here
-    * emit CDF pre/post images for EVERY claimed row — Delta's general
-    * MERGE does no change detection unless the user writes the condition.
+    * Matched updates emit CDF pre/post images for EVERY claimed row —
+    * Delta's general MERGE does no change detection unless the user writes
+    * the condition (the canonical [[merge]] writes it: reference M2).
     * Source must be unique per key (same contract as [[merge]]).
     * Schema evolution applies only when a star clause is present
     * (`UPDATE SET *` / `INSERT *`), matching Delta's autoMerge scoping.

@@ -170,15 +170,13 @@ case class GraftUpdateCommand(
   }
 }
 
-/** The canonical `MERGE INTO` shapes, mapped onto graft's keyed merge
-  * primitives. [[GraftSqlParser]] admits exactly these; anything else
-  * (multi-condition actions, explicit assignment lists, non-equi ON)
-  * fails at parse time with an actionable message rather than silently
-  * approximating Delta's row-level semantics. */
+/** The two `MERGE INTO` shapes with a keyed primitive of their own
+  * (an anti-join append, a keyed delete). [[GraftSqlParser]] routes them
+  * here when the ON is one bare equi key; every other statement — the
+  * bare upsert included — runs the general clause merge
+  * ([[GraftMergeClausesCommand]]). */
 sealed trait GraftMergeShape
 object GraftMergeShape {
-  /** WHEN MATCHED THEN UPDATE SET * / WHEN NOT MATCHED THEN INSERT * */
-  case object Upsert extends GraftMergeShape
   /** WHEN NOT MATCHED THEN INSERT * only — CDC-style insert-if-absent. */
   case object InsertOnly extends GraftMergeShape
   /** WHEN MATCHED THEN DELETE only — delete keys present in the source. */
@@ -188,7 +186,8 @@ object GraftMergeShape {
 /** `MERGE INTO t USING s ON t.k = s.k WHEN …` for the shapes above.
   * The source plan is analyzed at run time (it may be any query —
   * views, subqueries, joins), exactly as a DataFrame-API caller would
-  * pass an arbitrary source frame to [[GraftTable.merge]]. */
+  * pass an arbitrary source frame to [[GraftTable.append]] or
+  * [[GraftTable.deleteKeys]]. */
 case class GraftMergeCommand(
     table: GraftTable,
     sourcePlan: LogicalPlan,
@@ -201,13 +200,6 @@ case class GraftMergeCommand(
   override def run(session: SparkSession): Seq[Row] = {
     val src = GraftSqlCommands.sourceDf(session, sourcePlan)
     shape match {
-      case GraftMergeShape.Upsert =>
-        val c = table.merge(src, key)
-        val upd = c.metrics.getOrElse("numTargetRowsUpdated",
-          c.metrics.getOrElse("numUpdatedRows", 0L))
-        val ins = c.metrics.getOrElse("numTargetRowsInserted",
-          c.metrics.getOrElse("numInsertedRows", 0L))
-        Seq(Row(upd + ins, upd, 0L, ins))
       case GraftMergeShape.InsertOnly =>
         // Insert-if-absent: anti-join the CURRENT key set, append the rest.
         // The anti-join is broadcast-or-shuffle by Catalyst's sizing; at
@@ -228,8 +220,8 @@ case class GraftMergeCommand(
   }
 }
 
-/** General `MERGE INTO` — the full Delta clause surface beyond the three
-  * canonical shapes of [[GraftMergeCommand]]: ordered conditional
+/** General `MERGE INTO` — the full Delta clause surface beyond the two
+  * keyed shapes of [[GraftMergeCommand]]: ordered conditional
   * `WHEN MATCHED [AND c] THEN UPDATE SET …`/`UPDATE SET *`/`DELETE`,
   * `WHEN NOT MATCHED [AND c] THEN INSERT …`/`INSERT *`, and
   * `WHEN NOT MATCHED BY SOURCE [AND c] THEN UPDATE SET …`/`DELETE`,

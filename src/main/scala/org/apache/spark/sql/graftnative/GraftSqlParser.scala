@@ -134,9 +134,9 @@ class GraftSqlParser(session: SparkSession, delegate: ParserInterface)
         case Some((t, quals)) =>
           val (keys, onExtra) = mergeOnOf(m.mergeCondition)
           mergeShapeOf(m) match {
-            // The canonical reference shapes keep their tuned paths
-            // (change-detection upsert M2, anti-join insert, keyed
-            // delete) — single bare equi key only.
+            // Insert-if-absent and keyed delete keep their own keyed
+            // paths (anti-join append, deleteKeys) — single bare equi key
+            // only.
             case Some(shape) if keys.length == 1 && onExtra.isEmpty =>
               GraftMergeCommand(t, m.sourceTable, keys.head, shape)
             // Everything else — conditional clauses, explicit assignment
@@ -441,12 +441,12 @@ class GraftSqlParser(session: SparkSession, delegate: ParserInterface)
     (keys, rest.reduceOption(And))
   }
 
-  /** The tuned canonical shape, if the statement is exactly one the
-    * reference uses; None routes to the general clause merge.
+  /** The keyed shape, if the statement is exactly insert-if-absent or
+    * keyed delete; None routes to the general clause merge.
     *
     * The bare upsert (`UPDATE SET * / INSERT *`) deliberately does NOT
-    * short-circuit here: [[graft.table.GraftTable.merge]]'s tuned path
-    * drops null-key source rows and change-detects matched rows, while
+    * short-circuit here: [[graft.table.GraftTable.merge]] drops null-key
+    * source rows and change-detects matched rows, while
     * Delta inserts null-key rows (vacuously NOT MATCHED) and updates every
     * matched row — semantics identical SQL must not silently flip when a
     * clause condition is added. SQL MERGE therefore always runs the

@@ -484,6 +484,29 @@ class DeltaExportSpec extends SparkSpec {
     assert(mw >= 4)
   }
 
+  test("resume over a log advertising the feed as TRUE re-emits no metaData or protocol") {
+    val root = tmpDir("dexp-cdf-upper")
+    val t = GraftTable.create(spark,
+      root, Seq((1L, "a"), (2L, "b")).toDF("id", "s"), Nil)
+    DeltaExport.exportLog(t)
+    // Delta reads boolean table properties case-insensitively: a log whose
+    // metaData carries "TRUE" already advertises the change feed
+    val v0 = Paths.get(root, "_delta_log", f"${0L}%020d.json")
+    val rewritten = Files.readAllLines(v0).asScala.map(_.replace(
+      """"delta.enableChangeDataFeed":"true"""", """"delta.enableChangeDataFeed":"TRUE""""))
+    Files.write(v0, rewritten.mkString("", "\n", "\n").getBytes("UTF-8"))
+    Files.deleteIfExists(v0.getParent.resolve(s".${v0.getFileName}.crc"))
+    assert((logLines(root, 0L).map(_ \ "metaData" \ "configuration")
+      .filter(_ != JNothing).head \ "delta.enableChangeDataFeed") === JString("TRUE"))
+
+    t.delete(col("id") === 2L)
+    assert(DeltaExport.exportLog(t) === 1L)
+    assert(logLines(root, 1L).map(_ \ "metaData").forall(_ == JNothing))
+    assert(logLines(root, 1L).map(_ \ "protocol").forall(_ == JNothing))
+    assert(DeltaImport.readChanges(spark, root, 1L, 1L)
+      .filter(col("_change_type") === "delete").count() === 1L)
+  }
+
   test("positional deletes export as Delta deletion vectors and round-trip") {
     val root = tmpDir("dexp-dv")
     val t = GraftTable.create(spark,

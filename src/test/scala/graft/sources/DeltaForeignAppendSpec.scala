@@ -644,4 +644,60 @@ class DeltaForeignAppendSpec extends SparkSpec {
     assert(v === before + 2)
     assert(DeltaImport.read(spark, root).count() === 11L)
   }
+
+  /** A foreign table over `rows` (k, s, n); `dv` advertises deletion
+    * vectors (one positional delete of a key outside `rows`' range). */
+  private def foreignKsn(name: String, rows: Seq[(Long, String, Long)],
+      dv: Boolean): String = {
+    val root = tmpDir(name)
+    val t = GraftTable.create(spark, root,
+      (rows :+ ((999L, "gone", 0L))).toDF("k", "s", "n"), Nil)
+    if (dv) t.deletePositional(col("k") === 999L)
+    else t.delete(col("k") === 999L)
+    DeltaExport.exportLog(t)
+    retire(root)
+    val proto = DeltaImport.snapshot(spark, root).protocol
+    assert(proto.exists(_.writerFeatures.contains("deletionVectors")) === dv)
+    root
+  }
+
+  test("upsert over duplicate target keys updates every matched row, as Delta does") {
+    for (dv <- Seq(true, false)) {
+      val root = foreignKsn(s"fmrg-dupkey-$dv",
+        Seq((1L, "a", 1L), (1L, "b", 2L), (2L, "c", 3L)), dv)
+      val (v, updated, inserted) = DeltaExport.mergeForeignUpsert(spark, root,
+        Seq((1L, "new", 10L)).toDF("k", "s", "n"), "k")
+      assert(updated === 2L && inserted === 0L, s"dv=$dv")
+      val rows = DeltaImport.read(spark, root).select("k", "s", "n")
+        .as[(Long, String, Long)].collect().sorted.toSeq
+      assert(rows === Seq((1L, "new", 10L), (1L, "new", 10L), (2L, "c", 3L)),
+        s"dv=$dv")
+      val ch = DeltaImport.readChanges(spark, root, v, v)
+        .groupBy("_change_type").count().as[(String, Long)].collect().toMap
+      assert(ch === Map("update_preimage" -> 2L, "update_postimage" -> 2L),
+        s"dv=$dv")
+    }
+  }
+
+  test("upsert's strict contract: missing, unknown, lossy and keyless sources refuse") {
+    for (dv <- Seq(true, false)) {
+      val root = foreignKsn(s"fmrg-strict-$dv",
+        Seq((1L, "a", 1L), (2L, "b", 2L)), dv)
+      val before = DeltaImport.latestVersion(spark, root)
+      def refusal(src: org.apache.spark.sql.DataFrame, key: String = "k") =
+        intercept[IllegalArgumentException](
+          DeltaExport.mergeForeignUpsert(spark, root, src, key)).getMessage
+      assert(refusal(Seq((1L, "x")).toDF("k", "s"))
+        .contains(s"merge into $root: missing column n"), s"dv=$dv")
+      assert(refusal(Seq((1L, "x", 1L, 7)).toDF("k", "s", "n", "extra"))
+        .contains(s"merge into $root: unknown column(s) extra"), s"dv=$dv")
+      assert(refusal(Seq((1L, "x", 1.5)).toDF("k", "s", "n"))
+        .contains("column n of type double does not up-cast losslessly to bigint"),
+        s"dv=$dv")
+      assert(refusal(Seq((1L, "x", 1L)).toDF("k", "s", "n"), key = "id")
+        .contains(s"merge into $root: no key column named id"), s"dv=$dv")
+      assert(DeltaImport.latestVersion(spark, root) === before, s"dv=$dv")
+      assert(DeltaImport.read(spark, root).count() === 2L, s"dv=$dv")
+    }
+  }
 }
