@@ -14,6 +14,10 @@ import org.apache.spark.sql.{DataFrame, SparkSession}
   *    GraftTable builds for q10-q16 land OUTSIDE the timed region, so those
   *    numbers measure the versioned READ path, not fixture construction.
   *  - Median of SPARK_GRAFT_BENCH_RUNS (default 3) timed runs per query.
+  *  - A query that throws, in the warm-up or in any timed run, has no
+  *    time: it is listed under "failed" in the artifact with its error
+  *    text, and left out of "queries", the total and the refine. The
+  *    totals line counts it in "n_failed".
   *  - Heavy-tail re-measure: the slowest queries (≥1 s) re-run in a FRESH
   *    child JVM after the sweep — long single-JVM sweeps otherwise inflate
   *    their tail 1.7-2.2× with accumulated JIT/GC state no start-of-run
@@ -77,18 +81,17 @@ object Bench {
       .map(_.split(",").map(_.trim).filter(_.nonEmpty).toSeq)
     val selected = SparkEntry.queries.filter { case (name, _) =>
       only.forall(_.exists(name.contains)) }
-    selected.foreach { case (_, fn) =>
-      try execute(fn(spark, sfDir)) catch { case _: Throwable => () }
+    val warmFailed = selected.flatMap { case (name, fn) =>
+      timed(1)(execute(fn(spark, sfDir))).left.toOption.map(name -> _)
     }
     // "median" for the sweep (the headline methodology); the refine child
     // runs with "min" — see the scaladoc.
     val stat = sys.env.getOrElse("SPARK_GRAFT_BENCH_STAT", "median")
-    val sweep = selected.map { case (name, fn) =>
-      val times = (0 until runs).map { _ =>
-        val t0 = System.nanoTime()
-        try execute(fn(spark, sfDir)) catch { case _: Throwable => () }
-        (System.nanoTime() - t0) / 1e9
-      }.sorted
+    val timings = selected.filterNot { case (name, _) => warmFailed.contains(name) }
+      .map { case (name, fn) => name -> timed(runs)(execute(fn(spark, sfDir))) }
+    val failed = warmFailed ++ timings.collect { case (name, Left(e)) => name -> e }
+    val sweep = timings.collect { case (name, Right(ts)) =>
+      val times = ts.sorted
       name -> (if (stat == "min") times.head else times(times.length / 2))
     }
     // Heavy-tail hygiene: a long single-JVM sweep accumulates JIT/GC/code-
@@ -178,17 +181,20 @@ object Bench {
       k -> math.min(v, prior.getOrElse(k, v)) }
     val bestJson = best.toSeq.sortBy(_._1)
       .map { case (k, v) => s"\"" + k + "\":" + fmt(v) }.mkString("{", ",", "}")
+    val failedJson = failed.toSeq.sortBy(_._1)
+      .map { case (k, e) => s"\"" + k + "\":\"" + jsonEscape(e) + "\"" }
+      .mkString("{", ",", "}")
     try {
       val full = s"""{"metric":"total","value":${fmt(total)},"unit":"sec",""" +
-        s""""n":${results.size},"sf":"$sfDir",$host,"queries":$qs,""" +
-        s""""best":$bestJson}"""
+        s""""n":${results.size},"n_failed":${failed.size},"sf":"$sfDir",$host,""" +
+        s""""queries":$qs,"failed":$failedJson,"best":$bestJson}"""
       if (contended && java.nio.file.Files.exists(outPath))
         System.err.println(s"[bench] host contended at start " +
           s"(loadavg $loadStart / $hostCpus cpus): keeping existing $outFile")
       else java.nio.file.Files.write(outPath, (full + "\n").getBytes("UTF-8"))
     } catch { case _: Throwable => () } // stdout lines below still carry everything
     results.foreach { case (k, v) => println(s"""{"q":"$k","sec":${fmt(v)}}""") }
-    println(s"""{"metric":"total","value":${fmt(total)},"unit":"sec","n":${results.size},"sf":"$sfDir",$host,"queries_file":"$outFile"}""")
+    println(s"""{"metric":"total","value":${fmt(total)},"unit":"sec","n":${results.size},"n_failed":${failed.size},"sf":"$sfDir",$host,"queries_file":"$outFile"}""")
     spark.stop()
   }
 
@@ -196,6 +202,25 @@ object Bench {
     * every row, so nothing upstream can be pruned away. */
   private def execute(df: DataFrame): Unit =
     df.write.mode("overwrite").format("noop").save()
+
+  /** Seconds of each of `runs` executions of `body`, or — if any run
+    * throws — the error text (`toString`, at most 200 chars): the time to
+    * a throw measures nothing, so a failing query gets no time at all. */
+  private[graft] def timed(runs: Int)(body: => Unit): Either[String, Seq[Double]] =
+    try Right((0 until runs).map { _ =>
+      val t0 = System.nanoTime()
+      body
+      (System.nanoTime() - t0) / 1e9
+    })
+    catch { case e: Throwable => Left(e.toString.take(200)) }
+
+  /** `s` as the body of a JSON string literal. */
+  private[graft] def jsonEscape(s: String): String = s.flatMap {
+    case '"' => "\\\""
+    case '\\' => "\\\\"
+    case c if c < ' ' => " "
+    case c => c.toString
+  }
 
   /** The flat {"name":number,…} object under `key` in a prior artifact
     * line — regex-scoped to the object's braces, no JSON lib needed for

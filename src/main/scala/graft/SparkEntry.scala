@@ -121,7 +121,7 @@ object SparkEntry {
     "q80_trailing_window"    -> (OlapQueries.trailingSpend _),
     "q81_dup_clusters_lsh"   -> (CorpusQueries.dupClustersLsh _),
     "q82_salted_join"        -> (OlapQueries.saltedEnrich _),
-    "q83_mor_delete"         -> (MutationQueries.morDeleteWhere _),
+    "q83_mor_delete"         -> (MutationQueries.dvDeleteWhere _),
     "q84_bigram_lm"          -> (CorpusQueries.bigramLm _),
     "q85_embedding_stats"    -> (CorpusQueries.embeddingStats _),
     "q86_clean_corpus"       -> (CorpusQueries.cleanCorpus _),
@@ -1192,14 +1192,14 @@ object SparkEntry {
 
     "q11_delete_where" -> "SELECT * FROM orders WHERE o_orderstatus <> 'F'",
     // merge-on-read delete + post-delete append: non-F rows plus the
-    // appended F subset the tombstone coverage must not suppress
+    // appended F subset the deletion vector must not suppress (the same
+    // table as q88)
     "q83_mor_delete" ->
       """SELECT * FROM orders WHERE o_orderstatus <> 'F'
         |UNION ALL
         |SELECT * FROM orders
         |WHERE o_orderstatus = 'F' AND o_orderkey % 100 = 0""".stripMargin,
-    // positional-DV delete: same snapshot semantics as q83, different
-    // physical subtraction (in-scan position filter, no join)
+    // positional-DV delete: in-scan position filter, no join
     "q88_dv_delete" ->
       """SELECT * FROM orders WHERE o_orderstatus <> 'F'
         |UNION ALL

@@ -61,26 +61,9 @@ object MutationQueries {
   def deleteWhere(spark: SparkSession, dir: String): DataFrame =
     deletedOrdersTable(spark, dir).read()
 
-  /** Orders table with the same rows deleted MERGE-ON-READ (tombstones,
-    * no data rewrite) plus a post-delete append the tombstones must not
-    * touch — the deletion-vector read path. */
-  private def morDeletedOrdersTable(spark: SparkSession, dir: String): GraftTable =
-    cached(dir, "mor-deleted") {
-      val orders = Tables.orders(spark, dir)
-      val t = GraftTable.create(spark, freshDir("mor"), orders)
-      t.deleteMergeOnRead(col("o_orderstatus") === "F")
-      // appended after the delete: 'F' rows that MUST survive (coverage)
-      t.append(orders.filter(col("o_orderstatus") === "F")
-        .filter(pmod(col("o_orderkey"), lit(100)) === 0))
-      t
-    }
-
-  /** Merge-on-read DELETE read path (deletion-vector analogue): the
-    * snapshot equals predicate-delete output UNION the rows appended after
-    * the delete — tombstones subtract only from the dirs they covered. */
-  def morDeleteWhere(spark: SparkSession, dir: String): DataFrame =
-    morDeletedOrdersTable(spark, dir).read()
-
+  /** Orders table with the 'F' rows deleted MERGE-ON-READ (deletion
+    * vectors, no data rewrite) plus a post-delete append the vectors must
+    * not touch — shared by q83 and q88. */
   private def dvDeletedOrdersTable(spark: SparkSession, dir: String): GraftTable =
     cached(dir, "dv-deleted") {
       val orders = Tables.orders(spark, dir)
@@ -93,12 +76,12 @@ object MutationQueries {
       t
     }
 
-  /** POSITIONAL deletion-vector DELETE read path (Delta DV parity,
+  /** Merge-on-read DELETE read path (Delta DV parity,
     * delta_handler.py:215-225's delete semantics without the rewrite):
     * deleted rows are recorded as (file, row_index) pairs and the read
     * subtracts them with an in-scan per-file position filter — NO join in
-    * the plan (asserted by DeletionVectorSpec), vs q83's value-tombstone
-    * anti-join. Same snapshot semantics, same oracle shape. */
+    * the plan (asserted by DeletionVectorSpec). The snapshot equals
+    * predicate-delete output UNION the rows appended after the delete. */
   def dvDeleteWhere(spark: SparkSession, dir: String): DataFrame =
     dvDeletedOrdersTable(spark, dir).read()
 

@@ -49,34 +49,22 @@ import graft.table.{Commit, CommitLog, GraftTable}
   * `_change_data/`, and `delta.enableChangeDataFeed` is advertised — a
   * Delta reader's load_cdf round-trips the graft change feed.
   *
-  * Value-tombstone MoR state is a predicate over row VALUES — no Delta
-  * action encodes it — so tombstone-carrying versions MATERIALIZE at
-  * mirror time: the covered dir prefix is rewritten once (tombstones +
-  * DVs applied) under a content-keyed `_delta_materialized/` dir the
-  * Delta commit adds in place of the covered files; appends past the
-  * covers stay incremental and reuse the materialization. The mirror
-  * never stalls, and the Delta snapshot equals the graft snapshot at
-  * every version.
-  *
   * Scale: export is a driver-side metadata fold (one file listing per
   * immutable data dir, footer reads for new files only) — the cost class
   * of a Delta writer's own commit path. The exceptions are bounded and
   * per-changed-version only: one distributed bitmap build over the dv
   * dirs of a DV-changing commit ([[buildMirrorDvs]] — positions fold into
   * RoaringBitmaps on executors, only per-file descriptors reach the
-  * driver), one rewrite job over the `_changes` rows of a
-  * CDF-carrying commit, and one covered-prefix rewrite per DISTINCT
-  * value-tombstone state (the same job graft's own optimize() remedy
-  * would run, executed lazily on the mirror side).
+  * driver) and one rewrite job over the `_changes` rows of a
+  * CDF-carrying commit.
   */
 object DeltaExport {
 
   private implicit val formats: Formats = DefaultFormats
 
   /** Highest graft version exportable as a contiguous Delta log prefix —
-    * every version: positional deletes export as real Delta DVs, and
-    * value-tombstone MoR versions auto-materialize their covered prefix
-    * (see [[exportLog]]), so the mirror never stalls. */
+    * every version: merge-on-read deletes export as real Delta DVs (see
+    * [[exportLog]]), so the mirror never stalls. */
   def exportableUpTo(table: GraftTable): Long = {
     val cs = new CommitLog(table.root, table.spark.sessionState.newHadoopConf()).commits()
     cs.lastOption.map(_.version).getOrElse(-1L)
@@ -253,47 +241,6 @@ object DeltaExport {
         .select("file").distinct().collect()
         .map(r => relOfAbsolute(r.getString(0))).toSet
 
-    // Value-tombstone MoR state is a predicate over row VALUES — no Delta
-    // action encodes it. Rather than halt the mirror, the covered prefix
-    // (the dirs at least one tombstone applies to; appends past every
-    // cover are untouched) is MATERIALIZED: rewritten once, tombstones
-    // and DVs applied, under a content-keyed dir the Delta commit adds in
-    // place of the covered files. The key hashes exactly the inputs of
-    // the rewrite, so consecutive commits that only append (the common
-    // stream shape: tombstones persist until a rewrite clears them) REUSE
-    // the materialization and stay incremental — one rewrite per distinct
-    // MoR state, not per version.
-    def materializedPrefix(c: Commit, covered: Int): String = {
-      val keySrc = (c.dataDirs.take(covered) ++ c.tombstoneDirs ++ c.dvDirs ++
-        c.tombstoneDirs.map(t =>
-          c.properties.getOrElse(GraftTable.TombstoneCoverPrefix + t, "")))
-        .mkString("\n")
-      val key = java.util.UUID.nameUUIDFromBytes(
-        keySrc.getBytes(StandardCharsets.UTF_8)).toString
-      val rel = s"_delta_materialized/$key"
-      val dest = new Path(root, rel)
-      if (!fs.exists(dest)) {
-        val stage = new Path(root, s".mat-stage-${java.util.UUID.randomUUID()}")
-        // Materialized files carry PHYSICAL names like every other data
-        // file (readMorPrefix returns logical; the rename is mapping-
-        // invariant — physical names are birth-stable — so the
-        // content-keyed dir stays deterministic across renames).
-        val mat = colMapOfProps(c.properties)
-          .filter { case (lg, ph) => lg != ph }
-          .foldLeft(table.readMorPrefix(c.version, covered)) {
-            case (d, (lg, ph)) => d.withColumnRenamed(lg, ph) }
-        val w = mat.write.mode("overwrite")
-        (if (c.partitionCols.nonEmpty) w.partitionBy(c.partitionCols: _*) else w)
-          .parquet(stage.toString)
-        if (!fs.rename(stage, dest)) {
-          fs.delete(stage, true)
-          // lost a race: the winner wrote the same deterministic content
-          if (!fs.exists(dest)) throw new java.io.IOException(s"cannot publish $dest")
-        }
-      }
-      rel
-    }
-
     // ---- row tracking (tracked-from-birth tables): replicate the graft
     // id fold so the mirror's baseRowIds equal graft's derived ids. Dir
     // ranges advance by the RECORDED footer row counts (no file access —
@@ -364,36 +311,16 @@ object DeltaExport {
     commits.dropWhile(_.version <= published)
       .takeWhile(_.version <= target).foreach { c =>
       val out = new Path(logDir, f"${c.version}%020d.json")
-      // Value-tombstone MoR materialization rewrites the covered prefix
-      // under export-owned dirs the graft id fold cannot see — the mirror
-      // would diverge from graft's ids. Positional (DV) deletes are fully
-      // supported; value-form MoR state must be materialized graft-side
-      // first (the same precondition optimizeWhere states).
-      if (rtActive) require(c.tombstoneDirs.isEmpty,
-        s"row-tracking export of ${table.root}: version ${c.version} carries " +
-          "value-tombstone MoR state — run materializeDeletes() before mirroring")
       val rowHighBefore = rowHigh
       if (rtActive) allocateRowIds(c, listFiles = true)
       val cur: Map[String, FileStatus] =
-        if (c.tombstoneDirs.isEmpty)
-          c.dataDirs.flatMap(d => filesOf(d).map(st => relPath(st) -> st)).toMap
-        else {
-          val full = c.dataDirs.length
-          val covered = math.min(full, c.tombstoneDirs.map(t =>
-            c.properties.get(GraftTable.TombstoneCoverPrefix + t)
-              .map(_.toInt).getOrElse(full)).max)
-          val matRel = materializedPrefix(c, covered)
-          (filesOf(matRel) ++ c.dataDirs.drop(covered).flatMap(filesOf))
-            .map(st => relPath(st) -> st).toMap
-        }
+        c.dataDirs.flatMap(d => filesOf(d).map(st => relPath(st) -> st)).toMap
 
       // Deletion-vector delta: when the commit's dv dirs changed, the
       // affected files re-enter the log as remove+add carrying their NEW
       // descriptor (Delta's own DV-update shape). Append-only growth (the
       // normal MoR delete) touches only files named in the new dirs; a
-      // reset (purge / restore) recomputes every descriptor. Files inside
-      // a materialized prefix are absent from `cur`, so their DV state
-      // (already folded into the rewrite) drops out here by construction.
+      // reset (purge / restore) recomputes every descriptor.
       val (curDv, dvChanged): (Map[String, DeltaDeletionVectors.Descriptor], Set[String]) =
         if (c.dvDirs.toSet == prevDvDirs.toSet)
           (prevDv.filter { case (k, _) => cur.contains(k) }, Set.empty[String])
@@ -1089,45 +1016,37 @@ object DeltaExport {
   }
 
   /** Delta-side VACUUM of EXPORT-OWNED artifacts: deletes files under
-    * `_delta_materialized/` (tombstone-materialization rewrites) and
-    * `_change_data/` (exported cdc files) that are no longer part of the
-    * CURRENT snapshot and are older than the retention window — without
-    * this, a long-running mirror that takes value-tombstone deletes (each
-    * distinct MoR state leaves a superseded materialization behind) or
-    * maintains a change feed (cdc files accrete per commit) leaks disk
-    * forever. Graft's own data/tombstone/dv dirs are NEVER touched here
-    * ([[GraftTable.vacuum]] owns those); deleting an aged cdc file bounds
-    * CDF availability to the retention window, exactly Delta VACUUM's
-    * documented behavior. Returns the deleted paths. */
+    * `_change_data/` (exported cdc files; no snapshot ever references
+    * them) that are older than the retention window — without this, a
+    * long-running mirror that maintains a change feed (cdc files accrete
+    * per commit) leaks disk forever. Graft's own data/dv dirs are NEVER
+    * touched here ([[GraftTable.vacuum]] owns those); deleting an aged cdc
+    * file bounds CDF availability to the retention window, exactly Delta
+    * VACUUM's documented behavior. Returns the deleted paths. */
   def vacuumExportArtifacts(spark: SparkSession, tablePath: String,
       retentionMs: Long = 7L * 24 * 3600 * 1000,
       nowMs: Long = System.currentTimeMillis()): Seq[String] = {
     val conf = spark.sessionState.newHadoopConf()
     val root = new Path(tablePath)
     val fs = root.getFileSystem(conf)
-    val live: Set[String] =
-      DeltaImport.snapshot(spark, tablePath).files.map(f => decodePath(f.path)).toSet
     val horizon = nowMs - retentionMs
     val rootPathStr = root.toUri.getPath.stripSuffix("/")
     val deleted = Seq.newBuilder[String]
-    Seq("_delta_materialized", "_change_data").foreach { side =>
-      val dir = new Path(root, side)
-      if (fs.exists(dir)) {
-        val it = fs.listFiles(dir, true)
-        while (it.hasNext) {
-          val st = it.next()
-          if (st.isFile) {
-            val rel = st.getPath.toUri.getPath
-              .stripPrefix(rootPathStr).stripPrefix("/")
-            if (!live(rel) && st.getModificationTime < horizon &&
-                fs.delete(st.getPath, false))
-              deleted += rel
-          }
+    val dir = new Path(root, "_change_data")
+    if (fs.exists(dir)) {
+      val it = fs.listFiles(dir, true)
+      while (it.hasNext) {
+        val st = it.next()
+        if (st.isFile) {
+          val rel = st.getPath.toUri.getPath
+            .stripPrefix(rootPathStr).stripPrefix("/")
+          if (st.getModificationTime < horizon && fs.delete(st.getPath, false))
+            deleted += rel
         }
-        // reap dirs the sweep emptied (ignore failures: non-empty stays)
-        fs.listStatus(dir).filter(_.isDirectory).foreach { d =>
-          if (fs.listStatus(d.getPath).isEmpty) fs.delete(d.getPath, false)
-        }
+      }
+      // reap dirs the sweep emptied (ignore failures: non-empty stays)
+      fs.listStatus(dir).filter(_.isDirectory).foreach { d =>
+        if (fs.listStatus(d.getPath).isEmpty) fs.delete(d.getPath, false)
       }
     }
     // Abandoned staging dirs from crashed exporters (publication is
@@ -1143,7 +1062,7 @@ object DeltaExport {
         if (fs.delete(st.getPath, true))
           deleted += st.getPath.getName
       }
-    sweepStages(root, Seq(".mat-stage-", ".cdc-stage-"))
+    sweepStages(root, Seq(".cdc-stage-"))
     sweepStages(logDir, Seq(".ckpt-stage-", ".lastckpt-"))
     deleted.result()
   }

@@ -51,11 +51,6 @@ final case class Commit(
       * `metaData.configuration` analogue). CHECK constraints live here as
       * `constraint.<name> -> <sql predicate>`. */
     properties: Map[String, String] = Map.empty,
-    /** Merge-on-read tombstone dirs (value-matching deletion form): parquet
-      * of DELETED rows that reads subtract by null-safe anti-join. Carried
-      * forward by appends; cleared by any snapshot rewrite, which
-      * materializes the subtraction. */
-    tombstoneDirs: Seq[String] = Nil,
     /** POSITIONAL deletion-vector dirs (Delta deletion-vector parity):
       * parquet of (file, pos) pairs naming deleted row positions —
       * `_metadata.file_path` / `_metadata.row_index` of the deleted rows.
@@ -134,8 +129,11 @@ final class CommitLog(tableRoot: String, conf: Configuration) {
     // without atomic rename) is simply ignored for this read.
     val fromCkpt: Seq[Commit] = ckpt.flatMap { s =>
       try Some(parsedCheckpoints.getOrElseUpdate(s.getPath.getName,
-        CommitLog.manyFromJson(readFile(s.getPath, s.getLen))))
-      catch { case scala.util.control.NonFatal(_) => None }
+        parse(s)(CommitLog.manyFromJson)))
+      catch {
+        case e: CommitLog.ValueTombstonesRefused => throw e
+        case scala.util.control.NonFatal(_) => None
+      }
     }.getOrElse(Seq.empty)
     val ckptMax = fromCkpt.lastOption.map(_.version).getOrElse(-1L)
     val tail = entries
@@ -147,11 +145,16 @@ final class CommitLog(tableRoot: String, conf: Configuration) {
           n.stripSuffix(".json").toLong > ckptMax
       }
       .map { s =>
-        parsedByName.getOrElseUpdate(s.getPath.getName,
-          CommitLog.fromJson(readFile(s.getPath, s.getLen)))
+        parsedByName.getOrElseUpdate(s.getPath.getName, parse(s)(CommitLog.fromJson))
       }
     (fromCkpt ++ tail).sortBy(_.version)
   }
+
+  /** Parse one log file; a retired-format entry is refused naming this table. */
+  private def parse[T](s: org.apache.hadoop.fs.FileStatus)(f: String => T): T =
+    try f(readFile(s.getPath, s.getLen))
+    catch { case e: CommitLog.ValueTombstonesRefused =>
+      throw new CommitLog.ValueTombstonesRefused(tableRoot, e.version) }
 
   private val parsedCheckpoints =
     scala.collection.concurrent.TrieMap.empty[String, Seq[Commit]]
@@ -340,6 +343,18 @@ object CommitLog {
   val LogDirName = "_graft_log"
   val CheckpointPrefix = "_ckpt-"
 
+  /** A log entry that still lists `tombstoneDirs`: parquet of deleted
+    * rows, the retired value-tombstone merge-on-read format, which reads
+    * used to subtract by anti-join. No read subtracts them any more, so
+    * such a log is refused when opened — ignoring the field would bring
+    * the deleted rows back. */
+  final class ValueTombstonesRefused(val table: String, val version: Long)
+      extends IllegalStateException(
+        s"version $version of table $table carries value tombstones " +
+          "(tombstoneDirs), a retired merge-on-read format this engine " +
+          "cannot subtract; reading it would bring deleted rows back — " +
+          "OPTIMIZE the table with the engine that wrote it, then reopen")
+
   // Scheme → publish strategy. Defaults cover local disk and HDFS-class
   // rename semantics; object-store deployments register a
   // ConditionalPutPublisher for their scheme (s3a/gs/abfs) at startup.
@@ -391,9 +406,6 @@ object CommitLog {
         List("properties" -> (JObject(c.properties.toList.map {
           case (k, v) => k -> (JString(v): JValue)
         }): JValue))
-      else Nil) ++
-      (if (c.tombstoneDirs.nonEmpty)
-        List("tombstoneDirs" -> (JArray(c.tombstoneDirs.map(JString(_)).toList): JValue))
       else Nil) ++
       (if (c.dvDirs.nonEmpty)
         List("dvDirs" -> (JArray(c.dvDirs.map(JString(_)).toList): JValue))
@@ -464,9 +476,9 @@ object CommitLog {
       case JObject(fields) => fields.collect { case (k, JString(v)) => k -> v }.toMap
       case _ => Map.empty[String, String]
     }
-    val tombstones = j \ "tombstoneDirs" match {
-      case JArray(xs) => xs.collect { case JString(v) => v }
-      case _ => Nil
+    j \ "tombstoneDirs" match {
+      case JArray(xs) if xs.nonEmpty => throw new ValueTombstonesRefused("", lng("version"))
+      case _ => ()
     }
     val dvs = j \ "dvDirs" match {
       case JArray(xs) => xs.collect { case JString(v) => v }
@@ -490,6 +502,6 @@ object CommitLog {
     }
     Commit(lng("version"), lng("tsMs"), str("operation"), dirs, metrics,
       str("schemaJson"), txnApp, txnBatch, partCols, dirStats, changesDir,
-      properties, tombstones, dvs, copied, dirNulls)
+      properties, dvs, copied, dirNulls)
   }
 }

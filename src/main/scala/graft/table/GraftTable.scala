@@ -100,8 +100,7 @@ final class GraftTable private (
     * [[graft.sim.Similarity.lshParams]]) without a scan. */
   def rowCount: Long =
     log.latest().map(c =>
-      c.dataDirs.map(countDir).sum - c.tombstoneDirs.map(countDir).sum -
-        c.dvDirs.map(countDir).sum).getOrElse(0L)
+      c.dataDirs.map(countDir).sum - c.dvDirs.map(countDir).sum).getOrElse(0L)
 
   private def commitFor(v: Long): Commit =
     log.commits().find(_.version == v).getOrElse(
@@ -115,14 +114,6 @@ final class GraftTable private (
     * the same stable per-file row identity Delta deletion vectors use. */
   private def readCommitWithPos(c: Commit): DataFrame =
     readCommitInternal(c, withPos = true)
-
-  /** The snapshot at version `v` restricted to its first `n` data dirs,
-    * with every applicable value tombstone and deletion vector applied —
-    * the Delta export bridge ([[graft.sources.DeltaExport]]) materializes
-    * exactly the tombstone-covered prefix when mirroring a MoR version,
-    * leaving dirs beyond the covers (pure appends) untouched in the log. */
-  private[graft] def readMorPrefix(v: Long, n: Int): DataFrame =
-    readCommitInternal(commitFor(v), withPos = false, upToDirs = n)
 
   // ------------------------------------------------------- column mapping
   // Every byte on disk carries PHYSICAL column names; everything above the
@@ -181,21 +172,20 @@ final class GraftTable private (
   }
 
   private def readCommitInternal(c: Commit, withPos: Boolean,
-      upToDirs: Int = Int.MaxValue, withRowId: Boolean = false): DataFrame = {
+      withRowId: Boolean = false): DataFrame = {
     val schema = DataType.fromJson(c.schemaJson).asInstanceOf[StructType]
     val cmap = colMapOf(c.properties)
     val physSchema = physSchemaOf(schema, cmap)
     // Row-id reads ALSO scan the hidden materialized id column: dirs
     // written by a plain append lack it and read back null (explicit-
     // schema semantics), which is exactly the "derive from metadata"
-    // signal the coalesce in [[readWithRowIdsOf]] keys on. Tombstone
-    // anti-joins keep matching on the LOGICAL schema only.
+    // signal the coalesce in [[readWithRowIdsOf]] keys on.
     val scanSchema =
       if (!withRowId) physSchema
       else StructType(physSchema.fields :+
         org.apache.spark.sql.types.StructField(
           RowIdCol, org.apache.spark.sql.types.LongType))
-    val dirs = c.dataDirs.take(upToDirs).map(d => new Path(root, d))
+    val dirs = c.dataDirs.map(d => new Path(root, d))
     val missing = dirs.filterNot(fs.exists)
     if (missing.nonEmpty)
       throw new IllegalStateException(
@@ -210,99 +200,57 @@ final class GraftTable private (
       if (c.dvDirs.isEmpty || dvEntryCount > dvInlineMax) None
       else Some(dvEntriesOf(c))
     val needPos = withPos || c.dvDirs.nonEmpty || withRowId
-    def readDirs(ds: Seq[Path]): DataFrame = {
-      val base =
-        if (ds.isEmpty) {
-          val df0 = spark.createDataFrame(
-            spark.sparkContext.emptyRDD[org.apache.spark.sql.Row], schema)
-          val df = if (withRowId) df0.withColumn(RowIdCol, lit(null).cast("long")) else df0
-          if (needPos)
-            df.withColumn(DvFileCol, lit(null).cast("string"))
-              .withColumn(DvPosCol, lit(null).cast("long"))
-          else df
-        } else {
-          // Explicit schema (from the commit) rather than mergeSchema: no
-          // footer sampling job, stable column order, and dirs written before
-          // an additive schema change read back with nulls for new columns.
-          def one(reader: org.apache.spark.sql.DataFrameReader, path: Seq[String]): DataFrame = {
-            val df0 = reader.schema(scanSchema).parquet(path: _*)
-            // _metadata is per-scan: derive the lineage columns before any
-            // union so they ride the row through the rest of the plan.
-            val df = toLogicalDf(
-              if (needPos)
-                df0.withColumn(DvFileCol, col("_metadata.file_path"))
-                  .withColumn(DvPosCol, col("_metadata.row_index"))
-              else df0, cmap)
-            df
-          }
-          if (c.partitionCols.isEmpty) one(spark.read, ds.map(_.toString))
-          else
-            // Hive-partitioned layout: partition values live in dir names
-            // under each version dir, so discovery needs a basePath per dir;
-            // the union keeps pushdown + partition pruning in every branch.
-            ds.map(d => one(spark.read.option("basePath", d.toString), Seq(d.toString)))
-              .reduce(_ unionByName _)
+    val base =
+      if (dirs.isEmpty) {
+        val df0 = spark.createDataFrame(
+          spark.sparkContext.emptyRDD[org.apache.spark.sql.Row], schema)
+        val df = if (withRowId) df0.withColumn(RowIdCol, lit(null).cast("long")) else df0
+        if (needPos)
+          df.withColumn(DvFileCol, lit(null).cast("string"))
+            .withColumn(DvPosCol, lit(null).cast("long"))
+        else df
+      } else {
+        // Explicit schema (from the commit) rather than mergeSchema: no
+        // footer sampling job, stable column order, and dirs written before
+        // an additive schema change read back with nulls for new columns.
+        def one(reader: org.apache.spark.sql.DataFrameReader, path: Seq[String]): DataFrame = {
+          val df0 = reader.schema(scanSchema).parquet(path: _*)
+          // _metadata is per-scan: derive the lineage columns before any
+          // union so they ride the row through the rest of the plan.
+          val df = toLogicalDf(
+            if (needPos)
+              df0.withColumn(DvFileCol, col("_metadata.file_path"))
+                .withColumn(DvPosCol, col("_metadata.row_index"))
+            else df0, cmap)
+          df
         }
-      val subtracted =
-        if (c.dvDirs.isEmpty || ds.isEmpty) base
-        else dvInline match {
-          case Some(byFile) if byFile.isEmpty => base // delete matched no rows
-          case Some(byFile) =>
-            // One hash lookup + binary search per row, codegen'd — cost
-            // independent of how many files carry deletions (vs an OR
-            // chain of per-file string equalities).
-            val dead = org.apache.spark.sql.graftnative.DvExpressions.positionDeleted(
-              col(DvFileCol), col(DvPosCol),
-              byFile.map { case (f, ps) => f -> ps.toArray })
-            base.filter(!coalesce(dead, lit(false)))
-          case None =>
-            val entries = spark.read
-              .parquet(c.dvDirs.map(d => new Path(root, d).toString): _*)
-              .select(col("file").as(DvFileCol), col("pos").as(DvPosCol))
-            base.join(entries, Seq(DvFileCol, DvPosCol), "left_anti")
-        }
-      if (needPos && !withPos) subtracted.drop(DvFileCol, DvPosCol) else subtracted
-    }
-
-    if (c.tombstoneDirs.isEmpty) readDirs(dirs)
-    else {
-      // Merge-on-read: subtract tombstone rows by NULL-SAFE anti-join over
-      // every column. A duplicate of a predicate-deleted row necessarily
-      // matched the same predicate, so whole-row subtraction IS
-      // predicate-delete semantics — no row id, no key column, no hashing.
-      // Each tombstone applies only to the data dirs that existed when it
-      // was written (its recorded coverage prefix — appends only extend
-      // the dir list): a row appended AFTER the delete is never
-      // suppressed, even if value-identical. The read is a union of dir
-      // segments, each anti-joined against exactly the tombstones that
-      // cover it; rewrites clear all of this.
-      def antiJoin(base: DataFrame, tombs: Seq[String]): DataFrame = {
-        // Tombstone files carry physical names too (written through the
-        // same boundary); the positional toDF restores logical ts-names.
-        val ts = spark.read.schema(physSchema)
-          .parquet(tombs.map(d => new Path(root, d).toString): _*)
-          .toDF(schema.fieldNames.map("__ts_" + _): _*)
-        val cond = schema.fieldNames
-          .map(f => base(f) <=> ts("__ts_" + f))
-          .reduce(_ && _)
-        base.join(ts, cond, "left_anti")
+        if (c.partitionCols.isEmpty) one(spark.read, dirs.map(_.toString))
+        else
+          // Hive-partitioned layout: partition values live in dir names
+          // under each version dir, so discovery needs a basePath per dir;
+          // the union keeps pushdown + partition pruning in every branch.
+          dirs.map(d => one(spark.read.option("basePath", d.toString), Seq(d.toString)))
+            .reduce(_ unionByName _)
       }
-      // Coverage indexes clamp to the read window (`upToDirs`): a
-      // tombstone covering dirs [0, l) applies in full to any prefix
-      // read of at most l dirs — identical arithmetic when unrestricted.
-      val n = math.min(c.dataDirs.length, upToDirs)
-      def coverOf(t: String): Int = math.min(n,
-        c.properties.get(TombstoneCoverPrefix + t).map(_.toInt)
-          .getOrElse(c.dataDirs.length))
-      val covers = c.tombstoneDirs.map(t => t -> coverOf(t))
-      val bounds = (covers.map(_._2) :+ n).distinct.sorted
-      val segments = (0 +: bounds.dropRight(1)).zip(bounds)
-      segments.map { case (a, b) =>
-        val seg = readDirs(dirs.slice(a, b))
-        val applicable = covers.collect { case (t, l) if l >= b => t }
-        if (applicable.isEmpty || a == b) seg else antiJoin(seg, applicable)
-      }.reduce(_ unionByName _)
-    }
+    val subtracted =
+      if (c.dvDirs.isEmpty || dirs.isEmpty) base
+      else dvInline match {
+        case Some(byFile) if byFile.isEmpty => base // delete matched no rows
+        case Some(byFile) =>
+          // One hash lookup + binary search per row, codegen'd — cost
+          // independent of how many files carry deletions (vs an OR
+          // chain of per-file string equalities).
+          val dead = org.apache.spark.sql.graftnative.DvExpressions.positionDeleted(
+            col(DvFileCol), col(DvPosCol),
+            byFile.map { case (f, ps) => f -> ps.toArray })
+          base.filter(!coalesce(dead, lit(false)))
+        case None =>
+          val entries = spark.read
+            .parquet(c.dvDirs.map(d => new Path(root, d).toString): _*)
+            .select(col("file").as(DvFileCol), col("pos").as(DvPosCol))
+          base.join(entries, Seq(DvFileCol, DvPosCol), "left_anti")
+      }
+    if (needPos && !withPos) subtracted.drop(DvFileCol, DvPosCol) else subtracted
   }
 
   /** Current snapshot (SURVEY S3). */
@@ -396,10 +344,6 @@ final class GraftTable private (
     * history — Delta-style file skipping at dir granularity. */
   def readPruned(colName: String, lo: Double, hi: Double): DataFrame = {
     val c = log.latest().getOrElse(throw new NoSuchElementException(s"no commits at $root"))
-    // Tombstone coverage is positional over dataDirs; dropping dirs would
-    // misalign it. Merge-on-read deletes are transient (any rewrite clears
-    // them), so just skip the skipping until then — still a superset read.
-    if (c.tombstoneDirs.nonEmpty) return readCommit(c)
     // CHECK constraints are table-WIDE invariants (every committed row of
     // every dir was validated against them), so a range constraint on this
     // column stands in where a dir recorded no stats, and a query window
@@ -534,10 +478,10 @@ final class GraftTable private (
     Seq((
       "graft", root, c.version, new java.sql.Timestamp(c.tsMs),
       c.dataDirs.size, nFiles, nBytes, c.partitionCols, c.properties,
-      c.tombstoneDirs.size, c.dvDirs.size))
+      c.dvDirs.size))
       .toDF("format", "location", "version", "lastModified", "numDirs",
         "numFiles", "sizeInBytes", "partitionColumns", "properties",
-        "numTombstoneDirs", "numDvDirs")
+        "numDvDirs")
   }
 
   /** GENERATE symlink_format_manifest (Delta parity,
@@ -549,14 +493,13 @@ final class GraftTable private (
     * atomic via temp+rename so concurrent readers never see a torn
     * manifest. The manifest is a SNAPSHOT — regenerate after commits
     * (Delta's manifests go stale identically unless auto-manifest is on).
-    * Refused while merge-on-read state is pending (tombstones / deletion
-    * vectors): a path listing cannot express row-level subtraction —
+    * Refused while deletion vectors are pending: a path listing cannot express row-level subtraction —
     * materializeDeletes() first. Works on shallow clones (absolute source
     * dirs are listed as-is). Returns the manifest path. */
   def generateManifest(): Path = {
     val c = log.latest().getOrElse(
       throw new NoSuchElementException(s"no table at $root"))
-    require(c.tombstoneDirs.isEmpty && c.dvDirs.isEmpty,
+    require(c.dvDirs.isEmpty,
       s"manifest of $root would resurrect deleted rows: the snapshot carries " +
         "merge-on-read deletes — run materializeDeletes() first")
     val files = c.dataDirs.flatMap { d =>
@@ -1027,7 +970,6 @@ final class GraftTable private (
       c: Commit,
       cond: org.apache.spark.sql.catalyst.expressions.Expression,
       paths: Seq[Path]): Option[Seq[Path]] = {
-    if (c.tombstoneDirs.nonEmpty) return None // positional coverage (readPruned)
     val fsys = new Path(root).getFileSystem(hadoopConf(spark))
     val byQualified = c.dataDirs
       .map(d => fsys.makeQualified(new Path(root, d)).toString -> d).toMap
@@ -1049,11 +991,11 @@ final class GraftTable private (
     * metadata cannot answer EXACTLY — a dir whose harvest recorded no row
     * count, an unknown (-1) null count, a partition column (values live
     * in paths, not footers) or nested type (null counts are per leaf), or
-    * any merge-on-read state (tombstones/DVs subtract rows the commit
-    * doesn't itemize) — so a rewrite built on a Some is always safe. */
+    * any deletion vector (it subtracts rows the commit doesn't
+    * itemize) — so a rewrite built on a Some is always safe. */
   private[table] def metadataCount(
       c: Commit, dirs: Seq[String], colName: Option[String]): Option[Long] = {
-    if (c.tombstoneDirs.nonEmpty || c.dvDirs.nonEmpty) return None
+    if (c.dvDirs.nonEmpty) return None
     if (!dirs.forall(c.dataDirs.contains)) return None
     val schema = DataType.fromJson(c.schemaJson).asInstanceOf[StructType]
     def rowCount(d: String): Option[Long] =
@@ -1099,14 +1041,14 @@ final class GraftTable private (
     *   - the winning stat is integral and below 2^52, so no footer-side
     *     unit conversion (which widens by one ULP and de-integralizes)
     *     or double rounding can hide;
-    *   - no merge-on-read state (a deleted row could BE the extreme).
+    *   - no deletion vector (a deleted row could BE the extreme).
     * Some(None) = provably no values at all (SQL answer: NULL). The
     * value is returned in Catalyst internal form (Int days, Long
     * micros…), ready for a LocalRelation row. */
   private[table] def metadataExtreme(
       c: Commit, dirs: Seq[String], colName: String, isMin: Boolean): Option[Option[Any]] = {
     import org.apache.spark.sql.types._
-    if (c.tombstoneDirs.nonEmpty || c.dvDirs.nonEmpty) return None
+    if (c.dvDirs.nonEmpty) return None
     if (!dirs.forall(c.dataDirs.contains)) return None
     if (c.partitionCols.contains(colName)) return None // values live in paths
     val schema = DataType.fromJson(c.schemaJson).asInstanceOf[StructType]
@@ -1219,12 +1161,8 @@ final class GraftTable private (
       log.latest().getOrElse(throw new NoSuchElementException(s"no commits at $root")),
       predicate)
 
-  private def whereSupersetOf(c: Commit, predicate: Column): DataFrame = {
-    // Value-tombstone coverage is positional over dataDirs (see readPruned);
-    // skip the skipping, keep the semantics.
-    if (c.tombstoneDirs.nonEmpty) return readCommit(c)
+  private def whereSupersetOf(c: Commit, predicate: Column): DataFrame =
     readCommit(c.copy(dataDirs = dirsMayMatching(c, predicate)))
-  }
 
   /** The data dirs of `c` that MAY hold rows matching `predicate` — the
     * shared dir-selection core of [[where]]/[[whereVersion]] and
@@ -1558,8 +1496,8 @@ final class GraftTable private (
   }
 
   private def isEngineProperty(k: String): Boolean =
-    k.startsWith(ConstraintPrefix) || k.startsWith(TombstoneCoverPrefix) ||
-      k.startsWith(DroppedColPrefix) || k.startsWith(GeneratedColPrefix) ||
+    k.startsWith(ConstraintPrefix) || k.startsWith(DroppedColPrefix) ||
+      k.startsWith(GeneratedColPrefix) ||
       k.startsWith(IdentitySpecPrefix) || k.startsWith(IdentityHwmPrefix) ||
       k.startsWith(GraftTable.ColMapPrefix) || k == GraftTable.ClusterByProp ||
       k.startsWith(GraftTable.DefaultPrefix)
@@ -2018,15 +1956,14 @@ final class GraftTable private (
     * small tail a streaming sink accretes is megabytes; rewriting it
     * costs seconds while blanket OPTIMIZE would rewrite the table.
     * No-ops (None) when fewer than two dirs qualify, when the dir count
-    * is within `maxDataDirs`, or when merge-on-read state exists (a
-    * partial rewrite can't split tombstone coverage — run
+    * is within `maxDataDirs`, or when deletion vectors exist (run
     * [[materializeDeletes]] first). Commits rebase over concurrent
     * appends like every OPTIMIZE. */
   def compactSmall(targetFileBytes: Long = 128L * 1024 * 1024,
       smallDirBytes: Long = -1L,
       maxDataDirs: Int = 0): Option[Commit] = this.synchronized {
     val prev = log.latest().getOrElse(return None)
-    if (prev.tombstoneDirs.nonEmpty || prev.dvDirs.nonEmpty) return None
+    if (prev.dvDirs.nonEmpty) return None
     if (prev.dataDirs.size <= maxDataDirs) return None
     val threshold = if (smallDirBytes > 0) smallDirBytes else targetFileBytes
     val sized = prev.dataDirs.map { d =>
@@ -2245,7 +2182,6 @@ final class GraftTable private (
         a.head.dirStats + (dir -> meta.stats),
         properties = a.head.properties ++
           identityHwmUpdates(dir, meta, idSpecs, idHwm),
-        tombstoneDirs = a.head.tombstoneDirs,
         dvDirs = a.head.dvDirs,
         copiedFiles = copiedFiles,
         dirNulls = a.head.dirNulls + (dir -> meta.nulls)))
@@ -2292,7 +2228,7 @@ final class GraftTable private (
       Seq(dir), metrics(a) + ("numOutputRows" -> outputRows), prev.schemaJson,
       partitionCols = prev.partitionCols, changesDir = a.changesDir,
       dirStats = Map(dir -> meta.stats),
-      properties = rewriteProps(prev.properties),
+      properties = prev.properties,
       dirNulls = Map(dir -> meta.nulls)), dir, meta), changes)
   }
 
@@ -2346,7 +2282,7 @@ final class GraftTable private (
         // Every commit that writes a dir records its skipping stats — a
         // CREATE-then-append table would otherwise carry one forever-unprunable dir.
         dirStats = Map(dir -> meta.stats),
-        properties = rewriteProps(props0) ++ identityHwmUpdates(dir, meta, idSpecs, idHwm),
+        properties = props0 ++ identityHwmUpdates(dir, meta, idSpecs, idHwm),
         dirNulls = Map(dir -> meta.nulls)))
     }.get
   }
@@ -2810,64 +2746,39 @@ final class GraftTable private (
     }.get
   }
 
-  /** DELETE without rewriting any data (merge-on-read — the
-    * deletion-vector class of modern lakehouse formats): only the DELETED
-    * rows are written, as a tombstone dir; reads subtract them (null-safe
-    * whole-row anti-join, scoped to the dirs that existed at delete time —
-    * see readCommit), and ANY later snapshot rewrite (merge / update /
-    * predicate [[delete]] / overwrite / optimize) materializes the
-    * subtraction and clears the tombstones. For a narrow-predicate delete
-    * on a huge table this writes kilobytes instead of rewriting the
-    * table; the read-side anti-join is broadcast-sized as long as
-    * tombstones are small, which is exactly when you choose this over
-    * [[delete]]. CDF delete rows are emitted as usual.
-    *
-    * ISOLATION: by default this is SNAPSHOT-PREDICATE semantics — the
-    * delete applies to the rows of the snapshot it computed from, and
-    * rebases over concurrent appends, whose rows survive even when they
-    * match the predicate (they did not exist in the snapshot). Delta's
-    * default WriteSerializable instead aborts when a concurrent append MAY
-    * match a DELETE/UPDATE predicate; pass `strict = true` for that
-    * behavior — the rebase then aborts with [[ConcurrentWriteException]]
-    * iff some concurrently appended row actually matches `cond` (an exact
-    * test, reading only the appended dirs). */
-  def deleteMergeOnRead(cond: Column, strict: Boolean = false): Commit =
-    mutateWhere(None, positional = false, cond, strict)
-
-  /** [[deleteMergeOnRead]] from an explicit snapshot — the REBASE seam.
-    * Unlike snapshot rewrites, a merge-on-read delete COMMUTES with
-    * concurrent appends: appended rows cannot be among the tombstoned ones
-    * (they did not exist in the computed snapshot) and the tombstone's
-    * coverage prefix pins it to exactly the dirs it was computed from —
-    * so when only APPENDs won the race, the delete rebases onto the new
-    * head (both writers land) instead of aborting ([[mutate]]). */
-  private[table] def deleteMergeOnReadFrom(snapshot: Commit, cond: Column,
-      strict: Boolean = false): Commit =
-    mutateWhere(Some(snapshot), positional = false, cond, strict)
-
   /** DELETE by ROW POSITION — Delta deletion-vector parity (the modern
     * form of the reference's delete path,
     * consumer/python-consumer/delta_handler.py:215-225, which rewrites
-    * files copy-on-write): only (file, row_index) pairs of the deleted
-    * rows are recorded, kilobytes for a point delete on a 100 TB table,
-    * and reads subtract them with a per-file position FILTER inside the
-    * scan — NO join in the read plan (compare [[deleteMergeOnRead]]'s
-    * value-tombstone anti-join, which this supersedes for point deletes;
-    * value tombstones remain for whole-row-semantics deletes). Any later
-    * snapshot rewrite materializes the subtraction and clears the DVs;
-    * [[maybeMaterialize]] counts DV positions toward the rewrite trigger.
+    * files copy-on-write), and this table's one merge-on-read DELETE: only
+    * (file, row_index) pairs of the deleted rows are recorded, kilobytes
+    * for a point delete on a 100 TB table, and reads subtract them with a
+    * per-file position FILTER inside the scan — NO join in the read plan.
+    * Any later snapshot rewrite (merge / update / predicate [[delete]] /
+    * overwrite / optimize) materializes the subtraction and clears the
+    * DVs; [[materializeDeletes]] purges just the marked dirs, and
+    * [[maybeMaterialize]] counts DV positions toward that trigger. CDF
+    * delete rows are emitted as usual, stamped with the final commit
+    * version.
     *
-    * Same isolation as [[deleteMergeOnRead]]: rebases over concurrent
-    * appends (appended files cannot carry recorded positions), aborts on
-    * concurrent rewrites, `strict = true` aborts when appended rows match
-    * the predicate. CDF delete rows are stamped with the final commit
-    * version. */
+    * ISOLATION: by default this is SNAPSHOT-PREDICATE semantics — the
+    * delete applies to the rows of the snapshot it computed from, and
+    * rebases over concurrent appends (appended files cannot carry
+    * recorded positions), whose rows survive even when they match the
+    * predicate (they did not exist in the snapshot). Delta's default
+    * WriteSerializable instead aborts when a concurrent append MAY match a
+    * DELETE/UPDATE predicate; pass `strict = true` for that behavior — the
+    * rebase then aborts with [[ConcurrentWriteException]] iff some
+    * concurrently appended row actually matches `cond` (an exact test,
+    * reading only the appended dirs). Concurrent rewrites abort it. */
   def deletePositional(cond: Column, strict: Boolean = false): Commit =
-    mutateWhere(None, positional = true, cond, strict)
+    mutateWhere(None, cond, strict)
 
+  /** [[deletePositional]] from an explicit snapshot — the REBASE seam:
+    * when only appends or other merge-on-read mutations won the race, the
+    * delete lands on the new head instead of aborting ([[mutate]]). */
   private[table] def deletePositionalFrom(snapshot: Commit, cond: Column,
       strict: Boolean = false): Commit =
-    mutateWhere(Some(snapshot), positional = true, cond, strict)
+    mutateWhere(Some(snapshot), cond, strict)
 
   /** Keyed positional delete — [[deleteKeys]] at deletion-vector cost: the
     * rows to drop come from a distributed SEMI-join against an arbitrarily
@@ -2877,56 +2788,46 @@ final class GraftTable private (
     * table rewrite. Same restart/abort isolation as [[deletePositional]]. */
   def deleteKeysPositional(keys: DataFrame, key: String): Commit = {
     val keyDf = keys.select(col(key)).distinct()
-    mutate(None, positional = true, _.join(keyDf, Seq(key), "left_semi"), None)
+    mutate(None, _.join(keyDf, Seq(key), "left_semi"), None)
   }
 
-  private def mutateWhere(from: Option[Commit], positional: Boolean,
-      cond: Column, strict: Boolean,
+  private def mutateWhere(from: Option[Commit], cond: Column, strict: Boolean,
       assignments: Option[Map[String, Column]] = None): Commit = {
     val hit = coalesce(cond, lit(false))
-    mutate(from, positional, _.filter(hit), Option.when(strict)(hit), assignments)
+    mutate(from, _.filter(hit), Option.when(strict)(hit), assignments)
   }
 
-  /** The four merge-on-read / positional mutations (DELETE, or UPDATE with
-    * `assignments`) of the rows `hitsOf` selects: the rows are marked
-    * deleted — by value tombstone, or by (file, row_index) position when
-    * `positional` — and an UPDATE appends their updated copies as a new
-    * data dir, all in ONE commit. Such a mutation commutes with appends:
-    * it rebases when only APPENDs intervened (`strictHit`: unless an
-    * appended row matches it), a positional one restarts from the new
-    * head when only appends and other merge-on-read mutations did
-    * (recomputation drops rows those already deleted, so the two commute
-    * — Delta's default aborts here; the predicate, not a precomputed row
-    * set, is this operation's identity), and anything else refuses. CDF
-    * rows are stamped with the final commit version. */
-  private def mutate(from: Option[Commit], positional: Boolean,
+  /** The merge-on-read mutations (DELETE, or UPDATE with `assignments`)
+    * of the rows `hitsOf` selects — the one place that decides how a
+    * deleted row is marked: by its (file, row_index) position in a
+    * deletion-vector dir, which [[readCommitInternal]] subtracts inside
+    * the scan. An UPDATE appends the updated copies as a new data dir,
+    * all in ONE commit. Such a mutation commutes with appends: it rebases
+    * when only APPENDs intervened (`strictHit`: unless an appended row
+    * matches it), restarts from the new head when only appends and other
+    * merge-on-read mutations did (recomputation drops rows those already
+    * deleted, so the two commute — Delta's default aborts here; the
+    * predicate, not a precomputed row set, is this operation's identity),
+    * and anything else refuses. CDF rows are stamped with the final
+    * commit version. */
+  private def mutate(from: Option[Commit],
       hitsOf: DataFrame => DataFrame, strictHit: Option[Column],
       assignments: Option[Map[String, Column]] = None): Commit = this.synchronized {
     val op = if (assignments.isEmpty) "DELETE" else "UPDATE"
-    val what = s"${if (positional) "positional" else "merge-on-read"} " +
-      s"${op.toLowerCase} of $root"
+    val what = s"positional ${op.toLowerCase} of $root"
     val tx = new TableTxn(this, what, Some(op))
     tx.commit(from) { snap =>
       val v = snap.version + 1
-      // prior DVs AND tombstones applied: a row is never marked twice
-      val hits = hitsOf(if (positional) readCommitWithPos(snap) else readCommit(snap))
-      val pre = if (positional) hits.drop(DvFileCol, DvPosCol) else hits
+      // prior DVs applied: a row is never marked twice
+      val hits = hitsOf(readCommitWithPos(snap))
+      val pre = hits.drop(DvFileCol, DvPosCol)
       val post = assignments.map(as => pre.select(pre.columns.toSeq.map { c =>
         as.get(c).map(e => e.as(c)).getOrElse(col(c))
       }: _*))
       post.foreach(enforceConstraints(_, snap.properties, "UPDATE"))
-      val marks =
-        if (positional) {
-          val dv = tx.stage(dvDirName(v))
-          hits.select(col(DvFileCol).as("file"), col(DvPosCol).as("pos"))
-            .write.mode("errorifexists").parquet(new Path(root, dv).toString)
-          dv
-        } else {
-          val tomb = tx.stage(f"tombstones/v$v%05d-${uniqueSuffix()}")
-          toPhysicalDf(pre, colMapOf(snap.properties))
-            .write.mode("errorifexists").parquet(new Path(root, tomb).toString)
-          tomb
-        }
+      val dv = tx.stage(dvDirName(v))
+      hits.select(col(DvFileCol).as("file"), col(DvPosCol).as("pos"))
+        .write.mode("errorifexists").parquet(new Path(root, dv).toString)
       val data = post.map(writeData(tx, _, v, snap.partitionCols))
       val meta = data.map(d => d -> metaFor(d)).toMap
       val changes = post match {
@@ -2937,7 +2838,7 @@ final class GraftTable private (
       Staged(
         conflict = head =>
           if (!isAppendOnlyRace(snap, head))
-            if (positional && isMorOnlyRace(snap, head)) Restart
+            if (isMorOnlyRace(snap, head)) Restart
             else Refuse(s"$what computed from stale version ${snap.version}; " +
               "a non-append commit intervened")
           else if (strictHit.exists(appendedMatches(snap, head, _)))
@@ -2949,16 +2850,13 @@ final class GraftTable private (
           Commit(a.version, a.tsMs, op, h.dataDirs ++ data,
             Map(if (post.isEmpty) "numDeletedRows" -> a.changed("delete")
               else "numUpdatedRows" -> a.changed("update_postimage"),
-              "mergeOnRead" -> 1L) ++ Option.when(positional)("positionalDelete" -> 1L),
+              "mergeOnRead" -> 1L, "positionalDelete" -> 1L),
             snap.schemaJson,
             partitionCols = h.partitionCols,
             dirStats = h.dirStats ++ meta.map { case (d, m) => d -> m.stats },
             changesDir = a.changesDir,
-            // a tombstone covers exactly the dirs it was computed from
-            properties = h.properties ++ Option.when(!positional)(
-              TombstoneCoverPrefix + marks -> snap.dataDirs.length.toString),
-            tombstoneDirs = h.tombstoneDirs ++ Option.when(!positional)(marks),
-            dvDirs = h.dvDirs ++ Option.when(positional)(marks),
+            properties = h.properties,
+            dvDirs = h.dvDirs :+ dv,
             dirNulls = h.dirNulls ++ meta.map { case (d, m) => d -> m.nulls })
         },
         changes = Some(changes))
@@ -2969,17 +2867,13 @@ final class GraftTable private (
     * APPLY (PURGE)`: rewrite just the data dirs whose files carry
     * recorded positions and drop the DVs; every untouched dir is
     * referenced unchanged. On a 100 TB table a point-delete cleanup then
-    * pays for the affected dirs, not a full [[optimize]] rewrite. Falls
-    * back to a full optimize when value tombstones exist (their coverage
-    * is positional over the dir list and cannot survive a partial
-    * restructure). No-op (returns the head) when no DVs are present. */
+    * pays for the affected dirs, not a full [[optimize]] rewrite. No-op
+    * (returns the head) when no DVs are present. */
   def materializeDeletes(targetFileBytes: Long = 128L * 1024 * 1024): Commit =
     this.synchronized {
       val prev = log.latest().getOrElse(throw new NoSuchElementException(s"no table at $root"))
       // already clean — nothing to materialize
-      if (prev.dvDirs.isEmpty && prev.tombstoneDirs.isEmpty) return prev
-      // value tombstones (with or without DVs): a full compaction folds both
-      if (prev.tombstoneDirs.nonEmpty) return optimize(targetFileBytes)
+      if (prev.dvDirs.isEmpty) return prev
       val tx = new TableTxn(this, s"OPTIMIZE of $root")
       tx.commit(Some(prev)) { prev =>
         // A dir is touched iff some recorded file path lies under it — dir
@@ -3000,20 +2894,22 @@ final class GraftTable private (
       }.get
     }
 
-  /** UPDATE by ROW POSITION — [[deletePositional]]'s update companion and
-    * the DV form of [[updateMergeOnRead]]: matched rows are marked deleted
-    * by position (kilobytes) and their updated copies appended as a new
-    * data dir, in ONE commit. The read plan stays join-free for the DV
-    * subtraction; the appended copies can never be position-marked (their
-    * files postdate every recorded position). Same isolation surface:
-    * rebases over appends, aborts on rewrites, optional `strict`. */
+  /** UPDATE without rewriting the snapshot — [[deletePositional]]'s
+    * update companion: matched rows are marked deleted by position
+    * (kilobytes) and their updated copies appended as a new data dir, in
+    * ONE commit. Cost: deleted+updated rows written, instead of the whole
+    * table; any later rewrite materializes. The read plan stays join-free
+    * for the DV subtraction; the appended copies can never be
+    * position-marked (their files postdate every recorded position). Same
+    * isolation surface: rebases over appends, restarts over other
+    * merge-on-read mutations, aborts on rewrites, optional `strict`. */
   def updatePositional(cond: Column, assignments: Map[String, Column],
       strict: Boolean = false): Commit =
-    mutateWhere(None, positional = true, cond, strict, Some(assignments))
+    mutateWhere(None, cond, strict, Some(assignments))
 
   private[table] def updatePositionalFrom(snapshot: Commit, cond: Column,
       assignments: Map[String, Column], strict: Boolean = false): Commit =
-    mutateWhere(Some(snapshot), positional = true, cond, strict, Some(assignments))
+    mutateWhere(Some(snapshot), cond, strict, Some(assignments))
 
   // ------------------------------------------------- bloom point-lookup index
 
@@ -3076,7 +2972,6 @@ final class GraftTable private (
     * type the `xxhash64` function accepts. */
   def readPointLookup(colName: String, value: Any): DataFrame = {
     val c = log.latest().getOrElse(throw new NoSuchElementException(s"no commits at $root"))
-    if (c.tombstoneDirs.nonEmpty) return readCommit(c) // positional coverage
     // same hash the build applied, evaluated driver-side (no job)
     val hashed = new org.apache.spark.sql.catalyst.expressions.XxHash64(
       Seq(org.apache.spark.sql.catalyst.expressions.Literal(value)), 42L)
@@ -3141,9 +3036,9 @@ final class GraftTable private (
 
   /** True iff everything committed after `snapshot` is an APPEND that
     * left its schema and dir prefix intact — the condition under which a
-    * merge-on-read or positional mutation may REBASE onto `head` instead
-    * of aborting (its tombstones/positions reference only the snapshot's
-    * immutable dirs, which appends never touch). */
+    * merge-on-read mutation may REBASE onto `head` instead of aborting
+    * (its positions reference only the snapshot's immutable files, which
+    * appends never touch). */
   private def isAppendOnlyRace(snapshot: Commit, head: Commit): Boolean =
     head.version == snapshot.version ||
       (head.schemaJson == snapshot.schemaJson &&
@@ -3152,14 +3047,14 @@ final class GraftTable private (
           .forall(_.operation == "APPEND"))
 
   /** True iff everything committed after `snapshot` is an APPEND or a
-    * merge-on-read/positional mutation (all carry the `mergeOnRead`
-    * metric) under an unchanged schema — i.e. no commit REWROTE a file the
-    * snapshot referenced. A predicate-defined positional mutation can then
-    * RESTART from the new head instead of aborting: recomputation applies
-    * the interleaved tombstones/positions, so already-deleted rows drop
-    * out of both the new positions and the CDF and the two mutations
-    * commute (Delta's default aborts here; the predicate, not a
-    * precomputed row set, is this operation's identity). */
+    * merge-on-read mutation (all carry the `mergeOnRead` metric) under an
+    * unchanged schema — i.e. no commit REWROTE a file the snapshot
+    * referenced. A predicate-defined mutation can then RESTART from the
+    * new head instead of aborting: recomputation applies the interleaved
+    * positions, so already-deleted rows drop out of both the new
+    * positions and the CDF and the two mutations commute (Delta's default
+    * aborts here; the predicate, not a precomputed row set, is this
+    * operation's identity). */
   private def isMorOnlyRace(snapshot: Commit, head: Commit): Boolean =
     head.schemaJson == snapshot.schemaJson &&
       log.commits().filter(_.version > snapshot.version)
@@ -3189,25 +3084,6 @@ final class GraftTable private (
       !toLogicalDf(df, cmap).filter(hit).isEmpty
     }
   }
-
-  /** UPDATE without rewriting the snapshot (merge-on-read, composing the
-    * [[deleteMergeOnRead]] tombstone with an append IN ONE COMMIT):
-    * matched rows are tombstoned and their updated copies written as a new
-    * data dir. The tombstone's coverage stops at the pre-existing dirs, so
-    * the appended updates are never subtracted even when an assignment is
-    * a no-op (value-identical copy). Cost: deleted+updated rows written,
-    * instead of the whole table. Any later rewrite materializes. */
-  def updateMergeOnRead(cond: Column, assignments: Map[String, Column],
-      strict: Boolean = false): Commit =
-    mutateWhere(None, positional = false, cond, strict, Some(assignments))
-
-  /** [[updateMergeOnRead]] from an explicit snapshot — rebases over
-    * concurrent APPENDs exactly like [[deleteMergeOnReadFrom]] (the
-    * tombstone's coverage pins it to the computed-from dirs; the updated
-    * copies land as a fresh dir after any concurrently appended ones). */
-  private[table] def updateMergeOnReadFrom(snapshot: Commit, cond: Column,
-      assignments: Map[String, Column], strict: Boolean = false): Commit =
-    mutateWhere(Some(snapshot), positional = false, cond, strict, Some(assignments))
 
   /** Keyed delete as a distributed anti-join — the scale-safe form of the
     * reference's collect-ids-then-isin (spark_streaming.py:381-386). */
@@ -3291,8 +3167,8 @@ final class GraftTable private (
   /** REORG TABLE … APPLY (PURGE) (Delta parity): physically rewrite the
     * snapshot so metadata-retired state stops occupying bytes. A
     * metadata-only DROP COLUMN leaves the column's data sitting in the
-    * old files (reads just never project it); merge-on-read tombstones
-    * and deletion vectors keep their subtract-on-read cost. One REORG
+    * old files (reads just never project it); deletion vectors keep
+    * their subtract-on-read cost. One REORG
     * materializes all of it away: the head's schema-projected rows are
     * rewritten at the compaction file target and every retired physical
     * name is PURGED — which also lifts the name retirement, so a dropped
@@ -3305,7 +3181,7 @@ final class GraftTable private (
     tx.commit() { prev =>
       val numFiles = numFilesOf(prev, targetFileBytes)
       // readCommit is already the purged view: schema-projected (dropped
-      // columns absent) and tombstone/DV-subtracted. Row ids survive the
+      // columns absent) and DV-subtracted. Row ids survive the
       // purge the same way they survive OPTIMIZE — materialized through.
       val snapshot = (if (rowTrackingOn(prev)) readWithRowIdsOf(prev)
         else readCommit(prev)).repartition(numFiles)
@@ -3504,8 +3380,8 @@ final class GraftTable private (
     * conservative superset [[where]] uses, which is exactly right here:
     * compaction must rewrite whole dirs anyway, and rewriting a dir the
     * predicate didn't really touch only costs IO, never rows. Requires a
-    * clean snapshot (run [[materializeDeletes]] first if merge-on-read
-    * state exists — a partial rewrite can't split tombstone coverage). */
+    * clean snapshot (run [[materializeDeletes]] first if deletion
+    * vectors exist). */
   def optimizeWhere(predicate: Column,
       targetFileBytes: Long = 128L * 1024 * 1024,
       zorderBy: Seq[String] = Nil): Commit = this.synchronized {
@@ -3518,7 +3394,7 @@ final class GraftTable private (
     * scenarios). */
   private[table] def optimizeWhereFrom(prev: Commit, predicate: Column,
       targetFileBytes: Long, zorderBy: Seq[String]): Commit = {
-    require(prev.tombstoneDirs.isEmpty && prev.dvDirs.isEmpty,
+    require(prev.dvDirs.isEmpty,
       s"optimizeWhere on $root requires a clean snapshot — run materializeDeletes() first")
     val touched = dirsMayMatching(prev, predicate)
     if (touched.isEmpty) return prev // nothing to compact, no empty commit
@@ -3564,7 +3440,7 @@ final class GraftTable private (
       rows: DataFrame, metrics: Map[String, Long]): Staged = {
     val dir = writeData(tx, rows, prev.version + 1, prev.partitionCols, rebalance = false)
     val meta = metaFor(dir)
-    def clean(c: Commit): Boolean = c.tombstoneDirs.isEmpty && c.dvDirs.isEmpty
+    def clean(c: Commit): Boolean = c.dvDirs.isEmpty
     Staged(
       head =>
         if (isAppendOnlyRace(prev, head) && clean(prev) && clean(head)) Rebase
@@ -3574,7 +3450,7 @@ final class GraftTable private (
         a.head.schemaJson,
         partitionCols = a.head.partitionCols,
         dirStats = Map(dir -> meta.stats),
-        properties = rewriteProps(a.head.properties),
+        properties = a.head.properties,
         dirNulls = Map(dir -> meta.nulls)),
         a.head, a.head.dataDirs.filterNot(rewritten.contains)))
   }
@@ -3596,7 +3472,7 @@ final class GraftTable private (
   def replaceWhere(df: DataFrame, predicate: Column): Commit = this.synchronized {
     val tx = new TableTxn(this, s"REPLACEWHERE of $root", Some("REPLACEWHERE"))
     tx.commit() { prev =>
-      require(prev.tombstoneDirs.isEmpty && prev.dvDirs.isEmpty,
+      require(prev.dvDirs.isEmpty,
         s"replaceWhere on $root requires a clean snapshot — run materializeDeletes() first")
       val schema = DataType.fromJson(prev.schemaJson).asInstanceOf[StructType]
       val (prepared, idSpecs, idHwm) = prepareWrite(df, prev.properties, "replaceWhere")
@@ -3689,20 +3565,24 @@ final class GraftTable private (
       case _ => None
     }
 
-  /** Materialize merge-on-read state when tombstones have grown past
+  /** Purge deletion vectors once their positions have grown past
     * `maxTombstoneRatio` of the live rows (footer counts — metadata-only
-    * check, no scan): every read pays the anti-join while tombstones live,
-    * so once they stop being "small relative to the table" the one-time
-    * rewrite is cheaper than the recurring read tax. The MoR write path's
-    * periodic-compaction companion, like [[maybeCompact]] for small
-    * files. */
+    * check, no scan). While DVs live, every read of a marked table pays an
+    * in-scan position filter (a hash lookup per row, no join), and the
+    * marked rows still occupy bytes; once they stop being "small relative
+    * to the table" the one-time rewrite is cheaper than that recurring
+    * tax. The rewrite is [[materializeDeletes]]: only the dirs whose files
+    * carry positions are rewritten, every other dir stays referenced
+    * unchanged. The merge-on-read write path's periodic-compaction
+    * companion, like [[maybeCompact]] for small files. */
   def maybeMaterialize(maxTombstoneRatio: Double = 0.1,
       targetFileBytes: Long = 128L * 1024 * 1024): Option[Commit] =
     log.latest() match {
-      case Some(c) if c.tombstoneDirs.nonEmpty || c.dvDirs.nonEmpty =>
-        val dead = (c.tombstoneDirs ++ c.dvDirs).map(countDir).sum.toDouble
+      case Some(c) if c.dvDirs.nonEmpty =>
+        val dead = c.dvDirs.map(countDir).sum.toDouble
         val live = math.max(1L, c.dataDirs.map(countDir).sum - dead.toLong).toDouble
-        if (dead / live > maxTombstoneRatio) Some(optimize(targetFileBytes)) else None
+        if (dead / live > maxTombstoneRatio) Some(materializeDeletes(targetFileBytes))
+        else None
       case _ => None
     }
 
@@ -3719,7 +3599,6 @@ final class GraftTable private (
         partitionCols = old.partitionCols,
         dirStats = old.dirStats,
         properties = old.properties,
-        tombstoneDirs = old.tombstoneDirs,
         dvDirs = old.dvDirs, dirNulls = old.dirNulls))
     }.get
   }
@@ -3739,7 +3618,7 @@ final class GraftTable private (
       if (all.isEmpty) return Nil
       val headVersion = all.last.version
       val keep = all.filter(c => c.version == headVersion || c.tsMs >= cutoff)
-      val keepDirs = keep.flatMap(c => c.dataDirs ++ c.tombstoneDirs ++ c.dvDirs).toSet
+      val keepDirs = keep.flatMap(c => c.dataDirs ++ c.dvDirs).toSet
       val expired = all.filter(c => c.version != headVersion && c.tsMs < cutoff)
       // FULL mode (Delta's default VACUUM vs its log-only LITE — this
       // engine's default is the LITE shape because the commit log itemizes
@@ -3752,7 +3631,7 @@ final class GraftTable private (
       // uses), and the listing cost is one shallow LIST per dir root.
       lazy val orphanDirs: Seq[String] = {
         val tracked = all.flatMap(c =>
-          c.dataDirs ++ c.tombstoneDirs ++ c.dvDirs :+ changesDirOf(c)).toSet
+          c.dataDirs ++ c.dvDirs :+ changesDirOf(c)).toSet
         def newestMs(p: Path): Long = {
           val st = fs.getFileStatus(p)
           if (!st.isDirectory) st.getModificationTime
@@ -3760,7 +3639,7 @@ final class GraftTable private (
             if (s.isDirectory) newestMs(s.getPath) else s.getModificationTime
           ).toSeq).max
         }
-        Seq("data", "tombstones", "dvs", "_changes").flatMap { base =>
+        Seq("data", "dvs", "_changes").flatMap { base =>
           val basePath = new Path(root, base)
           if (!fs.exists(basePath)) Nil
           else fs.listStatus(basePath).filter(_.isDirectory).toSeq
@@ -3770,7 +3649,7 @@ final class GraftTable private (
         }
       }
       if (dryRun) // VACUUM DRY RUN: report the reclaimable dirs, touch nothing
-        return (expired.flatMap(c => c.dataDirs ++ c.tombstoneDirs ++ c.dvDirs)
+        return (expired.flatMap(c => c.dataDirs ++ c.dvDirs)
           .filterNot(keepDirs.contains)
           .filterNot(d => new Path(d).isAbsolute)
           .filter(d => fs.exists(new Path(root, d)))
@@ -3784,7 +3663,7 @@ final class GraftTable private (
         // another table's files, present when this table is a shallow
         // clone; only dirs this table wrote under its own root are ours
         // to reclaim (same ownership rule as Delta's shallow clones).
-        (c.dataDirs ++ c.tombstoneDirs ++ c.dvDirs).filterNot(keepDirs.contains)
+        (c.dataDirs ++ c.dvDirs).filterNot(keepDirs.contains)
           .filterNot(d => new Path(d).isAbsolute).foreach { d =>
             if (fs.delete(new Path(root, d), true)) deleted += d
           }
@@ -3823,7 +3702,7 @@ final class GraftTable private (
     *    offered path.
     *
     * With `truncateHistory`: after the DROP FEATURE commit lands, every
-    * superseded data/tombstone/DV dir is reclaimed (the vacuum body, with
+    * superseded data/DV dir is reclaimed (the vacuum body, with
     * the retention floor forced to "now") and the commit log is truncated
     * to the drop commit — time travel below it then fails version lookup,
     * exactly Delta's post-truncation behavior. The Delta mirror maps the
@@ -3883,12 +3762,7 @@ final class GraftTable private (
       partitionCols = src.partitionCols,
       dirStats = src.dirStats.map { case (d, s) => abs(d) -> s },
       dirNulls = src.dirNulls.map { case (d, s) => abs(d) -> s },
-      properties = src.properties.map {
-        case (k, v) if k.startsWith(TombstoneCoverPrefix) =>
-          (TombstoneCoverPrefix + abs(k.stripPrefix(TombstoneCoverPrefix))) -> v
-        case kv => kv
-      },
-      tombstoneDirs = src.tombstoneDirs.map(abs),
+      properties = src.properties,
       // DV entries name files by the absolute path the scan reports, so
       // they stay valid when the clone reads the SOURCE's files; the DV
       // dirs themselves are referenced absolutely like the data dirs.
@@ -3911,7 +3785,7 @@ final class GraftTable private (
     require(target.version < 0, s"table already exists at $targetRoot")
     val snapshot = readCommit(src)
     target.overwriteInternal(snapshot, src.partitionCols, None,
-      rewriteProps(src.properties))
+      src.properties)
     target
   }
 }
@@ -3936,10 +3810,9 @@ object GraftTable {
     else s"${uri.getScheme}://${Option(uri.getAuthority).getOrElse("")}${uri.getPath}"
   }
 
-  // private[graft]: the Delta export bridge reads these to decide which
-  // writer features / materialization coverage a commit's properties imply.
+  // private[graft]: the Delta export bridge reads this to decide which
+  // writer features a commit's properties imply.
   private[graft] val ConstraintPrefix = "constraint."
-  private[graft] val TombstoneCoverPrefix = "tombstone.cover."
   private[table] val DroppedColPrefix = "graft.droppedCol."
   /** Logical→physical column-name mapping entries
     * (`graft.colmap.<logical> = <physical>`) — present only for columns a
@@ -4062,12 +3935,6 @@ object GraftTable {
     }
     v.toDouble
   }
-
-  /** Properties a snapshot REWRITE should carry: everything except
-    * tombstone-coverage bookkeeping, which dies with the tombstones the
-    * rewrite materializes. */
-  private[table] def rewriteProps(props: Map[String, String]): Map[String, String] =
-    props.filterNot(_._1.startsWith(TombstoneCoverPrefix))
 
   private def hadoopConf(spark: SparkSession) =
     spark.sessionState.newHadoopConf()

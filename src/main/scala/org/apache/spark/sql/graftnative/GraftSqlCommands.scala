@@ -62,7 +62,7 @@ private[graftnative] object GraftSqlCommands {
     ClassicDataset.ofRows(session.asInstanceOf[ClassicSparkSession], plan)
 
   /** `spark.graft.sql.mergeOnRead`: route SQL DELETE/UPDATE through the
-    * no-rewrite merge-on-read paths (tombstones + updated copies) —
+    * no-rewrite merge-on-read paths (deletion vectors + updated copies) —
     * Delta's deletion-vector write mode as a session switch. */
   def mergeOnRead(session: SparkSession): Boolean =
     session.conf.getOption("spark.graft.sql.mergeOnRead").exists(_.toBoolean)
@@ -106,10 +106,11 @@ private[graftnative] object GraftSqlCommands {
   * semantics), still as a logged, time-travelable commit.
   *
   * With `spark.graft.sql.mergeOnRead = true` the statement routes through
-  * the merge-on-read path ([[GraftTable.deleteMergeOnRead]]): only the
-  * deleted rows are written as a tombstone, nothing rewrites — the right
-  * mode for a narrow predicate on a huge table (Delta's deletion-vector
-  * write mode, `delta.enableDeletionVectors`, as a session switch). */
+  * the merge-on-read path ([[GraftTable.deletePositional]]): only the
+  * deleted rows' positions are written, as a deletion vector, and nothing
+  * rewrites — the right mode for a narrow predicate on a huge table
+  * (Delta's deletion-vector write mode, `delta.enableDeletionVectors`, as
+  * a session switch). */
 case class GraftDeleteCommand(
     table: GraftTable,
     condition: GraftParsed[Option[Expression]],
@@ -122,7 +123,7 @@ case class GraftDeleteCommand(
       .map(e => ExpressionUtils.column(GraftSqlCommands.stripQualifiers(e, qualifiers)))
       .getOrElse(lit(true))
     val c =
-      if (GraftSqlCommands.mergeOnRead(session)) table.deleteMergeOnRead(cond)
+      if (GraftSqlCommands.mergeOnRead(session)) table.deletePositional(cond)
       else table.delete(cond)
     Seq(Row(c.metrics.getOrElse("numDeletedRows", 0L)))
   }
@@ -164,7 +165,7 @@ case class GraftUpdateCommand(
       .map(e => ExpressionUtils.column(GraftSqlCommands.stripQualifiers(e, qualifiers)))
       .getOrElse(lit(true))
     val c =
-      if (GraftSqlCommands.mergeOnRead(session)) table.updateMergeOnRead(cond, setMap)
+      if (GraftSqlCommands.mergeOnRead(session)) table.updatePositional(cond, setMap)
       else table.update(cond, setMap)
     Seq(Row(c.metrics.getOrElse("numUpdatedRows", 0L)))
   }

@@ -167,42 +167,6 @@ class CdcPipelineSpec extends SparkSpec {
     assert(viaDelta === t.read().select("id").as[Long].collect().toSet)
   }
 
-  test("deltaMirror advances past a VALUE-tombstone delete (materialized at export)") {
-    val in = tmpDir("cdc-vt-in")
-    val cfg = CdcPipeline.Config(
-      inputDir = in,
-      tableRoot = tmpDir("cdc-vt-tables"),
-      checkpointRoot = tmpDir("cdc-vt-ckpt"),
-      availableNow = true,
-      tables = Seq("customers"),
-      deltaMirror = true)
-    writeBatch(in, "batch1.json", Seq(
-      CdcFixtures.record("customers", "c", 1,
-        Some(CdcFixtures.customerJson(1, "John", "Doe", "john@x.com")), off = 0),
-      CdcFixtures.record("customers", "c", 2,
-        Some(CdcFixtures.customerJson(2, "Jane", "Roe", "jane@x.com")), off = 1)))
-    CdcPipeline.runOnce(spark, cfg)
-
-    // an out-of-band MoR VALUE-tombstone delete lands between batches —
-    // no Delta action encodes it, so the mirror must MATERIALIZE the
-    // covered prefix instead of halting until someone runs optimize
-    val snapPath = CdcPipeline.snapshotPath(cfg, "customers")
-    val t = GraftTable.forPath(spark, snapPath)
-    t.deleteMergeOnRead(col("id") === 2L)
-
-    writeBatch(in, "batch2.json", Seq(
-      CdcFixtures.record("customers", "c", 3,
-        Some(CdcFixtures.customerJson(3, "Ann", "Poe", "ann@x.com")), off = 2)))
-    CdcPipeline.runOnce(spark, cfg)
-
-    // the mirror advanced and the Delta snapshot equals the graft snapshot
-    assert(graft.sources.DeltaImport.latestVersion(spark, snapPath) === t.version)
-    val viaDelta = graft.sources.DeltaImport.read(spark, snapPath)
-      .select("id").as[Long].collect().toSet
-    assert(viaDelta === Set(1L, 3L))
-    assert(viaDelta === t.read().select("id").as[Long].collect().toSet)
-  }
-
   test("CDC pipeline over the no-rename object store (tables + checkpoint on s3fake)") {
     // The deployment shape S14 promises: table roots AND the streaming
     // checkpoint on an object store whose rename REPLACES silently — the

@@ -15,8 +15,8 @@ import graft.table.GraftTable
   *    the filtered pipeline must equal an exhaustive all-pairs jaccard
   *    over the same shingle definition, at any threshold;
   *  - the Delta export bridge is a faithful mirror under ARBITRARY op
-  *    sequences (append / rewrite-delete / DV-delete / value-tombstone
-  *    MoR delete / merge / optimize): the exported log re-read through
+  *    sequences (append / rewrite-delete / DV-delete / DV-update /
+  *    merge / optimize): the exported log re-read through
   *    [[DeltaImport]] equals the graft snapshot at EVERY version.
   */
 class RoundTripInvariantSpec extends SparkSpec {
@@ -73,7 +73,7 @@ class RoundTripInvariantSpec extends SparkSpec {
             if (keys.nonEmpty)
               t.merge(keys.map(k => (k, 100 + rnd.nextInt(10))).toDF("id", "v"), "id")
           case 4 => t.optimize()
-          case 5 => t.deleteMergeOnRead(col("v") === rnd.nextInt(10))
+          case 5 => t.updatePositional(col("v") === rnd.nextInt(10), Map("v" -> (col("v") + 100)))
         }
       }
       DeltaExport.exportLog(t)
@@ -135,7 +135,7 @@ class RoundTripInvariantSpec extends SparkSpec {
             next += 10
           case 1 => t.delete(col(vcol) === rnd.nextInt(10))
           case 2 => t.deletePositional(col(vcol) === rnd.nextInt(10))
-          case 3 => t.deleteMergeOnRead(col(vcol) === rnd.nextInt(10))
+          case 3 => t.updatePositional(col(vcol) === rnd.nextInt(10), Map(vcol -> (col(vcol) + 100)))
           case 4 =>
             val keys = (1L to next).filter(_ => rnd.nextInt(20) == 0).take(8)
             if (keys.nonEmpty)

@@ -275,51 +275,6 @@ class DeltaExportSpec extends SparkSpec {
       === Set((2L, "b"), (3L, "c")))
   }
 
-  test("value-tombstone MoR materializes at export; the mirror never stalls") {
-    val root = tmpDir("dexp-mor")
-    val t = GraftTable.create(spark,
-      root, Seq((1L, "a"), (2L, "b"), (3L, "c")).toDF("id", "s"), Nil)
-    t.deleteMergeOnRead(col("id") === 2L)       // v1: VALUE tombstone commit
-    t.append(Seq((4L, "d")).toDF("id", "s"))    // v2: tombstones persist
-
-    assert(DeltaExport.exportableUpTo(t) === 2L)
-    assert(DeltaExport.exportLog(t) === 2L)
-
-    // Delta snapshot == graft snapshot at EVERY version, tombstones folded
-    for (v <- 0L to 2L) {
-      val viaDelta = DeltaImport.read(spark, root, versionAsOf = Some(v))
-        .as[(Long, String)].collect().toSet
-      val viaGraft = t.readVersion(v).as[(Long, String)].collect().toSet
-      assert(viaDelta === viaGraft, s"version $v")
-    }
-    assert(DeltaImport.read(spark, root).as[(Long, String)].collect().toSet
-      === Set((1L, "a"), (3L, "c"), (4L, "d")))
-
-    // v1 swapped the covered files for a content-keyed materialization…
-    val v1adds = logLines(root, 1L).map(_ \ "add" \ "path")
-      .collect { case JString(p) => p }
-    assert(v1adds.nonEmpty && v1adds.forall(_.startsWith("_delta_materialized/")))
-    assert(logLines(root, 1L).exists(l => (l \ "remove") != JNothing))
-    // …and v2 (same tombstone state, pure append) REUSED it: only the
-    // appended dir's files enter the log — the mirror stays incremental.
-    val v2adds = logLines(root, 2L).map(_ \ "add" \ "path")
-      .collect { case JString(p) => p }
-    assert(v2adds.nonEmpty && v2adds.forall(!_.startsWith("_delta_materialized/")))
-    assert(!logLines(root, 2L).exists(l => (l \ "remove") != JNothing))
-
-    // the CDF of the materialized version serves the ROW-level delete
-    // (from the exported cdc action), not whole-file churn
-    val cdf = DeltaImport.readChanges(spark, root, 1L, 1L)
-      .select(col("id"), col("_change_type")).as[(Long, String)].collect().toSeq
-    assert(cdf === Seq((2L, "delete")))
-
-    // a rewriting commit clears the MoR state; the mirror follows it out
-    t.optimize()
-    assert(DeltaExport.exportLog(t) === 3L)
-    assert(DeltaImport.read(spark, root).as[(Long, String)].collect().toSet
-      === t.read().as[(Long, String)].collect().toSet)
-  }
-
   test("generated/identity declarations export into Delta schema metadata") {
     val root = tmpDir("dexp-genid")
     val t = GraftTable.create(spark, root,
@@ -361,30 +316,29 @@ class DeltaExportSpec extends SparkSpec {
     assert(vc.flatMap(_.txns) === Seq("streamX" -> 7L))
   }
 
-  test("vacuumExportArtifacts reaps superseded materializations and aged cdc files") {
+  test("vacuumExportArtifacts reaps aged cdc files and abandoned stages") {
     val root = tmpDir("dexp-vacart")
-    val t = GraftTable.create(spark,
-      root, Seq((1L, "a"), (2L, "b"), (3L, "c")).toDF("id", "s"), Nil)
-    t.deleteMergeOnRead(col("id") === 2L) // v1: materializes at export
+    val t = GraftTable.createWithProperties(spark,
+      root, Seq((1L, "a"), (2L, "b"), (3L, "c")).toDF("id", "s"),
+      Map("delta.enableChangeDataFeed" -> "true"))
+    t.deletePositional(col("id") === 2L) // v1: its change feed exports as cdc
     DeltaExport.exportLog(t)
-    val matFiles = Files.walk(Paths.get(root, "_delta_materialized"))
+    val cdcFiles = Files.walk(Paths.get(root, "_change_data"))
       .iterator().asScala.filter(_.toString.endsWith(".parquet")).toSeq
-    assert(matFiles.nonEmpty)
+    assert(cdcFiles.nonEmpty)
 
-    t.optimize() // v2: rewrite supersedes the materialization
+    t.optimize() // v2
     DeltaExport.exportLog(t)
     // a crashed exporter's abandoned staging dir is reaped too
-    Files.createDirectories(Paths.get(root, ".mat-stage-deadbeef"))
+    Files.createDirectories(Paths.get(root, ".cdc-stage-deadbeef"))
     val future = System.currentTimeMillis() + 3600_000L
     val deleted = DeltaExport.vacuumExportArtifacts(spark, root,
       retentionMs = 0L, nowMs = future)
-    assert(deleted.contains(".mat-stage-deadbeef"))
-    assert(!Files.exists(Paths.get(root, ".mat-stage-deadbeef")))
-    assert(deleted.exists(_.startsWith("_delta_materialized/")))
-    assert(matFiles.forall(p => !Files.exists(p)))
-    // cdc files (the delete's change feed) aged out with the retention too
-    assert(!Files.exists(Paths.get(root, "_change_data")) ||
-      deleted.exists(_.startsWith("_change_data/")))
+    assert(deleted.contains(".cdc-stage-deadbeef"))
+    assert(!Files.exists(Paths.get(root, ".cdc-stage-deadbeef")))
+    // cdc files (the delete's change feed) aged out with the retention
+    assert(deleted.exists(_.startsWith("_change_data/")))
+    assert(cdcFiles.forall(p => !Files.exists(p)))
     // the current snapshot is untouched on both sides of the bridge
     assert(DeltaImport.read(spark, root).as[(Long, String)].collect().toSet
       === Set((1L, "a"), (3L, "c")))
@@ -733,8 +687,8 @@ class DeltaExportSpec extends SparkSpec {
     val minKeys = (addStats \ "minValues").asInstanceOf[JObject].obj.map(_._1).toSet
     assert(minKeys.contains("s") && !minKeys.contains("label"))
 
-    // a MoR delete (tombstone materialization) still exports and reads back
-    t.deleteMergeOnRead(col("label") === "a")
+    // a MoR delete (a Delta DV on the mirror) still exports and reads back
+    t.deletePositional(col("label") === "a")
     DeltaExport.exportLog(t)
     assert(DeltaImport.read(spark, root)
       .select("label").as[String].collect().toSet === Set("b", "c"))

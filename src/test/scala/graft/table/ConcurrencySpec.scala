@@ -153,17 +153,18 @@ class ConcurrencySpec extends SparkSpec {
     // another writer appends AFTER our snapshot was taken
     t.append(Seq((2L, 999.0)).toDF("id", "x")) // same id, different row
     // the delete computed from the stale snapshot must rebase: both land
-    val c = t.deleteMergeOnReadFrom(stale, col("id") === 2L)
+    val c = t.deletePositionalFrom(stale, col("id") === 2L)
     assert(c.version === stale.version + 2)
     val rows = t.read().collect().map(r => (r.getLong(0), r.getDouble(1))).toSet
-    // the ORIGINAL id=2 row is deleted; the appended one survives (coverage)
+    // the ORIGINAL id=2 row is deleted; the appended one survives (its
+    // file postdates the recorded positions)
     assert(rows === Set((1L, 10.0), (3L, 30.0), (2L, 999.0)))
 
     // a concurrent REWRITE is not append-only: the delete must abort
     val stale2 = t.headCommit.get
     t.update(col("id") === 1L, Map("x" -> lit(11.0)))
     intercept[ConcurrentWriteException] {
-      t.deleteMergeOnReadFrom(stale2, col("id") === 3L)
+      t.deletePositionalFrom(stale2, col("id") === 3L)
     }
     // aborted cleanly: nothing deleted, update intact
     assert(t.read().count() === 3)
@@ -176,7 +177,7 @@ class ConcurrencySpec extends SparkSpec {
     val t = GraftTable.create(spark, tmpDir("cc-moru"), seed)
     val stale = t.headCommit.get
     t.append(Seq((3L, 30.0)).toDF("id", "x"))
-    val c = t.updateMergeOnReadFrom(stale, col("id") === 1L, Map("x" -> lit(11.0)))
+    val c = t.updatePositionalFrom(stale, col("id") === 1L, Map("x" -> lit(11.0)))
     assert(c.version === stale.version + 2)
     val rows = t.read().collect().map(r => (r.getLong(0), r.getDouble(1))).toSet
     assert(rows === Set((1L, 11.0), (2L, 20.0), (3L, 30.0)))
@@ -188,7 +189,7 @@ class ConcurrencySpec extends SparkSpec {
     val t = GraftTable.create(spark, tmpDir("cc-cdfver"), seed)
     val stale = t.headCommit.get
     t.append(Seq((4L, 40.0)).toDF("id", "x")) // wins version stale+1
-    val c = t.deleteMergeOnReadFrom(stale, col("id") === 2L) // rebases to stale+2
+    val c = t.deletePositionalFrom(stale, col("id") === 2L) // rebases to stale+2
     assert(c.version === stale.version + 2)
     // Delta contract: change rows carry the version they COMMITTED at —
     // a stale stamp (stale+1) would attribute the delete to the append.
@@ -213,7 +214,7 @@ class ConcurrencySpec extends SparkSpec {
     val t = GraftTable.create(spark, tmpDir("cc-cdfveru"), seed)
     val stale = t.headCommit.get
     t.append(Seq((3L, 30.0)).toDF("id", "x"))
-    val c = t.updateMergeOnReadFrom(stale, col("id") === 1L, Map("x" -> lit(11.0)))
+    val c = t.updatePositionalFrom(stale, col("id") === 1L, Map("x" -> lit(11.0)))
     val ch = t.readChanges(c.version, c.version)
       .select("_commit_version", "_change_type").collect()
     assert(ch.length === 2) // preimage + postimage
@@ -260,13 +261,13 @@ class ConcurrencySpec extends SparkSpec {
     val stale = t.headCommit.get
     t.append(Seq((2L, 999.0)).toDF("id", "x"))
     intercept[ConcurrentWriteException] {
-      t.deleteMergeOnReadFrom(stale, col("id") === 2L, strict = true)
+      t.deletePositionalFrom(stale, col("id") === 2L, strict = true)
     }
     assert(t.read().count() === 3) // nothing deleted, rollback clean
     // NON-matching append → strict still rebases (no spurious abort)
     val stale2 = t.headCommit.get
     t.append(Seq((7L, 70.0)).toDF("id", "x"))
-    val c = t.deleteMergeOnReadFrom(stale2, col("id") === 1L, strict = true)
+    val c = t.deletePositionalFrom(stale2, col("id") === 1L, strict = true)
     assert(c.version === stale2.version + 2)
     val ids = t.read().select("id").collect().map(_.getLong(0)).toSet
     assert(ids === Set(2L, 7L)) // id=1 deleted; both appends intact
@@ -441,11 +442,11 @@ class ConcurrencySpec extends SparkSpec {
 
   /** Dirs under `bases` that no commit of the log references. */
   private def unreferenced(root: String,
-      bases: Seq[String] = Seq("data", "tombstones", "dvs", "_changes")): Set[String] = {
+      bases: Seq[String] = Seq("data", "dvs", "_changes")): Set[String] = {
     val conf = spark.sessionState.newHadoopConf()
     val fs = new org.apache.hadoop.fs.Path(root).getFileSystem(conf)
     val referenced = new CommitLog(root, conf).commits().flatMap(c =>
-      c.dataDirs ++ c.tombstoneDirs ++ c.dvDirs ++ c.changesDir).toSet
+      c.dataDirs ++ c.dvDirs ++ c.changesDir).toSet
     bases.flatMap { b =>
       val dir = new org.apache.hadoop.fs.Path(root, b)
       if (!fs.exists(dir)) Nil
@@ -461,7 +462,7 @@ class ConcurrencySpec extends SparkSpec {
       "mergeClauses" -> (() => t.mergeClauses(Seq((1L, 5.0), (12L, 12.0)).toDF("id", "x"),
         "id", matched = Seq(MergeClause.UpdateAll()),
         notMatched = Seq(MergeClause.InsertAll()))),
-      "deleteMergeOnRead" -> (() => t.deleteMergeOnRead(col("id") === 2L)))
+      "deletePositional" -> (() => t.deletePositional(col("id") === 2L)))
     t.beforeCommitHook = () => throw new RuntimeException("injected before publish")
     try verbs.foreach { case (name, verb) =>
       val before = t.version
@@ -488,16 +489,16 @@ class ConcurrencySpec extends SparkSpec {
     }
     val verbs: Seq[(String, () => Commit)] = Seq(
       "positional delete" -> (() => t.deletePositional(col("id") === 1L)),
-      "merge-on-read delete" -> (() => t.deleteMergeOnRead(col("id") === 2L)))
+      "positional update" -> (() => t.updatePositional(col("id") === 2L, Map("x" -> lit(0.5)))))
     try verbs.foreach { case (what, verb) =>
       val before = t.version
       val e = intercept[ConcurrentWriteException](verb())
       assert(e.getMessage.contains(s"$what of $root lost 20 version races"), e.getMessage)
       assert(t.version === before + 20, what) // every rival append landed
-      val left = unreferenced(root, Seq("tombstones", "dvs", "_changes"))
+      val left = unreferenced(root, Seq("data", "dvs", "_changes"))
       assert(left.isEmpty, s"$what leaked $left")
     } finally t.beforeCommitHook = () => ()
-    assert(t.read().count() === 50) // 10 seed + 40 rival rows, nothing deleted
+    assert(t.read().count() === 50) // 10 seed + 40 rival rows, nothing mutated
   }
 
   test("publisher registry: scheme selection and conditional-put registration") {

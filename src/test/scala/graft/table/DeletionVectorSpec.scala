@@ -146,14 +146,14 @@ class DeletionVectorSpec extends SparkSpec {
     } finally spark.conf.unset("spark.graft.dv.inlineMaxEntries")
   }
 
-  test("DVs compose with hive-partitioned tables and value tombstones") {
+  test("DVs compose with hive-partitioned tables and stack") {
     val seed = (1L to 60L).map(i => (i, if (i % 2 == 0) "A" else "B", i * 1.0))
       .toDF("id", "status", "x")
     val t = GraftTable.create(spark, tmpDir("dv-part"), seed, partitionBy = Seq("status"))
     t.deletePositional(col("id") <= 10)
     assert(t.read().count() === 50)
-    // mixed: a value-tombstone delete on top of a positional one
-    t.deleteMergeOnRead(col("id") > 55)
+    // a second DV stacked on the first
+    t.deletePositional(col("id") > 55)
     assert(t.read().count() === 45)
     assert(t.read().filter(col("id") <= 10 || col("id") > 55).count() === 0)
     // partition pruning still works through the DV filter
@@ -240,9 +240,9 @@ class DeletionVectorSpec extends SparkSpec {
     assert(t.read().count() === 5)
     assert(t.rowCount === 5) // footer math: no double-subtraction
     assert(t.readChanges(c.version, c.version).count() === 5)
-    // positional update racing a value-tombstone MoR delete also restarts
+    // positional update racing a positional delete also restarts
     val stale2 = t.headCommit.get
-    t.deleteMergeOnRead(col("id") === 16L)
+    t.deletePositional(col("id") === 16L)
     val c2 = t.updatePositionalFrom(stale2, col("id") >= 16L, Map("x" -> lit(0.0)))
     assert(c2.metrics("numUpdatedRows") === 4) // 17..20 (16 already gone)
     assert(t.read().filter(col("x") === 0.0).count() === 4)

@@ -268,6 +268,25 @@ class GraftTableSpec extends SparkSpec {
     assert(t2.history().count() === 13)
   }
 
+  test("a log entry carrying value tombstones is refused, not read past") {
+    val dir = tmpDir("gt-legacy-tomb")
+    val t = GraftTable.create(spark, dir, seedCustomers)
+    val v0 = t.headCommit.get
+    // a DELETE in the retired value-tombstone form: the data dir is
+    // unchanged, the deleted rows live only in the tombstone dir
+    val legacy = CommitLog.toJson(Commit(1L, v0.tsMs + 1, "DELETE", v0.dataDirs,
+      Map("numDeletedRows" -> 1L), v0.schemaJson)).stripSuffix("}") +
+      ""","tombstoneDirs":["tombstones/v00001-x"]}"""
+    java.nio.file.Files.write(
+      java.nio.file.Paths.get(dir, CommitLog.LogDirName, f"${1L}%020d.json"),
+      legacy.getBytes(java.nio.charset.StandardCharsets.UTF_8))
+    val e = intercept[CommitLog.ValueTombstonesRefused] {
+      GraftTable.forPath(spark, dir).read().collect()
+    }
+    assert(e.getMessage.contains(s"version 1 of table $dir"))
+    assert(e.getMessage.contains("value tombstones"))
+  }
+
   test("single-writer collision detection") {
     val dir = tmpDir("gt-conflict")
     val t1 = GraftTable.create(spark, dir, seedCustomers)
@@ -361,9 +380,9 @@ class GraftTableSpec extends SparkSpec {
 
   test("merge-on-read delete: no rewrite, scoped tombstones, rewrite materializes") {
     val t = GraftTable.create(spark, tmpDir("gt-mor"), seedCustomers)
-    val c = t.deleteMergeOnRead(col("balance") < 150.0) // deletes id=1
-    // no data rewritten: still the single CREATE data dir, plus a tombstone
-    assert(c.dataDirs.size === 1 && c.tombstoneDirs.size === 1)
+    val c = t.deletePositional(col("balance") < 150.0) // deletes id=1
+    // no data rewritten: still the single CREATE data dir, plus a DV
+    assert(c.dataDirs.size === 1 && c.dvDirs.size === 1)
     assert(t.read().collect().map(_.getLong(0)).toSet === Set(2L, 3L))
     // time travel still sees the pre-delete snapshot
     assert(t.readVersion(0).count() === 3)
@@ -371,38 +390,42 @@ class GraftTableSpec extends SparkSpec {
     val cdf = t.readChanges(c.version, c.version)
     assert(cdf.filter(col("_change_type") === "delete").count() === 1)
 
-    // a row value-identical to a tombstoned one, appended AFTER the
-    // delete, is NOT suppressed (coverage scoping)
+    // a row value-identical to a deleted one, appended AFTER the
+    // delete, is NOT suppressed (positions name the pre-append files)
     t.append(Seq((1L, "John", "john@x.com", 100.0)).toDF("id", "name", "email", "balance"))
     assert(t.read().count() === 3)
     assert(t.read().filter(col("id") === 1L).count() === 1)
     assert(t.rowCount === 3)
 
     // second MoR delete stacks; reads stay correct
-    t.deleteMergeOnRead(col("id") === 2L)
+    t.deletePositional(col("id") === 2L)
     assert(t.read().collect().map(_.getLong(0)).toSet === Set(1L, 3L))
 
-    // any rewrite materializes: tombstones cleared, data equal
+    // any rewrite materializes: DVs cleared, data equal
     val afterOpt = t.optimize()
-    assert(afterOpt.tombstoneDirs.isEmpty)
-    assert(afterOpt.properties.keys.forall(!_.startsWith("tombstone.cover.")))
+    assert(afterOpt.dvDirs.isEmpty)
     assert(t.read().collect().map(_.getLong(0)).toSet === Set(1L, 3L))
   }
 
   test("maybeMaterialize fires only past the tombstone ratio") {
     val t = GraftTable.create(spark, tmpDir("gt-morm"), seedCustomers)
-    t.deleteMergeOnRead(col("id") === 1L) // 1 dead / 2 live = 0.5
+    t.append(Seq((4L, "Ann", "ann@x.com", 400.0)).toDF("id", "name", "email", "balance"))
+    val Seq(marked, unmarked) = t.headCommit.get.dataDirs
+    t.deletePositional(col("id") === 1L) // 1 dead / 3 live = 0.33
     assert(t.maybeMaterialize(maxTombstoneRatio = 0.6).isEmpty)
-    assert(t.read().count() === 2) // untouched below threshold
-    val done = t.maybeMaterialize(maxTombstoneRatio = 0.4)
-    assert(done.isDefined && done.get.tombstoneDirs.isEmpty)
-    assert(t.read().count() === 2)
+    assert(t.read().count() === 3) // untouched below threshold
+    val done = t.maybeMaterialize(maxTombstoneRatio = 0.3)
+    assert(done.isDefined && done.get.dvDirs.isEmpty)
+    // only the DV-marked dir is rewritten; the other stays referenced as is
+    assert(!done.get.dataDirs.contains(marked))
+    assert(done.get.dataDirs.contains(unmarked))
+    assert(t.read().collect().map(_.getLong(0)).toSet === Set(2L, 3L, 4L))
   }
 
   test("merge-on-read update: tombstone + appended copies, one commit") {
     val t = GraftTable.create(spark, tmpDir("gt-moru"), seedCustomers)
-    val c = t.updateMergeOnRead(col("id") === 2L, Map("balance" -> lit(999.0)))
-    assert(c.dataDirs.size === 2 && c.tombstoneDirs.size === 1) // original + updates
+    val c = t.updatePositional(col("id") === 2L, Map("balance" -> lit(999.0)))
+    assert(c.dataDirs.size === 2 && c.dvDirs.size === 1) // original + updates
     val rows = t.read().collect().map(r => r.getLong(0) -> r.getDouble(3)).toMap
     assert(rows === Map(1L -> 100.0, 2L -> 999.0, 3L -> 300.0))
     // CDF pre/post images
@@ -410,12 +433,12 @@ class GraftTableSpec extends SparkSpec {
     assert(cdf.filter(col("_change_type") === "update_preimage").count() === 1)
     assert(cdf.filter(col("_change_type") === "update_postimage").count() === 1)
     // no-op assignment: value-identical copy must survive its own commit
-    t.updateMergeOnRead(col("id") === 1L, Map("balance" -> lit(100.0)))
+    t.updatePositional(col("id") === 1L, Map("balance" -> lit(100.0)))
     assert(t.read().count() === 3)
     assert(t.read().filter(col("id") === 1L).head().getDouble(3) === 100.0)
     // rewrite materializes everything
     val after = t.optimize()
-    assert(after.tombstoneDirs.isEmpty)
+    assert(after.dvDirs.isEmpty)
     assert(t.read().collect().map(r => r.getLong(0) -> r.getDouble(3)).toMap ===
       Map(1L -> 100.0, 2L -> 999.0, 3L -> 300.0))
   }
@@ -681,7 +704,7 @@ class GraftTableSpec extends SparkSpec {
     t.generateManifest()
     assert(externalRead().count() === 3)
     // pending merge-on-read deletes cannot be expressed as a path listing
-    t.deleteMergeOnRead(col("id") === 2L)
+    t.deletePositional(col("id") === 2L)
     val e = intercept[IllegalArgumentException] { t.generateManifest() }
     assert(e.getMessage.contains("merge-on-read"))
     // materializing the deletes makes it expressible again
@@ -710,9 +733,9 @@ class GraftTableSpec extends SparkSpec {
     t.addColumn("tag", StringType)
     assert(t.read().filter(col("tag").isNull).count() === 2)
     // reorg also folds merge-on-read state
-    t.deleteMergeOnRead(col("id") === 1L)
+    t.deletePositional(col("id") === 1L)
     t.reorg()
-    assert(t.headCommit.get.tombstoneDirs.isEmpty && t.read().count() === 1)
+    assert(t.headCommit.get.dvDirs.isEmpty && t.read().count() === 1)
   }
 
   test("renameColumn: one explicit rewrite, values preserved, guards hold") {
@@ -759,7 +782,7 @@ class GraftTableSpec extends SparkSpec {
       .schema.fieldNames.toSeq
     assert(physCols.contains("tag") && !physCols.contains("label"))
     // predicate mutations + MoR see logical names
-    t.deleteMergeOnRead(col("label") === "y")
+    t.deletePositional(col("label") === "y")
     assert(t.read().select("label").as[String].collect().sorted.toSeq === Seq("x", "z"))
     // CDF across the rename boundary serves the LATEST logical name
     val cdf = t.readChanges(0L)
@@ -825,8 +848,8 @@ class GraftTableSpec extends SparkSpec {
     val hist = t.headCommit.get.properties("graft.typeChange.k")
     assert(hist.contains(""""fromType":"integer"""") &&
       hist.contains(""""toType":"long""""))
-    // MoR delete across mixed widths (value tombstones type-coerce)
-    t.deleteMergeOnRead(col("k") === 2L)
+    // MoR delete across mixed widths (the predicate reads the wide type)
+    t.deletePositional(col("k") === 2L)
     assert(t.read().select("k").as[Long].collect().sorted.toSeq ===
       Seq(1L, 5000000000L))
     // second widen on the same column appends to the history
@@ -1034,11 +1057,10 @@ class GraftTableSpec extends SparkSpec {
     }
     refused(t.delete(col("k") === 1L))
     refused(t.deletePositional(col("k") === 1L))
-    refused(t.deleteMergeOnRead(col("k") === 1L))
     refused(t.deleteKeys(Seq(1L).toDF("k"), "k"))
     refused(t.deleteKeysPositional(Seq(1L).toDF("k"), "k"))
     refused(t.update(col("k") === 1L, Map("s" -> lit("x"))))
-    refused(t.updateMergeOnRead(col("k") === 1L, Map("s" -> lit("x"))))
+    refused(t.updatePositional(col("k") === 1L, Map("s" -> lit("x"))))
     refused(t.merge(Seq((1L, "z", "n")).toDF("k", "s", "note"), "k"))
     refused(t.mergeClauses(Seq((1L, "z", "n")).toDF("k", "s", "note"), "k",
       matched = Seq(graft.table.MergeClause.UpdateAll())))
