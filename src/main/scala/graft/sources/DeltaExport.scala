@@ -53,7 +53,7 @@ import graft.table.{Commit, CommitLog, GraftTable}
   * immutable data dir, footer reads for new files only) — the cost class
   * of a Delta writer's own commit path. The exceptions are bounded and
   * per-changed-version only: one distributed bitmap build over the dv
-  * dirs of a DV-changing commit ([[buildMirrorDvs]] — positions fold into
+  * dirs of a DV-changing commit ([[buildDvs]] — positions fold into
   * RoaringBitmaps on executors, only per-file descriptors reach the
   * driver) and one rewrite job over the `_changes` rows of a
   * CDF-carrying commit.
@@ -61,14 +61,6 @@ import graft.table.{Commit, CommitLog, GraftTable}
 object DeltaExport {
 
   private implicit val formats: Formats = DefaultFormats
-
-  /** Highest graft version exportable as a contiguous Delta log prefix —
-    * every version: merge-on-read deletes export as real Delta DVs (see
-    * [[exportLog]]), so the mirror never stalls. */
-  def exportableUpTo(table: GraftTable): Long = {
-    val cs = new CommitLog(table.root, table.spark.sessionState.newHadoopConf()).commits()
-    cs.lastOption.map(_.version).getOrElse(-1L)
-  }
 
   /** Publish `_delta_log` commits for graft versions [0, upTo] (default:
     * table head). Idempotent and incremental: already-published versions
@@ -226,20 +218,16 @@ object DeltaExport {
         .map(c => (c.schemaJson, c.partitionCols, c.properties))
 
     val rootPathStr = root.toUri.getPath.stripSuffix("/")
-    def relOfAbsolute(abs: String): String = {
-      val p = try Option(new java.net.URI(abs).getPath).getOrElse(abs)
-        catch { case scala.util.control.NonFatal(_) => abs }
-      p.stripPrefix(rootPathStr).stripPrefix("/")
-    }
     // Graft's cumulative DV state stays DISTRIBUTED: the driver only ever
     // sees which FILES carry positions (filesNamedIn below) and the built
-    // descriptors ([[buildMirrorDvs]]); the positions themselves shuffle
+    // descriptors ([[buildDvs]]); the positions themselves shuffle
     // straight into executor-side bitmaps.
+    def readDvDirs(dirs: Seq[String]) =
+      spark.read.parquet(dirs.map(d => new Path(root, d).toString): _*)
     def filesNamedIn(dirs: Seq[String]): Set[String] =
       if (dirs.isEmpty) Set.empty
-      else spark.read.parquet(dirs.map(d => new Path(root, d).toString): _*)
-        .select("file").distinct().collect()
-        .map(r => relOfAbsolute(r.getString(0))).toSet
+      else readDvDirs(dirs).select("file").distinct().collect()
+        .map(r => relUnder(rootPathStr, r.getString(0))).toSet
 
     // ---- row tracking (tracked-from-birth tables): replicate the graft
     // id fold so the mirror's baseRowIds equal graft's derived ids. Dir
@@ -331,9 +319,18 @@ object DeltaExport {
             if (grewOnly) filesNamedIn(c.dvDirs.filterNot(prevDvDirs.contains))
             else prevDv.keySet ++ stateKeys
           val changed = candidates.filter(cur.contains)
-          val descs = buildMirrorDvs(spark, table.root,
-            c.dvDirs.map(d => new Path(root, d).toString), rootPathStr,
-            changed.intersect(stateKeys), s"v${c.version}")
+          // each changed file's FULL position set, re-encoded as a `u` DV
+          val wanted = spark.sparkContext.broadcast(changed.intersect(stateKeys))
+          val descs =
+            if (wanted.value.isEmpty) Map.empty[String, DeltaDeletionVectors.Descriptor]
+            else {
+              import spark.implicits._
+              buildDvs(spark, table.root, readDvDirs(c.dvDirs)
+                .select(col("file"), col("pos")).as[(String, Long)]
+                .map { case (abs, pos) => (relUnder(rootPathStr, abs), pos) }
+                .filter(r => wanted.value.contains(r._1)),
+                Map.empty, s"v${c.version}")
+            }
           val next = (prevDv -- changed) ++ descs
           (next.filter { case (k, _) => cur.contains(k) },
             changed.filter(k => prevDv.get(k) != next.get(k)))
@@ -532,6 +529,13 @@ object DeltaExport {
       prevMeta = Some((c.schemaJson, c.partitionCols, c.properties))
     }
     published
+  }
+
+  /** `abs` (a file URI or path) relative to the table root path `root`. */
+  private def relUnder(root: String, abs: String): String = {
+    val p = try Option(new java.net.URI(abs).getPath).getOrElse(abs)
+      catch { case scala.util.control.NonFatal(_) => abs }
+    p.stripPrefix(root).stripPrefix("/")
   }
 
   private def decodePath(s: String): String =
@@ -2036,14 +2040,17 @@ object DeltaExport {
   def mergeForeignUpsert(spark: SparkSession, tablePath: String,
       source: org.apache.spark.sql.DataFrame, key: String,
       txn: Option[(String, Long)] = None): (Long, Long, Long) = {
-    val fields = DeltaImport.snapshot(spark, tablePath).schema.fields
+    val snap0 = DeltaImport.snapshot(spark, tablePath)
+    val fields = snap0.schema.fields
     require(fields.exists(_.name.equalsIgnoreCase(key)),
       s"merge into $tablePath: no key column named $key")
     val aligned = strictAlign(source, fields, s"merge into $tablePath", "merges",
       optional = generatedSpecs(fields).keySet ++ identitySpecs(fields)._1.keySet)
-    val (v, updated, _, inserted) = mergeForeignClauses(spark, tablePath,
+    val (v, updated, _, inserted) = mergeClausesOver(spark, tablePath, snap0,
       aligned, Seq(key), matched = Seq(graft.table.MergeClause.UpdateAll()),
-      notMatched = Seq(graft.table.MergeClause.InsertAll()), txn = txn)
+      notMatched = Seq(graft.table.MergeClause.InsertAll()),
+      notMatchedBySource = Nil, targetAlias = "t", sourceAlias = "s",
+      txn = txn, onExtra = None)
     (v, updated, inserted)
   }
 
@@ -2091,11 +2098,12 @@ object DeltaExport {
     * the change-detection MERGE the reference runs
     * (spark_delta_handler.py:222-236: update only when a column actually
     * differs): `Update(cond = t.x =!= s.x)` re-records nothing for
-    * unchanged rows. Claimed target rows DV-delete from their files
-    * through the DISTRIBUTED build ([[buildForeignDvs]] — positions never
-    * reach the driver) and their new images (update assignments resolved
-    * over both aliases) stage as new files together with the claimed
-    * inserts, all in ONE commit; a CDF-enabled table gets
+    * unchanged rows. Claimed target rows leave their files and their new
+    * images (update assignments resolved over both aliases) stage as new
+    * files together with the claimed inserts, all in ONE commit, through
+    * the write every foreign row-level verb shares ([[writeRowLevel]]:
+    * deletion vectors where the table advertises them, else delta-spark's
+    * pre-DV survivor rewrite); a CDF-enabled table gets
     * update_preimage/update_postimage, delete, and insert rows. The
     * matched scan prunes through data skipping when every key column has
     * ≤1000 distinct source values (conjunction of per-key isin bounds);
@@ -2103,17 +2111,13 @@ object DeltaExport {
     * whole target is in play, as in delta-spark. Foreign merges never
     * evolve the schema: assignments and insert columns must bind to
     * existing target fields (extra SOURCE columns are fine — they feed
-    * clause expressions). A table without `deletionVectors` advertised
-    * takes delta-spark's pre-DV shape instead: the touched files are
-    * removed and their unclaimed rows restage as fresh files (refused
-    * under row tracking, whose row ids a rewrite cannot keep). An
-    * appendOnly table refuses matched and by-source clauses; an
-    * insert-only merge stays legal there. Source must be unique per key
-    * when matched clauses exist. `txn` gives the exactly-once contract of
-    * [[appendToForeign]] — one stamp covering delete and upsert halves of
-    * a CDC batch in one atomic commit. Returns
-    * (committedVersion, rowsUpdated, rowsDeleted, rowsInserted). */
-  /** `onExtra` is the compound-ON residual (`ON t.k = s.k AND t.active`):
+    * clause expressions). An appendOnly table refuses matched and
+    * by-source clauses; an insert-only merge stays legal there. Source
+    * must be unique per key when matched clauses exist. `txn` gives the
+    * exactly-once contract of [[appendToForeign]] — one stamp covering
+    * delete and upsert halves of a CDC batch in one atomic commit.
+    *
+    * `onExtra` is the compound-ON residual (`ON t.k = s.k AND t.active`):
     * it joins the MATCH condition itself, so a key-matched pair failing
     * it surfaces as a target-only row AND a source-only row — Delta's
     * semantics (the target row reaches NOT MATCHED BY SOURCE, the source
@@ -2124,7 +2128,8 @@ object DeltaExport {
     * target's identity value; insert images compute generated columns
     * and allocate identity ids above the schema's high-water mark (the
     * commit re-publishes metaData with the advanced mark, as appends
-    * do); assigning either kind refuses. */
+    * do); assigning either kind refuses. Returns
+    * (committedVersion, rowsUpdated, rowsDeleted, rowsInserted). */
   def mergeForeignClauses(spark: SparkSession, tablePath: String,
       source: org.apache.spark.sql.DataFrame, keys: Seq[String],
       matched: Seq[graft.table.MergeClause] = Nil,
@@ -2133,6 +2138,23 @@ object DeltaExport {
       targetAlias: String = "t", sourceAlias: String = "s",
       txn: Option[(String, Long)] = None,
       onExtra: Option[org.apache.spark.sql.Column] = None)
+      : (Long, Long, Long, Long) =
+    mergeClausesOver(spark, tablePath, DeltaImport.snapshot(spark, tablePath),
+      source, keys, matched, notMatched, notMatchedBySource, targetAlias,
+      sourceAlias, txn, onExtra)
+
+  /** [[mergeForeignClauses]] over the already-resolved snapshot `snap0`:
+    * the clause algebra — claim indices, the three claim frames, image
+    * projection, identity fill, the txn check — with the write itself
+    * handed to [[writeRowLevel]]. */
+  private def mergeClausesOver(spark: SparkSession, tablePath: String,
+      snap0: DeltaImport.Snapshot, source: org.apache.spark.sql.DataFrame,
+      keys: Seq[String], matched: Seq[graft.table.MergeClause],
+      notMatched: Seq[graft.table.MergeClause],
+      notMatchedBySource: Seq[graft.table.MergeClause],
+      targetAlias: String, sourceAlias: String,
+      txn: Option[(String, Long)],
+      onExtra: Option[org.apache.spark.sql.Column])
       : (Long, Long, Long, Long) = {
     import graft.table.MergeClause
     import org.apache.spark.sql.functions.{lit, when, count}
@@ -2166,15 +2188,8 @@ object DeltaExport {
       legacyInvariantsOf(snap.schema) // malformed document refuses up front
     }
 
-    val snap0 = DeltaImport.snapshot(spark, tablePath)
     tx.gate(snap0)
     gate(snap0)
-    // With deletionVectors advertised claimed rows record as DVs; else
-    // the touched files rewrite to their survivors (delta-spark's pre-DV
-    // merge shape) — every Delta table takes the full clause surface.
-    val dvSupported = snap0.protocol.exists(p =>
-      p.readerFeatures.contains("deletionVectors") ||
-        p.writerFeatures.contains("deletionVectors"))
     if (ForeignTxn.txnCommitted(snap0, txn)) return (snap0.version, 0L, 0L, 0L)
     val fields = snap0.schema.fields
     val keyNames = keys.map { k =>
@@ -2219,8 +2234,6 @@ object DeltaExport {
     checkAssigned(matched); checkAssigned(notMatched)
     checkAssigned(notMatchedBySource)
 
-    val FileC = "__graft_foreign_cmg_file"
-    val PosC = "__graft_foreign_cmg_pos"
     val srcNonNull = keyNames.foldLeft(source) { (d, k) =>
       d.filter(col(s"`${source.columns.find(_.equalsIgnoreCase(k)).get}`")
         .isNotNull) }
@@ -2278,6 +2291,7 @@ object DeltaExport {
         }
         Some(base.withColumn(ClaimC, claimOf(notMatched)).persist())
       }
+    val frames = matchedFrame ++ bySourceFrame ++ notMatchedFrame
 
     // Source uniqueness per key — delta-spark's multiple-match error —
     // checked only when a matched row could be claimed twice.
@@ -2319,53 +2333,41 @@ object DeltaExport {
     // unstamped empty batch re-applied later, after the owning engine
     // added matching rows, would mutate rows the CDC stream never owned.
     if (updatedCount + deletedCount + insertedCount == 0 && txn.isEmpty) {
-      (matchedFrame ++ bySourceFrame ++ notMatchedFrame).foreach(_.unpersist())
+      frames.foreach(_.unpersist())
       return (snap0.version, 0L, 0L, 0L)
     }
 
-    // Claimed target rows → distributed per-file DV build.
-    val relOfSpelling: Map[String, String] = candidates.flatMap(f =>
-      DeltaImport.pathSpellings(tablePath, f.path, tx.conf).map(_ -> f.path)).toMap
-    val seed = java.util.UUID.randomUUID().toString
-    val claimedTargets: Option[org.apache.spark.sql.DataFrame] = {
-      val parts = (matchedFrame.toSeq ++ bySourceFrame.toSeq).map(f =>
+    // Claimed target rows, as (file, position).
+    val claimedTargets =
+      if (updatedCount + deletedCount == 0) None
+      else (matchedFrame.toSeq ++ bySourceFrame.toSeq).map(f =>
         f.filter(col(ClaimC) >= 0)
           .select(col(s"$targetAlias.`$FileC`").as(FileC),
             col(s"$targetAlias.`$PosC`").as(PosC)))
-      parts.reduceOption(_ unionByName _)
-    }
-    val (touchedRels, descByRel) =
-      if (dvSupported) {
-        val built = claimedTargets.map(ct =>
-          buildForeignDvs(spark, tablePath, ct, FileC, PosC, relOfSpelling,
-            candidates.map(f => f.path ->
-              f.deletionVector.filter(_.cardinality != 0L)).toMap, seed))
-          .getOrElse(Nil)
-        (built.map(_.rel).sorted, built.map(b => b.rel -> b.desc).toMap)
-      } else {
-        val rels = claimedTargets.map(_.select(FileC).distinct().collect()
-          .map(r => relOfSpelling.getOrElse(r.getString(0),
-            throw new IllegalStateException(
-              s"merge into $tablePath: unmapped file spelling " +
-                r.getString(0))))
-          .toSeq.sorted).getOrElse(Nil)
-        (rels, Map.empty[String, DeltaDeletionVectors.Descriptor])
+        .reduceOption(_ unionByName _)
+    def tgtCols(frame: org.apache.spark.sql.DataFrame) =
+      frame.select(fields.toIndexedSeq.map(f =>
+        col(s"$targetAlias.`${f.name}`").as(f.name)): _*)
+    // The claimed rows' old images for the change feed: update
+    // pre-images and delete rows of each target branch that claimed any.
+    val removed = Seq((matchedFrame, matched, false, mUpd),
+        (bySourceFrame, notMatchedBySource, false, bUpd),
+        (matchedFrame, matched, true, mDel),
+        (bySourceFrame, notMatchedBySource, true, bDel))
+      .collect { case (Some(f), clauses, deletes, n) if n > 0 =>
+        val idxs = clauses.zipWithIndex.collect {
+          case (c, i) if c.isInstanceOf[MergeClause.Delete] == deletes => i }
+        (if (deletes) "delete" else "update_preimage") ->
+          tgtCols(f.filter(col(ClaimC).isin(idxs.map(Int.box): _*)))
       }
-    val touchedSet = touchedRels.toSet
 
-    // New images — one staged write: matched UPDATE claims (assignments
-    // over both aliases), by-source UPDATE claims (target alias only),
-    // and claimed inserts, all projected onto the target schema.
-    // Generated columns RECOMPUTE over the projected (post-assignment)
-    // image — the materialized invariant keeps holding whatever the
-    // clause wrote; identity columns on update images keep the TARGET
-    // value (engine-maintained, never source-overwritten).
-    def regen(df: org.apache.spark.sql.DataFrame)
-        : org.apache.spark.sql.DataFrame =
-      genSpecs.foldLeft(df) { case (d, (name, sql)) =>
-        d.withColumn(name, org.apache.spark.sql.functions.expr(sql)
-          .cast(fields.find(_.name == name).get.dataType))
-      }
+    // New images, projected onto the target schema: matched UPDATE
+    // claims (assignments over both aliases), by-source UPDATE claims
+    // (target alias only), and claimed inserts. Generated columns
+    // RECOMPUTE over the projected (post-assignment) image — the
+    // materialized invariant keeps holding whatever the clause wrote;
+    // identity columns on update images keep the TARGET value
+    // (engine-maintained, never source-overwritten).
     def targetImage(frame: org.apache.spark.sql.DataFrame,
         clauses: Seq[MergeClause], withSource: Boolean)
         : Option[org.apache.spark.sql.DataFrame] = {
@@ -2374,7 +2376,7 @@ object DeltaExport {
         case (MergeClause.Update(as, _), i) => (i, Some(as))
       }
       if (updates.isEmpty) return None
-      Some(regen(updates.map { case (i, as) =>
+      Some(withGenerated(updates.map { case (i, as) =>
         frame.filter(col(ClaimC) === i).select(fields.toIndexedSeq.map { f =>
           val tcol = col(s"$targetAlias.`${f.name}`")
           val v = as match {
@@ -2389,7 +2391,7 @@ object DeltaExport {
           }
           v.cast(f.dataType).as(f.name)
         }: _*)
-      }.reduce(_ unionByName _)))
+      }.reduce(_ unionByName _), fields))
     }
     def insertImage(frame: org.apache.spark.sql.DataFrame,
         clauses: Seq[MergeClause]): Option[org.apache.spark.sql.DataFrame] = {
@@ -2425,7 +2427,7 @@ object DeltaExport {
       // Identity fill ONCE over the unioned insert frame (ids must be
       // unique across all insert clauses): omitted/null values allocate
       // hwm + step·(1 + task-block counter), explicit values ride.
-      val filled = idSpecs.foldLeft(regen(projected)) {
+      val filled = idSpecs.foldLeft(withGenerated(projected, fields)) {
         case (d, (name, (_, step, _))) =>
           import org.apache.spark.sql.functions.monotonically_increasing_id
           val assign = lit(idHwm(name)) +
@@ -2437,177 +2439,36 @@ object DeltaExport {
       Some(filled)
     }
     // Images stage under KIND subdirs (m = matched updates, b = by-source
-    // updates, i = inserts) and every downstream consumer — validation,
-    // watermark, CDF post/insert rows — reads the STAGED BYTES, never a
-    // re-evaluation of the image plan: an identity fill's
-    // monotonically_increasing_id is only stable within one evaluation,
-    // so a second run could stamp CDF rows with ids the table never
-    // committed. Branches whose clauses claimed zero rows skip staging
-    // (no empty part files in the commit).
-    val imageByKind: Seq[(String, org.apache.spark.sql.DataFrame)] =
-      (if (mUpd > 0)
-        matchedFrame.flatMap(f => targetImage(f, matched, withSource = true))
-          .map("m" -> _).toSeq
-      else Nil) ++
-      (if (bUpd > 0)
-        bySourceFrame.flatMap(f =>
-          targetImage(f, notMatchedBySource, withSource = false))
-          .map("b" -> _).toSeq
-      else Nil) ++
-      (if (insertedCount > 0)
-        notMatchedFrame.flatMap(f => insertImage(f, notMatched))
-          .map("i" -> _).toSeq
-      else Nil)
+    // updates, i = inserts); branches whose clauses claimed zero rows
+    // stage nothing (no empty part files in the commit).
+    val images = Seq(
+        ("m", "update_postimage", if (mUpd > 0)
+          matchedFrame.flatMap(targetImage(_, matched, withSource = true))
+        else None),
+        ("b", "update_postimage", if (bUpd > 0)
+          bySourceFrame.flatMap(targetImage(_, notMatchedBySource,
+            withSource = false))
+        else None),
+        ("i", "insert", if (insertedCount > 0)
+          notMatchedFrame.flatMap(insertImage(_, notMatched))
+        else None))
+      .collect { case (kind, changeType, Some(df)) => (kind, changeType, df) }
 
-    val layout = new ForeignTxn.Layout(snap0)
-    tx.run {
-      // Rewrite fallback: the touched files' UNCLAIMED rows (old DVs
-      // already applied by the scan) restage as fresh files replacing the
-      // removed originals — delta-spark's pre-DV merge shape.
-      val survivorStage: Option[Path] =
-        if (dvSupported || touchedRels.isEmpty) None
-        else {
-          require(!snap0.protocol.exists(p => p.minWriterVersion >= 7 &&
-            p.writerFeatures.contains("rowTracking")),
-            s"merge into $tablePath: the rewrite fallback cannot preserve " +
-              "row tracking — enable delta.enableDeletionVectors instead")
-          val touched = snap0.files.filter(f => touchedSet(f.path))
-          val all = DeltaImport
-            .readFilesWithPositions(spark, snap0, touched, FileC, PosC)
-          val survivors = claimedTargets.map(ct =>
-            all.join(ct, Seq(FileC, PosC), "left_anti")).getOrElse(all)
-            .drop(FileC, PosC)
-          val sPhys = DeltaImport.topLevelPhysicalNames(snap0.schema)
-            .filter { case (l, p) => l != p }
-            .foldLeft(survivors) { case (d, (l, p)) => d.withColumnRenamed(l, p) }
-          Some(tx.writeStaged(sPhys, s"_appends/$seed-survivors",
-            layout.partCols))
-        }
-
-      val stagePath = tx.stage(s"_appends/$seed")
-      val stagedAny = imageByKind.nonEmpty
-      imageByKind.foreach { case (kind, df) =>
-        ForeignTxn.writeParquet(DeltaImport.physicalRender(df, snap0.schema),
-          new Path(stagePath, kind), layout.partCols)
-      }
-      /** The staged bytes of one kind, PHYSICAL names (absent when the
-        * branch claimed nothing). The schema is PINNED — partition values
-        * come back with the table's declared types, not inference's (a
-        * string partition value '00123' must not re-type to int 123 on
-        * its way into the CDF files). */
-      def stagedKind(kind: String): Option[org.apache.spark.sql.DataFrame] =
-        imageByKind.collectFirst { case (k, _) if k == kind =>
-          val p = new Path(stagePath, kind)
-          spark.read.schema(layout.physSchema)
-            .option("basePath", p.toString).parquet(p.toString)
-        }
-      def stagedLogical(): org.apache.spark.sql.DataFrame = {
-        val stagedPhys = imageByKind.map { case (k, _) => stagedKind(k).get }
-          .reduce(_ unionByName _)
-        DeltaImport.logicalRestore(stagedPhys, snap0.schema)
-      }
-      def validate(cfg: Map[String, String]): Unit =
-        if (stagedAny) tx.validate(stagedLogical(), snap0.schema, cfg)
-      validate(snap0.configuration)
-      // Advanced identity watermark over the staged bytes (directional —
-      // see [[advancedHwms]]); the commit re-publishes metaData with it,
-      // as appends do.
-      val newHwms: Map[String, Long] =
-        if (idSpecs.isEmpty || !stagedAny) Map.empty
-        else advancedHwms(stagedLogical(), idSpecs, idHwm)
-
-      // CDF rows, classified straight from the claim frames.
-      val cdfOn = flagOn(snap0.configuration, "delta.enableChangeDataFeed")
-      val cdcRoot = tx.stage(s"_change_data/graft-$seed")
-      if (cdfOn) {
-        def phys(df: org.apache.spark.sql.DataFrame) =
-          DeltaImport.physicalRender(df, snap0.schema, keep = Seq("_change_type"))
-        def writeCdc(df: org.apache.spark.sql.DataFrame, sub: String): Unit =
-          if (!df.isEmpty)
-            ForeignTxn.writeParquet(df, new Path(cdcRoot, sub), layout.partCols)
-        def tgtCols(frame: org.apache.spark.sql.DataFrame) =
-          frame.select(fields.toIndexedSeq.map(f =>
-            col(s"$targetAlias.`${f.name}`").as(f.name)): _*)
-        def claimsOfKind(frame: Option[org.apache.spark.sql.DataFrame],
-            clauses: Seq[MergeClause], wantDelete: Boolean) = frame.map { f =>
-          val idxs = clauses.zipWithIndex.collect {
-            case (_: MergeClause.Delete, i) if wantDelete => i
-            case (c, i) if !wantDelete && !c.isInstanceOf[MergeClause.Delete] => i
-          }
-          f.filter(col(ClaimC).isin(idxs.map(Int.box): _*))
-        }
-        // pre-images: updated rows; delete rows; post-images re-derive from
-        // the update projection (exactly what was staged for those claims)
-        claimsOfKind(matchedFrame, matched, wantDelete = false).foreach(f =>
-          writeCdc(phys(tgtCols(f)
-            .withColumn("_change_type", lit("update_preimage"))), "pre-m"))
-        claimsOfKind(bySourceFrame, notMatchedBySource, wantDelete = false)
-          .foreach(f => writeCdc(phys(tgtCols(f)
-            .withColumn("_change_type", lit("update_preimage"))), "pre-b"))
-        claimsOfKind(matchedFrame, matched, wantDelete = true).foreach(f =>
-          writeCdc(phys(tgtCols(f)
-            .withColumn("_change_type", lit("delete"))), "del-m"))
-        claimsOfKind(bySourceFrame, notMatchedBySource, wantDelete = true)
-          .foreach(f => writeCdc(phys(tgtCols(f)
-            .withColumn("_change_type", lit("delete"))), "del-b"))
-        // Post/insert images restate the STAGED bytes (already physical) —
-        // bit-identical to the committed rows by construction, never a
-        // re-evaluation of the image plan.
-        stagedKind("m").foreach(df => writeCdc(
-          df.withColumn("_change_type", lit("update_postimage")), "post-m"))
-        stagedKind("b").foreach(df => writeCdc(
-          df.withColumn("_change_type", lit("update_postimage")), "post-b"))
-        stagedKind("i").foreach(df => writeCdc(
-          df.withColumn("_change_type", lit("insert")), "ins"))
-      }
-
-      val stagedFiles = if (stagedAny) tx.parquetsUnder(stagePath) else Nil
-      val survivorFiles = survivorStage.map(tx.parquetsUnder).getOrElse(Nil)
-      (matchedFrame ++ bySourceFrame ++ notMatchedFrame).foreach(_.unpersist())
-
-      tx.commit(snap0) { snap =>
-        gate(snap)
-        if (ForeignTxn.txnCommitted(snap, txn))
-          Some((snap.version, 0L, 0L, 0L))
-        else {
-          // A rival that removed a touched file or changed the layout
-          // conflicts. So does a rival blind append carrying any of the
-          // source's keys: a retried merge would insert a key the rival
-          // just appended, leaving duplicates (delta-spark raises
-          // ConcurrentAppendException). With every key bounded the rival
-          // adds prune against the per-key `isin`; unbounded keys — and
-          // by-source clauses, which read the whole target — conflict
-          // with ANY rival add.
-          if (ForeignTxn.layoutChanged(snap0, snap) ||
-              ForeignTxn.filesChanged(snap0, snap, touchedRels) ||
-              ForeignTxn.rivalMayMatch(spark, snap0, snap, keysBound))
-            throw new IllegalArgumentException(
-              s"merge into $tablePath: a concurrent commit touched or " +
-                "added rows being merged — re-run the merge against the new state")
-          if (ForeignTxn.constraintsOf(snap.configuration) !=
-              ForeignTxn.constraintsOf(snap0.configuration))
-            validate(snap.configuration)
-          None
-        }
-      } { snap =>
-        ForeignTxn.Publish("MERGE",
-          Map("numTargetRowsUpdated" -> updatedCount,
-            "numTargetRowsDeleted" -> deletedCount,
-            "numTargetRowsInserted" -> insertedCount,
-            "numTargetFilesAdded" ->
-              (stagedFiles.size + survivorFiles.size).toLong,
-            "numDeletionVectorsAdded" ->
-              (if (dvSupported) touchedRels.size.toLong else 0L)),
-          snap0.schema.json, snap.configuration,
-          st => tx.hwmMetaData(snap, newHwms) ++
-            tx.touchLines(layout, snap, st.nowMs, snap0, touchedRels,
-              descByRel) ++
-            tx.freshAdds(layout, snap, st.version, stagedFiles ++ survivorFiles) ++
-            (if (cdfOn) tx.cdcLines(layout, cdcRoot) else Nil) ++
-            ForeignTxn.txnJson(txn, st.nowMs),
-          v => (v, updatedCount, deletedCount, insertedCount))
-      }
-    }
+    // A rival blind append carrying any of the source's keys conflicts
+    // too: a retried merge would insert a key the rival just appended,
+    // leaving duplicates. Unbounded keys — and by-source clauses, which
+    // read the whole target — conflict with ANY rival add.
+    val (v, applied) = writeRowLevel(tx, snap0, candidates, claimedTargets,
+      removed, images, keysBound, gate, "merge",
+      s => Map("numTargetRowsUpdated" -> updatedCount,
+        "numTargetRowsDeleted" -> deletedCount,
+        "numTargetRowsInserted" -> insertedCount,
+        "numTargetFilesAdded" -> s.filesAdded,
+        "numDeletionVectorsAdded" -> s.dvsAdded),
+      txn, advancedHwms(_, idSpecs, idHwm))
+    frames.foreach(_.unpersist())
+    if (applied) (v, updatedCount, deletedCount, insertedCount)
+    else (v, 0L, 0L, 0L)
   }
 
   /** Generated columns of a foreign schema: name → its
@@ -2669,465 +2530,378 @@ object DeltaExport {
     }.toMap
   }
 
-  /** One built deletion vector: the file's log-relative path, its new
-    * descriptor (positions = prior DV ∪ this verb's hits), and how many
-    * NEW positions this verb contributed. */
-  private final case class BuiltDv(rel: String,
-      desc: DeltaDeletionVectors.Descriptor, newHits: Long)
+  /** `df` (on a foreign schema of `fields`) with every generated column
+    * recomputed from its `delta.generationExpression` — the invariant an
+    * update or insert image keeps whatever its assignments wrote. */
+  private def withGenerated(df: org.apache.spark.sql.DataFrame,
+      fields: Array[StructField]): org.apache.spark.sql.DataFrame =
+    generatedSpecs(fields).foldLeft(df) { case (d, (name, sql)) =>
+      d.withColumn(name, org.apache.spark.sql.functions.expr(sql)
+        .cast(fields.find(_.name == name).get.dataType))
+    }
 
-  /** DISTRIBUTED per-file DV build for the foreign mutation verbs —
-    * replaces the driver-side collect of every matched (file, pos) pair:
-    * positions shuffle ONCE keyed by file (each file's positions land
-    * whole in one partition, sorted), executors fold them straight into
-    * compressed RoaringBitmaps ([[DeltaDeletionVectors.BitmapBuilder]] —
-    * never an 8-bytes-per-row array), union the file's PRIOR DV there
+  /** The file spelling and row position columns a foreign row-level verb
+    * reads its target rows with ([[DeltaImport.readFilesWithPositions]]). */
+  private val FileC = "__graft_foreign_file"
+  private val PosC = "__graft_foreign_pos"
+
+  /** What a row-level commit did to the table's files, for each verb's
+    * metrics: deletion vectors added, files removed outright (the rewrite
+    * fallback), files added (staged images plus restaged survivors). */
+  private final case class RowLevelShape(dvsAdded: Long, filesRemoved: Long,
+      filesAdded: Long)
+
+  /** DISTRIBUTED deletion-vector build — the one bitmap fold behind the
+    * foreign row-level verbs ([[writeRowLevel]]) and the mirror export
+    * ([[exportLog]]). `rows` are (log-relative file, position) pairs; they
+    * shuffle ONCE keyed by file (each file's positions land whole in one
+    * partition, sorted) and executors fold them straight into compressed
+    * RoaringBitmaps ([[DeltaDeletionVectors.BitmapBuilder]] — never an
+    * 8-bytes-per-row array), union the file's `prior` DV there
     * (descriptors ride a broadcast, bitmap bytes are read task-side), and
-    * each non-empty partition writes ONE DV file; only per-file
-    * DESCRIPTORS return to the driver. Driver memory is file-count-sized
-    * regardless of the predicate's selectivity — a 10% DELETE on a 100 TB
-    * table no longer funnels billions of positions through one driver
-    * array (the shape of graft's native `deletePositionalCore` and of
-    * delta-spark's own DV writer). Task-retry-safe: partition content is
-    * deterministic (hash partition + sort on unique (file,pos)), and the
-    * DV file name derives from (seed, partitionId), so a retried task
-    * converges on the identical file and write-once reuses it. */
-  private def buildForeignDvs(spark: SparkSession, tablePath: String,
-      matched: org.apache.spark.sql.DataFrame, fileCol: String,
-      posCol: String, relOfSpelling: Map[String, String],
-      priorDvByRel: Map[String, Option[DeltaDeletionVectors.Descriptor]],
-      seed: String): Seq[BuiltDv] = {
+    * each non-empty partition writes ONE DV file under `tableRoot`; only
+    * per-file DESCRIPTORS return to the driver. Driver memory is
+    * file-count-sized regardless of selectivity — a 10% DELETE on a 100 TB
+    * table never funnels billions of positions through one driver array
+    * (the shape of delta-spark's own DV writer). Duplicate positions
+    * collapse in the bitmap (add is idempotent), so cardinality is exact
+    * without a pre-distinct. Task-retry-safe: partition content is
+    * deterministic (hash partition + sort), and the DV file name derives
+    * from (seed, partitionId), so a retried task converges on the
+    * identical write-once file. */
+  private def buildDvs(spark: SparkSession, tableRoot: String,
+      rows: org.apache.spark.sql.Dataset[(String, Long)],
+      prior: Map[String, DeltaDeletionVectors.Descriptor],
+      seed: String): Map[String, DeltaDeletionVectors.Descriptor] = {
     import spark.implicits._
     val hconf = new org.apache.spark.util.SerializableConfiguration(
       spark.sessionState.newHadoopConf())
-    val bSpell = spark.sparkContext.broadcast(relOfSpelling)
-    val bPrior = spark.sparkContext.broadcast(priorDvByRel)
-    matched.select(col(fileCol), col(posCol)).as[(String, Long)]
-      .repartition(col(fileCol))
-      .sortWithinPartitions(fileCol, posCol)
+    val bPrior = spark.sparkContext.broadcast(prior)
+    rows.toDF("rel", "pos")
+      .repartition(col("rel"))
+      .sortWithinPartitions("rel", "pos")
+      .as[(String, Long)]
       .mapPartitions { it =>
-        if (!it.hasNext) Iterator.empty
+        val entries = Seq.newBuilder[(String, Array[Byte], Long)]
+        var rel: String = null
+        var builder: DeltaDeletionVectors.BitmapBuilder = null
+        def flush(): Unit = if (builder != null) {
+          bPrior.value.get(rel).foreach(d =>
+            DeltaDeletionVectors.readPositions(d, tableRoot, hconf.value)
+              .foreach(builder.add))
+          entries += ((rel, builder.serialize(), builder.cardinality))
+        }
+        it.foreach { case (r, pos) =>
+          if (r != rel) {
+            flush()
+            rel = r
+            builder = new DeltaDeletionVectors.BitmapBuilder
+          }
+          builder.add(pos)
+        }
+        flush()
+        val built = entries.result()
+        if (built.isEmpty) Iterator.empty
         else {
           val pid = org.apache.spark.TaskContext.getPartitionId()
-          val entries = Seq.newBuilder[(String, Array[Byte], Long)]
-          val newHits = scala.collection.mutable.Map.empty[String, Long]
-          var curSpelling: String = null
-          var rel: String = null
-          var builder: DeltaDeletionVectors.BitmapBuilder = null
-          var hits = 0L
-          def flush(): Unit = if (builder != null) {
-            bPrior.value.getOrElse(rel, None).foreach { d =>
-              DeltaDeletionVectors.readPositions(d, tablePath, hconf.value)
-                .foreach(builder.add)
-            }
-            entries += ((rel, builder.serialize(), builder.cardinality))
-            newHits(rel) = hits
-          }
-          it.foreach { case (f, p) =>
-            if (f != curSpelling) {
-              flush()
-              curSpelling = f
-              rel = bSpell.value.getOrElse(f,
-                throw new IllegalStateException(
-                  s"DV build for $tablePath: unmapped file spelling $f"))
-              builder = new DeltaDeletionVectors.BitmapBuilder
-              hits = 0L
-            }
-            builder.add(p); hits += 1
-          }
-          flush()
-          val built = entries.result()
           val descs = DeltaDeletionVectors.writeSerializedFile(
-            built, tablePath, s"$seed-p$pid", hconf.value)
+            built, tableRoot, s"$seed-p$pid", hconf.value)
           built.iterator.map { case (r, _, card) =>
             val d = descs(r)
-            (r, d.pathOrInlineDv, d.offset.getOrElse(1), d.sizeInBytes,
-              card, newHits(r))
+            (r, d.pathOrInlineDv, d.offset.getOrElse(1), d.sizeInBytes, card)
           }
         }
       }
-      .collect().toSeq
-      .map { case (r, enc, off, size, card, nh) =>
-        BuiltDv(r,
-          DeltaDeletionVectors.Descriptor("u", enc, Some(off), size, card),
-          nh)
-      }
+      .collect()
+      .map { case (r, enc, off, size, card) =>
+        r -> DeltaDeletionVectors.Descriptor("u", enc, Some(off), size, card)
+      }.toMap
   }
 
-  /** DISTRIBUTED cumulative-DV build for the MIRROR export — the graft→
-    * Delta twin of [[buildForeignDvs]]: graft's positional-delete state
-    * lives in parquet DV dirs as (file, pos) rows, and the mirror needs
-    * each changed file's FULL position set re-encoded as a Delta `u`
-    * descriptor. Positions never visit the driver: rows are mapped to
-    * log-relative paths, filtered to `wanted` (the changed files visible
-    * in the commit), shuffled ONCE keyed by file (each file's positions
-    * land whole in one partition, sorted), folded straight into
-    * compressed RoaringBitmaps on executors, and each non-empty partition
-    * writes ONE DV file under the table root; only per-file DESCRIPTORS
-    * return. Driver memory is changed-file-count-sized regardless of how
-    * broad the native MoR delete was — a 10% `deletePositional` on a
-    * 100 TB table mirrors as descriptors, not a position array (the same
-    * contract the foreign verbs gained in round 10). Duplicate positions
-    * across DV dirs collapse in the bitmap (add is idempotent), so
-    * cardinality is exact without a pre-distinct. Task-retry-safe for the
-    * same reason as [[buildForeignDvs]]: partition content is
-    * deterministic (hash partition + sort) and the DV file name derives
-    * from (seed, partitionId), so a retry converges on the identical
-    * write-once file. */
-  private def buildMirrorDvs(spark: SparkSession, tableRoot: String,
-      dvDirPaths: Seq[String], rootPathStr: String, wanted: Set[String],
-      seed: String): Map[String, DeltaDeletionVectors.Descriptor] = {
-    if (wanted.isEmpty || dvDirPaths.isEmpty)
-      Map.empty[String, DeltaDeletionVectors.Descriptor]
-    else {
-      import spark.implicits._
-      val hconf = new org.apache.spark.util.SerializableConfiguration(
-        spark.sessionState.newHadoopConf())
-      val bWanted = spark.sparkContext.broadcast(wanted)
-      val rootPrefix = rootPathStr
-      spark.read.parquet(dvDirPaths: _*)
-        .select(col("file"), col("pos")).as[(String, Long)]
-        .map { case (abs, pos) =>
-          val p = try Option(new java.net.URI(abs).getPath).getOrElse(abs)
-            catch { case scala.util.control.NonFatal(_) => abs }
-          (p.stripPrefix(rootPrefix).stripPrefix("/"), pos)
-        }
-        .filter(r => bWanted.value.contains(r._1))
-        .toDF("rel", "pos")
-        .repartition(col("rel"))
-        .sortWithinPartitions("rel", "pos")
-        .as[(String, Long)]
-        .mapPartitions { it =>
-          if (!it.hasNext) Iterator.empty
-          else {
-            val pid = org.apache.spark.TaskContext.getPartitionId()
-            val entries = Seq.newBuilder[(String, Array[Byte], Long)]
-            var cur: String = null
-            var builder: DeltaDeletionVectors.BitmapBuilder = null
-            def flush(): Unit = if (builder != null)
-              entries += ((cur, builder.serialize(), builder.cardinality))
-            it.foreach { case (rel, pos) =>
-              if (rel != cur) {
-                flush()
-                cur = rel
-                builder = new DeltaDeletionVectors.BitmapBuilder
-              }
-              builder.add(pos)
-            }
-            flush()
-            val built = entries.result()
-            val descs = DeltaDeletionVectors.writeSerializedFile(
-              built, tableRoot, s"$seed-p$pid", hconf.value)
-            built.iterator.map { case (r, _, card) =>
-              val d = descs(r)
-              (r, d.pathOrInlineDv, d.offset.getOrElse(1), d.sizeInBytes, card)
-            }
-          }
-        }
-        .collect()
-        .map { case (r, enc, off, size, card) =>
-          r -> DeltaDeletionVectors.Descriptor("u", enc, Some(off), size, card)
-        }.toMap
-    }
-  }
-
-  /** DELETE from a FOREIGN Delta table by deletion vectors — the writer
-    * verb a retention/erasure job needs on a shared lakehouse table
-    * ([[appendToForeign]] is the other half): rows matching `predicate`
-    * are recorded deleted WITHOUT rewriting any data file, as delta-spark
-    * does with `delta.enableDeletionVectors=true`. Per touched file the
-    * commit re-adds the same path with a DV union-ing the file's previous
-    * positions and the new hits (remove+add, `dataChange=true`, stats
-    * declared non-tight), and a CDF-enabled table gets `cdc` actions
-    * restating the deleted rows. Matching rows are found by ONE scan of
-    * the skipping-pruned candidate files (partition values ride the
-    * broadcast file→value map); positions fold into bitmaps ON THE
-    * EXECUTORS ([[buildForeignDvs]] — one shuffle keyed by file, DV files
-    * written task-side), so the driver sees only per-file descriptors
-    * regardless of the delete's selectivity. Concurrency: same
-    * optimistic loop as appends, but a
-    * lost race only retries when the winner left every touched file
-    * byte-identical (same path, same DV) — anything else refuses with a
-    * re-run message, exactly Delta's conflict rule for row-level ops.
-    * A table WITHOUT `deletionVectors` advertised falls back to
-    * delta-spark's own pre-DV shape — touched files removed, their
-    * survivors restaged (refused only for row-tracked tables, whose ids a
-    * rewrite cannot preserve); refuses `delta.appendOnly` tables. Returns
-    * (committedVersion, rowsDeleted) — a no-match delete commits nothing
-    * and returns the current version. */
-  def deleteFromForeign(spark: SparkSession, tablePath: String,
-      predicate: org.apache.spark.sql.Column): (Long, Long) = {
-    val tx = new ForeignTxn(spark, tablePath, s"delete from $tablePath")
-    def gate(snap: DeltaImport.Snapshot): Unit =
-      require(!flagOn(snap.configuration, "delta.appendOnly"),
-        s"delete from $tablePath: the table is append-only (delta.appendOnly)")
-
-    val snap0 = DeltaImport.snapshot(spark, tablePath)
-    tx.gate(snap0)
-    gate(snap0)
-    val FileC = "__graft_foreign_del_file"
-    val PosC = "__graft_foreign_del_pos"
-    val candidates = DeltaSkipping.prune(spark, snap0, predicate)
-    if (candidates.isEmpty) return (snap0.version, 0L)
-    val matchedRows = DeltaImport
-      .readFilesWithPositions(spark, snap0, candidates, FileC, PosC)
-      .filter(predicate)
-      .persist() // consumed by several jobs; batch-bounded, GC-reclaimed
-    // With deletionVectors advertised the hits record as DVs (no file
-    // rewritten); otherwise fall back to delta-spark's own pre-DV shape:
-    // touched files are REMOVED and their surviving rows rewritten —
-    // every Delta table is deletable, DVs just make it cheaper.
+  /** The ONE write of the foreign row-level verbs — [[deleteFromForeign]],
+    * [[updateForeign]] and [[mergeForeignClauses]] decide which target
+    * rows they claim and what replaces them; this decides how that lands
+    * (delta-spark likewise runs DELETE, UPDATE and MERGE through one
+    * deletion-vector helper):
+    *  - `claimed` holds the claimed target rows' [[FileC]]/[[PosC]], read
+    *    from `candidates`. With `deletionVectors` advertised they leave
+    *    their files as DV bits ([[buildDvs]] — positions never reach the
+    *    driver): each touched file re-adds under its path with the prior
+    *    DV ∪ the new hits, keeping its row-tracking fields. Otherwise the
+    *    touched files are removed and their UNCLAIMED rows restage under
+    *    `_appends/<seed>-survivors` — delta-spark's pre-DV shape, refused
+    *    under row tracking, whose ids a rewrite cannot keep.
+    *  - `images` (kind, CDF change type, rows on the target schema; each
+    *    non-empty) stage under `_appends/<seed>/<kind>` and validate
+    *    against the table's constraints. Everything downstream — the
+    *    validation, the identity watermark `hwms`, the CDF post/insert
+    *    rows — reads the STAGED BYTES, never a re-evaluation of the image
+    *    plan: an identity fill's monotonically_increasing_id is stable only
+    *    within one evaluation.
+    *  - A CDF-enabled table gets `removed` (CDF change type, non-empty old
+    *    rows) and the staged images as cdc files under
+    *    `_change_data/graft-<seed>`.
+    *  - ONE commit. A rival that changed the layout, removed or re-DV'd a
+    *    touched file, or added a file that may hold rows matching `bound`
+    *    (`None`: any rival add) conflicts — a retry would miss or duplicate
+    *    rows (delta-spark's ConcurrentAppendException) — and refuses with
+    *    "re-run the `noun`"; a rival that changed the constraints
+    *    re-validates the staged images; a rival that recorded `txn`
+    *    already did this work.
+    * Returns the committed version, and whether this call published it
+    * (false: a rival already recorded `txn`). */
+  private def writeRowLevel(tx: ForeignTxn, snap0: DeltaImport.Snapshot,
+      candidates: Seq[DeltaImport.AddFile],
+      claimed: Option[org.apache.spark.sql.DataFrame],
+      removed: Seq[(String, org.apache.spark.sql.DataFrame)],
+      images: Seq[(String, String, org.apache.spark.sql.DataFrame)],
+      bound: Option[org.apache.spark.sql.Column],
+      gate: DeltaImport.Snapshot => Unit, noun: String,
+      metrics: RowLevelShape => Map[String, Long],
+      txn: Option[(String, Long)] = None,
+      hwms: org.apache.spark.sql.DataFrame => Map[String, Long] = _ => Map.empty)
+      : (Long, Boolean) = {
+    import org.apache.spark.sql.functions.lit
+    val spark = tx.spark
+    import spark.implicits._
+    val what = tx.what
     val dvSupported = snap0.protocol.exists(p =>
       p.readerFeatures.contains("deletionVectors") ||
         p.writerFeatures.contains("deletionVectors"))
-
-    // file_path spelling → the snapshot's log-relative path
-    val relOfSpelling: Map[String, String] = candidates.flatMap(f =>
-      DeltaImport.pathSpellings(tablePath, f.path, tx.conf).map(_ -> f.path)).toMap
     val seed = java.util.UUID.randomUUID().toString
-    // Touched files and their DVs come back DESCRIPTOR-sized: positions
-    // aggregate into per-file bitmaps on executors ([[buildForeignDvs]]);
-    // the rewrite fallback needs only the touched-file SET (one distinct
+    // file_path spelling → the snapshot's log-relative path
+    val bRel = spark.sparkContext.broadcast(candidates.flatMap(f =>
+      DeltaImport.pathSpellings(tx.tablePath, f.path, tx.conf)
+        .map(_ -> f.path)).toMap)
+    val claimedRels = claimed.map(_.select(col(FileC), col(PosC))
+      .as[(String, Long)].map { case (f, pos) =>
+        (bRel.value.getOrElse(f, throw new IllegalStateException(
+          s"$what: unmapped file spelling $f")), pos)
+      })
+    val descByRel: Map[String, DeltaDeletionVectors.Descriptor] =
+      if (!dvSupported) Map.empty
+      else claimedRels.fold(Map.empty[String, DeltaDeletionVectors.Descriptor])(
+        buildDvs(spark, tx.tablePath, _, candidates.flatMap(f =>
+          f.deletionVector.filter(_.cardinality != 0L).map(f.path -> _)).toMap,
+          seed))
+    // The rewrite fallback needs only the touched-file SET (one distinct
     // over the file column) — the driver never holds row positions.
-    val (touchedRels, descByRel, deletedCount) =
-      if (dvSupported) {
-        val built = buildForeignDvs(spark, tablePath, matchedRows, FileC,
-          PosC, relOfSpelling,
-          candidates.map(f => f.path ->
-            f.deletionVector.filter(_.cardinality != 0L)).toMap, seed)
-        (built.map(_.rel).sorted,
-          built.map(b => b.rel -> b.desc).toMap,
-          built.map(_.newHits).sum)
-      } else {
-        val rels = matchedRows.select(FileC).distinct().collect()
-          .map(r => relOfSpelling.getOrElse(r.getString(0),
-            throw new IllegalStateException(
-              s"delete from $tablePath: unmapped file spelling ${r.getString(0)}")))
-          .toSeq.sorted
-        (rels, Map.empty[String, DeltaDeletionVectors.Descriptor],
-          if (rels.isEmpty) 0L else matchedRows.count())
-      }
-    if (touchedRels.isEmpty) return (snap0.version, 0L)
-    val touchedSet = touchedRels.toSet
+    val touchedRels: Seq[String] =
+      if (dvSupported) descByRel.keys.toSeq.sorted
+      else claimedRels.fold(Seq.empty[String])(_.map(_._1).distinct()
+        .collect().toSeq.sorted)
+    val touched = touchedRels.toSet
 
     val layout = new ForeignTxn.Layout(snap0)
     tx.run {
-      // CDF: cdc actions restate the deleted rows (physical names on disk,
-      // partitioned like the table — Delta stamps version/timestamp itself).
-      val cdfOn = flagOn(snap0.configuration, "delta.enableChangeDataFeed")
-      val cdcRoot = tx.stage(s"_change_data/graft-$seed")
-      if (cdfOn)
-        ForeignTxn.writeParquet(DeltaImport.physicalRender(
-          matchedRows.drop(FileC, PosC)
-            .withColumn("_change_type", org.apache.spark.sql.functions.lit("delete")),
-          snap0.schema, keep = Seq("_change_type")), cdcRoot, layout.partCols)
-      // Rewrite fallback: without DV support the touched files' SURVIVORS
-      // stage as fresh files (old DVs already applied by the scan; rows the
-      // predicate selects — null included, which never matches — drop out).
+      // Rewrite fallback: the touched files' UNCLAIMED rows (old DVs
+      // already applied by the scan) restage as fresh files replacing the
+      // removed originals.
       val survivorFiles =
-        if (dvSupported) Nil
+        if (dvSupported || touchedRels.isEmpty) Nil
         else {
-          // A row-tracked rewrite would need fresh base ids for the
-          // survivor files; such tables should take the DV path.
           require(!snap0.protocol.exists(p => p.minWriterVersion >= 7 &&
             p.writerFeatures.contains("rowTracking")),
-            s"delete from $tablePath: the rewrite fallback cannot preserve " +
-              "row tracking — enable delta.enableDeletionVectors instead")
-          val touched = snap0.files.filter(f => touchedSet(f.path))
-          val survivors = DeltaImport
-            .readFilesWithPositions(spark, snap0, touched, FileC, PosC)
-            .filter(!org.apache.spark.sql.functions.coalesce(predicate,
-              org.apache.spark.sql.functions.lit(false)))
-            .drop(FileC, PosC)
-          tx.parquetsUnder(tx.writeStaged(
-            DeltaImport.physicalRender(survivors, snap0.schema),
+            s"$what: the rewrite fallback cannot preserve row tracking — " +
+              "enable delta.enableDeletionVectors instead")
+          val all = DeltaImport.readFilesWithPositions(spark, snap0,
+            snap0.files.filter(f => touched(f.path)), FileC, PosC)
+          val survivors = claimed.fold(all)(c =>
+            all.join(c.select(FileC, PosC), Seq(FileC, PosC), "left_anti"))
+          tx.parquetsUnder(tx.writeStaged(DeltaImport.physicalRender(
+            survivors.drop(FileC, PosC), snap0.schema),
             s"_appends/$seed-survivors", layout.partCols))
         }
 
-      tx.commit[(Long, Long)](snap0) { snap =>
+      val stagePath = tx.stage(s"_appends/$seed")
+      images.foreach { case (kind, _, df) =>
+        ForeignTxn.writeParquet(DeltaImport.physicalRender(df, snap0.schema),
+          new Path(stagePath, kind), layout.partCols)
+      }
+      /** The staged bytes of one kind, PHYSICAL names. The schema is
+        * PINNED — partition values come back with the table's declared
+        * types, not inference's (a string partition value '00123' must
+        * not re-type to int 123 on its way into the CDF files). */
+      def staged(kind: String): org.apache.spark.sql.DataFrame = {
+        val p = new Path(stagePath, kind)
+        spark.read.schema(layout.physSchema)
+          .option("basePath", p.toString).parquet(p.toString)
+      }
+      def stagedLogical(): org.apache.spark.sql.DataFrame =
+        DeltaImport.logicalRestore(
+          images.map(i => staged(i._1)).reduce(_ unionByName _), snap0.schema)
+      def validate(cfg: Map[String, String]): Unit =
+        if (images.nonEmpty) tx.validate(stagedLogical(), snap0.schema, cfg)
+      validate(snap0.configuration)
+      val newHwms =
+        if (images.isEmpty) Map.empty[String, Long] else hwms(stagedLogical())
+
+      // CDF: old rows from the claim frames; post-image/insert rows restate
+      // the STAGED bytes (already physical) — bit-identical to the
+      // committed rows by construction.
+      val cdfOn = flagOn(snap0.configuration, "delta.enableChangeDataFeed")
+      val cdcRoot = tx.stage(s"_change_data/graft-$seed")
+      if (cdfOn) {
+        def writeCdc(phys: org.apache.spark.sql.DataFrame, sub: String): Unit =
+          ForeignTxn.writeParquet(phys, new Path(cdcRoot, sub), layout.partCols)
+        removed.zipWithIndex.foreach { case ((changeType, df), i) =>
+          writeCdc(DeltaImport.physicalRender(
+            df.withColumn("_change_type", lit(changeType)), snap0.schema,
+            keep = Seq("_change_type")), s"old-$i")
+        }
+        images.foreach { case (kind, changeType, _) =>
+          writeCdc(staged(kind).withColumn("_change_type", lit(changeType)),
+            s"new-$kind")
+        }
+      }
+
+      val stagedFiles = if (images.isEmpty) Nil else tx.parquetsUnder(stagePath)
+      val shape = RowLevelShape(
+        dvsAdded = if (dvSupported) touchedRels.size.toLong else 0L,
+        filesRemoved = if (dvSupported) 0L else touchedRels.size.toLong,
+        filesAdded = (stagedFiles.size + survivorFiles.size).toLong)
+
+      tx.commit(snap0) { snap =>
         gate(snap)
-        // Row-level ops retry only a TRIVIAL race: the winner must have
-        // left every touched file byte-identical (same path, same DV).
-        // A rival BLIND APPEND whose rows match the predicate does not
-        // commute either: a retried DELETE would commit while missing
-        // those rows — delta-spark raises ConcurrentAppendException for
-        // exactly this. Files added since snap0 prune against the
-        // predicate; any possible match aborts with the re-run message
-        // (a file without stats conservatively "may match").
-        if (ForeignTxn.layoutChanged(snap0, snap) ||
-            ForeignTxn.filesChanged(snap0, snap, touchedRels) ||
-            ForeignTxn.rivalMayMatch(spark, snap0, snap, Some(predicate)))
-          throw new IllegalArgumentException(
-            s"delete from $tablePath: a concurrent commit touched or added " +
-              "rows being deleted — re-run the delete against the new state")
-        None
+        if (ForeignTxn.txnCommitted(snap, txn)) Some((snap.version, false))
+        else {
+          if (ForeignTxn.layoutChanged(snap0, snap) ||
+              ForeignTxn.filesChanged(snap0, snap, touchedRels) ||
+              ForeignTxn.rivalMayMatch(spark, snap0, snap, bound))
+            throw new IllegalArgumentException(
+              s"$what: a concurrent commit touched or added rows being " +
+                s"${noun}d — re-run the $noun against the new state")
+          if (ForeignTxn.constraintsOf(snap.configuration) !=
+              ForeignTxn.constraintsOf(snap0.configuration))
+            validate(snap.configuration)
+          None
+        }
       } { snap =>
-        ForeignTxn.Publish("DELETE",
-          Map("numDeletedRows" -> deletedCount,
-            "numDeletionVectorsAdded" ->
-              (if (dvSupported) touchedRels.size.toLong else 0L),
-            "numRemovedFiles" ->
-              (if (dvSupported) 0L else touchedRels.size.toLong)),
+        ForeignTxn.Publish(noun.toUpperCase, metrics(shape),
           snap0.schema.json, snap.configuration,
-          st => tx.touchLines(layout, snap, st.nowMs, snap0, touchedRels,
+          st => tx.hwmMetaData(snap, newHwms) ++
+            tx.touchLines(layout, snap, st.nowMs, snap0, touchedRels,
               descByRel) ++
-            tx.freshAdds(layout, snap, st.version, survivorFiles) ++
-            (if (cdfOn) tx.cdcLines(layout, cdcRoot) else Nil),
-          v => (v, deletedCount))
+            tx.freshAdds(layout, snap, st.version, stagedFiles ++ survivorFiles) ++
+            (if (cdfOn) tx.cdcLines(layout, cdcRoot) else Nil) ++
+            ForeignTxn.txnJson(txn, st.nowMs),
+          v => (v, true))
       }
     }
   }
 
-  /** UPDATE on a FOREIGN Delta table — the third writer verb, in
-    * delta-spark's DV-update shape: matching rows are DV-deleted from
-    * their files (untouched rows never rewrite) and their updated copies
-    * land as NEW data files, both in ONE commit; a CDF-enabled table gets
-    * `update_preimage`/`update_postimage` cdc actions. Assignments cast
-    * to the column's declared type (ANSI mode surfaces overflow loudly);
-    * CHECK / NOT NULL validate against the STAGED updated copies before
-    * the commit publishes — legacy `delta.invariants` included (updated
-    * rows are new rows, those obligations bind). Requires
-    * `deletionVectors` advertised (as [[deleteFromForeign]]); refuses
-    * appendOnly tables, partition-column assignments (rows would cross
-    * partitions) and assignments TO generated/identity columns (their
-    * values are engine-computed: generated columns recompute from the
-    * post-assignment row instead). Row-tracked tables: re-adds preserve
-    * their baseRowId, updated
-    * copies get FRESH ids above the high-water mark — the protocol-
-    * conformant fresh assignment (id stability across updates needs the
-    * materialized id columns only the owning engine maintains). Returns
-    * (committedVersion, rowsUpdated). */
+  /** DELETE from a FOREIGN Delta table — the writer verb a
+    * retention/erasure job needs on a shared lakehouse table
+    * ([[appendToForeign]] is the other half). Rows matching `predicate`
+    * are found by ONE scan of the skipping-pruned candidate files
+    * (partition values ride the broadcast file→value map) and leave the
+    * table through the shared row-level write ([[writeRowLevel]]): with
+    * `delta.enableDeletionVectors` as delta-spark records them — no data
+    * file rewritten, each touched file re-added with a DV union-ing its
+    * previous positions and the new hits (stats declared non-tight),
+    * positions folded into bitmaps ON THE EXECUTORS — and on a DV-less
+    * table in delta-spark's own pre-DV shape (touched files removed, their
+    * survivors restaged; refused for row-tracked tables). A CDF-enabled
+    * table gets `cdc` actions restating the deleted rows. Concurrency:
+    * same optimistic loop as appends, but a lost race only retries when
+    * the winner left every touched file byte-identical (same path, same
+    * DV) and added no file that may hold matching rows — anything else
+    * refuses with a re-run message, exactly Delta's conflict rule for
+    * row-level ops. Refuses `delta.appendOnly` tables. Returns
+    * (committedVersion, rowsDeleted) — a no-match delete commits nothing
+    * and returns the current version. */
+  def deleteFromForeign(spark: SparkSession, tablePath: String,
+      predicate: org.apache.spark.sql.Column): (Long, Long) =
+    mutateForeign(spark, tablePath, predicate, None)
+
+  /** UPDATE on a FOREIGN Delta table, in delta-spark's shape: matching
+    * rows leave their files through the shared row-level write
+    * ([[writeRowLevel]] — DV bits where the table advertises deletion
+    * vectors, else the survivor rewrite of delta-spark's pre-DV UPDATE)
+    * and their updated copies land as NEW data files, both in ONE commit;
+    * a CDF-enabled table gets `update_preimage`/`update_postimage` cdc
+    * actions. Assignments cast to the column's declared type (ANSI mode
+    * surfaces overflow loudly); CHECK / NOT NULL validate against the
+    * STAGED updated copies before the commit publishes — legacy
+    * `delta.invariants` included (updated rows are new rows, those
+    * obligations bind). Refuses appendOnly tables, partition-column
+    * assignments (rows would cross partitions) and assignments TO
+    * generated/identity columns (their values are engine-computed:
+    * generated columns recompute from the post-assignment row instead).
+    * Row-tracked tables: re-adds preserve their baseRowId, updated copies
+    * get FRESH ids above the high-water mark — the protocol-conformant
+    * fresh assignment (id stability across updates needs the materialized
+    * id columns only the owning engine maintains). Returns
+    * (committedVersion, rowsUpdated) — a no-match update commits nothing. */
   def updateForeign(spark: SparkSession, tablePath: String,
       predicate: org.apache.spark.sql.Column,
-      assignments: Map[String, org.apache.spark.sql.Column]): (Long, Long) = {
-    val tx = new ForeignTxn(spark, tablePath, s"update of $tablePath")
+      assignments: Map[String, org.apache.spark.sql.Column]): (Long, Long) =
+    mutateForeign(spark, tablePath, predicate, Some(assignments))
+
+  /** DELETE (`assignments` None) or UPDATE of the rows matching
+    * `predicate` — the foreign counterpart of `GraftTable.mutate`. */
+  private def mutateForeign(spark: SparkSession, tablePath: String,
+      predicate: org.apache.spark.sql.Column,
+      assignments: Option[Map[String, org.apache.spark.sql.Column]])
+      : (Long, Long) = {
+    val tx = new ForeignTxn(spark, tablePath,
+      if (assignments.isEmpty) s"delete from $tablePath"
+      else s"update of $tablePath")
     def gate(snap: DeltaImport.Snapshot): Unit = {
       require(!flagOn(snap.configuration, "delta.appendOnly"),
-        s"update of $tablePath: the table is append-only (delta.appendOnly)")
-      require(snap.protocol.exists(p =>
-        p.readerFeatures.contains("deletionVectors") ||
-          p.writerFeatures.contains("deletionVectors")),
-        s"update of $tablePath: the table does not advertise deletion " +
-          "vectors — enable delta.enableDeletionVectors on the owning " +
-          "engine, or run the update there")
-      legacyInvariantsOf(snap.schema) // malformed document refuses up front
+        s"${tx.what}: the table is append-only (delta.appendOnly)")
+      // updated copies are new rows: a malformed document refuses up front
+      if (assignments.nonEmpty) legacyInvariantsOf(snap.schema)
     }
 
     val snap0 = DeltaImport.snapshot(spark, tablePath)
     tx.gate(snap0)
     gate(snap0)
     val fields = snap0.schema.fields
-    assignments.keys.foreach(k => require(
-      fields.exists(_.name.equalsIgnoreCase(k)),
-      s"update of $tablePath: no column named $k"))
-    require(!snap0.partitionColumns.exists(pc =>
-      assignments.keys.exists(_.equalsIgnoreCase(pc))),
-      s"update of $tablePath: assigning a partition column moves rows " +
-        "across partitions — delete + insert through the owning engine")
-    // Generated / identity obligations on the updated copies: a
-    // generated column RECOMPUTES from its expression over the row's
-    // post-assignment values (delta-spark's UPDATE contract — the
-    // materialized invariant must keep holding); identity values ride
-    // verbatim (an update creates no new row). Neither is assignable.
-    val genSpecs = generatedSpecs(fields)
-    (genSpecs.keySet ++ identitySpecs(fields)._1.keySet).foreach(n =>
-      require(!assignments.keys.exists(_.equalsIgnoreCase(n)),
-        s"update of $tablePath: column $n is generated/identity — its " +
-          "value is engine-maintained, not assignable"))
+    assignments.foreach { as =>
+      as.keys.foreach(k => require(fields.exists(_.name.equalsIgnoreCase(k)),
+        s"update of $tablePath: no column named $k"))
+      require(!snap0.partitionColumns.exists(pc =>
+        as.keys.exists(_.equalsIgnoreCase(pc))),
+        s"update of $tablePath: assigning a partition column moves rows " +
+          "across partitions — delete + insert through the owning engine")
+      (generatedSpecs(fields).keySet ++ identitySpecs(fields)._1.keySet)
+        .foreach(n => require(!as.keys.exists(_.equalsIgnoreCase(n)),
+          s"update of $tablePath: column $n is generated/identity — its " +
+            "value is engine-maintained, not assignable"))
+    }
 
-    val FileC = "__graft_foreign_upd_file"
-    val PosC = "__graft_foreign_upd_pos"
     val candidates = DeltaSkipping.prune(spark, snap0, predicate)
     if (candidates.isEmpty) return (snap0.version, 0L)
-    val matchedRows = DeltaImport
+    val matched = DeltaImport
       .readFilesWithPositions(spark, snap0, candidates, FileC, PosC)
       .filter(predicate)
-      .persist() // consumed by several jobs; batch-bounded, GC-reclaimed
-    val relOfSpelling: Map[String, String] = candidates.flatMap(f =>
-      DeltaImport.pathSpellings(tablePath, f.path, tx.conf).map(_ -> f.path)).toMap
-    val seed = java.util.UUID.randomUUID().toString
-    // Distributed DV build — positions never reach the driver (see
-    // [[buildForeignDvs]]); only per-file descriptors come back.
-    val built = buildForeignDvs(spark, tablePath, matchedRows, FileC, PosC,
-      relOfSpelling,
-      candidates.map(f => f.path ->
-        f.deletionVector.filter(_.cardinality != 0L)).toMap, seed)
-    if (built.isEmpty) return (snap0.version, 0L)
-    val touchedRels = built.map(_.rel).sorted
-    val descByRel = built.map(b => b.rel -> b.desc).toMap
-    val updatedCount = built.map(_.newHits).sum
-
-    // The updated copies stage exactly like an append; generated columns
-    // recompute over the POST-assignment row.
-    val layout = new ForeignTxn.Layout(snap0)
-    val assigned = matchedRows.drop(FileC, PosC).select(
-      fields.toIndexedSeq.map { f =>
-        assignments.collectFirst {
-          case (k, vc) if k.equalsIgnoreCase(f.name) =>
+      .persist() // consumed by several jobs; batch-bounded
+    try {
+      val n = matched.count()
+      if (n == 0L) return (snap0.version, 0L)
+      val old = matched.drop(FileC, PosC)
+      // The updated copies: each assignment cast to its column's type,
+      // generated columns recomputed over the POST-assignment row, identity
+      // values riding verbatim (an update creates no new row).
+      val images = assignments.toSeq.map(as => ("u", "update_postimage",
+        withGenerated(old.select(fields.toIndexedSeq.map { f =>
+          as.collectFirst { case (k, vc) if k.equalsIgnoreCase(f.name) =>
             vc.cast(f.dataType).as(f.name)
-        }.getOrElse(col(s"`${f.name}`"))
-      }: _*)
-    val updated = genSpecs.foldLeft(assigned) { case (d, (name, sql)) =>
-      d.withColumn(name, org.apache.spark.sql.functions.expr(sql)
-        .cast(fields.find(_.name == name).get.dataType))
-    }
-    tx.run {
-      val stagePath = tx.writeStaged(
-        DeltaImport.physicalRender(updated, snap0.schema),
-        s"_appends/$seed", layout.partCols)
-      def stagedLogical(): org.apache.spark.sql.DataFrame = {
-        val stagedPhys = spark.read.option("basePath", stagePath.toString)
-          .parquet(stagePath.toString)
-        DeltaImport.logicalRestore(stagedPhys, snap0.schema)
-      }
-      def validate(cfg: Map[String, String]): Unit =
-        tx.validate(stagedLogical(), snap0.schema, cfg)
-      validate(snap0.configuration)
-
-      // CDF: pre-images from the matched scan, post-images from the staged
-      // bytes, each under its own subdir of one cdc root.
-      val cdfOn = flagOn(snap0.configuration, "delta.enableChangeDataFeed")
-      val cdcRoot = tx.stage(s"_change_data/graft-$seed")
-      if (cdfOn) {
-        def writeCdc(df: org.apache.spark.sql.DataFrame, sub: String): Unit =
-          ForeignTxn.writeParquet(df, new Path(cdcRoot, sub), layout.partCols)
-        writeCdc(DeltaImport.physicalRender(matchedRows.drop(FileC, PosC)
-          .withColumn("_change_type",
-            org.apache.spark.sql.functions.lit("update_preimage")),
-          snap0.schema, keep = Seq("_change_type")), "pre")
-        writeCdc(DeltaImport.physicalRender(stagedLogical()
-          .withColumn("_change_type",
-            org.apache.spark.sql.functions.lit("update_postimage")),
-          snap0.schema, keep = Seq("_change_type")), "post")
-      }
-      val stagedFiles = tx.parquetsUnder(stagePath)
-
-      tx.commit[(Long, Long)](snap0) { snap =>
-        gate(snap)
-        // Rival blind appends matching the predicate conflict too — a
-        // retried UPDATE would miss their rows (see deleteFromForeign).
-        if (ForeignTxn.layoutChanged(snap0, snap) ||
-            ForeignTxn.filesChanged(snap0, snap, touchedRels) ||
-            ForeignTxn.rivalMayMatch(spark, snap0, snap, Some(predicate)))
-          throw new IllegalArgumentException(
-            s"update of $tablePath: a concurrent commit touched or " +
-              "added rows being updated — re-run the update against the new state")
-        if (ForeignTxn.constraintsOf(snap.configuration) !=
-            ForeignTxn.constraintsOf(snap0.configuration))
-          validate(snap.configuration)
-        None
-      } { snap =>
-        ForeignTxn.Publish("UPDATE",
-          Map("numUpdatedRows" -> updatedCount,
-            "numFiles" -> stagedFiles.size.toLong,
-            "numDeletionVectorsAdded" -> touchedRels.size.toLong),
-          snap0.schema.json, snap.configuration,
-          st => tx.touchLines(layout, snap, st.nowMs, snap0, touchedRels,
-              descByRel) ++
-            tx.freshAdds(layout, snap, st.version, stagedFiles) ++
-            (if (cdfOn) tx.cdcLines(layout, cdcRoot) else Nil),
-          v => (v, updatedCount))
-      }
-    }
+          }.getOrElse(col(s"`${f.name}`"))
+        }: _*), fields)))
+      val (v, _) = writeRowLevel(tx, snap0, candidates, Some(matched),
+        Seq((if (assignments.isEmpty) "delete" else "update_preimage") -> old),
+        images, Some(predicate), gate,
+        if (assignments.isEmpty) "delete" else "update",
+        s => if (assignments.isEmpty)
+          Map("numDeletedRows" -> n, "numDeletionVectorsAdded" -> s.dvsAdded,
+            "numRemovedFiles" -> s.filesRemoved)
+        else
+          Map("numUpdatedRows" -> n, "numFiles" -> s.filesAdded,
+            "numDeletionVectorsAdded" -> s.dvsAdded))
+      (v, n)
+    } finally matched.unpersist()
   }
 
   /** `add.path`/`remove.path` are percent-encoded relative URIs per the

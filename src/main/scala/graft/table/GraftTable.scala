@@ -2850,7 +2850,7 @@ final class GraftTable private (
           Commit(a.version, a.tsMs, op, h.dataDirs ++ data,
             Map(if (post.isEmpty) "numDeletedRows" -> a.changed("delete")
               else "numUpdatedRows" -> a.changed("update_postimage"),
-              "mergeOnRead" -> 1L, "positionalDelete" -> 1L),
+              "mergeOnRead" -> 1L),
             snap.schemaJson,
             partitionCols = h.partitionCols,
             dirStats = h.dirStats ++ meta.map { case (d, m) => d -> m.stats },
@@ -3566,7 +3566,7 @@ final class GraftTable private (
     }
 
   /** Purge deletion vectors once their positions have grown past
-    * `maxTombstoneRatio` of the live rows (footer counts — metadata-only
+    * `maxDeletedRatio` of the live rows (footer counts — metadata-only
     * check, no scan). While DVs live, every read of a marked table pays an
     * in-scan position filter (a hash lookup per row, no join), and the
     * marked rows still occupy bytes; once they stop being "small relative
@@ -3575,13 +3575,13 @@ final class GraftTable private (
     * carry positions are rewritten, every other dir stays referenced
     * unchanged. The merge-on-read write path's periodic-compaction
     * companion, like [[maybeCompact]] for small files. */
-  def maybeMaterialize(maxTombstoneRatio: Double = 0.1,
+  def maybeMaterialize(maxDeletedRatio: Double = 0.1,
       targetFileBytes: Long = 128L * 1024 * 1024): Option[Commit] =
     log.latest() match {
       case Some(c) if c.dvDirs.nonEmpty =>
         val dead = c.dvDirs.map(countDir).sum.toDouble
         val live = math.max(1L, c.dataDirs.map(countDir).sum - dead.toLong).toDouble
-        if (dead / live > maxTombstoneRatio) Some(materializeDeletes(targetFileBytes))
+        if (dead / live > maxDeletedRatio) Some(materializeDeletes(targetFileBytes))
         else None
       case _ => None
     }

@@ -8,12 +8,12 @@ import org.apache.spark.scheduler.{SparkListener, SparkListenerTaskEnd}
 /** Dev-only: scale probe of the graft→Delta MIRROR export's DV path —
   * the twin of [[ForeignWriterProbe]]'s broad-delete case, one layer up.
   * A ×K-replicated sf0.1 orders table takes a 10% NATIVE positional
-  * delete (graft's `deletePositionalCore` is distributed — positions
+  * delete (graft's `mutate` is distributed — positions
   * live in parquet DV dirs), then `exportLog` mirrors it as a Delta
   * commit. Before round 11 the export collected EVERY position to the
   * driver (`collect_list(pos).collect()`) and wrote the bitmap file
   * driver-side; now positions fold into RoaringBitmaps on executors
-  * ([[graft.sources.DeltaExport.buildMirrorDvs]]) and only per-file
+  * ([[graft.sources.DeltaExport.buildDvs]]) and only per-file
   * descriptors return.
   *
   * The probe makes the driver payload VISIBLE two ways:

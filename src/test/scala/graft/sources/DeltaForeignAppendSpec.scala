@@ -5,7 +5,7 @@ import org.apache.spark.sql.functions._
 import org.json4s.jackson.JsonMethods
 
 import graft.SparkSpec
-import graft.table.GraftTable
+import graft.table.{GraftTable, MergeClause}
 
 /** Foreign-table appends ([[DeltaExport.appendToForeign]]) — graft as a
   * Delta WRITER: new rows commit into a table no graft log governs, via
@@ -308,6 +308,30 @@ class DeltaForeignAppendSpec extends SparkSpec {
     assert(e2.getMessage.contains("append-only"))
   }
 
+  test("DV-less foreign update falls back to the rewrite shape") {
+    val root = tmpDir("fupd-nodv")
+    val t = GraftTable.create(spark, root,
+      (0L until 20L).map(i => (i, s"s$i")).toDF("k", "s"), Nil)
+    DeltaExport.exportLog(t) // no DVs in play — protocol never advertises them
+    retire(root)
+    // the touched files leave the table, updated copies and survivors land
+    // as new files
+    val pathsBeforeUpd = DeltaImport.snapshot(spark, root).files.map(_.path).toSet
+    val (_, nu) = DeltaExport.updateForeign(spark, root, col("k") % 4 === 2L,
+      Map("s" -> concat(col("s"), lit("!"))))
+    assert(nu === 5L) // 2, 6, 10, 14, 18
+    val afterUpd = DeltaImport.snapshot(spark, root)
+    assert(afterUpd.files.forall(_.deletionVector.isEmpty))
+    assert(afterUpd.files.exists(f => !pathsBeforeUpd.contains(f.path)))
+    assert(!pathsBeforeUpd.subsetOf(afterUpd.files.map(_.path).toSet))
+    val readUpd = DeltaImport.read(spark, root)
+    assert(readUpd.count() === 20L)
+    assert(readUpd.filter(col("s").endsWith("!")).count() === 5L)
+    assert(readUpd.filter(col("s") === "s2!").count() === 1L)
+    assert(readUpd.filter(col("k") === 3L).select("s").as[String].collect()
+      .toSeq === Seq("s3")) // survivor intact
+  }
+
   test("foreign DV update: copies land as new files, sources DV'd, CDF images") {
     val root = tmpDir("fupd-dv")
     val t = GraftTable.create(spark, root,
@@ -340,6 +364,71 @@ class DeltaForeignAppendSpec extends SparkSpec {
     val (v3, n3) = DeltaExport.updateForeign(spark, root,
       col("k") === 5000L, Map("s" -> col("s")))
     assert(n3 === 0L && v3 === DeltaImport.latestVersion(spark, root))
+  }
+
+  test("foreign row-level verbs record their operation and metrics") {
+    val root = tmpDir("fhist-dv")
+    val t = GraftTable.create(spark, root,
+      (0L until 40L).map(i => (i, s"s$i")).toDF("k", "s"), Nil)
+    t.deletePositional(col("k") === 39L) // protocol advertises DVs
+    DeltaExport.exportLog(t)
+    retire(root)
+    val fs = new Path(root).getFileSystem(spark.sparkContext.hadoopConfiguration)
+    def metricsAt(v: Long): Map[String, Long] = {
+      val in = fs.open(new Path(root, f"_delta_log/$v%020d.json"))
+      val lines = try scala.io.Source.fromInputStream(in, "UTF-8").getLines()
+        .toList finally in.close()
+      val commitInfo = lines.map(JsonMethods.parse(_) \ "commitInfo")
+        .find(_ != org.json4s.JNothing).get
+      commitInfo \ "operationMetrics" match {
+        case org.json4s.JObject(kvs) => kvs.map {
+          case (k, org.json4s.JString(x)) => k -> x.toLong
+          case (k, other) => fail(s"metric $k is not a string: $other")
+        }.toMap
+        case other => fail(s"no operationMetrics: $other")
+      }
+    }
+    // files whose DV changed, and files that are new, between two snapshots
+    def dvsAdded(a: DeltaImport.Snapshot, b: DeltaImport.Snapshot): Long = {
+      val before = a.files.map(f => f.path -> f.deletionVector).toMap
+      b.files.count(f => f.deletionVector.nonEmpty &&
+        before.get(f.path).exists(_ != f.deletionVector)).toLong
+    }
+    def filesAdded(a: DeltaImport.Snapshot, b: DeltaImport.Snapshot): Long = {
+      val before = a.files.map(_.path).toSet
+      b.files.count(f => !before(f.path)).toLong
+    }
+
+    val s0 = DeltaImport.snapshot(spark, root)
+    val (vd, nd) = DeltaExport.deleteFromForeign(spark, root, col("k") % 10 === 1L)
+    val s1 = DeltaImport.snapshot(spark, root)
+    val (vu, nu) = DeltaExport.updateForeign(spark, root, col("k") % 10 === 2L,
+      Map("s" -> lit("u")))
+    val s2 = DeltaImport.snapshot(spark, root)
+    val (vm, mu, md, mi) = DeltaExport.mergeForeignClauses(spark, root,
+      Seq((3L, "m3", "keep"), (5L, "x", "del"), (200L, "m200", "keep"))
+        .toDF("k", "s", "op"), Seq("k"),
+      matched = Seq(MergeClause.Delete(condition = Some(col("s.op") === "del")),
+        MergeClause.UpdateAll()),
+      notMatched = Seq(MergeClause.InsertAll()))
+    val s3 = DeltaImport.snapshot(spark, root)
+    assert((nd, nu, mu, md, mi) === ((4L, 4L, 1L, 1L, 1L)))
+    assert(Seq(vd, vu, vm) === Seq(s0.version + 1, s0.version + 2, s0.version + 3))
+
+    val ops = DeltaImport.history(spark, root).as[(Long, java.sql.Timestamp, String)]
+      .collect().map(r => r._1 -> r._3).toMap
+    assert(ops(vd) === "DELETE" && ops(vu) === "UPDATE" && ops(vm) === "MERGE")
+    assert(dvsAdded(s0, s1) > 0L && filesAdded(s0, s1) === 0L)
+    assert(metricsAt(vd) === Map("numDeletedRows" -> 4L,
+      "numDeletionVectorsAdded" -> dvsAdded(s0, s1), "numRemovedFiles" -> 0L))
+    assert(filesAdded(s1, s2) > 0L)
+    assert(metricsAt(vu) === Map("numUpdatedRows" -> 4L,
+      "numFiles" -> filesAdded(s1, s2),
+      "numDeletionVectorsAdded" -> dvsAdded(s1, s2)))
+    assert(metricsAt(vm) === Map("numTargetRowsUpdated" -> 1L,
+      "numTargetRowsDeleted" -> 1L, "numTargetRowsInserted" -> 1L,
+      "numTargetFilesAdded" -> filesAdded(s2, s3),
+      "numDeletionVectorsAdded" -> dvsAdded(s2, s3)))
   }
 
   test("foreign update on a generated-column table recomputes the column") {

@@ -4,7 +4,7 @@ import org.apache.hadoop.fs.Path
 import org.apache.spark.sql.functions._
 
 import graft.SparkSpec
-import graft.table.GraftTable
+import graft.table.{GraftTable, MergeClause}
 
 /** TRUE multi-writer races on the foreign verbs — a rival commit lands in
   * the window between the verb's snapshot read and its exclusive publish
@@ -297,21 +297,50 @@ class DeltaForeignRaceSpec extends SparkSpec {
     assert(DeltaImport.read(spark, root).count() === 22L)
   }
 
-  test("delete losing every race gives up after 20 attempts, staging reaped") {
-    val root = rewriteTable("race-del-storm", 40L)
+  /** Runs `verb` on a DV-less, CDF-on table (so it stages survivors and
+    * cdc files) where every publish attempt finds a rival already holding
+    * its version: the verb gives up after 20 attempts with its staging
+    * reaped and the table untouched. */
+  private def loseEveryRace(name: String)(verb: String => Unit): Unit = {
+    val root = rewriteTable(name, 40L)
     val snap = DeltaImport.snapshot(spark, root)
     assert(snap.configuration.get("delta.enableChangeDataFeed").contains("true"))
     assert(!snap.protocol.exists(_.writerFeatures.contains("deletionVectors")))
-    // every publish attempt finds a rival already holding its version
     DeltaExport.onBeforeForeignPublish = () =>
       writeLogFile(root, DeltaImport.latestVersion(spark, root) + 1,
         commitInfoOnly(1L))
-    val e = try intercept[IllegalArgumentException] {
-      DeltaExport.deleteFromForeign(spark, root, col("k") % 10 === 0L)
-    } finally DeltaExport.onBeforeForeignPublish = () => ()
+    val e = try intercept[IllegalArgumentException](verb(root))
+      finally DeltaExport.onBeforeForeignPublish = () => ()
     assert(e.getMessage.contains("lost the commit race"))
     assertNoStaging(root)
-    assert(DeltaImport.read(spark, root).count() === 40L)
+    val read = DeltaImport.read(spark, root)
+    assert(read.count() === 40L)
+    assert(read.filter(col("s") =!= concat(lit("s"), col("k"))).isEmpty)
+  }
+
+  test("delete losing every race gives up after 20 attempts, staging reaped") {
+    loseEveryRace("race-del-storm") { root =>
+      DeltaExport.deleteFromForeign(spark, root, col("k") % 10 === 0L)
+    }
+  }
+
+  test("update losing every race gives up after 20 attempts, staging reaped") {
+    loseEveryRace("race-upd-storm") { root =>
+      DeltaExport.updateForeign(spark, root, col("k") % 10 === 0L,
+        Map("s" -> lit("updated")))
+    }
+  }
+
+  test("clause merge losing every race gives up after 20 attempts, " +
+      "staging reaped") {
+    loseEveryRace("race-cmg-storm") { root =>
+      DeltaExport.mergeForeignClauses(spark, root,
+        Seq((1L, "x", "del"), (2L, "upd", "keep"), (100L, "new", "keep"))
+          .toDF("k", "s", "op"), Seq("k"),
+        matched = Seq(MergeClause.Delete(condition = Some(col("s.op") === "del")),
+          MergeClause.UpdateAll()),
+        notMatched = Seq(MergeClause.InsertAll()))
+    }
   }
 
   test("a rival turning on appendOnly refuses a mid-flight delete and " +

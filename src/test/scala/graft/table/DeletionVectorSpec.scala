@@ -20,7 +20,7 @@ class DeletionVectorSpec extends SparkSpec {
     val t = GraftTable.create(spark, tmpDir("dv-basic"), seed)
     val c = t.deletePositional(col("id") % 10 === 0)
     assert(c.metrics("numDeletedRows") === 10)
-    assert(c.metrics("positionalDelete") === 1)
+    assert(c.metrics("mergeOnRead") === 1)
     val read = t.read()
     assert(read.count() === 90)
     assert(read.filter(col("id") % 10 === 0).count() === 0)
@@ -126,9 +126,9 @@ class DeletionVectorSpec extends SparkSpec {
     val seed = (1L to 100L).map(i => (i, i * 1.0)).toDF("id", "x")
     val t = GraftTable.create(spark, tmpDir("dv-ratio"), seed)
     t.deletePositional(col("id") <= 5)
-    assert(t.maybeMaterialize(maxTombstoneRatio = 0.2).isEmpty) // 5/95 below
+    assert(t.maybeMaterialize(maxDeletedRatio = 0.2).isEmpty) // 5/95 below
     t.deletePositional(col("id") <= 30)
-    assert(t.maybeMaterialize(maxTombstoneRatio = 0.2).isDefined) // 30/70 above
+    assert(t.maybeMaterialize(maxDeletedRatio = 0.2).isDefined) // 30/70 above
     assert(t.headCommit.get.dvDirs.isEmpty)
     assert(t.read().count() === 70)
   }

@@ -407,14 +407,14 @@ class GraftTableSpec extends SparkSpec {
     assert(t.read().collect().map(_.getLong(0)).toSet === Set(1L, 3L))
   }
 
-  test("maybeMaterialize fires only past the tombstone ratio") {
+  test("maybeMaterialize fires only past the deleted-row ratio") {
     val t = GraftTable.create(spark, tmpDir("gt-morm"), seedCustomers)
     t.append(Seq((4L, "Ann", "ann@x.com", 400.0)).toDF("id", "name", "email", "balance"))
     val Seq(marked, unmarked) = t.headCommit.get.dataDirs
     t.deletePositional(col("id") === 1L) // 1 dead / 3 live = 0.33
-    assert(t.maybeMaterialize(maxTombstoneRatio = 0.6).isEmpty)
+    assert(t.maybeMaterialize(maxDeletedRatio = 0.6).isEmpty)
     assert(t.read().count() === 3) // untouched below threshold
-    val done = t.maybeMaterialize(maxTombstoneRatio = 0.3)
+    val done = t.maybeMaterialize(maxDeletedRatio = 0.3)
     assert(done.isDefined && done.get.dvDirs.isEmpty)
     // only the DV-marked dir is rewritten; the other stays referenced as is
     assert(!done.get.dataDirs.contains(marked))
