@@ -27,9 +27,12 @@ import graft.table.GraftTable
   * one-line `format("kafka").option("subscribe", …)` at [[source]].
   *
   * Scale notes: every batch operation is a distributed plan — the audit
-  * append is a blind columnar write; each snapshot merge shuffles batch and
-  * snapshot on the key (batch side is micro-batch-sized → AQE broadcasts
-  * it); delete keys flow through an anti-join, never the driver.
+  * append is a blind columnar write; each snapshot apply is one positional
+  * MERGE ([[GraftTable.mergeClausesPositional]]) that joins the batch with
+  * the snapshot on the key and writes only batch-sized output: deletion
+  * vectors for the rows it replaces or deletes, one data dir of new row
+  * images, the change feed. Delete keys flow through that join, never the
+  * driver.
   */
 object CdcPipeline {
 
@@ -51,9 +54,9 @@ object CdcPipeline {
       // `_delta_log` mirror of every maintained table current
       // ([[graft.sources.DeltaExport.exportLog]] — incremental, one Delta
       // commit per graft commit), so any Delta reader follows the
-      // pipeline's output live. The pipeline's mutations are all
-      // snapshot-rewrites (merge/deleteKeys), which the exporter can
-      // always express.
+      // pipeline's output live. The snapshot applies are positional
+      // MERGEs, which the exporter publishes as Delta deletion vectors
+      // plus added files; the audit stream only appends.
       deltaMirror: Boolean = false,
       // Optional small-files guard: compact the audit table once it
       // accumulates this many append dirs (GraftTable.maybeCompact). OFF by
@@ -177,12 +180,13 @@ object CdcPipeline {
   }
 
   /** Apply one parsed micro-batch to one table's snapshot: winner rows with
-    * op c/u/r merge (M1), winner rows with op d anti-join delete (M3). */
+    * op c/u/r merge (M1), winner rows with op d delete (M3). */
   private[pipeline] def applyBatchToSnapshot(
       spark: SparkSession, cfg: Config, table: String, auditRows: DataFrame): Unit = {
     val winners = latestPerKey(auditRows, table)
     // Pin processing time per batch: current_timestamp() re-evaluates per
-    // job, and the merge runs two jobs (snapshot + CDF) that must agree.
+    // job, and the merge writes its row images and its change feed in
+    // separate jobs that must agree.
     val batchTs = new java.sql.Timestamp(System.currentTimeMillis())
     val upserts = Parse.typedSnapshotRows(winners, table)
       .withColumn("__processed_at", lit(batchTs))
@@ -193,32 +197,37 @@ object CdcPipeline {
     // The table's log is resolved once here; the merge and the mirror
     // reuse the handle.
     val existing = GraftTable.find(spark, path)
-    // SINGLE-PASS apply: upserts AND deletes ride ONE clause merge — one
-    // full-outer join, one snapshot write, one commit per micro-batch
-    // (previously merge + anti-join delete = two joins, two commits).
-    // Change detection is the matched-UPDATE clause's condition (Delta's
-    // own spelling of spark_delta_handler.py:222-236): a re-delivered
-    // identical row matches NO clause and carries untouched — a true
-    // no-op, no CDF row, not even metadata churn.
+    // SINGLE-PASS apply: upserts AND deletes ride ONE positional clause
+    // merge — one join, one commit per micro-batch, and only batch-sized
+    // writes: replaced and deleted rows are marked in a deletion vector,
+    // new row images land in one new data dir. Change detection is the
+    // matched-UPDATE clause's condition (Delta's own spelling of
+    // spark_delta_handler.py:222-236): a re-delivered identical row
+    // matches NO clause — a true no-op, no CDF row, and a batch of only
+    // such rows publishes no version at all.
     if (existing.isDefined || !upserts.isEmpty) {
       val t = existing.getOrElse(GraftTable.create(spark, path, upserts.limit(0)))
       val src = upserts.unionByName(
         deletes.select(upserts.columns.map(col).toSeq: _*))
-      if (!src.isEmpty) {
-        val meta = Set("id", "__cdc_operation", "__cdc_timestamp", "__processed_at")
-        val changed = upserts.columns.filterNot(meta.contains).toSeq
-          .map(c => !(col(s"t.$c") <=> col(s"s.$c")))
-          .reduceOption(_ || _).getOrElse(lit(false))
-        t.mergeClauses(src, "id",
-          matched = Seq(
-            graft.table.MergeClause.Delete(
-              Some(col("s.__cdc_operation") === "DELETE")),
-            graft.table.MergeClause.UpdateAll(Some(changed))),
-          notMatched = Seq(
-            graft.table.MergeClause.InsertAll(
-              Some(col("s.__cdc_operation") =!= "DELETE"))))
-        (): Unit
-      }
+      val meta = Set("id", "__cdc_operation", "__cdc_timestamp", "__processed_at")
+      val changed = upserts.columns.filterNot(meta.contains).toSeq
+        .map(c => !(col(s"t.$c") <=> col(s"s.$c")))
+        .reduceOption(_ || _).getOrElse(lit(false))
+      t.mergeClausesPositional(src, Seq("id"), None,
+        matched = Seq(
+          graft.table.MergeClause.Delete(
+            Some(col("s.__cdc_operation") === "DELETE")),
+          graft.table.MergeClause.UpdateAll(Some(changed))),
+        notMatched = Seq(
+          graft.table.MergeClause.InsertAll(
+            Some(col("s.__cdc_operation") =!= "DELETE"))))
+      // Marked rows cost every read a position filter and still occupy
+      // their bytes; once they pass a tenth of the live rows, rewriting
+      // just the marked dirs is cheaper than that recurring tax (Delta's
+      // auto-compaction of deletion vectors). The check reads recorded
+      // row counts and DV footers only, so a batch that stays under the
+      // ratio pays no job for it.
+      t.maybeMaterialize(maxDeletedRatio = 0.1)
       mirrorDelta(cfg, t)
     }
   }

@@ -223,7 +223,8 @@ object DeltaExport {
     // descriptors ([[buildDvs]]); the positions themselves shuffle
     // straight into executor-side bitmaps.
     def readDvDirs(dirs: Seq[String]) =
-      spark.read.parquet(dirs.map(d => new Path(root, d).toString): _*)
+      spark.read.schema("file STRING, pos BIGINT")
+        .parquet(dirs.map(d => new Path(root, d).toString): _*)
     def filesNamedIn(dirs: Seq[String]): Set[String] =
       if (dirs.isEmpty) Set.empty
       else readDvDirs(dirs).select("file").distinct().collect()
@@ -313,14 +314,19 @@ object DeltaExport {
         if (c.dvDirs.toSet == prevDvDirs.toSet)
           (prevDv.filter { case (k, _) => cur.contains(k) }, Set.empty[String])
         else {
-          val stateKeys = filesNamedIn(c.dvDirs)
+          // Growth's candidates are the files its new dirs name, and each
+          // still carries positions; a reset also learns which files the
+          // whole state names, since a prior DV file may carry none now.
           val grewOnly = prevDvDirs.forall(c.dvDirs.contains)
-          val candidates =
-            if (grewOnly) filesNamedIn(c.dvDirs.filterNot(prevDvDirs.contains))
-            else prevDv.keySet ++ stateKeys
+          val stateKeys = Option.when(!grewOnly)(filesNamedIn(c.dvDirs))
+          val candidates = stateKeys match {
+            case None => filesNamedIn(c.dvDirs.filterNot(prevDvDirs.contains))
+            case Some(keys) => prevDv.keySet ++ keys
+          }
           val changed = candidates.filter(cur.contains)
           // each changed file's FULL position set, re-encoded as a `u` DV
-          val wanted = spark.sparkContext.broadcast(changed.intersect(stateKeys))
+          val wanted = spark.sparkContext.broadcast(
+            stateKeys.fold(changed)(changed.intersect))
           val descs =
             if (wanted.value.isEmpty) Map.empty[String, DeltaDeletionVectors.Descriptor]
             else {

@@ -96,7 +96,8 @@ object DeltaImport {
                                         // kept when extendedFileMetadata has them
       cdc: Seq[AddFile],
       txns: Seq[(String, Long)], // SetTransaction (appId, version)
-      domains: Seq[(String, String, Boolean)] = Nil) // (domain, config, removed)
+      domains: Seq[(String, String, Boolean)] = Nil, // (domain, config, removed)
+      operationMetrics: Map[String, String] = Map.empty) // commitInfo.operationMetrics
 
   private implicit val formats: Formats = DefaultFormats
 
@@ -262,6 +263,7 @@ object DeltaImport {
   private def actionsOf(version: Long, lines: Iterator[String]): VersionActions = {
     var ts = 0L
     var op = ""
+    var metrics = Map.empty[String, String]
     var meta: Option[(StructType, Seq[String], Map[String, String], String)] = None
     var protocol: Option[Protocol] = None
     val adds = Seq.newBuilder[(AddFile, Boolean)]
@@ -283,6 +285,16 @@ object DeltaImport {
             case _ => (ci \ "timestamp").extractOrElse[Long](0L)
           }
           op = (ci \ "operation").extractOrElse[String]("")
+          // Delta writes every metric as a string; a writer that wrote a
+          // bare number is read the same way.
+          metrics = (ci \ "operationMetrics") match {
+            case JObject(kvs) => kvs.collect {
+              case (k, JString(v)) => k -> v
+              case (k, JInt(v)) => k -> v.toString
+              case (k, JLong(v)) => k -> v.toString
+            }.toMap
+            case _ => Map.empty
+          }
       }
       (j \ "metaData") match {
         case JNothing => ()
@@ -333,7 +345,7 @@ object DeltaImport {
     }
     VersionActions(version, ts, op, meta, protocol,
       adds.result(), removes.result(), cdc.result(), txns.result(),
-      domains.result())
+      domains.result(), metrics)
   }
 
   /** JSON commit files of the log ≥ `afterVersion` (exclusive), ascending. */
@@ -969,7 +981,9 @@ object DeltaImport {
         * bookkeeping that checkpoint tombstones must carry. */
       allRemoves: Seq[AddFile] = Nil,
       /** SetTransaction actions (appId → version) of the commit. */
-      txns: Seq[(String, Long)] = Nil)
+      txns: Seq[(String, Long)] = Nil,
+      /** The commitInfo's `operationMetrics`, as the writer recorded them. */
+      operationMetrics: Map[String, String] = Map.empty)
 
   /** Per-version changes in (fromVersion, toVersion], ascending — one JSON
     * parse per commit file, cached nowhere (commit files are small and the
@@ -986,20 +1000,22 @@ object DeltaImport {
         val a = actionsOf(v, lines.iterator)
         VersionChanges(v, a.timestampMs, a.operation,
           a.adds.filter(_._2).map(_._1), a.removes.filter(_._2).map(_._1), a.cdc,
-          a.removes.map(_._1), a.txns)
+          a.removes.map(_._1), a.txns, a.operationMetrics)
       }
   }
 
   /** DESCRIBE HISTORY for a FOREIGN Delta table: one row per retained
     * JSON commit, newest first — version, commit instant (the ICT when
-    * the commit stamped one), operation. Log-sized, never data-sized. */
+    * the commit stamped one), operation, and the `operationMetrics` the
+    * writer recorded (a string map, as delta-spark shows it). Log-sized,
+    * never data-sized. */
   def history(spark: SparkSession, tablePath: String): org.apache.spark.sql.DataFrame = {
     import spark.implicits._
     changesBetween(spark, tablePath, -1L, Long.MaxValue)
       .map(vc => (vc.version,
-        new java.sql.Timestamp(vc.timestampMs), vc.operation))
+        new java.sql.Timestamp(vc.timestampMs), vc.operation, vc.operationMetrics))
       .sortBy(-_._1)
-      .toDF("version", "timestamp", "operation")
+      .toDF("version", "timestamp", "operation", "operationMetrics")
   }
 
   /** Latest version of the log (−1 when only a checkpoint exists and no

@@ -100,7 +100,12 @@ final class GraftTable private (
     * [[graft.sim.Similarity.lshParams]]) without a scan. */
   def rowCount: Long =
     log.latest().map(c =>
-      c.dataDirs.map(countDir).sum - c.dvDirs.map(countDir).sum).getOrElse(0L)
+      c.dataDirs.map(rowsOf(c, _)).sum - c.dvDirs.map(countDir).sum).getOrElse(0L)
+
+  /** Rows of data dir `d` of `c`: the footer count its commit recorded,
+    * else read from the footers now. */
+  private def rowsOf(c: Commit, d: String): Long =
+    c.dirNulls.get(d).flatMap(_.get("")).filter(_ >= 0).getOrElse(countDir(d))
 
   private def commitFor(v: Long): Commit =
     log.commits().find(_.version == v).getOrElse(
@@ -191,38 +196,45 @@ final class GraftTable private (
       throw new IllegalStateException(
         s"version ${c.version} of $root is no longer available (vacuumed dirs: ${missing.mkString(", ")})")
     // Positional deletion vectors subtract by (file, row_index) — a
-    // per-file position FILTER inside the scan's projection, NO join: the
-    // inline predicate broadcasts kilobytes of positions through the plan
-    // (Delta's DV read shape). Only a pathologically large DV (past
-    // `spark.graft.dv.inlineMaxEntries`) falls back to an anti-join.
-    val dvEntryCount = c.dvDirs.map(countDir).sum
-    val dvInline: Option[Map[String, Seq[Long]]] =
-      if (c.dvDirs.isEmpty || dvEntryCount > dvInlineMax) None
-      else Some(dvEntriesOf(c))
-    val needPos = withPos || c.dvDirs.nonEmpty || withRowId
+    // per-file position FILTER inside each scan, on its own `_metadata`,
+    // NO join: the inline predicate broadcasts kilobytes of positions
+    // through the plan (Delta's DV read shape). Only a pathologically large
+    // DV (past `spark.graft.dv.inlineMaxEntries`) falls back to an
+    // anti-join on the lineage columns.
+    val dvInline = if (c.dvDirs.isEmpty) None else dvEntriesOf(c)
+    val antiJoin = c.dvDirs.nonEmpty && dvInline.isEmpty
+    val carryPos = withPos || antiJoin
     val base =
       if (dirs.isEmpty) {
         val df0 = spark.createDataFrame(
           spark.sparkContext.emptyRDD[org.apache.spark.sql.Row], schema)
         val df = if (withRowId) df0.withColumn(RowIdCol, lit(null).cast("long")) else df0
-        if (needPos)
+        if (carryPos)
           df.withColumn(DvFileCol, lit(null).cast("string"))
             .withColumn(DvPosCol, lit(null).cast("long"))
         else df
       } else {
+        // One hash lookup + binary search per row, codegen'd — cost
+        // independent of how many files carry deletions (vs an OR chain of
+        // per-file string equalities). An empty map: the delete matched
+        // no rows.
+        val live: Option[Column] = dvInline.filter(_.nonEmpty).map { byFile =>
+          !coalesce(org.apache.spark.sql.graftnative.DvExpressions.positionDeleted(
+            col("_metadata.file_path"), col("_metadata.row_index"),
+            byFile.map { case (f, ps) => f -> ps.toArray }), lit(false))
+        }
         // Explicit schema (from the commit) rather than mergeSchema: no
         // footer sampling job, stable column order, and dirs written before
         // an additive schema change read back with nulls for new columns.
         def one(reader: org.apache.spark.sql.DataFrameReader, path: Seq[String]): DataFrame = {
           val df0 = reader.schema(scanSchema).parquet(path: _*)
+          val df1 = live.fold(df0)(df0.filter)
           // _metadata is per-scan: derive the lineage columns before any
           // union so they ride the row through the rest of the plan.
-          val df = toLogicalDf(
-            if (needPos)
-              df0.withColumn(DvFileCol, col("_metadata.file_path"))
-                .withColumn(DvPosCol, col("_metadata.row_index"))
-            else df0, cmap)
-          df
+          toLogicalDf(
+            if (carryPos) df1.select(col("*"), col("_metadata.file_path").as(DvFileCol),
+              col("_metadata.row_index").as(DvPosCol))
+            else df1, cmap)
         }
         if (c.partitionCols.isEmpty) one(spark.read, dirs.map(_.toString))
         else
@@ -233,24 +245,14 @@ final class GraftTable private (
             .reduce(_ unionByName _)
       }
     val subtracted =
-      if (c.dvDirs.isEmpty || dirs.isEmpty) base
-      else dvInline match {
-        case Some(byFile) if byFile.isEmpty => base // delete matched no rows
-        case Some(byFile) =>
-          // One hash lookup + binary search per row, codegen'd — cost
-          // independent of how many files carry deletions (vs an OR
-          // chain of per-file string equalities).
-          val dead = org.apache.spark.sql.graftnative.DvExpressions.positionDeleted(
-            col(DvFileCol), col(DvPosCol),
-            byFile.map { case (f, ps) => f -> ps.toArray })
-          base.filter(!coalesce(dead, lit(false)))
-        case None =>
-          val entries = spark.read
-            .parquet(c.dvDirs.map(d => new Path(root, d).toString): _*)
-            .select(col("file").as(DvFileCol), col("pos").as(DvPosCol))
-          base.join(entries, Seq(DvFileCol, DvPosCol), "left_anti")
+      if (!antiJoin || dirs.isEmpty) base
+      else {
+        val entries = spark.read.schema("file STRING, pos BIGINT")
+          .parquet(c.dvDirs.map(d => new Path(root, d).toString): _*)
+          .select(col("file").as(DvFileCol), col("pos").as(DvPosCol))
+        base.join(entries, Seq(DvFileCol, DvPosCol), "left_anti")
       }
-    if (needPos && !withPos) subtracted.drop(DvFileCol, DvPosCol) else subtracted
+    if (carryPos && !withPos) subtracted.drop(DvFileCol, DvPosCol) else subtracted
   }
 
   /** Current snapshot (SURVEY S3). */
@@ -548,8 +550,14 @@ final class GraftTable private (
     * instead of duplicating the data) their inserts are synthesized here
     * by reading each append's added dirs and stamping the three CDF
     * columns. CREATE stays outside the feed (Delta parity: the initial
-    * snapshot is not a change). */
+    * snapshot is not a change). An empty range — `fromVersion` just past
+    * `toVersion`, as a reader that is already at a version no write moved
+    * (a positional MERGE that changed nothing publishes none) computes it
+    * — reads as no rows. */
   def readChanges(fromVersion: Long = 0L, toVersion: Long = Long.MaxValue): DataFrame = {
+    if (fromVersion == toVersion + 1)
+      return spark.createDataFrame(
+        spark.sparkContext.emptyRDD[org.apache.spark.sql.Row], changesSchema)
     val cs = log.commits()
       .filter(c => c.version >= fromVersion && c.version <= toVersion)
     val withDirs = cs.map(c => c -> new Path(root, changesDirOf(c)))
@@ -809,11 +817,13 @@ final class GraftTable private (
   private def dvInlineMax: Long =
     spark.conf.getOption("spark.graft.dv.inlineMaxEntries").map(_.toLong).getOrElse(1000000L)
 
-  // DV dirs are immutable once committed, so the driver-side (file →
-  // positions) form is cached per dvDirs-set — one small parquet read per
-  // distinct DV state, not per table read. The cache is BOUNDED by total
-  // cached positions (`spark.graft.dv.cacheMaxEntries`, default 4×
-  // [[dvInlineMax]]): a long-lived handle sees a new DV state per
+  // DV dirs are immutable once committed and uniquely named, so the
+  // driver-side (file → positions) form is cached per set of DV dir paths
+  // for the whole JVM ([[GraftTable.dvEntryCache]]) — one small parquet
+  // read per distinct DV state, not per table read nor per handle (readers
+  // resolve a fresh handle per query). The cache is BOUNDED by total cached
+  // positions (`spark.graft.dv.cacheMaxEntries`, default 4×
+  // [[dvInlineMax]]): a long-lived process sees a new DV state per
   // positional delete, and an unbounded map of up-to-1M-entry values is a
   // slow driver leak. Eviction is LRU (access-ordered LinkedHashMap); the
   // just-inserted state always stays (a single over-budget DV must still
@@ -821,39 +831,59 @@ final class GraftTable private (
   private def dvCacheMax: Long =
     spark.conf.getOption("spark.graft.dv.cacheMaxEntries").map(_.toLong)
       .getOrElse(4L * dvInlineMax)
-  private val dvEntryCache =
-    new java.util.LinkedHashMap[Seq[String], Map[String, Seq[Long]]](16, 0.75f, true)
-  private var dvCachedEntries = 0L
   private def entryCount(m: Map[String, Seq[Long]]): Long =
     m.valuesIterator.map(_.length.toLong).sum
   /** (cached states, total cached positions) — for the bound's spec. */
   private[table] def dvCacheStats: (Int, Long) =
     dvEntryCache.synchronized((dvEntryCache.size, dvCachedEntries))
-  private def dvEntriesOf(c: Commit): Map[String, Seq[Long]] = {
-    dvEntryCache.synchronized {
-      val hit = dvEntryCache.get(c.dvDirs)
-      if (hit != null) return hit
+
+  /** The (file → sorted positions) form of `c`'s deletion vectors, or None
+    * past `spark.graft.dv.inlineMaxEntries` positions (reads then
+    * anti-join). */
+  private def dvEntriesOf(c: Commit): Option[Map[String, Seq[Long]]] = {
+    val key = c.dvDirs.map(d => new Path(root, d).toString)
+    dvEntryCache.synchronized(Option(dvEntryCache.get(key))) match {
+      case Some(hit) => return Option.when(entryCount(hit) <= dvInlineMax)(hit)
+      case None if c.dvDirs.map(countDir).sum > dvInlineMax => return None
+      case None => ()
     }
-    // Built outside the lock (it runs a Spark job); a concurrent duplicate
-    // build is benign — last insert wins, totals stay consistent.
-    val built = spark.read.parquet(c.dvDirs.map(d => new Path(root, d).toString): _*)
-      .select("file", "pos")
-      .collect()
-      .groupBy(_.getString(0))
-      .map { case (f, rows) => f -> rows.map(_.getLong(1)).toSeq.sorted }
+    // Built outside the lock; a concurrent duplicate build is benign —
+    // last insert wins, totals stay consistent. Only the inline path (at
+    // most `spark.graft.dv.inlineMaxEntries` positions, all bound for the
+    // driver anyway) builds this map, so the DV files are read right here
+    // with the parquet reader, not through a Spark job: a fresh handle's
+    // first read of a marked table costs no job before its action.
+    import scala.collection.mutable.{ArrayBuilder, HashMap}
+    import org.apache.parquet.hadoop.ParquetReader
+    import org.apache.parquet.hadoop.example.GroupReadSupport
+    val byFile = HashMap.empty[String, ArrayBuilder.ofLong]
+    c.dvDirs.flatMap(parquetFilesOf).foreach { f =>
+      val reader = ParquetReader.builder(new GroupReadSupport(), f)
+        .withConf(hadoopConf(spark)).build()
+      try {
+        var g = reader.read()
+        while (g != null) {
+          byFile.getOrElseUpdate(g.getString("file", 0), new ArrayBuilder.ofLong) +=
+            g.getLong("pos", 0)
+          g = reader.read()
+        }
+      } finally reader.close()
+    }
+    val built: Map[String, Seq[Long]] =
+      byFile.iterator.map { case (f, ps) => f -> ps.result().sorted.toSeq }.toMap
     dvEntryCache.synchronized {
-      val prev = dvEntryCache.put(c.dvDirs, built)
+      val prev = dvEntryCache.put(key, built)
       dvCachedEntries += entryCount(built) - Option(prev).map(entryCount).getOrElse(0L)
       val it = dvEntryCache.entrySet().iterator()
       while (dvCachedEntries > dvCacheMax && it.hasNext) {
         val e = it.next()
-        if (e.getKey != c.dvDirs) {
+        if (e.getKey != key) {
           dvCachedEntries -= entryCount(e.getValue)
           it.remove()
         }
       }
     }
-    built
+    Some(built)
   }
 
   /** Row count of a just-written dir from its PARQUET FOOTERS — metadata
@@ -864,21 +894,26 @@ final class GraftTable private (
     try {
       import org.apache.parquet.hadoop.ParquetFileReader
       import org.apache.parquet.hadoop.util.HadoopInputFile
-      val files = fs.listFiles(new Path(root, dir), true)
-      var total = 0L
-      while (files.hasNext) {
-        val st = files.next()
-        if (st.isFile && st.getPath.getName.endsWith(".parquet")) {
-          val r = ParquetFileReader.open(
-            HadoopInputFile.fromPath(st.getPath, hadoopConf(spark)))
-          try total += r.getRecordCount finally r.close()
-        }
-      }
-      total
+      parquetFilesOf(dir).map { f =>
+        val r = ParquetFileReader.open(HadoopInputFile.fromPath(f, hadoopConf(spark)))
+        try r.getRecordCount finally r.close()
+      }.sum
     } catch {
       case scala.util.control.NonFatal(_) =>
         spark.read.parquet(new Path(root, dir).toString).count()
     }
+
+  /** The parquet files under `dir` (relative to the root), at any depth.
+    * Plain `listStatus` calls: stores that cannot produce located
+    * statuses (block locations, permissions) still list. */
+  private def parquetFilesOf(dir: String): Seq[Path] = {
+    def walk(p: Path): Seq[Path] = fs.listStatus(p).toSeq.flatMap { st =>
+      if (st.isDirectory) walk(st.getPath)
+      else if (st.getPath.getName.endsWith(".parquet")) Seq(st.getPath)
+      else Nil
+    }
+    walk(new Path(root, dir))
+  }
 
   private def partitionColsOfHead: Seq[String] =
     log.latest().map(_.partitionCols).getOrElse(Nil)
@@ -1649,97 +1684,91 @@ final class GraftTable private (
     import org.apache.parquet.hadoop.ParquetFileReader
     import org.apache.parquet.hadoop.util.HadoopInputFile
     import scala.jdk.CollectionConverters._
-    val dirPath = new Path(root, dir)
-    val files = fs.listFiles(dirPath, true)
+    val files = parquetFilesOf(dir)
     val acc = scala.collection.mutable.HashMap.empty[String, (Double, Double)]
     val nulls = scala.collection.mutable.HashMap.empty[String, Long]
     var rowsTotal = 0L
-    var sawFile = false
-    while (files.hasNext) {
-      val st = files.next()
-      if (st.isFile && st.getPath.getName.endsWith(".parquet")) {
-        sawFile = true
-        val reader = ParquetFileReader.open(
-          HadoopInputFile.fromPath(st.getPath, hadoopConf(spark)))
-        try {
-          reader.getFooter.getBlocks.asScala.foreach { block =>
-            rowsTotal += block.getRowCount
-            block.getColumns.asScala.foreach { cc =>
-              val name = cc.getPath.toDotString
-              val s = cc.getStatistics
-              // Null accounting is independent of min/max: a chunk can be
-              // all-null (no min/max) and still report its null count. Any
-              // chunk that doesn't say poisons the column to -1 (unknown) —
-              // but the column stays RECORDED, because map presence is the
-              // signal that it exists in this dir's files at all.
-              val chunkNulls =
-                if (s != null && s.isNumNullsSet) s.getNumNulls else -1L
-              nulls(name) = nulls.get(name) match {
-                case None => chunkNulls
-                case Some(prev) =>
-                  if (prev >= 0 && chunkNulls >= 0) prev + chunkNulls else -1L
+    files.foreach { file =>
+      val reader = ParquetFileReader.open(
+        HadoopInputFile.fromPath(file, hadoopConf(spark)))
+      try {
+        reader.getFooter.getBlocks.asScala.foreach { block =>
+          rowsTotal += block.getRowCount
+          block.getColumns.asScala.foreach { cc =>
+            val name = cc.getPath.toDotString
+            val s = cc.getStatistics
+            // Null accounting is independent of min/max: a chunk can be
+            // all-null (no min/max) and still report its null count. Any
+            // chunk that doesn't say poisons the column to -1 (unknown) —
+            // but the column stays RECORDED, because map presence is the
+            // signal that it exists in this dir's files at all.
+            val chunkNulls =
+              if (s != null && s.isNumNullsSet) s.getNumNulls else -1L
+            nulls(name) = nulls.get(name) match {
+              case None => chunkNulls
+              case Some(prev) =>
+                if (prev >= 0 && chunkNulls >= 0) prev + chunkNulls else -1L
+            }
+            if (s != null && s.hasNonNullValue) {
+              import org.apache.parquet.schema.LogicalTypeAnnotation
+              val ann = cc.getPrimitiveType.getLogicalTypeAnnotation
+              // Physical int stats carry a LOGICAL meaning the query
+              // literal will use: DECIMAL stores the unscaled value
+              // (123.45 as 12345 at scale 2) and TIMESTAMP's unit may
+              // not be the micros the pruning contract promises. Scale
+              // here — then widen by one ULP per side, because the
+              // query side (Decimal.toDouble) rounds independently and
+              // a boundary row must never be pruned by FP disagreement.
+              val factor: Double = ann match {
+                case d: LogicalTypeAnnotation.DecimalLogicalTypeAnnotation =>
+                  math.pow(10, -d.getScale)
+                case t: LogicalTypeAnnotation.TimestampLogicalTypeAnnotation =>
+                  t.getUnit match {
+                    case LogicalTypeAnnotation.TimeUnit.MILLIS => 1000.0
+                    case LogicalTypeAnnotation.TimeUnit.NANOS => 0.001
+                    case _ => 1.0 // MICROS: the contract's unit
+                  }
+                case _ => 1.0
               }
-              if (s != null && s.hasNonNullValue) {
-                import org.apache.parquet.schema.LogicalTypeAnnotation
-                val ann = cc.getPrimitiveType.getLogicalTypeAnnotation
-                // Physical int stats carry a LOGICAL meaning the query
-                // literal will use: DECIMAL stores the unscaled value
-                // (123.45 as 12345 at scale 2) and TIMESTAMP's unit may
-                // not be the micros the pruning contract promises. Scale
-                // here — then widen by one ULP per side, because the
-                // query side (Decimal.toDouble) rounds independently and
-                // a boundary row must never be pruned by FP disagreement.
-                val factor: Double = ann match {
-                  case d: LogicalTypeAnnotation.DecimalLogicalTypeAnnotation =>
-                    math.pow(10, -d.getScale)
-                  case t: LogicalTypeAnnotation.TimestampLogicalTypeAnnotation =>
-                    t.getUnit match {
-                      case LogicalTypeAnnotation.TimeUnit.MILLIS => 1000.0
-                      case LogicalTypeAnnotation.TimeUnit.NANOS => 0.001
-                      case _ => 1.0 // MICROS: the contract's unit
-                    }
-                  case _ => 1.0
-                }
-                def adj(lo: Double, hi: Double): (Double, Double) =
-                  if (factor == 1.0) (lo, hi)
-                  else (math.nextDown(lo * factor), math.nextUp(hi * factor))
-                val isString = ann.isInstanceOf[LogicalTypeAnnotation.StringLogicalTypeAnnotation]
-                val mm: Option[(Double, Double)] = (s.genericGetMin, s.genericGetMax) match {
-                  case (lo: java.lang.Long, hi: java.lang.Long) =>
-                    Some(adj(lo.toDouble, hi.toDouble))
-                  case (lo: java.lang.Integer, hi: java.lang.Integer) =>
-                    Some(adj(lo.toDouble, hi.toDouble))
-                  case (lo: java.lang.Double, hi: java.lang.Double) =>
-                    Some((lo.toDouble, hi.toDouble))
-                  case (lo: java.lang.Float, hi: java.lang.Float) =>
-                    Some((lo.toDouble, hi.toDouble))
-                  case (lo: org.apache.parquet.io.api.Binary, hi: org.apache.parquet.io.api.Binary)
-                      if isString =>
-                    // Strings ride the same Double stats map as an
-                    // ORDER-PRESERVING 6-byte prefix value (exact in a
-                    // 53-bit mantissa): s <= t byte-lexicographically ⇒
-                    // prefix(s) <= prefix(t), so range skipping on the
-                    // encoded bounds is conservative-correct. Parquet's
-                    // own truncated binary bounds stay valid bounds under
-                    // the monotone prefix map. The isString gate matters:
-                    // a binary-backed DECIMAL(>18) or INT96 here is NOT
-                    // in lexicographic row order — those stay untracked.
-                    Some((GraftTable.stringPrefixValue(lo.getBytes),
-                      GraftTable.stringPrefixValue(hi.getBytes)))
-                  case _ => None // other binary/etc: not tracked
-                }
-                mm.foreach { case (lo, hi) =>
-                  val cur = acc.get(name)
-                  acc(name) = (math.min(lo, cur.map(_._1).getOrElse(lo)),
-                    math.max(hi, cur.map(_._2).getOrElse(hi)))
-                }
+              def adj(lo: Double, hi: Double): (Double, Double) =
+                if (factor == 1.0) (lo, hi)
+                else (math.nextDown(lo * factor), math.nextUp(hi * factor))
+              val isString = ann.isInstanceOf[LogicalTypeAnnotation.StringLogicalTypeAnnotation]
+              val mm: Option[(Double, Double)] = (s.genericGetMin, s.genericGetMax) match {
+                case (lo: java.lang.Long, hi: java.lang.Long) =>
+                  Some(adj(lo.toDouble, hi.toDouble))
+                case (lo: java.lang.Integer, hi: java.lang.Integer) =>
+                  Some(adj(lo.toDouble, hi.toDouble))
+                case (lo: java.lang.Double, hi: java.lang.Double) =>
+                  Some((lo.toDouble, hi.toDouble))
+                case (lo: java.lang.Float, hi: java.lang.Float) =>
+                  Some((lo.toDouble, hi.toDouble))
+                case (lo: org.apache.parquet.io.api.Binary, hi: org.apache.parquet.io.api.Binary)
+                    if isString =>
+                  // Strings ride the same Double stats map as an
+                  // ORDER-PRESERVING 6-byte prefix value (exact in a
+                  // 53-bit mantissa): s <= t byte-lexicographically ⇒
+                  // prefix(s) <= prefix(t), so range skipping on the
+                  // encoded bounds is conservative-correct. Parquet's
+                  // own truncated binary bounds stay valid bounds under
+                  // the monotone prefix map. The isString gate matters:
+                  // a binary-backed DECIMAL(>18) or INT96 here is NOT
+                  // in lexicographic row order — those stay untracked.
+                  Some((GraftTable.stringPrefixValue(lo.getBytes),
+                    GraftTable.stringPrefixValue(hi.getBytes)))
+                case _ => None // other binary/etc: not tracked
+              }
+              mm.foreach { case (lo, hi) =>
+                val cur = acc.get(name)
+                acc(name) = (math.min(lo, cur.map(_._1).getOrElse(lo)),
+                  math.max(hi, cur.map(_._2).getOrElse(hi)))
               }
             }
           }
-        } finally reader.close()
-      }
+        }
+      } finally reader.close()
     }
-    if (!sawFile) DirMeta(Map.empty, Map.empty)
+    if (files.isEmpty) DirMeta(Map.empty, Map.empty)
     else DirMeta(acc.toMap, nulls.toMap + ("" -> rowsTotal))
   }
 
@@ -1812,12 +1841,13 @@ final class GraftTable private (
     // Table columns land under their physical names (same boundary rule as
     // writeData); the CDF artifact columns (_change_type + stamps) are
     // never mapped.
-    toPhysicalDf(df, colMapAtHead).withColumn("_commit_version", lit(v))
+    val rows = toPhysicalDf(df, colMapAtHead).withColumn("_commit_version", lit(v))
       .withColumn("_commit_timestamp", timestamp_millis(lit(tsMs)))
-      .write.mode("errorifexists").parquet(new Path(root, dir).toString)
+    rows.write.mode("errorifexists").parquet(new Path(root, dir).toString)
     // Metrics come from the written CDF (footer counts + one tiny agg) so the
-    // expensive join/rewrite plans execute exactly once each.
-    spark.read.parquet(new Path(root, dir).toString)
+    // expensive join/rewrite plans execute exactly once each; the schema is
+    // the one just written, so reading it back infers nothing.
+    spark.read.schema(rows.schema).parquet(new Path(root, dir).toString)
       .groupBy("_change_type").count()
       .collect()
       .map(r => r.getString(0) -> r.getLong(1))
@@ -2275,15 +2305,18 @@ final class GraftTable private (
       val dir = writeData(tx, prepared, prev.version + 1, partitionBy)
       val meta = metaFor(dir)
       val outputRows = countDir(dir)
-      Staged(staleRewrite(prev, op), a => Commit(a.version, a.tsMs, op, Seq(dir),
+      // An empty write (a CREATE that only declares the schema) references
+      // no dir: every later read would otherwise open its empty file.
+      val dirs = if (outputRows > 0L) Seq(dir) else { fs.delete(new Path(root, dir), true); Nil }
+      Staged(staleRewrite(prev, op), a => Commit(a.version, a.tsMs, op, dirs,
         Map("numOutputRows" -> outputRows), prepared.schema.json,
         txn.map(_._1), txn.map(_._2),
         partitionCols = partitionBy,
         // Every commit that writes a dir records its skipping stats — a
         // CREATE-then-append table would otherwise carry one forever-unprunable dir.
-        dirStats = Map(dir -> meta.stats),
+        dirStats = dirs.map(_ -> meta.stats).toMap,
         properties = props0 ++ identityHwmUpdates(dir, meta, idSpecs, idHwm),
-        dirNulls = Map(dir -> meta.nulls)))
+        dirNulls = dirs.map(_ -> meta.nulls).toMap))
     }.get
   }
 
@@ -2550,187 +2583,331 @@ final class GraftTable private (
       notMatchedBySource: Seq[MergeClause] = Nil,
       targetAlias: String = "t", sourceAlias: String = "s"): Commit =
     this.synchronized {
-      import MergeClause._
-      require(keys.nonEmpty, "MERGE needs at least one equi key")
-      matched.foreach {
-        case _: InsertAll | _: Insert => throw new IllegalArgumentException(
-          "MERGE: INSERT is not valid in the WHEN MATCHED branch")
-        case _ => ()
-      }
-      notMatched.foreach {
-        case _: InsertAll | _: Insert => ()
-        case other => throw new IllegalArgumentException(
-          s"MERGE: only INSERT is valid in the WHEN NOT MATCHED branch, got $other")
-      }
-      notMatchedBySource.foreach {
-        case _: Update | _: Delete => ()
-        case other => throw new IllegalArgumentException(
-          "MERGE: only UPDATE SET …/DELETE are valid in the WHEN NOT MATCHED " +
-            s"BY SOURCE branch (there is no source row to read), got $other")
-      }
-      require(targetAlias != sourceAlias,
-        s"MERGE target and source aliases must differ, both are '$targetAlias'")
-
+      requireMergeShape(keys, matched, notMatched, notMatchedBySource,
+        targetAlias, sourceAlias)
       // Insert-only merges append rows and stay legal on an append-only
       // table; any matched / not-matched-by-source clause mutates.
       val mutates = matched.nonEmpty || notMatchedBySource.nonEmpty
       val tx = new TableTxn(this, s"MERGE into $root", Option.when(mutates)("MERGE"))
       tx.commit(ifAbsent = throw new NoSuchElementException(
           s"merge into non-existent table $root — create it first")) { prev =>
-        val targetSchema = DataType.fromJson(prev.schemaJson).asInstanceOf[StructType]
-        val hasStar = (matched ++ notMatched).exists {
-          case _: UpdateAll | _: InsertAll => true; case _ => false
-        }
-        // Star clauses adopt new source columns (M6 additive evolution);
-        // explicit assignments bind to the existing target schema only.
-        // Dedup is case-INSENSITIVE — mirroring canon()'s assignment
-        // resolution below and Delta's — so a source column differing only
-        // in case binds to the existing target field rather than appending
-        // a second column to the evolved schema.
-        val mergedSchema =
-          if (hasStar) StructType(targetSchema.fields ++
-            source.schema.fields.filterNot(f =>
-              targetSchema.fieldNames.exists(_.equalsIgnoreCase(f.name))))
-          else targetSchema
-        if (hasStar) enforceCompatibleTypes(source.schema, mergedSchema, "merge")
-        val sourceCols = source.columns.map(_.toLowerCase).toSet
-        val fieldOf = mergedSchema.fields.map(f => f.name -> f).toMap
-        // Assignment keys resolve case-insensitively against the schema.
-        def canon(n: String): String = fieldOf.getOrElse(n,
-          mergedSchema.fields.find(_.name.equalsIgnoreCase(n)).getOrElse(
-            throw new IllegalArgumentException(
-              s"MERGE assignment target '$n' is not a column of the table " +
-                s"(columns: ${mergedSchema.fieldNames.mkString(", ")})"))).name
-        def canonical(cl: MergeClause): MergeClause = cl match {
-          case Update(as, c) => Update(as.map { case (k, ve) => canon(k) -> ve }, c)
-          case Insert(as, c) => Insert(as.map { case (k, ve) => canon(k) -> ve }, c)
-          case other => other
-        }
-        val (mCl, iCl, bCl) = (matched.map(canonical), notMatched.map(canonical),
-          notMatchedBySource.map(canonical))
-
-        // Side-presence markers survive the outer join where a null business
-        // key would lie about its side (a target row with a null key is
-        // present, merely unmatchable).
-        val tp = "__graft_t_present"; val sp = "__graft_s_present"
-        val t = alignTo(readCommit(prev), mergedSchema)
-          .withColumn(tp, lit(true)).alias(targetAlias)
-        // A null source key can never equi-match and Delta's NOT MATCHED
-        // branch still sees it (vacuously unmatched) — keep such rows.
-        val s = source.withColumn(sp, lit(true)).alias(sourceAlias)
-        val equi = keys.map(k =>
-          col(s"$targetAlias.$k") === col(s"$sourceAlias.$k")).reduce(_ && _)
-        val onCond = onExtra.map(equi && _).getOrElse(equi)
-        val joined = t.join(s, onCond, "full_outer")
-        val tPresent = col(s"$targetAlias.$tp").isNotNull
-        val sPresent = col(s"$sourceAlias.$sp").isNotNull
-
-        def condOf(cl: MergeClause): Column =
-          cl.condition.map(c => coalesce(c, lit(false))).getOrElse(lit(true))
-        // First-true clause index per branch; -1 = no clause claims the row.
-        def firstIdx(cls: Seq[MergeClause]): Column =
-          cls.zipWithIndex.foldRight(lit(-1): Column) { case ((cl, i), els) =>
-            when(condOf(cl), lit(i)).otherwise(els)
-          }
-        val mIdx = firstIdx(mCl); val iIdx = firstIdx(iCl); val bIdx = firstIdx(bCl)
-
-        // The value column `c` takes under clause `cl` (post-image).
-        def clauseVal(cl: MergeClause, c: String): Column = {
-          val f = fieldOf(c)
-          cl match {
-            // Source-column presence checks are case-insensitive; the alias
-            // reference itself resolves case-insensitively in analysis.
-            case _: UpdateAll =>
-              if (sourceCols.contains(c.toLowerCase))
-                col(s"$sourceAlias.$c").cast(f.dataType)
-              else col(s"$targetAlias.$c")
-            case Update(as, _) => as.get(c).map(_.cast(f.dataType))
-              .getOrElse(col(s"$targetAlias.$c"))
-            case _: InsertAll =>
-              if (sourceCols.contains(c.toLowerCase))
-                col(s"$sourceAlias.$c").cast(f.dataType)
-              else lit(null).cast(f.dataType)
-            case Insert(as, _) => as.get(c).map(_.cast(f.dataType))
-              .getOrElse(lit(null).cast(f.dataType))
-            case _: Delete => lit(null).cast(f.dataType) // row never materializes
-          }
-        }
-        def branchVal(cls: Seq[MergeClause], idx: Column, default: Column,
-            c: String): Column =
-          cls.zipWithIndex.foldRight(default) { case ((cl, i), els) =>
-            cl match {
-              case _: Delete => els // deleted rows are filtered out below
-              case _ => when(idx === i, clauseVal(cl, c)).otherwise(els)
-            }
-          }
-        def outVal(c: String): Column =
-          when(tPresent && sPresent, branchVal(mCl, mIdx, col(s"$targetAlias.$c"), c))
-            .when(tPresent && !sPresent, branchVal(bCl, bIdx, col(s"$targetAlias.$c"), c))
-            .otherwise(branchVal(iCl, iIdx, lit(null).cast(fieldOf(c).dataType), c))
-            .as(c)
-        def deleteIdxs(cls: Seq[MergeClause]): Seq[Int] =
-          cls.zipWithIndex.collect { case (_: Delete, i) => i }
-        def isDeleted(cls: Seq[MergeClause], idx: Column): Column =
-          deleteIdxs(cls).map(idx === _).reduceOption(_ || _).getOrElse(lit(false))
-        val keep =
-          when(tPresent && sPresent, !isDeleted(mCl, mIdx))
-            .when(tPresent && !sPresent, !isDeleted(bCl, bIdx))
-            .otherwise(iIdx >= 0) // source-only rows exist only via INSERT
-
-        val outCols = mergedSchema.fieldNames.toSeq
-        val snapshot0 = joined.filter(keep).select(outCols.map(outVal): _*)
-        val genSpecs = generatedSpecs(prev.properties)
-        val idSpecs = identitySpecs(prev.properties)
-        val idHwm = identityHwms(prev.properties, idSpecs)
-        val regenerated = genSpecs.foldLeft(snapshot0) { case (d, (n, e)) =>
-          d.withColumn(n, expr(e)) }
-        val snapshot = fillIdentity(regenerated, idSpecs, idHwm)
-        enforceConstraints(snapshot, prev.properties, "MERGE")
-
-        // CDF: one pass over the same join; unmatched/unclaimed rows yield a
-        // null array which explode drops.
-        def img(cl: Option[MergeClause], side: String, ct: String): Column = {
-          val cols = cl match {
-            case Some(c) => outCols.map(n => clauseVal(c, n).as(n))
-            case None => outCols.map(n => col(s"$side.$n").as(n))
-          }
-          struct(cols :+ lit(ct).as("_change_type"): _*)
-        }
-        def branchChanges(cls: Seq[MergeClause], idx: Column,
-            guard: Column): Seq[(Column, Column)] =
-          cls.zipWithIndex.map { case (cl, i) =>
-            val hit = guard && idx === i
-            cl match {
-              case _: Delete => hit -> array(img(None, targetAlias, "delete"))
-              case _: Insert | _: InsertAll =>
-                hit -> array(img(Some(cl), sourceAlias, "insert"))
-              case _ => hit -> array(
-                img(None, targetAlias, "update_preimage"),
-                img(Some(cl), targetAlias, "update_postimage"))
-            }
-          }
-        val branches =
-          branchChanges(mCl, mIdx, tPresent && sPresent) ++
-            branchChanges(bCl, bIdx, tPresent && !sPresent) ++
-            branchChanges(iCl, iIdx, !tPresent && sPresent)
-        val changeArr = branches.foldRight(lit(null).cast(
-          org.apache.spark.sql.types.ArrayType(StructType(
-            mergedSchema.fields :+ org.apache.spark.sql.types.StructField(
-              "_change_type", org.apache.spark.sql.types.StringType)))): Column) {
-          case ((cond, arr), els) => when(cond, arr).otherwise(els)
-        }
-        val changeRows0 = joined.select(explode(changeArr).as("c")).select("c.*")
-        val changeRows = genSpecs.foldLeft(changeRows0) { case (d, (n, e)) =>
-          d.withColumn(n, expr(e)) }
-        rewriteStaged(tx, prev, "MERGE", snapshot, Some(changeRows), a => Map(
-          "numTargetRowsInserted" -> a.changed("insert"),
-          "numTargetRowsUpdated" -> a.changed("update_postimage"),
-          "numTargetRowsDeleted" -> a.changed("delete"))) { (c, dir, meta) =>
-          c.copy(schemaJson = mergedSchema.json, properties = c.properties ++
-            identityHwmUpdates(dir, meta, idSpecs, idHwm))
+        val plan = mergePlan(prev, source, keys, onExtra, matched, notMatched,
+          notMatchedBySource, targetAlias, sourceAlias, positioned = false)
+        rewriteStaged(tx, prev, "MERGE", plan.rows(lit(true)), Some(plan.changes),
+          mergeMetrics) { (c, dir, meta) =>
+          c.copy(schemaJson = plan.schema.json, properties = c.properties ++
+            identityHwmUpdates(dir, meta, plan.idSpecs, plan.idHwm))
         }
       }.get
     }
+
+  /** [[mergeClausesOn]] without rewriting the snapshot: the MERGE
+    * counterpart of [[deletePositional]] / [[updatePositional]], and the
+    * write the CDC snapshot sink applies each micro-batch with (Delta's
+    * MERGE with deletion vectors). The same clause algebra runs over ONE
+    * right-outer join of the positioned target (prior deletion vectors
+    * applied) with the source; the join is evaluated once and read by
+    * three source-sized writes:
+    *   - the (file, row_index) positions of every target row a matched
+    *     clause claims (DELETE or UPDATE) go to one deletion-vector dir;
+    *   - update post-images and inserts go to one new data dir;
+    *   - the change feed gets the images [[mergeClausesOn]] emits.
+    * A k-row source writes O(k) rows whatever the size of the table; reads
+    * subtract the positions inside the scan, and [[maybeMaterialize]]
+    * purges the marked dirs once marks pile up. There is no NOT MATCHED BY
+    * SOURCE branch: it claims every unmatched target row, which only a
+    * rewrite pays for.
+    *
+    * Isolation: which rows a MERGE inserts depends on the keys the target
+    * holds, so it never rebases. It restarts from the new head when only
+    * appends and merge-on-read commits intervened (the recomputation sees
+    * their rows and their marks) and refuses when anything else did. A
+    * MERGE that claims no target row and inserts none publishes nothing
+    * and returns the head it read. */
+  def mergeClausesPositional(source: DataFrame, keys: Seq[String],
+      onExtra: Option[Column],
+      matched: Seq[MergeClause] = Nil,
+      notMatched: Seq[MergeClause] = Nil,
+      targetAlias: String = "t", sourceAlias: String = "s"): Commit =
+    this.synchronized {
+      requireMergeShape(keys, matched, notMatched, Nil, targetAlias, sourceAlias)
+      val what = s"positional MERGE into $root"
+      val tx = new TableTxn(this, what, Option.when(matched.nonEmpty)("MERGE"))
+      val joins = scala.collection.mutable.ArrayBuffer.empty[DataFrame]
+      var read = Option.empty[Commit]
+      val c = try tx.commit(ifAbsent = throw new NoSuchElementException(
+          s"merge into non-existent table $root — create it first")) { snap =>
+        read = Some(snap)
+        val v = snap.version + 1
+        val plan = mergePlan(snap, source, keys, onExtra, matched, notMatched, Nil,
+          targetAlias, sourceAlias, positioned = true)
+        joins += plan.joined
+        val dv = tx.stage(dvDirName(v))
+        plan.joined.filter(plan.claimed).select(
+          col(s"$targetAlias.$DvFileCol").as("file"),
+          col(s"$targetAlias.$DvPosCol").as("pos"))
+          .write.mode("errorifexists").parquet(new Path(root, dv).toString)
+        val data = writeData(tx, plan.rows(!plan.tPresent || plan.claimed),
+          v, snap.partitionCols)
+        val (marked, added) = (countDir(dv), countDir(data))
+        if (marked == 0L && added == 0L) TableTxn.Unchanged
+        else {
+          // a dir with no rows is dropped here, never referenced
+          def nonEmpty(d: String, n: Long): Option[String] =
+            if (n > 0L) Some(d) else { fs.delete(new Path(root, d), true); None }
+          val dvs = nonEmpty(dv, marked)
+          val meta = nonEmpty(data, added).map(d => d -> metaFor(d)).toMap
+          Staged(
+            conflict = head =>
+              if (isMorOnlyRace(snap, head)) Restart
+              else Refuse(s"$what computed from stale version ${snap.version}; " +
+                "a commit other than an append or a merge-on-read mutation intervened"),
+            build = { a =>
+              val h = a.head
+              Commit(a.version, a.tsMs, "MERGE", h.dataDirs ++ meta.keys,
+                mergeMetrics(a) ++ Map("numOutputRows" -> added, "mergeOnRead" -> 1L),
+                plan.schema.json,
+                partitionCols = h.partitionCols,
+                dirStats = h.dirStats ++ meta.map { case (d, m) => d -> m.stats },
+                changesDir = a.changesDir,
+                properties = h.properties ++ meta.flatMap { case (d, m) =>
+                  identityHwmUpdates(d, m, plan.idSpecs, plan.idHwm) },
+                dvDirs = h.dvDirs ++ dvs,
+                dirNulls = h.dirNulls ++ meta.map { case (d, m) => d -> m.nulls })
+            },
+            changes = Some(plan.changes))
+        }
+      } finally joins.foreach(_.unpersist())
+      c.getOrElse(read.get)
+    }
+
+  /** A MERGE's clause kinds per branch, its keys and its aliases. */
+  private def requireMergeShape(keys: Seq[String], matched: Seq[MergeClause],
+      notMatched: Seq[MergeClause], notMatchedBySource: Seq[MergeClause],
+      targetAlias: String, sourceAlias: String): Unit = {
+    import MergeClause._
+    require(keys.nonEmpty, "MERGE needs at least one equi key")
+    matched.foreach {
+      case _: InsertAll | _: Insert => throw new IllegalArgumentException(
+        "MERGE: INSERT is not valid in the WHEN MATCHED branch")
+      case _ => ()
+    }
+    notMatched.foreach {
+      case _: InsertAll | _: Insert => ()
+      case other => throw new IllegalArgumentException(
+        s"MERGE: only INSERT is valid in the WHEN NOT MATCHED branch, got $other")
+    }
+    notMatchedBySource.foreach {
+      case _: Update | _: Delete => ()
+      case other => throw new IllegalArgumentException(
+        "MERGE: only UPDATE SET …/DELETE are valid in the WHEN NOT MATCHED " +
+          s"BY SOURCE branch (there is no source row to read), got $other")
+    }
+    require(targetAlias != sourceAlias,
+      s"MERGE target and source aliases must differ, both are '$targetAlias'")
+  }
+
+  /** A MERGE commit's row counts, read from its change feed. */
+  private def mergeMetrics(a: Attempt): Map[String, Long] = Map(
+    "numTargetRowsInserted" -> a.changed("insert"),
+    "numTargetRowsUpdated" -> a.changed("update_postimage"),
+    "numTargetRowsDeleted" -> a.changed("delete"))
+
+  /** One MERGE's clause algebra over its join of target and source, shared
+    * by the rewrite ([[mergeClausesOn]]) and the positional
+    * ([[mergeClausesPositional]]) write stages, so no clause is evaluated
+    * in two places. `rows(which)` are the post-images of the joined rows
+    * the statement keeps and `which` selects (generated columns
+    * recomputed, identity filled, constraints enforced); `claimed` marks a
+    * target row some matched or not-matched-by-source clause claims;
+    * `changes` are the statement's CDF images.
+    */
+  private final class MergePlan(val schema: StructType, val joined: DataFrame,
+      val tPresent: Column, val claimed: Column, val rows: Column => DataFrame,
+      val changes: DataFrame, val idSpecs: Map[String, (Long, Long)],
+      val idHwm: Map[String, Long])
+
+  /** The [[MergePlan]] of a MERGE into `prev`. A rewrite (`positioned =
+    * false`) full-outer-joins the whole snapshot, so every target row
+    * reaches a branch. A positional plan right-outer-joins the target read
+    * with its row positions ([[readCommitWithPos]]) — a target row no
+    * source row matches is never written, so it need not reach the join's
+    * output — and persists the join, which the caller unpersists. Every
+    * write of a positional plan is source-sized, so its join is coalesced
+    * to one partition per 128 MB of the source's estimated size before it
+    * is cached: the cache builds in that many tasks and each write lands
+    * as that many files (a cached plan keeps its shuffle partitions, which
+    * adaptive execution would otherwise have merged). */
+  private def mergePlan(prev: Commit, source: DataFrame, keys: Seq[String],
+      onExtra: Option[Column], matched: Seq[MergeClause],
+      notMatched: Seq[MergeClause], notMatchedBySource: Seq[MergeClause],
+      targetAlias: String, sourceAlias: String, positioned: Boolean): MergePlan = {
+    import MergeClause._
+    val targetSchema = DataType.fromJson(prev.schemaJson).asInstanceOf[StructType]
+    val hasStar = (matched ++ notMatched).exists {
+      case _: UpdateAll | _: InsertAll => true; case _ => false
+    }
+    // Star clauses adopt new source columns (M6 additive evolution);
+    // explicit assignments bind to the existing target schema only.
+    // Dedup is case-INSENSITIVE — mirroring canon()'s assignment
+    // resolution below and Delta's — so a source column differing only
+    // in case binds to the existing target field rather than appending
+    // a second column to the evolved schema.
+    val mergedSchema =
+      if (hasStar) StructType(targetSchema.fields ++
+        source.schema.fields.filterNot(f =>
+          targetSchema.fieldNames.exists(_.equalsIgnoreCase(f.name))))
+      else targetSchema
+    if (hasStar) enforceCompatibleTypes(source.schema, mergedSchema, "merge")
+    val sourceCols = source.columns.map(_.toLowerCase).toSet
+    val fieldOf = mergedSchema.fields.map(f => f.name -> f).toMap
+    // Assignment keys resolve case-insensitively against the schema.
+    def canon(n: String): String = fieldOf.getOrElse(n,
+      mergedSchema.fields.find(_.name.equalsIgnoreCase(n)).getOrElse(
+        throw new IllegalArgumentException(
+          s"MERGE assignment target '$n' is not a column of the table " +
+            s"(columns: ${mergedSchema.fieldNames.mkString(", ")})"))).name
+    def canonical(cl: MergeClause): MergeClause = cl match {
+      case Update(as, c) => Update(as.map { case (k, ve) => canon(k) -> ve }, c)
+      case Insert(as, c) => Insert(as.map { case (k, ve) => canon(k) -> ve }, c)
+      case other => other
+    }
+    val (mCl, iCl, bCl) = (matched.map(canonical), notMatched.map(canonical),
+      notMatchedBySource.map(canonical))
+
+    // Side-presence markers survive the outer join where a null business
+    // key would lie about its side (a target row with a null key is
+    // present, merely unmatchable).
+    val tp = "__graft_t_present"; val sp = "__graft_s_present"
+    val target =
+      if (!positioned) alignTo(readCommit(prev), mergedSchema)
+      else alignTo(readCommitWithPos(prev), StructType(mergedSchema.fields ++ Seq(
+        org.apache.spark.sql.types.StructField(DvFileCol,
+          org.apache.spark.sql.types.StringType),
+        org.apache.spark.sql.types.StructField(DvPosCol,
+          org.apache.spark.sql.types.LongType))))
+    val t = target.withColumn(tp, lit(true)).alias(targetAlias)
+    // A null source key can never equi-match and Delta's NOT MATCHED
+    // branch still sees it (vacuously unmatched) — keep such rows.
+    val s = source.withColumn(sp, lit(true)).alias(sourceAlias)
+    val equi = keys.map(k =>
+      col(s"$targetAlias.$k") === col(s"$sourceAlias.$k")).reduce(_ && _)
+    val onCond = onExtra.map(equi && _).getOrElse(equi)
+    val joined =
+      if (!positioned) t.join(s, onCond, "full_outer")
+      else {
+        val est = source.queryExecution.optimizedPlan.stats.sizeInBytes
+        t.join(s, onCond, "right_outer")
+          .coalesce((est / (128L * 1024 * 1024) + 1).min(BigInt(Int.MaxValue)).toInt)
+          .persist()
+      }
+    val tPresent = col(s"$targetAlias.$tp").isNotNull
+    val sPresent = col(s"$sourceAlias.$sp").isNotNull
+
+    def condOf(cl: MergeClause): Column =
+      cl.condition.map(c => coalesce(c, lit(false))).getOrElse(lit(true))
+    // First-true clause index per branch; -1 = no clause claims the row.
+    def firstIdx(cls: Seq[MergeClause]): Column =
+      cls.zipWithIndex.foldRight(lit(-1): Column) { case ((cl, i), els) =>
+        when(condOf(cl), lit(i)).otherwise(els)
+      }
+    val mIdx = firstIdx(mCl); val iIdx = firstIdx(iCl); val bIdx = firstIdx(bCl)
+
+    // The value column `c` takes under clause `cl` (post-image).
+    def clauseVal(cl: MergeClause, c: String): Column = {
+      val f = fieldOf(c)
+      cl match {
+        // Source-column presence checks are case-insensitive; the alias
+        // reference itself resolves case-insensitively in analysis.
+        case _: UpdateAll =>
+          if (sourceCols.contains(c.toLowerCase))
+            col(s"$sourceAlias.$c").cast(f.dataType)
+          else col(s"$targetAlias.$c")
+        case Update(as, _) => as.get(c).map(_.cast(f.dataType))
+          .getOrElse(col(s"$targetAlias.$c"))
+        case _: InsertAll =>
+          if (sourceCols.contains(c.toLowerCase))
+            col(s"$sourceAlias.$c").cast(f.dataType)
+          else lit(null).cast(f.dataType)
+        case Insert(as, _) => as.get(c).map(_.cast(f.dataType))
+          .getOrElse(lit(null).cast(f.dataType))
+        case _: Delete => lit(null).cast(f.dataType) // row never materializes
+      }
+    }
+    def branchVal(cls: Seq[MergeClause], idx: Column, default: Column,
+        c: String): Column =
+      cls.zipWithIndex.foldRight(default) { case ((cl, i), els) =>
+        cl match {
+          case _: Delete => els // deleted rows are filtered out below
+          case _ => when(idx === i, clauseVal(cl, c)).otherwise(els)
+        }
+      }
+    def outVal(c: String): Column =
+      when(tPresent && sPresent, branchVal(mCl, mIdx, col(s"$targetAlias.$c"), c))
+        .when(tPresent && !sPresent, branchVal(bCl, bIdx, col(s"$targetAlias.$c"), c))
+        .otherwise(branchVal(iCl, iIdx, lit(null).cast(fieldOf(c).dataType), c))
+        .as(c)
+    def deleteIdxs(cls: Seq[MergeClause]): Seq[Int] =
+      cls.zipWithIndex.collect { case (_: Delete, i) => i }
+    def isDeleted(cls: Seq[MergeClause], idx: Column): Column =
+      deleteIdxs(cls).map(idx === _).reduceOption(_ || _).getOrElse(lit(false))
+    val keep =
+      when(tPresent && sPresent, !isDeleted(mCl, mIdx))
+        .when(tPresent && !sPresent, !isDeleted(bCl, bIdx))
+        .otherwise(iIdx >= 0) // source-only rows exist only via INSERT
+    val claimed = tPresent && when(sPresent, mIdx >= 0).otherwise(bIdx >= 0)
+
+    val outCols = mergedSchema.fieldNames.toSeq
+    val genSpecs = generatedSpecs(prev.properties)
+    val idSpecs = identitySpecs(prev.properties)
+    val idHwm = identityHwms(prev.properties, idSpecs)
+    def rows(which: Column): DataFrame = {
+      val out0 = joined.filter(keep && which).select(outCols.map(outVal): _*)
+      val regenerated = genSpecs.foldLeft(out0) { case (d, (n, e)) =>
+        d.withColumn(n, expr(e)) }
+      val out = fillIdentity(regenerated, idSpecs, idHwm)
+      enforceConstraints(out, prev.properties, "MERGE")
+      out
+    }
+
+    // CDF: one pass over the same join; unmatched/unclaimed rows yield a
+    // null array which explode drops.
+    def img(cl: Option[MergeClause], side: String, ct: String): Column = {
+      val cols = cl match {
+        case Some(c) => outCols.map(n => clauseVal(c, n).as(n))
+        case None => outCols.map(n => col(s"$side.$n").as(n))
+      }
+      struct(cols :+ lit(ct).as("_change_type"): _*)
+    }
+    def branchChanges(cls: Seq[MergeClause], idx: Column,
+        guard: Column): Seq[(Column, Column)] =
+      cls.zipWithIndex.map { case (cl, i) =>
+        val hit = guard && idx === i
+        cl match {
+          case _: Delete => hit -> array(img(None, targetAlias, "delete"))
+          case _: Insert | _: InsertAll =>
+            hit -> array(img(Some(cl), sourceAlias, "insert"))
+          case _ => hit -> array(
+            img(None, targetAlias, "update_preimage"),
+            img(Some(cl), targetAlias, "update_postimage"))
+        }
+      }
+    val branches =
+      branchChanges(mCl, mIdx, tPresent && sPresent) ++
+        branchChanges(bCl, bIdx, tPresent && !sPresent) ++
+        branchChanges(iCl, iIdx, !tPresent && sPresent)
+    val changeArr = branches.foldRight(lit(null).cast(
+      org.apache.spark.sql.types.ArrayType(StructType(
+        mergedSchema.fields :+ org.apache.spark.sql.types.StructField(
+          "_change_type", org.apache.spark.sql.types.StringType)))): Column) {
+      case ((cond, arr), els) => when(cond, arr).otherwise(els)
+    }
+    val changeRows0 = joined.select(explode(changeArr).as("c")).select("c.*")
+    val changeRows = genSpecs.foldLeft(changeRows0) { case (d, (n, e)) =>
+      d.withColumn(n, expr(e)) }
+    new MergePlan(mergedSchema, joined, tPresent, claimed, rows, changeRows,
+      idSpecs, idHwm)
+  }
 
   /** DELETE by predicate (M3): left-anti rewrite of
     * `delete(col("id").isin(ids))` / `DELETE FROM t WHERE …`
@@ -3580,7 +3757,7 @@ final class GraftTable private (
     log.latest() match {
       case Some(c) if c.dvDirs.nonEmpty =>
         val dead = c.dvDirs.map(countDir).sum.toDouble
-        val live = math.max(1L, c.dataDirs.map(countDir).sum - dead.toLong).toDouble
+        val live = math.max(1L, c.dataDirs.map(rowsOf(c, _)).sum - dead.toLong).toDouble
         if (dead / live > maxDeletedRatio) Some(materializeDeletes(targetFileBytes))
         else None
       case _ => None
@@ -3812,6 +3989,14 @@ object GraftTable {
 
   // private[graft]: the Delta export bridge reads this to decide which
   // writer features a commit's properties imply.
+  /** Deletion-vector dir paths → (file → sorted positions), shared by
+    * every handle in the JVM, access-ordered for LRU eviction; bounded and
+    * filled by [[GraftTable.dvEntriesOf]]. */
+  private val dvEntryCache =
+    new java.util.LinkedHashMap[Seq[String], Map[String, Seq[Long]]](16, 0.75f, true)
+  /** Positions held by [[dvEntryCache]]; guarded by its lock. */
+  private var dvCachedEntries = 0L
+
   private[graft] val ConstraintPrefix = "constraint."
   private[table] val DroppedColPrefix = "graft.droppedCol."
   /** Logical→physical column-name mapping entries

@@ -50,7 +50,8 @@ private[table] final class TableTxn(table: GraftTable, what: String,
     * attempt re-resolves the head a rival moved and the conflict rule
     * decides: [[Rebase]] builds over it, [[Committed]] answers None,
     * [[Refuse]] throws [[ConcurrentWriteException]] and [[Restart]] stages
-    * again from it. */
+    * again from it. A staging with nothing to publish ([[Unchanged]])
+    * reaps and answers None. */
   def commit(from: Option[Commit] = None,
       ifAbsent: => Commit = throw new NoSuchElementException(s"no table at ${table.root}"))(
       prepare: Commit => Staged): Option[Commit] =
@@ -82,6 +83,7 @@ private[table] final class TableTxn(table: GraftTable, what: String,
           plan = Some(prepare(head))
       }
       val staged = plan.get
+      if (!staged.publishes) { reap(); return None }
       // CDF rows carry the version they ACTUALLY commit at (the Delta
       // contract readChanges consumers key incremental state on): written
       // at the candidate version and re-written whenever a rebase moves it.
@@ -128,7 +130,14 @@ private[table] object TableTxn {
   /** A verb's staging over one snapshot: its conflict rule for a head a
     * rival moved, the commit it builds over a head, and its CDF rows. */
   final case class Staged(conflict: Commit => Conflict,
-      build: Attempt => Commit, changes: Option[DataFrame] = None)
+      build: Attempt => Commit, changes: Option[DataFrame] = None,
+      publishes: Boolean = true)
+
+  /** The staging of a verb that found nothing to change: no version is
+    * published and the verb's staging is reaped. */
+  val Unchanged: Staged = Staged(_ => Restart,
+    _ => throw new IllegalStateException("an unchanged staging builds no commit"),
+    publishes = false)
 
   /** One publish attempt: the head it commits over, the commit timestamp,
     * and the CDF dir the cycle wrote at this version with its rows per

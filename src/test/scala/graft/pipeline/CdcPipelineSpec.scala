@@ -461,4 +461,100 @@ class CdcPipelineSpec extends SparkSpec {
     assert(rows.length === 1)
     assert(rows(0).getAs[String]("email") === "a-back@x.com")
   }
+
+  /** Two mirrored batches on `customers`: inserts of 1–`n`, then an update
+    * of 1, a delete of 2 and an insert of `n + 1`. Returns the snapshot's
+    * path and the last-writer-wins state as (id, email). */
+  private def twoBatches(prefix: String, n: Int): (String, Set[(Long, String)]) = {
+    val in = tmpDir(s"$prefix-in")
+    val cfg = CdcPipeline.Config(
+      inputDir = in,
+      tableRoot = tmpDir(s"$prefix-tables"),
+      checkpointRoot = tmpDir(s"$prefix-ckpt"),
+      availableNow = true,
+      tables = Seq("customers"),
+      deltaMirror = true)
+    def email(i: Int) = s"c$i@x.com"
+    writeBatch(in, "b1.json", (1 to n).map(i =>
+      CdcFixtures.record("customers", "c", i,
+        Some(CdcFixtures.customerJson(i, "F", "L", email(i))), off = i.toLong)))
+    CdcPipeline.runOnce(spark, cfg)
+    writeBatch(in, "b2.json", Seq(
+      CdcFixtures.record("customers", "u", 1,
+        Some(CdcFixtures.customerJson(1, "F", "L", "new@x.com")),
+        Some(CdcFixtures.customerJson(1, "F", "L", email(1))), off = n + 1L),
+      CdcFixtures.record("customers", "d", 2, None,
+        Some(CdcFixtures.customerJson(2, "F", "L", email(2))), off = n + 2L),
+      CdcFixtures.record("customers", "c", n + 1,
+        Some(CdcFixtures.customerJson(n + 1, "F", "L", email(n + 1))), off = n + 3L)))
+    CdcPipeline.runOnce(spark, cfg)
+    (CdcPipeline.snapshotPath(cfg, "customers"),
+      Set(1L -> "new@x.com") ++ (3 to n + 1).map(i => i.toLong -> email(i)))
+  }
+
+  test("snapshot apply marks and appends: DVs and new data dirs, LWW through both readers") {
+    val (path, want) = twoBatches("cdc-pos", 30)
+    val t = GraftTable.forPath(spark, path)
+    val detail = t.detail().head()
+    assert(detail.getAs[Int]("numDvDirs") >= 1)
+    assert(detail.getAs[Int]("numDirs") >= 2)
+    assert(stateOf(t.read(), "customers") === want)
+    assert(stateOf(graft.sources.DeltaImport.read(spark, path), "customers") === want)
+    // the second batch replaced one row and deleted one: two marks, and only
+    // its two new row images were written
+    val h = t.history().filter(col("version") === t.version).head()
+    val m = h.getMap[String, Long](h.fieldIndex("operationMetrics"))
+    assert(m("numOutputRows") === 2L && m("mergeOnRead") === 1L)
+  }
+
+  test("the snapshot sink purges marks once they pass a tenth of the live rows") {
+    // 2 marks over 3 live rows: the batch's MERGE is followed by a purge
+    val (path, want) = twoBatches("cdc-purge", 3)
+    val t = GraftTable.forPath(spark, path)
+    assert(t.history().head().getAs[String]("operation") === "OPTIMIZE")
+    assert(t.detail().head().getAs[Int]("numDvDirs") === 0)
+    assert(stateOf(t.read(), "customers") === want)
+    assert(stateOf(graft.sources.DeltaImport.read(spark, path), "customers") === want)
+  }
+
+  test("the Delta mirror's history carries the snapshot MERGE's metrics") {
+    val (path, _) = twoBatches("cdc-pos-hist", 30)
+    val newest = graft.sources.DeltaImport.history(spark, path).head()
+    assert(newest.getAs[String]("operation") === "MERGE")
+    val m = newest.getMap[String, String](newest.fieldIndex("operationMetrics"))
+    assert(m("numTargetRowsUpdated") === "1" && m("numTargetRowsDeleted") === "1" &&
+      m("numTargetRowsInserted") === "1")
+  }
+
+  test("a batch of identical redeliveries publishes no version on any snapshot table") {
+    val in = tmpDir("cdc-redeliver-in")
+    val cfg = CdcPipeline.Config(
+      inputDir = in,
+      tableRoot = tmpDir("cdc-redeliver-tables"),
+      checkpointRoot = tmpDir("cdc-redeliver-ckpt"),
+      availableNow = true,
+      tables = Seq("customers", "products"),
+      deltaMirror = true)
+    val events = Seq(
+      CdcFixtures.record("customers", "c", 1,
+        Some(CdcFixtures.customerJson(1, "A", "A", "a@x.com")), off = 0),
+      CdcFixtures.record("products", "c", 1,
+        Some(CdcFixtures.productJson(1, "Laptop", 999.99, 10)), off = 1))
+    writeBatch(in, "b1.json", events)
+    CdcPipeline.runOnce(spark, cfg)
+    def versions: Seq[Long] = cfg.tables.map(tb =>
+      GraftTable.forPath(spark, CdcPipeline.snapshotPath(cfg, tb)).version)
+    val before = versions
+    // the same row images again, as updates at later offsets
+    writeBatch(in, "b2.json", Seq(
+      CdcFixtures.record("customers", "u", 1,
+        Some(CdcFixtures.customerJson(1, "A", "A", "a@x.com")),
+        Some(CdcFixtures.customerJson(1, "A", "A", "a@x.com")), off = 2),
+      CdcFixtures.record("products", "u", 1,
+        Some(CdcFixtures.productJson(1, "Laptop", 999.99, 10)),
+        Some(CdcFixtures.productJson(1, "Laptop", 999.99, 10)), off = 3)))
+    CdcPipeline.runOnce(spark, cfg)
+    assert(versions === before)
+    assert(GraftTable.forPath(spark, CdcPipeline.auditTablePath(cfg)).read().count() === 4)
+  }
 }

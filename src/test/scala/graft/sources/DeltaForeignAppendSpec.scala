@@ -373,21 +373,10 @@ class DeltaForeignAppendSpec extends SparkSpec {
     t.deletePositional(col("k") === 39L) // protocol advertises DVs
     DeltaExport.exportLog(t)
     retire(root)
-    val fs = new Path(root).getFileSystem(spark.sparkContext.hadoopConfiguration)
-    def metricsAt(v: Long): Map[String, Long] = {
-      val in = fs.open(new Path(root, f"_delta_log/$v%020d.json"))
-      val lines = try scala.io.Source.fromInputStream(in, "UTF-8").getLines()
-        .toList finally in.close()
-      val commitInfo = lines.map(JsonMethods.parse(_) \ "commitInfo")
-        .find(_ != org.json4s.JNothing).get
-      commitInfo \ "operationMetrics" match {
-        case org.json4s.JObject(kvs) => kvs.map {
-          case (k, org.json4s.JString(x)) => k -> x.toLong
-          case (k, other) => fail(s"metric $k is not a string: $other")
-        }.toMap
-        case other => fail(s"no operationMetrics: $other")
-      }
-    }
+    def metricsAt(v: Long): Map[String, Long] =
+      DeltaImport.history(spark, root).filter(col("version") === v)
+        .select("operationMetrics").as[Map[String, String]].head()
+        .map { case (k, x) => k -> x.toLong }
     // files whose DV changed, and files that are new, between two snapshots
     def dvsAdded(a: DeltaImport.Snapshot, b: DeltaImport.Snapshot): Long = {
       val before = a.files.map(f => f.path -> f.deletionVector).toMap
@@ -415,8 +404,8 @@ class DeltaForeignAppendSpec extends SparkSpec {
     assert((nd, nu, mu, md, mi) === ((4L, 4L, 1L, 1L, 1L)))
     assert(Seq(vd, vu, vm) === Seq(s0.version + 1, s0.version + 2, s0.version + 3))
 
-    val ops = DeltaImport.history(spark, root).as[(Long, java.sql.Timestamp, String)]
-      .collect().map(r => r._1 -> r._3).toMap
+    val ops = DeltaImport.history(spark, root).select("version", "operation")
+      .as[(Long, String)].collect().toMap
     assert(ops(vd) === "DELETE" && ops(vu) === "UPDATE" && ops(vm) === "MERGE")
     assert(dvsAdded(s0, s1) > 0L && filesAdded(s0, s1) === 0L)
     assert(metricsAt(vd) === Map("numDeletedRows" -> 4L,

@@ -298,4 +298,41 @@ class DeletionVectorSpec extends SparkSpec {
     assert(t.headCommit.get.dvDirs.isEmpty)
     assert(t.read().count() === 20)
   }
+
+  test("a fresh handle builds the read of a DV-carrying table without a Spark job") {
+    val seed = (1L to 60L).map(i => (i, i * 1.0)).toDF("id", "x")
+    val root = tmpDir("dv-nojob")
+    val t = GraftTable.create(spark, root, seed)
+    t.deletePositional(col("id") % 7 === 0)
+    t.deleteKeysPositional(Seq(1L, 2L).toDF("id"), "id")
+    assert(t.headCommit.get.dvDirs.size === 2)
+    // Jobs of this thread's group are counted; the listener bus is FIFO, so
+    // once a later marker job's start is seen every earlier one was too.
+    val sc = spark.sparkContext
+    val group = s"dv-nojob-${System.nanoTime()}"
+    val counted = new java.util.concurrent.atomic.AtomicInteger()
+    val markerSeen = new java.util.concurrent.CountDownLatch(1)
+    val listener = new org.apache.spark.scheduler.SparkListener {
+      override def onJobStart(e: org.apache.spark.scheduler.SparkListenerJobStart): Unit =
+        Option(e.properties).map(_.getProperty("spark.jobGroup.id")) match {
+          case Some(`group`) => counted.incrementAndGet()
+          case Some(g) if g == group + "-marker" => markerSeen.countDown()
+          case _ => ()
+        }
+    }
+    sc.addSparkListener(listener)
+    val read = try {
+      sc.setJobGroup(group, "fresh-handle read build")
+      val df = GraftTable.forPath(spark, root).read()
+      sc.setJobGroup(group + "-marker", "marker")
+      spark.range(1L).count()
+      assert(markerSeen.await(30, java.util.concurrent.TimeUnit.SECONDS))
+      df
+    } finally {
+      sc.clearJobGroup()
+      sc.removeSparkListener(listener)
+    }
+    assert(counted.get() === 0, s"${counted.get()} Spark job(s) before the action")
+    assert(read.count() === 60 - 8 - 2)
+  }
 }

@@ -1077,4 +1077,66 @@ class GraftTableSpec extends SparkSpec {
     t.delete(col("k") === 1L)
     assert(t.read().count() === 3)
   }
+
+  test("positional MERGE writes what a k-key batch changes, whatever the table's size") {
+    import graft.table.MergeClause
+    // 5 updates, 3 deletes, 2 inserts
+    val batch = ((1L to 5L).map(i => (i, i * 10.0, "u")) ++
+      (6L to 8L).map(i => (i, 0.0, "d")) ++
+      Seq((1000001L, 1.0, "u"), (1000002L, 2.0, "u"))).toDF("id", "v", "op")
+    def applyTo(n: Long): (GraftTable, Map[String, Long]) = {
+      val t = GraftTable.create(spark, tmpDir(s"gt-posmerge-$n"),
+        (1L to n).map(i => (i, i.toDouble)).toDF("id", "v"))
+      t.mergeClausesPositional(batch, Seq("id"), None,
+        matched = Seq(MergeClause.Delete(Some(col("s.op") === "d")),
+          MergeClause.Update(Map("v" -> col("s.v")))),
+        notMatched = Seq(MergeClause.Insert(Map("id" -> col("s.id"), "v" -> col("s.v")))))
+      val h = t.history().filter(col("version") === t.version).head()
+      assert(h.getAs[String]("operation") === "MERGE")
+      (t, h.getMap[String, Long](h.fieldIndex("operationMetrics")).toMap)
+    }
+    val (small, ms) = applyTo(200L)
+    val (large, ml) = applyTo(2000L)
+    assert(ms("numOutputRows") === 7L) // the post-images and the inserts, nothing else
+    assert(ml("numOutputRows") === ms("numOutputRows"))
+    for (m <- Seq(ms, ml)) {
+      assert(m("numTargetRowsUpdated") === 5L && m("numTargetRowsDeleted") === 3L &&
+        m("numTargetRowsInserted") === 2L && m("mergeOnRead") === 1L)
+    }
+    for ((t, n) <- Seq(small -> 200L, large -> 2000L)) {
+      assert(t.headCommit.get.dvDirs.size === 1 && t.headCommit.get.dataDirs.size === 2)
+      assert(t.read().count() === n - 3 + 2)
+      assert(t.read().filter(col("id") <= 8L).orderBy("id").as[(Long, Double)]
+        .collect().toSeq === (1L to 5L).map(i => (i, i * 10.0)))
+    }
+  }
+
+  test("positional MERGE: no change publishes nothing; insert-only is legal when append-only") {
+    import graft.table.MergeClause
+    val t = GraftTable.createWithProperties(spark, tmpDir("gt-posmerge-noop"),
+      Seq((1L, "a"), (2L, "b")).toDF("k", "s"), Map("delta.appendOnly" -> "true"))
+    val head = t.headCommit.get
+    val root = new org.apache.hadoop.fs.Path(t.root)
+    val fs = root.getFileSystem(spark.sparkContext.hadoopConfiguration)
+    def dirs(sub: String): Int = {
+      val p = new org.apache.hadoop.fs.Path(root, sub)
+      if (fs.exists(p)) fs.listStatus(p).length else 0
+    }
+    val before = (dirs("data"), dirs("dvs"), dirs("_changes"))
+    // a matched row no clause claims and a source row no clause inserts
+    val c = t.mergeClausesPositional(Seq((1L, "z")).toDF("k", "s"), Seq("k"), None,
+      notMatched = Seq(MergeClause.InsertAll(Some(col("s.s") =!= "z"))))
+    assert(c === head && t.version === head.version)
+    assert((dirs("data"), dirs("dvs"), dirs("_changes")) === before) // staging reaped
+    // inserts append: legal on an append-only table, as in Delta
+    t.mergeClausesPositional(Seq((1L, "z"), (3L, "c")).toDF("k", "s"), Seq("k"), None,
+      notMatched = Seq(MergeClause.InsertAll()))
+    assert(t.read().as[(Long, String)].collect().toSet ===
+      Set((1L, "a"), (2L, "b"), (3L, "c")))
+    assert(t.headCommit.get.dvDirs.isEmpty)
+    val e = intercept[UnsupportedOperationException](
+      t.mergeClausesPositional(Seq((1L, "z")).toDF("k", "s"), Seq("k"), None,
+        matched = Seq(MergeClause.UpdateAll())))
+    assert(e.getMessage.contains("append-only"))
+  }
 }

@@ -7,7 +7,8 @@ import org.apache.spark.sql.functions._
 import graft.SparkSpec
 
 /** Model-based randomized check of the general MERGE
-  * ([[GraftTable.mergeClausesOn]]): for random target/source states and a
+  * ([[GraftTable.mergeClausesOn]], and [[GraftTable.mergeClausesPositional]]
+  * without the NMBS clause): for random target/source states and a
   * clause set exercising every branch kind, the committed snapshot must
   * equal a row-by-row Scala evaluation of Delta's clause semantics
   * (first-true clause per branch; unclaimed target rows carry, unclaimed
@@ -23,9 +24,11 @@ class MergeClausesModelSpec extends SparkSpec {
     *   WHEN MATCHED                     THEN UPDATE SET s = s.s
     *   WHEN NOT MATCHED AND s.op <> 'd' THEN INSERT (id, s, v)
     *   WHEN NOT MATCHED BY SOURCE AND t.v > dThresh THEN DELETE
+    * The positional MERGE takes no NOT MATCHED BY SOURCE clause, so its
+    * model (`nmbs = false`) keeps every unmatched target row.
     */
   private def model(target: Seq[T], source: Seq[S],
-      uThresh: Double, dThresh: Double): Set[(Long, String, Double)] = {
+      uThresh: Double, dThresh: Double, nmbs: Boolean): Set[(Long, String, Double)] = {
     val byKey = source.map(r => r._1 -> r).toMap // source unique per key
     val kept = target.flatMap { case (id, ts, tv) =>
       byKey.get(id) match {
@@ -34,7 +37,7 @@ class MergeClausesModelSpec extends SparkSpec {
           else if (tv < uThresh) Some((id, ts, tv + sv))
           else Some((id, ss, tv))
         case None =>
-          if (tv > dThresh) None // NMBS delete
+          if (nmbs && tv > dThresh) None // NMBS delete
           else Some((id, ts, tv))
       }
     }
@@ -45,7 +48,10 @@ class MergeClausesModelSpec extends SparkSpec {
     (kept ++ inserted).toSet
   }
 
-  test("random states: engine snapshot equals the Scala clause model") {
+  /** Seeds 1–5 through the rewrite (`positional = false`, all five
+    * clauses) or the positional MERGE (the four without NMBS): snapshot
+    * and CDF counts must match the model. */
+  private def checkSeeds(positional: Boolean): Unit = {
     import spark.implicits._
     for (seed <- 1 to 5) {
       val rnd = new Random(seed)
@@ -59,32 +65,39 @@ class MergeClausesModelSpec extends SparkSpec {
         val dThresh = rnd.nextInt(100).toDouble
         val root = tmpDir(s"mc-model-$seed")
         val t = GraftTable.create(spark, root, target.toDF("id", "s", "v"))
-        t.mergeClausesOn(source.toDF("id", "s", "v", "op"), Seq("id"), onExtra = None,
-          matched = Seq(
-            MergeClause.Delete(Some(col("s.op") === "d")),
-            MergeClause.Update(Map("v" -> (col("t.v") + col("s.v"))),
-              Some(col("t.v") < uThresh)),
-            MergeClause.Update(Map("s" -> col("s.s")))),
-          notMatched = Seq(
-            MergeClause.Insert(Map("id" -> col("s.id"), "s" -> col("s.s"),
-              "v" -> col("s.v")), Some(col("s.op") =!= "d"))),
-          notMatchedBySource = Seq(
-            MergeClause.Delete(Some(col("t.v") > dThresh))))
+        val src = source.toDF("id", "s", "v", "op")
+        val matched = Seq(
+          MergeClause.Delete(Some(col("s.op") === "d")),
+          MergeClause.Update(Map("v" -> (col("t.v") + col("s.v"))),
+            Some(col("t.v") < uThresh)),
+          MergeClause.Update(Map("s" -> col("s.s"))))
+        val notMatched = Seq(
+          MergeClause.Insert(Map("id" -> col("s.id"), "s" -> col("s.s"),
+            "v" -> col("s.v")), Some(col("s.op") =!= "d")))
+        val before = t.version
+        if (positional) t.mergeClausesPositional(src, Seq("id"), onExtra = None,
+          matched = matched, notMatched = notMatched)
+        else t.mergeClausesOn(src, Seq("id"), onExtra = None,
+          matched = matched, notMatched = notMatched,
+          notMatchedBySource = Seq(MergeClause.Delete(Some(col("t.v") > dThresh))))
         val got = t.read().collect()
           .map(r => (r.getLong(0), r.getString(1), r.getDouble(2))).toSet
-        val want = model(target, source, uThresh, dThresh)
+        val want = model(target, source, uThresh, dThresh, nmbs = !positional)
         assert(got === want,
-          s"seed=$seed uThresh=$uThresh dThresh=$dThresh\n" +
+          s"seed=$seed positional=$positional uThresh=$uThresh dThresh=$dThresh\n" +
             s"target=$target\nsource=$source\n" +
             s"missing=${want -- got}\nextra=${got -- want}")
         // CDF account: inserts + deletes + update pairs partition the diff
-        val ch = t.readChanges(t.version, t.version)
-          .groupBy("_change_type").count().collect()
-          .map(r => r.getString(0) -> r.getLong(1)).toMap
+        val ch =
+          if (t.version == before) Map.empty[String, Long] // nothing published
+          else t.readChanges(t.version, t.version)
+            .groupBy("_change_type").count().collect()
+            .map(r => r.getString(0) -> r.getLong(1)).toMap
         val targetKeys = target.map(_._1).toSet
         val srcByKey = source.map(r => r._1 -> r).toMap
         val expDel = target.count(t0 => srcByKey.get(t0._1).exists(_._4 == "d")) +
-          target.count(t0 => !srcByKey.contains(t0._1) && t0._3 > dThresh)
+          (if (positional) 0
+          else target.count(t0 => !srcByKey.contains(t0._1) && t0._3 > dThresh))
         val expIns = source.count(s0 => !targetKeys.contains(s0._1) && s0._4 != "d")
         val expUpd = target.count(t0 => srcByKey.get(t0._1).exists(_._4 != "d"))
         assert(ch.getOrElse("delete", 0L) === expDel.toLong)
@@ -93,5 +106,13 @@ class MergeClausesModelSpec extends SparkSpec {
         assert(ch.getOrElse("update_preimage", 0L) === expUpd.toLong)
       }
     }
+  }
+
+  test("random states: engine snapshot equals the Scala clause model") {
+    checkSeeds(positional = false)
+  }
+
+  test("random states: the positional MERGE equals the clause model without NMBS") {
+    checkSeeds(positional = true)
   }
 }
