@@ -224,9 +224,9 @@ object CdcPipeline {
       // Marked rows cost every read a position filter and still occupy
       // their bytes; once they pass a tenth of the live rows, rewriting
       // just the marked dirs is cheaper than that recurring tax (Delta's
-      // auto-compaction of deletion vectors). The check reads recorded
-      // row counts and DV footers only, so a batch that stays under the
-      // ratio pays no job for it.
+      // auto-compaction of deletion vectors). The check reads parquet
+      // footers only, so a batch that stays under the ratio pays no job
+      // for it.
       t.maybeMaterialize(maxDeletedRatio = 0.1)
       mirrorDelta(cfg, t)
     }

@@ -285,14 +285,10 @@ object DeltaImport {
             case _ => (ci \ "timestamp").extractOrElse[Long](0L)
           }
           op = (ci \ "operation").extractOrElse[String]("")
-          // Delta writes every metric as a string; a writer that wrote a
-          // bare number is read the same way.
+          // The protocol writes every metric as a string; a value of any
+          // other type is not a metric and is left out.
           metrics = (ci \ "operationMetrics") match {
-            case JObject(kvs) => kvs.collect {
-              case (k, JString(v)) => k -> v
-              case (k, JInt(v)) => k -> v.toString
-              case (k, JLong(v)) => k -> v.toString
-            }.toMap
+            case JObject(kvs) => kvs.collect { case (k, JString(v)) => k -> v }.toMap
             case _ => Map.empty
           }
       }

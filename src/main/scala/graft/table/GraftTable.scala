@@ -100,12 +100,7 @@ final class GraftTable private (
     * [[graft.sim.Similarity.lshParams]]) without a scan. */
   def rowCount: Long =
     log.latest().map(c =>
-      c.dataDirs.map(rowsOf(c, _)).sum - c.dvDirs.map(countDir).sum).getOrElse(0L)
-
-  /** Rows of data dir `d` of `c`: the footer count its commit recorded,
-    * else read from the footers now. */
-  private def rowsOf(c: Commit, d: String): Long =
-    c.dirNulls.get(d).flatMap(_.get("")).filter(_ >= 0).getOrElse(countDir(d))
+      c.dataDirs.map(countDir).sum - c.dvDirs.map(countDir).sum).getOrElse(0L)
 
   private def commitFor(v: Long): Commit =
     log.commits().find(_.version == v).getOrElse(
@@ -1684,91 +1679,97 @@ final class GraftTable private (
     import org.apache.parquet.hadoop.ParquetFileReader
     import org.apache.parquet.hadoop.util.HadoopInputFile
     import scala.jdk.CollectionConverters._
-    val files = parquetFilesOf(dir)
+    val dirPath = new Path(root, dir)
+    val files = fs.listFiles(dirPath, true)
     val acc = scala.collection.mutable.HashMap.empty[String, (Double, Double)]
     val nulls = scala.collection.mutable.HashMap.empty[String, Long]
     var rowsTotal = 0L
-    files.foreach { file =>
-      val reader = ParquetFileReader.open(
-        HadoopInputFile.fromPath(file, hadoopConf(spark)))
-      try {
-        reader.getFooter.getBlocks.asScala.foreach { block =>
-          rowsTotal += block.getRowCount
-          block.getColumns.asScala.foreach { cc =>
-            val name = cc.getPath.toDotString
-            val s = cc.getStatistics
-            // Null accounting is independent of min/max: a chunk can be
-            // all-null (no min/max) and still report its null count. Any
-            // chunk that doesn't say poisons the column to -1 (unknown) —
-            // but the column stays RECORDED, because map presence is the
-            // signal that it exists in this dir's files at all.
-            val chunkNulls =
-              if (s != null && s.isNumNullsSet) s.getNumNulls else -1L
-            nulls(name) = nulls.get(name) match {
-              case None => chunkNulls
-              case Some(prev) =>
-                if (prev >= 0 && chunkNulls >= 0) prev + chunkNulls else -1L
-            }
-            if (s != null && s.hasNonNullValue) {
-              import org.apache.parquet.schema.LogicalTypeAnnotation
-              val ann = cc.getPrimitiveType.getLogicalTypeAnnotation
-              // Physical int stats carry a LOGICAL meaning the query
-              // literal will use: DECIMAL stores the unscaled value
-              // (123.45 as 12345 at scale 2) and TIMESTAMP's unit may
-              // not be the micros the pruning contract promises. Scale
-              // here — then widen by one ULP per side, because the
-              // query side (Decimal.toDouble) rounds independently and
-              // a boundary row must never be pruned by FP disagreement.
-              val factor: Double = ann match {
-                case d: LogicalTypeAnnotation.DecimalLogicalTypeAnnotation =>
-                  math.pow(10, -d.getScale)
-                case t: LogicalTypeAnnotation.TimestampLogicalTypeAnnotation =>
-                  t.getUnit match {
-                    case LogicalTypeAnnotation.TimeUnit.MILLIS => 1000.0
-                    case LogicalTypeAnnotation.TimeUnit.NANOS => 0.001
-                    case _ => 1.0 // MICROS: the contract's unit
-                  }
-                case _ => 1.0
+    var sawFile = false
+    while (files.hasNext) {
+      val st = files.next()
+      if (st.isFile && st.getPath.getName.endsWith(".parquet")) {
+        sawFile = true
+        val reader = ParquetFileReader.open(
+          HadoopInputFile.fromPath(st.getPath, hadoopConf(spark)))
+        try {
+          reader.getFooter.getBlocks.asScala.foreach { block =>
+            rowsTotal += block.getRowCount
+            block.getColumns.asScala.foreach { cc =>
+              val name = cc.getPath.toDotString
+              val s = cc.getStatistics
+              // Null accounting is independent of min/max: a chunk can be
+              // all-null (no min/max) and still report its null count. Any
+              // chunk that doesn't say poisons the column to -1 (unknown) —
+              // but the column stays RECORDED, because map presence is the
+              // signal that it exists in this dir's files at all.
+              val chunkNulls =
+                if (s != null && s.isNumNullsSet) s.getNumNulls else -1L
+              nulls(name) = nulls.get(name) match {
+                case None => chunkNulls
+                case Some(prev) =>
+                  if (prev >= 0 && chunkNulls >= 0) prev + chunkNulls else -1L
               }
-              def adj(lo: Double, hi: Double): (Double, Double) =
-                if (factor == 1.0) (lo, hi)
-                else (math.nextDown(lo * factor), math.nextUp(hi * factor))
-              val isString = ann.isInstanceOf[LogicalTypeAnnotation.StringLogicalTypeAnnotation]
-              val mm: Option[(Double, Double)] = (s.genericGetMin, s.genericGetMax) match {
-                case (lo: java.lang.Long, hi: java.lang.Long) =>
-                  Some(adj(lo.toDouble, hi.toDouble))
-                case (lo: java.lang.Integer, hi: java.lang.Integer) =>
-                  Some(adj(lo.toDouble, hi.toDouble))
-                case (lo: java.lang.Double, hi: java.lang.Double) =>
-                  Some((lo.toDouble, hi.toDouble))
-                case (lo: java.lang.Float, hi: java.lang.Float) =>
-                  Some((lo.toDouble, hi.toDouble))
-                case (lo: org.apache.parquet.io.api.Binary, hi: org.apache.parquet.io.api.Binary)
-                    if isString =>
-                  // Strings ride the same Double stats map as an
-                  // ORDER-PRESERVING 6-byte prefix value (exact in a
-                  // 53-bit mantissa): s <= t byte-lexicographically ⇒
-                  // prefix(s) <= prefix(t), so range skipping on the
-                  // encoded bounds is conservative-correct. Parquet's
-                  // own truncated binary bounds stay valid bounds under
-                  // the monotone prefix map. The isString gate matters:
-                  // a binary-backed DECIMAL(>18) or INT96 here is NOT
-                  // in lexicographic row order — those stay untracked.
-                  Some((GraftTable.stringPrefixValue(lo.getBytes),
-                    GraftTable.stringPrefixValue(hi.getBytes)))
-                case _ => None // other binary/etc: not tracked
-              }
-              mm.foreach { case (lo, hi) =>
-                val cur = acc.get(name)
-                acc(name) = (math.min(lo, cur.map(_._1).getOrElse(lo)),
-                  math.max(hi, cur.map(_._2).getOrElse(hi)))
+              if (s != null && s.hasNonNullValue) {
+                import org.apache.parquet.schema.LogicalTypeAnnotation
+                val ann = cc.getPrimitiveType.getLogicalTypeAnnotation
+                // Physical int stats carry a LOGICAL meaning the query
+                // literal will use: DECIMAL stores the unscaled value
+                // (123.45 as 12345 at scale 2) and TIMESTAMP's unit may
+                // not be the micros the pruning contract promises. Scale
+                // here — then widen by one ULP per side, because the
+                // query side (Decimal.toDouble) rounds independently and
+                // a boundary row must never be pruned by FP disagreement.
+                val factor: Double = ann match {
+                  case d: LogicalTypeAnnotation.DecimalLogicalTypeAnnotation =>
+                    math.pow(10, -d.getScale)
+                  case t: LogicalTypeAnnotation.TimestampLogicalTypeAnnotation =>
+                    t.getUnit match {
+                      case LogicalTypeAnnotation.TimeUnit.MILLIS => 1000.0
+                      case LogicalTypeAnnotation.TimeUnit.NANOS => 0.001
+                      case _ => 1.0 // MICROS: the contract's unit
+                    }
+                  case _ => 1.0
+                }
+                def adj(lo: Double, hi: Double): (Double, Double) =
+                  if (factor == 1.0) (lo, hi)
+                  else (math.nextDown(lo * factor), math.nextUp(hi * factor))
+                val isString = ann.isInstanceOf[LogicalTypeAnnotation.StringLogicalTypeAnnotation]
+                val mm: Option[(Double, Double)] = (s.genericGetMin, s.genericGetMax) match {
+                  case (lo: java.lang.Long, hi: java.lang.Long) =>
+                    Some(adj(lo.toDouble, hi.toDouble))
+                  case (lo: java.lang.Integer, hi: java.lang.Integer) =>
+                    Some(adj(lo.toDouble, hi.toDouble))
+                  case (lo: java.lang.Double, hi: java.lang.Double) =>
+                    Some((lo.toDouble, hi.toDouble))
+                  case (lo: java.lang.Float, hi: java.lang.Float) =>
+                    Some((lo.toDouble, hi.toDouble))
+                  case (lo: org.apache.parquet.io.api.Binary, hi: org.apache.parquet.io.api.Binary)
+                      if isString =>
+                    // Strings ride the same Double stats map as an
+                    // ORDER-PRESERVING 6-byte prefix value (exact in a
+                    // 53-bit mantissa): s <= t byte-lexicographically ⇒
+                    // prefix(s) <= prefix(t), so range skipping on the
+                    // encoded bounds is conservative-correct. Parquet's
+                    // own truncated binary bounds stay valid bounds under
+                    // the monotone prefix map. The isString gate matters:
+                    // a binary-backed DECIMAL(>18) or INT96 here is NOT
+                    // in lexicographic row order — those stay untracked.
+                    Some((GraftTable.stringPrefixValue(lo.getBytes),
+                      GraftTable.stringPrefixValue(hi.getBytes)))
+                  case _ => None // other binary/etc: not tracked
+                }
+                mm.foreach { case (lo, hi) =>
+                  val cur = acc.get(name)
+                  acc(name) = (math.min(lo, cur.map(_._1).getOrElse(lo)),
+                    math.max(hi, cur.map(_._2).getOrElse(hi)))
+                }
               }
             }
           }
-        }
-      } finally reader.close()
+        } finally reader.close()
+      }
     }
-    if (files.isEmpty) DirMeta(Map.empty, Map.empty)
+    if (!sawFile) DirMeta(Map.empty, Map.empty)
     else DirMeta(acc.toMap, nulls.toMap + ("" -> rowsTotal))
   }
 
@@ -2262,6 +2263,12 @@ final class GraftTable private (
       dirNulls = Map(dir -> meta.nulls)), dir, meta), changes)
   }
 
+  /** Staged `dir`, holding `rows` rows, unless it is empty: an empty dir
+    * is deleted, never referenced, since every later read would open its
+    * empty file. */
+  private def unlessEmpty(dir: String, rows: Long): Option[String] =
+    if (rows > 0L) Some(dir) else { fs.delete(new Path(root, dir), true); None }
+
   /** `c` with `dirs` of `from` carried ahead of its own dir, skipping
     * metadata included — a rewrite of a dir SUBSET. */
   private def carrying(c: Commit, from: Commit, dirs: Seq[String]): Commit =
@@ -2305,9 +2312,9 @@ final class GraftTable private (
       val dir = writeData(tx, prepared, prev.version + 1, partitionBy)
       val meta = metaFor(dir)
       val outputRows = countDir(dir)
-      // An empty write (a CREATE that only declares the schema) references
-      // no dir: every later read would otherwise open its empty file.
-      val dirs = if (outputRows > 0L) Seq(dir) else { fs.delete(new Path(root, dir), true); Nil }
+      // an empty CREATE (one that only declares the schema) or overwrite
+      // references no dir
+      val dirs = unlessEmpty(dir, outputRows).toSeq
       Staged(staleRewrite(prev, op), a => Commit(a.version, a.tsMs, op, dirs,
         Map("numOutputRows" -> outputRows), prepared.schema.json,
         txn.map(_._1), txn.map(_._2),
@@ -2652,11 +2659,8 @@ final class GraftTable private (
         val (marked, added) = (countDir(dv), countDir(data))
         if (marked == 0L && added == 0L) TableTxn.Unchanged
         else {
-          // a dir with no rows is dropped here, never referenced
-          def nonEmpty(d: String, n: Long): Option[String] =
-            if (n > 0L) Some(d) else { fs.delete(new Path(root, d), true); None }
-          val dvs = nonEmpty(dv, marked)
-          val meta = nonEmpty(data, added).map(d => d -> metaFor(d)).toMap
+          val dvs = unlessEmpty(dv, marked)
+          val meta = unlessEmpty(data, added).map(d => d -> metaFor(d)).toMap
           Staged(
             conflict = head =>
               if (isMorOnlyRace(snap, head)) Restart
@@ -2732,12 +2736,14 @@ final class GraftTable private (
     * reaches a branch. A positional plan right-outer-joins the target read
     * with its row positions ([[readCommitWithPos]]) — a target row no
     * source row matches is never written, so it need not reach the join's
-    * output — and persists the join, which the caller unpersists. Every
-    * write of a positional plan is source-sized, so its join is coalesced
-    * to one partition per 128 MB of the source's estimated size before it
-    * is cached: the cache builds in that many tasks and each write lands
-    * as that many files (a cached plan keeps its shuffle partitions, which
-    * adaptive execution would otherwise have merged). */
+    * output — and persists the join, which the caller unpersists. The
+    * join runs at the parallelism its inputs give it (a target too large
+    * to broadcast is shuffled across the shuffle partitions); its output
+    * is source-sized, so it is repartitioned to one partition per 128 MB
+    * of the source's estimated size (at most the shuffle partitions, since
+    * a source with no statistics estimates as unbounded) before it is
+    * cached, and each of the three writes lands as that many files. A
+    * coalesce there would pull the join itself into that many tasks. */
   private def mergePlan(prev: Commit, source: DataFrame, keys: Seq[String],
       onExtra: Option[Column], matched: Seq[MergeClause],
       notMatched: Seq[MergeClause], notMatchedBySource: Seq[MergeClause],
@@ -2797,9 +2803,9 @@ final class GraftTable private (
       if (!positioned) t.join(s, onCond, "full_outer")
       else {
         val est = source.queryExecution.optimizedPlan.stats.sizeInBytes
-        t.join(s, onCond, "right_outer")
-          .coalesce((est / (128L * 1024 * 1024) + 1).min(BigInt(Int.MaxValue)).toInt)
-          .persist()
+        val n = (est / (128L * 1024 * 1024) + 1)
+          .min(BigInt(spark.sessionState.conf.numShufflePartitions)).toInt
+        t.join(s, onCond, "right_outer").repartition(n).persist()
       }
     val tPresent = col(s"$targetAlias.$tp").isNotNull
     val sPresent = col(s"$sourceAlias.$sp").isNotNull
@@ -3757,7 +3763,7 @@ final class GraftTable private (
     log.latest() match {
       case Some(c) if c.dvDirs.nonEmpty =>
         val dead = c.dvDirs.map(countDir).sum.toDouble
-        val live = math.max(1L, c.dataDirs.map(rowsOf(c, _)).sum - dead.toLong).toDouble
+        val live = math.max(1L, c.dataDirs.map(countDir).sum - dead.toLong).toDouble
         if (dead / live > maxDeletedRatio) Some(materializeDeletes(targetFileBytes))
         else None
       case _ => None

@@ -61,10 +61,9 @@ private[graftnative] object GraftSqlCommands {
   def sourceDf(session: SparkSession, plan: LogicalPlan) =
     ClassicDataset.ofRows(session.asInstanceOf[ClassicSparkSession], plan)
 
-  /** `spark.graft.sql.mergeOnRead`: route SQL DELETE/UPDATE, and MERGE
-    * without NOT MATCHED BY SOURCE, through the no-rewrite merge-on-read
-    * paths (deletion vectors + appended row images) — Delta's
-    * deletion-vector write mode as a session switch. */
+  /** `spark.graft.sql.mergeOnRead`: route SQL DELETE/UPDATE through the
+    * no-rewrite merge-on-read paths (deletion vectors + updated copies) —
+    * Delta's deletion-vector write mode as a session switch. */
   def mergeOnRead(session: SparkSession): Boolean =
     session.conf.getOption("spark.graft.sql.mergeOnRead").exists(_.toBoolean)
 
@@ -227,9 +226,7 @@ case class GraftMergeCommand(
   * `WHEN MATCHED [AND c] THEN UPDATE SET …`/`UPDATE SET *`/`DELETE`,
   * `WHEN NOT MATCHED [AND c] THEN INSERT …`/`INSERT *`, and
   * `WHEN NOT MATCHED BY SOURCE [AND c] THEN UPDATE SET …`/`DELETE`,
-  * mapped 1:1 onto [[GraftTable.mergeClausesOn]] (or, under
-  * `spark.graft.sql.mergeOnRead` and with no NOT MATCHED BY SOURCE
-  * clause, [[GraftTable.mergeClausesPositional]]). Clause conditions and
+  * mapped 1:1 onto [[GraftTable.mergeClauses]]. Clause conditions and
   * values resolve against the join sides aliased with the statement's OWN
   * target/source aliases, so `t.v > s.v` in the SQL binds exactly as
   * written. Parsed actions ride in the [[GraftParsed]] envelope — they
@@ -253,20 +250,11 @@ case class GraftMergeClausesCommand(
     def clause(a: org.apache.spark.sql.catalyst.plans.logical.MergeAction) =
       GraftSqlCommands.mergeClauseOf(a, targetAlias)
     val src = GraftSqlCommands.sourceDf(session, sourcePlan)
-    // Under mergeOnRead a statement without NOT MATCHED BY SOURCE clauses
-    // marks and appends instead of rewriting; one with them claims every
-    // unmatched target row, which only the rewrite pays for.
-    val c =
-      if (GraftSqlCommands.mergeOnRead(session) && notMatchedBySource.value.isEmpty)
-        table.mergeClausesPositional(src, keys, onExtra.value.map(colOf),
-          matched = matched.value.map(clause),
-          notMatched = notMatched.value.map(clause),
-          targetAlias = targetAlias, sourceAlias = sourceAlias)
-      else table.mergeClausesOn(src, keys, onExtra.value.map(colOf),
-        matched = matched.value.map(clause),
-        notMatched = notMatched.value.map(clause),
-        notMatchedBySource = notMatchedBySource.value.map(clause),
-        targetAlias = targetAlias, sourceAlias = sourceAlias)
+    val c = table.mergeClausesOn(src, keys, onExtra.value.map(colOf),
+      matched = matched.value.map(clause),
+      notMatched = notMatched.value.map(clause),
+      notMatchedBySource = notMatchedBySource.value.map(clause),
+      targetAlias = targetAlias, sourceAlias = sourceAlias)
     val upd = c.metrics.getOrElse("numTargetRowsUpdated", 0L)
     val del = c.metrics.getOrElse("numTargetRowsDeleted", 0L)
     val ins = c.metrics.getOrElse("numTargetRowsInserted", 0L)

@@ -95,51 +95,6 @@ class SqlDmlSpec extends SparkSpec {
     } finally s2.conf.unset("spark.graft.sql.mergeOnRead")
   }
 
-  test("spark.graft.sql.mergeOnRead routes MERGE without NMBS through the positional path") {
-    import s2.implicits._
-    val (t, _) = freshTable("sqlmormrg", "mormrg_t")
-    Seq((2L, "B", 200.0, "u"), (3L, "x", 0.0, "d"), (7L, "g", 70.0, "c"))
-      .toDF("id", "s", "v", "op").createOrReplaceTempView("mormrg_src")
-    s2.conf.set("spark.graft.sql.mergeOnRead", "true")
-    try {
-      val res = s2.sql(
-        """MERGE INTO mormrg_t t USING mormrg_src s ON t.id = s.id
-          |WHEN MATCHED AND s.op = 'd' THEN DELETE
-          |WHEN MATCHED THEN UPDATE SET *
-          |WHEN NOT MATCHED THEN INSERT (id, s, v) VALUES (s.id, s.s, s.v)
-          |""".stripMargin).head()
-      assert((res.getLong(0), res.getLong(1), res.getLong(2), res.getLong(3)) ===
-        ((3L, 1L, 1L, 1L)))
-      // marked, not rewritten: one deletion vector, the original dir kept
-      assert(t.detail().head().getAs[Int]("numDvDirs") === 1)
-      val h = t.history().head()
-      assert(h.getMap[String, Long](h.fieldIndex("operationMetrics"))
-        .get("mergeOnRead") === Some(1L))
-      val byId = t.read().collect().map(r => r.getLong(0) -> r.getString(1)).toMap
-      assert(byId === Map(1L -> "a", 2L -> "B", 4L -> "d", 7L -> "g"))
-    } finally s2.conf.unset("spark.graft.sql.mergeOnRead")
-  }
-
-  test("spark.graft.sql.mergeOnRead keeps a MERGE with NMBS on the rewrite") {
-    import s2.implicits._
-    val (t, _) = freshTable("sqlmornmbs", "mornmbs_t")
-    t.deletePositional(col("id") === 4L) // a mark the rewrite must fold away
-    Seq((1L, 5.0), (2L, 7.0)).toDF("id", "bump").createOrReplaceTempView("mornmbs_src")
-    s2.conf.set("spark.graft.sql.mergeOnRead", "true")
-    try {
-      val res = s2.sql(
-        """MERGE INTO mornmbs_t t USING mornmbs_src s ON t.id = s.id
-          |WHEN MATCHED THEN UPDATE SET v = t.v + s.bump
-          |WHEN NOT MATCHED BY SOURCE THEN DELETE
-          |""".stripMargin).head()
-      assert((res.getLong(0), res.getLong(1), res.getLong(2), res.getLong(3)) ===
-        ((3L, 2L, 1L, 0L)))
-      assert(t.detail().head().getAs[Int]("numDvDirs") === 0)
-      assert(t.read().orderBy("id").collect().map(r => r.getLong(0) -> r.getDouble(2))
-        .toSeq === Seq(1L -> 15.0, 2L -> 27.0))
-    } finally s2.conf.unset("spark.graft.sql.mergeOnRead")
-  }
-
   test("spark.graft.sql.mergeOnRead DELETE/UPDATE refuse on an append-only table") {
     val (t, _) = freshTable("sqlmorao", "morao_t")
     t.setProperties(Map("delta.appendOnly" -> "true"))

@@ -1111,6 +1111,64 @@ class GraftTableSpec extends SparkSpec {
     }
   }
 
+  test("positional MERGE joins a target too large to broadcast at full parallelism") {
+    import graft.table.MergeClause
+    val t = GraftTable.create(spark, tmpDir("gt-posmerge-smj"),
+      (1L to 400L).map(i => (i, i.toDouble)).toDF("id", "v"))
+    val batch = Seq((3L, 30.0, "u"), (4L, 0.0, "d"), (1000L, 1.0, "u")).toDF("id", "v", "op")
+    // Every target is above a one-byte broadcast threshold, so the target is
+    // shuffled into a sort-merge join; with coalescing off its stage keeps
+    // one task per shuffle partition, as a target of many partitions' worth
+    // of bytes would.
+    val confs = Map("spark.sql.autoBroadcastJoinThreshold" -> "1",
+      "spark.sql.adaptive.coalescePartitions.enabled" -> "false")
+    val saved = confs.keys.map(k => k -> spark.conf.getOption(k)).toMap
+    val sc = spark.sparkContext
+    val group = s"posmerge-smj-${System.nanoTime()}"
+    val joinStageTasks = new java.util.concurrent.ConcurrentLinkedQueue[Int]()
+    val markerSeen = new java.util.concurrent.CountDownLatch(1)
+    val listener = new org.apache.spark.scheduler.SparkListener {
+      override def onStageSubmitted(
+          e: org.apache.spark.scheduler.SparkListenerStageSubmitted): Unit =
+        if (Option(e.properties).exists(_.getProperty("spark.jobGroup.id") == group) &&
+            e.stageInfo.rddInfos.exists(_.name == "ZippedPartitionsRDD2"))
+          joinStageTasks.add(e.stageInfo.numTasks)
+      override def onJobStart(e: org.apache.spark.scheduler.SparkListenerJobStart): Unit =
+        if (Option(e.properties).exists(_.getProperty("spark.jobGroup.id") == group + "-marker"))
+          markerSeen.countDown()
+    }
+    confs.foreach { case (k, v) => spark.conf.set(k, v) }
+    sc.addSparkListener(listener)
+    try {
+      sc.setJobGroup(group, "positional merge")
+      t.mergeClausesPositional(batch, Seq("id"), None,
+        matched = Seq(MergeClause.Delete(Some(col("s.op") === "d")),
+          MergeClause.Update(Map("v" -> col("s.v")))),
+        notMatched = Seq(MergeClause.Insert(Map("id" -> col("s.id"), "v" -> col("s.v")))))
+      sc.setJobGroup(group + "-marker", "marker")
+      spark.range(1L).count()
+      assert(markerSeen.await(30, java.util.concurrent.TimeUnit.SECONDS))
+    } finally {
+      sc.clearJobGroup()
+      sc.removeSparkListener(listener)
+      saved.foreach { case (k, v) => v.fold(spark.conf.unset(k))(spark.conf.set(k, _)) }
+    }
+    import scala.jdk.CollectionConverters._
+    val partitions = spark.conf.get("spark.sql.shuffle.partitions").toInt
+    assert(joinStageTasks.asScala.toSeq.nonEmpty &&
+      joinStageTasks.asScala.forall(_ == partitions), joinStageTasks.asScala.toSeq)
+    // the join's source-sized output still lands as one file per dir
+    val head = t.headCommit.get
+    val fs = new org.apache.hadoop.fs.Path(t.root)
+      .getFileSystem(spark.sparkContext.hadoopConfiguration)
+    for (d <- head.dvDirs ++ head.dataDirs.filterNot(_.contains("v00000")))
+      assert(fs.listStatus(new org.apache.hadoop.fs.Path(t.root, d))
+        .count(_.getPath.getName.endsWith(".parquet")) === 1, d)
+    assert(t.read().count() === 400L)
+    assert(t.read().filter(col("id").isin(3L, 4L, 1000L)).orderBy("id").as[(Long, Double)]
+      .collect().toSeq === Seq((3L, 30.0), (1000L, 1.0)))
+  }
+
   test("positional MERGE: no change publishes nothing; insert-only is legal when append-only") {
     import graft.table.MergeClause
     val t = GraftTable.createWithProperties(spark, tmpDir("gt-posmerge-noop"),
