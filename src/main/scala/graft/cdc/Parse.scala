@@ -74,15 +74,14 @@ object Parse {
     }
   }
 
-  /** Delete-side key rows for one table (spark_streaming.py:373-379): parse
-    * `before_data`, keep the primary key. Feeds a distributed anti-join
-    * delete ([[graft.table.GraftTable.deleteKeys]]) instead of the
-    * reference's driver-collected id list (spark_streaming.py:383). */
-  /** Fully-typed DELETE rows for one table — the before-image parsed with
-    * the same schema as [[typedSnapshotRows]] parses after-images. SCD2
-    * maintenance needs the closing row's attributes, not just its key
-    * ([[graft.pipeline.Scd2]] change batches carry every dimension
-    * attribute). */
+  /** Delete-side rows for one table (spark_streaming.py:373-379): the
+    * `before_data` image parsed with the same schema as
+    * [[typedSnapshotRows]] parses after-images, fully typed. The snapshot
+    * sink merges them as keyed deletes through the batch's one join,
+    * instead of the reference's driver-collected id list
+    * (spark_streaming.py:383); SCD2 maintenance needs the closing row's
+    * attributes, not just its key ([[graft.pipeline.Scd2]] change batches
+    * carry every dimension attribute). */
   def typedDeleteRows(auditRows: DataFrame, table: String): DataFrame = {
     val schema = Envelope.tableJsonSchemas(table)
     val base = auditRows
@@ -97,16 +96,5 @@ object Parse {
     Envelope.microsTimestampCols(table).foldLeft(base) { (df, c) =>
       df.withColumn(c, timestamp_micros(col(c)))
     }
-  }
-
-  def deleteKeyRows(auditRows: DataFrame, table: String): DataFrame = {
-    val schema = Envelope.tableJsonSchemas(table)
-    auditRows
-      .filter(col("source_table") === table &&
-        col("operation") === "d" &&
-        col("before_data").isNotNull)
-      .select(from_json(col("before_data"), schema).as("record"))
-      .filter(col("record.id").isNotNull)
-      .select(col("record.id").as("id"))
   }
 }

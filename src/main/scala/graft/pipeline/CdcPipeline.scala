@@ -58,13 +58,6 @@ object CdcPipeline {
       // MERGEs, which the exporter publishes as Delta deletion vectors
       // plus added files; the audit stream only appends.
       deltaMirror: Boolean = false,
-      // Optional small-files guard: compact the audit table once it
-      // accumulates this many append dirs (GraftTable.maybeCompact). OFF by
-      // default because compaction rewrites data files, which would make a
-      // downstream `streamAppends` consumer of the audit table re-ingest
-      // history — enable only when nothing streams the audit data dirs (use
-      // streamChanges-style consumers instead).
-      auditCompactAfterDirs: Option[Int] = None,
       // ST12 (spark_streaming.py:37,194-196): "earliest" replays everything
       // already in the input dir; "latest" starts from only-new files —
       // files present when the query starts are skipped, the Kafka
@@ -149,7 +142,6 @@ object CdcPipeline {
           // — exactly-once audit rows (ST3/ST9).
           val audit = GraftTable.createIfNotExists(spark, auditTablePath(cfg), batch.limit(0))
           audit.appendOnce(batch, "cdc_events_audit", batchId)
-          cfg.auditCompactAfterDirs.foreach(audit.maybeCompact(_))
           mirrorDelta(cfg, audit)
         }
       }

@@ -511,8 +511,12 @@ object DeltaExport {
         if (!fs.exists(cdcPath)) {
           val stage = new Path(root,
             s".cdc-stage-${java.util.UUID.randomUUID()}")
-          val df = spark.read.parquet(new Path(root, changesRel).toString)
-            .drop("_commit_version", "_commit_timestamp")
+          // The rows were written under the commit's physical schema plus
+          // `_change_type` ([[GraftTable.writeChanges]]): declaring it
+          // skips a schema-inference job per commit, and leaves out the
+          // stamps Delta derives from the commit itself.
+          val df = spark.read.schema(physSchema.add("_change_type", StringType))
+            .parquet(new Path(root, changesRel).toString)
           val w = df.write.mode("overwrite")
           (if (c.partitionCols.nonEmpty) w.partitionBy(c.partitionCols: _*) else w)
             .parquet(stage.toString)
@@ -2150,9 +2154,11 @@ object DeltaExport {
       sourceAlias, txn, onExtra)
 
   /** [[mergeForeignClauses]] over the already-resolved snapshot `snap0`:
-    * the clause algebra — claim indices, the three claim frames, image
-    * projection, identity fill, the txn check — with the write itself
-    * handed to [[writeRowLevel]]. */
+    * what is foreign about a MERGE — the input checks, the null-key source
+    * filter, the candidate pruning, the duplicate-source check, the txn
+    * check — around the clause algebra every graft MERGE shares
+    * ([[graft.table.MergePlan]], over the candidates read with their row
+    * positions), with the write handed to [[writeRowLevel]]. */
   private def mergeClausesOver(spark: SparkSession, tablePath: String,
       snap0: DeltaImport.Snapshot, source: org.apache.spark.sql.DataFrame,
       keys: Seq[String], matched: Seq[graft.table.MergeClause],
@@ -2162,30 +2168,11 @@ object DeltaExport {
       txn: Option[(String, Long)],
       onExtra: Option[org.apache.spark.sql.Column])
       : (Long, Long, Long, Long) = {
-    import graft.table.MergeClause
+    import graft.table.{MergeClause, MergePlan}
     import org.apache.spark.sql.functions.{lit, when, count}
     val tx = new ForeignTxn(spark, tablePath, s"merge into $tablePath")
-
-    require(keys.nonEmpty, s"merge into $tablePath: needs at least one equi key")
-    require(targetAlias != sourceAlias,
-      s"merge into $tablePath: target and source aliases must differ")
-    matched.foreach {
-      case _: MergeClause.InsertAll | _: MergeClause.Insert =>
-        throw new IllegalArgumentException(
-          "MERGE: INSERT is not valid in the WHEN MATCHED branch")
-      case _ => ()
-    }
-    notMatched.foreach {
-      case _: MergeClause.InsertAll | _: MergeClause.Insert => ()
-      case other => throw new IllegalArgumentException(
-        s"MERGE: only INSERT is valid in the WHEN NOT MATCHED branch, got $other")
-    }
-    notMatchedBySource.foreach {
-      case _: MergeClause.Update | _: MergeClause.Delete => ()
-      case other => throw new IllegalArgumentException(
-        "MERGE: only UPDATE SET …/DELETE are valid in the WHEN NOT MATCHED " +
-          s"BY SOURCE branch, got $other")
-    }
+    MergePlan.requireShape(keys, matched, notMatched, notMatchedBySource,
+      targetAlias, sourceAlias)
 
     def gate(snap: DeltaImport.Snapshot): Unit = {
       require(!flagOn(snap.configuration, "delta.appendOnly") ||
@@ -2206,9 +2193,9 @@ object DeltaExport {
       fields.find(_.name.equalsIgnoreCase(k)).get.name
     }
     // Generated / identity declarations (same extraction as the append
-    // path): neither kind is assignable; update images recompute
-    // generated and keep identity; insert images compute generated and
-    // allocate identity above the high-water mark.
+    // path): neither kind is assignable; the shared plan recomputes
+    // generated columns over every image, keeps identity on updates and
+    // allocates it above the high-water mark on inserts.
     val genSpecs = generatedSpecs(fields)
     val (idSpecs, idHwm) = identitySpecs(fields)
     val engineMaintained = genSpecs.keySet ++ idSpecs.keySet
@@ -2235,6 +2222,14 @@ object DeltaExport {
               "ALWAYS — omit it and let the merge assign ids")
         }
       }
+      // INSERT ALL riding a source-provided identity value needs the
+      // schema's explicit-insert opt-in (as foreign appends require).
+      case _: MergeClause.InsertAll => idSpecs.foreach {
+        case (n, (_, _, allowExplicit)) =>
+          require(allowExplicit || !source.columns.exists(_.equalsIgnoreCase(n)),
+            s"merge into $tablePath: identity column $n is GENERATED " +
+              "ALWAYS — drop it from the source and let the merge assign ids")
+      }
       case _ => ()
     }
     checkAssigned(matched); checkAssigned(notMatched)
@@ -2255,50 +2250,6 @@ object DeltaExport {
         col(s"`$k`").isin(vs.toIndexedSeq: _*) }.reduce(_ && _))
     val candidates = keysBound.fold(snap0.files)(DeltaSkipping.prune(spark, snap0, _))
 
-    val tgtRows =
-      if (candidates.isEmpty) None
-      else Some(DeltaImport
-        .readFilesWithPositions(spark, snap0, candidates, FileC, PosC))
-    val srcAliased = srcNonNull.alias(sourceAlias)
-    // The full MATCH condition: equi keys plus the compound-ON residual
-    // (Catalyst plans the equi keys as the join and the residual as its
-    // filter — never a cartesian).
-    val joinCond = (keyNames.map(k =>
-      col(s"$targetAlias.`$k`") === col(s"$sourceAlias.`$k`")) ++ onExtra)
-      .reduce(_ && _)
-    // First-match-wins claim index over a clause branch (-1 = unclaimed).
-    def claimOf(clauses: Seq[MergeClause]): org.apache.spark.sql.Column =
-      clauses.zipWithIndex.reverse.foldLeft(lit(-1)) { case (acc, (c, i)) =>
-        when(c.condition.getOrElse(lit(true)), lit(i)).otherwise(acc) }
-    val ClaimC = "__graft_cmg_claim"
-
-    val matchedFrame = tgtRows.filter(_ => matched.nonEmpty).map { t =>
-      t.alias(targetAlias).join(srcAliased, joinCond, "inner")
-        .withColumn(ClaimC, claimOf(matched)).persist()
-    }
-    val bySourceFrame = tgtRows.filter(_ => notMatchedBySource.nonEmpty).map { t =>
-      t.alias(targetAlias).join(srcAliased, joinCond, "left_anti")
-        .withColumn(ClaimC, claimOf(notMatchedBySource)).persist()
-    }
-    val notMatchedFrame =
-      if (notMatched.isEmpty) None
-      else {
-        // Keys-only build side when the ON is pure-equi; a residual may
-        // reference any target column, so it anti-joins the full frame.
-        val tgtSide = tgtRows.map { t =>
-          if (onExtra.isEmpty)
-            t.select(keyNames.map(k => col(s"`$k`")): _*).distinct()
-          else t
-        }
-        val base = tgtSide match {
-          case Some(tk) => srcAliased.join(tk.alias(targetAlias), joinCond,
-            "left_anti")
-          case None => srcNonNull.alias(sourceAlias)
-        }
-        Some(base.withColumn(ClaimC, claimOf(notMatched)).persist())
-      }
-    val frames = matchedFrame ++ bySourceFrame ++ notMatchedFrame
-
     // Source uniqueness per key — delta-spark's multiple-match error —
     // checked only when a matched row could be claimed twice.
     if (matched.nonEmpty) {
@@ -2310,171 +2261,60 @@ object DeltaExport {
             .getOrElse("")} — deduplicate to latest-per-key first")
     }
 
-    def claimCounts(frame: Option[org.apache.spark.sql.DataFrame])
-        : Map[Int, Long] = frame match {
-      case None => Map.empty
-      case Some(f) =>
-        f.filter(col(ClaimC) >= 0).groupBy(ClaimC).count().collect()
-          .map(r => r.getInt(0) -> r.getLong(1)).toMap
-    }
-    val mCounts = claimCounts(matchedFrame)
-    val bCounts = claimCounts(bySourceFrame)
-    val iCounts = claimCounts(notMatchedFrame)
-    def kindTotals(clauses: Seq[MergeClause], counts: Map[Int, Long])
-        : (Long, Long) = // (updates, deletes)
-      clauses.zipWithIndex.foldLeft((0L, 0L)) { case ((u, d), (c, i)) =>
-        c match {
-          case _: MergeClause.Delete => (u, d + counts.getOrElse(i, 0L))
-          case _ => (u + counts.getOrElse(i, 0L), d)
-        }
-      }
-    val (mUpd, mDel) = kindTotals(matched, mCounts)
-    val (bUpd, bDel) = kindTotals(notMatchedBySource, bCounts)
-    val updatedCount = mUpd + bUpd
-    val deletedCount = mDel + bDel
-    val insertedCount = iCounts.values.sum
-    // Zero claims and no txn to record → nothing to commit. With a txn
-    // stamp the merge MUST still commit a (txn-only) version: the
-    // watermark is what makes an at-least-once redelivery a no-op — an
-    // unstamped empty batch re-applied later, after the owning engine
-    // added matching rows, would mutate rows the CDC stream never owned.
-    if (updatedCount + deletedCount + insertedCount == 0 && txn.isEmpty) {
-      frames.foreach(_.unpersist())
-      return (snap0.version, 0L, 0L, 0L)
-    }
+    val target =
+      if (candidates.nonEmpty)
+        DeltaImport.readFilesWithPositions(spark, snap0, candidates, FileC, PosC)
+      else spark.createDataFrame(
+        spark.sparkContext.emptyRDD[org.apache.spark.sql.Row],
+        StructType(fields ++ Seq(StructField(FileC, StringType),
+          StructField(PosC, LongType))))
+    val plan = new MergePlan(target, snap0.schema, srcNonNull, keyNames, onExtra,
+      matched, notMatched, notMatchedBySource, targetAlias, sourceAlias, genSpecs,
+      idSpecs.map { case (n, (_, step, _)) => n -> step }, idHwm, positioned = true)
+    try {
+      val updatedC = plan.claimed && plan.keep
+      val deletedC = plan.claimed && !plan.keep
+      val insertedC = !plan.tPresent && plan.keep
+      val counts = plan.joined.agg(count(when(updatedC, true)),
+        count(when(deletedC, true)), count(when(insertedC, true))).head()
+      val (updatedCount, deletedCount, insertedCount) =
+        (counts.getLong(0), counts.getLong(1), counts.getLong(2))
+      // Zero claims and no txn to record → nothing to commit. With a txn
+      // stamp the merge MUST still commit a (txn-only) version: the
+      // watermark is what makes an at-least-once redelivery a no-op — an
+      // unstamped empty batch re-applied later, after the owning engine
+      // added matching rows, would mutate rows the CDC stream never owned.
+      if (updatedCount + deletedCount + insertedCount == 0 && txn.isEmpty)
+        return (snap0.version, 0L, 0L, 0L)
 
-    // Claimed target rows, as (file, position).
-    val claimedTargets =
-      if (updatedCount + deletedCount == 0) None
-      else (matchedFrame.toSeq ++ bySourceFrame.toSeq).map(f =>
-        f.filter(col(ClaimC) >= 0)
-          .select(col(s"$targetAlias.`$FileC`").as(FileC),
-            col(s"$targetAlias.`$PosC`").as(PosC)))
-        .reduceOption(_ unionByName _)
-    def tgtCols(frame: org.apache.spark.sql.DataFrame) =
-      frame.select(fields.toIndexedSeq.map(f =>
-        col(s"$targetAlias.`${f.name}`").as(f.name)): _*)
-    // The claimed rows' old images for the change feed: update
-    // pre-images and delete rows of each target branch that claimed any.
-    val removed = Seq((matchedFrame, matched, false, mUpd),
-        (bySourceFrame, notMatchedBySource, false, bUpd),
-        (matchedFrame, matched, true, mDel),
-        (bySourceFrame, notMatchedBySource, true, bDel))
-      .collect { case (Some(f), clauses, deletes, n) if n > 0 =>
-        val idxs = clauses.zipWithIndex.collect {
-          case (c, i) if c.isInstanceOf[MergeClause.Delete] == deletes => i }
-        (if (deletes) "delete" else "update_preimage") ->
-          tgtCols(f.filter(col(ClaimC).isin(idxs.map(Int.box): _*)))
-      }
+      // Claimed target rows as (file, position), their old images for the
+      // change feed, and the new images (update post-images, inserts) —
+      // each only where some row takes it, so no empty part file stages.
+      val claimedTargets = Option.when(updatedCount + deletedCount > 0)(
+        plan.joined.filter(plan.claimed).select(
+          col(s"$targetAlias.`$FileC`").as(FileC), col(s"$targetAlias.`$PosC`").as(PosC)))
+      val removed = Seq(("update_preimage", updatedCount, updatedC),
+          ("delete", deletedCount, deletedC))
+        .collect { case (ct, n, which) if n > 0 => ct -> plan.targetRows(which) }
+      val images = Seq(("u", "update_postimage", updatedCount, plan.claimed),
+          ("i", "insert", insertedCount, !plan.tPresent))
+        .collect { case (kind, ct, n, which) if n > 0 => (kind, ct, plan.rows(which)) }
 
-    // New images, projected onto the target schema: matched UPDATE
-    // claims (assignments over both aliases), by-source UPDATE claims
-    // (target alias only), and claimed inserts. Generated columns
-    // RECOMPUTE over the projected (post-assignment) image — the
-    // materialized invariant keeps holding whatever the clause wrote;
-    // identity columns on update images keep the TARGET value
-    // (engine-maintained, never source-overwritten).
-    def targetImage(frame: org.apache.spark.sql.DataFrame,
-        clauses: Seq[MergeClause], withSource: Boolean)
-        : Option[org.apache.spark.sql.DataFrame] = {
-      val updates = clauses.zipWithIndex.collect {
-        case (MergeClause.UpdateAll(_), i) => (i, None)
-        case (MergeClause.Update(as, _), i) => (i, Some(as))
-      }
-      if (updates.isEmpty) return None
-      Some(withGenerated(updates.map { case (i, as) =>
-        frame.filter(col(ClaimC) === i).select(fields.toIndexedSeq.map { f =>
-          val tcol = col(s"$targetAlias.`${f.name}`")
-          val v = as match {
-            case Some(assign) => assign.collectFirst {
-              case (k, vc) if k.equalsIgnoreCase(f.name) => vc
-            }.getOrElse(tcol)
-            case None => // UPDATE SET * — source value when present
-              if (withSource && !engineMaintained.contains(f.name) &&
-                  source.columns.exists(_.equalsIgnoreCase(f.name)))
-                col(s"$sourceAlias.`${f.name}`")
-              else tcol
-          }
-          v.cast(f.dataType).as(f.name)
-        }: _*)
-      }.reduce(_ unionByName _), fields))
-    }
-    def insertImage(frame: org.apache.spark.sql.DataFrame,
-        clauses: Seq[MergeClause]): Option[org.apache.spark.sql.DataFrame] = {
-      val inserts = clauses.zipWithIndex.collect {
-        case (MergeClause.InsertAll(_), i) => (i, None)
-        case (MergeClause.Insert(as, _), i) => (i, Some(as))
-      }
-      if (inserts.isEmpty) return None
-      // INSERT ALL riding a source-provided identity value needs the
-      // schema's explicit-insert opt-in (as foreign appends require).
-      idSpecs.foreach { case (n, (_, _, allowExplicit)) =>
-        require(allowExplicit ||
-          !(inserts.exists(_._2.isEmpty) &&
-            source.columns.exists(_.equalsIgnoreCase(n))),
-          s"merge into $tablePath: identity column $n is GENERATED " +
-            "ALWAYS — drop it from the source and let the merge assign ids")
-      }
-      val projected = inserts.map { case (i, as) =>
-        frame.filter(col(ClaimC) === i).select(fields.toIndexedSeq.map { f =>
-          val v = as match {
-            case Some(assign) => assign.collectFirst {
-              case (k, vc) if k.equalsIgnoreCase(f.name) => vc
-            }.getOrElse(lit(null))
-            case None =>
-              if (source.columns.exists(_.equalsIgnoreCase(f.name)) &&
-                  !genSpecs.contains(f.name))
-                col(s"$sourceAlias.`${f.name}`")
-              else lit(null)
-          }
-          v.cast(f.dataType).as(f.name)
-        }: _*)
-      }.reduce(_ unionByName _)
-      // Identity fill ONCE over the unioned insert frame (ids must be
-      // unique across all insert clauses): omitted/null values allocate
-      // hwm + step·(1 + task-block counter), explicit values ride.
-      val filled = idSpecs.foldLeft(withGenerated(projected, fields)) {
-        case (d, (name, (_, step, _))) =>
-          import org.apache.spark.sql.functions.monotonically_increasing_id
-          val assign = lit(idHwm(name)) +
-            lit(step) * (monotonically_increasing_id() + lit(1L))
-          d.withColumn(name,
-            when(col(s"`$name`").isNotNull, col(s"`$name`").cast("long"))
-              .otherwise(assign))
-      }
-      Some(filled)
-    }
-    // Images stage under KIND subdirs (m = matched updates, b = by-source
-    // updates, i = inserts); branches whose clauses claimed zero rows
-    // stage nothing (no empty part files in the commit).
-    val images = Seq(
-        ("m", "update_postimage", if (mUpd > 0)
-          matchedFrame.flatMap(targetImage(_, matched, withSource = true))
-        else None),
-        ("b", "update_postimage", if (bUpd > 0)
-          bySourceFrame.flatMap(targetImage(_, notMatchedBySource,
-            withSource = false))
-        else None),
-        ("i", "insert", if (insertedCount > 0)
-          notMatchedFrame.flatMap(insertImage(_, notMatched))
-        else None))
-      .collect { case (kind, changeType, Some(df)) => (kind, changeType, df) }
-
-    // A rival blind append carrying any of the source's keys conflicts
-    // too: a retried merge would insert a key the rival just appended,
-    // leaving duplicates. Unbounded keys — and by-source clauses, which
-    // read the whole target — conflict with ANY rival add.
-    val (v, applied) = writeRowLevel(tx, snap0, candidates, claimedTargets,
-      removed, images, keysBound, gate, "merge",
-      s => Map("numTargetRowsUpdated" -> updatedCount,
-        "numTargetRowsDeleted" -> deletedCount,
-        "numTargetRowsInserted" -> insertedCount,
-        "numTargetFilesAdded" -> s.filesAdded,
-        "numDeletionVectorsAdded" -> s.dvsAdded),
-      txn, advancedHwms(_, idSpecs, idHwm))
-    frames.foreach(_.unpersist())
-    if (applied) (v, updatedCount, deletedCount, insertedCount)
-    else (v, 0L, 0L, 0L)
+      // A rival blind append carrying any of the source's keys conflicts
+      // too: a retried merge would insert a key the rival just appended,
+      // leaving duplicates. Unbounded keys — and by-source clauses, which
+      // read the whole target — conflict with ANY rival add.
+      val (v, applied) = writeRowLevel(tx, snap0, candidates, claimedTargets,
+        removed, images, keysBound, gate, "merge",
+        s => Map("numTargetRowsUpdated" -> updatedCount,
+          "numTargetRowsDeleted" -> deletedCount,
+          "numTargetRowsInserted" -> insertedCount,
+          "numTargetFilesAdded" -> s.filesAdded,
+          "numDeletionVectorsAdded" -> s.dvsAdded),
+        txn, advancedHwms(_, idSpecs, idHwm))
+      if (applied) (v, updatedCount, deletedCount, insertedCount)
+      else (v, 0L, 0L, 0L)
+    } finally plan.release()
   }
 
   /** Generated columns of a foreign schema: name → its
@@ -2535,16 +2375,6 @@ object DeltaExport {
       }
     }.toMap
   }
-
-  /** `df` (on a foreign schema of `fields`) with every generated column
-    * recomputed from its `delta.generationExpression` — the invariant an
-    * update or insert image keeps whatever its assignments wrote. */
-  private def withGenerated(df: org.apache.spark.sql.DataFrame,
-      fields: Array[StructField]): org.apache.spark.sql.DataFrame =
-    generatedSpecs(fields).foldLeft(df) { case (d, (name, sql)) =>
-      d.withColumn(name, org.apache.spark.sql.functions.expr(sql)
-        .cast(fields.find(_.name == name).get.dataType))
-    }
 
   /** The file spelling and row position columns a foreign row-level verb
     * reads its target rows with ([[DeltaImport.readFilesWithPositions]]). */
@@ -2742,7 +2572,7 @@ object DeltaExport {
       val newHwms =
         if (images.isEmpty) Map.empty[String, Long] else hwms(stagedLogical())
 
-      // CDF: old rows from the claim frames; post-image/insert rows restate
+      // CDF: old rows as the verb read them; post-image/insert rows restate
       // the STAGED bytes (already physical) — bit-identical to the
       // committed rows by construction.
       val cdfOn = flagOn(snap0.configuration, "delta.enableChangeDataFeed")
@@ -2891,11 +2721,11 @@ object DeltaExport {
       // generated columns recomputed over the POST-assignment row, identity
       // values riding verbatim (an update creates no new row).
       val images = assignments.toSeq.map(as => ("u", "update_postimage",
-        withGenerated(old.select(fields.toIndexedSeq.map { f =>
+        graft.table.MergePlan.withGenerated(old.select(fields.toIndexedSeq.map { f =>
           as.collectFirst { case (k, vc) if k.equalsIgnoreCase(f.name) =>
             vc.cast(f.dataType).as(f.name)
           }.getOrElse(col(s"`${f.name}`"))
-        }: _*), fields)))
+        }: _*), generatedSpecs(fields), snap0.schema)))
       val (v, _) = writeRowLevel(tx, snap0, candidates, Some(matched),
         Seq((if (assignments.isEmpty) "delete" else "update_preimage") -> old),
         images, Some(predicate), gate,

@@ -40,35 +40,6 @@ import org.apache.spark.sql.types.{DataType, StructType}
   * single-writer per table (one streaming query per table,
   * spark_streaming.py:461-463); this layer is safe beyond that.
   */
-/** One row-level clause of a general MERGE ([[GraftTable.mergeClauses]]) —
-  * Delta's `WHEN MATCHED [AND cond] THEN …` / `WHEN NOT MATCHED …` /
-  * `WHEN NOT MATCHED BY SOURCE …` family. Clause conditions and assignment
-  * values are arbitrary [[Column]]s over the two join sides (qualify with
-  * the target/source aliases passed to `mergeClauses`); within one branch,
-  * clauses are evaluated in order and the FIRST whose condition holds
-  * applies to the row (Delta's contract). */
-sealed trait MergeClause { def condition: Option[Column] }
-object MergeClause {
-  /** `UPDATE SET *` — every column the source carries takes the source
-    * value; target-only columns keep their value. Matched branch only. */
-  case class UpdateAll(condition: Option[Column] = None) extends MergeClause
-  /** `UPDATE SET c = expr, …` — explicit assignments (keys are target
-    * column names, case-insensitive); unassigned columns keep the target
-    * value. Matched and not-matched-by-source branches. */
-  case class Update(assignments: Map[String, Column],
-      condition: Option[Column] = None) extends MergeClause
-  /** `DELETE` — the target row leaves the snapshot. Matched and
-    * not-matched-by-source branches. */
-  case class Delete(condition: Option[Column] = None) extends MergeClause
-  /** `INSERT *` — source values for source columns, null for target-only
-    * columns. Not-matched branch only. */
-  case class InsertAll(condition: Option[Column] = None) extends MergeClause
-  /** `INSERT (c, …) VALUES (expr, …)` — explicit column list; unassigned
-    * columns insert null. Not-matched branch only. */
-  case class Insert(assignments: Map[String, Column],
-      condition: Option[Column] = None) extends MergeClause
-}
-
 final class GraftTable private (
     val spark: SparkSession,
     val root: String) {
@@ -2114,8 +2085,8 @@ final class GraftTable private (
     * reachable from sane start/step: 32 partitions × 2^33 block stride per
     * append) fall back to one max() scan for correctness. */
   private def identityHwmUpdates(dirName: String, meta: DirMeta,
-      specs: Map[String, (Long, Long)], hwm: Map[String, Long]): Map[String, String] =
-    specs.keys.flatMap { n =>
+      hwm: Map[String, Long]): Map[String, String] =
+    hwm.keys.flatMap { n =>
       val exactLimit = 1L << 52
       val written: Option[Long] = meta.stats.get(n).map(_._2) match {
         case Some(mx) if math.abs(mx) < exactLimit => Some(mx.toLong)
@@ -2129,13 +2100,13 @@ final class GraftTable private (
 
   /** Shared write-path preparation for every row-adding operation:
     * generated columns computed/validated, identity columns filled.
-    * Returns the prepared frame plus the identity specs and the hwm base
-    * used (the commit must persist [[identityHwmUpdates]] against them). */
+    * Returns the prepared frame plus the identity hwm base used (the
+    * commit must persist [[identityHwmUpdates]] against it). */
   private def prepareWrite(df: DataFrame, props: Map[String, String], op: String)
-      : (DataFrame, Map[String, (Long, Long)], Map[String, Long]) = {
+      : (DataFrame, Map[String, Long]) = {
     val specs = identitySpecs(props)
     val hwm = identityHwms(props, specs)
-    (fillIdentity(applyGenerated(df, props, op), specs, hwm), specs, hwm)
+    (fillIdentity(applyGenerated(df, props, op), specs, hwm), hwm)
   }
 
   private def appendInternal(df: DataFrame, txn: Option[(String, Long)]): Option[Commit] =
@@ -2212,7 +2183,7 @@ final class GraftTable private (
         // carries the earlier dirs' stats forward in the head commit.
         a.head.dirStats + (dir -> meta.stats),
         properties = a.head.properties ++
-          identityHwmUpdates(dir, meta, idSpecs, idHwm),
+          identityHwmUpdates(dir, meta, idHwm),
         dvDirs = a.head.dvDirs,
         copiedFiles = copiedFiles,
         dirNulls = a.head.dirNulls + (dir -> meta.nulls)))
@@ -2307,7 +2278,7 @@ final class GraftTable private (
       // column specs): folded in before preparation so the very first write
       // already computes/assigns them.
       val props0 = prev.properties ++ extraProps
-      val (prepared, idSpecs, idHwm) = prepareWrite(df, props0, "overwrite")
+      val (prepared, idHwm) = prepareWrite(df, props0, "overwrite")
       enforceConstraints(prepared, prev.properties, "WRITE")
       val dir = writeData(tx, prepared, prev.version + 1, partitionBy)
       val meta = metaFor(dir)
@@ -2322,7 +2293,7 @@ final class GraftTable private (
         // Every commit that writes a dir records its skipping stats — a
         // CREATE-then-append table would otherwise carry one forever-unprunable dir.
         dirStats = dirs.map(_ -> meta.stats).toMap,
-        properties = props0 ++ identityHwmUpdates(dir, meta, idSpecs, idHwm),
+        properties = props0 ++ identityHwmUpdates(dir, meta, idHwm),
         dirNulls = dirs.map(_ -> meta.nulls).toMap))
     }.get
   }
@@ -2590,22 +2561,26 @@ final class GraftTable private (
       notMatchedBySource: Seq[MergeClause] = Nil,
       targetAlias: String = "t", sourceAlias: String = "s"): Commit =
     this.synchronized {
-      requireMergeShape(keys, matched, notMatched, notMatchedBySource,
+      MergePlan.requireShape(keys, matched, notMatched, notMatchedBySource,
         targetAlias, sourceAlias)
       // Insert-only merges append rows and stay legal on an append-only
       // table; any matched / not-matched-by-source clause mutates.
       val mutates = matched.nonEmpty || notMatchedBySource.nonEmpty
       val tx = new TableTxn(this, s"MERGE into $root", Option.when(mutates)("MERGE"))
-      tx.commit(ifAbsent = throw new NoSuchElementException(
+      val plans = scala.collection.mutable.ArrayBuffer.empty[MergePlan]
+      try tx.commit(ifAbsent = throw new NoSuchElementException(
           s"merge into non-existent table $root — create it first")) { prev =>
         val plan = mergePlan(prev, source, keys, onExtra, matched, notMatched,
           notMatchedBySource, targetAlias, sourceAlias, positioned = false)
-        rewriteStaged(tx, prev, "MERGE", plan.rows(lit(true)), Some(plan.changes),
+        plans += plan
+        val rows = plan.rows(lit(true))
+        enforceConstraints(rows, prev.properties, "MERGE")
+        rewriteStaged(tx, prev, "MERGE", rows, Some(plan.changes),
           mergeMetrics) { (c, dir, meta) =>
           c.copy(schemaJson = plan.schema.json, properties = c.properties ++
-            identityHwmUpdates(dir, meta, plan.idSpecs, plan.idHwm))
+            identityHwmUpdates(dir, meta, plan.idHwm))
         }
-      }.get
+      }.get finally plans.foreach(_.release())
     }
 
   /** [[mergeClausesOn]] without rewriting the snapshot: the MERGE
@@ -2637,10 +2612,10 @@ final class GraftTable private (
       notMatched: Seq[MergeClause] = Nil,
       targetAlias: String = "t", sourceAlias: String = "s"): Commit =
     this.synchronized {
-      requireMergeShape(keys, matched, notMatched, Nil, targetAlias, sourceAlias)
+      MergePlan.requireShape(keys, matched, notMatched, Nil, targetAlias, sourceAlias)
       val what = s"positional MERGE into $root"
       val tx = new TableTxn(this, what, Option.when(matched.nonEmpty)("MERGE"))
-      val joins = scala.collection.mutable.ArrayBuffer.empty[DataFrame]
+      val plans = scala.collection.mutable.ArrayBuffer.empty[MergePlan]
       var read = Option.empty[Commit]
       val c = try tx.commit(ifAbsent = throw new NoSuchElementException(
           s"merge into non-existent table $root — create it first")) { snap =>
@@ -2648,14 +2623,15 @@ final class GraftTable private (
         val v = snap.version + 1
         val plan = mergePlan(snap, source, keys, onExtra, matched, notMatched, Nil,
           targetAlias, sourceAlias, positioned = true)
-        joins += plan.joined
+        plans += plan
         val dv = tx.stage(dvDirName(v))
         plan.joined.filter(plan.claimed).select(
           col(s"$targetAlias.$DvFileCol").as("file"),
           col(s"$targetAlias.$DvPosCol").as("pos"))
           .write.mode("errorifexists").parquet(new Path(root, dv).toString)
-        val data = writeData(tx, plan.rows(!plan.tPresent || plan.claimed),
-          v, snap.partitionCols)
+        val rows = plan.rows(!plan.tPresent || plan.claimed)
+        enforceConstraints(rows, snap.properties, "MERGE")
+        val data = writeData(tx, rows, v, snap.partitionCols)
         val (marked, added) = (countDir(dv), countDir(data))
         if (marked == 0L && added == 0L) TableTxn.Unchanged
         else {
@@ -2675,41 +2651,15 @@ final class GraftTable private (
                 dirStats = h.dirStats ++ meta.map { case (d, m) => d -> m.stats },
                 changesDir = a.changesDir,
                 properties = h.properties ++ meta.flatMap { case (d, m) =>
-                  identityHwmUpdates(d, m, plan.idSpecs, plan.idHwm) },
+                  identityHwmUpdates(d, m, plan.idHwm) },
                 dvDirs = h.dvDirs ++ dvs,
                 dirNulls = h.dirNulls ++ meta.map { case (d, m) => d -> m.nulls })
             },
             changes = Some(plan.changes))
         }
-      } finally joins.foreach(_.unpersist())
+      } finally plans.foreach(_.release())
       c.getOrElse(read.get)
     }
-
-  /** A MERGE's clause kinds per branch, its keys and its aliases. */
-  private def requireMergeShape(keys: Seq[String], matched: Seq[MergeClause],
-      notMatched: Seq[MergeClause], notMatchedBySource: Seq[MergeClause],
-      targetAlias: String, sourceAlias: String): Unit = {
-    import MergeClause._
-    require(keys.nonEmpty, "MERGE needs at least one equi key")
-    matched.foreach {
-      case _: InsertAll | _: Insert => throw new IllegalArgumentException(
-        "MERGE: INSERT is not valid in the WHEN MATCHED branch")
-      case _ => ()
-    }
-    notMatched.foreach {
-      case _: InsertAll | _: Insert => ()
-      case other => throw new IllegalArgumentException(
-        s"MERGE: only INSERT is valid in the WHEN NOT MATCHED branch, got $other")
-    }
-    notMatchedBySource.foreach {
-      case _: Update | _: Delete => ()
-      case other => throw new IllegalArgumentException(
-        "MERGE: only UPDATE SET …/DELETE are valid in the WHEN NOT MATCHED " +
-          s"BY SOURCE branch (there is no source row to read), got $other")
-    }
-    require(targetAlias != sourceAlias,
-      s"MERGE target and source aliases must differ, both are '$targetAlias'")
-  }
 
   /** A MERGE commit's row counts, read from its change feed. */
   private def mergeMetrics(a: Attempt): Map[String, Long] = Map(
@@ -2717,202 +2667,40 @@ final class GraftTable private (
     "numTargetRowsUpdated" -> a.changed("update_postimage"),
     "numTargetRowsDeleted" -> a.changed("delete"))
 
-  /** One MERGE's clause algebra over its join of target and source, shared
-    * by the rewrite ([[mergeClausesOn]]) and the positional
-    * ([[mergeClausesPositional]]) write stages, so no clause is evaluated
-    * in two places. `rows(which)` are the post-images of the joined rows
-    * the statement keeps and `which` selects (generated columns
-    * recomputed, identity filled, constraints enforced); `claimed` marks a
-    * target row some matched or not-matched-by-source clause claims;
-    * `changes` are the statement's CDF images.
-    */
-  private final class MergePlan(val schema: StructType, val joined: DataFrame,
-      val tPresent: Column, val claimed: Column, val rows: Column => DataFrame,
-      val changes: DataFrame, val idSpecs: Map[String, (Long, Long)],
-      val idHwm: Map[String, Long])
-
-  /** The [[MergePlan]] of a MERGE into `prev`. A rewrite (`positioned =
-    * false`) full-outer-joins the whole snapshot, so every target row
-    * reaches a branch. A positional plan right-outer-joins the target read
-    * with its row positions ([[readCommitWithPos]]) — a target row no
-    * source row matches is never written, so it need not reach the join's
-    * output — and persists the join, which the caller unpersists. The
-    * join runs at the parallelism its inputs give it (a target too large
-    * to broadcast is shuffled across the shuffle partitions); its output
-    * is source-sized, so it is repartitioned to one partition per 128 MB
-    * of the source's estimated size (at most the shuffle partitions, since
-    * a source with no statistics estimates as unbounded) before it is
-    * cached, and each of the three writes lands as that many files. A
-    * coalesce there would pull the join itself into that many tasks. */
+  /** The [[MergePlan]] of a MERGE into `prev`. Star clauses (`UPDATE SET
+    * *` / `INSERT *`) adopt new source columns (M6 additive evolution,
+    * Delta's autoMerge scoping); explicit assignments bind to the existing
+    * schema only. Dedup is case-INSENSITIVE — as the plan's assignment
+    * resolution and Delta's — so a source column differing only in case
+    * binds to the existing target field rather than appending a second
+    * column to the evolved schema. A rewrite reads the snapshot; a
+    * positional plan reads it with its row positions
+    * ([[readCommitWithPos]]). */
   private def mergePlan(prev: Commit, source: DataFrame, keys: Seq[String],
       onExtra: Option[Column], matched: Seq[MergeClause],
       notMatched: Seq[MergeClause], notMatchedBySource: Seq[MergeClause],
       targetAlias: String, sourceAlias: String, positioned: Boolean): MergePlan = {
     import MergeClause._
+    import org.apache.spark.sql.types.{LongType, StringType, StructField}
     val targetSchema = DataType.fromJson(prev.schemaJson).asInstanceOf[StructType]
     val hasStar = (matched ++ notMatched).exists {
       case _: UpdateAll | _: InsertAll => true; case _ => false
     }
-    // Star clauses adopt new source columns (M6 additive evolution);
-    // explicit assignments bind to the existing target schema only.
-    // Dedup is case-INSENSITIVE — mirroring canon()'s assignment
-    // resolution below and Delta's — so a source column differing only
-    // in case binds to the existing target field rather than appending
-    // a second column to the evolved schema.
     val mergedSchema =
       if (hasStar) StructType(targetSchema.fields ++
         source.schema.fields.filterNot(f =>
           targetSchema.fieldNames.exists(_.equalsIgnoreCase(f.name))))
       else targetSchema
     if (hasStar) enforceCompatibleTypes(source.schema, mergedSchema, "merge")
-    val sourceCols = source.columns.map(_.toLowerCase).toSet
-    val fieldOf = mergedSchema.fields.map(f => f.name -> f).toMap
-    // Assignment keys resolve case-insensitively against the schema.
-    def canon(n: String): String = fieldOf.getOrElse(n,
-      mergedSchema.fields.find(_.name.equalsIgnoreCase(n)).getOrElse(
-        throw new IllegalArgumentException(
-          s"MERGE assignment target '$n' is not a column of the table " +
-            s"(columns: ${mergedSchema.fieldNames.mkString(", ")})"))).name
-    def canonical(cl: MergeClause): MergeClause = cl match {
-      case Update(as, c) => Update(as.map { case (k, ve) => canon(k) -> ve }, c)
-      case Insert(as, c) => Insert(as.map { case (k, ve) => canon(k) -> ve }, c)
-      case other => other
-    }
-    val (mCl, iCl, bCl) = (matched.map(canonical), notMatched.map(canonical),
-      notMatchedBySource.map(canonical))
-
-    // Side-presence markers survive the outer join where a null business
-    // key would lie about its side (a target row with a null key is
-    // present, merely unmatchable).
-    val tp = "__graft_t_present"; val sp = "__graft_s_present"
     val target =
       if (!positioned) alignTo(readCommit(prev), mergedSchema)
-      else alignTo(readCommitWithPos(prev), StructType(mergedSchema.fields ++ Seq(
-        org.apache.spark.sql.types.StructField(DvFileCol,
-          org.apache.spark.sql.types.StringType),
-        org.apache.spark.sql.types.StructField(DvPosCol,
-          org.apache.spark.sql.types.LongType))))
-    val t = target.withColumn(tp, lit(true)).alias(targetAlias)
-    // A null source key can never equi-match and Delta's NOT MATCHED
-    // branch still sees it (vacuously unmatched) — keep such rows.
-    val s = source.withColumn(sp, lit(true)).alias(sourceAlias)
-    val equi = keys.map(k =>
-      col(s"$targetAlias.$k") === col(s"$sourceAlias.$k")).reduce(_ && _)
-    val onCond = onExtra.map(equi && _).getOrElse(equi)
-    val joined =
-      if (!positioned) t.join(s, onCond, "full_outer")
-      else {
-        val est = source.queryExecution.optimizedPlan.stats.sizeInBytes
-        val n = (est / (128L * 1024 * 1024) + 1)
-          .min(BigInt(spark.sessionState.conf.numShufflePartitions)).toInt
-        t.join(s, onCond, "right_outer").repartition(n).persist()
-      }
-    val tPresent = col(s"$targetAlias.$tp").isNotNull
-    val sPresent = col(s"$sourceAlias.$sp").isNotNull
-
-    def condOf(cl: MergeClause): Column =
-      cl.condition.map(c => coalesce(c, lit(false))).getOrElse(lit(true))
-    // First-true clause index per branch; -1 = no clause claims the row.
-    def firstIdx(cls: Seq[MergeClause]): Column =
-      cls.zipWithIndex.foldRight(lit(-1): Column) { case ((cl, i), els) =>
-        when(condOf(cl), lit(i)).otherwise(els)
-      }
-    val mIdx = firstIdx(mCl); val iIdx = firstIdx(iCl); val bIdx = firstIdx(bCl)
-
-    // The value column `c` takes under clause `cl` (post-image).
-    def clauseVal(cl: MergeClause, c: String): Column = {
-      val f = fieldOf(c)
-      cl match {
-        // Source-column presence checks are case-insensitive; the alias
-        // reference itself resolves case-insensitively in analysis.
-        case _: UpdateAll =>
-          if (sourceCols.contains(c.toLowerCase))
-            col(s"$sourceAlias.$c").cast(f.dataType)
-          else col(s"$targetAlias.$c")
-        case Update(as, _) => as.get(c).map(_.cast(f.dataType))
-          .getOrElse(col(s"$targetAlias.$c"))
-        case _: InsertAll =>
-          if (sourceCols.contains(c.toLowerCase))
-            col(s"$sourceAlias.$c").cast(f.dataType)
-          else lit(null).cast(f.dataType)
-        case Insert(as, _) => as.get(c).map(_.cast(f.dataType))
-          .getOrElse(lit(null).cast(f.dataType))
-        case _: Delete => lit(null).cast(f.dataType) // row never materializes
-      }
-    }
-    def branchVal(cls: Seq[MergeClause], idx: Column, default: Column,
-        c: String): Column =
-      cls.zipWithIndex.foldRight(default) { case ((cl, i), els) =>
-        cl match {
-          case _: Delete => els // deleted rows are filtered out below
-          case _ => when(idx === i, clauseVal(cl, c)).otherwise(els)
-        }
-      }
-    def outVal(c: String): Column =
-      when(tPresent && sPresent, branchVal(mCl, mIdx, col(s"$targetAlias.$c"), c))
-        .when(tPresent && !sPresent, branchVal(bCl, bIdx, col(s"$targetAlias.$c"), c))
-        .otherwise(branchVal(iCl, iIdx, lit(null).cast(fieldOf(c).dataType), c))
-        .as(c)
-    def deleteIdxs(cls: Seq[MergeClause]): Seq[Int] =
-      cls.zipWithIndex.collect { case (_: Delete, i) => i }
-    def isDeleted(cls: Seq[MergeClause], idx: Column): Column =
-      deleteIdxs(cls).map(idx === _).reduceOption(_ || _).getOrElse(lit(false))
-    val keep =
-      when(tPresent && sPresent, !isDeleted(mCl, mIdx))
-        .when(tPresent && !sPresent, !isDeleted(bCl, bIdx))
-        .otherwise(iIdx >= 0) // source-only rows exist only via INSERT
-    val claimed = tPresent && when(sPresent, mIdx >= 0).otherwise(bIdx >= 0)
-
-    val outCols = mergedSchema.fieldNames.toSeq
-    val genSpecs = generatedSpecs(prev.properties)
+      else alignTo(readCommitWithPos(prev), StructType(mergedSchema.fields ++
+        Seq(StructField(DvFileCol, StringType), StructField(DvPosCol, LongType))))
     val idSpecs = identitySpecs(prev.properties)
-    val idHwm = identityHwms(prev.properties, idSpecs)
-    def rows(which: Column): DataFrame = {
-      val out0 = joined.filter(keep && which).select(outCols.map(outVal): _*)
-      val regenerated = genSpecs.foldLeft(out0) { case (d, (n, e)) =>
-        d.withColumn(n, expr(e)) }
-      val out = fillIdentity(regenerated, idSpecs, idHwm)
-      enforceConstraints(out, prev.properties, "MERGE")
-      out
-    }
-
-    // CDF: one pass over the same join; unmatched/unclaimed rows yield a
-    // null array which explode drops.
-    def img(cl: Option[MergeClause], side: String, ct: String): Column = {
-      val cols = cl match {
-        case Some(c) => outCols.map(n => clauseVal(c, n).as(n))
-        case None => outCols.map(n => col(s"$side.$n").as(n))
-      }
-      struct(cols :+ lit(ct).as("_change_type"): _*)
-    }
-    def branchChanges(cls: Seq[MergeClause], idx: Column,
-        guard: Column): Seq[(Column, Column)] =
-      cls.zipWithIndex.map { case (cl, i) =>
-        val hit = guard && idx === i
-        cl match {
-          case _: Delete => hit -> array(img(None, targetAlias, "delete"))
-          case _: Insert | _: InsertAll =>
-            hit -> array(img(Some(cl), sourceAlias, "insert"))
-          case _ => hit -> array(
-            img(None, targetAlias, "update_preimage"),
-            img(Some(cl), targetAlias, "update_postimage"))
-        }
-      }
-    val branches =
-      branchChanges(mCl, mIdx, tPresent && sPresent) ++
-        branchChanges(bCl, bIdx, tPresent && !sPresent) ++
-        branchChanges(iCl, iIdx, !tPresent && sPresent)
-    val changeArr = branches.foldRight(lit(null).cast(
-      org.apache.spark.sql.types.ArrayType(StructType(
-        mergedSchema.fields :+ org.apache.spark.sql.types.StructField(
-          "_change_type", org.apache.spark.sql.types.StringType)))): Column) {
-      case ((cond, arr), els) => when(cond, arr).otherwise(els)
-    }
-    val changeRows0 = joined.select(explode(changeArr).as("c")).select("c.*")
-    val changeRows = genSpecs.foldLeft(changeRows0) { case (d, (n, e)) =>
-      d.withColumn(n, expr(e)) }
-    new MergePlan(mergedSchema, joined, tPresent, claimed, rows, changeRows,
-      idSpecs, idHwm)
+    new MergePlan(target, mergedSchema, source, keys, onExtra, matched,
+      notMatched, notMatchedBySource, targetAlias, sourceAlias,
+      generatedSpecs(prev.properties), idSpecs.map { case (n, (_, step)) => n -> step },
+      identityHwms(prev.properties, idSpecs), positioned)
   }
 
   /** DELETE by predicate (M3): left-anti rewrite of
@@ -3658,7 +3446,7 @@ final class GraftTable private (
       require(prev.dvDirs.isEmpty,
         s"replaceWhere on $root requires a clean snapshot — run materializeDeletes() first")
       val schema = DataType.fromJson(prev.schemaJson).asInstanceOf[StructType]
-      val (prepared, idSpecs, idHwm) = prepareWrite(df, prev.properties, "replaceWhere")
+      val (prepared, idHwm) = prepareWrite(df, prev.properties, "replaceWhere")
       enforceCompatibleTypes(prepared.schema, schema, "replaceWhere")
       val aligned = GraftTable.alignTo(prepared, schema)
       val matches = coalesce(predicate, lit(false))
@@ -3674,7 +3462,7 @@ final class GraftTable private (
       rewriteStaged(tx, prev, "REPLACEWHERE", survivors.unionByName(aligned),
         metrics = _ => Map("numRewrittenDirs" -> touched.size.toLong)) { (c, dir, meta) =>
         carrying(c.copy(properties = c.properties ++
-          identityHwmUpdates(dir, meta, idSpecs, idHwm)), prev, untouched)
+          identityHwmUpdates(dir, meta, idHwm)), prev, untouched)
       }
     }.get
   }

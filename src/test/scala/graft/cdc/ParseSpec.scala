@@ -57,17 +57,6 @@ class ParseSpec extends SparkSpec {
     assert(Parse.typedSnapshotRows(audit, "products").count() === 0)
   }
 
-  test("deleteKeyRows extracts primary keys from before_data") {
-    val recs = Seq(
-      CdcFixtures.record("customers", "d", 3, None,
-        Some(CdcFixtures.customerJson(3, "Bob", "B", "bob@x.com")), off = 20),
-      CdcFixtures.record("customers", "c", 4,
-        Some(CdcFixtures.customerJson(4, "Cyd", "C", "cyd@x.com")), off = 21))
-    val audit = Parse.parseDebezium(toDf(recs))
-    val keys = Parse.deleteKeyRows(audit, "customers")
-    assert(keys.as[Long].collect().toSeq === Seq(3L))
-  }
-
   test("opName decodes all Debezium op codes") {
     val df = Seq("c", "u", "d", "r", "x").toDF("op")
       .select(Parse.opName(col("op")).as("name"))

@@ -2,13 +2,18 @@ package graft.table
 
 import scala.util.Random
 
+import org.apache.hadoop.fs.Path
+import org.apache.spark.sql.DataFrame
 import org.apache.spark.sql.functions._
 
 import graft.SparkSpec
+import graft.sources.{DeltaExport, DeltaImport}
 
-/** Model-based randomized check of the general MERGE
-  * ([[GraftTable.mergeClausesOn]], and [[GraftTable.mergeClausesPositional]]
-  * without the NMBS clause): for random target/source states and a
+/** Model-based randomized check of the general MERGE — every writer of
+  * the shared clause algebra: [[GraftTable.mergeClausesOn]],
+  * [[GraftTable.mergeClausesPositional]] (without the NMBS clause) and the
+  * foreign clause merge on DV and DV-less Delta tables. For random
+  * target/source states and a
   * clause set exercising every branch kind, the committed snapshot must
   * equal a row-by-row Scala evaluation of Delta's clause semantics
   * (first-true clause per branch; unclaimed target rows carry, unclaimed
@@ -48,10 +53,63 @@ class MergeClausesModelSpec extends SparkSpec {
     (kept ++ inserted).toSet
   }
 
-  /** Seeds 1–5 through the rewrite (`positional = false`, all five
-    * clauses) or the positional MERGE (the four without NMBS): snapshot
-    * and CDF counts must match the model. */
-  private def checkSeeds(positional: Boolean): Unit = {
+  private type Rows = Set[(Long, String, Double)]
+  /** A MERGE writer under test: applies the clauses to a fresh table at
+    * `root` holding `target` and returns its snapshot and the MERGE's CDF
+    * counts per change type (empty when it published nothing). */
+  private type Writer = (String, DataFrame, DataFrame, Seq[MergeClause],
+    Seq[MergeClause], Seq[MergeClause]) => (Rows, Map[String, Long])
+
+  private def rowsOf(df: DataFrame): Rows = df.collect().map(r =>
+    (r.getAs[Long]("id"), r.getAs[String]("s"), r.getAs[Double]("v"))).toSet
+  private def countsOf(ch: DataFrame): Map[String, Long] =
+    ch.groupBy("_change_type").count().collect()
+      .map(r => r.getString(0) -> r.getLong(1)).toMap
+
+  /** The rewrite ([[GraftTable.mergeClausesOn]]) or the positional MERGE
+    * ([[GraftTable.mergeClausesPositional]], which takes no NMBS clause). */
+  private def native(positional: Boolean): Writer = {
+    (root, target, src, matched, notMatched, bySource) =>
+      val t = GraftTable.create(spark, root, target)
+      val before = t.version
+      if (positional) t.mergeClausesPositional(src, Seq("id"), onExtra = None,
+        matched = matched, notMatched = notMatched)
+      else t.mergeClausesOn(src, Seq("id"), onExtra = None, matched = matched,
+        notMatched = notMatched, notMatchedBySource = bySource)
+      (rowsOf(t.read()),
+        if (t.version == before) Map.empty
+        else countsOf(t.readChanges(t.version, t.version)))
+  }
+
+  /** The foreign clause merge ([[DeltaExport.mergeForeignClauses]]) into a
+    * Delta table graft does not govern: a graft table exported and its own
+    * log retired. With `dv` a deleted sentinel row makes the table
+    * advertise deletion vectors; without, claims take the rewrite
+    * fallback. */
+  private def foreign(dv: Boolean): Writer = {
+    (root, target, src, matched, notMatched, bySource) =>
+      import spark.implicits._
+      val t = GraftTable.create(spark, root,
+        if (dv) target.unionByName(Seq((-1L, "sentinel", 0.0)).toDF("id", "s", "v"))
+        else target)
+      if (dv) t.deletePositional(col("id") === -1L)
+      DeltaExport.exportLog(t)
+      val fs = new Path(root).getFileSystem(spark.sparkContext.hadoopConfiguration)
+      fs.delete(new Path(root, "_graft_log"), true)
+      assert(DeltaImport.snapshot(spark, root).protocol.exists(
+        _.writerFeatures.contains("deletionVectors")) === dv)
+      val before = DeltaImport.latestVersion(spark, root)
+      val (v, _, _, _) = DeltaExport.mergeForeignClauses(spark, root, src, Seq("id"),
+        matched = matched, notMatched = notMatched, notMatchedBySource = bySource)
+      (rowsOf(DeltaImport.read(spark, root)),
+        if (v == before) Map.empty
+        else countsOf(DeltaImport.readChanges(spark, root, v, v)))
+  }
+
+  /** Seeds 1–5 through `writer`, with the NMBS clause when `nmbs` (all
+    * five clauses) or without it (the four the positional MERGE takes):
+    * snapshot and CDF counts must match the model. */
+  private def checkSeeds(name: String, writer: Writer, nmbs: Boolean): Unit = {
     import spark.implicits._
     for (seed <- 1 to 5) {
       val rnd = new Random(seed)
@@ -63,9 +121,6 @@ class MergeClausesModelSpec extends SparkSpec {
       if (target.nonEmpty) {
         val uThresh = rnd.nextInt(100).toDouble
         val dThresh = rnd.nextInt(100).toDouble
-        val root = tmpDir(s"mc-model-$seed")
-        val t = GraftTable.create(spark, root, target.toDF("id", "s", "v"))
-        val src = source.toDF("id", "s", "v", "op")
         val matched = Seq(
           MergeClause.Delete(Some(col("s.op") === "d")),
           MergeClause.Update(Map("v" -> (col("t.v") + col("s.v"))),
@@ -74,45 +129,49 @@ class MergeClausesModelSpec extends SparkSpec {
         val notMatched = Seq(
           MergeClause.Insert(Map("id" -> col("s.id"), "s" -> col("s.s"),
             "v" -> col("s.v")), Some(col("s.op") =!= "d")))
-        val before = t.version
-        if (positional) t.mergeClausesPositional(src, Seq("id"), onExtra = None,
-          matched = matched, notMatched = notMatched)
-        else t.mergeClausesOn(src, Seq("id"), onExtra = None,
-          matched = matched, notMatched = notMatched,
-          notMatchedBySource = Seq(MergeClause.Delete(Some(col("t.v") > dThresh))))
-        val got = t.read().collect()
-          .map(r => (r.getLong(0), r.getString(1), r.getDouble(2))).toSet
-        val want = model(target, source, uThresh, dThresh, nmbs = !positional)
+        val bySource =
+          if (nmbs) Seq(MergeClause.Delete(Some(col("t.v") > dThresh))) else Nil
+        val (got, ch) = writer(tmpDir(s"mc-model-$name-$seed"),
+          target.toDF("id", "s", "v"), source.toDF("id", "s", "v", "op"),
+          matched, notMatched, bySource)
+        val want = model(target, source, uThresh, dThresh, nmbs)
         assert(got === want,
-          s"seed=$seed positional=$positional uThresh=$uThresh dThresh=$dThresh\n" +
+          s"seed=$seed writer=$name uThresh=$uThresh dThresh=$dThresh\n" +
             s"target=$target\nsource=$source\n" +
             s"missing=${want -- got}\nextra=${got -- want}")
         // CDF account: inserts + deletes + update pairs partition the diff
-        val ch =
-          if (t.version == before) Map.empty[String, Long] // nothing published
-          else t.readChanges(t.version, t.version)
-            .groupBy("_change_type").count().collect()
-            .map(r => r.getString(0) -> r.getLong(1)).toMap
         val targetKeys = target.map(_._1).toSet
         val srcByKey = source.map(r => r._1 -> r).toMap
         val expDel = target.count(t0 => srcByKey.get(t0._1).exists(_._4 == "d")) +
-          (if (positional) 0
-          else target.count(t0 => !srcByKey.contains(t0._1) && t0._3 > dThresh))
+          (if (nmbs) target.count(t0 => !srcByKey.contains(t0._1) && t0._3 > dThresh)
+          else 0)
         val expIns = source.count(s0 => !targetKeys.contains(s0._1) && s0._4 != "d")
         val expUpd = target.count(t0 => srcByKey.get(t0._1).exists(_._4 != "d"))
-        assert(ch.getOrElse("delete", 0L) === expDel.toLong)
-        assert(ch.getOrElse("insert", 0L) === expIns.toLong)
-        assert(ch.getOrElse("update_postimage", 0L) === expUpd.toLong)
-        assert(ch.getOrElse("update_preimage", 0L) === expUpd.toLong)
+        assert(ch.getOrElse("delete", 0L) === expDel.toLong, s"seed=$seed writer=$name")
+        assert(ch.getOrElse("insert", 0L) === expIns.toLong, s"seed=$seed writer=$name")
+        assert(ch.getOrElse("update_postimage", 0L) === expUpd.toLong,
+          s"seed=$seed writer=$name")
+        assert(ch.getOrElse("update_preimage", 0L) === expUpd.toLong,
+          s"seed=$seed writer=$name")
       }
     }
   }
 
   test("random states: engine snapshot equals the Scala clause model") {
-    checkSeeds(positional = false)
+    checkSeeds("rewrite", native(positional = false), nmbs = true)
   }
 
   test("random states: the positional MERGE equals the clause model without NMBS") {
-    checkSeeds(positional = true)
+    checkSeeds("positional", native(positional = true), nmbs = false)
+  }
+
+  test("random states: the foreign clause merge equals the clause model " +
+      "(deletion vectors)") {
+    checkSeeds("foreign-dv", foreign(dv = true), nmbs = true)
+  }
+
+  test("random states: the foreign clause merge equals the clause model " +
+      "(rewrite fallback, no deletion vectors)") {
+    checkSeeds("foreign-nodv", foreign(dv = false), nmbs = true)
   }
 }

@@ -251,4 +251,30 @@ class MergeClausesSpec extends SparkSpec {
     assert(t.readVersion(0).count() === 4)
     assert(t.history().head().getAs[String]("operation") === "MERGE")
   }
+
+  test("identity columns: a MERGE's change feed carries the ids its rows got") {
+    import spark.implicits._
+    for (positional <- Seq(false, true)) {
+      val t = GraftTable.create(spark, tmpDir(s"mc-ident-$positional"),
+        Seq((1L, "a"), (2L, "b")).toDF("k", "s"), Nil,
+        generated = Map.empty, identity = Map("rid" -> (100L, 5L)))
+      val src = Seq((2L, "B"), (3L, "c"), (4L, "d")).toDF("k", "s")
+      val matched = Seq(UpdateAll())
+      val notMatched = Seq(InsertAll())
+      if (positional) t.mergeClausesPositional(src, Seq("k"), None, matched, notMatched)
+      else t.mergeClausesOn(src, Seq("k"), None, matched, notMatched)
+      val rows = t.read().select("k", "rid").as[(Long, Long)].collect().toMap
+      val ch = t.readChanges(t.version, t.version)
+      val fed = ch.filter(col("_change_type").isin("insert", "update_postimage"))
+        .select("k", "rid").as[(Long, java.lang.Long)].collect().toMap
+      assert(fed.keySet === Set(2L, 3L, 4L), s"positional=$positional")
+      fed.foreach { case (k, rid) =>
+        assert(rid === rows(k), s"positional=$positional key $k: feed id $rid, row id ${rows(k)}")
+      }
+      assert(rows.values.toSet.size === 4, s"duplicate ids: $rows")
+      // UPDATE SET * keeps the engine-assigned id of the row it updates
+      assert(ch.filter(col("_change_type") === "update_preimage")
+        .select("rid").as[Long].head() === rows(2L))
+    }
+  }
 }
