@@ -135,13 +135,11 @@ object MutationQueries {
     }
 
   /** Bloom-indexed point lookup (the needle query of a 100 TB key-value
-    * read path): [[graft.table.GraftTable.readPointLookup]] prunes to the
-    * dirs whose sidecar admits the key, the exact predicate refines the
-    * superset. Held to the plain SELECT … WHERE key = k oracle. */
+    * read path): [[graft.table.GraftTable.where]] prunes to the dirs whose
+    * sidecar admits the key, the exact predicate refines the superset.
+    * Held to the plain SELECT … WHERE key = k oracle. */
   def pointLookup(spark: SparkSession, dir: String): DataFrame =
-    bloomOrdersTable(spark, dir)
-      .readPointLookup("o_orderkey", 8L)
-      .filter(col("o_orderkey") === 8L)
+    bloomOrdersTable(spark, dir).where(col("o_orderkey") === 8L)
 
   private def priorityOrdersTable(spark: SparkSession, dir: String): GraftTable =
     cached(dir, "prio-orders") {
@@ -156,12 +154,11 @@ object MutationQueries {
 
   /** STRING-range data skipping: footer string min/max (order-preserving
     * prefix encoding in the dir-stats map) restrict the scan to the dirs
-    * whose priority namespace intersects the queried range; the exact
-    * predicate refines the superset. */
+    * whose priority namespace intersects the queried range
+    * ([[graft.table.GraftTable.where]]); the exact predicate refines the
+    * superset. */
   def priorityRange(spark: SparkSession, dir: String): DataFrame =
-    priorityOrdersTable(spark, dir)
-      .readPrunedString("o_orderpriority", "2", "4")
-      .filter(col("o_orderpriority").between("2", "4"))
+    priorityOrdersTable(spark, dir).where(col("o_orderpriority").between("2", "4"))
 
   /** Predicate-driven scan ([[graft.table.GraftTable.where]]): the caller
     * writes ONE filter expression; the table extracts the pruning plan
@@ -510,15 +507,14 @@ object MutationQueries {
     }
 
   /** Partition pruning + dir-stats data skipping (SURVEY §4, ROADMAP):
-    * key-range predicate served by [[GraftTable.readPruned]] (scans 1 of 4
-    * append dirs — asserted in GraftTableSpec), status predicate served by
-    * hive-partition pruning inside the dirs; the residual filter keeps the
-    * result exact. */
+    * key-range predicate served by [[GraftTable.where]]'s dir-stats
+    * skipping (scans 1 of 4 append dirs), status predicate served by
+    * hive-partition pruning inside the dirs; the exact filter on top keeps
+    * the result exact. */
   def partitionPrune(spark: SparkSession, dir: String): DataFrame = {
     val t = partitionedOrdersTable(spark, dir)
     val q = quarterKey(spark, dir)
-    t.readPruned("o_orderkey", 0.0, q.toDouble)
-      .filter(col("o_orderkey") <= q && col("o_orderstatus") === "F")
+    t.where(col("o_orderkey") <= q && col("o_orderstatus") === "F")
   }
 
   /** Orders rewritten by OPTIMIZE … ZORDER BY (o_custkey, o_totalprice):

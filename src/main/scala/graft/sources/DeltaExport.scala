@@ -1392,11 +1392,9 @@ object DeltaExport {
     //    delta.generationExpression (one column expression, no extra
     //    job); a PROVIDED one is validated value-for-value on the staged
     //    bytes alongside the CHECK constraints;
-    //  - an omitted-or-null identity value is assigned
-    //    hwm + step·(1 + task-block counter) via
-    //    monotonically_increasing_id — per-task range reservation, no
-    //    shuffle, no driver sequence; explicit non-null values require
-    //    delta.identity.allowExplicitInsert.
+    //  - an omitted-or-null identity value is assigned by the native
+    //    writer's own fill (GraftTable.withIdentity); explicit values
+    //    require delta.identity.allowExplicitInsert.
     val genSpecs = generatedSpecs(fields)
     val (idSpecs, idHwm) = identitySpecs(fields)
     val dfGen = genSpecs.foldLeft(df) { case (d, (name, sql)) =>
@@ -1404,19 +1402,10 @@ object DeltaExport {
       else d.withColumn(name, org.apache.spark.sql.functions.expr(sql))
     }
     val dfFilled = idSpecs.foldLeft(dfGen) { case (d, (name, (_, step, allowExplicit))) =>
-      import org.apache.spark.sql.functions.{lit, when, monotonically_increasing_id}
-      val assign = lit(idHwm(name)) +
-        lit(step) * (monotonically_increasing_id() + lit(1L))
-      d.columns.find(_.equalsIgnoreCase(name)) match {
-        case None => d.withColumn(name, assign)
-        case Some(src) =>
-          require(allowExplicit,
-            s"append to $tablePath: identity column $name is GENERATED " +
-              "ALWAYS — omit it and let the writer assign ids")
-          d.withColumn(src,
-            when(col(s"`$src`").isNotNull, col(s"`$src`").cast("long"))
-              .otherwise(assign))
-      }
+      require(allowExplicit || !d.columns.exists(_.equalsIgnoreCase(name)),
+        s"append to $tablePath: identity column $name is GENERATED " +
+          "ALWAYS — omit it and let the writer assign ids")
+      graft.table.GraftTable.withIdentity(d, name, idHwm(name), step)
     }
     val aligned = strictAlign(dfFilled, fields, s"append to $tablePath", "appends")
     // CALLER-provided generated columns must agree with their expression

@@ -302,33 +302,6 @@ final class GraftTable private (
       }
   }
 
-  /** Data-skipping read: the current snapshot restricted to data dirs whose
-    * recorded [min, max] for `colName` intersects [lo, hi] (timestamps in
-    * epoch MICROS, numerics as doubles — the encoding of
-    * [[Commit.dirStats]]). Dirs without stats are conservatively kept, so
-    * the result is a SUPERSET of the matching rows: apply the precise
-    * predicate on top. For a long-running append table (the audit log) a
-    * time-bounded query then scans a handful of dirs instead of years of
-    * history — Delta-style file skipping at dir granularity. */
-  def readPruned(colName: String, lo: Double, hi: Double): DataFrame = {
-    val c = log.latest().getOrElse(throw new NoSuchElementException(s"no commits at $root"))
-    // CHECK constraints are table-WIDE invariants (every committed row of
-    // every dir was validated against them), so a range constraint on this
-    // column stands in where a dir recorded no stats, and a query window
-    // the constraint contradicts prunes the whole scan at planning time —
-    // zero dirs listed, zero files read.
-    val cb = constraintBounds(c).get(colName)
-    val keep =
-      if (cb.exists { case (mn, mx) => mx < lo || mn > hi }) Nil
-      else c.dataDirs.filter { d =>
-        c.dirStats.get(d).flatMap(_.get(colName)).orElse(cb) match {
-          case Some((mn, mx)) => mx >= lo && mn <= hi
-          case None => true
-        }
-      }
-    readCommit(c.copy(dataDirs = keep))
-  }
-
   /** Per-column [min, max] bounds implied by the table's CHECK constraints
     * — simple numeric comparisons (`x > 0`, `100 >= x`, `x = 5`) and
     * conjunctions of them, parsed with Catalyst; anything else contributes
@@ -890,17 +863,6 @@ final class GraftTable private (
   def constraints: Map[String, String] =
     log.latest().map(c => constraintsOf(c.properties)).getOrElse(Map.empty)
 
-  /** [[readPruned]] for STRING columns: the bounds are byte-lexicographic
-    * strings, compared through the same order-preserving prefix encoding
-    * the footer harvest stored ([[GraftTable.stringPrefixValue]]). As with
-    * the numeric form, the result is a SUPERSET — apply the exact
-    * predicate on top. A domain/prefix query (`doc_id` between "b" and
-    * "bz") then skips every dir whose id range lies elsewhere. */
-  def readPrunedString(colName: String, lo: String, hi: String): DataFrame =
-    readPruned(colName,
-      GraftTable.stringPrefixValue(lo.getBytes(java.nio.charset.StandardCharsets.UTF_8)),
-      GraftTable.stringPrefixValue(hi.getBytes(java.nio.charset.StandardCharsets.UTF_8)))
-
   /** Predicate-driven data-skipping scan — the production read path. Walks
     * `predicate`'s Catalyst tree and decides PER DIR whether it could hold
     * a matching row, consulting every skipping source the table maintains:
@@ -910,9 +872,9 @@ final class GraftTable private (
     * equality/IN points. AND/OR recurse (a dir survives an OR iff either
     * branch might match it); any shape the walker doesn't recognize is
     * conservatively kept. The exact predicate is applied on top, so the
-    * result EQUALS `read().filter(predicate)` — callers stop choosing
-    * between [[readPruned]]/[[readPrunedString]]/[[readPointLookup]] by
-    * hand, exactly as Delta's data skipping is transparent to the query. */
+    * result EQUALS `read().filter(predicate)`: the one pruned read, with
+    * no per-source entry point to choose by hand, exactly as Delta's data
+    * skipping is transparent to the query. */
   def where(predicate: Column): DataFrame =
     whereSuperset(predicate).filter(predicate)
 
@@ -1156,7 +1118,9 @@ final class GraftTable private (
   }
 
   /** The pruned-but-unfiltered scan behind [[where]] (test seam: what
-    * files would Spark list). Same SUPERSET contract as [[readPruned]]. */
+    * files would Spark list). A SUPERSET of the matching rows: dirs the
+    * metadata cannot rule out are kept, so apply the exact predicate on
+    * top. */
   private[table] def whereSuperset(predicate: Column): DataFrame =
     whereSupersetOf(
       log.latest().getOrElse(throw new NoSuchElementException(s"no commits at $root")),
@@ -1608,13 +1572,10 @@ final class GraftTable private (
   private[table] case class DirMeta(
       stats: Map[String, (Double, Double)], nulls: Map[String, Long])
 
-  /** Min/max stats of a just-written dir for every numeric/timestamp
-    * column, harvested from the PARQUET FOOTERS the write already produced
-    * — no extra Spark job. Falls back to a small agg scan if footer reading
-    * surprises (exotic types, stats disabled). */
-  private def statsFor(dir: String): Map[String, (Double, Double)] =
-    metaFor(dir).stats
-
+  /** Skipping metadata of a just-written dir, harvested from the PARQUET
+    * FOOTERS the write already produced — no extra Spark job. Falls back to
+    * a small agg scan of min/max if footer reading surprises (exotic
+    * types, stats disabled). */
   private def metaFor(dir: String): DirMeta = {
     val m0 = try metaFromFooters(dir)
       catch { case scala.util.control.NonFatal(_) =>
@@ -1957,29 +1918,18 @@ final class GraftTable private (
     * carrying every mature dir untouched with its stats. At 100 TB the
     * small tail a streaming sink accretes is megabytes; rewriting it
     * costs seconds while blanket OPTIMIZE would rewrite the table.
-    * No-ops (None) when fewer than two dirs qualify, when the dir count
-    * is within `maxDataDirs`, or when deletion vectors exist (run
-    * [[materializeDeletes]] first). Commits rebase over concurrent
-    * appends like every OPTIMIZE. */
+    * No-ops (None) when fewer than two dirs qualify or when the dir count
+    * is within `maxDataDirs`. A [[compact]] selection: dirs carrying
+    * deletion vectors fold too, ids and clustering survive, and the
+    * commit rebases over concurrent appends. */
   def compactSmall(targetFileBytes: Long = 128L * 1024 * 1024,
       smallDirBytes: Long = -1L,
       maxDataDirs: Int = 0): Option[Commit] = this.synchronized {
     val prev = log.latest().getOrElse(return None)
-    if (prev.dvDirs.nonEmpty) return None
     if (prev.dataDirs.size <= maxDataDirs) return None
     val threshold = if (smallDirBytes > 0) smallDirBytes else targetFileBytes
-    val sized = prev.dataDirs.map { d =>
-      d -> fs.getContentSummary(new Path(root, d)).getLength
-    }
-    val small = sized.filter(_._2 < threshold)
-    if (small.size < 2) return None
-    // The shared subset-compaction body: row-tracked tables MATERIALIZE
-    // their ids through the rewrite (a fresh dir would otherwise derive
-    // new bases — silent id churn), and clustered tables
-    // ([[clusterBy]]) Z-order the folded dir on their declaration, so
-    // auto-compaction never un-clusters data.
-    Some(compactDirSubset(prev, small.map(_._1), targetFileBytes,
-      GraftTable.clusterColsOf(prev.properties)))
+    val small = prev.dataDirs.filter(dirBytes(_) < threshold)
+    if (small.size < 2) None else Some(compact(prev, small, targetFileBytes))
   }
 
   /** Highest batch id committed by the given writer, if any. */
@@ -2060,23 +2010,14 @@ final class GraftTable private (
       }
     }
 
-  /** GENERATED BY DEFAULT AS IDENTITY on the write path: rows that omit
-    * the column (or carry NULL) are assigned `hwm + step·(1 + task-unique
-    * counter)` via [[monotonically_increasing_id]] — each task owns a
-    * disjoint id block, so assignment is one pure column expression, no
-    * shuffle, no driver round-trip, exactly the per-task range-reservation
-    * scheme Delta uses. Ids are UNIQUE and ascend across commits; like
-    * Delta's, they are NOT gap-free (unclaimed block remainders are
-    * skipped). Caller-provided non-null values are kept verbatim (BY
-    * DEFAULT semantics — uniqueness against engine-assigned ids is then
-    * the caller's contract, as in Delta). */
+  /** GENERATED BY DEFAULT AS IDENTITY on the write path
+    * ([[GraftTable.withIdentity]]). Caller-provided non-null values are
+    * kept verbatim (BY DEFAULT semantics — uniqueness against
+    * engine-assigned ids is then the caller's contract, as in Delta). */
   private def fillIdentity(df: DataFrame, specs: Map[String, (Long, Long)],
       hwm: Map[String, Long]): DataFrame =
     specs.foldLeft(df) { case (d, (name, (_, step))) =>
-      val assign = lit(hwm(name)) + lit(step) * (monotonically_increasing_id() + lit(1L))
-      if (!d.columns.contains(name)) d.withColumn(name, assign)
-      else d.withColumn(name,
-        when(col(name).isNotNull, col(name).cast("long")).otherwise(assign))
+      GraftTable.withIdentity(d, name, hwm(name), step)
     }
 
   /** High-watermark property updates for a just-written dir, read from the
@@ -2838,31 +2779,14 @@ final class GraftTable private (
     * APPLY (PURGE)`: rewrite just the data dirs whose files carry
     * recorded positions and drop the DVs; every untouched dir is
     * referenced unchanged. On a 100 TB table a point-delete cleanup then
-    * pays for the affected dirs, not a full [[optimize]] rewrite. No-op
-    * (returns the head) when no DVs are present. */
+    * pays for the affected dirs, not a full [[optimize]] rewrite. The
+    * [[compact]] of no dirs beyond the marked ones: row ids survive and
+    * the commit rebases over concurrent appends. No-op (returns the head)
+    * when no DVs are present. */
   def materializeDeletes(targetFileBytes: Long = 128L * 1024 * 1024): Commit =
     this.synchronized {
-      val prev = log.latest().getOrElse(throw new NoSuchElementException(s"no table at $root"))
-      // already clean — nothing to materialize
-      if (prev.dvDirs.isEmpty) return prev
-      val tx = new TableTxn(this, s"OPTIMIZE of $root")
-      tx.commit(Some(prev)) { prev =>
-        // A dir is touched iff some recorded file path lies under it — dir
-        // names carry a uniquifying suffix, so the substring match cannot
-        // cross dirs. DISTINCT file paths (bounded by the table's file
-        // count, not the position count) are collected, never the entries —
-        // a billion-position DV still yields a small file list.
-        val files = spark.read
-          .parquet(prev.dvDirs.map(d => new Path(root, d).toString): _*)
-          .select("file").distinct().collect().map(_.getString(0)).toSeq
-        val touched = prev.dataDirs.filter(d => files.exists(_.contains("/" + d + "/")))
-        val untouched = prev.dataDirs.filterNot(touched.contains)
-        rewriteStaged(tx, prev, "OPTIMIZE",
-          readCommitInternal(prev.copy(dataDirs = touched), withPos = false),
-          metrics = _ => Map("numRewrittenDirs" -> touched.size.toLong)) { (c, _, _) =>
-          carrying(c, prev, untouched)
-        }
-      }.get
+      compact(log.latest().getOrElse(throw new NoSuchElementException(s"no table at $root")),
+        Nil, targetFileBytes)
     }
 
   /** UPDATE without rewriting the snapshot — [[deletePositional]]'s
@@ -2888,11 +2812,11 @@ final class GraftTable private (
     * bloom-filter-index analogue at dir granularity, for the needle query
     * dir-stats ranges cannot help with (a key inside every dir's [min,
     * max] still lives in exactly one dir). One sidecar file per data dir
-    * under `_bloom/<col>/`; [[readPointLookup]] consults them to skip
-    * whole dirs before Spark lists a single file. Dirs created after the
-    * build have no sidecar and are conservatively kept — re-run after
-    * appends/OPTIMIZE as an offline maintenance job, like the index it
-    * is. The re-run is INCREMENTAL: data dirs are immutable, so an
+    * under `_bloom/<col>/`; [[where]] consults them for equality and IN
+    * needles to skip whole dirs before Spark lists a single file. Dirs
+    * created after the build have no sidecar and are conservatively
+    * kept — re-run after appends/OPTIMIZE as an offline maintenance job,
+    * like the index it is. The re-run is INCREMENTAL: data dirs are immutable, so an
     * existing sidecar is never stale and only sidecar-less dirs are
     * scanned — refreshing a 10,000-dir table after one append costs one
     * dir, not 10,000 (`rebuild = true` forces everything, e.g. to apply
@@ -2934,26 +2858,6 @@ final class GraftTable private (
       bloomCache.remove((colName, d))
       ()
     }
-  }
-
-  /** Point-lookup read: the current snapshot restricted to data dirs whose
-    * bloom sidecar (if any) says `value` may be present. A SUPERSET of the
-    * matching rows (bloom false positives and un-indexed dirs are kept):
-    * apply the exact predicate on top, as with [[readPruned]]. Any key
-    * type the `xxhash64` function accepts. */
-  def readPointLookup(colName: String, value: Any): DataFrame = {
-    val c = log.latest().getOrElse(throw new NoSuchElementException(s"no commits at $root"))
-    // same hash the build applied, evaluated driver-side (no job)
-    val hashed = new org.apache.spark.sql.catalyst.expressions.XxHash64(
-      Seq(org.apache.spark.sql.catalyst.expressions.Literal(value)), 42L)
-      .eval(null).asInstanceOf[Long]
-    val keep = c.dataDirs.filter { d =>
-      loadBloom(colName, d) match {
-        case Some(bf) => bf.mightContainLong(hashed)
-        case None => true
-      }
-    }
-    readCommit(c.copy(dataDirs = keep))
   }
 
   /** Sidecars are keyed by the PHYSICAL column name: the indexed hashes
@@ -3099,40 +3003,13 @@ final class GraftTable private (
     * the given numeric columns before the rewrite — Delta's `OPTIMIZE …
     * ZORDER BY`: each output file then covers a small hyper-rectangle of
     * the value space, so parquet min/max stats prune files for predicates
-    * on ANY of the z columns, not just a lead sort key. */
+    * on ANY of the z columns, not just a lead sort key. The [[compact]]
+    * of every dir. */
   def optimize(targetFileBytes: Long = 128L * 1024 * 1024,
       zorderBy: Seq[String] = Nil): Commit = this.synchronized {
     val prev = log.latest().getOrElse(
       throw new NoSuchElementException(s"no table at $root"))
-    // A clustered table ([[clusterBy]]) re-clusters on its declared
-    // columns whenever OPTIMIZE is not given an explicit order — Delta's
-    // liquid-clustering contract (OPTIMIZE on a clustered table clusters).
-    val order =
-      if (zorderBy.nonEmpty) zorderBy else GraftTable.clusterColsOf(prev.properties)
-    optimizeFrom(prev, targetFileBytes, order)
-  }
-
-  /** [[optimize]] from an explicit snapshot (test seam for rebase
-    * scenarios — same contract as the merge-on-read `*From` variants). */
-  private[table] def optimizeFrom(prev: Commit, targetFileBytes: Long,
-      zorderBy: Seq[String]): Commit = {
-    val tx = new TableTxn(this, s"OPTIMIZE of $root")
-    tx.commit(Some(prev)) { prev =>
-      val totalBytes = prev.dataDirs.map { d =>
-        fs.getContentSummary(new Path(root, d)).getLength
-      }.sum
-      val numFiles = math.max(1, math.ceil(totalBytes.toDouble / targetFileBytes).toInt)
-      // A row-tracked compaction MATERIALIZES the ids it read into the
-      // rewritten files (see [[RowIdCol]]) — the one place ids must become
-      // physical, because the new layout matches no historical derivation.
-      val snapshot =
-        if (rowTrackingOn(prev)) readWithRowIdsOf(prev) else readCommit(prev)
-      val clustered =
-        if (zorderBy.isEmpty) snapshot.repartition(numFiles)
-        else zorderCluster(snapshot, zorderBy, numFiles)
-      compactStaged(tx, prev, prev.dataDirs, clustered,
-        Map("numFiles" -> numFiles.toLong, "numBytes" -> totalBytes))
-    }.get
+    compact(prev, prev.dataDirs, targetFileBytes, zorderBy)
   }
 
   /** REORG TABLE … APPLY (PURGE) (Delta parity): physically rewrite the
@@ -3146,30 +3023,42 @@ final class GraftTable private (
     * column's name can be re-added afterwards (the resurrection hazard
     * [[addColumn]] guards against is gone with the bytes). At 100 TB this
     * is the deliberate, scheduled cost you pay once to reclaim storage —
-    * never on the read path. */
+    * never on the read path. The [[compact]] of every dir, with the
+    * retirements dropped from the properties. */
   def reorg(targetFileBytes: Long = 128L * 1024 * 1024): Commit = this.synchronized {
-    val tx = new TableTxn(this, s"REORG of $root")
-    tx.commit() { prev =>
-      val numFiles = numFilesOf(prev, targetFileBytes)
-      // readCommit is already the purged view: schema-projected (dropped
-      // columns absent) and DV-subtracted. Row ids survive the
-      // purge the same way they survive OPTIMIZE — materialized through.
-      val snapshot = (if (rowTrackingOn(prev)) readWithRowIdsOf(prev)
-        else readCommit(prev)).repartition(numFiles)
-      rewriteStaged(tx, prev, "REORG", snapshot,
-        metrics = _ => Map("numFiles" -> numFiles.toLong), rebalance = false) { (c, _, _) =>
-        c.copy(properties = c.properties.filterNot(_._1.startsWith(DroppedColPrefix)))
-      }
-    }.get
+    val prev = log.latest().getOrElse(
+      throw new NoSuchElementException(s"no table at $root"))
+    // The compaction read is already the purged view: schema-projected
+    // (dropped columns absent) and DV-subtracted.
+    compact(prev, prev.dataDirs, targetFileBytes, op = "REORG",
+      editProps = _.filterNot(_._1.startsWith(DroppedColPrefix)))
   }
 
-  /** Files a rewrite of `prev`'s dirs at `targetFileBytes` each lands as. */
-  private def numFilesOf(prev: Commit, targetFileBytes: Long): Int = {
-    val totalBytes = prev.dataDirs.map { d =>
-      val p = if (new Path(d).isAbsolute) new Path(d) else new Path(root, d)
-      if (fs.exists(p)) fs.getContentSummary(p).getLength else 0L
-    }.sum
-    math.max(1, math.ceil(totalBytes.toDouble / targetFileBytes).toInt)
+  /** Bytes on disk under data dir `d`. */
+  private def dirBytes(d: String): Long = fs.getContentSummary(new Path(root, d)).getLength
+
+  /** Files a rewrite of `dirs` at `targetFileBytes` each lands as, and
+    * the bytes it reads. */
+  private def fileCountOf(dirs: Seq[String], targetFileBytes: Long): (Int, Long) = {
+    val bytes = dirs.map(dirBytes).sum
+    (math.max(1, math.ceil(bytes.toDouble / targetFileBytes).toInt), bytes)
+  }
+
+  /** Refuses to `verb` column `name` of `prev` while a CHECK constraint
+    * or generation expression names it, or a generated/identity
+    * declaration is keyed by it: their SQL or specs would dangle (or, for
+    * a widening, silently change meaning) — drop those first. */
+  private def requireUnreferenced(prev: Commit, name: String, verb: String): Unit = {
+    val word = s"\\b${java.util.regex.Pattern.quote(name)}\\b".r
+    val referencing = prev.properties.collect {
+      case (k, spec) if (k.startsWith(ConstraintPrefix) ||
+        k.startsWith(GeneratedColPrefix)) && word.findFirstIn(spec).isDefined => k
+      case (k, _) if (k.startsWith(GeneratedColPrefix) ||
+        k.startsWith(IdentitySpecPrefix)) &&
+        k.stripPrefix(GeneratedColPrefix).stripPrefix(IdentitySpecPrefix) == name => k
+    }
+    require(referencing.isEmpty,
+      s"cannot $verb column $name of $root: referenced by ${referencing.mkString(", ")}")
   }
 
   /** RENAME COLUMN — as an HONEST REWRITE: Delta needs column mapping
@@ -3191,18 +3080,9 @@ final class GraftTable private (
       require(!schema.fieldNames.contains(to), s"column $to already exists at $root")
       require(!prev.partitionCols.contains(from),
         s"cannot rename partition column $from of $root (values live in the dir layout)")
-      val word = s"\\b${java.util.regex.Pattern.quote(from)}\\b".r
-      val referencing = prev.properties.collect {
-        case (k, spec) if (k.startsWith(ConstraintPrefix) ||
-          k.startsWith(GeneratedColPrefix)) && word.findFirstIn(spec).isDefined => k
-        case (k, _) if (k.startsWith(GeneratedColPrefix) ||
-          k.startsWith(IdentitySpecPrefix)) &&
-          k.stripPrefix(GeneratedColPrefix).stripPrefix(IdentitySpecPrefix) == from => k
-      }
-      require(referencing.isEmpty,
-        s"cannot rename column $from of $root: referenced by ${referencing.mkString(", ")}")
+      requireUnreferenced(prev, from, "rename")
       val snapshot = readCommit(prev).withColumnRenamed(from, to)
-        .repartition(numFilesOf(prev, targetFileBytes))
+        .repartition(fileCountOf(prev.dataDirs, targetFileBytes)._1)
       rewriteStaged(tx, prev, "RENAME COLUMN", snapshot, rebalance = false) { (c, _, _) =>
         val base = c.properties.filterNot(_._1.startsWith(DroppedColPrefix))
         val cluster = GraftTable.clusterColsOf(prev.properties)
@@ -3233,16 +3113,7 @@ final class GraftTable private (
       require(!schema.fieldNames.contains(to), s"column $to already exists at $root")
       require(!prev.partitionCols.contains(from),
         s"cannot rename partition column $from of $root (values live in the dir layout)")
-      val word = s"\\b${java.util.regex.Pattern.quote(from)}\\b".r
-      val referencing = prev.properties.collect {
-        case (k, spec) if (k.startsWith(ConstraintPrefix) ||
-          k.startsWith(GeneratedColPrefix)) && word.findFirstIn(spec).isDefined => k
-        case (k, _) if (k.startsWith(GeneratedColPrefix) ||
-          k.startsWith(IdentitySpecPrefix)) &&
-          k.stripPrefix(GeneratedColPrefix).stripPrefix(IdentitySpecPrefix) == from => k
-      }
-      require(referencing.isEmpty,
-        s"cannot rename column $from of $root: referenced by ${referencing.mkString(", ")}")
+      requireUnreferenced(prev, from, "rename")
       val physOfFrom = colMapOf(prev.properties).getOrElse(from, from)
       // Renaming BACK to the column's own physical name is always safe
       // (the mapping entry simply disappears); any other claimed name
@@ -3310,16 +3181,7 @@ final class GraftTable private (
       // type-sensitive (overflow behavior, hash inputs, result types):
       // widening a column they reference could silently change their
       // semantics — same conservative guard as the metadata-only rename.
-      val word = s"\\b${java.util.regex.Pattern.quote(name)}\\b".r
-      val referencing = prev.properties.collect {
-        case (k, spec) if (k.startsWith(ConstraintPrefix) ||
-          k.startsWith(GeneratedColPrefix)) && word.findFirstIn(spec).isDefined => k
-        case (k, _) if (k.startsWith(GeneratedColPrefix) ||
-          k.startsWith(IdentitySpecPrefix)) &&
-          k.stripPrefix(GeneratedColPrefix).stripPrefix(IdentitySpecPrefix) == name => k
-      }
-      require(referencing.isEmpty,
-        s"cannot widen column $name of $root: referenced by ${referencing.mkString(", ")}")
+      requireUnreferenced(prev, name, "widen")
       val widened = StructType(schema.fields.map(f =>
         if (f.name == name) f.copy(dataType = to) else f))
       val phys = colMapOf(prev.properties).getOrElse(name, name)
@@ -3350,80 +3212,91 @@ final class GraftTable private (
     * yesterday's dirs, not years of history. Dir selection is the same
     * conservative superset [[where]] uses, which is exactly right here:
     * compaction must rewrite whole dirs anyway, and rewriting a dir the
-    * predicate didn't really touch only costs IO, never rows. Requires a
-    * clean snapshot (run [[materializeDeletes]] first if deletion
-    * vectors exist). */
+    * predicate didn't really touch only costs IO, never rows. The
+    * [[compact]] of that selection, so dirs carrying deletion vectors
+    * fold too. */
   def optimizeWhere(predicate: Column,
       targetFileBytes: Long = 128L * 1024 * 1024,
       zorderBy: Seq[String] = Nil): Commit = this.synchronized {
-    optimizeWhereFrom(log.latest().getOrElse(
-      throw new NoSuchElementException(s"no table at $root")),
-      predicate, targetFileBytes, zorderBy)
+    val prev = log.latest().getOrElse(
+      throw new NoSuchElementException(s"no table at $root"))
+    compact(prev, dirsMayMatching(prev, predicate), targetFileBytes, zorderBy)
   }
 
-  /** [[optimizeWhere]] from an explicit snapshot (test seam for rebase
-    * scenarios). */
-  private[table] def optimizeWhereFrom(prev: Commit, predicate: Column,
-      targetFileBytes: Long, zorderBy: Seq[String]): Commit = {
-    require(prev.dvDirs.isEmpty,
-      s"optimizeWhere on $root requires a clean snapshot — run materializeDeletes() first")
-    val touched = dirsMayMatching(prev, predicate)
-    if (touched.isEmpty) return prev // nothing to compact, no empty commit
-    compactDirSubset(prev, touched, targetFileBytes, zorderBy)
+  /** The data dirs of `c` that `dirs` names or whose files carry
+    * deletion-vector marks, in `c`'s order: a rewrite of a dir subset
+    * that drops the DVs must rewrite every marked dir with it. A dir is
+    * marked iff some recorded file path lies under it — dir names carry a
+    * uniquifying suffix, so the match cannot cross dirs. Only DISTINCT
+    * file paths are gathered (the inline DV map's keys, else one distinct
+    * scan of the DV files), never the positions. */
+  private def withMarkedDirs(c: Commit, dirs: Seq[String]): Seq[String] = {
+    val files: Seq[String] =
+      if (c.dvDirs.isEmpty) Nil
+      else dvEntriesOf(c).map(_.keys.toSeq).getOrElse(
+        spark.read.parquet(c.dvDirs.map(d => new Path(root, d).toString): _*)
+          .select("file").distinct().collect().map(_.getString(0)).toSeq)
+    c.dataDirs.filter { d =>
+      val under = new Path(root, d).toUri.getRawPath + "/"
+      dirs.contains(d) || files.exists(_.contains(under))
+    }
   }
 
-  /** Rewrite `touched` dirs into one compacted dir and commit with
-    * rebase-over-append — the shared body of [[optimizeWhere]] and
-    * [[compactSmall]]. */
-  private def compactDirSubset(prev: Commit, touched: Seq[String],
-      targetFileBytes: Long, zorderBy: Seq[String]): Commit = {
-    val tx = new TableTxn(this, s"OPTIMIZE of $root")
-    tx.commit(Some(prev)) { prev =>
-      val touchedBytes = touched.map { d =>
-        fs.getContentSummary(new Path(root, d)).getLength
-      }.sum
-      val numFiles = math.max(1, math.ceil(touchedBytes.toDouble / targetFileBytes).toInt)
-      val sub = prev.copy(dataDirs = touched)
-      val subset =
-        if (rowTrackingOn(prev)) readWithRowIdsOf(sub)
-        else readCommitInternal(sub, withPos = false)
-      val clustered =
-        if (zorderBy.isEmpty) subset.repartition(numFiles)
-        else zorderCluster(subset, zorderBy, numFiles)
-      compactStaged(tx, prev, touched, clustered,
-        Map("numRewrittenDirs" -> touched.size.toLong, "numFiles" -> numFiles.toLong,
-          "numBytes" -> touchedBytes))
+  /** The one OPTIMIZE-family rewrite (OPTIMIZE, OPTIMIZE … WHERE, the
+    * bin-packing and auto-compaction passes, the DV purge and REORG are
+    * each a selection of it): fold `dirs` of `prev`, plus every dir whose
+    * files carry deletion-vector marks, into ~`targetFileBytes` files as
+    * one new dir and commit `op`; every other dir is carried untouched
+    * with its skipping metadata, the DVs are dropped and `editProps`
+    * edits the properties. Data unchanged, no CDF.
+    *   - The selection is read with the DVs subtracted; a row-tracked
+    *     table reads it with its row ids, which the rewrite MATERIALIZES
+    *     into the new files (see [[RowIdCol]]) — the new layout matches
+    *     no historical derivation.
+    *   - Rows are Z-ordered on `zorderBy`, or on the table's [[clusterBy]]
+    *     declaration when none is given (Delta's liquid-clustering
+    *     contract: OPTIMIZE on a clustered table clusters).
+    *   - A concurrent APPEND (same schema, dir prefix intact —
+    *     [[isAppendOnlyRace]]) cannot conflict with a semantics-preserving
+    *     rewrite of a declared dir subset: the commit re-lands on the new
+    *     head with the appended dirs carried forward (appends add no DV).
+    *     Delta resolves the same disjoint-file case instead of failing the
+    *     maintenance job — ingestion never pauses for compaction. Any
+    *     other intervening commit refuses.
+    * Nothing selected and no property edit: no commit, `prev` returned. */
+  private[table] def compact(prev: Commit, dirs: Seq[String], targetFileBytes: Long,
+      zorderBy: Seq[String] = Nil, op: String = "OPTIMIZE",
+      editProps: Map[String, String] => Map[String, String] = identity): Commit = {
+    val selected = withMarkedDirs(prev, dirs)
+    if (selected.isEmpty && editProps(prev.properties) == prev.properties) return prev
+    val tx = new TableTxn(this, s"$op of $root")
+    tx.commit(Some(prev)) { _ =>
+      val (numFiles, numBytes) = fileCountOf(selected, targetFileBytes)
+      val sub = prev.copy(dataDirs = selected)
+      val rows = if (rowTrackingOn(prev)) readWithRowIdsOf(sub) else readCommit(sub)
+      val order =
+        if (zorderBy.nonEmpty) zorderBy else GraftTable.clusterColsOf(prev.properties)
+      val laid =
+        if (order.isEmpty) rows.repartition(numFiles) else zorderCluster(rows, order, numFiles)
+      val dir = writeData(tx, laid, prev.version + 1, prev.partitionCols, rebalance = false)
+      val meta = metaFor(dir)
+      val outputRows = countDir(dir)
+      val out = unlessEmpty(dir, outputRows).toSeq
+      Staged(
+        head =>
+          if (isAppendOnlyRace(prev, head)) Rebase
+          else Refuse(s"$op of $root computed from stale version ${prev.version}; a " +
+            "non-append commit intervened; rolled back — retry against the new head"),
+        a => carrying(Commit(a.version, a.tsMs, op, out,
+          Map("numRewrittenDirs" -> selected.size.toLong, "numFiles" -> numFiles.toLong,
+            "numBytes" -> numBytes, "numOutputRows" -> outputRows),
+          a.head.schemaJson,
+          partitionCols = a.head.partitionCols,
+          dirStats = out.map(_ -> meta.stats).toMap,
+          properties = editProps(a.head.properties),
+          dirNulls = out.map(_ -> meta.nulls).toMap),
+          a.head, a.head.dataDirs.filterNot(selected.contains)))
     }.get
-  }
-
-  /** Stages an OPTIMIZE-family rewrite of `prev`'s `rewritten` dirs as one
-    * compacted dir, with REBASE-over-append: compaction is
-    * semantics-preserving and rewrites a declared dir subset, so a
-    * concurrent APPEND (same schema — [[isAppendOnlyRace]] checks it — over
-    * clean snapshots) can never conflict with it: the commit re-lands on
-    * the new head with the appended dirs carried forward untouched. Delta
-    * resolves the same disjoint-file case instead of failing the
-    * maintenance job — at 100 TB, ingestion never pauses for compaction
-    * and compaction never loses to ingestion. Any other intervening commit
-    * (schema change, another rewrite, merge-on-read state on either side)
-    * refuses. */
-  private def compactStaged(tx: TableTxn, prev: Commit, rewritten: Seq[String],
-      rows: DataFrame, metrics: Map[String, Long]): Staged = {
-    val dir = writeData(tx, rows, prev.version + 1, prev.partitionCols, rebalance = false)
-    val meta = metaFor(dir)
-    def clean(c: Commit): Boolean = c.dvDirs.isEmpty
-    Staged(
-      head =>
-        if (isAppendOnlyRace(prev, head) && clean(prev) && clean(head)) Rebase
-        else Refuse(s"OPTIMIZE of $root computed from stale version ${prev.version}; a " +
-          "non-append commit intervened; rolled back — retry against the new head"),
-      a => carrying(Commit(a.version, a.tsMs, "OPTIMIZE", Seq(dir), metrics,
-        a.head.schemaJson,
-        partitionCols = a.head.partitionCols,
-        dirStats = Map(dir -> meta.stats),
-        properties = a.head.properties,
-        dirNulls = Map(dir -> meta.nulls)),
-        a.head, a.head.dataDirs.filterNot(rewritten.contains)))
   }
 
   /** Selective overwrite — Delta's `replaceWhere`: atomically replace
@@ -3435,16 +3308,14 @@ final class GraftTable private (
     * are carried byte-untouched with their stats; only the conservative
     * touched superset is read, and its survivors (predicate-false or
     * -null rows — SQL semantics: a NULL predicate does not match, so the
-    * row is kept) are rewritten alongside the replacement. Requires a
-    * clean snapshot (run [[materializeDeletes]] first), same rule as
-    * [[optimizeWhere]]. Reference anchor: the Delta overwrite path
+    * row is kept) are rewritten alongside the replacement. Dirs carrying
+    * deletion vectors are rewritten with them and the DVs dropped, the
+    * rule [[compact]] follows. Reference anchor: the Delta overwrite path
     * (consumer/python-consumer/delta_handler.py write modes) generalized
     * to predicate scope. */
   def replaceWhere(df: DataFrame, predicate: Column): Commit = this.synchronized {
     val tx = new TableTxn(this, s"REPLACEWHERE of $root", Some("REPLACEWHERE"))
     tx.commit() { prev =>
-      require(prev.dvDirs.isEmpty,
-        s"replaceWhere on $root requires a clean snapshot — run materializeDeletes() first")
       val schema = DataType.fromJson(prev.schemaJson).asInstanceOf[StructType]
       val (prepared, idHwm) = prepareWrite(df, prev.properties, "replaceWhere")
       enforceCompatibleTypes(prepared.schema, schema, "replaceWhere")
@@ -3455,7 +3326,7 @@ final class GraftTable private (
           s"replaceWhere on $root: replacement rows must all satisfy the predicate " +
             s"($predicate) — rows outside the replaced region would silently widen the overwrite")
       enforceConstraints(aligned, prev.properties, "REPLACEWHERE")
-      val touched = dirsMayMatching(prev, predicate)
+      val touched = withMarkedDirs(prev, dirsMayMatching(prev, predicate))
       val untouched = prev.dataDirs.filterNot(touched.contains)
       val survivors = readCommitInternal(prev.copy(dataDirs = touched), withPos = false)
         .filter(!matches)
@@ -3469,11 +3340,6 @@ final class GraftTable private (
 
   private val ZorderBits = 8 // 256 quantile buckets per column
 
-  /** Range-partition + sort on an interleaved-bit Morton key. Per-column
-    * bucket ids come from approx quantiles (robust to skew; the cutpoint
-    * array is driver-side metadata, 255 doubles per column), the key is a
-    * pure column expression, and the layout job is one
-    * `repartitionByRange` — fully distributed. */
   /** Order-preserving numeric surrogate for quantile bucketing. Numerics
     * and timestamps cast directly; STRINGS pack their first 6 codepoints
     * (capped at 255) big-endian into a long — monotone w.r.t. string order
@@ -3491,6 +3357,11 @@ final class GraftTable private (
     case _ => col(c).cast("double")
   }
 
+  /** Range-partition + sort on an interleaved-bit Morton key. Per-column
+    * bucket ids come from approx quantiles (robust to skew; the cutpoint
+    * array is driver-side metadata, 255 doubles per column), the key is a
+    * pure column expression, and the layout job is one
+    * `repartitionByRange` — fully distributed. */
   private def zorderCluster(df: DataFrame, cols: Seq[String], numFiles: Int): DataFrame = {
     val n = 1 << ZorderBits
     val probs = (1 until n).map(_.toDouble / n).toArray
@@ -3525,17 +3396,6 @@ final class GraftTable private (
     * call every N commits on long-running tables. */
   def checkpointLog(): Unit = log.checkpoint()
 
-  /** Compact when the snapshot has accumulated more than `maxDataDirs`
-    * append dirs — the guard the streaming append sink calls per batch so a
-    * long-running stream doesn't degrade into the one-file-per-event
-    * pathology the reference exhibits on its delta-rs path
-    * (delta_handler.py:107-112; SURVEY §4 "small files"). */
-  def maybeCompact(maxDataDirs: Int, targetFileBytes: Long = 128L * 1024 * 1024): Option[Commit] =
-    log.latest() match {
-      case Some(c) if c.dataDirs.length > maxDataDirs => Some(optimize(targetFileBytes))
-      case _ => None
-    }
-
   /** Purge deletion vectors once their positions have grown past
     * `maxDeletedRatio` of the live rows (footer counts — metadata-only
     * check, no scan). While DVs live, every read of a marked table pays an
@@ -3545,7 +3405,7 @@ final class GraftTable private (
     * tax. The rewrite is [[materializeDeletes]]: only the dirs whose files
     * carry positions are rewritten, every other dir stays referenced
     * unchanged. The merge-on-read write path's periodic-compaction
-    * companion, like [[maybeCompact]] for small files. */
+    * companion, as [[compactSmall]] is for small files. */
   def maybeMaterialize(maxDeletedRatio: Double = 0.1,
       targetFileBytes: Long = 128L * 1024 * 1024): Option[Commit] =
     log.latest() match {
@@ -3770,6 +3630,31 @@ final class ConcurrentWriteException(msg: String, cause: Throwable = null)
     extends RuntimeException(msg, cause)
 
 object GraftTable {
+
+  /** The identity allocation `hwm + step·(1 + n)`, `n` a row counter
+    * unique within the write. */
+  private[graft] def identityValue(hwm: Long, step: Long, n: Column): Column =
+    lit(hwm) + lit(step) * (n + lit(1L))
+
+  /** `df` with identity column `name` (matched case-insensitively) filled
+    * for an append: rows that omit it, or carry NULL, are assigned
+    * [[identityValue]] over [[monotonically_increasing_id]] — each task
+    * owns a disjoint id block, so assignment is one pure column
+    * expression, no shuffle, no driver round-trip, exactly the per-task
+    * range-reservation scheme Delta uses. Ids are UNIQUE and ascend across
+    * commits; like Delta's, they are NOT gap-free (unclaimed block
+    * remainders are skipped). Non-null values a frame carries in the
+    * column are kept. */
+  private[graft] def withIdentity(df: DataFrame, name: String, hwm: Long,
+      step: Long): DataFrame = {
+    val assign = identityValue(hwm, step, monotonically_increasing_id())
+    df.columns.find(_.equalsIgnoreCase(name)) match {
+      case None => df.withColumn(name, assign)
+      case Some(src) =>
+        df.withColumn(src,
+          when(col(s"`$src`").isNotNull, col(s"`$src`").cast("long")).otherwise(assign))
+    }
+  }
 
   /** Canonical spelling of a data-file URI for COPY INTO ledger identity:
     * Hadoop preserves `file:/x` vs `file:///x` (null vs empty authority)

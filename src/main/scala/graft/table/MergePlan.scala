@@ -171,7 +171,7 @@ private[graft] final class MergePlan(target: DataFrame, val schema: StructType,
   // An identity column's image value, allocated where the image left it null.
   private def withId(c: String, v: Column): Column =
     idSteps.get(c).fold(v) { step =>
-      coalesce(v, (lit(idHwm(c)) + lit(step) * (col(idSeq) + lit(1L)))
+      coalesce(v, GraftTable.identityValue(idHwm(c), step, col(idSeq))
         .cast(fieldOf(c).dataType))
     }
   private def branchVal(cls: Seq[MergeClause], idx: Column, default: Column,

@@ -281,26 +281,46 @@ class ConcurrencySpec extends SparkSpec {
     val stale = t.headCommit.get
     // ingestion continues while the compaction job reads the snapshot
     t.append(rows(201, 300))
-    val c = t.optimizeFrom(stale, Long.MaxValue, Nil)
+    val c = t.compact(stale, stale.dataDirs, Long.MaxValue)
     assert(c.version === stale.version + 2)
     // compacted snapshot + the concurrently appended rows, nothing lost
     assert(t.read().count() === 300)
     assert(c.dataDirs.size === 2, "appended dir + one compacted dir")
     assert(t.read().agg(sum("id")).head().getLong(0) === (1L to 300L).sum)
 
-    // selective compaction rebases the same way
+    // selective compaction (a dir subset) rebases the same way
     val stale2 = t.headCommit.get
     t.append(rows(301, 400))
-    val c2 = t.optimizeWhereFrom(stale2, col("id") <= 300L, Long.MaxValue, Nil)
+    val c2 = t.compact(stale2, stale2.dataDirs.take(1), Long.MaxValue)
     assert(c2.version === stale2.version + 2)
     assert(t.read().count() === 400)
 
     // a concurrent REWRITE is not append-only: compaction must abort
     val stale3 = t.headCommit.get
     t.update(col("id") === 1L, Map("x" -> lit(-1.0)))
-    intercept[ConcurrentWriteException] { t.optimizeFrom(stale3, Long.MaxValue, Nil) }
+    intercept[ConcurrentWriteException] { t.compact(stale3, stale3.dataDirs, Long.MaxValue) }
     assert(t.read().count() === 400)
     assert(t.read().filter(col("id") === 1L).head().getDouble(1) === -1.0)
+  }
+
+  test("materializeDeletes rebases over a concurrent append") {
+    import org.apache.spark.sql.functions._
+    def rows(lo: Long, hi: Long) = (lo to hi).map(i => (i, i * 1.0)).toDF("id", "x")
+    val root = tmpDir("cc-purge")
+    val t = GraftTable.create(spark, root, rows(1, 100))
+    t.append(rows(101, 200))
+    t.deletePositional(col("id") <= 10L) // marks only the first dir
+    val other = GraftTable.forPath(spark, root)
+    // ingestion lands while the purge is staged: the purge re-lands on it
+    t.beforeCommitHook = () => {
+      t.beforeCommitHook = () => (); other.append(rows(201, 300)); ()
+    }
+    val c = try t.materializeDeletes() finally t.beforeCommitHook = () => ()
+    assert(c.operation === "OPTIMIZE" && c.dvDirs.isEmpty)
+    assert(c.metrics("numRewrittenDirs") === 1)
+    assert(c.dataDirs.size === 3, "untouched dir + appended dir + purged dir")
+    val ids = t.read().select("id").collect().map(_.getLong(0)).toSet
+    assert(ids === (11L to 300L).toSet, "purge lost or resurrected rows")
   }
 
   test("racing positional deletes from independent handles BOTH land (commute)") {

@@ -228,6 +228,56 @@ class DeletionVectorSpec extends SparkSpec {
     assert(t.materializeDeletes().version === c.version)
   }
 
+  test("optimizeWhere folds the dirs deletion vectors mark with its selection") {
+    def rows(lo: Long, hi: Long) = (lo to hi).map(i => (i, i * 1.0)).toDF("id", "x")
+    val t = GraftTable.create(spark, tmpDir("dv-optwhere"), rows(1, 100))
+    t.append(rows(101, 200)); t.append(rows(201, 300))
+    val Seq(marked, middle, selected) = t.headCommit.get.dataDirs
+    t.deletePositional(col("id") <= 10L) // marks the first dir only
+    val before = t.read().collect().toSet
+    val c = t.optimizeWhere(col("id") > 250L) // selects the third dir
+    assert(c.dvDirs.isEmpty)
+    assert(c.metrics("numRewrittenDirs") === 2, "the selected dir and the marked dir")
+    assert(c.dataDirs.contains(middle) && !c.dataDirs.contains(marked) &&
+      !c.dataDirs.contains(selected))
+    assert(t.read().collect().toSet === before)
+  }
+
+  test("compactSmall folds the dirs deletion vectors mark with the small tail") {
+    import org.apache.hadoop.fs.Path
+    def rows(lo: Long, hi: Long) = (lo to hi).map(i => (i, i * 1.0)).toDF("id", "x")
+    val root = tmpDir("dv-compact")
+    val t = GraftTable.create(spark, root, rows(1, 100))
+    t.append(rows(101, 200)); t.append(rows(201, 201)); t.append(rows(202, 202))
+    val Seq(marked, mature, tiny1, tiny2) = t.headCommit.get.dataDirs
+    t.deletePositional(col("id") === 50L) // marks the first dir only
+    val fs = new Path(root).getFileSystem(spark.sessionState.newHadoopConf())
+    def bytes(d: String) = fs.getContentSummary(new Path(root, d)).getLength
+    val threshold = math.max(bytes(tiny1), bytes(tiny2)) + 1
+    assert(bytes(marked) >= threshold, "the marked dir must not count as small")
+    val before = t.read().collect().toSet
+    val c = t.compactSmall(smallDirBytes = threshold)
+    assert(c.isDefined, "two small dirs must fold")
+    assert(c.get.dvDirs.isEmpty)
+    assert(c.get.metrics("numRewrittenDirs") === 3, "the small tail and the marked dir")
+    assert(c.get.dataDirs.size === 2 && c.get.dataDirs.contains(mature))
+    assert(t.read().collect().toSet === before)
+  }
+
+  test("replaceWhere rewrites the dirs deletion vectors mark with its region") {
+    def rows(lo: Long, hi: Long) = (lo to hi).map(i => (i, i * 1.0)).toDF("id", "x")
+    val t = GraftTable.create(spark, tmpDir("dv-replace"), rows(1, 100))
+    t.append(rows(101, 200)); t.append(rows(201, 300))
+    val Seq(marked, middle, _) = t.headCommit.get.dataDirs
+    t.deletePositional(col("id") <= 10L) // marks the first dir only
+    val c = t.replaceWhere(rows(251, 260).withColumn("x", lit(-1.0)), col("id") > 250L)
+    assert(c.dvDirs.isEmpty)
+    assert(c.dataDirs.contains(middle) && !c.dataDirs.contains(marked))
+    val got = t.read().collect().map(r => r.getLong(0) -> r.getDouble(1)).toMap
+    assert(got.keySet === (11L to 260L).toSet, "deleted rows resurrected or region kept")
+    assert((251L to 260L).forall(got(_) === -1.0))
+  }
+
   test("concurrent positional mutations commute via restart; rewrites still abort") {
     val t = GraftTable.create(spark, tmpDir("dv-race"),
       (1L to 20L).map(i => (i, i * 1.0)).toDF("id", "x"))

@@ -325,19 +325,19 @@ class GraftTableSpec extends SparkSpec {
       === Seq("F", "P", "X"))
   }
 
-  test("maybeCompact fires only past the dir threshold") {
+  test("compactSmall(maxDataDirs) fires only past the dir threshold") {
     val t = GraftTable.create(spark, tmpDir("gt-autocompact"), seedCustomers)
     (0 until 4).foreach { i =>
       t.append(Seq((20L + i, s"a$i", s"a$i@x.com", 1.0)).toDF("id", "name", "email", "balance"))
     }
-    assert(t.maybeCompact(maxDataDirs = 10).isEmpty) // 5 dirs <= 10
-    val c = t.maybeCompact(maxDataDirs = 3)
+    assert(t.compactSmall(maxDataDirs = 10).isEmpty) // 5 dirs <= 10
+    val c = t.compactSmall(maxDataDirs = 3)
     assert(c.isDefined && c.get.operation === "OPTIMIZE")
     assert(c.get.dataDirs.length === 1)
     assert(t.read().count() === 7)
   }
 
-  test("readPruned skips dirs whose stats miss the range") {
+  test("whereSuperset skips dirs whose stats miss the range") {
     val t = GraftTable.create(spark, tmpDir("gt-skip"),
       Seq((1L, 10.0)).toDF("id", "v").limit(0))
     t.append(Seq((1L, 10.0), (2L, 20.0)).toDF("id", "v"))   // v in [10, 20]
@@ -346,13 +346,13 @@ class GraftTableSpec extends SparkSpec {
 
     // Range hits only the middle dir: pruning must drop the other two dirs
     // entirely (the rows outside the range never reach the scan).
-    val pruned = t.readPruned("v", 50.0, 500.0)
+    val pruned = t.whereSuperset($"v".between(50.0, 500.0))
     assert(pruned.collect().map(_.getLong(0)).sorted.toSeq === Seq(3L, 4L))
     // Superset contract still needs the precise filter in general:
-    val exact = t.readPruned("v", 150.0, 500.0).filter($"v" >= 150.0)
+    val exact = t.whereSuperset($"v".between(150.0, 500.0)).filter($"v" >= 150.0)
     assert(exact.collect().map(_.getLong(0)).toSeq === Seq(4L))
     // Unknown column → conservative full read
-    assert(t.readPruned("nope", 0, 1).count() === 5)
+    assert(t.whereSuperset($"nope".between(0, 1)).count() === 5)
   }
 
   test("appendOnce skips replayed batches (exactly-once txn stamp)") {
@@ -887,10 +887,10 @@ class GraftTableSpec extends SparkSpec {
     // sidecars hashed xxhash64(int); a long needle would false-negative
     assert(!new java.io.File(s"$root/_bloom/id").exists())
     // un-indexed lookup stays correct (conservative: all dirs kept)
-    assert(t.readPointLookup("id", 1500L).filter(col("id") === 1500L).count() === 1)
+    assert(t.where(col("id") === 1500L).count() === 1)
     // a rebuild under the wide type serves wide needles
     t.buildBloomIndex("id")
-    assert(t.readPointLookup("id", 1500L).filter(col("id") === 1500L).count() === 1)
+    assert(t.where(col("id") === 1500L).count() === 1)
   }
 
   test("widen then rename: history keyed by birth-stable physical name") {

@@ -6,7 +6,8 @@ import graft.SparkSpec
 
 /** Both pruning layers must be observable in what actually gets scanned:
   * hive-partition pruning inside version dirs, and dir-granularity min/max
-  * data skipping via [[Commit.dirStats]] (readPruned). */
+  * data skipping via [[Commit.dirStats]] (whereSuperset: the pruned scan
+  * before the exact filter). */
 class PruningSpec extends SparkSpec {
   import spark.implicits._
 
@@ -31,9 +32,9 @@ class PruningSpec extends SparkSpec {
     assert(statusFiltered < totalFiles,
       s"partition pruning did not reduce files: $statusFiltered vs $totalFiles")
 
-    // Dir-stats skipping: an id-range predicate through readPruned must
-    // drop whole append dirs before Spark ever lists them.
-    val pruned = t.readPruned("id", 0.0, 100.0)
+    // Dir-stats skipping: an id-range predicate must drop whole append
+    // dirs before Spark ever lists them.
+    val pruned = t.whereSuperset(col("id").between(0L, 100L))
     val prunedFiles = scannedFiles(pruned)
     assert(prunedFiles < totalFiles,
       s"dir-stats skipping did not reduce files: $prunedFiles vs $totalFiles")
@@ -53,23 +54,24 @@ class PruningSpec extends SparkSpec {
 
   test("CHECK constraints prune scans their range contradicts") {
     val root = tmpDir("prune-constraint")
-    // v0 written BEFORE column x existed → its dir has no x stats and
+    // v1 records no x stats (the stats columns exclude it), so
     // conservative skipping must keep it
     val t = GraftTable.create(spark, root, (1L to 100L).toDF("id"))
+    t.setProperties(Map("delta.dataSkippingStatsColumns" -> "id"))
     t.append((101L to 200L).map(i => (i, 2000.0 + i)).toDF("id", "x"))
-    assert(scannedFiles(t.readPruned("x", 0.0, 100.0)) > 0,
+    val window = col("x").between(0.0, 100.0)
+    assert(scannedFiles(t.whereSuperset(window)) > 0,
       "without a constraint the stats-less dir must be kept")
     // the table-wide invariant the dir-stats can't know: every x >= 2000
     t.addConstraint("x_range", "x >= 2000")
     val t2 = GraftTable.forPath(spark, root)
     // a window the constraint contradicts scans NOTHING — no dirs listed
-    val pruned = t2.readPruned("x", 0.0, 100.0)
+    val pruned = t2.whereSuperset(window)
     assert(scannedFiles(pruned) === 0,
       "constraint-implied skipping must prune every dir")
     assert(pruned.count() === 0)
     // a window inside the constraint range still reads a correct superset
-    assert(t2.readPruned("x", 2101.0, 2200.0)
-      .filter(col("x").between(2101.0, 2200.0)).count() === 100)
+    assert(t2.where(col("x").between(2101.0, 2200.0)).count() === 100)
   }
 
   test("bloom point-lookup index prunes dirs range stats cannot") {
@@ -81,19 +83,18 @@ class PruningSpec extends SparkSpec {
       .toDF("id", "x")
     val t = GraftTable.create(spark, root, rows(0))
     t.append(rows(1)); t.append(rows(2)); t.append(rows(3))
-    t.buildBloomIndex("id")
     val total = scannedFiles(t.read())
-    assert(scannedFiles(t.readPruned("id", 10.0, 10.0)) === total,
+    assert(scannedFiles(t.whereSuperset(col("id") === 10L)) === total,
       "ranges overlap: dir-stats must NOT be able to skip")
-    val hit = t.readPointLookup("id", 10L) // lives in the k=2 dir only
+    t.buildBloomIndex("id")
+    val hit = t.whereSuperset(col("id") === 10L) // lives in the k=2 dir only
     assert(scannedFiles(hit) < total, "bloom index did not skip any dir")
     assert(hit.filter(col("id") === 10L).count() === 1)
     // a key absent everywhere: every indexed dir skipped (fpp ~1e-4)
-    assert(t.readPointLookup("id", 999999L).filter(col("id") === 999999L).count() === 0)
+    assert(t.where(col("id") === 999999L).count() === 0)
     // dirs appended AFTER the build are conservatively kept + correct
     t.append(Seq((999999L, 1.0)).toDF("id", "x"))
-    val late = t.readPointLookup("id", 999999L)
-    assert(late.filter(col("id") === 999999L).count() === 1)
+    assert(t.where(col("id") === 999999L).count() === 1)
   }
 
   test("bloom sidecars survive a metadata-only rename (keyed by physical name)") {
@@ -111,7 +112,7 @@ class PruningSpec extends SparkSpec {
     assert(new java.io.File(s"$root/_bloom").list().toSeq === bloomDirs,
       "rename must not orphan or duplicate bloom sidecars")
     val total = scannedFiles(t.read())
-    val hit = t.readPointLookup("key", 10L)
+    val hit = t.whereSuperset(col("key") === 10L)
     assert(scannedFiles(hit) < total, "bloom pruning lost across the rename")
     assert(hit.filter(col("key") === 10L).count() === 1)
   }
@@ -124,13 +125,12 @@ class PruningSpec extends SparkSpec {
     t.append(rows("bravo")); t.append(rows("charlie")); t.append(rows("delta"))
     val total = scannedFiles(t.read())
     // a prefix-range query over the 'b' namespace skips the other dirs
-    val pruned = t.readPrunedString("doc_id", "bravo", "bravo￿")
+    val pruned = t.whereSuperset(col("doc_id").between("bravo", "bravo￿"))
     assert(scannedFiles(pruned) < total,
       "string range stats did not skip any dir")
     assert(pruned.filter(col("doc_id").startsWith("bravo")).count() === 500)
     // superset semantics: boundary-crossing range stays correct
-    val cross = t.readPrunedString("doc_id", "bravo-0400", "charlie-0100")
-      .filter(col("doc_id").between("bravo-0400", "charlie-0100"))
+    val cross = t.where(col("doc_id").between("bravo-0400", "charlie-0100"))
     assert(cross.count() === 201) // bravo 0400..0500 + charlie 0001..0100
   }
 
@@ -142,11 +142,10 @@ class PruningSpec extends SparkSpec {
     t.append(rows(1)); t.append(rows(2))
     t.buildBloomIndex("doc_id")
     val total = scannedFiles(t.read())
-    val hit = t.readPointLookup("doc_id", "doc-500") // 500 % 3 == 2
+    val hit = t.whereSuperset(col("doc_id") === "doc-500") // 500 % 3 == 2
     assert(scannedFiles(hit) < total)
     assert(hit.filter(col("doc_id") === "doc-500").count() === 1)
-    assert(t.readPointLookup("doc_id", "doc-absent")
-      .filter(col("doc_id") === "doc-absent").count() === 0)
+    assert(t.where(col("doc_id") === "doc-absent").count() === 0)
   }
 
   test("where() prunes from the predicate tree across every skipping source") {
@@ -159,7 +158,7 @@ class PruningSpec extends SparkSpec {
     t.append(rows(3001, 4000, "delta"))
     val total = scannedFiles(t.read())
 
-    // numeric range: same skipping readPruned gives, no manual entry point
+    // numeric range: dir-stats skipping, no manual entry point
     // (scan width measured on the pruned-but-unfiltered superset — the
     // exact filter on top would hide which files Spark actually listed)
     val rangeP = col("id").between(1200, 1300)
@@ -382,7 +381,7 @@ class PruningSpec extends SparkSpec {
     // lookups keep the dir conservatively instead of throwing, and the
     // unreadable sidecar is deleted so the next refresh rebuilds it
     val t2 = GraftTable.forPath(spark, root) // fresh handle: empty bloom cache
-    assert(t2.readPointLookup("id", 500L).filter(col("id") === 500L).count() === 1)
+    assert(t2.where(col("id") === 500L).count() === 1)
     assert(!fs.exists(victim), "corrupt sidecar not deleted on read")
     t2.buildBloomIndex("id")
     assert(fs.exists(victim), "incremental refresh did not rebuild it")
@@ -408,7 +407,7 @@ class PruningSpec extends SparkSpec {
     before.foreach { case (name, ts) =>
       assert(after(name) === ts, s"sidecar $name was rebuilt, not reused")
     }
-    assert(t.readPointLookup("id", 2500L).filter(col("id") === 2500L).count() === 1)
+    assert(t.where(col("id") === 2500L).count() === 1)
     // OPTIMIZE rewrites the snapshot into a new dir; vacuum past retention
     // reclaims the old dirs AND their sidecars
     t.optimize()
@@ -418,7 +417,7 @@ class PruningSpec extends SparkSpec {
       s"no sidecars reaped by vacuum: $reclaimed")
     assert(sidecars().isEmpty, "orphan sidecars survived vacuum")
     // the rewritten dir has no sidecar: conservative, still correct
-    assert(t.readPointLookup("id", 2500L).filter(col("id") === 2500L).count() === 1)
+    assert(t.where(col("id") === 2500L).count() === 1)
     t.buildBloomIndex("id")
     assert(sidecars().size === 1)
   }

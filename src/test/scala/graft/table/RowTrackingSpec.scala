@@ -103,6 +103,19 @@ class RowTrackingSpec extends SparkSpec {
     before.foreach { case (k, id) => assert(grown(k) === id) }
   }
 
+  test("ids survive materializeDeletes") {
+    val root = tmpDir("rowtrack-purge")
+    val t = GraftTable.createWithProperties(spark, root, rows(0, 50),
+      Map("graft.rowTracking" -> "true"))
+    t.append(rows(50, 49))
+    t.deletePositional(col("k") % 2 === 0)
+    val survivors = idsOf(t)
+    assert(survivors.size === 49)
+    val c = t.materializeDeletes()
+    assert(c.dvDirs.isEmpty)
+    assert(idsOf(t) === survivors, "the DV purge moved row ids")
+  }
+
   test("readWithRowIds refuses an untracked table") {
     val root = tmpDir("rowtrack-off")
     val t = GraftTable.create(spark, root, rows(0, 5))
