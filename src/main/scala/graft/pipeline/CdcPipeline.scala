@@ -47,8 +47,9 @@ object CdcPipeline {
       availableNow: Boolean = false,
       maxFilesPerTrigger: Int = 1000,
       tables: Seq[String] = Envelope.tableNames,
-      // Refresh the reference's materialized views after each batch
-      // (init-risingwave.sql:73-109; SURVEY ST10).
+      // After each batch, fold into the reference's materialized views the
+      // change feed they have not yet seen ([[MaterializedViews.maintain]];
+      // init-risingwave.sql:73-109, SURVEY ST10).
       maintainMvs: Boolean = false,
       // Dual-format publication (UniForm-style): after each batch, keep a
       // `_delta_log` mirror of every maintained table current
@@ -351,7 +352,7 @@ object CdcPipeline {
       .foreachBatch { (batch: DataFrame, _: Long) =>
         if (!batch.isEmpty) {
           applyPerTable(batch, cfg.tables)(applyBatchToSnapshot(spark, cfg, _, batch))
-          if (cfg.maintainMvs) MaterializedViews.refreshAll(spark, cfg)
+          if (cfg.maintainMvs) MaterializedViews.maintain(spark, cfg)
         }
       }
       .start()

@@ -4,12 +4,13 @@ import org.apache.spark.sql.{Column, DataFrame}
 import org.apache.spark.sql.functions._
 import org.apache.spark.sql.types.DataType
 
-import graft.table.GraftTable
+import graft.table.{Commit, GraftTable, MergeClause}
 
 /** Declarative incremental maintenance of ADDITIVE group-by aggregates from
-  * Change-Data-Feed rows — the generalized form of the per-MV maintainers
-  * (ROADMAP #4): callers declare (group keys, additive sums) once and both
-  * the signed-delta computation and the state merge come from here.
+  * Change-Data-Feed rows — the fold behind the `order_analytics` view
+  * ([[MaterializedViews]]) and q179's change-feed aggregate: callers
+  * declare (group keys, additive sums) once and both the signed-delta
+  * computation and the state MERGE come from here.
   *
   * Additivity is the contract: every maintained aggregate must be a sum
   * (counts are sums of ±1; averages are derived at publish time from
@@ -33,8 +34,8 @@ object IncrementalAgg {
       countCol: String,
       sums: Seq[Sum])
 
-  /** Per-group signed deltas of one CDF micro-batch (groups with all-zero
-    * deltas dropped — they cannot change state). */
+  /** Per-group signed deltas `__d_count` and `__d_<sum>` (nulls add 0) of
+    * CDF rows; all-zero groups are dropped — they cannot change state. */
   def signedDeltas(changes: DataFrame, spec: Spec): DataFrame = {
     val signed = changes
       .filter(col("_change_type").isin(
@@ -44,7 +45,8 @@ object IncrementalAgg {
           .otherwise(-1L))
     val keyCols = spec.groupKeys.map { case (n, e) => e.as(n) }
     val aggs = sum(col("__sign")).as("__d_count") +:
-      spec.sums.map(s => sum(col("__sign") * s.value).cast(s.dataType).as(s"__d_${s.name}"))
+      spec.sums.map(s => coalesce(sum(col("__sign") * s.value).cast(s.dataType),
+        lit(0).cast(s.dataType)).as(s"__d_${s.name}"))
     val nonZero = (col("__d_count") =!= 0) +:
       spec.sums.map(s => col(s"__d_${s.name}") =!= 0)
     signed.groupBy(keyCols: _*)
@@ -52,39 +54,29 @@ object IncrementalAgg {
       .filter(nonZero.reduce(_ || _))
   }
 
-  /** Fold one micro-batch of CDF rows into the MV state table: full-outer
-    * merge of current state with the deltas on the (null-safe) group keys,
-    * counts and sums added, groups whose count reaches zero deleted. With
-    * `txn` the publish is stamped (queryName, batchId) via
-    * [[GraftTable.overwriteOnce]], so an at-least-once foreachBatch replay
-    * is detected and skipped — deltas are not idempotent. */
+  /** Folds CDF rows into the state table as ONE positional MERGE of their
+    * signed deltas on the group keys, null-safe: a group whose count reaches
+    * zero is deleted, others add their deltas, new positive groups insert —
+    * O(changed groups) writes. Deltas are not idempotent: a caller that may
+    * replay passes `txn` ([[GraftTable.mergeClausesPositional]]). */
   def applyChanges(
       mv: GraftTable,
       changes: DataFrame,
       spec: Spec,
-      txn: Option[(String, Long)] = None): Unit = {
-    val deltas = signedDeltas(changes, spec)
-    val keyNames = spec.groupKeys.map(_._1)
-    val cur = mv.read().select(
-      keyNames.map(col) ++
-        Seq(col(spec.countCol)) ++
-        spec.sums.map(s => col(s.name).cast(s.dataType).as(s.name)): _*)
-    val joinCond = keyNames.map(k => col(s"m.$k") <=> col(s"d.$k")).reduce(_ && _)
-    val merged = cur.alias("m").join(deltas.alias("d"), joinCond, "full_outer")
-      .select(
-        keyNames.map(k => coalesce(col(s"m.$k"), col(s"d.$k")).as(k)) ++
-          Seq((coalesce(col(s"m.${spec.countCol}"), lit(0L))
-            + coalesce(col("d.__d_count"), lit(0L))).as(spec.countCol)) ++
-          spec.sums.map { s =>
-            (coalesce(col(s"m.${s.name}"), lit(0).cast(s.dataType))
-              + coalesce(col(s"d.__d_${s.name}"), lit(0).cast(s.dataType)))
-              .cast(s.dataType).as(s.name)
-          }: _*)
-      .filter(col(spec.countCol) > 0)
-    txn match {
-      case Some((appId, batchId)) => mv.overwriteOnce(merged, appId, batchId)
-      case None => mv.overwrite(merged)
-    }
-    ()
+      txn: Option[(String, Long)] = None): Commit = {
+    val keys = spec.groupKeys.map(_._1)
+    val count = col(s"t.${spec.countCol}") + col("s.__d_count")
+    val added = spec.sums.map(s =>
+      s.name -> (col(s"t.${s.name}") + col(s"s.__d_${s.name}")).cast(s.dataType))
+    val inserted = keys.map(k => k -> col(s"s.$k")) ++
+      spec.sums.map(s => s.name -> col(s"s.__d_${s.name}"))
+    mv.mergeClausesPositional(signedDeltas(changes, spec), keys, None,
+      matched = Seq(
+        MergeClause.Delete(Some(count <= 0)),
+        MergeClause.Update((added :+ (spec.countCol -> count)).toMap)),
+      notMatched = Seq(MergeClause.Insert(
+        (inserted :+ (spec.countCol -> col("s.__d_count"))).toMap,
+        Some(col("s.__d_count") > 0))),
+      txn = txn, nullSafe = true)
   }
 }

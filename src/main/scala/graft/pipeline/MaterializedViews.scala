@@ -1,33 +1,34 @@
 package graft.pipeline
 
-import org.apache.spark.sql.{DataFrame, SparkSession}
+import org.apache.spark.sql.{Column, DataFrame, Row, SparkSession}
+import org.apache.spark.sql.expressions.Window
 import org.apache.spark.sql.functions._
-import org.apache.spark.sql.types.{DecimalType, DoubleType}
+import org.apache.spark.sql.types.{BooleanType, DecimalType, DoubleType, StructType, TimestampType}
 
-import graft.table.GraftTable
+import graft.cdc.Envelope
+import graft.table.{Commit, GraftTable, MergeClause}
 
-/** The reference's three incrementally-maintained materialized views
+/** The reference's three materialized views
   * (`/root/reference/consumer/risingwave-connector/init-risingwave.sql:73-109`),
-  * maintained Spark-natively: after each CDC micro-batch updates the
-  * snapshot tables, each MV is recomputed from the snapshots and committed
-  * to its own versioned GraftTable — the "recompute-per-batch inside
-  * foreachBatch" strategy (SURVEY §2.1 ST10). Readers always see a complete
-  * consistent version; every refresh is a recorded commit (history works on
-  * MVs too).
-  *
-  * Scale: each refresh is one distributed agg/join over the snapshot —
-  * the same plan the batch query runs. True delta-incremental maintenance
-  * (applying only CDF rows) is the upgrade path; the CDF the mutation layer
-  * already emits ([[GraftTable.readChanges]]) carries exactly the rows an
-  * incremental maintainer would consume.
-  */
+  * maintained incrementally as RisingWave maintains them: after each CDC
+  * micro-batch's snapshot commits, every view folds the change feed
+  * ([[GraftTable.readChanges]]) of its sources that it has not yet folded
+  * ([[maintain]]), as ONE positional MERGE per (view, source) — O(changed
+  * groups) whatever the table size — stamped with the source version it
+  * folded up to. A replayed batch finds nothing new; a batch whose view
+  * commits were lost is caught up by the next. `mv_order_analytics` and
+  * `mv_customer_order_summary` hold additive state, read through
+  * [[orderAnalyticsView]] and [[customerOrderSummaryView]];
+  * `mv_product_inventory` is the view itself. */
 object MaterializedViews {
 
-  private def moneySum(c: org.apache.spark.sql.Column) =
-    sum(c.cast(DecimalType(18, 2))).cast(DoubleType)
+  private val Money = DecimalType(18, 2)
+
+  private def moneySum(c: Column) = sum(c.cast(Money)).cast(DoubleType)
 
   /** MV `order_analytics` (init-risingwave.sql:73-81) over the orders
-    * snapshot. */
+    * snapshot. The three batch definitions are the oracle the maintained
+    * views must equal. */
   def orderAnalytics(orders: DataFrame): DataFrame =
     orders.groupBy(
         to_date(date_trunc("day", col("order_date"))).as("order_day"),
@@ -47,130 +48,29 @@ object MaterializedViews {
         count(col("o.id")).as("total_orders"),
         coalesce(moneySum(col("o.total_amount")), lit(0.0)).as("lifetime_value"))
 
+  private val inventoryCols = Seq(
+    col("id"), col("name"), col("category"), col("price"), col("stock_quantity"),
+    when(col("stock_quantity") === 0, "Out of Stock")
+      .when(col("stock_quantity") < 10, "Low Stock")
+      .otherwise("In Stock").as("stock_status"))
+
   /** MV `product_inventory` (init-risingwave.sql:97-109) with the
     * stock_status CASE bucketing. */
-  def productInventory(products: DataFrame): DataFrame =
-    products.select(
-      col("id"), col("name"), col("category"), col("price"),
-      col("stock_quantity"),
-      when(col("stock_quantity") === 0, "Out of Stock")
-        .when(col("stock_quantity") < 10, "Low Stock")
-        .otherwise("In Stock").as("stock_status"))
+  def productInventory(products: DataFrame): DataFrame = products.select(inventoryCols: _*)
 
   def mvPath(cfg: CdcPipeline.Config, name: String): String =
     s"${cfg.tableRoot}/mv_$name"
 
-  /** Delta-INCREMENTAL maintenance of `order_analytics` from Change Data
-    * Feed rows — the RisingWave strategy proper, not a recompute: each CDF
-    * row contributes ±1 to its (day, status) group's count and ±amount to
-    * its sum (insert/update_postimage add, delete/update_preimage
-    * subtract), the per-batch deltas are merged into the MV state, and
-    * groups whose count reaches zero are deleted. Work per refresh is
-    * O(changed rows), independent of table size — at 100 TB the difference
-    * between touching a micro-batch and rescanning the world.
-    *
-    * avg_order_value is derived from (sum, count) at publish time — the
-    * standard trick that keeps every maintained aggregate additive.
-    */
-  /** The order_analytics maintenance spec, declaratively: two group keys,
-    * a signed count, one additive revenue sum (avg derived at publish). */
-  private val orderAnalyticsSpec = IncrementalAgg.Spec(
-    groupKeys = Seq(
-      "order_day" -> to_date(date_trunc("day", col("order_date"))),
-      "status" -> col("status")),
-    countCol = "order_count",
-    sums = Seq(IncrementalAgg.Sum("sum_revenue",
-      col("total_amount").cast(DecimalType(18, 2)), DecimalType(18, 2))))
+  /** Published `order_analytics`: the average derived from (sum, count),
+    * which keeps every maintained aggregate additive. */
+  def orderAnalyticsView(state: DataFrame): DataFrame =
+    state.select(
+      col("order_day"), col("status"), col("order_count"),
+      col("sum_revenue").cast(DoubleType).as("total_revenue"),
+      (col("sum_revenue").cast(DoubleType) / col("order_count")).as("avg_order_value"))
 
-  def applyOrderChangesIncrementally(
-      spark: SparkSession,
-      mv: GraftTable,
-      changes: DataFrame,
-      txn: Option[(String, Long)] = None): Unit =
-    IncrementalAgg.applyChanges(mv, changes, orderAnalyticsSpec, txn)
-
-  /** Delta-incremental maintenance of `product_inventory` — a projection
-    * MV, so the CDF maps directly: insert/update_postimage rows upsert
-    * their projected image, delete rows delete. O(changed rows); the
-    * preimages aren't needed at all. */
-  def applyProductChangesIncrementally(
-      spark: SparkSession,
-      mv: GraftTable,
-      changes: DataFrame): Unit = {
-    val projected = productInventory(
-      changes.filter(col("_change_type").isin("insert", "update_postimage")))
-    if (!projected.isEmpty) { mv.merge(projected, "id"); () }
-    val deletes = changes.filter(col("_change_type") === "delete").select("id")
-    if (!deletes.isEmpty) { mv.deleteKeys(deletes, "id"); () }
-  }
-
-  /** Delta-incremental maintenance of `customer_order_summary` — the JOIN
-    * MV (customers ⟕ orders + per-customer counters). State rows carry the
-    * customer attributes, a `__known` flag, and additive counters:
-    *
-    *  - customer insert/update_postimage → merge attrs + `__known = true`;
-    *    [[GraftTable.merge]] assigns only source-present columns, so the
-    *    counters survive attribute updates untouched.
-    *  - customer delete → TOMBSTONE, not a physical delete: `__known` flips
-    *    to false, hiding the row from the published view while its
-    *    accumulated counters survive. A later re-insert of the same key
-    *    flips `__known` back and the view shows exact counters again —
-    *    matching a recompute, whose join would still see the customer's
-    *    surviving orders. (A physical delete here was the one divergence
-    *    from recompute semantics this maintainer used to have.)
-    *  - orders CDF → signed per-customer deltas joined to current counters,
-    *    merged back for AFFECTED customers only (O(changed keys)). Orders
-    *    for customers not seen yet accumulate in rows with `__known` null —
-    *    hidden from the published view until the customer row arrives, at
-    *    which point history is already summed (matching what a recompute
-    *    would produce).
-    *
-    * State growth: tombstoned/orphan rows are retained (bounded by distinct
-    * customer keys ever seen). A maintenance pass may physically drop rows
-    * with `__known = false` and zero counters — they carry no information.
-    */
-  def applyCustomerOrderChangesIncrementally(
-      spark: SparkSession,
-      mv: GraftTable,
-      customerChanges: Option[DataFrame],
-      orderChanges: Option[DataFrame]): Unit = {
-    customerChanges.foreach { ch =>
-      val upserts = ch
-        .filter(col("_change_type").isin("insert", "update_postimage"))
-        .select(col("id").as("customer_id"), col("first_name"),
-          col("last_name"), col("email"), lit(true).as("__known"))
-      if (!upserts.isEmpty) { mv.merge(upserts, "customer_id"); () }
-      val dels = ch.filter(col("_change_type") === "delete")
-        .select(col("id").as("customer_id"), lit(false).as("__known"))
-      if (!dels.isEmpty) { mv.merge(dels, "customer_id"); () }
-    }
-    orderChanges.foreach { ch =>
-      // Signed per-customer deltas come from the shared library
-      // ([[IncrementalAgg.signedDeltas]]); the state fold stays a keyed
-      // MERGE (not a full overwrite) because join-MV state rows also carry
-      // customer attributes that must survive untouched.
-      val deltas = IncrementalAgg.signedDeltas(ch, IncrementalAgg.Spec(
-        groupKeys = Seq("customer_id" -> col("customer_id")),
-        countCol = "total_orders",
-        sums = Seq(IncrementalAgg.Sum("lifetime_value",
-          col("total_amount").cast(DecimalType(18, 2)), DecimalType(18, 2)))))
-      if (!deltas.isEmpty) {
-        val cur = mv.read().select(col("customer_id"),
-          col("total_orders"), col("lifetime_value").cast(DecimalType(18, 2)).as("lv"))
-        val updated = deltas.join(cur, Seq("customer_id"), "left")
-          .select(
-            col("customer_id"),
-            (coalesce(col("total_orders"), lit(0L)) + col("__d_count")).as("total_orders"),
-            (coalesce(col("lv"), lit(0).cast(DecimalType(18, 2))) + col("__d_lifetime_value"))
-              .cast(DecimalType(18, 2)).as("lifetime_value"))
-        mv.merge(updated, "customer_id")
-        ()
-      }
-    }
-  }
-
-  /** Publishable projection of the join-MV state: known customers only,
-    * null counters as zero, derived exactly like the batch MV. */
+  /** Published `customer_order_summary` from its state: known customers
+    * only, null counters as zero, derived exactly like the batch MV. */
   def customerOrderSummaryView(state: DataFrame): DataFrame =
     state.filter(col("__known") === true)
       .select(
@@ -178,73 +78,141 @@ object MaterializedViews {
         coalesce(col("total_orders"), lit(0L)).as("total_orders"),
         coalesce(col("lifetime_value").cast(DoubleType), lit(0.0)).as("lifetime_value"))
 
-  /** Continuous incremental maintenance: stream the orders snapshot's CDF
-    * through the VERSION-OFFSET source (`graft-table` with readChangeFeed —
-    * offsets are commit versions, so each micro-batch is exactly the change
-    * rows of a commit range, and compaction or dir-name details never leak
-    * into the stream) and fold every micro-batch into the MV state. Because
-    * the deltas are additive, a batch may span several commits (or split
-    * one) and the result is identical — ordering within the feed doesn't
-    * matter. This is the full RisingWave shape: CDC → snapshot → change
-    * stream → incrementally-maintained view, each stage a versioned table. */
-  def startIncrementalOrderAnalytics(
-      spark: SparkSession,
-      cfg: CdcPipeline.Config,
-      availableNow: Boolean = false): org.apache.spark.sql.streaming.StreamingQuery = {
-    import org.apache.spark.sql.streaming.Trigger
-    val snapPath = CdcPipeline.snapshotPath(cfg, "orders")
-    val statePath = mvPath(cfg, "order_analytics_inc")
-    val trigger = if (availableNow) Trigger.AvailableNow()
-      else Trigger.ProcessingTime(cfg.triggerInterval)
-    spark.readStream.format("org.apache.spark.sql.graftnative.GraftTableSourceProvider")
-      .option("path", snapPath)
-      .option("readChangeFeed", "true")
-      .load()
-      .writeStream
-      .queryName("mv_order_analytics_inc")
-      .option("checkpointLocation", s"${cfg.checkpointRoot}/mv_order_analytics_inc")
-      .trigger(trigger)
-      .foreachBatch { (batch: DataFrame, batchId: Long) =>
-        if (!batch.isEmpty) {
-          val emptyState = batch.sparkSession.createDataFrame(
-            batch.sparkSession.sparkContext.emptyRDD[org.apache.spark.sql.Row],
-            org.apache.spark.sql.types.StructType(Seq(
-              org.apache.spark.sql.types.StructField("order_day", org.apache.spark.sql.types.DateType),
-              org.apache.spark.sql.types.StructField("status", org.apache.spark.sql.types.StringType),
-              org.apache.spark.sql.types.StructField("order_count", org.apache.spark.sql.types.LongType),
-              org.apache.spark.sql.types.StructField("sum_revenue", DecimalType(18, 2)))))
-          val mv = GraftTable.createIfNotExists(spark, statePath, emptyState)
-          applyOrderChangesIncrementally(spark, mv, batch,
-            txn = Some(("mv_order_analytics_inc", batchId)))
-        }
+  /** `order_analytics` state: per (day, status), a signed row count and an
+    * exact revenue sum. */
+  private val orderAnalyticsSpec = IncrementalAgg.Spec(
+    groupKeys = Seq(
+      "order_day" -> to_date(date_trunc("day", col("order_date"))),
+      "status" -> col("status")),
+    countCol = "order_count",
+    sums = Seq(IncrementalAgg.Sum("sum_revenue", col("total_amount").cast(Money), Money)))
+
+  /** A view: its empty state over typed empty snapshots, and per source the
+    * MERGE folding that source's change rows into it. */
+  private final case class View(name: String, empty: (String => DataFrame) => DataFrame,
+      folds: Map[String, (GraftTable, DataFrame, Option[(String, Long)]) => Commit])
+
+  private val views = Seq(
+    View("order_analytics",
+      typed => typed("orders").select(
+        orderAnalyticsSpec.groupKeys.map { case (n, e) => e.as(n) } ++
+          Seq(lit(0L).as("order_count"), lit(0).cast(Money).as("sum_revenue")): _*),
+      Map("orders" -> (IncrementalAgg.applyChanges(_, _, orderAnalyticsSpec, _)))),
+    View("customer_order_summary",
+      typed => typed("customers").select(col("id").as("customer_id"), col("first_name"),
+        col("last_name"), col("email"), lit(null).cast(BooleanType).as("__known"),
+        lit(0L).as("total_orders"), lit(0).cast(Money).as("lifetime_value")),
+      Map("customers" -> foldCustomers, "orders" -> foldCustomerOrders)),
+    View("product_inventory", typed => productInventory(typed("products")),
+      Map("products" -> foldProducts)))
+
+  /** Folds every view over the snapshots of `cfg` that exist, creating a
+    * missing view table empty first. */
+  def maintain(spark: SparkSession, cfg: CdcPipeline.Config): Unit =
+    views.foreach { v =>
+      val sources = v.folds.keys.toSeq.sorted.flatMap(s =>
+        GraftTable.find(spark, CdcPipeline.snapshotPath(cfg, s)).map(s -> _))
+      if (sources.nonEmpty) {
+        val mv = GraftTable.createIfNotExists(spark, mvPath(cfg, v.name),
+          v.empty(typedEmpty(spark, _)))
+        sources.foreach { case (s, src) => foldUnseen(mv, v.name, src, s) }
       }
-      .start()
+    }
+
+  /** Folds into `mv` (view `view`) the change feed of `src` (snapshot
+    * `source`) past the version the view last folded, as one MERGE stamped
+    * (`<view>:<source>`, the source head read). A source never folded is
+    * folded whole: its head snapshot read as inserts. A range whose deltas
+    * net to nothing publishes no version and is read again next time. */
+  def foldUnseen(mv: GraftTable, view: String, src: GraftTable, source: String): Unit = {
+    val fold = views.find(_.name == view).flatMap(_.folds.get(source)).getOrElse(
+      throw new IllegalArgumentException(s"no view $view over $source"))
+    val app = s"$view:$source"
+    val head = src.version
+    val unseen = mv.lastCommittedBatch(app) match {
+      case None => Some(src.readVersion(head)
+        .withColumn("_change_type", lit("insert"))
+        .withColumn("_commit_version", lit(head)))
+      case Some(last) if src.changeDirsBetween(last, head).nonEmpty ||
+          src.appendCommitsBetween(last, head).nonEmpty =>
+        Some(src.readChanges(last + 1, head))
+      case _ => None
+    }
+    unseen.foreach { changes =>
+      fold(mv, changes, Some(app -> head))
+      mv.maybeMaterialize(maxDeletedRatio = 0.1)
+    }
   }
 
-  /** Publishable projection of the incremental MV state (adds the derived
-    * average). */
-  def incrementalOrderAnalyticsView(state: DataFrame): DataFrame =
-    state.select(
-      col("order_day"), col("status"), col("order_count"),
-      col("sum_revenue").cast(DoubleType).as("total_revenue"),
-      (col("sum_revenue").cast(DoubleType) / col("order_count")).as("avg_order_value"))
+  /** The last image of each `id` in CDF rows — the highest
+    * `_commit_version`, an image over a delete within one commit — with
+    * `__deleted` set when that image is a delete. */
+  private def lastImages(changes: DataFrame): DataFrame = {
+    val w = Window.partitionBy("id").orderBy(desc("_commit_version"), asc("__deleted"))
+    changes.filter(col("_change_type") =!= "update_preimage")
+      .withColumn("__deleted", col("_change_type") === "delete")
+      .withColumn("__rn", row_number().over(w))
+      .filter(col("__rn") === 1)
+  }
 
-  /** Refresh all MVs whose source snapshots exist. Called from the snapshot
-    * foreachBatch after merges/deletes land, so MV versions trail snapshot
-    * versions by at most one batch. */
-  def refreshAll(spark: SparkSession, cfg: CdcPipeline.Config): Unit = {
-    def snap(t: String): Option[DataFrame] = {
-      val p = CdcPipeline.snapshotPath(cfg, t)
-      if (GraftTable.isTable(spark, p)) Some(GraftTable.forPath(spark, p).read()) else None
-    }
-    def publish(name: String, df: DataFrame): Unit = {
-      val p = mvPath(cfg, name)
-      if (GraftTable.isTable(spark, p)) { GraftTable.forPath(spark, p).overwrite(df); () }
-      else { GraftTable.create(spark, p, df); () }
-    }
-    snap("orders").foreach(o => publish("order_analytics", orderAnalytics(o)))
-    for (c <- snap("customers"); o <- snap("orders"))
-      publish("customer_order_summary", customerOrderSummary(c, o))
-    snap("products").foreach(p => publish("product_inventory", productInventory(p)))
+  private def assignAll(df: DataFrame): Map[String, Column] =
+    df.columns.map(c => c -> col(s"s.$c")).toMap
+
+  /** `product_inventory`: a projection, so each id's last image replaces
+    * its row, and a delete removes it. */
+  private def foldProducts(mv: GraftTable, changes: DataFrame,
+      txn: Option[(String, Long)]): Commit = {
+    val images = lastImages(changes).select(inventoryCols :+ col("__deleted"): _*)
+    val set = assignAll(images) - "__deleted"
+    mv.mergeClausesPositional(images, Seq("id"), None,
+      matched = Seq(MergeClause.Delete(Some(col("s.__deleted"))), MergeClause.Update(set)),
+      notMatched = Seq(MergeClause.Insert(set, Some(!col("s.__deleted")))),
+      txn = txn)
+  }
+
+  /** `customer_order_summary`, customer side: each id's last image sets the
+    * attributes; a delete sets `__known` false — a tombstone hiding the row
+    * while its counters survive, as a recompute's join keeps the orders. */
+  private def foldCustomers(mv: GraftTable, changes: DataFrame,
+      txn: Option[(String, Long)]): Commit = {
+    val images = lastImages(changes).select(col("id").as("customer_id"), col("first_name"),
+      col("last_name"), col("email"), (!col("__deleted")).as("__known"))
+    val set = assignAll(images)
+    mv.mergeClausesPositional(images, Seq("customer_id"), None,
+      matched = Seq(MergeClause.Update(set)),
+      notMatched = Seq(MergeClause.Insert(
+        set ++ Map("total_orders" -> lit(0L), "lifetime_value" -> lit(0)),
+        Some(col("s.__known")))),
+      txn = txn)
+  }
+
+  /** `customer_order_summary`, order side: signed per-customer deltas add
+    * to the counters; a customer not seen yet accumulates them in a hidden
+    * row (`__known` null). */
+  private def foldCustomerOrders(mv: GraftTable, changes: DataFrame,
+      txn: Option[(String, Long)]): Commit = {
+    val deltas = IncrementalAgg.signedDeltas(changes, IncrementalAgg.Spec(
+      groupKeys = Seq("customer_id" -> col("customer_id")),
+      countCol = "total_orders",
+      sums = Seq(IncrementalAgg.Sum("lifetime_value", col("total_amount").cast(Money), Money))))
+    mv.mergeClausesPositional(deltas, Seq("customer_id"), None,
+      matched = Seq(MergeClause.Update(Map(
+        "total_orders" -> (col("t.total_orders") + col("s.__d_count")),
+        "lifetime_value" -> (col("t.lifetime_value") + col("s.__d_lifetime_value"))))),
+      notMatched = Seq(MergeClause.Insert(Map(
+        "customer_id" -> col("s.customer_id"),
+        "total_orders" -> col("s.__d_count"),
+        "lifetime_value" -> col("s.__d_lifetime_value")),
+        Some(col("s.customer_id").isNotNull))),
+      txn = txn)
+  }
+
+  /** An empty frame of `table`'s snapshot columns as the pipeline parses
+    * them ([[graft.cdc.Parse.typedSnapshotRows]]). */
+  private def typedEmpty(spark: SparkSession, table: String): DataFrame = {
+    val micros = Envelope.microsTimestampCols(table).toSet
+    spark.createDataFrame(spark.sparkContext.emptyRDD[Row], StructType(
+      Envelope.tableJsonSchemas(table).map(f =>
+        if (micros(f.name)) f.copy(dataType = TimestampType) else f)))
   }
 }

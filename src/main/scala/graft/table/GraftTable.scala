@@ -65,13 +65,13 @@ final class GraftTable private (
       props.keys.exists(_.startsWith(GraftTable.ColMapPrefix))
   }
 
-  /** Snapshot row count from parquet footers — metadata-only, no Spark
-    * job. This is the table statistic that sizes downstream algorithm
+  /** Snapshot row count from the footer counts the log recorded (the
+    * deletion vectors' footers are read) — metadata-only, no Spark job.
+    * This is the table statistic that sizes downstream algorithm
     * parameters (e.g. LSH band counts via
     * [[graft.sim.Similarity.lshParams]]) without a scan. */
   def rowCount: Long =
-    log.latest().map(c =>
-      c.dataDirs.map(countDir).sum - c.dvDirs.map(countDir).sum).getOrElse(0L)
+    log.latest().map(c => dataRows(c) - c.dvDirs.map(countDir).sum).getOrElse(0L)
 
   private def commitFor(v: Long): Commit =
     log.commits().find(_.version == v).getOrElse(
@@ -842,6 +842,15 @@ final class GraftTable private (
         spark.read.parquet(new Path(root, dir).toString).count()
     }
 
+  /** Rows of data dir `dir`: the footer count recorded under "" in its
+    * `nulls` ([[Commit.dirNulls]]), else read from its footers. */
+  private def rowsOf(dir: String, nulls: Map[String, Long]): Long =
+    nulls.get("").filter(_ >= 0L).getOrElse(countDir(dir))
+
+  /** Rows in `c`'s data dirs, deleted ones included. */
+  private def dataRows(c: Commit): Long =
+    c.dataDirs.map(d => rowsOf(d, c.dirNulls.getOrElse(d, Map.empty))).sum
+
   /** The parquet files under `dir` (relative to the root), at any depth.
     * Plain `listStatus` calls: stores that cannot produce located
     * statuses (block locations, permissions) still list. */
@@ -1596,6 +1605,10 @@ final class GraftTable private (
     // commit size and mirror stats JSON — the whole reason Delta defaults
     // dataSkippingNumIndexedCols to 32. Absent stats are conservatively
     // "don't prune", so trimming is always CORRECT, only less selective.
+    // The row count under "" is no column's stat and always stays (row ids,
+    // COUNT(*) and every writer's count read it); a trimmed column keeps an
+    // unknown (-1) null count, so no reader takes it for one absent from
+    // the files, which a recorded row count would otherwise prove all-null.
     GraftTable.allowedStatsCols(
         log.latest().map(_.properties).getOrElse(Map.empty),
         log.latest().map(c => DataType.fromJson(c.schemaJson)
@@ -1603,7 +1616,7 @@ final class GraftTable private (
       case None => logical
       case Some(allowed) => DirMeta(
         logical.stats.filter { case (k, _) => allowed(k) },
-        logical.nulls.filter { case (k, _) => allowed(k) })
+        logical.nulls.map { case (k, n) => k -> (if (k.isEmpty || allowed(k)) n else -1L) })
     }
   }
 
@@ -2094,8 +2107,8 @@ final class GraftTable private (
     var validated = constraintsOf(snap.properties)
     enforceConstraints(aligned, snap.properties, "APPEND")
     val dir = writeData(tx, aligned, snap.version + 1, snap.partitionCols)
-    val added = countDir(dir)
     val meta = metaFor(dir)
+    val added = rowsOf(dir, meta.nulls)
     Staged(
       conflict = { head =>
         if (txn.exists { case (app, b) => lastCommittedBatch(app).exists(_ >= b) }) Committed
@@ -2166,7 +2179,7 @@ final class GraftTable private (
       finish: (Commit, String, DirMeta) => Commit = (c, _, _) => c): Staged = {
     val dir = writeData(tx, rows, prev.version + 1, prev.partitionCols, rebalance)
     val meta = metaFor(dir)
-    val outputRows = countDir(dir)
+    val outputRows = rowsOf(dir, meta.nulls)
     Staged(staleRewrite(prev, op), a => finish(Commit(a.version, a.tsMs, op,
       Seq(dir), metrics(a) + ("numOutputRows" -> outputRows), prev.schemaJson,
       partitionCols = prev.partitionCols, changesDir = a.changesDir,
@@ -2223,7 +2236,7 @@ final class GraftTable private (
       enforceConstraints(prepared, prev.properties, "WRITE")
       val dir = writeData(tx, prepared, prev.version + 1, partitionBy)
       val meta = metaFor(dir)
-      val outputRows = countDir(dir)
+      val outputRows = rowsOf(dir, meta.nulls)
       // an empty CREATE (one that only declares the schema) or overwrite
       // references no dir
       val dirs = unlessEmpty(dir, outputRows).toSeq
@@ -2546,24 +2559,35 @@ final class GraftTable private (
     * appends and merge-on-read commits intervened (the recomputation sees
     * their rows and their marks) and refuses when anything else did. A
     * MERGE that claims no target row and inserts none publishes nothing
-    * and returns the head it read. */
+    * and returns the head it read.
+    *
+    * `txn` stamps the commit (Delta's application transaction): a MERGE
+    * whose (appId, batchId) is already committed at that batch or a later
+    * one publishes nothing, and a rival that moves the stamp anywhere else
+    * refuses it. `nullSafe` matches keys with `<=>` (a null group key is a
+    * group); Delta's `=` never matches a null. */
   def mergeClausesPositional(source: DataFrame, keys: Seq[String],
       onExtra: Option[Column],
       matched: Seq[MergeClause] = Nil,
       notMatched: Seq[MergeClause] = Nil,
-      targetAlias: String = "t", sourceAlias: String = "s"): Commit =
+      targetAlias: String = "t", sourceAlias: String = "s",
+      txn: Option[(String, Long)] = None,
+      nullSafe: Boolean = false): Commit =
     this.synchronized {
       MergePlan.requireShape(keys, matched, notMatched, Nil, targetAlias, sourceAlias)
       val what = s"positional MERGE into $root"
       val tx = new TableTxn(this, what, Option.when(matched.nonEmpty)("MERGE"))
       val plans = scala.collection.mutable.ArrayBuffer.empty[MergePlan]
       var read = Option.empty[Commit]
+      def stamp = txn.flatMap { case (app, _) => lastCommittedBatch(app) }
+      val seen = stamp
+      if (txn.exists { case (_, b) => seen.exists(_ >= b) }) return log.latest().get
       val c = try tx.commit(ifAbsent = throw new NoSuchElementException(
           s"merge into non-existent table $root — create it first")) { snap =>
         read = Some(snap)
         val v = snap.version + 1
         val plan = mergePlan(snap, source, keys, onExtra, matched, notMatched, Nil,
-          targetAlias, sourceAlias, positioned = true)
+          targetAlias, sourceAlias, positioned = true, nullSafe)
         plans += plan
         val dv = tx.stage(dvDirName(v))
         plan.joined.filter(plan.claimed).select(
@@ -2573,21 +2597,27 @@ final class GraftTable private (
         val rows = plan.rows(!plan.tPresent || plan.claimed)
         enforceConstraints(rows, snap.properties, "MERGE")
         val data = writeData(tx, rows, v, snap.partitionCols)
-        val (marked, added) = (countDir(dv), countDir(data))
+        val dataMeta = metaFor(data)
+        val (marked, added) = (countDir(dv), rowsOf(data, dataMeta.nulls))
         if (marked == 0L && added == 0L) TableTxn.Unchanged
         else {
           val dvs = unlessEmpty(dv, marked)
-          val meta = unlessEmpty(data, added).map(d => d -> metaFor(d)).toMap
+          val meta = unlessEmpty(data, added).map(_ -> dataMeta).toMap
           Staged(
-            conflict = head =>
-              if (isMorOnlyRace(snap, head)) Restart
+            conflict = { head =>
+              val now = stamp
+              if (txn.exists { case (_, b) => now.exists(_ >= b) }) Committed
+              else if (now != seen) Refuse(s"$what: a rival moved the stamp of ${txn.get._1}")
+              else if (isMorOnlyRace(snap, head)) Restart
               else Refuse(s"$what computed from stale version ${snap.version}; " +
-                "a commit other than an append or a merge-on-read mutation intervened"),
+                "a commit other than an append or a merge-on-read mutation intervened")
+            },
             build = { a =>
               val h = a.head
               Commit(a.version, a.tsMs, "MERGE", h.dataDirs ++ meta.keys,
                 mergeMetrics(a) ++ Map("numOutputRows" -> added, "mergeOnRead" -> 1L),
                 plan.schema.json,
+                txnAppId = txn.map(_._1), txnBatchId = txn.map(_._2),
                 partitionCols = h.partitionCols,
                 dirStats = h.dirStats ++ meta.map { case (d, m) => d -> m.stats },
                 changesDir = a.changesDir,
@@ -2620,7 +2650,8 @@ final class GraftTable private (
   private def mergePlan(prev: Commit, source: DataFrame, keys: Seq[String],
       onExtra: Option[Column], matched: Seq[MergeClause],
       notMatched: Seq[MergeClause], notMatchedBySource: Seq[MergeClause],
-      targetAlias: String, sourceAlias: String, positioned: Boolean): MergePlan = {
+      targetAlias: String, sourceAlias: String, positioned: Boolean,
+      nullSafe: Boolean = false): MergePlan = {
     import MergeClause._
     import org.apache.spark.sql.types.{LongType, StringType, StructField}
     val targetSchema = DataType.fromJson(prev.schemaJson).asInstanceOf[StructType]
@@ -2641,7 +2672,7 @@ final class GraftTable private (
     new MergePlan(target, mergedSchema, source, keys, onExtra, matched,
       notMatched, notMatchedBySource, targetAlias, sourceAlias,
       generatedSpecs(prev.properties), idSpecs.map { case (n, (_, step)) => n -> step },
-      identityHwms(prev.properties, idSpecs), positioned)
+      identityHwms(prev.properties, idSpecs), positioned, nullSafe)
   }
 
   /** DELETE by predicate (M3): left-anti rewrite of
@@ -3280,7 +3311,7 @@ final class GraftTable private (
         if (order.isEmpty) rows.repartition(numFiles) else zorderCluster(rows, order, numFiles)
       val dir = writeData(tx, laid, prev.version + 1, prev.partitionCols, rebalance = false)
       val meta = metaFor(dir)
-      val outputRows = countDir(dir)
+      val outputRows = rowsOf(dir, meta.nulls)
       val out = unlessEmpty(dir, outputRows).toSeq
       Staged(
         head =>
@@ -3397,8 +3428,8 @@ final class GraftTable private (
   def checkpointLog(): Unit = log.checkpoint()
 
   /** Purge deletion vectors once their positions have grown past
-    * `maxDeletedRatio` of the live rows (footer counts — metadata-only
-    * check, no scan). While DVs live, every read of a marked table pays an
+    * `maxDeletedRatio` of the live rows (the data dirs' counts the log
+    * recorded, the DV dirs' footers — no scan). While DVs live, every read of a marked table pays an
     * in-scan position filter (a hash lookup per row, no join), and the
     * marked rows still occupy bytes; once they stop being "small relative
     * to the table" the one-time rewrite is cheaper than that recurring
@@ -3411,7 +3442,7 @@ final class GraftTable private (
     log.latest() match {
       case Some(c) if c.dvDirs.nonEmpty =>
         val dead = c.dvDirs.map(countDir).sum.toDouble
-        val live = math.max(1L, c.dataDirs.map(countDir).sum - dead.toLong).toDouble
+        val live = math.max(1L, dataRows(c) - dead.toLong).toDouble
         if (dead / live > maxDeletedRatio) Some(materializeDeletes(targetFileBytes))
         else None
       case _ => None

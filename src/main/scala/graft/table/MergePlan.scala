@@ -83,7 +83,7 @@ private[graft] final class MergePlan(target: DataFrame, val schema: StructType,
     notMatchedBySource: Seq[MergeClause], targetAlias: String,
     sourceAlias: String, generated: Map[String, String],
     idSteps: Map[String, Long], val idHwm: Map[String, Long],
-    positioned: Boolean) {
+    positioned: Boolean, nullSafe: Boolean = false) {
   import MergeClause._
 
   private val sourceCols = source.columns.map(_.toLowerCase).toSet
@@ -115,9 +115,12 @@ private[graft] final class MergePlan(target: DataFrame, val schema: StructType,
   val joined: DataFrame = {
     val t = target.withColumn(tp, lit(true)).alias(targetAlias)
     // A null source key can never equi-match and Delta's NOT MATCHED
-    // branch still sees it (vacuously unmatched) — keep such rows.
+    // branch still sees it (vacuously unmatched) — keep such rows. A
+    // null-safe plan matches it to a null target key instead (`<=>` still
+    // plans as an equi-join).
     val s = source.withColumn(sp, lit(true)).alias(sourceAlias)
-    val equi = keys.map(k => tCol(k) === sCol(k)).reduce(_ && _)
+    val equi = keys.map(k => if (nullSafe) tCol(k) <=> sCol(k) else tCol(k) === sCol(k))
+      .reduce(_ && _)
     val on = onExtra.fold(equi)(equi && _)
     def numbered(j: DataFrame): DataFrame =
       if (idSteps.isEmpty) j else j.withColumn(idSeq, monotonically_increasing_id())

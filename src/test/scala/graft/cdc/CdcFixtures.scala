@@ -50,6 +50,19 @@ object CdcFixtures {
     s"""{"id":$id,"order_id":$orderId,"product_id":$productId,"quantity":$quantity,
        |"unit_price":$unitPrice,"created_at":$tsUs}""".stripMargin.replaceAll("\n", "")
 
+  /** Writes `recs` as one JSON-lines input file `name` under `dir`, in the
+    * Kafka-record shape the pipeline's file source reads. */
+  def writeBatch(dir: String, name: String,
+      recs: Seq[(String, String, String, Int, Long, java.sql.Timestamp)]): Unit = {
+    def quoted(s: String) = "\"" + s.replace("\\", "\\\\").replace("\"", "\\\"") + "\""
+    val lines = recs.map { case (k, v, topic, part, off, ts) =>
+      s"""{"key":${quoted(k)},"value":${Option(v).map(quoted).getOrElse("null")},"topic":"$topic","partition":$part,"offset":$off,"timestamp":"${ts.toInstant}"}"""
+    }
+    java.nio.file.Files.write(java.nio.file.Paths.get(dir, name),
+      lines.mkString("\n").getBytes("UTF-8"))
+    ()
+  }
+
   /** A tombstone record (null value), as Kafka compaction emits. */
   def tombstone(table: String, id: Long, off: Long = nextOffset()): (String, String, String, Int, Long, java.sql.Timestamp) =
     (s"""{"id":$id}""", null, s"cdc.public.$table", 0, off, new java.sql.Timestamp(1700000000000L))

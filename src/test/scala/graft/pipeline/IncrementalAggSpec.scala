@@ -67,6 +67,31 @@ class IncrementalAggSpec extends SparkSpec {
     assert(got === Set(("a", 1L, 2.0), ("c", 1L, 9.0)))
   }
 
+  test("null group keys fold as one group, matched null-safely") {
+    val rows = Seq((1L, "a", 10.0), (2L, null, 5.0)).toDF("id", "category", "amount")
+    val snap = GraftTable.create(spark, tmpDir("ia4-snap"), rows.limit(0))
+    val state = GraftTable.create(spark, tmpDir("ia4-state"),
+      rows.limit(0).select(col("category"),
+        lit(0L).cast(LongType).as("n"), lit(0.0).as("total")))
+    def applyLatest(): Unit =
+      IncrementalAgg.applyChanges(state, snap.readChanges(snap.version, snap.version), spec)
+    def check(): Unit = {
+      val got = state.read().collect().toSeq
+        .map(r => (Option(r.getString(0)), r.getLong(1), r.getDouble(2)))
+      val want = recompute(snap.read()).toSeq.map { case (c, n, t) => (Option(c), n, t) }
+      assert(got.sortBy(_._1.toString) === want.sortBy(_._1.toString))
+    }
+    snap.merge(rows, "id"); applyLatest(); check()
+    // a second null-keyed row must land in the SAME group, not a new one
+    snap.merge(Seq((3L, null: String, 2.0), (1L, "a", 11.0)).toDF("id", "category", "amount"),
+      "id")
+    applyLatest(); check()
+    assert(state.read().filter(col("category").isNull).count() === 1)
+    // deleting every null-keyed row removes the group
+    snap.deleteKeys(Seq(2L, 3L).toDF("id"), "id"); applyLatest(); check()
+    assert(state.read().filter(col("category").isNull).count() === 0)
+  }
+
   test("replayed batch with a txn stamp is a no-op") {
     val rows = Seq((1L, "a", 10.0)).toDF("id", "category", "amount")
     val snap = GraftTable.create(spark, tmpDir("ia2-snap"), rows.limit(0))

@@ -38,10 +38,10 @@ class IncrementalJoinMvSpec extends SparkSpec {
     val mv = GraftTable.create(spark, tmpDir("ijmv-state"),
       spark.createDataFrame(spark.sparkContext.emptyRDD[org.apache.spark.sql.Row], stateSchema))
 
-    def applyCust(): Unit = MaterializedViews.applyCustomerOrderChangesIncrementally(
-      spark, mv, Some(cSnap.readChanges(cSnap.version, cSnap.version)), None)
-    def applyOrd(): Unit = MaterializedViews.applyCustomerOrderChangesIncrementally(
-      spark, mv, None, Some(oSnap.readChanges(oSnap.version, oSnap.version)))
+    def applyCust(): Unit =
+      MaterializedViews.foldUnseen(mv, "customer_order_summary", cSnap, "customers")
+    def applyOrd(): Unit =
+      MaterializedViews.foldUnseen(mv, "customer_order_summary", oSnap, "orders")
     def check(): Unit = {
       val got = MaterializedViews.customerOrderSummaryView(mv.read())
         .collect().map(r => (r.getLong(0), r.getString(1), r.getString(3),

@@ -26,8 +26,15 @@ class IncrementalMvSpec extends SparkSpec {
       .map(r => (r.getDate(0).toString, r.getString(1), r.getLong(2),
         r.getDouble(3), r.getDouble(4))).toSet
 
+  /** An empty `order_analytics` state table's rows. */
+  private def emptyState(orders: DataFrame): DataFrame = orders.limit(0).select(
+    to_date(col("order_date")).as("order_day"),
+    col("status"),
+    lit(0L).as("order_count"),
+    lit(0).cast(DecimalType(18, 2)).as("sum_revenue"))
+
   private def incremental(state: GraftTable): Set[(String, String, Long, Double, Double)] =
-    MaterializedViews.incrementalOrderAnalyticsView(state.read())
+    MaterializedViews.orderAnalyticsView(state.read())
       .collect()
       .map(r => (r.getDate(0).toString, r.getString(1), r.getLong(2),
         r.getDouble(3), r.getDouble(4))).toSet
@@ -39,18 +46,9 @@ class IncrementalMvSpec extends SparkSpec {
       (3L, t("2024-01-02 09:00:00"), "shipped", 75.0)))
 
     val snap = GraftTable.create(spark, tmpDir("imv-orders"), seed.limit(0))
-    val emptyState = seed.limit(0).select(
-      to_date(col("order_date")).as("order_day"),
-      col("status"),
-      lit(0L).as("order_count"),
-      lit(0).cast(DecimalType(18, 2)).as("sum_revenue"))
-    val mv = GraftTable.create(spark, tmpDir("imv-state"), emptyState)
+    val mv = GraftTable.create(spark, tmpDir("imv-state"), emptyState(seed))
 
-    def applyLatest(): Unit = {
-      val v = snap.version
-      MaterializedViews.applyOrderChangesIncrementally(
-        spark, mv, snap.readChanges(v, v))
-    }
+    def applyLatest(): Unit = MaterializedViews.foldUnseen(mv, "order_analytics", snap, "orders")
 
     // Batch 1: initial load (all inserts via merge)
     snap.merge(seed, "id")
@@ -85,17 +83,8 @@ class IncrementalMvSpec extends SparkSpec {
       (2L, t("2024-01-01 11:00:00"), "pending", 50.0),
       (3L, t("2024-01-02 09:00:00"), "shipped", 75.0)))
     val snap = GraftTable.create(spark, tmpDir("imv-dv-orders"), seed.limit(0))
-    val emptyState = seed.limit(0).select(
-      to_date(col("order_date")).as("order_day"),
-      col("status"),
-      lit(0L).as("order_count"),
-      lit(0).cast(DecimalType(18, 2)).as("sum_revenue"))
-    val mv = GraftTable.create(spark, tmpDir("imv-dv-state"), emptyState)
-    def applyLatest(): Unit = {
-      val v = snap.version
-      MaterializedViews.applyOrderChangesIncrementally(
-        spark, mv, snap.readChanges(v, v))
-    }
+    val mv = GraftTable.create(spark, tmpDir("imv-dv-state"), emptyState(seed))
+    def applyLatest(): Unit = MaterializedViews.foldUnseen(mv, "order_analytics", snap, "orders")
     snap.merge(seed, "id") // initial load: CDF inserts
     applyLatest()
     assert(incremental(mv) === recompute(snap.read()))
@@ -115,29 +104,30 @@ class IncrementalMvSpec extends SparkSpec {
       (1L, t("2024-03-01 10:00:00"), "pending", 100.0),
       (2L, t("2024-03-01 11:00:00"), "shipped", 50.0)))
     val snap = GraftTable.create(spark, tmpDir("rmv-orders"), seed.limit(0))
-    val emptyState = seed.limit(0).select(
-      to_date(col("order_date")).as("order_day"),
-      col("status"),
-      lit(0L).as("order_count"),
-      lit(0).cast(DecimalType(18, 2)).as("sum_revenue"))
-    val mv = GraftTable.create(spark, tmpDir("rmv-state"), emptyState)
+    val mv = GraftTable.create(spark, tmpDir("rmv-state"), emptyState(seed))
+    def fold(): Unit = MaterializedViews.foldUnseen(mv, "order_analytics", snap, "orders")
 
     snap.merge(seed, "id")
-    val changes = snap.readChanges(1, 1)
-    MaterializedViews.applyOrderChangesIncrementally(
-      spark, mv, changes, txn = Some(("q", 0L)))
+    fold()
+    // the fold is stamped with the source version it folded up to
+    assert(mv.lastCommittedBatch("order_analytics:orders") === Some(snap.version))
     val after = incremental(mv)
     assert(after === recompute(snap.read()))
     // foreachBatch is at-least-once: the same batch arrives again after a
-    // crash between MV commit and checkpoint commit. Without the stamp the
-    // signed deltas double-apply; with it the publish is a no-op.
-    MaterializedViews.applyOrderChangesIncrementally(
-      spark, mv, changes, txn = Some(("q", 0L)))
+    // crash between the view commit and the checkpoint commit. The stamp
+    // says the source version is folded: no commit, no double count.
+    val v = mv.version
+    fold()
+    assert(mv.version === v)
     assert(incremental(mv) === after)
-    // the NEXT batch id still applies
+    // Lost view commits: two source commits land unfolded, and the next
+    // fold reads both as one range.
     snap.merge(ordersDf(Seq((3L, t("2024-03-02 09:00:00"), "pending", 25.0))), "id")
-    MaterializedViews.applyOrderChangesIncrementally(
-      spark, mv, snap.readChanges(2, 2), txn = Some(("q", 1L)))
+    snap.deleteKeys(Seq(1L).toDF("id"), "id")
+    fold()
+    assert(mv.history().filter(col("version") > v && col("operation") === "MERGE")
+      .count() === 1)
+    assert(mv.lastCommittedBatch("order_analytics:orders") === Some(snap.version))
     assert(incremental(mv) === recompute(snap.read()))
   }
 
@@ -150,8 +140,7 @@ class IncrementalMvSpec extends SparkSpec {
     val mv = GraftTable.create(spark, tmpDir("ipv-mv"),
       MaterializedViews.productInventory(products.limit(0)))
 
-    def applyLatest(): Unit = MaterializedViews.applyProductChangesIncrementally(
-      spark, mv, snap.readChanges(snap.version, snap.version))
+    def applyLatest(): Unit = MaterializedViews.foldUnseen(mv, "product_inventory", snap, "products")
     def check(): Unit = {
       val expect = MaterializedViews.productInventory(snap.read()).collect().toSet
       assert(mv.read().collect().toSet === expect)
@@ -166,35 +155,43 @@ class IncrementalMvSpec extends SparkSpec {
     val statuses = mv.read().orderBy("id").collect()
       .map(r => (r.getAs[Long]("id"), r.getAs[String]("stock_status")))
     assert(statuses.toSeq === Seq((2L, "In Stock"), (3L, "Low Stock")))
+    // one fold over several commits: each id's LAST image wins — an update
+    // then a delete of 3, a delete then a re-insert of 1
+    snap.merge(Seq((3L, "Desk", "office", 139.0, 0)).toDF("id", "name", "category", "price",
+      "stock_quantity"), "id")
+    snap.deleteKeys(Seq(3L).toDF("id"), "id")
+    snap.merge(Seq((1L, "Laptop", "tech", 899.99, 3)).toDF("id", "name", "category", "price",
+      "stock_quantity"), "id")
+    applyLatest(); check()
   }
 
-  test("continuous incremental MV over the streaming CDF equals recompute") {
+  test("incremental MV maintained by resumed runOnce calls equals recompute") {
+    import graft.cdc.CdcFixtures.{orderJson, record, writeBatch}
     val cfg = CdcPipeline.Config(
       inputDir = tmpDir("cimv-in"),
       tableRoot = tmpDir("cimv-tables"),
-      checkpointRoot = tmpDir("cimv-ckpt"))
-    val snapPath = CdcPipeline.snapshotPath(cfg, "orders")
-    // build the snapshot through real mutations (each emits CDF)
-    val snap = GraftTable.create(spark, snapPath, ordersDf(Nil).limit(0))
-    snap.merge(ordersDf(Seq(
-      (1L, t("2024-02-01 08:00:00"), "pending", 10.0),
-      (2L, t("2024-02-01 09:00:00"), "pending", 20.0),
-      (3L, t("2024-02-02 10:00:00"), "shipped", 30.0))), "id")
-    snap.merge(ordersDf(Seq(
-      (2L, t("2024-02-01 09:00:00"), "shipped", 20.0),
-      (4L, t("2024-02-03 11:00:00"), "pending", 40.0))), "id")
-    snap.deleteKeys(Seq(1L).toDF("id"), "id")
+      checkpointRoot = tmpDir("cimv-ckpt"),
+      tables = Seq("orders"),
+      maintainMvs = true)
+    def state = GraftTable.forPath(spark, MaterializedViews.mvPath(cfg, "order_analytics"))
+    def snap = GraftTable.forPath(spark, CdcPipeline.snapshotPath(cfg, "orders")).read()
+    val day2 = 1700100000000000L
+    writeBatch(cfg.inputDir, "b1.json", Seq(
+      record("orders", "c", 1, Some(orderJson(1, 1, "pending", 10.0))),
+      record("orders", "c", 2, Some(orderJson(2, 1, "pending", 20.0))),
+      record("orders", "c", 3, Some(orderJson(3, 2, "shipped", 30.0, day2)))))
+    CdcPipeline.runOnce(spark, cfg)
+    assert(incremental(state) === recompute(snap))
 
-    val q = MaterializedViews.startIncrementalOrderAnalytics(spark, cfg, availableNow = true)
-    q.awaitTermination()
-    val state = GraftTable.forPath(spark,
-      MaterializedViews.mvPath(cfg, "order_analytics_inc"))
-    assert(incremental(state) === recompute(snap.read()))
-
-    // one more commit, resume the stream from its checkpoint
-    snap.merge(ordersDf(Seq((5L, t("2024-02-03 12:00:00"), "pending", 50.0))), "id")
-    val q2 = MaterializedViews.startIncrementalOrderAnalytics(spark, cfg, availableNow = true)
-    q2.awaitTermination()
-    assert(incremental(state) === recompute(snap.read()))
+    // the stream resumes from its checkpoint; the view folds only the new
+    // batch's change feed
+    writeBatch(cfg.inputDir, "b2.json", Seq(
+      record("orders", "u", 2, Some(orderJson(2, 1, "shipped", 20.0)),
+        Some(orderJson(2, 1, "pending", 20.0))),
+      record("orders", "c", 4, Some(orderJson(4, 3, "pending", 40.0, day2))),
+      record("orders", "d", 1, None, Some(orderJson(1, 1, "pending", 10.0)))))
+    CdcPipeline.runOnce(spark, cfg)
+    assert(incremental(state) === recompute(snap))
+    assert(state.history().filter(col("operation") === "MERGE").count() === 2)
   }
 }

@@ -116,6 +116,19 @@ class RowTrackingSpec extends SparkSpec {
     assert(idsOf(t) === survivors, "the DV purge moved row ids")
   }
 
+  test("ids derive under a stats-column budget (the row count is kept)") {
+    // The budget trims per-column stats only: the footer row count every
+    // dir records is what derived ids are allocated from.
+    val root = tmpDir("rowtrack-budget")
+    val t = GraftTable.createWithProperties(spark, root, rows(0, 10),
+      Map("graft.rowTracking" -> "true", "delta.dataSkippingNumIndexedCols" -> "1"))
+    t.append(rows(10, 10))
+    val ids = idsOf(t)
+    assert(ids.size === 20)
+    assert(ids.values.toSet.size === 20, "ids must be unique")
+    assert(t.rowCount === 20L)
+  }
+
   test("readWithRowIds refuses an untracked table") {
     val root = tmpDir("rowtrack-off")
     val t = GraftTable.create(spark, root, rows(0, 5))
