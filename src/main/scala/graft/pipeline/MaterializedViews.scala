@@ -123,7 +123,7 @@ object MaterializedViews {
     * `source`) past the version the view last folded, as one MERGE stamped
     * (`<view>:<source>`, the source head read). A source never folded is
     * folded whole: its head snapshot read as inserts. A range whose deltas
-    * net to nothing publishes no version and is read again next time. */
+    * net to nothing publishes the stamp alone. */
   def foldUnseen(mv: GraftTable, view: String, src: GraftTable, source: String): Unit = {
     val fold = views.find(_.name == view).flatMap(_.folds.get(source)).getOrElse(
       throw new IllegalArgumentException(s"no view $view over $source"))

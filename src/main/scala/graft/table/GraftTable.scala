@@ -2564,7 +2564,8 @@ final class GraftTable private (
     * `txn` stamps the commit (Delta's application transaction): a MERGE
     * whose (appId, batchId) is already committed at that batch or a later
     * one publishes nothing, and a rival that moves the stamp anywhere else
-    * refuses it. `nullSafe` matches keys with `<=>` (a null group key is a
+    * refuses it. A stamped MERGE that changes no row still publishes a
+    * version carrying the stamp alone, so the caller's progress lands. `nullSafe` matches keys with `<=>` (a null group key is a
     * group); Delta's `=` never matches a null. */
   def mergeClausesPositional(source: DataFrame, keys: Seq[String],
       onExtra: Option[Column],
@@ -2599,7 +2600,7 @@ final class GraftTable private (
         val data = writeData(tx, rows, v, snap.partitionCols)
         val dataMeta = metaFor(data)
         val (marked, added) = (countDir(dv), rowsOf(data, dataMeta.nulls))
-        if (marked == 0L && added == 0L) TableTxn.Unchanged
+        if (marked == 0L && added == 0L && txn.isEmpty) TableTxn.Unchanged
         else {
           val dvs = unlessEmpty(dv, marked)
           val meta = unlessEmpty(data, added).map(_ -> dataMeta).toMap
@@ -2626,7 +2627,7 @@ final class GraftTable private (
                 dvDirs = h.dvDirs ++ dvs,
                 dirNulls = h.dirNulls ++ meta.map { case (d, m) => d -> m.nulls })
             },
-            changes = Some(plan.changes))
+            changes = Option.when(marked + added > 0L)(plan.changes))
         }
       } finally plans.foreach(_.release())
       c.getOrElse(read.get)

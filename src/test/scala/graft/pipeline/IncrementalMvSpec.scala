@@ -129,6 +129,17 @@ class IncrementalMvSpec extends SparkSpec {
       .count() === 1)
     assert(mv.lastCommittedBatch("order_analytics:orders") === Some(snap.version))
     assert(incremental(mv) === recompute(snap.read()))
+    // A range whose deltas net to nothing (the order moves within its day)
+    // still publishes the stamp, so the next fold does not read it again.
+    val settled = incremental(mv)
+    val w = mv.version
+    snap.merge(ordersDf(Seq((3L, t("2024-03-02 17:00:00"), "pending", 25.0))), "id")
+    fold()
+    assert(mv.version === w + 1)
+    assert(mv.lastCommittedBatch("order_analytics:orders") === Some(snap.version))
+    assert(mv.history().filter(col("version") === w + 1).select("operationMetrics")
+      .head().getAs[Map[String, Long]](0)("numOutputRows") === 0L)
+    assert(incremental(mv) === settled)
   }
 
   test("incremental product_inventory (projection MV) equals recompute") {
