@@ -176,7 +176,7 @@ class IncrementalMvSpec extends SparkSpec {
     applyLatest(); check()
   }
 
-  test("incremental MV maintained by resumed runOnce calls equals recompute") {
+  test("continuous incremental MV over the streaming CDF equals recompute") {
     import graft.cdc.CdcFixtures.{orderJson, record, writeBatch}
     val cfg = CdcPipeline.Config(
       inputDir = tmpDir("cimv-in"),
